@@ -9,6 +9,8 @@ S3) with ``write.partitionBy``.
 
 At 100 TB the *only* changes are the paths (object store URIs) and the table
 format (Delta/Iceberg for ACID overwrite) — the call sites stay identical.
+Keyed MERGE and clustered layouts live in ``sources.mtable``
+(``MTable.merge_upsert``, ``MTable.compact``), not here.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ __all__ = [
     "write_date_partitioned",
     "write_bucketed_table",
     "write_csv",
+    "create_views",
     "DEFAULT_SF_DIR",
 ]
 
@@ -230,363 +233,6 @@ def write_bucketed_table(
     w.saveAsTable(table_name)
 
 
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    n_files: int = 32,
-    mode: str = "overwrite",
-    zorder: bool = False,
-) -> None:
-    """Range-clustered parquet at rest: rows globally range-partitioned and
-    sorted on ``cluster_cols``, so every file's row groups carry TIGHT
-    min/max statistics on those columns.
-
-    This is the path-level locality lever (Delta ZORDER / Iceberg
-    sort-order, without the table format): a reader filtering on the
-    cluster key prunes most files/row groups from footer stats alone —
-    at 100 TB the difference between scanning a key's ~1/n_files slice and
-    scanning everything.  Contrast with :func:`write_bucketed_table`, which
-    removes downstream shuffles; clustering removes SCAN IO.  The two
-    compose (bucket by entity, sort by time within buckets).
-
-    ``zorder=True`` (r6): lexicographic multi-column sort gives the FIRST
-    column tight stats and later columns nothing — a filter on the second
-    column alone prunes zero files.  Z-ordering interleaves the bits of
-    each column's 16-bit range-bucket id into one space-filling-curve key
-    and clusters on THAT, so every participating column's per-file span
-    shrinks (by ~sqrt for two uniform columns) and single-column filters
-    on ANY of them prune.  Bucketing is linear over the [min, max] range
-    (one tiny agg job; exact and deterministic) — the documented
-    difference from Delta's quantile-bucketed ZORDER, which equalizes
-    bucket POPULATIONS under skew; on skewed columns pre-transform (e.g.
-    log) or stay with lexicographic.  Numeric columns only in z-mode.
-    """
-    if not zorder:
-        (
-            df.repartitionByRange(n_files, *[F.col(c) for c in cluster_cols])
-            .sortWithinPartitions(*cluster_cols)
-            .write.mode(mode)
-            .parquet(path)
-        )
-        return
-    bounds = df.agg(
-        *[F.min(c).alias(f"mn_{c}") for c in cluster_cols],
-        *[F.max(c).alias(f"mx_{c}") for c in cluster_cols],
-    ).collect()[0]
-    bits = 16
-    buckets = []
-    for c in cluster_cols:
-        mn = float(bounds[f"mn_{c}"])
-        span = float(bounds[f"mx_{c}"]) - mn
-        # ((x - min) * 65535) / span, floored: linear range bucket in
-        # [0, 2^16); constant-width span==0 degenerates to bucket 0
-        b = (
-            F.floor(
-                (F.col(c).cast("double") - F.lit(mn))
-                * F.lit(float((1 << bits) - 1))
-                / F.lit(span)
-            ).cast("long")
-            if span > 0
-            else F.lit(0).cast("long")
-        )
-        buckets.append(b)
-    # interleave: output bit (i * n_cols + j) takes bucket j's bit i —
-    # a flat codegen sum of shifted single-bit masks, no UDF
-    n = len(buckets)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, b in enumerate(buckets):
-            z = z + F.shiftleft(
-                F.shiftright(b, i).bitwiseAND(F.lit(1)), i * n + j
-            ).cast("long")
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def merge_upsert(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    event_ts_col: str,
-    broadcast_keys: bool | None = None,
-    broadcast_key_limit: int = 5_000_000,
-) -> int:
-    """MERGE-style upsert into a ``date=`` partitioned parquet target
-    without a table format: rows in ``updates`` replace target rows with
-    the same ``keys``; new keys append; everything else is untouched.
-
-    DEFAULT FOR NEW CODE (r13, VERDICT r12 next-round #8): prefer the ACID
-    table format — ``sources.mtable.MTable.merge_upsert`` — which closes
-    this function's reader-isolation gap (below) with a single atomic
-    manifest commit and snapshot-isolated readers.
-    ``operators.incremental.upsert_latest`` auto-routes to it when its
-    target is an mtable; this directory path remains for plain-parquet
-    layouts that cannot adopt a manifest.
-
-    Scale shape: only the ``date=`` partitions that ``updates`` touches are
-    read (partition pruning on the derived date) and rewritten (dynamic
-    partition overwrite) — the merge cost is proportional to the touched
-    partitions, never the table (the Delta/Iceberg MERGE INTO access
-    pattern, reproduced on plain parquet; ACIDity is per-partition
-    directory swap, the same guarantee the reference's overwrite-by-rerun
-    gives per run, SURVEY.md §2.9).
-
-    The surviving old rows are found with a LEFT ANTI join against the
-    update keys — updates are usually small relative to the table, so the
-    key set broadcasts and the anti join never shuffles the target slice.
-    The forced broadcast is guarded (ADVICE r4): ``broadcast_keys=None``
-    (default) counts the distinct update keys and falls back to a shuffled
-    anti join above ``broadcast_key_limit`` (a driver/executor OOM guard —
-    5M long-ish keys is tens of MB serialized; Catalyst's own 8 GB / 512M
-    row broadcast ceilings are far past what a driver survives); pass
-    ``True``/``False`` to skip the count when the caller knows the size
-    class.  Returns the number of rows written.
-
-    NULL semantics: rows whose ``event_ts_col`` is NULL live in the null
-    partition and are merged like any other; rows with NULL values in
-    ``keys`` are effectively append-only (SQL equality never matches NULL,
-    so an old null-key row survives next to a new one — supply surrogate
-    keys if null-key replacement is needed).
-
-    Durability (r6, VERDICT r5 "What's missing" #1): on a local/POSIX
-    target the merged slice is STAGED to a hidden ``_staging_<uuid>``
-    directory inside the table, then each touched ``date=`` partition
-    directory is swapped into place with an atomic ``os.rename`` — a crash
-    at ANY point leaves every partition either fully-old or fully-new
-    (never the dynamic-overwrite failure mode of a delete-then-write
-    half-replaced slice), the staging write never re-reads the files it
-    replaces (so the lineage-truncating localCheckpoint and its
-    executor-loss caveat are gone), and re-running the same merge after a
-    mid-swap crash converges to the correct final state (the merge is
-    idempotent by key).  The residual window is CROSS-partition only: a
-    crash between two renames leaves partition A new and partition B old —
-    bounded, detectable (leftover ``_staging_``/``_trash_`` dirs), and
-    closed by re-running.  Single-writer assumed, like Delta without a
-    lock provider.
-
-    URI-scheme targets (hdfs/s3a/file, r8 — VERDICT r6 #6 / r7 #7):
-    object-store rename is not atomic, so the swap becomes a
-    COPY-THEN-COMMIT-MARKER protocol through the Hadoop FileSystem API:
-    the merged slice stages to a hidden ``_staging_<token>`` prefix, then
-    one small ``_commit_<token>.json`` object is PUT — the single commit
-    point (object PUTs are all-or-nothing) — then staged files are copied
-    into the partition directories, superseded old files deleted, and the
-    marker removed.  Every call first runs recovery: a marker WITH its
-    staging present means a crashed post-commit merge — re-apply it
-    (idempotent: copy overwrites by name, Spark part-file names are
-    per-job-unique) before reading the table; staging WITHOUT a marker is
-    pre-commit residue and is discarded.  Crash anywhere therefore
-    converges to fully-old (pre-marker) or fully-new (post-marker) on the
-    next call.  What this does NOT give (and a real table format does):
-    reader isolation during the apply window — a concurrent reader can
-    briefly observe a partition with both old and new files; Delta/Iceberg
-    close that with log-based snapshot listing, per the module header.
-    """
-    from pyspark.errors import AnalysisException
-
-    if "://" in target_path:
-        _recover_uri_merge(spark, target_path)
-
-    date_of = F.date_format(F.col(event_ts_col), "yyyy-MM-dd")
-    # Existence = "can Spark read it" — works on any Hadoop-visible URI
-    # (os.path.exists would silently take the fresh-write branch on
-    # hdfs://-or-s3a:// targets and truncate the table).
-    try:
-        target = spark.read.parquet(target_path)
-        target.schema  # force resolution
-    except AnalysisException:
-        write_date_partitioned(updates, target_path, event_ts_col)
-        return updates.count()
-
-    touched = [r[0] for r in updates.select(date_of.alias("d")).distinct().collect()]
-    non_null = [d for d in touched if d is not None]
-    # NULL event timestamps land in the null (__HIVE_DEFAULT_PARTITION__)
-    # partition; isin() never matches NULL, so the null partition's old rows
-    # must be selected explicitly or the overwrite would drop them.
-    date_pred = F.col("date").isin(non_null)
-    if len(non_null) != len(touched):
-        date_pred = date_pred | F.col("date").isNull()
-    # partition pruning: the `date` partition column exists on the read side
-    slice_old = target.where(date_pred).drop("date")
-    update_keys = updates.select(*keys).distinct()
-    if broadcast_keys is None:
-        broadcast_keys = update_keys.limit(broadcast_key_limit + 1).count() <= broadcast_key_limit
-    if broadcast_keys:
-        update_keys = F.broadcast(update_keys)
-    survivors = slice_old.join(update_keys, keys, "left_anti")
-    merged = survivors.unionByName(updates.select(*survivors.columns))
-    if "://" not in target_path:
-        # staged swap (docstring "Durability"): write beside, rename over.
-        # The staging write reads the old files while writing NEW files —
-        # no self-overwrite, no lineage truncation needed.
-        _sweep_merge_leftovers(target_path)
-        staging = os.path.join(target_path, f"_staging_{os.urandom(8).hex()}")
-        write_date_partitioned(merged, staging, event_ts_col)
-        n = spark.read.parquet(staging).count()
-        _swap_partition_dirs(staging, target_path)
-        return n
-    # URI targets: copy-then-commit-marker staged merge (docstring).  The
-    # staging write reads the old files while writing NEW objects under a
-    # hidden prefix — no self-overwrite, no lineage truncation needed.
-    token = os.urandom(8).hex()
-    base = target_path.rstrip("/")
-    staging = f"{base}/_staging_{token}"
-    write_date_partitioned(merged, staging, event_ts_col)
-    n = spark.read.parquet(staging).count()
-    _write_commit_marker(spark, target_path, token)  # THE commit point
-    _apply_uri_merge(spark, target_path, token)
-    fs, _, jvm = _hadoop_fs(spark, target_path)
-    # Order matters (ADVICE r8, high): marker FIRST, staging after.  The
-    # non-atomic staging delete must happen only once no marker can make
-    # recovery re-apply a partially-deleted staged set.
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/_commit_{token}.json"), False)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-    return n
-
-
-def _sweep_merge_leftovers(target_path: str) -> None:
-    """Remove ``_staging_``/``_trash_`` residue from a crashed prior merge.
-
-    Hidden (underscore-prefixed) directories are invisible to every reader,
-    so residue is never a correctness problem — only disk.  Single-writer
-    assumption: a concurrent merge's staging dir would be swept too."""
-    import shutil
-
-    for name in os.listdir(target_path):
-        if name.startswith(("_staging_", "_trash_")):
-            shutil.rmtree(os.path.join(target_path, name), ignore_errors=True)
-
-
-def _swap_partition_dirs(staging: str, target_path: str) -> None:
-    """Move every staged ``date=`` directory into place.
-
-    Each ``os.rename`` is atomic on POSIX: a reader (or a crash) observes
-    any partition as fully-old or fully-new, never half-written.  Old
-    directories are moved aside to a hidden trash first so the pair of
-    renames per partition never has the destination half-deleted."""
-    import shutil
-
-    trash = os.path.join(target_path, f"_trash_{os.urandom(8).hex()}")
-    os.makedirs(trash)
-    for name in sorted(os.listdir(staging)):
-        if not name.startswith("date="):
-            continue  # _SUCCESS marker etc. stays with the staging dir
-        src, dst = os.path.join(staging, name), os.path.join(target_path, name)
-        if os.path.exists(dst):
-            os.rename(dst, os.path.join(trash, name))
-        os.rename(src, dst)
-    shutil.rmtree(trash, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path, jvm) for any Hadoop-visible URI — the same
-    connector stack the scans use, so whatever scheme Spark can read, the
-    merge protocol can commit to."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _write_commit_marker(spark: SparkSession, target_path: str, token: str) -> None:
-    """PUT the single commit-point object.  The token in the FILENAME is
-    the whole protocol state (it names the staging prefix), so recovery
-    never has to parse the body; the JSON body is diagnostics only."""
-    import json
-
-    fs, _, jvm = _hadoop_fs(spark, target_path)
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{target_path.rstrip('/')}/_commit_{token}.json"
-    )
-    out = fs.create(marker, True)
-    try:
-        out.write(
-            json.dumps({"staging": f"_staging_{token}", "protocol": "copy-commit-v1"})
-            .encode("utf-8")
-        )
-    finally:
-        out.close()  # visibility point: close() completes the PUT
-
-
-def _apply_uri_merge(spark: SparkSession, target_path: str, token: str) -> None:
-    """Publish a COMMITTED staged merge: per touched partition, copy every
-    staged data file into the live directory (overwrite-by-name — Spark
-    part-file names are per-job-unique, so re-application after a crash is
-    idempotent), then delete live data files not in the staged set.  Safe
-    to re-run from any intermediate state.
-
-    Deliberately does NOT delete the staging prefix: a file-by-file staging
-    delete is not atomic, so a crash mid-delete would leave the commit
-    marker pointing at a PARTIAL staged set — recovery would re-apply it
-    and delete live files missing from it, silently dropping committed
-    rows (ADVICE r8, high).  The caller deletes staging only AFTER the
-    marker is gone; a marker-less leftover staging dir is then plain
-    pre-commit residue to recovery."""
-    fs, _, jvm = _hadoop_fs(spark, target_path)
-    Path = jvm.org.apache.hadoop.fs.Path
-    FileUtil = jvm.org.apache.hadoop.fs.FileUtil
-    conf = spark._jsc.hadoopConfiguration()
-    base = target_path.rstrip("/")
-    st = Path(f"{base}/_staging_{token}")
-    for pstat in fs.listStatus(st):
-        pname = pstat.getPath().getName()
-        if not pname.startswith("date="):
-            continue  # _SUCCESS etc. stays with staging
-        dst = Path(f"{base}/{pname}")
-        fs.mkdirs(dst)
-        staged = [
-            f.getPath()
-            for f in fs.listStatus(pstat.getPath())
-            if not f.getPath().getName().startswith(("_", "."))
-        ]
-        staged_names = {p.getName() for p in staged}
-        for p in staged:
-            FileUtil.copy(fs, p, fs, Path(dst, p.getName()), False, True, conf)
-        for f in fs.listStatus(dst):
-            nm = f.getPath().getName()
-            if nm not in staged_names and not nm.startswith(("_", ".")):
-                fs.delete(f.getPath(), False)
-
-
-def _recover_uri_merge(spark: SparkSession, target_path: str) -> None:
-    """Converge a crashed prior URI merge BEFORE the table is read:
-    committed-but-unpublished merges are re-applied (marker + staging both
-    present), dangling markers (staging already gone — crash after publish,
-    before marker delete) are dropped, and pre-commit staging residue is
-    discarded."""
-    fs, troot, jvm = _hadoop_fs(spark, target_path)
-    if not fs.exists(troot):
-        return
-    Path = jvm.org.apache.hadoop.fs.Path
-    base = target_path.rstrip("/")
-    names = [s.getPath().getName() for s in fs.listStatus(troot)]
-    committed = {
-        n[len("_commit_") : -len(".json")]
-        for n in names
-        if n.startswith("_commit_") and n.endswith(".json")
-    }
-    for tok in sorted(committed):
-        if f"_staging_{tok}" in names:
-            _apply_uri_merge(spark, target_path, tok)
-        # marker before staging, same ordering as the happy path: once the
-        # marker is gone the staging dir is inert residue even if this
-        # recovery crashes mid-way through deleting it
-        fs.delete(Path(f"{base}/_commit_{tok}.json"), False)
-        if f"_staging_{tok}" in names:
-            fs.delete(Path(f"{base}/_staging_{tok}"), True)
-    for n in names:
-        if n.startswith("_staging_") and n[len("_staging_") :] not in committed:
-            fs.delete(Path(f"{base}/{n}"), True)
-
-
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S7 CSV sink (``serving/local_infer.py:126-129`` batch-scores parity);
     header on, single directory of part files (coalesce(1) only for tiny
@@ -601,8 +247,6 @@ def create_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None
     use (``TESTDATA_TABLES``), loaded through :func:`load_table` so the
     timestamp normalization and scan confs apply identically.  Returns the
     view names registered."""
-    from .schemas import TESTDATA_TABLES
-
     targets = tuple(names) if names is not None else tuple(TESTDATA_TABLES)
     for name, df in load_tables(spark, sf_dir, targets).items():
         df.createOrReplaceTempView(name)

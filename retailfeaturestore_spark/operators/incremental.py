@@ -1,17 +1,13 @@
-"""Incremental table maintenance without a table format: upsert-by-key.
+"""Incremental table maintenance: upsert-by-key and keyed table diff.
 
 The reference materializes by full overwrite-on-rerun (SURVEY.md §4.1
-idempotence row); a production gold table wants MERGE semantics.  On a
-cluster this is Delta/Iceberg ``MERGE INTO`` — not installed here, so this
-module provides the format-agnostic equivalent: read + union + deterministic
-latest-per-key + partition-scoped rewrite.  The call-site contract matches a
-Delta MERGE, so swapping the implementation is a one-liner when the format
-is available.
-
-Scale notes: the rewrite is scoped to the partitions the updates touch
-(dynamic partition overwrite), so an incremental batch rewrites only its
-date partitions, not the table; the latest-per-key reduction is the same A4
-single-window pass as everywhere else.
+idempotence row); a production gold table wants MERGE semantics.
+``upsert_latest`` is that MERGE on an mtable (``sources.mtable``): the
+batch reduces to its latest row per key (the A4 single-window pass), the
+winners that beat the stored row go through ``MTable.merge_upsert``, and a
+partitioned table rewrites only the partitions the updates touch — one
+atomic manifest commit, readers snapshot-isolated.  ``table_diff`` is the
+keyed audit between two versions of a table.
 """
 
 from __future__ import annotations
@@ -33,94 +29,77 @@ def upsert_latest(
     tiebreak_col: str | None = None,
     partition_col: str | None = None,
 ) -> int:
-    """Merge ``updates`` into the table at ``table_path``: for each key,
+    """Merge ``updates`` into the mtable at ``table_path``: for each key,
     the row with the greatest (ts, tiebreak) wins.  Returns the row count
     after the merge.
 
-    DEFAULT TARGET (r13, VERDICT r12 next-round #8): when ``table_path``
-    is an existing ACID ``mtable`` (manifest directory present), the merge
-    routes through :meth:`..sources.mtable.MTable.merge_upsert` — one
-    atomic manifest commit, readers snapshot-isolated for the whole apply
-    window.  Point NEW tables at an mtable (create with ``MTable.write``)
-    to get that path; the plain-directory branch below remains for
-    existing directory layouts and keeps its documented gap: a reader
-    listing files during the staged overwrite can observe a partial
-    partition swap (io.merge_upsert documents the same).  On the mtable
-    route, an update row TIES with the stored row (equal ts and tiebreak)
-    in favor of the UPDATE — deterministic and replay-idempotent, where
-    the directory route's union + row_number resolves full ties by
-    partition-order luck.
+    Each call is one atomic manifest commit through
+    :meth:`..sources.mtable.MTable.merge_upsert`; readers are
+    snapshot-isolated for the whole apply window.  An update row that TIES
+    the stored row (equal ts and tiebreak) wins, so the merge is
+    deterministic and replay-idempotent.
 
-    First write (no existing table) degrades to a plain write.  With
-    ``partition_col``, only the touched partitions are rewritten
-    (``partitionOverwriteMode=dynamic``).
+    With no table at ``table_path``, the first call commits the batch's
+    latest-per-key rows as version 1 (``MTable.write``, partitioned by
+    ``partition_col`` when given).  A path that holds files but no
+    mtable manifest raises ``ValueError``: the merge never starts a new
+    table beside existing data.
     """
     tb = tiebreak_col or ts_col
-    from ..sources.mtable import MTable
+    from ..sources.mtable import MTable, _fs, _jpath
 
     t = MTable(spark, table_path)
-    if t.versions():
-        # snapshot-isolated route: batch-local winners, then keep only the
-        # update rows that beat (or miss) the stored row for their key —
-        # merge_upsert replaces matched keys and appends new ones, all in
-        # one manifest commit against the version read here
-        cand = latest_per_key(updates, keys, ts_col, tb)
-        ex = t.read().select(
-            *keys,
-            F.col(ts_col).alias("__ex_ts"),
-            F.col(tb).alias("__ex_tb"),
-        )
-        beats = (
-            F.col("__ex_ts").isNull()
-            | (F.col(ts_col) > F.col("__ex_ts"))
-            | (
-                (F.col(ts_col) == F.col("__ex_ts"))
-                & (F.col(tb) >= F.col("__ex_tb"))
+    cand = latest_per_key(updates, keys, ts_col, tb)
+    cur = t._latest()
+    if cur is None:
+        fs, jvm = _fs(spark, t.path)
+        root = _jpath(jvm, t.path)
+        # data/ and _manifest/ alone are residue of a first write that
+        # crashed before its manifest commit: invisible to readers, safe
+        # to write over
+        if fs.exists(root) and any(
+            st.getPath().getName() not in ("data", "_manifest")
+            for st in fs.listStatus(root)
+        ):
+            raise ValueError(
+                f"{table_path} holds files but no mtable manifest; "
+                "convert it with MTable.write before merging into it"
             )
-        )
-        winners = (
-            cand.join(ex, on=list(keys), how="left")
-            .where(beats)
-            .drop("__ex_ts", "__ex_tb")
-        )
-        pby = t._logical_pby(t._read_manifest(t.versions()[-1]))
-        if pby is not None:
-            # partitioned table: keyed merge rewrites only touched
-            # partitions, one manifest commit
-            pval = F.col(partition_col) if partition_col is not None else None
-            t.merge_upsert(winners, keys=list(keys), partition_col_value=pval)
-        else:
-            # unpartitioned table: survivors + winners as one atomic
-            # whole-table version (there is no partition grain to scope
-            # the rewrite to — same cost as the directory route's full
-            # overwrite, minus its reader-isolation gap)
-            survivors = t.read().join(
-                F.broadcast(winners.select(*keys).distinct()),
-                on=list(keys),
-                how="left_anti",
-            )
-            t.write(survivors.unionByName(winners.select(*survivors.columns)))
+        t.write(cand, partition_by=partition_col)
         return t.read().count()
-    try:
-        existing = spark.read.parquet(table_path)
-        merged = existing.unionByName(updates, allowMissingColumns=True)
-    except Exception:
-        merged = updates
-    result = latest_per_key(merged, keys, ts_col, tb)
-
-    # parquet cannot overwrite in place while being read: stage via
-    # checkpointed materialization (cluster impl: Delta MERGE, no staging)
-    staged = result.localCheckpoint(eager=True)
-    if partition_col is not None:
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(table_path)
-        )
+    # keep only the batch winners that beat (or miss) the stored row for
+    # their key — merge_upsert replaces matched keys and appends new ones,
+    # all in one manifest commit against the version read here
+    ex = t.read().select(
+        *keys,
+        F.col(ts_col).alias("__ex_ts"),
+        F.col(tb).alias("__ex_tb"),
+    )
+    beats = (
+        F.col("__ex_ts").isNull()
+        | (F.col(ts_col) > F.col("__ex_ts"))
+        | ((F.col(ts_col) == F.col("__ex_ts")) & (F.col(tb) >= F.col("__ex_tb")))
+    )
+    winners = (
+        cand.join(ex, on=list(keys), how="left")
+        .where(beats)
+        .drop("__ex_ts", "__ex_tb")
+    )
+    if t._logical_pby(cur[1]) is not None:
+        # partitioned table: keyed merge rewrites only touched partitions
+        pval = F.col(partition_col) if partition_col is not None else None
+        t.merge_upsert(winners, keys=list(keys), partition_col_value=pval)
     else:
-        staged.write.mode("overwrite").parquet(table_path)
-    return staged.count()
+        # unpartitioned table: survivors + winners as one atomic
+        # whole-table version (there is no partition grain to scope the
+        # rewrite to)
+        survivors = t.read().join(
+            F.broadcast(winners.select(*keys).distinct()),
+            on=list(keys),
+            how="left_anti",
+        )
+        t.write(survivors.unionByName(winners.select(*survivors.columns)))
+    return t.read().count()
 
 
 def table_diff(

@@ -357,7 +357,7 @@ def write_packed_shards(
         raise ValueError(
             f"write_packed_shards writes its manifest via local POSIX paths; "
             f"got URI target {out_dir!r} — mount it or add a store-native "
-            "manifest writer (same guard as merge_upsert's swap)"
+            "manifest writer"
         )
     (
         chunks.repartition("shard")

@@ -9982,76 +9982,68 @@ def q_url_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 DRIVER_PRIORITY: tuple[str, ...] = (
-    # --- r14 window (50 slots), rotation per VERDICT r13 next-round #8
-    # and the tests/test_driver_rotation.py guard: the full OLDEST
-    # latest-green cohort (r10, 24 queries) leads, then every query whose
-    # implementation changed this round (shared graph edge cache;
-    # packed-KMV consumption), then the r11 cohort oldest-first
-    # (alphabetical within the equal-age cohort).  Zero-history entries:
-    # none.
-    # --- r14 block 1: the full r10-green cohort (24).
-    "orders_column_mapping_scan",
-    "orders_partition_respec_scan",
-    "orders_position_delete_scan",
-    "orders_priority_pivot",
-    "orders_type_widening_scan",
-    "part_pagerank_copurchase",
-    "promo_revenue_share",
-    "recs_negative_samples",
-    "revenue_by_nation",
-    "revenue_rollup",
-    "revenue_rollup_incremental_cdf",
-    "rows_rolling_spend",
-    "segment_priority_cube",
-    "seq_packing_chunk_text",
-    "seq_packing_chunks",
-    "shipping_priority",
-    "stratified_sample_balanced",
-    "text_string_features",
-    "top_customers_by_revenue",
-    "top_revenue_supplier",
-    "training_set_build",
-    "training_shuffle_shards",
-    "user_days_view_no_purchase",
-    "users_purchase_and_signup",
-    # --- r14 block 2: implementation changed this round (r14): the
-    # graph family now shares one persisted edge build (pagerank is in
-    # the r10 cohort above) and the KMV overlap/retention queries
-    # consume the sketch packed.
-    "copurchase_triangles",
-    "part_ppr_brand_affinity",
-    "part_similar_by_copurchase",
-    "approx_customer_overlap_months",
-    "approx_customer_overlap_sketch",
-    "approx_customer_retention_months",
-    # --- r14 block 3: r11-green cohort oldest-first (alphabetical),
-    # filling the remaining 20 slots; the other 25 r11 rows roll to r15
-    # (post-r14 histogram: nothing older than r11).
-    "approx_distinct_users_daily",
-    "brand_margin",
-    "cohort_revenue_retention",
-    "corpus_curation_pipeline",
-    "customers_with_urgent_orders",
-    "customers_without_recent_orders",
-    "data_quality_report",
-    "dedup_edit_distance",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_simhash",
-    "discounted_revenue",
-    "doc_quality_gopher",
-    "embedding_label_centroids",
-    "embedding_norms",
-    "embedding_random_projection",
-    "events_funnel_conversion",
-    "events_props_json",
-    "events_session_windows",
-    "feature_drift_bins",
-    # --- r15 handoff: rotate the REMAINING r11 cohort FIRST
-    # (feature_view_build_set .. user_retention_cohorts, 25), then any
-    # r15-impl-changed queries, then the r12 cohort oldest-first.  The
-    # guard test recomputes the histogram and fails if this comment and
-    # the ledger ever disagree.
+    # Rotation rule, checked by tests/test_driver_rotation.py: the full
+    # OLDEST latest-green cohort leads, then every query whose
+    # implementation changed since its last green run, then the next
+    # cohort oldest-first (alphabetical within an equal-age cohort).
+    # Zero-history entries: none.  No query implementation changed in
+    # this rotation.
+    # --- block 1: the full r11-green cohort (25).
+    "feature_view_build_set",
+    "forecast_revenue_change",
+    "knn_cosine_bruteforce",
+    "knn_ivf_kmeans",
+    "knn_projection_recall",
+    "latest_event_per_user",
+    "linestatus_priority_counts",
+    "model_calibration_bins",
+    "model_eval_auc",
+    "nation_daily_revenue_outliers",
+    "ngram_topk_global",
+    "order_count_distribution",
+    "order_interarrival_stats",
+    "orders_range_join_followups",
+    "purchase_labels_after_signup",
+    "qty_price_correlation",
+    "returned_item_ranking",
+    "rfm_segments",
+    "segment_spend_deciles",
+    "session_event_transitions",
+    "text_pii_scrub",
+    "union_slices",
+    "url_dedup_domains",
+    "user_daily_snapshot_spine",
+    "user_retention_cohorts",
+    # --- block 2: r12-green cohort, alphabetical, filling the
+    # remaining 25 slots.
+    "approx_heavy_hitters",
+    "approx_value_percentiles",
+    "asof_snapshot_lookup",
+    "benchmark_contamination",
+    "boilerplate_passage_scrub",
+    "brand_basket_affinity",
+    "churn_labels_orders",
+    "corpus_importance_sample",
+    "corpus_temperature_mix",
+    "corpus_token_budget_sample",
+    "customer_onehot",
+    "customer_priority_scd2",
+    "daily_feature_snapshots",
+    "dau_mau_stickiness",
+    "decayed_user_value",
+    "dedup_canonical_by_quality",
+    "dedup_clusters",
+    "dedup_clusters_star",
+    "dedup_containment",
+    "dedup_cross_source_matrix",
+    "dedup_ngram_jaccard",
+    "dedup_remove_repeated_spans",
+    "dedup_repeated_ngrams",
+    "distinct_parts_per_customer",
+    "doc_chunk_overlap",
+    # --- next rotation: the REMAINING r12 cohort FIRST
+    # (doc_fingerprint .. value_percentiles, 20), then any
+    # impl-changed queries, then the r13 cohort oldest-first.
 )
 
 

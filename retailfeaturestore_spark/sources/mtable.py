@@ -5,12 +5,14 @@ Why this exists: the reference materializes feature views by directory
 overwrite (``/root/reference/jobs/build_feature_views.py:75-82``) — "ACID"
 there is rerun-until-it-looks-right.  BASELINE.json names Delta Lake as the
 production materialization format, but neither delta nor iceberg is
-installable in this environment, and ``io.merge_upsert``'s staged protocols
-still leave one documented gap: a reader listing a partition DIRECTORY
-during the publish window can see old and new files together.  The fix is
-the core idea of every table format, which needs ~200 lines, not a
-dependency: **readers never list directories — they read exactly the files
-named by a manifest, and a commit is one atomic manifest PUT.**
+installable in this environment, and any directory-swap merge leaves one
+gap: a reader listing a partition DIRECTORY during the publish window can
+see old and new files together.  The fix is the core idea of every table
+format, which needs ~200 lines, not a dependency: **readers never list
+directories — they read exactly the files named by a manifest, and a
+commit is one atomic manifest PUT.**  This module is the package's one
+keyed MERGE (``merge_upsert``) and its one clustered layout (``compact``
+with ``order_by`` / ``zorder_by``).
 
 Layout::
 
@@ -2200,9 +2202,11 @@ class MTable:
         allow_evolution: bool = False,
         allow_widening: bool = False,
     ) -> int:
-        """MERGE by key into the touched partitions only (same semantics as
-        ``io.merge_upsert``, but the publish is one atomic manifest commit
-        and readers are snapshot-isolated throughout).
+        """MERGE by key into the touched partitions only: every stored row
+        whose key appears in ``updates`` is replaced, new keys are appended,
+        untouched partitions are carried by reference.  The publish is one
+        atomic manifest commit and readers are snapshot-isolated
+        throughout.
         ``partition_col_value``: expression deriving the partition value
         from an updates row (e.g. ``F.date_format("t_ref","yyyy-MM-dd")``).
         ``allow_evolution=True`` lets ``updates`` carry NEW columns (additive
@@ -3471,8 +3475,8 @@ class MTable:
         Layout modes:
 
         - default / ``order_by``: each partition collapses to ONE file,
-          optionally sorted within it (stats-locality clustering, same
-          motivation as ``io.write_clustered``);
+          optionally sorted within it (stats-locality clustering: tight
+          per-file min/max on the sort columns);
         - ``zorder_by=[c1, c2, ...]``: multi-dimensional clustering
           (Delta's OPTIMIZE ZORDER BY).  Rows are ordered by the
           interleaved-bit z-value of the named columns and range-split

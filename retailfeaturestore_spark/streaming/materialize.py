@@ -73,18 +73,15 @@ def stream_upsert_gold(
     trigger_available_now: bool = True,
 ):
     """Continuous incremental GOLD maintenance: each micro-batch MERGEs into
-    the offline table through ``operators.incremental.upsert_latest``
-    (latest-per-key wins; partition-scoped rewrite when ``partition_col`` is
-    set).  Streaming + incremental composed from the same batch pieces —
-    the lakehouse pattern (on a cluster, the foreachBatch body is a Delta
-    ``MERGE INTO``; the call site does not change).  Idempotent under
-    micro-batch replay: re-merging the same rows elects the same winners.
-
-    DEFAULT FOR NEW CODE (r13): point ``table_path`` at an existing ACID
-    ``mtable`` — ``upsert_latest`` auto-routes each micro-batch through
-    ``MTable.merge_upsert`` (atomic commit, snapshot-isolated readers).
-    For exactly-once (not just idempotent) semantics with a batch-id
-    ledger, use :func:`stream_commit_gold_mtable` instead.
+    the mtable at ``table_path`` through
+    ``operators.incremental.upsert_latest`` (latest-per-key wins;
+    partition-scoped rewrite when ``partition_col`` is set), so every batch
+    is one ``MTable.merge_upsert`` commit with snapshot-isolated readers.
+    The first batch on a missing path creates the table; a path holding
+    plain parquet without a manifest fails the batch with ``ValueError``.
+    Idempotent under micro-batch replay: re-merging the same rows elects
+    the same winners.  For exactly-once (not just idempotent) semantics
+    with a batch-id ledger, use :func:`stream_commit_gold_mtable` instead.
     """
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:

@@ -60,17 +60,22 @@ def test_csv_sink_roundtrip(spark, tmp_path):
 
 
 def test_upsert_latest_merges_by_key(spark, tmp_path):
+    import os
+    import re
     from datetime import datetime
 
     from retailfeaturestore_spark.operators.incremental import upsert_latest
+    from retailfeaturestore_spark.sources.mtable import MTable
 
     path = str(tmp_path / "gold_inc")
+    t = MTable(spark, path)
     base = spark.createDataFrame(
         [(1, datetime(2024, 1, 1), 10.0), (2, datetime(2024, 1, 1), 20.0)],
         "customer_id int, t_ref timestamp, spend double",
     )
     n = upsert_latest(spark, path, base, ["customer_id"], "t_ref")
     assert n == 2
+    assert t.versions() == [1]  # first call on a missing path commits v1
 
     updates = spark.createDataFrame(
         [(2, datetime(2024, 2, 1), 25.0), (3, datetime(2024, 1, 15), 30.0)],
@@ -78,7 +83,7 @@ def test_upsert_latest_merges_by_key(spark, tmp_path):
     )
     n = upsert_latest(spark, path, updates, ["customer_id"], "t_ref")
     assert n == 3
-    out = {r.customer_id: r.spend for r in spark.read.parquet(path).collect()}
+    out = {r.customer_id: r.spend for r in t.read().collect()}
     assert out == {1: 10.0, 2: 25.0, 3: 30.0}  # 2 updated, 1 kept, 3 inserted
 
     # stale update (older ts) must NOT win
@@ -86,8 +91,25 @@ def test_upsert_latest_merges_by_key(spark, tmp_path):
         [(2, datetime(2023, 1, 1), 1.0)], "customer_id int, t_ref timestamp, spend double"
     )
     upsert_latest(spark, path, stale, ["customer_id"], "t_ref")
-    out = {r.customer_id: r.spend for r in spark.read.parquet(path).collect()}
+    out = {r.customer_id: r.spend for r in t.read().collect()}
     assert out[2] == 25.0
+
+    # plain parquet with no manifest: refused, files left as they were
+    plain = str(tmp_path / "plain")
+    base.write.parquet(plain)
+
+    def snapshot():
+        snap = {}
+        for root, _dirs, files in os.walk(plain):
+            for f in files:
+                with open(os.path.join(root, f), "rb") as fh:
+                    snap[os.path.relpath(os.path.join(root, f), plain)] = fh.read()
+        return snap
+
+    before = snapshot()
+    with pytest.raises(ValueError, match=re.escape(plain)):
+        upsert_latest(spark, plain, updates, ["customer_id"], "t_ref")
+    assert snapshot() == before
 
 
 @requires_testdata

@@ -175,13 +175,14 @@ def test_streaming_session_windows_equal_batch(spark, tmp_path):
 
 
 def test_stream_upsert_gold_equals_batch_latest(spark, tmp_path):
-    """Two micro-batches foreachBatch-MERGE into a parquet gold table; the
+    """Two micro-batches foreachBatch-MERGE into an mtable gold table; the
     result must equal a one-shot latest-per-key over the full input (the
     incremental path converges to the batch answer)."""
     from pyspark.sql import functions as F
 
     from retailfeaturestore_spark.io import load_table
     from retailfeaturestore_spark.operators.pit import latest_per_key
+    from retailfeaturestore_spark.sources.mtable import MTable
     from retailfeaturestore_spark.streaming.materialize import stream_upsert_gold
 
     ev = load_table(spark, SF, "events").select("event_id", "ts", "user_id", "value")
@@ -217,7 +218,7 @@ def test_stream_upsert_gold_equals_batch_latest(spark, tmp_path):
 
     got = {
         (r.user_id): (r.event_id, r.ts, r.value)
-        for r in spark.read.parquet(str(gold)).collect()
+        for r in MTable(spark, str(gold)).read().collect()
     }
     want = {
         (r.user_id): (r.event_id, r.ts, r.value)

@@ -49,7 +49,7 @@ def changed_queries_since(rev: str) -> list[str]:
     AST-compared between revisions, and taint propagates (a) through each
     file's internal reference graph (helper -> query, oracle-SQL constant
     -> query) and (b) across files through ``from .x import name`` edges —
-    so a ``merge_upsert`` edit in io.py taints only its callers, not every
+    so a ``write_csv`` edit in io.py taints only its callers, not every
     query that imports ``load_table`` from the same file.
 
     Conservative fallbacks: a file that doesn't parse at ``rev`` (new or
