@@ -187,7 +187,6 @@ def write_date_partitioned(
     path: str,
     event_ts_col: str,
     mode: str = "overwrite",
-    fmt: str = "parquet",
 ) -> None:
     """Hive-style ``date=YYYY-MM-DD`` partitioned sink.
 
@@ -203,8 +202,7 @@ def write_date_partitioned(
         df.withColumn("date", F.date_format(F.col(event_ts_col), "yyyy-MM-dd"))
         .write.mode(mode)
         .partitionBy("date")
-        .format(fmt)
-        .save(path)
+        .parquet(path)
     )
 
 

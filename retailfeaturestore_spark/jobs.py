@@ -13,6 +13,8 @@ jobs/materialize_online.py, jobs/make_training_and_train.py (SURVEY.md §3).
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -102,22 +104,48 @@ def ingest_to_bronze(spark: SparkSession, raw: DataFrame, bronze_path: str) -> N
 
 
 def _gold_frame(
-    spark: SparkSession, bronze_path: str, windows: dict[str, int] | None
+    spark: SparkSession,
+    bronze_path: str,
+    windows: dict[str, int] | None,
+    start_date: str | None = None,
+    end_date: str | None = None,
 ) -> DataFrame:
-    """Bronze -> the gold feature-view frame (W1-W6 window family + A2
-    country mode), shared by every gold sink flavor."""
+    """Bronze -> the gold feature-view frame (W1-W6 window family + tenure +
+    A2 country mode), shared by every gold sink flavor.
+
+    With ``[start_date, end_date]`` only the rows whose ``t_ref`` falls in
+    the range are built, equal to a full build's rows there: the window
+    family reads bronze from ``start - max(windows)`` (the lookback) to
+    ``end``, and ``tenure_days`` is re-measured from the entity's first
+    event EVER by a two-column full-history ``min(ts)`` scan (in a
+    production lakehouse, a maintained first-seen dimension).  The mode
+    country is a full-history attribute in both cases."""
+    windows = windows or {"1d": 1, "7d": 7, "30d": 30}
     bronze = spark.read.parquet(bronze_path)
-    feats = build_customer_features(bronze.drop("country"), windows=windows)
+    events = bronze
+    if start_date is not None:
+        start, end = F.lit(start_date).cast("date"), F.lit(end_date).cast("date")
+        day = F.col("invoice_date").cast("date")
+        events = bronze.where((day >= F.date_sub(start, max(windows.values()))) & (day <= end))
+    feats = build_customer_features(events.drop("country"), windows=windows)
+    if start_date is not None:
+        t_day = F.col("t_ref").cast("date")
+        first_seen = bronze.groupBy("customer_id").agg(F.min("invoice_date").alias("__first_ts"))
+        micros = F.unix_micros("t_ref") - F.unix_micros("__first_ts")
+        feats = (
+            feats.where((t_day >= start) & (t_day <= end))
+            .join(first_seen, "customer_id", "left")
+            .withColumn("tenure_days", F.floor(micros / 86_400_000_000))
+        )
     mode = group_mode(bronze, "customer_id", "country").select(
         "customer_id", F.col("country_mode").alias("country")
     )
     # Gold contract (FIXTURES.md §3): keys + windowed features + tenure +
     # mode country — raw line columns stay in bronze.
-    wnames = (windows or {"1d": 1, "7d": 7, "30d": 30}).keys()
     feature_cols = [
         f"{base}_{w}"
         for base in ("txn_count", "spend", "unique_skus", "avg_basket_value", "cancel_rate")
-        for w in wnames
+        for w in windows
     ]
     return feats.select("customer_id", "t_ref", *feature_cols, "tenure_days").join(
         mode, "customer_id", "left"
@@ -185,88 +213,31 @@ def backfill_feature_views(
     ``[start_date, end_date]`` — the late-data / bug-fix repair path the
     reference handles by full rebuild (its pipeline is rerun-from-scratch
     idempotent, SURVEY.md §2.9; at 100 TB a full rebuild for one late day
-    is not an option).
+    is not an option).  The range frame comes from :func:`_gold_frame`,
+    which gives it the window lookback and full-history tenure and mode a
+    full build would.
 
-    Correctness requires two kinds of history beyond the target range:
-
-    - **window lookback**: every range frame sees up to ``max(windows)``
-      days before its row, so bronze is read from ``start - max_horizon``
-      (partition pruning keeps the scan at lookback+range days);
-    - **tenure epoch**: ``tenure_days`` is measured from the entity's FIRST
-      event EVER, outside any lookback — recomputed from a column-pruned
-      full-history scan of ``(entity, min(ts))`` and patched onto the
-      family output.  (In a production lakehouse this pair is a maintained
-      first-seen dimension; the full-column-pruned scan is the
-      dependency-free equivalent and reads two columns only.)
-
-    The write uses dynamic partition overwrite, so ONLY the recomputed
-    ``date=`` directories are replaced — partitions outside the range are
-    untouched (test-asserted byte-for-byte).  Returns the number of rows
-    written.
-    """
-    gold = _backfill_gold_slice(spark, bronze_path, start_date, end_date, windows)
-    n = gold.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        write_date_partitioned(gold, gold_path, "t_ref", mode="overwrite")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n
-
-
-def _backfill_gold_slice(
-    spark: SparkSession,
-    bronze_path: str,
-    start_date: str,
-    end_date: str,
-    windows: dict[str, int] | None,
-) -> DataFrame:
-    """The backfill recompute (window lookback + full-history tenure/mode
-    patches) without a sink — shared by the directory and mtable targets."""
-    windows = windows or {"1d": 1, "7d": 7, "30d": 30}
-    lookback_days = max(windows.values())
-    start = F.lit(start_date).cast("date")
-    end = F.lit(end_date).cast("date")
-
-    bronze_all = spark.read.parquet(bronze_path)
-    ts_date = F.col("invoice_date").cast("date")
-    slice_df = bronze_all.where(
-        (ts_date >= F.date_sub(start, lookback_days)) & (ts_date <= end)
+    The write carries the per-write ``partitionOverwriteMode=dynamic``
+    option, so ONLY the recomputed ``date=`` directories are replaced —
+    partitions outside the range are untouched (test-asserted
+    byte-for-byte) and the session conf is left alone.  Returns the number
+    of rows written, read back from the range's parquet footers, so the
+    recompute runs once.  (An ``Observation`` on the write is not used: on
+    Spark 4.1 it leaves the session unserializable for later Spark ML
+    closures.)  A range day the recompute no longer produces keeps, and
+    counts, its old rows — the mtable sink replaces those."""
+    gold = _gold_frame(spark, bronze_path, windows, start_date, end_date)
+    (
+        gold.withColumn("date", F.date_format("t_ref", "yyyy-MM-dd"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("date")
+        .parquet(gold_path)
     )
-    feats = build_customer_features(slice_df.drop("country"), windows=windows)
-    # patch tenure against the full-history first event (cheap 2-column scan)
-    first_seen = bronze_all.groupBy("customer_id").agg(
-        F.min("invoice_date").alias("__first_ts")
-    )
-    feats = (
-        feats.join(first_seen, "customer_id", "left")
-        .withColumn(
-            "tenure_days",
-            F.floor(
-                (F.unix_micros(F.col("t_ref")) - F.unix_micros(F.col("__first_ts")))
-                / F.lit(86_400_000_000)
-            ),
-        )
-        .drop("__first_ts")
-    )
-    # A2 mode country is a FULL-history profile attribute (like tenure), not
-    # a windowed one — computing it from the slice would diverge from the
-    # full rebuild; another two-column pruned scan.
-    mode = group_mode(bronze_all, "customer_id", "country").select(
-        "customer_id", F.col("country_mode").alias("country")
-    )
-    feature_cols = [
-        f"{base}_{w}"
-        for base in ("txn_count", "spend", "unique_skus", "avg_basket_value", "cancel_rate")
-        for w in windows
-    ]
-    gold = (
-        feats.where((F.col("t_ref").cast("date") >= start) & (F.col("t_ref").cast("date") <= end))
-        .select("customer_id", "t_ref", *feature_cols, "tenure_days")
-        .join(mode, "customer_id", "left")
-    )
-    return gold
+    # a driver-side footer read (no Spark job) on the range's partitions
+    part = pads.partitioning(pa.schema([("date", pa.string())]), flavor="hive")
+    in_range = (pads.field("date") >= start_date) & (pads.field("date") <= end_date)
+    return pads.dataset(gold_path, format="parquet", partitioning=part).count_rows(filter=in_range)
 
 
 def backfill_feature_views_mtable(
@@ -287,26 +258,20 @@ def backfill_feature_views_mtable(
     entire recompute.  Returns the committed version."""
     from .sources.mtable import MTable
 
-    gold = _backfill_gold_slice(spark, bronze_path, start_date, end_date, windows)
+    gold = _gold_frame(spark, bronze_path, windows, start_date, end_date)
     t = MTable(spark, table_path)
     cur = t.versions()
     if not cur:
         raise ValueError("backfill into an empty mtable: run the build first")
     base_v = cur[-1]
     existing = t._read_manifest(base_v)["partitions"]
+    # overwrite_partitions also replaces every partition the frame stages
+    # (all inside the range).  base_version: in_range was computed against
+    # base_v's manifest — a racing commit must trip the CAS, not be clobbered
     in_range = [d for d in existing if start_date <= d <= end_date]
-    staged_dates = [
-        r[0]
-        for r in gold.select(
-            F.date_format("t_ref", "yyyy-MM-dd").alias("d")
-        ).distinct().collect()
-    ]
-    replaced = sorted(set(in_range) | set(staged_dates))
-    # base_version: the replaced-range set was computed against base_v's
-    # manifest — a racing commit must trip the CAS, not be clobbered
     return t.overwrite_partitions(
         gold.withColumn("date", F.date_format("t_ref", "yyyy-MM-dd")),
-        partition_values=replaced,
+        partition_values=in_range,
         extra_meta={"backfill": [start_date, end_date]},
         base_version=base_v,
     )
@@ -322,22 +287,20 @@ def materialize_online_job(
     ttl_seconds: int | None = None,
 ) -> int:
     """Gold -> deterministic latest-per-customer (A4) -> hash-store sink (S5).
-    Returns the number of entities materialized."""
+    Returns the number of entities materialized, as counted by the sink."""
     from .sources.redis_sink import materialize_online
 
     gold = spark.read.parquet(gold_path)
     latest = latest_per_key(gold, "customer_id", "t_ref", "t_ref")
     if limit:
         latest = latest.limit(limit)
-    n = latest.count()
-    materialize_online(
+    return materialize_online(
         latest,
         feature_cols,
         onehot_categories=onehot_categories,
         client_factory=client_factory,
         ttl_seconds=ttl_seconds,
     )
-    return n
 
 
 def make_training(

@@ -27,7 +27,7 @@ Scale notes (100 TB):
   sub-second event times are exact (casting to seconds would truncate).
 - The per-frame ``collect_set`` state for W3 is bounded by per-entity distinct
   SKUs inside the window horizon; for whale entities enable
-  ``approx_unique=True`` (HLL ``approx_count_distinct``) — documented opt-in,
+  ``unique_mode="approx"`` (HLL ``approx_count_distinct``) — documented opt-in,
   divergence recorded, or pre-aggregate to (entity, sku, day) grain first.
 - AQE skew-join/partition handling covers entity-key skew; no salting needed
   for window ops (Spark windows don't support partial aggregation anyway, so
@@ -135,7 +135,6 @@ def build_customer_features(
     amount_col: str = "line_amount",
     cancel_col: str = "is_cancel",
     round_to: int | None = None,
-    approx_unique: bool = False,
     amount_scale: int | None = 4,
     unique_mode: str = "delta",
     carry_cols: tuple[str, ...] | None = None,
@@ -158,8 +157,7 @@ def build_customer_features(
     ``"set"`` (``collect_set`` window state — exact and ~1.5x faster at
     retail cardinalities, but per-row set state is the known memory cliff
     when one entity sees millions of distinct keys inside a window), or
-    ``"approx"`` (HLL estimate; also reachable via the legacy
-    ``approx_unique=True``).  All three produce the same column names;
+    ``"approx"`` (HLL estimate).  All three produce the same column names;
     "set" and "delta" the same values.  The default is the engine that
     cannot fall over — callers that know their cardinality opt into "set".
 
@@ -189,8 +187,6 @@ def build_customer_features(
     carried.  ``None`` preserves every input column (the generic contract).
     """
     windows = windows or {"1d": 1, "7d": 7, "30d": 30}
-    if approx_unique:
-        unique_mode = "approx"
     if unique_mode not in ("set", "approx", "delta"):
         raise ValueError(f"unknown unique_mode: {unique_mode!r}")
 

@@ -86,7 +86,9 @@ def main(argv: list[str] | None = None) -> int:
         ),
         args.out,
     )
-    print(json.dumps({"out": args.out, "rows": scored.count()}))
+    # count the written CSV, not `scored`, so the scoring plan runs once
+    rows = spark.read.option("header", "true").csv(args.out).count()
+    print(json.dumps({"out": args.out, "rows": rows}))
     return 0
 
 

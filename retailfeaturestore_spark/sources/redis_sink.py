@@ -1,4 +1,4 @@
-"""Online-store sink: Redis hash materialization via foreachPartition.
+"""Online-store sink: Redis hash materialization, one pipeline per partition.
 
 Parity with ``jobs/materialize_online.py`` (SURVEY.md §2.1 S5):
 - key ``fs:customer:{id}`` (``:52``), one hash per entity;
@@ -9,10 +9,10 @@ Parity with ``jobs/materialize_online.py`` (SURVEY.md §2.1 S5):
 - pipelined writes, optional TTL via env ``REDIS_TTL_SECONDS`` (``:55-56``).
 
 Spark-first shape: the DataFrame (already reduced to latest-per-entity by
-``pit.latest_per_key``) is written by ``foreachPartition`` — each executor
-opens ONE connection and pipelines its partition; the driver never sees the
-rows.  At 1000 executors this is the only sink shape that works: per-row
-connections or a driver-side collect() both melt down.
+``pit.latest_per_key``) is published partition by partition in one job —
+each executor opens ONE connection and pipelines its partition; the driver
+never sees the rows.  At 1000 executors this is the only sink shape that
+works: per-row connections or a driver-side collect() both melt down.
 
 The ``redis`` client library is not installed in this environment, so the
 connection factory is import-gated; tests inject ``DictRedis`` (an in-memory
@@ -110,12 +110,13 @@ def materialize_online(
     client_factory: Callable[[], object] | None = None,
     ttl_seconds: int | None = None,
     pipeline_batch: int = 500,
-) -> None:
+) -> int:
     """Publish latest-per-entity snapshots to the online hash store.
 
     One connection + pipeline per partition; flush every ``pipeline_batch``
     HSETs (the reference pipelines the whole snapshot at once — fine for 6k
-    customers, not for 600M).
+    customers, not for 600M).  Returns the number of hashes written, summed
+    over the partitions by the publishing job itself.
     """
     cats = onehot_categories or []
     ttl = ttl_seconds if ttl_seconds is not None else (
@@ -125,13 +126,13 @@ def materialize_online(
     cols = [entity_col, ts_col] + ([cat_col] if cat_col else []) + feature_cols
 
     def sink(rows):
-        publish_rows(
+        yield publish_rows(
             rows, factory, feature_cols, cats,
             ts_col=ts_col, cat_col=cat_col, entity_col=entity_col,
             ttl=ttl, pipeline_batch=pipeline_batch,
         )
 
-    snapshots.select(*cols).foreachPartition(sink)
+    return snapshots.select(*cols).rdd.mapPartitions(sink).sum()
 
 
 def publish_rows(
@@ -144,12 +145,13 @@ def publish_rows(
     entity_col: str = "customer_id",
     ttl: int | None = None,
     pipeline_batch: int = 500,
-) -> None:
+) -> int:
     """One partition's publish: connect, pipeline, flush per batch.
+    Returns the number of hashes written.
 
     Module-level (not a closure) so the real-deps test leg can drive the
     EXACT production call sequence against a faithful redis client
-    (fakeredis) in-process — foreachPartition runs in Python worker
+    (fakeredis) in-process — partition publishes run in Python worker
     subprocesses where an in-memory fake's writes are invisible to the
     asserting test."""
     client = factory()
@@ -167,3 +169,4 @@ def publish_rows(
         if n % pipeline_batch == 0:
             pipe.execute()
     pipe.execute()
+    return n

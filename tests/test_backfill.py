@@ -87,7 +87,13 @@ def test_backfill_sees_lookback_and_tenure_epoch(spark, tmp_path):
     gold = str(tmp_path / "gold")
     ingest_to_bronze(spark, raw, bronze)
     build_feature_views(spark, bronze, gold)
-    backfill_feature_views(spark, bronze, gold, "2011-03-01", "2011-03-31")
+    outside = glob.glob(f"{gold}/date=2011-0[12]-*/*.parquet")
+    before = {p: os.path.getmtime(p) for p in outside}
+    n = backfill_feature_views(spark, bronze, gold, "2011-03-01", "2011-03-31")
+    assert n == 1  # the one March row, counted on the write
+    # the January and February partitions were not rewritten (dynamic
+    # partition overwrite on the write, not a static full overwrite)
+    assert before and {p: os.path.getmtime(p) for p in outside} == before
     row = {
         str(r.t_ref): r for r in spark.read.parquet(gold).where("customer_id = 1").collect()
     }["2011-03-03 10:00:00"]

@@ -50,7 +50,8 @@ def test_cli_single_and_batch(spark, tmp_path, capsys):
 
     rc = cli_main(["--gold", gold, "--model-dir", model_dir,
                    "batch", "--out", str(tmp_path / "scores")])
-    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0 and out["rows"] == 2  # counted on the write
     back = spark.read.option("header", "true").csv(str(tmp_path / "scores"))
     assert back.count() == 2  # one latest row per customer
     assert {"customer_id", "probability", "prediction", "t_ref"} <= set(back.columns)

@@ -53,9 +53,10 @@ def test_materialize_online_foreachpartition(spark, tmp_path):
         [(1, datetime(2024, 1, 1), "UK", 10.0), (2, datetime(2024, 1, 2), "FR", 20.0)],
         "customer_id int, t_ref timestamp, country string, spend_30d double",
     )
-    materialize_online(
+    n = materialize_online(
         df, ["spend_30d"], onehot_categories=["UK", "FR"], client_factory=FileRedis
     )
+    assert n == 2  # hashes written, summed over the partitions' publishes
     files = sorted(glob.glob(f"{out_dir}/*.json"))
     assert len(files) == 2
     rec = json.load(open(files[0]))
