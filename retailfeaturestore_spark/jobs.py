@@ -325,6 +325,7 @@ def make_training(
     LightGBM where installed and the protocol-typed LinearStubModel
     otherwise.
     """
+    from .ml.scoring import contract_columns
     from .ml.training import collect_training_frame, fit_model
 
     bronze = spark.read.parquet(bronze_path)
@@ -365,11 +366,11 @@ def make_training(
     ]
     pdf = collect_training_frame(
         ts,
-        [*feature_names, "churn_30d"],
+        [*contract_columns(ts.columns, feature_names), "churn_30d"],
         max_driver_rows=max_driver_rows,
         sample_over_limit=sample_over_limit,
     )
-    X = pdf[feature_names].to_numpy(dtype="float64", na_value=0.0)
+    X = pdf[feature_names].to_numpy(dtype="float64")
     y = pdf["churn_30d"].to_numpy(dtype="float64")
     model, flavor = fit_model(X, y)
     metrics = {"n_rows": int(len(y)), "pos_rate": float(y.mean()), "flavor": flavor}

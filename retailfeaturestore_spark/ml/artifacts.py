@@ -5,6 +5,9 @@ a pickled model + ``feature_names.txt`` column contract + a metrics sidecar.
 joblib/MLflow are not installed here; stdlib pickle is format-compatible for
 the protocol-typed models this engine ships, and the MLflow hook is a
 documented one-liner where available.
+
+:func:`resolve_feature` is the contract's one model-input rule: training,
+both batch scorers, the distributed fit and serving build inputs through it.
 """
 
 from __future__ import annotations
@@ -13,7 +16,34 @@ import json
 import pickle
 from pathlib import Path
 
-__all__ = ["save_artifacts", "load_model", "read_feature_names", "write_feature_names"]
+__all__ = [
+    "resolve_feature", "save_artifacts", "load_model", "read_feature_names", "write_feature_names",
+]
+
+# never model inputs, even when a contract names them
+LEAKAGE_COLS = frozenset({"country", "t_ref", "churn_30d"})
+
+
+def resolve_feature(name: str, columns) -> tuple[str | None, str | None]:
+    """Where contract name ``name`` takes its value from, given the
+    ``columns`` a snapshot has (any container supporting ``in``).
+
+    Returns ``(col, value)``, checked in this order:
+
+    - a leakage name -> ``(None, None)``: the input is 0.0;
+    - a present column -> ``(name, None)``: its value, null or NaN -> 0.0;
+    - ``{col}__{value}`` with ``col`` present -> ``(col, value)``: the
+      one-hot ``1.0 if col == value else 0.0``;
+    - anything else -> ``(None, None)``: 0.0.
+    """
+    if name in LEAKAGE_COLS:
+        return None, None
+    if name in columns:
+        return name, None
+    col, sep, value = name.partition("__")
+    if sep and col in columns:
+        return col, value
+    return None, None
 
 
 def write_feature_names(path: str, names: list[str]) -> None:

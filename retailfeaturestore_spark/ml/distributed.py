@@ -30,7 +30,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .scoring import ScoredModel
+from .scoring import ScoredModel, contract_columns
 
 __all__ = [
     "LogisticModel",
@@ -76,20 +76,16 @@ def fit_lr_distributed(
     """Fit logistic regression DISTRIBUTED and return a ``ScoredModel``
     whose model is a plain :class:`LogisticModel`.
 
-    Nulls in feature columns are zero-filled (the same contract
-    ``score_batch`` and serving's ``row_to_vector`` apply — train/serve
-    skew guard); the label must be 0/1.  Deterministic: L-BFGS from a zero
-    initial vector on a fixed dataset has no randomized state, so repeated
-    fits yield identical coefficients.
+    The input vector is built by the model-input rule
+    (``scoring.contract_columns``, the rule ``score_batch`` and serving's
+    ``row_to_vector`` apply — train/serve skew guard); the label must be
+    0/1.  Deterministic: L-BFGS from a zero initial vector on a fixed
+    dataset has no randomized state, so repeated fits yield identical
+    coefficients.
     """
     from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import VectorAssembler
 
-    cols = [F.coalesce(F.col(c).cast("double"), F.lit(0.0)).alias(c) for c in feature_cols]
-    prepared = train.select(*cols, F.col(label_col).cast("double").alias("__label"))
-    assembled = VectorAssembler(
-        inputCols=list(feature_cols), outputCol="__features"
-    ).transform(prepared)
+    assembled = _assemble(train, feature_cols, label_col)
     lr = LogisticRegression(
         featuresCol="__features",
         labelCol="__label",
@@ -123,17 +119,16 @@ class SparkModelBundle:
     feature_names: tuple[str, ...]
 
 
-def _assemble(df: DataFrame, feature_cols, label_col: str | None):
-    from pyspark.ml.feature import VectorAssembler
+def _assemble(df: DataFrame, feature_cols, label_col: str | None) -> DataFrame:
+    """``df`` plus the ``__features`` vector built by the model-input rule
+    (and the double ``__label`` when ``label_col`` is given)."""
+    from pyspark.ml.functions import array_to_vector
 
-    cols = [F.coalesce(F.col(c).cast("double"), F.lit(0.0)).alias(c) for c in feature_cols]
-    passthrough = [c for c in df.columns if c not in feature_cols]
-    prepared = df.select(*cols, *[F.col(c) for c in passthrough])
+    inputs = F.array(*contract_columns(df.columns, feature_cols))
+    out = df.withColumn("__features", array_to_vector(inputs))
     if label_col is not None:
-        prepared = prepared.withColumn("__label", F.col(label_col).cast("double"))
-    return VectorAssembler(inputCols=list(feature_cols), outputCol="__features").transform(
-        prepared
-    )
+        out = out.withColumn("__label", F.col(label_col).cast("double"))
+    return out
 
 
 def fit_gbt_distributed(
@@ -169,16 +164,12 @@ def score_batch_spark(
     threshold: float = 0.5,
     proba_col: str = "probability",
 ) -> DataFrame:
-    """``score_batch``'s output contract (probability double + prediction
-    int appended; missing contract columns zero-filled), produced by the
-    JVM model's own ``transform`` — whole plan stays JVM-side."""
+    """``score_batch``'s output contract (the input columns plus probability
+    double + prediction int; inputs built by the model-input rule), produced
+    by the JVM model's own ``transform`` — whole plan stays JVM-side."""
     from pyspark.ml.functions import vector_to_array
 
-    df = features
-    for n in bundle.feature_names:
-        if n not in df.columns:
-            df = df.withColumn(n, F.lit(0.0))
-    out = bundle.model.transform(_assemble(df, list(bundle.feature_names), None))
+    out = bundle.model.transform(_assemble(features, bundle.feature_names, None))
     p1 = vector_to_array(F.col("probability")).getItem(1)
     return (
         out.withColumn("__p1", p1)

@@ -24,7 +24,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-__all__ = ["LinearStubModel", "score_batch", "ScoredModel"]
+from .artifacts import resolve_feature
+
+__all__ = ["LinearStubModel", "score_batch", "ScoredModel", "contract_columns"]
 
 
 @dataclass
@@ -54,6 +56,26 @@ class ScoredModel:
     feature_names: tuple[str, ...]
 
 
+def contract_columns(columns: list[str], feature_names) -> list[Column]:
+    """The model-input rule (:func:`.artifacts.resolve_feature`) as Spark
+    Columns: one double per contract name, aliased to it, in contract order,
+    never null or NaN.  ``columns`` is the frame's ``df.columns``."""
+    present = set(columns)
+    out = []
+    for name in feature_names:
+        col, value = resolve_feature(name, present)
+        if col is None:
+            out.append(F.lit(0.0).alias(name))
+            continue
+        src = F.col(f"`{col}`")  # names may hold dots or spaces
+        if value is None:
+            c = F.nanvl(src.try_cast("double"), F.lit(0.0))
+        else:
+            c = (src == F.lit(value)).cast("double")
+        out.append(F.coalesce(c, F.lit(0.0)).alias(name))
+    return out
+
+
 def score_batch(
     spark: SparkSession,
     features: DataFrame,
@@ -63,22 +85,18 @@ def score_batch(
 ) -> DataFrame:
     """Append probability + decision columns via a broadcast-model pandas_udf.
 
-    Missing contract columns are zero-filled and column order is enforced —
-    the reference's ``row_to_X`` alignment (``serving/feature_service.py:56-59``).
+    The model's inputs are built by :func:`contract_columns` — the same rule
+    serving's ``row_to_vector`` applies to one row — so the output is the
+    input columns plus ``proba_col`` and ``prediction``.
     """
     bc = spark.sparkContext.broadcast(scored.model)
-    names = list(scored.feature_names)
 
     @pandas_udf("double")
     def predict(*cols: pd.Series) -> pd.Series:
-        X = np.column_stack([c.to_numpy(dtype="float64", na_value=0.0) for c in cols])
+        X = np.column_stack([c.to_numpy(dtype="float64") for c in cols])
         return pd.Series(bc.value.predict_proba(X)[:, 1])
 
-    df = features
-    for n in names:
-        if n not in df.columns:
-            df = df.withColumn(n, F.lit(0.0))
-    inputs: list[Column] = [F.coalesce(F.col(n).cast("double"), F.lit(0.0)) for n in names]
-    return df.withColumn(proba_col, predict(*inputs)).withColumn(
+    inputs = contract_columns(features.columns, scored.feature_names)
+    return features.withColumn(proba_col, predict(*inputs)).withColumn(
         "prediction", (F.col(proba_col) >= F.lit(threshold)).cast("int")
     )

@@ -19,7 +19,7 @@ whose coefficients re-enter the same ``predict_proba`` protocol.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.encode import onehot_encode
@@ -60,7 +60,7 @@ def build_training_set(
 
 def collect_training_frame(
     ts: DataFrame,
-    columns: list[str],
+    columns: list[str | Column],
     max_driver_rows: int = 2_000_000,
     sample_over_limit: bool = False,
     sample_key_cols: tuple[str, ...] = ("customer_id", "t_ref"),

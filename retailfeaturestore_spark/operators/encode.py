@@ -5,12 +5,13 @@ time and frozen into ``feature_names.txt`` (``jobs/make_training_and_train.py:
 48-53``; re-derived at serving from the contract file,
 ``serving/feature_service.py:51-54``).  The engine treats the category list
 the same way: a frozen config, applied as a static ``when()`` column list —
-no per-query aggregation, no pivot shuffle.
+no per-query aggregation, no pivot shuffle.  Columns are named
+``{col}__{value}`` after the raw value, the reference's naming, so the
+model-input rule (``ml.artifacts.resolve_feature``) re-derives the same
+one-hot from ``col`` wherever the encoded column is absent.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -18,23 +19,21 @@ from pyspark.sql import functions as F
 __all__ = ["onehot_encode", "topk_categories", "group_mode"]
 
 
-def _slug(v: str) -> str:
-    return re.sub(r"[^A-Za-z0-9]+", "_", v).strip("_").lower()
-
-
 def onehot_encode(
     df: DataFrame, col: str, categories: list[str], prefix: str | None = None
 ) -> DataFrame:
-    """J4: static one-hot against a frozen category list.  Unknown/null values
-    encode as all-zeros, matching the reference's contract-driven re-derivation
+    """J4: static one-hot against a frozen category list, one int column
+    ``{prefix}__{value}`` per raw category value (``prefix`` defaults to
+    ``col``).  Unknown/null values encode as all-zeros, matching the
+    reference's contract-driven re-derivation
     (``serving/feature_service.py:51-54``)."""
     prefix = prefix or col
     return df.withColumns(
         {
-            f"{prefix}__{_slug(c)}": (F.col(col) == F.lit(c)).cast("int")
+            f"{prefix}__{c}": F.coalesce((F.col(col) == F.lit(c)).cast("int"), F.lit(0))
             for c in categories
         }
-    ).na.fill(0, subset=[f"{prefix}__{_slug(c)}" for c in categories])
+    )
 
 
 def topk_categories(df: DataFrame, col: str, k: int) -> DataFrame:

@@ -660,11 +660,11 @@ def q_orders_range_join_followups(spark: SparkSession, sf_dir: str) -> DataFrame
 _ONEHOT_ORACLE = """
 SELECT
   c_custkey,
-  CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END AS c_mktsegment__automobile,
-  CASE WHEN c_mktsegment = 'BUILDING'   THEN 1 ELSE 0 END AS c_mktsegment__building,
-  CASE WHEN c_mktsegment = 'FURNITURE'  THEN 1 ELSE 0 END AS c_mktsegment__furniture,
-  CASE WHEN c_mktsegment = 'HOUSEHOLD'  THEN 1 ELSE 0 END AS c_mktsegment__household,
-  CASE WHEN c_mktsegment = 'MACHINERY'  THEN 1 ELSE 0 END AS c_mktsegment__machinery
+  CASE WHEN c_mktsegment = 'AUTOMOBILE' THEN 1 ELSE 0 END AS c_mktsegment__AUTOMOBILE,
+  CASE WHEN c_mktsegment = 'BUILDING'   THEN 1 ELSE 0 END AS c_mktsegment__BUILDING,
+  CASE WHEN c_mktsegment = 'FURNITURE'  THEN 1 ELSE 0 END AS c_mktsegment__FURNITURE,
+  CASE WHEN c_mktsegment = 'HOUSEHOLD'  THEN 1 ELSE 0 END AS c_mktsegment__HOUSEHOLD,
+  CASE WHEN c_mktsegment = 'MACHINERY'  THEN 1 ELSE 0 END AS c_mktsegment__MACHINERY
 FROM customer
 """
 
@@ -2222,11 +2222,11 @@ SELECT
   f.txn_count_30d, f.spend_30d, f.unique_skus_30d,
   f.avg_basket_value_30d, f.cancel_rate_30d, f.tenure_days,
   l.churn_30d,
-  CASE WHEN f.country = 'AUTOMOBILE' THEN 1 ELSE 0 END AS country__automobile,
-  CASE WHEN f.country = 'BUILDING'   THEN 1 ELSE 0 END AS country__building,
-  CASE WHEN f.country = 'FURNITURE'  THEN 1 ELSE 0 END AS country__furniture,
-  CASE WHEN f.country = 'HOUSEHOLD'  THEN 1 ELSE 0 END AS country__household,
-  CASE WHEN f.country = 'MACHINERY'  THEN 1 ELSE 0 END AS country__machinery,
+  CASE WHEN f.country = 'AUTOMOBILE' THEN 1 ELSE 0 END AS country__AUTOMOBILE,
+  CASE WHEN f.country = 'BUILDING'   THEN 1 ELSE 0 END AS country__BUILDING,
+  CASE WHEN f.country = 'FURNITURE'  THEN 1 ELSE 0 END AS country__FURNITURE,
+  CASE WHEN f.country = 'HOUSEHOLD'  THEN 1 ELSE 0 END AS country__HOUSEHOLD,
+  CASE WHEN f.country = 'MACHINERY'  THEN 1 ELSE 0 END AS country__MACHINERY,
   CASE WHEN f.t_ref < TIMESTAMP '2000-01-01 00:00:00' THEN 1 ELSE 0 END AS is_train
 FROM feat f
 JOIN lab l ON l.customer_id = f.customer_id AND l.t_ref = f.t_ref
@@ -2270,8 +2270,8 @@ def q_training_set_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "txn_count_30d", "spend_30d", "unique_skus_30d",
         "avg_basket_value_30d", "cancel_rate_30d", "tenure_days",
         "churn_30d",
-        "country__automobile", "country__building", "country__furniture",
-        "country__household", "country__machinery",
+        "country__AUTOMOBILE", "country__BUILDING", "country__FURNITURE",
+        "country__HOUSEHOLD", "country__MACHINERY",
         "is_train",
     )
 

@@ -9,7 +9,8 @@ snapshot the Spark jobs materialize — exactly the reference's architecture:
   ``refresh()`` ``:32-34``, time-travel filter+last ``:36-46``);
 - online: hash-store point get with typed decode — float-parse with string
   fallback, ``meta:*`` extraction (``serving/feature_service.py:69-89``);
-- vector alignment ``row_to_X``: one-hot re-derivation from the frozen
+- vector alignment ``row_to_X``: the model-input rule of
+  ``ml.artifacts.resolve_feature`` — one-hot re-derivation from the frozen
   contract, leakage-column drop, missing->0, strict column order
   (``serving/feature_service.py:48-59``).
 
@@ -23,6 +24,8 @@ from __future__ import annotations
 from pathlib import Path
 
 import pandas as pd
+
+from ..ml.artifacts import resolve_feature
 
 __all__ = [
     "OfflineFeatureService",
@@ -41,21 +44,26 @@ class OfflineFeatureService:
         self.ts_col = ts_col
         self._cache: pd.DataFrame | None = None
 
+    def _load(self) -> pd.DataFrame:
+        files = sorted(Path(self.gold_dir).rglob("*.parquet"))
+        if not files:
+            raise FileNotFoundError(f"no parquet under {self.gold_dir}")
+        return pd.concat(
+            [pd.read_parquet(f) for f in files], ignore_index=True
+        ).sort_values([self.entity_col, self.ts_col], kind="stable")
+
     def _frame(self) -> pd.DataFrame:
         if self._cache is None:
-            files = sorted(Path(self.gold_dir).rglob("*.parquet"))
-            if not files:
-                raise FileNotFoundError(f"no parquet under {self.gold_dir}")
-            self._cache = pd.concat(
-                [pd.read_parquet(f) for f in files], ignore_index=True
-            ).sort_values([self.entity_col, self.ts_col], kind="stable")
+            self._cache = self._load()
         return self._cache
 
     def refresh(self) -> int:
-        """Drop + reload the snapshot cache; returns row count
-        (``serving/feature_service.py:32-34`` / ``/refresh`` endpoint parity)."""
-        self._cache = None
-        return len(self._frame())
+        """Reload the snapshot cache; returns row count
+        (``serving/feature_service.py:32-34`` / ``/refresh`` endpoint parity).
+        The new frame is built before it replaces the old one, so a reload
+        that raises leaves the previous snapshot serving."""
+        self._cache = self._load()
+        return len(self._cache)
 
     def row_count(self) -> int:
         return len(self._frame())
@@ -135,29 +143,23 @@ class FallbackFeatureService:
         return self.offline.row_count()
 
 
-def row_to_vector(
-    row: dict,
-    feature_names: list[str],
-    cat_col: str | None = None,
-    drop_cols: tuple[str, ...] = ("country", "t_ref", "churn_30d"),
-) -> list[float]:
-    """Align a snapshot row to the model's ordered feature contract:
-    re-derive one-hots from the contract names (``{cat}__{value}``), drop
-    leakage columns, fill missing with 0.0, strict order
-    (``serving/feature_service.py:48-59``)."""
+def row_to_vector(row: dict, feature_names: list[str]) -> list[float]:
+    """Align a snapshot row to the model's ordered feature contract by the
+    model-input rule (``ml.artifacts.resolve_feature``): leakage names and
+    unresolvable names -> 0.0, a present column -> its value (null, NaN or
+    non-numeric -> 0.0), ``{col}__{value}`` -> the one-hot of ``row[col]``;
+    strict contract order (``serving/feature_service.py:48-59``)."""
     vec: list[float] = []
-    cat_val = row.get(cat_col) if cat_col else None
     for name in feature_names:
-        if cat_col and name.startswith(f"{cat_col}__"):
-            wanted = name.split("__", 1)[1]
-            vec.append(1.0 if cat_val == wanted else 0.0)
-            continue
-        if name in drop_cols:
+        col, value = resolve_feature(name, row)
+        if col is None:
             vec.append(0.0)
-            continue
-        v = row.get(name)
-        try:
-            vec.append(float(v) if v is not None else 0.0)
-        except (TypeError, ValueError):
-            vec.append(0.0)
+        elif value is not None:
+            vec.append(1.0 if row[col] == value else 0.0)
+        else:
+            try:
+                f = float(row[col])
+            except (TypeError, ValueError):
+                f = 0.0
+            vec.append(0.0 if f != f else f)  # NaN -> 0.0
     return vec

@@ -1,8 +1,7 @@
 """Spark 4 streaming Python DataSource: a deterministic synthetic events
 stream (``spark.readStream.format("rfs_synthetic_events")``).
 
-The streaming counterpart of the batch ``rfs_xlsx`` DataSource — exercising
-the OTHER half of the Spark 4 Python DataSource API
+It exercises the streaming half of the Spark 4 Python DataSource API
 (``SimpleDataSourceStreamReader``: offset management, batch planning,
 offset-range replay).  The stream is a pure function of the row index, so:
 

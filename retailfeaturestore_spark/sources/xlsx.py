@@ -157,8 +157,7 @@ def iter_workbook_rows(
     sheet_list: list[str] | None,
 ) -> Iterator[tuple[list, str]]:
     """Yield ``(coerced_row, sheet_name)`` for every data row of every
-    selected sheet — the shared per-file parse used by both the
-    mapInPandas reader and the Python DataSource."""
+    selected sheet — the per-file parse of the mapInPandas reader."""
     for sheet_name, rows in parse_xlsx_bytes(content, sheet_list):
         if not rows:
             continue

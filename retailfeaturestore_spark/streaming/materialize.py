@@ -30,7 +30,6 @@ def stream_materialize_online(
     entity_col: str = "customer_id",
     ts_col: str = "t_ref",
     tiebreak_col: str | None = None,
-    onehot_categories: list[str] | None = None,
     checkpoint_dir: str | None = None,
     trigger_available_now: bool = True,
 ):
@@ -50,7 +49,6 @@ def stream_materialize_online(
             entity_col=entity_col,
             ts_col=ts_col,
             cat_col=None,
-            onehot_categories=onehot_categories,
             client_factory=client_factory,
         )
 

@@ -10,7 +10,7 @@ def test_onehot_unknown_and_null_encode_as_zeros(spark):
     df = spark.createDataFrame(
         [(1, "UK"), (2, "Mars"), (3, None)], "id int, country string"
     )
-    out = {r.id: (r.country__uk, r.country__fr) for r in
+    out = {r.id: (r.country__UK, r.country__FR) for r in
            onehot_encode(df, "country", ["UK", "FR"]).collect()}
     assert out == {1: (1, 0), 2: (0, 0), 3: (0, 0)}
 

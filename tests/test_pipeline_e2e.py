@@ -1,6 +1,7 @@
 """Full-pipeline e2e (SURVEY.md §5.2.4): synthetic raw orders -> bronze ->
 gold -> online materialization -> training artifacts -> serving predict ->
-pred log, asserting the feature contract end to end."""
+pred log, asserting the feature contract end to end: serving and batch
+scoring see exactly the model inputs training saw."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import glob
 import json
 import os
 
+import retailfeaturestore_spark.ml.training as training
 from retailfeaturestore_spark.jobs import (
     build_feature_views,
     ingest_to_bronze,
@@ -15,20 +17,27 @@ from retailfeaturestore_spark.jobs import (
     materialize_online_job,
 )
 from retailfeaturestore_spark.ml.artifacts import load_model
+from retailfeaturestore_spark.ml.scoring import ScoredModel, score_batch
+from retailfeaturestore_spark.operators.pit import latest_per_key
 from retailfeaturestore_spark.serving.app import ServingContext, predict_once
-from retailfeaturestore_spark.serving.feature_service import OfflineFeatureService
+from retailfeaturestore_spark.serving.feature_service import (
+    OfflineFeatureService,
+    row_to_vector,
+)
 from retailfeaturestore_spark.sources.redis_sink import DictRedis
 
 
-def test_pipeline_end_to_end(spark, tmp_path):
+def test_pipeline_end_to_end(spark, tmp_path, monkeypatch):
     # customer 1: steady purchaser across 3 months; customer 2: single event;
-    # customer 3: cancels-only
+    # customer 3: cancels-only; customer 4: a multi-word country
     rows = [
         ("INV0", "sku0", "d", "2", "2011-01-10 10:00:00", "3.5", "1", "UK"),
         ("INV1", "sku1", "d", "2", "2011-02-10 10:00:00", "3.5", "1", "UK"),
         ("INV2", "sku2", "d", "2", "2011-03-10 10:00:00", "3.5", "1", "UK"),
         ("INV9", "skuX", "d", "1", "2011-02-01 09:00:00", "9.0", "2", "FR"),
         ("C100", "skuY", "d", "-1", "2011-02-02 09:00:00", "4.0", "3", "UK"),
+        ("INV4", "sku4", "d", "3", "2011-01-20 11:00:00", "2.0", "4", "United Kingdom"),
+        ("INV5", "sku5", "d", "1", "2011-03-01 11:00:00", "5.0", "4", "United Kingdom"),
     ]
     raw = spark.createDataFrame(
         rows,
@@ -67,17 +76,37 @@ def test_pipeline_end_to_end(spark, tmp_path):
     n = materialize_online_job(
         spark, gold, ["spend_30d", "txn_count_30d"], FileRedis, onehot_categories=["UK", "FR"]
     )
-    assert n == 3 and len(glob.glob(f"{sink_dir}/*.json")) == 3
+    assert n == 4 and len(glob.glob(f"{sink_dir}/*.json")) == 4
 
-    # training artifacts
+    # training artifacts; keep the keys on the collected training frame so
+    # each matrix row can be matched to its gold row
+    seen = {}
+    collect = training.collect_training_frame
+
+    def collect_with_keys(ts, columns, **kw):
+        seen["pdf"] = collect(ts, [*columns, "customer_id", "t_ref"], **kw)
+        return seen["pdf"]
+
+    monkeypatch.setattr(training, "collect_training_frame", collect_with_keys)
     model, feature_names, paths = make_training(spark, bronze, gold, model_dir)
     assert os.path.exists(paths["model"]) and os.path.exists(paths["feature_names"])
     loaded, names2 = load_model(model_dir)
     assert names2 == feature_names and names2
+    # one-hots are named after the raw value, as serving re-derives them
+    assert {"country__UK", "country__FR", "country__United Kingdom"} <= set(feature_names)
+
+    # serving's vector for each customer's latest gold row is the row the
+    # model was trained on
+    offline = OfflineFeatureService(gold)
+    train_rows = seen["pdf"].set_index(["customer_id", "t_ref"])[feature_names]
+    for cid in (1, 2, 3, 4):
+        snap = offline.get_snapshot(cid)
+        trained = [float(v) for v in train_rows.loc[(cid, snap["t_ref"])]]
+        assert row_to_vector(snap, feature_names) == trained, cid
 
     # serving: as-of lookup + scoring + pred log
     ctx = ServingContext(
-        service=OfflineFeatureService(gold),
+        service=offline,
         model=loaded,
         feature_names=feature_names,
         pred_log_dir=preds,
@@ -92,3 +121,11 @@ def test_pipeline_end_to_end(spark, tmp_path):
     # unknown entity
     missing = predict_once(ctx, 999)
     assert "error" in missing
+
+    # batch scoring of the latest rows gives the served probability
+    latest = latest_per_key(gold_df, "customer_id", "t_ref", "t_ref")
+    batch = score_batch(spark, latest, ScoredModel(loaded, tuple(feature_names)))
+    assert set(batch.columns) == set(latest.columns) | {"probability", "prediction"}
+    for r in batch.select("customer_id", "probability").collect():
+        served = predict_once(ctx, r.customer_id)["probability"]
+        assert abs(served - r.probability) < 1e-12, r.customer_id

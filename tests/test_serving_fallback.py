@@ -181,3 +181,48 @@ def test_app_from_env_builds_context_to_the_fastapi_gate(tmp_path, monkeypatch):
     else:  # environments with the serving extra get the real app
         app = app_from_env()
         assert app is not None
+
+
+def test_refresh_failure_keeps_the_previous_snapshot(tmp_path):
+    """A reload that raises (here: the gold files moved away mid-overwrite)
+    must leave the earlier snapshot serving, not an empty cache."""
+    import pandas as pd
+
+    gold = tmp_path / "gold"
+    part = gold / "date=2011-01-10"
+    part.mkdir(parents=True)
+    pd.DataFrame(
+        {"customer_id": [1, 2], "t_ref": pd.to_datetime(["2011-01-10", "2011-01-10"]),
+         "spend_30d": [7.0, 9.0]}
+    ).to_parquet(part / "part-0.parquet")
+    offline = OfflineFeatureService(str(gold))
+    before = offline.get_snapshot(1)
+    assert before["spend_30d"] == 7.0 and offline.row_count() == 2
+
+    (part / "part-0.parquet").rename(tmp_path / "moved.parquet")
+    with pytest.raises(FileNotFoundError):
+        offline.refresh()
+    assert offline.get_snapshot(1) == before
+    assert offline.row_count() == 2
+
+
+def test_failed_log_write_never_fails_the_request(tmp_path):
+    """A prediction-log write that raises is reported in ``log_error``; the
+    request still returns its probability."""
+    blocker = tmp_path / "not-a-dir"
+    blocker.write_text("x")
+
+    class OneRow:
+        def get_snapshot(self, entity_id, as_of=None):
+            return {"customer_id": entity_id, "spend_30d": 2.0}
+
+    ctx = ServingContext(
+        service=OneRow(),
+        model=LinearStubModel(weights=(0.1,), bias=0.0),
+        feature_names=["spend_30d"],
+        pred_log_dir=str(blocker / "preds"),
+    )
+    out = predict_once(ctx, 1)
+    assert abs(out["probability"] - 0.2) < 1e-12
+    assert out["log_path"] is None
+    assert out["log_error"]

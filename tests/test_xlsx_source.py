@@ -215,72 +215,6 @@ def test_fixture_workbook_matches_values_oracle(spark):
         assert list(got[c]) == list(exp[c]), c
 
 
-def test_python_datasource_equals_mapinpandas_reader(spark):
-    """The Spark 4 Python DataSource (format('rfs_xlsx')) and the
-    binaryFile->mapInPandas reader must produce identical rows from the
-    fixture workbook."""
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx
-    from retailfeaturestore_spark.sources.xlsx_datasource import XlsxDataSource
-    from retailfeaturestore_spark.sources.xlsx_fixture import ensure_fixture_workbook
-
-    path = ensure_fixture_workbook()
-    ddl = (
-        "Invoice string, StockCode string, Description string, Quantity long, "
-        "InvoiceDate double, Price double, `Customer ID` double, Country string"
-    )
-    spark.dataSource.register(XlsxDataSource)
-    via_ds = (
-        spark.read.format("rfs_xlsx").schema(ddl).option("header", "true").load(path)
-    )
-    via_mip = read_xlsx(spark, path, ddl)
-    a = sorted(map(tuple, via_ds.collect()))
-    b = sorted(map(tuple, via_mip.collect()))
-    assert a == b and len(a) > 0
-    assert via_ds.schema == via_mip.schema
-
-
-def test_python_datasource_bronze_parity(spark):
-    """End-to-end bronze parity (VERDICT r4 next-round #8): pushing the
-    DataSource registration path through the full ingest normalize contract
-    must yield bronze identical to the read_xlsx path — not just equal raw
-    rows, but equal post-repair values (serial-date -> UTC timestamp, trims,
-    coercions)."""
-    from retailfeaturestore_spark.operators.normalize import normalize_orders_raw
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx
-    from retailfeaturestore_spark.sources.xlsx_datasource import XlsxDataSource
-    from retailfeaturestore_spark.sources.xlsx_fixture import ensure_fixture_workbook
-
-    path = ensure_fixture_workbook()
-    ddl = (
-        "Invoice string, StockCode string, Description string, Quantity long, "
-        "InvoiceDate double, Price double, `Customer ID` double, Country string"
-    )
-    spark.dataSource.register(XlsxDataSource)
-    via_ds = spark.read.format("rfs_xlsx").schema(ddl).load(path)
-    bronze_ds = normalize_orders_raw(via_ds)
-    bronze_mip = normalize_orders_raw(read_xlsx(spark, path, ddl))
-    assert bronze_ds.schema == bronze_mip.schema
-    a = sorted(map(tuple, bronze_ds.collect()))
-    b = sorted(map(tuple, bronze_mip.collect()))
-    assert a == b and len(a) == 60
-
-
-def test_python_datasource_rejects_uri_scheme_paths(spark):
-    """Driver-side glob cannot list object stores: a URI-scheme load must
-    fail loudly (pointing at the binaryFile path), never return a silently
-    empty DataFrame (ADVICE r4)."""
-    from retailfeaturestore_spark.sources.xlsx_datasource import XlsxDataSource
-
-    spark.dataSource.register(XlsxDataSource)
-    df = (
-        spark.read.format("rfs_xlsx")
-        .schema("Invoice string")
-        .load("s3a://bucket/workbooks/*.xlsx")
-    )
-    with pytest.raises(Exception, match="URI|scheme|read_xlsx"):
-        df.collect()
-
-
 @pytest.mark.slow  # throughput gate, ~90s workbook build+parse (driver-window fit, r14)
 def test_xlsx_parser_throughput_100k_rows(spark, tmp_path):
     """Scaled ingest exercise (VERDICT r5 'missing' #3 proxy: the real UCI
