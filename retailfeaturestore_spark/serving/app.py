@@ -9,7 +9,8 @@ contract reproduced here, once, without the dead duplicates):
   {customer_id, probability, prediction, threshold, t_ref, latency_ms,
    log_path, log_error}
 - ``GET /health``  -> {status, mode, rows|keys}
-- ``POST /refresh`` -> {rows} (offline cache reload)
+- ``POST /refresh`` -> {rows} (offline cache reload; also flushes the
+  buffered prediction log, adding ``log_error`` if that write fails)
 - ``POST /debug/write_test`` -> {wrote} (pred-log write-path probe,
   reference ``serving/app.py:120-138``)
 - ``GET /debug/log_state`` -> {pred_files, feature_files} (reference
@@ -32,7 +33,7 @@ from pathlib import Path
 
 import numpy as np
 
-from ..sources.pred_log import log_prediction
+from ..sources.pred_log import flush_predictions, log_prediction
 from .feature_service import OfflineFeatureService, row_to_vector
 
 __all__ = [
@@ -125,8 +126,8 @@ def health_state(ctx: ServingContext) -> dict:
 
 def debug_write_test(ctx: ServingContext) -> dict:
     """Pred-log write-path probe (reference ``serving/app.py:120-138``): a
-    zeroed audit row through the real writer, so operators can confirm disk
-    permissions/layout without issuing a scoring request."""
+    zeroed audit row through the real writer, flushed at once, so operators
+    can confirm disk permissions/layout without issuing a scoring request."""
     if not ctx.pred_log_dir:
         return {"error": "pred_log_dir not configured"}
     path = log_prediction(
@@ -137,6 +138,7 @@ def debug_write_test(ctx: ServingContext) -> dict:
         latency_ms=0.0,
         model_artifact="test",
     )
+    flush_predictions()
     return {"wrote": path}
 
 
@@ -186,7 +188,12 @@ def create_app(ctx: ServingContext):
 
     @app.post("/refresh")
     def refresh():
-        return {"rows": ctx.service.refresh()}
+        out = {"rows": ctx.service.refresh()}
+        try:
+            flush_predictions()
+        except OSError as e:
+            out["log_error"] = str(e)
+        return out
 
     @app.post("/debug/write_test")
     def write_test():

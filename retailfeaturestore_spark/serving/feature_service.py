@@ -4,9 +4,10 @@ Parity with ``serving/feature_service.py`` (SURVEY.md §3.3): Spark is the
 wrong tool for per-request point lookups, so serving reads the PUBLISHED
 snapshot the Spark jobs materialize — exactly the reference's architecture:
 
-- offline: lazily-cached gold parquet -> per-entity as-of filter
+- offline: lazily-cached gold parquet -> per-entity as-of lookup
   (``serving/feature_service.py:19-46``: full-frame cache ``:26-30``,
-  ``refresh()`` ``:32-34``, time-travel filter+last ``:36-46``);
+  ``refresh()`` ``:32-34``, time-travel filter+last ``:36-46``), here an
+  entity-sorted frame searched by binary search;
 - online: hash-store point get with typed decode — float-parse with string
   fallback, ``meta:*`` extraction (``serving/feature_service.py:69-89``);
 - vector alignment ``row_to_X``: the model-input rule of
@@ -21,9 +22,13 @@ serving process; the offline snapshot directory is whatever
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
 from pathlib import Path
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from ..ml.artifacts import resolve_feature
 
@@ -36,49 +41,58 @@ __all__ = [
 
 
 class OfflineFeatureService:
-    """Point-in-time feature lookup over the published gold parquet."""
+    """Point-in-time feature lookup over the published gold parquet.
+
+    The snapshot is held sorted by ``(entity, ts)`` together with the entity
+    ids and the timestamps (int64 ns) as numpy arrays, so a lookup is two
+    binary searches and one row read.  The three are swapped in as one
+    tuple: a lookup running during ``refresh()`` sees the old snapshot or the
+    new one, never a mix."""
 
     def __init__(self, gold_dir: str, entity_col: str = "customer_id", ts_col: str = "t_ref"):
         self.gold_dir = gold_dir
         self.entity_col = entity_col
         self.ts_col = ts_col
-        self._cache: pd.DataFrame | None = None
+        self._snapshot: tuple[pd.DataFrame, np.ndarray, np.ndarray] | None = None
 
-    def _load(self) -> pd.DataFrame:
+    def _load(self) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
         files = sorted(Path(self.gold_dir).rglob("*.parquet"))
         if not files:
             raise FileNotFoundError(f"no parquet under {self.gold_dir}")
-        return pd.concat(
-            [pd.read_parquet(f) for f in files], ignore_index=True
-        ).sort_values([self.entity_col, self.ts_col], kind="stable")
+        tables = [pq.ParquetFile(f).read() for f in files]
+        df = pa.concat_tables(tables, promote_options="default").to_pandas()
+        df = df.sort_values([self.entity_col, self.ts_col], kind="stable", ignore_index=True)
+        ts = df[self.ts_col].to_numpy("datetime64[ns]").view("int64")
+        return df, df[self.entity_col].to_numpy(), ts
 
-    def _frame(self) -> pd.DataFrame:
-        if self._cache is None:
-            self._cache = self._load()
-        return self._cache
+    def _current(self) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
+        if self._snapshot is None:
+            self._snapshot = self._load()
+        return self._snapshot
 
     def refresh(self) -> int:
         """Reload the snapshot cache; returns row count
         (``serving/feature_service.py:32-34`` / ``/refresh`` endpoint parity).
-        The new frame is built before it replaces the old one, so a reload
+        The new snapshot is built before it replaces the old one, so a reload
         that raises leaves the previous snapshot serving."""
-        self._cache = self._load()
-        return len(self._cache)
+        self._snapshot = self._load()
+        return len(self._snapshot[0])
 
     def row_count(self) -> int:
-        return len(self._frame())
+        return len(self._current()[0])
 
     def get_snapshot(self, entity_id, as_of=None) -> dict | None:
         """Latest row for the entity with ``ts <= as_of`` (None -> latest).
-        Deterministic tie-break on position after stable sort (the engine's
-        materialized gold carries unique (entity, t_ref) keys)."""
-        df = self._frame()
-        g = df[df[self.entity_col] == entity_id]
+        Gold's ``(entity, t_ref)`` keys are not unique (one row per bronze
+        line, ROADMAP Direction 5): a tie goes to the last of the tied rows
+        in file order, which the stable sort keeps."""
+        df, ids, ts = self._current()
+        lo, hi = ids.searchsorted(entity_id, "left"), ids.searchsorted(entity_id, "right")
         if as_of is not None:
-            g = g[g[self.ts_col] <= pd.Timestamp(as_of)]
-        if g.empty:
+            hi = lo + ts[lo:hi].searchsorted(pd.Timestamp(as_of).value, "right")
+        if hi == lo:
             return None
-        return g.iloc[-1].to_dict()
+        return df.iloc[hi - 1].to_dict()
 
 
 class OnlineFeatureService:
@@ -127,8 +141,7 @@ class FallbackFeatureService:
                 out = {"customer_id": entity_id}
                 for k, v in raw.items():
                     if k == "meta:t_ref":
-                        ts = pd.to_datetime(v, utc=True, errors="coerce")
-                        out["t_ref"] = None if pd.isna(ts) else ts.tz_localize(None)
+                        out["t_ref"] = _decode_ts(v)
                     elif k == "meta:country":
                         out["country"] = v or None
                     elif not k.startswith("meta:"):
@@ -141,6 +154,18 @@ class FallbackFeatureService:
 
     def row_count(self) -> int:
         return self.offline.row_count()
+
+
+def _decode_ts(v: str) -> pd.Timestamp | None:
+    """``meta:t_ref`` ISO string -> naive UTC timestamp; empty or
+    unparsable -> None."""
+    try:
+        ts = datetime.fromisoformat(v)
+    except (TypeError, ValueError):
+        return None
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
+    return pd.Timestamp(ts)
 
 
 def row_to_vector(row: dict, feature_names: list[str]) -> list[float]:

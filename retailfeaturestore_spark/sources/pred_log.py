@@ -3,19 +3,31 @@
 Parity with ``serving/pred_logger.py:33-61`` (SURVEY.md §2.1 S4): one row per
 prediction with ISO UTC timestamps, latency, threshold/probability/decision,
 model artifact name, and the flattened ``feat__*`` vector; files land under
-``date=YYYY-MM-DD/`` with collision-free names.
+``date=YYYY-MM-DD/`` with collision-free ``part-HHMMSS-<uuid8>.parquet``
+names like the reference (``serving/pred_logger.py:53``).
 
 Two writers:
-- ``log_prediction``: the serving-path single-row append (pyarrow direct,
-  no Spark session needed — a point write must not pay job-launch latency);
-  unique ``part-HHMMSS-<uuid8>.parquet`` names exactly like the reference
-  (``serving/pred_logger.py:53``).
+- ``log_prediction``: the serving-path append (pyarrow, no Spark session —
+  a point write must not pay job-launch latency).  Rows are buffered per
+  log directory and written one parquet file per batch, because even an
+  uncompressed one-row ``write_table`` costs more than the rest of a
+  request.  A batch holds one UTC day and one column set; it is written at
+  ``FLUSH_ROWS`` rows, at the first append after it has been open
+  ``FLUSH_SECONDS``, when a row of another day or column set arrives, on
+  ``flush_predictions()`` and at interpreter exit.  The returned path names
+  the file the row will land in; it exists once that batch is flushed.  A
+  crash loses at most ``FLUSH_ROWS - 1`` rows (one open batch per log
+  directory).
 - ``write_pred_log``: the batch/streaming sink (Spark ``partitionBy`` append)
   for bulk scoring and foreachBatch streaming.
 """
 
 from __future__ import annotations
 
+import atexit
+import sys
+import threading
+import time
 import uuid
 from datetime import datetime, timezone
 from pathlib import Path
@@ -25,7 +37,67 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame
 
-__all__ = ["log_prediction", "write_pred_log"]
+__all__ = ["FLUSH_ROWS", "FLUSH_SECONDS", "flush_predictions", "log_prediction",
+           "write_pred_log"]
+
+FLUSH_ROWS = 256
+FLUSH_SECONDS = 1.0
+
+
+class _Appender:
+    """The open batch of one log directory, guarded by a lock (sync
+    handlers run on a thread pool).  The batch is open while it has rows."""
+
+    def __init__(self, base_dir: str):
+        self.base_dir = base_dir
+        self.lock = threading.Lock()
+        self.rows: list[dict] = []
+        self.key: tuple | None = None  # (day, feature names) of the open batch
+        self.path = ""
+        self.opened = 0.0
+
+    def append(self, row: dict, key: tuple, now: datetime) -> str:
+        with self.lock:
+            if self.rows and (key != self.key
+                              or time.monotonic() - self.opened >= FLUSH_SECONDS):
+                self._flush()
+            if not self.rows:
+                day_dir = Path(self.base_dir) / f"date={key[0]}"
+                day_dir.mkdir(parents=True, exist_ok=True)
+                fname = f"part-{now.strftime('%H%M%S')}-{uuid.uuid4().hex[:8]}.parquet"
+                self.path, self.key, self.opened = str(day_dir / fname), key, time.monotonic()
+            self.rows.append(row)
+            path = self.path
+            if len(self.rows) >= FLUSH_ROWS:
+                self._flush()
+            return path
+
+    def flush(self) -> None:
+        with self.lock:
+            self._flush()
+
+    def _flush(self) -> None:
+        """Write and close the open batch; a failed write drops the batch
+        (its rows are counted in the message) and raises."""
+        rows, self.rows = self.rows, []
+        if not rows:
+            return
+        try:
+            pq.write_table(pa.Table.from_pylist(rows), self.path)
+        except Exception as e:
+            raise OSError(f"dropped {len(rows)} prediction rows for {self.path}: {e}") from e
+
+
+_APPENDERS: dict[str, _Appender] = {}
+_APPENDERS_LOCK = threading.Lock()
+
+
+def _appender(base_dir: str) -> _Appender:
+    a = _APPENDERS.get(base_dir)
+    if a is None:
+        with _APPENDERS_LOCK:
+            a = _APPENDERS.setdefault(base_dir, _Appender(base_dir))
+    return a
 
 
 def log_prediction(
@@ -38,7 +110,9 @@ def log_prediction(
     t_ref: datetime | None = None,
     features: dict[str, float] | None = None,
 ) -> str:
-    """Single-row serving append; returns the file path written."""
+    """Buffered serving append; returns the path of the file the row lands
+    in when its batch is flushed.  Raises if the batch's directory cannot be
+    made or a flush this append triggers fails."""
     now = datetime.now(timezone.utc)
     row = {
         "ts_served": now.isoformat(),
@@ -50,14 +124,37 @@ def log_prediction(
         "prediction": int(probability >= threshold),
         "model_artifact": model_artifact,
     }
-    for name, val in (features or {}).items():
+    features = features or {}
+    for name, val in features.items():
         row[f"feat__{name}"] = float(val)
-    day_dir = Path(base_dir) / f"date={now.date().isoformat()}"
-    day_dir.mkdir(parents=True, exist_ok=True)
-    fname = f"part-{now.strftime('%H%M%S')}-{uuid.uuid4().hex[:8]}.parquet"
-    path = day_dir / fname
-    pq.write_table(pa.Table.from_pylist([row]), path)
-    return str(path)
+    return _appender(base_dir).append(row, (now.date().isoformat(), tuple(features)), now)
+
+
+def flush_predictions() -> None:
+    """Write every open batch now.  Every log directory is tried; the first
+    failure is raised after the others are flushed."""
+    error = None
+    for a in list(_APPENDERS.values()):
+        try:
+            a.flush()
+        except OSError as e:
+            error = error or e
+    if error is not None:
+        raise error
+
+
+def _flush_at_exit() -> None:
+    """Exit hook: flush what is buffered, never raise, never recreate a
+    removed log tree (a batch whose directory is gone is dropped with one
+    line on stderr)."""
+    for a in list(_APPENDERS.values()):
+        try:
+            a.flush()
+        except OSError as e:
+            print(f"pred_log: {e}", file=sys.stderr)
+
+
+atexit.register(_flush_at_exit)
 
 
 def write_pred_log(preds: DataFrame, base_dir: str, ts_col: str = "ts_served") -> None:

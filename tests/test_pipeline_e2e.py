@@ -9,6 +9,8 @@ import glob
 import json
 import os
 
+import pandas as pd
+
 import retailfeaturestore_spark.ml.training as training
 from retailfeaturestore_spark.jobs import (
     build_feature_views,
@@ -24,6 +26,7 @@ from retailfeaturestore_spark.serving.feature_service import (
     OfflineFeatureService,
     row_to_vector,
 )
+from retailfeaturestore_spark.sources.pred_log import flush_predictions
 from retailfeaturestore_spark.sources.redis_sink import DictRedis
 
 
@@ -113,7 +116,10 @@ def test_pipeline_end_to_end(spark, tmp_path, monkeypatch):
     )
     out = predict_once(ctx, 1)
     assert 0.0 <= out["probability"] <= 1.0
+    flush_predictions()
     assert out["log_path"] and os.path.exists(out["log_path"])
+    logged = pd.read_parquet(out["log_path"]).iloc[0]
+    assert logged["customer_id"] == 1 and logged["probability"] == out["probability"]
     assert out["log_error"] is None
     # time travel: as-of before the second purchase sees only the first
     early = predict_once(ctx, 1, t_ref="2011-01-15")

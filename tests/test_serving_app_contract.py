@@ -26,6 +26,7 @@ from retailfeaturestore_spark.serving.app import (
     predict_once,
 )
 from retailfeaturestore_spark.serving.feature_service import OfflineFeatureService
+from retailfeaturestore_spark.sources.pred_log import flush_predictions
 
 
 class _StubRouter:
@@ -119,7 +120,10 @@ def test_predict_route_serves_first_registration_contract(stub_ctx):
     }
     assert out["customer_id"] == 1
     assert out["log_error"] is None
+    flush_predictions()
     assert out["log_path"] and os.path.exists(out["log_path"])
+    logged = pd.read_parquet(out["log_path"]).iloc[0]
+    assert logged["customer_id"] == 1 and logged["probability"] == out["probability"]
     assert out["prediction"] == int(out["probability"] >= out["threshold"])
     # route handler == predict_once pipeline (no drift between the
     # registered wrapper and the directly-testable function)

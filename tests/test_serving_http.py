@@ -29,6 +29,7 @@ from retailfeaturestore_spark.serving.app import (  # noqa: E402
 from retailfeaturestore_spark.serving.feature_service import (  # noqa: E402
     OfflineFeatureService,
 )
+from retailfeaturestore_spark.sources.pred_log import flush_predictions  # noqa: E402
 
 
 @pytest.fixture()
@@ -68,7 +69,10 @@ def test_predict_returns_first_registration_contract(harness):
     assert 0.0 <= body["probability"] <= 1.0
     assert body["prediction"] in (0, 1)
     assert body["threshold"] == 0.5
+    flush_predictions()
     assert body["log_error"] is None and glob.glob(body["log_path"])
+    logged = pd.read_parquet(body["log_path"]).iloc[0]
+    assert logged["customer_id"] == 1 and logged["probability"] == body["probability"]
 
 
 def test_predict_threshold_override_and_missing_customer(harness):

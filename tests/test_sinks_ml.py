@@ -7,10 +7,15 @@ import glob
 import os
 from datetime import datetime
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.ml.scoring import LinearStubModel, ScoredModel, score_batch
-from retailfeaturestore_spark.sources.pred_log import log_prediction, write_pred_log
+from retailfeaturestore_spark.sources.pred_log import (
+    flush_predictions,
+    log_prediction,
+    write_pred_log,
+)
 from retailfeaturestore_spark.sources.redis_sink import (
     DictRedis,
     _row_fields,
@@ -73,7 +78,10 @@ def test_pred_log_single_and_bulk(spark, tmp_path):
         model_artifact="m1",
         features={"spend_30d": 1.5},
     )
+    flush_predictions()
     assert os.path.exists(p) and "/date=" in p and p.endswith(".parquet")
+    row = pd.read_parquet(p).iloc[0]
+    assert row["customer_id"] == 5 and row["probability"] == 0.7
     got = spark.read.parquet(str(tmp_path / "preds")).collect()[0]
     assert got.prediction == 1 and got.feat__spend_30d == 1.5
 

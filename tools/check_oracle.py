@@ -12,13 +12,15 @@ from __future__ import annotations
 import argparse
 import hashlib
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from retailfeaturestore_spark.queries import REGISTRY  # noqa: E402
 from retailfeaturestore_spark.schemas import TESTDATA_TABLES  # noqa: E402
@@ -61,7 +63,7 @@ def changed_queries_since(rev: str) -> list[str]:
     import glob as _glob
     import subprocess
 
-    repo = "/root/repo"
+    repo = ROOT
     root = f"{repo}/retailfeaturestore_spark"
 
     def run(*cmd):

@@ -3,9 +3,11 @@ queries, with the scale-property annotation each plan demonstrates."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from retailfeaturestore_spark.plans import formatted_plan  # noqa: E402
 from retailfeaturestore_spark.queries import REGISTRY  # noqa: E402
@@ -66,7 +68,7 @@ def main() -> None:
         df = REGISTRY[name].fn(spark, "/root/testdata/sf0.001")
         tree = formatted_plan(df).split("\n\n")[0]
         out += [f"## {name}", "", note, "", "```", tree.strip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md regenerated")
 

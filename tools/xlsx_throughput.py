@@ -27,7 +27,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from retailfeaturestore_spark.session import get_spark  # noqa: E402
 from retailfeaturestore_spark.sources.xlsx import (  # noqa: E402
