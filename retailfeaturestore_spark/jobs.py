@@ -15,13 +15,13 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.dataset as pads
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .io import write_date_partitioned
 from .ml.artifacts import save_artifacts
 from .ml.training import build_training_set
-from .operators.encode import group_mode, topk_categories
+from .operators.encode import topk_categories
 from .operators.normalize import normalize_orders_raw
 from .operators.pit import interval_existence_labels, latest_per_key
 from .operators.window_features import build_customer_features
@@ -113,13 +113,20 @@ def _gold_frame(
     """Bronze -> the gold feature-view frame (W1-W6 window family + tenure +
     A2 country mode), shared by every gold sink flavor.
 
+    The per-customer attributes come from ONE full-history aggregate:
+    ``groupBy(customer_id, country).agg(count, min(invoice_date))``, then one
+    window per customer ordered by count descending, country ascending
+    (NULLs first) — ``operators.encode.group_mode``'s tie-break — whose
+    first row is the mode country and whose frame minimum is the
+    customer's first-seen time.
+
     With ``[start_date, end_date]`` only the rows whose ``t_ref`` falls in
     the range are built, equal to a full build's rows there: the window
     family reads bronze from ``start - max(windows)`` (the lookback) to
-    ``end``, and ``tenure_days`` is re-measured from the entity's first
-    event EVER by a two-column full-history ``min(ts)`` scan (in a
-    production lakehouse, a maintained first-seen dimension).  The mode
-    country is a full-history attribute in both cases."""
+    ``end``, and ``tenure_days`` is re-measured from that first-seen time
+    (in a production lakehouse, a maintained customer dimension).  A full
+    build takes tenure from the family's own running minimum.  So bronze is
+    scanned twice either way: once by the family, once by the aggregate."""
     windows = windows or {"1d": 1, "7d": 7, "30d": 30}
     bronze = spark.read.parquet(bronze_path)
     events = bronze
@@ -128,18 +135,34 @@ def _gold_frame(
         day = F.col("invoice_date").cast("date")
         events = bronze.where((day >= F.date_sub(start, max(windows.values()))) & (day <= end))
     feats = build_customer_features(events.drop("country"), windows=windows)
+
+    by_country = Window.partitionBy("customer_id").orderBy(
+        F.col("__n").desc(), F.col("country").asc()
+    )
+    customers = (
+        bronze.groupBy("customer_id", "country")
+        .agg(F.count(F.lit(1)).alias("__n"), F.min("invoice_date").alias("__first_ts"))
+        .withColumns(
+            {
+                "__rn": F.row_number().over(by_country),
+                "__first_ts": F.min("__first_ts").over(
+                    by_country.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+                ),
+            }
+        )
+        .where(F.col("__rn") == 1)
+        .select("customer_id", "country", "__first_ts")
+    )
     if start_date is not None:
         t_day = F.col("t_ref").cast("date")
-        first_seen = bronze.groupBy("customer_id").agg(F.min("invoice_date").alias("__first_ts"))
         micros = F.unix_micros("t_ref") - F.unix_micros("__first_ts")
         feats = (
             feats.where((t_day >= start) & (t_day <= end))
-            .join(first_seen, "customer_id", "left")
+            .join(customers, "customer_id", "left")
             .withColumn("tenure_days", F.floor(micros / 86_400_000_000))
         )
-    mode = group_mode(bronze, "customer_id", "country").select(
-        "customer_id", F.col("country_mode").alias("country")
-    )
+    else:
+        feats = feats.join(customers, "customer_id", "left")
     # Gold contract (FIXTURES.md §3): keys + windowed features + tenure +
     # mode country — raw line columns stay in bronze.
     feature_cols = [
@@ -147,9 +170,7 @@ def _gold_frame(
         for base in ("txn_count", "spend", "unique_skus", "avg_basket_value", "cancel_rate")
         for w in windows
     ]
-    return feats.select("customer_id", "t_ref", *feature_cols, "tenure_days").join(
-        mode, "customer_id", "left"
-    )
+    return feats.select("customer_id", "t_ref", *feature_cols, "tenure_days", "country")
 
 
 def build_feature_views(

@@ -39,8 +39,29 @@ shuffles).  Monetary inputs are fixed-decimal, so the engine accumulates
 them as exact long 'cents' (``functions.expressions.cents`` — round to the
 input's decimal scale, sum integers, divide back): order-independent,
 bit-reproducible, and on the primitive-long codegen fast path (~2x over
-DECIMAL aggregation).  ``amount_scale`` sets the quantization (None ->
-plain double sums, NOT cross-engine reproducible).
+DECIMAL aggregation).  ``amount_scale`` sets the quantization.
+
+Windowed sums in O(1) per row: a bounded ``[t - w, t]`` range frame is a
+sliding frame, and Spark re-aggregates a sliding frame's whole buffer on
+every row, so a whale entity costs O(rows x rows-in-window).  Every integer
+sum (counts, long cents) is instead the difference of two GROWING frames
+over the same ``(entity, ts)`` order, each evaluated incrementally::
+
+    sum[t - w, t] = sum[unbounded, t] - coalesce(sum[unbounded, t - w - 1us], 0)
+
+(the same +1µs shift ``operators.windowed_distinct`` uses for C(t)); the
+churn label's future marker count over ``[t + 1µs, t + horizon]`` is
+``sum[unbounded, t + horizon] - sum[unbounded, t]`` the same way.  Range
+frames keep SQL tie semantics — every row at one timestamp sees the same
+frame — and the ``t - w`` boundary stays inside the window.  The difference
+is exact only in integer arithmetic (a difference of double prefix sums
+carries the prefix's rounding error), which is one more reason every summed
+amount is long cents.  Long overflow is not silent: the prefix sum grows
+with the entity's whole history, and under ANSI mode (Spark's default) a
+prefix past 2^63 raises ``ARITHMETIC_OVERFLOW`` rather than wrapping.  An
+empty or all-NULL window reads 0 where a bounded SUM reads NULL; the gold
+family's NaN sweep maps both to 0.0, and ``user_activity_features`` guards
+its nullable sum with a windowed non-null count.
 """
 
 from __future__ import annotations
@@ -109,19 +130,30 @@ def range_window(entity_col: str, days: int) -> WindowSpec:
     )
 
 
+def _range_sum(col: Column | str, entity_col: str, lo_us: int, hi_us: int) -> Column:
+    """Integer ``sum(col)`` over the range frame ``[t + lo_us, t + hi_us]``
+    as two growing frames: ``[unbounded, t + hi_us]`` minus ``[unbounded,
+    t + lo_us - 1µs]`` (module docstring).  Exact for integer columns only;
+    an empty or all-NULL frame gives 0, not NULL."""
+    order = Window.partitionBy(entity_col).orderBy(F.col(_TS_US))
+    upto = F.sum(col).over(order.rangeBetween(Window.unboundedPreceding, hi_us))
+    before = F.sum(col).over(order.rangeBetween(Window.unboundedPreceding, lo_us - 1))
+    return F.coalesce(upto, F.lit(0)) - F.coalesce(before, F.lit(0))
+
+
 def _windowed(
     df: DataFrame,
     entity_col: str,
     windows: dict[str, int],
     per_window_exprs,
 ) -> DataFrame:
-    """Apply ``per_window_exprs(window_spec) -> dict[str, Column]`` for every
-    horizon.  All frames share partitioning+ordering, so Catalyst plans ONE
-    exchange + ONE sort for the whole family."""
+    """Apply ``per_window_exprs(window_spec, days) -> dict[str, Column]`` for
+    every horizon.  All frames share partitioning+ordering, so Catalyst plans
+    ONE exchange + ONE sort for the whole family."""
     cols = dict()
     for suffix, days in windows.items():
         w = range_window(entity_col, days)
-        for base, expr in per_window_exprs(w).items():
+        for base, expr in per_window_exprs(w, days).items():
             cols[f"{base}_{suffix}"] = expr
     return df.withColumns(cols)
 
@@ -135,7 +167,7 @@ def build_customer_features(
     amount_col: str = "line_amount",
     cancel_col: str = "is_cancel",
     round_to: int | None = None,
-    amount_scale: int | None = 4,
+    amount_scale: int = 4,
     unique_mode: str = "delta",
     carry_cols: tuple[str, ...] | None = None,
     label_events: DataFrame | None = None,
@@ -169,8 +201,9 @@ def build_customer_features(
     markers (``__txn = __cancel = __spend = 0``, NULL sku — invisible to
     every family aggregate and to tenure's running min, which skips marker
     timestamps) and the label is one more running aggregate, a future range
-    frame ``sum(markers) OVER [t + 1µs, t + horizon]``, that CollapseWindow
-    merges into the family pass.  Marker rows are dropped before output.
+    frame ``sum(markers) OVER [t + 1µs, t + horizon]`` (a difference of two
+    growing frames), that CollapseWindow merges into the family pass.
+    Marker rows are dropped before output.
     The events come from their own frame (not the bronze rows) because an
     event with no bronze line — e.g. an order with zero line items — must
     still defeat the churn label (reference semantics
@@ -193,9 +226,9 @@ def build_customer_features(
     txn = (~F.col(cancel_col)).cast("long")
     cancel = F.col(cancel_col).cast("long")
     # P7: cancel lines contribute 0 spend (jobs/build_feature_views.py:15).
-    spend = F.when(~F.col(cancel_col), F.col(amount_col)).otherwise(F.lit(0.0))
-    if amount_scale is not None:
-        spend = cents(spend, amount_scale)
+    spend = cents(
+        F.when(~F.col(cancel_col), F.col(amount_col)).otherwise(F.lit(0.0)), amount_scale
+    )
 
     df = bronze.withColumns(
         {
@@ -275,15 +308,14 @@ def build_customer_features(
             return F.approx_count_distinct(sku_col).over(w).cast("double")
         return F.size(F.collect_set(sku_col).over(w)).cast("double")
 
-    def fam(w: WindowSpec) -> dict[str, Column]:
-        # Integer counts are exact; spend sums are exact long-cents sums.
-        txn_c = F.sum("__txn").over(w).cast("double")
-        spend_c = F.sum("__spend").over(w)
-        spend_c = (
-            from_cents(spend_c, amount_scale) if amount_scale is not None
-            else spend_c.cast("double")
-        )
-        cancel_c = F.sum("__cancel").over(w).cast("double")
+    def fam(w: WindowSpec, days: int) -> dict[str, Column]:
+        # Integer counts and long-cents spend are exact prefix differences.
+        def wsum(c: str) -> Column:
+            return _range_sum(c, entity_col, -days * MICROS_PER_DAY, 0)
+
+        txn_c = wsum("__txn").cast("double")
+        spend_c = from_cents(wsum("__spend"), amount_scale)
+        cancel_c = wsum("__cancel").cast("double")
         cols = {
             "txn_count": txn_c,
             "spend": spend_c,
@@ -322,16 +354,9 @@ def build_customer_features(
     )
 
     if label_events is not None:
-        w_fut = (
-            Window.partitionBy(entity_col)
-            .orderBy(F.col(_TS_US))
-            .rangeBetween(1, label_horizon_days * MICROS_PER_DAY)
-        )
+        future = _range_sum("__lab", entity_col, 1, label_horizon_days * MICROS_PER_DAY)
         df = (
-            df.withColumn(
-                label_col,
-                (F.coalesce(F.sum("__lab").over(w_fut), F.lit(0)) == 0).cast("int"),
-            )
+            df.withColumn(label_col, (future == 0).cast("int"))
             .where(F.col("__lab") == 0)
             .drop("__lab")
         )
@@ -463,24 +488,29 @@ def user_activity_features(
     events: DataFrame,
     windows: dict[str, int] | None = None,
     round_to: int | None = None,
-    amount_scale: int | None = 6,
+    amount_scale: int = 6,
 ) -> DataFrame:
     """The same W1-W6 family expressed over the ``events`` stream table
     (user_id/ts/event_type/value) — the driver-testdata face of the feature
     engine: count, sum, distinct-type, guarded average, error rate, tenure.
     """
     windows = windows or {"1d": 1, "7d": 7}
-    val = F.col("value")
-    if amount_scale is not None:
-        val = cents(val, amount_scale)
-    df = events.withColumns({_TS_US: epoch_us("ts"), "__val": val})
+    df = events.withColumns(
+        {_TS_US: epoch_us("ts"), "__val": cents(F.col("value"), amount_scale)}
+    )
     df = _spread_entity(df, "user_id")
 
-    def fam(w: WindowSpec) -> dict[str, Column]:
-        n = F.count(F.lit(1)).over(w).cast("long")
-        s = F.sum("__val").over(w)
-        s = from_cents(s, amount_scale) if amount_scale is not None else s.cast("double")
-        err = F.sum((F.col("event_type") == "error").cast("long")).over(w).cast("double")
+    def fam(w: WindowSpec, days: int) -> dict[str, Column]:
+        def wsum(c: Column | str) -> Column:
+            return _range_sum(c, "user_id", -days * MICROS_PER_DAY, 0)
+
+        n = wsum(F.lit(1))
+        # a window whose values are all NULL sums to NULL, as a bounded SUM
+        n_val = wsum(F.col("__val").isNotNull().cast("long"))
+        s = F.when(n_val > 0, from_cents(wsum("__val"), amount_scale))
+        # no NULL guard: an all-NULL window's NULL ratio and the difference's
+        # 0 both clip to an error_rate of 0.0
+        err = wsum((F.col("event_type") == "error").cast("long")).cast("double")
         return {
             "event_count": n,
             "value_sum": s,

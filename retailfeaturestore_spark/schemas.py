@@ -2,9 +2,10 @@
 
 The reference has no schema objects at all — types are fixed by convention via
 explicit casts at ingest (``jobs/ingest_xlsx_to_parquet.py:24-42``, SURVEY.md
-§1.2/§1.3).  In this engine every table has a declared schema so that scans can
-prune columns, writers can validate contracts, and the feature-vector contract
-(the reference's ``serving/models/feature_names.txt``) is code, not a text file.
+§1.2/§1.3).  In this engine tables have declared schemas so that scans can
+prune columns and writers can validate contracts.
+The gold column contract is built in ``jobs._gold_frame`` and the model-input
+contract in ``ml.artifacts.resolve_feature``.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Retail domain (reference parity): bronze orders, gold features, pred log.
+# Retail domain (reference parity): bronze orders, pred log.
 # ---------------------------------------------------------------------------
 
 # Post-ingest bronze contract — jobs/ingest_xlsx_to_parquet.py:24-42.
@@ -32,32 +33,6 @@ ORDERS_BRONZE = T.StructType(
         T.StructField("line_amount", T.DoubleType(), True),
     ]
 )
-
-# Gold feature-view contract — jobs/build_feature_views.py:19-72 +
-# serving/models/feature_names.txt (15 windowed features x 3 windows is the
-# reference's 1D/7D/30D family; window list is parameterized here).
-FEATURE_WINDOWS = ("1d", "7d", "30d")
-FEATURE_BASE_COLS = (
-    "txn_count",
-    "spend",
-    "unique_skus",
-    "avg_basket_value",
-    "cancel_rate",
-)
-
-
-def features_customer_schema(windows: tuple[str, ...] = FEATURE_WINDOWS) -> T.StructType:
-    fields = [
-        T.StructField("customer_id", T.IntegerType(), False),
-        T.StructField("t_ref", T.TimestampType(), False),
-    ]
-    for base in FEATURE_BASE_COLS:
-        for w in windows:
-            fields.append(T.StructField(f"{base}_{w}", T.DoubleType(), True))
-    fields.append(T.StructField("tenure_days", T.LongType(), True))
-    fields.append(T.StructField("country", T.StringType(), True))
-    return T.StructType(fields)
-
 
 # Prediction-log contract — serving/pred_logger.py:37-49 (FIXTURES.md §5).
 PRED_LOG = T.StructType(
