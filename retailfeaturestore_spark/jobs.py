@@ -430,175 +430,3 @@ def build_packed_corpus(
     admitted = d.join(admitted_ids, "doc_id").select("doc_id", "text")
     chunks = pack_chunk_text(admitted, max_tokens=max_tokens, n_shards=n_shards)
     return write_packed_shards(chunks, out_dir)
-
-
-def build_graph_features(
-    spark: SparkSession,
-    sf_dir: str,
-    out_path: str,
-    n_iter: int = 3,
-    max_degree: int = 100,
-    k_similar: int = 5,
-    table_format: str = "parquet",
-    n_buckets: int = 16,
-) -> dict:
-    """Materialize the co-purchase graph family as a PART FEATURE table —
-    the graph analytics feeding back into the feature-store contract the
-    rest of the engine serves:
-
-        lineitem --copurchase_edges--> one shared edge build (built once,
-          persisted under the session registry) -->
-            pagerank (catalog importance)
-          ⊕ triangle_counts (basket cohesion: n_triangles, clustering)
-          ⊕ similar_by_neighbors (top-k bought-together ids + strengths)
-        --> one row per part --> parquet sink
-
-    Columns: part_id, degree, pagerank, n_triangles, clustering,
-    top_similar (array of the k best neighbor ids in rank order),
-    top_similar_jaccard (parallel array of strengths).  Vertices dropped
-    by the stopword cap simply have empty similar arrays — they keep
-    their pagerank/triangle features (computed on the full graph).
-
-    Plan: the expensive edge build runs ONCE (shared persisted frame);
-    each family adds only its own exchanges; the final assembly is three
-    vertex-scale left joins on part_id.  Returns a manifest dict
-    {rows, parts_with_similar, out_path}.
-    """
-    from .io import load_table
-    from .operators.graph import (
-        copurchase_edges,
-        pagerank_scaled,
-        similar_by_neighbors,
-        triangle_counts,
-    )
-
-    scope = f"graphfeat:{sf_dir}"
-    edges = copurchase_edges(load_table(spark, sf_dir, "lineitem")).persist()
-    from .operators._cache import register_persisted
-
-    register_persisted(edges, ("graphfeat_edges", scope))
-
-    pr = pagerank_scaled(edges, n_iter=n_iter, cache_scope=scope).select(
-        F.col("id").alias("part_id"), "degree", "pagerank"
-    )
-    tri = triangle_counts(edges, cache_scope=scope).select(
-        F.col("id").alias("part_id"), "n_triangles", "clustering"
-    )
-    sim = (
-        similar_by_neighbors(edges, max_degree=max_degree, k=k_similar, cache_scope=scope)
-        .groupBy("part_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("rank", "similar_part", "jaccard"))),
-                lambda s: s["similar_part"],
-            ).alias("top_similar"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("rank", "similar_part", "jaccard"))),
-                lambda s: s["jaccard"],
-            ).alias("top_similar_jaccard"),
-        )
-    )
-    gold = (
-        pr.join(tri, "part_id", "left")
-        .join(sim, "part_id", "left")
-        .select(
-            "part_id",
-            "degree",
-            "pagerank",
-            F.coalesce("n_triangles", F.lit(0)).cast("long").alias("n_triangles"),
-            F.coalesce("clustering", F.lit(0.0)).alias("clustering"),
-            F.coalesce("top_similar", F.array().cast("array<long>")).alias("top_similar"),
-            F.coalesce(
-                "top_similar_jaccard", F.array().cast("array<double>")
-            ).alias("top_similar_jaccard"),
-        )
-    )
-    if table_format == "mtable":
-        return _commit_graph_gold_mtable(spark, gold, out_path, n_buckets)
-    gold.write.mode("overwrite").parquet(out_path)
-    written = spark.read.parquet(out_path)
-    return {
-        "rows": written.count(),
-        "parts_with_similar": written.where(F.size("top_similar") > 0).count(),
-        "out_path": out_path,
-    }
-
-
-def _commit_graph_gold_mtable(
-    spark: SparkSession, gold, out_path: str, n_buckets: int
-) -> dict:
-    """Commit the graph-feature gold as an ACID mtable with a
-    BUCKET-SURGICAL publish (VERDICT r10 next-round #9: the graph plane
-    gets the same ACID/incremental story the feature plane got in r9).
-
-    The table partitions on ``part_bucket = part_id mod n_buckets`` (a
-    string value — initial writes carry partition values as path
-    strings).  A REBUILD diffs per-bucket content hashes — one order-
-    insensitive sum of per-row ``xxhash64`` on each side, map-side
-    combinable, zero rewrite — and ``overwrite_partitions`` ONLY the
-    buckets whose content actually changed; unchanged buckets carry by
-    reference, so the table's CHANGE FEED between graph versions is
-    O(changed buckets), and a downstream CF-serving consumer
-    (``ChangeFeedConsumer``) refreshes incrementally instead of
-    re-reading the table.  An identical rebuild commits NOTHING (the
-    no-op fast path).  Hash determinism: every gold column is integer-
-    exact or a division of exact integers (operators/graph.py), so
-    rebuilds of unchanged inputs are bit-identical.
-
-    Reference stake: the reference rebuilds its whole feature parquet per
-    run (jobs/build_feature_views.py); at 100 TB the graph gold is
-    vertex-scale but the DELTA per day is small — this is the O(delta)
-    publish for it."""
-    from .sources.mtable import MTable
-
-    gold_b = gold.withColumn(
-        "part_bucket",
-        F.format_string("b%02d", F.pmod(F.col("part_id"), F.lit(n_buckets))),
-    )
-    t = MTable(spark, out_path)
-    changed: list[str] | None = None
-    cur = t._latest()
-    if cur is None:
-        version = t.write(gold_b, partition_by="part_bucket", stats_cols=["part_id"])
-    else:
-        # pin the snapshot the diff was computed against: a commit racing
-        # in between must trip the CAS (ConcurrentCommit), not be clobbered
-        # — same invariant as the feature-plane publish above
-        v0, _m0 = cur
-        data_cols = [c for c in gold_b.columns if c != "part_bucket"]
-
-        def bucket_hashes(df) -> dict:
-            # decimal accumulation: a long sum of 64-bit hashes overflows
-            # under ANSI; decimal(38,0) holds any realistic bucket exactly
-            row_h = F.xxhash64(*data_cols).cast("decimal(38,0)")
-            return {
-                r.part_bucket: (r.h, r.n)
-                for r in df.groupBy("part_bucket")
-                .agg(F.sum(row_h).alias("h"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-
-        new_h = bucket_hashes(gold_b)
-        old_h = bucket_hashes(t.read(version=v0))
-        changed = sorted(
-            b
-            for b in set(new_h) | set(old_h)
-            if new_h.get(b) != old_h.get(b)
-        )
-        if changed:
-            version = t.overwrite_partitions(
-                gold_b.where(F.col("part_bucket").isin(changed)),
-                partition_values=changed,
-                stats_cols=["part_id"],
-                base_version=v0,
-            )
-        else:
-            version = v0  # identical rebuild: no commit
-    written = t.read()
-    return {
-        "rows": written.count(),
-        "parts_with_similar": written.where(F.size("top_similar") > 0).count(),
-        "out_path": out_path,
-        "version": version,
-        "changed_buckets": changed,
-    }

@@ -19,7 +19,7 @@ explicit tiebreak column.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.expressions import epoch_us
@@ -193,20 +193,6 @@ def interval_existence_labels(
         )
     )
     return out
-
-
-def next_event_within(
-    df: DataFrame, key: str, ts_col: str, horizon_days: int, exists_col: str
-) -> Column:
-    """Self-table convenience: 0/1 'another row for this key within
-    (t, t+horizon]' as a window expression over ``df``'s own rows."""
-    horizon_us = horizon_days * 86_400 * MICROS
-    w = (
-        Window.partitionBy(key)
-        .orderBy(epoch_us(ts_col))
-        .rangeBetween(1, horizon_us)
-    )
-    return (F.count(F.lit(1)).over(w) > 0).cast("int").alias(exists_col)
 
 
 def interval_existence_labels_self(

@@ -44,13 +44,10 @@ comes from:
   put-if-absent of the manifest object, extracted behind the
   :class:`LogStore` seam (the Delta LogStore recipe): the default
   :class:`HadoopLogStore` gets it from ``create(overwrite=false)``
-  (HDFS/local POSIX/ABFS); :class:`S3ConditionalPutLogStore` gets it
-  from S3 conditional PUT (``If-None-Match: *``, generally available on
-  S3 since 2024 — and the same header shape on GCS/R2/MinIO).  Two
-  racing writers therefore cannot both claim a version on ANY store with
-  a put-if-absent primitive; a store without one needs an external
-  coordinator (Delta's pre-conditional-PUT DynamoDB LogStore shape) —
-  plug it in through the same seam.
+  (HDFS/local POSIX/ABFS).  Two racing writers therefore cannot both
+  claim a version on ANY store with a put-if-absent primitive; a store
+  without one needs an external coordinator (Delta's DynamoDB LogStore
+  shape) — plug it in through the same seam.
 - **Snapshot isolation**: a reader resolves the latest manifest once and
   plans against that exact file list; concurrent commits add NEW files and
   NEW manifests, never mutate or delete referenced ones — the snapshot
@@ -109,15 +106,14 @@ an already-widened table are accepted as-is — the scan up-casts.
 Non-widening retypes still require the full-overwrite rewrite.
 
 **Generated columns**: ``write(..., generated={"col": "expr"})`` at
-creation (or ``add_generated_column`` later, validated) declares a column
-GENERATED ALWAYS AS its expression: writers may omit it (derived before
-staging) and may not disagree with it (implicit null-safe-equality CHECK,
-enforced pre-CAS with the constraints scan); UPDATE refuses to SET it and
-re-derives it when sources change; rename follows it, dropping a source
-is refused.  Declaring the PARTITION column generated gives
-hidden-partitioning ergonomics: writers append raw rows, the table
-derives its own layout (and ``merge_upsert`` no longer needs a
-``partition_col_value``).
+creation declares a column GENERATED ALWAYS AS its expression: writers
+may omit it (derived before staging) and may not disagree with it
+(implicit null-safe-equality CHECK, enforced on the staged files before
+the commit CAS); UPDATE refuses to SET it and re-derives it when sources
+change; rename follows it, dropping a source is refused.  Declaring the
+PARTITION column generated gives hidden-partitioning ergonomics: writers
+append raw rows, the table derives its own layout (and ``merge_upsert`` no
+longer needs a ``partition_col_value``).
 
 **Partition spec evolution (REPARTITION without rewrite)**: the Iceberg
 capability Delta lacks — ``repartition_table(new_col)`` changes the
@@ -141,7 +137,7 @@ physical) and ``dropped`` (retired physicals) make
 Delta column-mapping (name mode) shape.  ``read()`` and the change feed
 present logical names; every write path maps back at staging; a re-added
 logical name gets a FRESH physical so retired bytes never resurrect;
-stats/blooms/KMV/DVs stay physically keyed, so data skipping survives
+stats/blooms/DVs stay physically keyed, so data skipping survives
 renames; time travel shows each version under its own names; racing a
 rename/drop against any in-flight writer is an OCC conflict.  A full
 overwrite resets both fields (logical names become physical again).
@@ -167,18 +163,10 @@ The O(delta) consumption path ``diff()`` (a full two-snapshot re-read) is
 not; ``streaming/changes_stream.ChangeFeedConsumer`` tails it with
 table-version offsets and an exactly-once mtable sink.
 
-**RESTORE / TIMESTAMP AS OF / DESCRIBE**: ``restore(v)`` re-commits a
-historical state by reference (one manifest write, history preserved,
-feed delta = exact inverse); ``version_at(ts_ms)`` + ``read(as_of_ms=...)``
-resolve wall-clock snapshots; ``describe()`` reports layout/schema/
-constraints/exact rowcounts from the manifest alone.
-
-**CHECK constraints**: ``add_constraint(name, expr)`` validates the
-current table once, then rides the manifest chain; every write path
-enforces on the just-staged files BEFORE the commit CAS (compaction
-exempt via an internal flag — its rows already passed), racing ADD/DROP
-is an OCC conflict, and RESTORE restores the constraint set its data was
-validated under.
+**RESTORE / DESCRIBE**: ``restore(v)`` re-commits a historical state by
+reference (one manifest write, history preserved, feed delta = exact
+inverse); ``describe()`` reports layout/schema/generated columns/exact
+rowcounts from the manifest alone.
 
 What this deliberately does NOT implement (and real Delta/Iceberg add):
 multi-table transactions, NARROWING/lossy retypes without rewrite (only
@@ -190,7 +178,6 @@ simpler encoding).
 from __future__ import annotations
 
 import json
-import os
 import time
 import uuid
 
@@ -274,13 +261,13 @@ def _check_retired_key_misuse(
     allow: frozenset[str] = frozenset(),
 ) -> None:
     """Loud failure for the retired escaped-key convention, applied by
-    EVERY user-value selection site (read/ndv/compact/overwrite — the r12
+    EVERY user-value selection site (read/compact/overwrite — the r12
     review found the guard only on overwrite, leaving the read paths to
     silently select nothing for the same caller mistake).  A wanted value
     that matches no live TRUE value but IS verbatim a live manifest key of
     a DIFFERENT true value is overwhelmingly a pre-r12 caller passing
-    escaped keys; acting on it would silently skip (read: zero rows, ndv:
-    0.0, compact: no-op) or, under the old dual-match, hit the WRONG
+    escaped keys; acting on it would silently skip (read: zero rows,
+    compact: no-op) or, under the old dual-match, hit the WRONG
     partition.  ``allow`` exempts values the caller is actively writing
     (overwrite's staged TRUE values): creating a new partition whose
     literal value collides with another partition's escaped key is
@@ -315,7 +302,8 @@ class NoSuchVersion(ValueError):
 
 
 class ConstraintViolation(ValueError):
-    """A write's rows break a table CHECK constraint; nothing committed."""
+    """A write's rows break a generated column's implicit CHECK; nothing
+    committed."""
 
 
 class ProtocolVersionError(RuntimeError):
@@ -341,8 +329,9 @@ class HadoopLogStore(LogStore):
     """Default: ``FileSystem.create(overwrite=false)`` IS put-if-absent on
     HDFS, local POSIX (O_EXCL), and ABFS — the stores where Hadoop's
     create is atomic.  Do not use on S3A: S3A's create only checks
-    existence BEFORE the write, so two racers can both 'succeed'; use
-    :class:`S3ConditionalPutLogStore` there."""
+    existence BEFORE the write, so two racers can both 'succeed'; plug an
+    S3 conditional PUT (``If-None-Match: *``) store in through the
+    :class:`LogStore` seam there."""
 
     def put_if_absent(self, spark: SparkSession, path: str, data: bytes) -> bool:
         fs, jvm = _fs(spark, path)
@@ -368,64 +357,6 @@ class HadoopLogStore(LogStore):
         finally:
             out.close()
         return True
-
-
-class S3ConditionalPutLogStore(LogStore):
-    """S3 conditional PUT (``If-None-Match: *``): the object is created
-    atomically only when no object exists at the key; a racer losing the
-    CAS gets HTTP 412 PreconditionFailed (or 409 during a concurrent
-    in-flight PUT, which S3 documents as retry-then-412).  Available on
-    Amazon S3 (GA Nov 2024), GCS, Cloudflare R2, and MinIO.
-
-    ``client`` is a boto3 S3 client (injected in tests; built lazily from
-    the environment otherwise — boto3 is import-gated because this
-    sandbox cannot install it)."""
-
-    def __init__(self, client=None):
-        self._client = client
-
-    def _s3(self):
-        if self._client is None:
-            import boto3  # import-gated: not installable in-sandbox
-
-            self._client = boto3.client("s3")
-        return self._client
-
-    @staticmethod
-    def _bucket_key(path: str) -> tuple[str, str]:
-        rest = path.split("://", 1)[1]
-        bucket, _, key = rest.partition("/")
-        return bucket, key
-
-    def put_if_absent(self, spark: SparkSession, path: str, data: bytes) -> bool:
-        bucket, key = self._bucket_key(path)
-        # 409 ConditionalRequestConflict means the OUTCOME IS UNKNOWN — a
-        # racing conditional PUT is still in flight (and may itself fail):
-        # S3 documents retry-until-definitive (200 = we won, 412 = a
-        # committed object exists).  Mapping 409 straight to a lost CAS
-        # would abort commits a retry would have landed (code-review r11).
-        for attempt in range(8):
-            try:
-                self._s3().put_object(
-                    Bucket=bucket, Key=key, Body=data, IfNoneMatch="*"
-                )
-            except Exception as e:  # botocore.exceptions.ClientError shape
-                resp = getattr(e, "response", None) or {}
-                status = (resp.get("ResponseMetadata") or {}).get(
-                    "HTTPStatusCode"
-                )
-                code = (resp.get("Error") or {}).get("Code")
-                if status == 412 or code == "PreconditionFailed":
-                    return False  # definitive: an object exists — lost CAS
-                if status == 409 or code == "ConditionalRequestConflict":
-                    time.sleep(min(0.05 * (2**attempt), 1.0))
-                    continue
-                raise
-            return True
-        raise RuntimeError(
-            f"s3 conditional PUT of {path} returned 409 on every attempt — "
-            "cannot determine commit outcome; check bucket health and retry"
-        )
 
 
 def _fs(spark: SparkSession, path: str):
@@ -463,8 +394,7 @@ class MTable:
                 raise ValueError("checkpoint_interval must be >= 1")
             self.checkpoint_interval = checkpoint_interval
         # commit-protocol seam: default is Hadoop create-if-absent; pass
-        # S3ConditionalPutLogStore (or any LogStore) for stores where
-        # Hadoop's create is not atomic
+        # another LogStore for stores where Hadoop's create is not atomic
         self.log_store: LogStore = log_store or HadoopLogStore()
         self._state_cache: dict[int, dict] = {}
 
@@ -472,12 +402,11 @@ class MTable:
 
     def _abs(self, rel: str) -> str:
         """Manifest file reference -> plannable path.  References are
-        normally table-relative; a SHALLOW CLONE's manifest references the
-        source's files by ABSOLUTE path (zero data copied), so absolute /
-        scheme-qualified entries pass through untouched.  Every read-side
-        expansion goes through here; vacuum never does (it walks only this
-        table's own data/ directory, which is exactly why a clone's vacuum
-        can never delete source files)."""
+        normally table-relative; absolute / scheme-qualified entries (the
+        ``_metadata.file_path`` URIs deletion vectors are matched through)
+        pass through untouched.  Every read-side expansion goes through
+        here; vacuum never does (it walks only this table's own data/
+        directory)."""
         head = rel.split("/", 1)[0]
         if rel.startswith("/") or ":" in head:
             # absolute, or scheme-qualified in either URI form (s3a://…
@@ -726,9 +655,6 @@ class MTable:
                     m1["schema"] != m0["schema"]
                     or bool(m1.get("evolved")) != bool(m0.get("evolved"))
                     or bool(m1.get("widened")) != bool(m0.get("widened"))
-                    # a racing ADD/DROP CONSTRAINT changed what this
-                    # writer's rows were validated against
-                    or (m1.get("constraints") or {}) != (m0.get("constraints") or {})
                     # a racing RENAME/DROP COLUMN changed the logical<->
                     # physical contract the staged files were written under
                     or (m1.get("mapping") or {}) != (m0.get("mapping") or {})
@@ -950,7 +876,7 @@ class MTable:
                 for i, c in enumerate(cols)
             }
             # "#" is not a column name: the file's rowcount entry, skipped
-            # by every per-column consumer (they key on "mn"/"bf"/"kmv")
+            # by every per-column consumer (they key on "mn"/"bf")
             ent["#"] = {"n": int(r["__cnt"])}
             for ci, c in enumerate(bcols):
                 hexs = "".join(
@@ -964,112 +890,6 @@ class MTable:
                 }
             out[rel] = ent
         return out
-
-    def _collect_file_ndv(
-        self,
-        staged: dict[str, list[str]],
-        ndv_cols: list[str],
-        k: int = 64,
-    ) -> dict[str, dict]:
-        """Per-file KMV distinct-value sketch for ``ndv_cols`` (the k
-        smallest md5 hashes of each file's values — ``operators/sketches``
-        semantics keyed by file): stored in the manifest, these make
-        :meth:`ndv` a ZERO-JOB table statistic, because k-min sketches form
-        a join-semilattice — the k-min of the union of per-file sketches
-        IS the whole table's sketch, exactly.  One windowed pass over the
-        page-cache-hot staged files per call (separate from the aggregate
-        stats scan: sketches need per-file top-k windows, not aggs).
-        Returns ``{relpath: {col: [k smallest hashes]}}``."""
-        from pyspark.sql import Window
-
-        from ..operators.sketches import kmv_hash
-
-        rels = [rel for files in staged.values() for rel in files]
-        if not rels or not ndv_cols:
-            return {}
-        df = self.spark.read.parquet(*[self._abs(rel) for rel in rels])
-        cols = [c for c in ndv_cols if c in df.columns]
-        if not cols:
-            return {}
-        out: dict[str, dict] = {}
-        by_suffix = {"/".join(rel.split("/")[-2:]): rel for rel in rels}
-        for c in cols:
-            hashed = (
-                df.select(F.input_file_name().alias("__f"), kmv_hash(F.col(c)).alias("h"))
-                .where(F.col("h").isNotNull())
-                .distinct()
-            )
-            w = Window.partitionBy("__f").orderBy("h")
-            rows = (
-                hashed.withColumn("__r", F.row_number().over(w))
-                .where(F.col("__r") <= k)
-                .groupBy("__f")
-                .agg(F.sort_array(F.collect_list("h")).alias("hs"))
-                .collect()
-            )
-            for r in rows:
-                rel = by_suffix.get("/".join(str(r["__f"]).split("/")[-2:]))
-                if rel is not None:
-                    out.setdefault(rel, {})[c] = [int(h) for h in r["hs"]]
-        return out
-
-    def ndv(
-        self,
-        col: str,
-        version: int | None = None,
-        partitions: list[str] | None = None,
-        k: int = 64,
-    ) -> float:
-        """Estimated distinct-value count of ``col`` over the selected
-        snapshot — computed ENTIRELY from the manifest's per-file KMV
-        sketches (``ndv_cols`` commits), no Spark job, no file IO.  The
-        per-file sketches merge exactly (semilattice), so this equals the
-        estimate a direct whole-table sketch would give; files holding
-        fewer than k distinct values contribute their complete hash sets
-        and a small table degrades to an EXACT count.  Raises if any
-        selected file lacks a sketch for the column (conservative: a
-        partial estimate would silently undercount)."""
-        if version is None:
-            cur = self._latest()
-            if cur is None:
-                raise NoSuchVersion(f"{self.path} has no committed version")
-            version, m = cur
-        else:
-            m = self._read_manifest(version)
-        sel = m["partitions"]
-        if partitions is not None:
-            want = {str(p) for p in partitions}
-            # escaped-key misuse would silently drop every file from the
-            # estimate (ndv's own contract forbids partial answers)
-            _check_retired_key_misuse(want, m["partitions"], "ndv")
-            sel = {
-                kk: v
-                for kk, v in sel.items()
-                if _unq(kk) in want
-            }
-        stats = m.get("stats") or {}
-        col = self._p(m, col)  # sketches are keyed by physical name
-        merged: set[int] = set()
-        missing = []
-        for files in sel.values():
-            for rel in files:
-                ent = (stats.get(rel) or {}).get(col) or {}
-                hs = ent.get("kmv")
-                if hs is None:
-                    missing.append(rel)
-                else:
-                    merged.update(hs)
-        if missing:
-            raise ValueError(
-                f"no KMV sketch for {col!r} on {len(missing)} file(s) "
-                f"(first: {missing[0]}); commit with ndv_cols=[{col!r}]"
-            )
-        if not merged:
-            return 0.0
-        smallest = sorted(merged)[:k]
-        if len(smallest) < k:
-            return float(len(smallest))  # complete hash sets: exact
-        return float(k - 1) / ((smallest[-1] + 1.0) / float(2**56))
 
     def _schema_fingerprint(self, df: DataFrame, partition_by: str | None) -> str:
         cols = [
@@ -1154,7 +974,7 @@ class MTable:
     # metadata-only commits — the Delta column-mapping (name mode) shape.
     # ``read()`` and the change feed are the logical boundary (physical scan
     # -> _logical_view); every write path maps back at staging
-    # (_physical_input).  Physical state (schema fingerprint, stats/bloom/kmv
+    # (_physical_input).  Physical state (schema fingerprint, stats/bloom
     # keys, partition directory names) never changes under a rename, so data
     # skipping, DVs, and the feed's per-file algebra are rename-oblivious.
     # A full overwrite replaces every file and RESETS both fields (logical
@@ -1330,10 +1150,10 @@ class MTable:
         cons: dict[str, str],
         changed: str,
     ) -> None:
-        """Refuse a rename/drop that would break an existing CHECK
-        constraint's expression (driver-side analysis against the
-        post-change logical schema, no job) — the Delta stance: update the
-        constraint first."""
+        """Refuse a rename/drop that would break a generated column's
+        implicit CHECK (driver-side analysis against the post-change
+        logical schema, no job) — the Delta stance: drop the declaration
+        first."""
         if not cons:
             return
         inv = {p: l for l, p in mapping.items()}
@@ -1354,8 +1174,8 @@ class MTable:
             except Exception as e:  # noqa: BLE001 — analysis failure = ref
                 raise ValueError(
                     f"column {changed!r} is referenced by CHECK constraint "
-                    f"{name!r} ({expr!r}); drop or re-add the constraint "
-                    "under the new schema first"
+                    f"{name!r} ({expr!r}); it cannot resolve under the new "
+                    "schema"
                 ) from e
 
     def rename_column(self, old: str, new: str) -> int:
@@ -1366,12 +1186,12 @@ class MTable:
         column names, the manifest's mapping takes the new logical name, and
         the commit is O(manifest) metadata.  Snapshot-isolated and
         time-travel-faithful — ``read(version=...)`` presents each version
-        under ITS OWN names.  Stats, blooms, KMV sketches, deletion vectors
-        and the partition layout are keyed physically, so data skipping and
-        DML pruning keep working across the rename.  Refused while a CHECK
-        constraint references ``old``; the partition column may be renamed
-        (directory names stay physical — values, and therefore pruning, are
-        unaffected)."""
+        under ITS OWN names.  Stats, blooms, deletion vectors and the
+        partition layout are keyed physically, so data skipping and DML
+        pruning keep working across the rename.  Refused while a generated
+        column's expression references ``old``; the partition column may be
+        renamed (directory names stay physical — values, and therefore
+        pruning, are unaffected)."""
         cur = self._latest()
         if cur is None:
             raise NoSuchVersion("rename_column needs a committed table")
@@ -1399,16 +1219,13 @@ class MTable:
         gen = dict(m0.get("generated") or {})
         if old in gen:
             gen[new] = gen.pop(old)
-        check = dict(m0.get("constraints") or {})
-        check.update(self._gen_constraints(gen))
         self._constraints_must_resolve(
-            m0, mp, m0.get("dropped") or [], check, old
+            m0, mp, m0.get("dropped") or [], self._gen_constraints(gen), old
         )
         return self._commit_meta_change(
             v0,
             m0,
             "rename_column",
-            dict(m0.get("constraints") or {}),
             mapping=mp,
             meta={"renamed": [old, new]},
             generated=gen,
@@ -1423,7 +1240,7 @@ class MTable:
         their manifests, and a later re-add of the same logical name (an
         ``allow_evolution=True`` append) is assigned a FRESH physical name so
         the retired bytes can never resurrect.  Refused for the partition
-        column and while a CHECK constraint references it."""
+        column and while a generated column's expression references it."""
         cur = self._latest()
         if cur is None:
             raise NoSuchVersion("drop_column needs a committed table")
@@ -1447,14 +1264,13 @@ class MTable:
         # (resolution check over the remaining declarations)
         gen = dict(m0.get("generated") or {})
         gen.pop(name, None)
-        check = dict(m0.get("constraints") or {})
-        check.update(self._gen_constraints(gen))
-        self._constraints_must_resolve(m0, mp, dropped, check, name)
+        self._constraints_must_resolve(
+            m0, mp, dropped, self._gen_constraints(gen), name
+        )
         return self._commit_meta_change(
             v0,
             m0,
             "drop_column",
-            dict(m0.get("constraints") or {}),
             mapping=mp,
             dropped=dropped,
             schema=schema,
@@ -1484,80 +1300,6 @@ class MTable:
             if c not in df.columns:
                 df = df.withColumn(c, F.expr(gen[c]))
         return df
-
-    def add_generated_column(
-        self, name: str, expr: str, validate: bool = True
-    ) -> int:
-        """Declare ``name`` GENERATED ALWAYS AS (``expr``) (the Delta
-        generated-columns shape, declarable after creation): subsequent
-        writes may omit the column (it is derived) and may not disagree
-        with the expression (implicit null-safe-equality CHECK, enforced
-        pre-CAS like every constraint).  The column must already exist —
-        a brand-new generated column would require backfilling every
-        file, which is a rewrite, not metadata.  ``validate=True`` proves
-        the CURRENT rows already satisfy the expression (one aggregate
-        scan).  Declaring the table's partition column makes the layout
-        self-deriving — hidden-partitioning ergonomics: writers append
-        raw rows and the table computes its own partition values."""
-        cur = self._latest()
-        if cur is None:
-            raise NoSuchVersion("add_generated_column needs a committed table")
-        v0, m0 = cur
-        gen = dict(m0.get("generated") or {})
-        if name in gen:
-            raise ValueError(f"column {name!r} is already generated")
-        inv = self._inv(m0)
-        live = {inv.get(p, p) for p in self._parse_schema(m0["schema"])}
-        pby_l = self._logical_pby(m0)
-        if pby_l:
-            live.add(pby_l)
-        if name not in live:
-            raise ValueError(
-                f"no column {name!r} to declare generated (a new generated "
-                "column would need a backfill rewrite; add it with an "
-                "evolution append first)"
-            )
-        gen[name] = expr
-        # the expression must resolve against the logical schema NOW, not
-        # at first write (same stance as add_constraint)
-        self._constraints_must_resolve(
-            m0, m0.get("mapping") or {}, m0.get("dropped") or [],
-            self._gen_constraints({name: expr}), name,
-        )
-        if validate:
-            snap = self.read(version=v0)
-            if snap is not None:
-                self._enforce(
-                    snap, self._gen_constraints({name: expr}), "existing rows"
-                )
-        return self._commit_meta_change(
-            v0,
-            m0,
-            "add_generated_column",
-            dict(m0.get("constraints") or {}),
-            meta={"generated": [name, expr]},
-            generated=gen,
-        )
-
-    def drop_generated_column(self, name: str) -> int:
-        """Remove the GENERATED declaration (the column stays, as a plain
-        column)."""
-        cur = self._latest()
-        if cur is None:
-            raise NoSuchVersion("drop_generated_column needs a committed table")
-        v0, m0 = cur
-        gen = dict(m0.get("generated") or {})
-        if name not in gen:
-            raise ValueError(f"column {name!r} is not generated")
-        del gen[name]
-        return self._commit_meta_change(
-            v0,
-            m0,
-            "drop_generated_column",
-            dict(m0.get("constraints") or {}),
-            meta={"dropped_generated": name},
-            generated=gen,
-        )
 
     def repartition_table(self, new_partition_by: str | None) -> int:
         """PARTITION SPEC EVOLUTION (the Iceberg capability Delta lacks —
@@ -1589,7 +1331,7 @@ class MTable:
           merge must see every key's row; run ``migrate()`` first) — the
           one documented restriction.
         - the change feed emits NO events for the respec (no file
-          changed), and RESTORE/CLONE carry the full mixed-spec state.
+          changed), and RESTORE carries the full mixed-spec state.
 
         ``new_partition_by=None`` makes the table unpartitioned going
         forward.  Returns the committed version (current one if the spec
@@ -1647,8 +1389,7 @@ class MTable:
         if ptype is not None:
             manifest["partition_type"] = ptype
         for k in (
-            "evolved", "widened", "constraints", "dv", "mapping",
-            "dropped", "generated",
+            "evolved", "widened", "dv", "mapping", "dropped", "generated",
         ):
             if m0.get(k):
                 manifest[k] = (
@@ -1696,7 +1437,6 @@ class MTable:
         scols: list[str] = []
         bseen: list[str] = []
         bbits = 4096
-        nseen: list[str] = []
         for ent in stats.values():
             for c, v in ent.items():
                 if "mn" in v and c not in scols:
@@ -1705,10 +1445,7 @@ class MTable:
                     if c not in bseen:
                         bseen.append(c)
                     bbits = max(bbits, int(v["bf"]["m"]))
-                if "kmv" in v and c not in nseen:
-                    nseen.append(c)
         staged_stats = self._collect_file_stats(staged, scols, bseen, bbits)
-        _merge_ndv(staged_stats, self._collect_file_ndv(staged, nseen))
         sel_set = set(sel)
 
         def build_manifest(vb: int, mb: dict) -> dict:
@@ -1740,9 +1477,8 @@ class MTable:
             if mb.get("partition_type"):
                 manifest["partition_type"] = mb["partition_type"]
             for k in (
-            "evolved", "widened", "constraints", "dv", "mapping",
-            "dropped", "generated",
-        ):
+                "evolved", "widened", "dv", "mapping", "dropped", "generated",
+            ):
                 if mb.get(k):
                     manifest[k] = (
                         dict(mb[k])
@@ -1764,7 +1500,6 @@ class MTable:
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
         bloom_bits: int = 4096,
-        ndv_cols: list[str] | None = None,
         allow_evolution: bool = False,
         allow_widening: bool = False,
         generated: dict[str, str] | None = None,
@@ -1774,10 +1509,9 @@ class MTable:
         adds the new ones.  ``stats_cols`` records per-file min/max/null
         stats for data skipping (see module docstring); append commits
         carry existing files' stats forward, and an append that leaves
-        ``stats_cols``/``bloom_cols``/``ndv_cols`` unset inherits the
-        table's existing stats/bloom/ndv column sets so pruning and
-        ``ndv()`` keep working on the appended files (pass ``[]`` to
-        explicitly stat nothing).  ``allow_evolution=True``
+        ``stats_cols``/``bloom_cols`` unset inherits the table's existing
+        stats/bloom column sets so pruning keeps working on the appended
+        files (pass ``[]`` to explicitly stat nothing).  ``allow_evolution=True``
         permits an append whose schema ADDS columns (additive evolution —
         readers surface the union schema with typed nulls for files written
         before the column existed; drop/retype still raise).  Returns the
@@ -1789,8 +1523,8 @@ class MTable:
         cur = self._latest()
         if cur is not None and mode == "append" and generated is not None:
             raise ValueError(
-                "generated columns are declared at create/overwrite (or via "
-                "add_generated_column); appends inherit the table's set"
+                "generated columns are declared at create/overwrite; "
+                "appends inherit the table's set"
             )
         gen = dict(generated or {})
         if cur is not None:
@@ -1818,8 +1552,6 @@ class MTable:
                     stats_cols = [self._p(m0, c) for c in stats_cols]
                 if bloom_cols:
                     bloom_cols = [self._p(m0, c) for c in bloom_cols]
-                if ndv_cols:
-                    ndv_cols = [self._p(m0, c) for c in ndv_cols]
                 fp = self._schema_fingerprint(df, partition_by)
                 schema_fp, widen_d = self._evolve_schema(
                     m0["schema"], fp, allow_evolution, allow_widening
@@ -1841,19 +1573,14 @@ class MTable:
         if mode != "append":
             df = self._apply_generated(df, gen)
         staged = self._stage_files(df, partition_by)
-        cons_eff = dict(
-            (m0.get("constraints") or {}) if m0 is not None else {}
-        )
-        cons_eff.update(self._gen_constraints(gen))
         self._enforce_staged(
-            staged, partition_by, f"{mode} rows", cons_eff,
+            staged, partition_by, f"{mode} rows", self._gen_constraints(gen),
             m0 if mode == "append" else None,
         )
         # an append that does not say which columns to stat inherits the
-        # table's existing stats/bloom/ndv column sets (exactly as
+        # table's existing stats/bloom column sets (exactly as
         # overwrite_partitions does) — otherwise a plain append committed
-        # stat-less files, silently degrading pruning and making ndv()
-        # raise on a previously ndv_cols-committed table (ADVICE r9)
+        # stat-less files, silently degrading pruning (ADVICE r9)
         if mode == "append" and m0 is not None:
             base_stats = m0.get("stats") or {}
             if stats_cols is None:
@@ -1871,17 +1598,9 @@ class MTable:
                             if c not in bloom_cols:
                                 bloom_cols.append(c)
                             bloom_bits = max(bloom_bits, int(v["bf"]["m"]))
-            if ndv_cols is None:
-                ndv_cols = []
-                for ent in base_stats.values():
-                    ndv_cols += [
-                        c for c, v in ent.items()
-                        if "kmv" in v and c not in ndv_cols
-                    ]
         staged_stats = self._collect_file_stats(
             staged, stats_cols or [], bloom_cols, bloom_bits
         )
-        _merge_ndv(staged_stats, self._collect_file_ndv(staged, ndv_cols or []))
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode {mode!r}")
 
@@ -1911,8 +1630,6 @@ class MTable:
                 manifest["evolved"] = True
             if widened:
                 manifest["widened"] = True
-            if mb is not None and mb.get("constraints"):
-                manifest["constraints"] = dict(mb["constraints"])
             # deletion vectors survive an append (their files stay live);
             # a full overwrite replaces every file, so tombstones die here
             if mode == "append" and mb is not None and mb.get("dv"):
@@ -1948,12 +1665,6 @@ class MTable:
                 cur = self._latest()
                 assert cur is not None  # someone committed: latest exists
                 vb, mb = cur
-                if (mb.get("constraints") or {}) != (
-                    (m0.get("constraints") or {}) if m0 else {}
-                ):
-                    # a racing ADD/DROP CONSTRAINT changed what these rows
-                    # were validated against — surface, don't auto-rebase
-                    raise
                 if (mb.get("mapping") or {}) != (
                     (m0.get("mapping") or {}) if m0 else {}
                 ) or list(mb.get("dropped") or ()) != list(
@@ -2067,11 +1778,9 @@ class MTable:
             # enforcement) carry rows that already passed at their
             # original commit; re-validating a terabyte of unchanged rows
             # would be pure waste
-            cons_eff = dict(m0.get("constraints") or {})
-            cons_eff.update(self._gen_constraints(gen))
             self._enforce_staged(
                 staged, partition_by, "overwritten partition rows",
-                cons_eff, m0,
+                self._gen_constraints(gen), m0,
             )
         # removal set (ADVICE r11 #1): callers speak TRUE partition values
         # ONLY, and each manifest key (canonically escaped by the writer,
@@ -2126,13 +1835,7 @@ class MTable:
                     if c not in bseen:
                         bseen.append(c)
                     bbits = max(bbits, int(v["bf"]["m"]))
-        nseen: list[str] = []
-        for ent in base_stats.values():
-            for c, v in ent.items():
-                if "kmv" in v and c not in nseen:
-                    nseen.append(c)
         staged_stats = self._collect_file_stats(staged, scols, bseen, bbits)
-        _merge_ndv(staged_stats, self._collect_file_ndv(staged, nseen))
         staged_set = {rel for files in staged.values() for rel in files}
 
         def build_manifest(vb: int, mb: dict) -> dict:
@@ -2173,8 +1876,6 @@ class MTable:
                 manifest["evolved"] = True
             if widened:
                 manifest["widened"] = True
-            if mb.get("constraints"):
-                manifest["constraints"] = dict(mb["constraints"])
             if mb.get("dv"):
                 # tombstones for replaced files go stale-harmless (dead
                 # paths match nothing); untouched files keep theirs
@@ -2421,8 +2122,6 @@ class MTable:
                 manifest["evolved"] = True
             if mb.get("widened"):
                 manifest["widened"] = True
-            if mb.get("constraints"):
-                manifest["constraints"] = dict(mb["constraints"])
             if mb.get("mapping"):
                 manifest["mapping"] = dict(mb["mapping"])
             if mb.get("dropped"):
@@ -2564,9 +2263,9 @@ class MTable:
         if operation == "update":
             # a DELETE can only remove rows; an UPDATE's SET expressions can
             # break a CHECK — validate exactly the rewritten candidates
-            cons_eff = dict(m0.get("constraints") or {})
-            cons_eff.update(self._gen_constraints(gen))
-            self._enforce_staged(staged, pby, "updated rows", cons_eff, m0)
+            self._enforce_staged(
+                staged, pby, "updated rows", self._gen_constraints(gen), m0
+            )
         cand_set = set(cand)
         # stats: carry untouched by reference; re-stat the rewritten files
         # with the table's inherited range AND bloom column sets
@@ -2581,13 +2280,7 @@ class MTable:
                     if c not in bseen:
                         bseen.append(c)
                     bbits = max(bbits, int(v["bf"]["m"]))
-        nseen: list[str] = []
-        for ent in stats.values():
-            for c, v in ent.items():
-                if "kmv" in v and c not in nseen:
-                    nseen.append(c)
         staged_stats = self._collect_file_stats(staged, scols, bseen, bbits)
-        _merge_ndv(staged_stats, self._collect_file_ndv(staged, nseen))
         staged_set = {rel for files in staged.values() for rel in files}
         # partitions this rewrite reads or writes: the rebase conflict set
         touched = {
@@ -2636,8 +2329,6 @@ class MTable:
                 manifest["evolved"] = True
             if widened:
                 manifest["widened"] = True
-            if mb.get("constraints"):
-                manifest["constraints"] = dict(mb["constraints"])
             if mb.get("dv"):
                 manifest["dv"] = list(mb["dv"])
             if mb.get("mapping"):
@@ -2659,7 +2350,6 @@ class MTable:
         version: int | None = None,
         partitions: list[str] | None = None,
         prune: list[tuple] | None = None,
-        as_of_ms: int | None = None,
         _exact_partitions: bool = False,
         _staging_values: frozenset[str] = frozenset(),
     ) -> DataFrame | None:
@@ -2671,13 +2361,7 @@ class MTable:
         evaluated against the manifest's per-file stats: a file is dropped
         only when its min/max PROVE no row matches — conservative data
         skipping; the caller still applies the real filter.  Returns None
-        for an empty selection.  ``as_of_ms`` is TIMESTAMP AS OF (mutually
-        exclusive with ``version``): the snapshot a reader at that
-        wall-clock moment saw, via :meth:`version_at`."""
-        if as_of_ms is not None:
-            if version is not None:
-                raise ValueError("pass version OR as_of_ms, not both")
-            version = self.version_at(as_of_ms)
+        for an empty selection."""
         if version is None:
             cur = self._latest()
             if cur is None:
@@ -2746,20 +2430,10 @@ class MTable:
         # projection on top
         return self._logical_view(self._apply_dv(df, m.get("dv") or []), m)
 
-    def latest_meta(self) -> dict:
-        """The newest committed version's ``extra_meta`` ({} before any
-        commit, or for commits made without metadata).  Streaming sinks use
-        this as the exactly-once ledger: the stream batch id rides the same
-        atomic manifest PUT as the data it commits."""
-        cur = self._latest()
-        if cur is None:
-            return {}
-        return cur[1].get("meta", {}) or {}
-
     def ledger_max(self, key: str):
         """Max value of ``meta[key]`` across ALL retained manifests — the
-        robust form of the exactly-once stream ledger.  Reading only
-        :meth:`latest_meta` is wrong the moment any non-stream commit
+        robust form of the exactly-once stream ledger.  Reading only the
+        newest version's meta is wrong the moment any non-stream commit
         (compact, backfill) interleaves: it carries its own meta and the
         last-batch-id check silently passes for a replayed batch (ADVICE
         r8).  O(retained versions) manifest reads, bounded by vacuum's
@@ -2801,7 +2475,7 @@ class MTable:
     def describe(self, version: int | None = None) -> dict:
         """DESCRIBE DETAIL from the manifest alone — no data scan: version,
         operation, commit time, partition layout, file/partition counts,
-        schema, constraints, and (when the table was committed with
+        schema, generated columns, and (when the table was committed with
         stats_cols) per-column null counts plus exact-row-count when every
         file carries stats.  O(manifest) driver work; the operational
         at-a-glance a 100 TB table needs before anyone plans a scan."""
@@ -2831,7 +2505,6 @@ class MTable:
             },
             "evolved": bool(m.get("evolved")),
             "widened": bool(m.get("widened")),
-            "constraints": dict(m.get("constraints") or {}),
             "generated": dict(m.get("generated") or {}),
             "column_mapping": dict(m.get("mapping") or {}),
             "dropped_columns": sorted(retired),
@@ -2900,26 +2573,6 @@ class MTable:
             .join(F.broadcast(tomb), ["__dvf", "__dvi"], "left_anti")
             .select(*out_cols)
         )
-
-    def version_at(self, ts_ms: int) -> int:
-        """TIMESTAMP AS OF resolution: the newest retained version whose
-        ``committed_at_ms`` <= ``ts_ms`` (the snapshot a reader at that
-        wall-clock moment would have seen).  O(retained versions) raw
-        manifest reads — cheap, ledger-style.  Raises
-        :class:`NoSuchVersion` when ``ts_ms`` predates the oldest retained
-        commit (vacuum horizon) or the table is empty."""
-        best = None
-        for v in self.versions():
-            m = self._read_manifest_raw(v)
-            if m.get("committed_at_ms", 0) <= ts_ms and (
-                best is None or v > best
-            ):
-                best = v
-        if best is None:
-            raise NoSuchVersion(
-                f"{self.path} has no retained version at or before {ts_ms}"
-            )
-        return best
 
     def history(self) -> list[dict]:
         """DESCRIBE HISTORY from raw manifests alone — O(1) JSON per
@@ -3188,12 +2841,6 @@ class MTable:
             manifest["evolved"] = True
         if tgt.get("widened"):
             manifest["widened"] = True
-        if tgt.get("constraints"):
-            # a restore restores the table's METADATA too: the target's
-            # constraint set, under which its data was provably validated
-            # (add_constraint scans the whole table; every later write is
-            # enforced) — so no re-validation scan is needed
-            manifest["constraints"] = dict(tgt["constraints"])
         if tgt.get("dv"):
             manifest["dv"] = list(tgt["dv"])
         if tgt.get("mapping"):
@@ -3208,139 +2855,11 @@ class MTable:
             manifest["generated"] = dict(tgt["generated"])
         return self._commit_state(manifest, v0 + 1, m0)
 
-    def clone_to(self, dest_path: str, version: int | None = None) -> "MTable":
-        """SHALLOW CLONE (the Delta ``CLONE`` shape): commit ``dest_path``'s
-        v1 whose partition map references THIS table's files by absolute
-        path — zero bytes copied, O(manifest) cost, so a dev/test branch of
-        a 100 TB table is instant.  The clone is a fully independent table
-        from then on: its writes/DML stage into its OWN data directory
-        (copy-on-write progressively materializes it), its vacuum walks
-        only its own ``data/`` and can never delete source files, and its
-        change feed bootstraps with the cloned content as v1 inserts.
-        Stats/blooms/schema/evolution/constraints all carry, re-keyed to
-        the absolute references, so data skipping and enforcement work
-        unchanged.
-
-        The ONE caveat, same as Delta's: the SOURCE does not know its
-        clones.  A source ``vacuum`` may delete files a clone still
-        references — clone from a version the source's retention protects,
-        or treat clones as bounded-lifetime scratch.  ``version=None`` =
-        latest; the target must be empty."""
-        if version is None:
-            cur = self._latest()
-            if cur is None:
-                raise NoSuchVersion(f"{self.path} has no committed version")
-            version, m = cur
-        else:
-            m = self._read_manifest(version)
-        dest = MTable(
-            self.spark, dest_path, checkpoint_interval=self.checkpoint_interval
-        )
-        if dest._latest() is not None:
-            raise ValueError(f"clone target {dest_path!r} is not empty")
-        manifest = {
-            "version": 1,
-            "parent": None,
-            "operation": "clone",
-            "partition_by": m["partition_by"],
-            "schema": m["schema"],
-            "partitions": {
-                pv: [self._abs(rel) for rel in fl]
-                for pv, fl in m["partitions"].items()
-            },
-            "stats": {
-                self._abs(rel): ent
-                for rel, ent in (m.get("stats") or {}).items()
-            },
-            "committed_at_ms": int(time.time() * 1000),
-            "meta": {"cloned_from": self.path, "cloned_version": version},
-        }
-        if m.get("evolved"):
-            manifest["evolved"] = True
-        if m.get("widened"):
-            manifest["widened"] = True
-        if m.get("constraints"):
-            manifest["constraints"] = dict(m["constraints"])
-        if m.get("dv"):
-            manifest["dv"] = [self._abs(r) for r in m["dv"]]
-        if m.get("mapping"):
-            manifest["mapping"] = dict(m["mapping"])
-        if m.get("dropped"):
-            manifest["dropped"] = sorted(m["dropped"])
-        if m.get("partition_type"):
-            manifest["partition_type"] = m["partition_type"]
-        if m.get("generated"):
-            manifest["generated"] = dict(m["generated"])
-        dest._commit_state(manifest, 1, None)
-        return dest
-
-    # -- constraints ---------------------------------------------------------
-
-    def constraints(self) -> dict[str, str]:
-        """The table's CHECK constraints ({name: SQL boolean expr}), as of
-        the latest commit ({} before any commit or constraint)."""
-        cur = self._latest()
-        return dict(cur[1].get("constraints") or {}) if cur else {}
-
-    def add_constraint(self, name: str, expr: str, validate: bool = True) -> int:
-        """Add a CHECK constraint (the Delta ``ADD CONSTRAINT`` shape):
-        every row of every subsequent write/merge/update must satisfy
-        ``expr`` (SQL boolean; NULL passes, standard CHECK semantics) or
-        the whole commit fails with :class:`ConstraintViolation` — nothing
-        partial lands, because enforcement happens before the manifest CAS.
-        ``validate=True`` (default) first proves the CURRENT table
-        satisfies it (one aggregate scan — the one-time cost that makes
-        every later snapshot trustworthy); the constraint then rides the
-        manifest chain, an O(manifest) metadata commit like
-        :meth:`restore`.  Maintenance rewrites (compaction) skip
-        re-validation: their rows already passed."""
-        cur = self._latest()
-        if cur is None:
-            raise NoSuchVersion("add_constraint needs a committed table")
-        v0, m0 = cur
-        cons = dict(m0.get("constraints") or {})
-        if name in cons:
-            raise ValueError(f"constraint {name!r} already exists")
-        # ALWAYS resolve the expression against the table schema (driver-
-        # side analysis, no job) — a typo'd column committed with
-        # validate=False would otherwise brick every subsequent write with
-        # an unresolved-column error until the operator finds
-        # drop_constraint
-        inv = self._inv(m0)
-        schema = ", ".join(
-            f"`{inv.get(c, c)}` {t}"
-            for c, t in self._parse_schema(m0["schema"]).items()
-        )
-        if m0["partition_by"]:
-            pt = m0.get("partition_type") or "string"
-            schema += f", `{self._logical_pby(m0)}` {pt}"
-        self.spark.createDataFrame([], schema).select(
-            F.expr(expr).cast("boolean")
-        )
-        if validate:
-            snap = self.read(version=v0)
-            if snap is not None:
-                self._enforce(snap, {name: expr}, "existing rows")
-        cons[name] = expr
-        return self._commit_meta_change(v0, m0, "add_constraint", cons)
-
-    def drop_constraint(self, name: str) -> int:
-        cur = self._latest()
-        if cur is None:
-            raise NoSuchVersion("drop_constraint needs a committed table")
-        v0, m0 = cur
-        cons = dict(m0.get("constraints") or {})
-        if name not in cons:
-            raise ValueError(f"no constraint {name!r}")
-        del cons[name]
-        return self._commit_meta_change(v0, m0, "drop_constraint", cons)
-
     def _commit_meta_change(
         self,
         v0: int,
         m0: dict,
         operation: str,
-        cons: dict[str, str],
         *,
         mapping: dict[str, str] | None = None,
         dropped: list[str] | None = None,
@@ -3349,7 +2868,7 @@ class MTable:
         generated: dict[str, str] | None = None,
     ) -> int:
         """O(manifest) metadata commit: same files, new table metadata
-        (constraint set, column mapping, retired columns, logical schema).
+        (column mapping, retired columns, logical schema, generated set).
         ``None`` keyword = carry ``m0``'s value unchanged."""
         manifest = {
             "version": v0 + 1,
@@ -3361,7 +2880,6 @@ class MTable:
             "stats": dict(m0.get("stats") or {}),
             "committed_at_ms": int(time.time() * 1000),
             "meta": dict(meta or {}),
-            "constraints": dict(sorted(cons.items())),
         }
         if m0.get("evolved"):
             manifest["evolved"] = True
@@ -3390,9 +2908,10 @@ class MTable:
         cons: dict[str, str],
         m: dict | None = None,
     ) -> None:
-        """Enforce ``cons`` (the CALLER's base-snapshot constraint set —
-        the same set the OCC rebase guard compares, so validation and
-        conflict detection can never disagree) on JUST-STAGED files,
+        """Enforce ``cons`` (the implicit CHECKs of the CALLER's
+        base-snapshot generated set — the same set the OCC rebase guard
+        compares, so validation and conflict detection can never
+        disagree) on JUST-STAGED files,
         deleting them before raising so a violating commit leaves no
         garbage.  Validating the staged parquet (page-cache-hot,
         column-pruned to the constraint columns) is strictly cheaper than
@@ -3691,15 +3210,6 @@ class MTable:
                 fs.delete(_jpath(jvm, self._checkpoint_path(v)), False)
                 self._state_cache.pop(v, None)
         return sorted(deleted)
-
-
-def _merge_ndv(stats: dict, ndv: dict) -> None:
-    """Attach per-file KMV sketch lists into the stats entries in place
-    (``stats[rel][col]["kmv"] = [hashes]``)."""
-    for rel, cols in ndv.items():
-        ent = stats.setdefault(rel, {})
-        for c, hs in cols.items():
-            ent.setdefault(c, {})["kmv"] = hs
 
 
 def _zvalue_expr(

@@ -37,21 +37,6 @@ __all__ = [
 ]
 
 
-def use_rocksdb_state(spark: SparkSession) -> None:
-    """Switch streaming state to the RocksDB provider (runtime conf; applies
-    to queries started afterwards).  The default HDFS-backed in-memory store
-    keeps all state on the executor heap — at 100 TB-scale key cardinality
-    (dedup over billions of event ids, wide session windows) that is an OOM
-    cliff; RocksDB spills state to local disk with incremental checkpointing
-    and is the production choice.  Every stateful operator in this module
-    runs unmodified on either provider (equals-batch test covers RocksDB).
-    """
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-
-
 def read_events_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:

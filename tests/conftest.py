@@ -26,10 +26,11 @@ def spark():
 
 
 def stage_microbatches(spark, tmp_path, schema: str, batches):
-    """Stage one parquet file per micro-batch, named so listing order ==
-    batch order (the file source reads maxFilesPerTrigger=1 in listing
-    order), and return the readStream over them.  Shared by the streaming
-    eviction / sessionizer differential tests."""
+    """Stage one parquet file per micro-batch, written in batch order (the
+    file source with maxFilesPerTrigger=1 takes the oldest modification
+    time first, ties in listing order; one Spark write per file keeps the
+    times apart), and return the readStream over them.  Shared by the
+    streaming eviction / sessionizer differential tests."""
     import glob as _glob
     import shutil as _shutil
 

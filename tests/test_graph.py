@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from retailfeaturestore_spark.operators.graph import copurchase_edges, pagerank_scaled, similar_by_neighbors, triangle_counts
 
 SCALE = 1_000_000_000_000
@@ -177,113 +175,3 @@ def test_similar_by_neighbors_jaccard_and_stopword_removal(spark):
     assert got[(2, 4)] == (2, 1.0, 1) and got[(4, 2)] == (2, 1.0, 1)
     # adjacent corners share no neighbors -> no pair row at all
     assert (1, 2) not in got and (2, 3) not in got
-
-
-@pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_build_graph_features_job_end_to_end(spark, tmp_path):
-    """The graph family as a part-feature gold table: one shared edge
-    build, per-part pagerank/triangles/top-similar columns, empty similar
-    arrays for capped vertices, values consistent with the individual
-    operators."""
-    import os
-
-    import pytest as _pytest
-
-    _pytest.importorskip("pyspark")
-    from retailfeaturestore_spark.jobs import build_graph_features
-
-    if not os.path.isdir("/root/testdata/sf0.001"):
-        _pytest.skip("driver testdata absent")
-    out = str(tmp_path / "graph_gold")
-    m = build_graph_features(spark, "/root/testdata/sf0.001", out, max_degree=100)
-    df = spark.read.parquet(out)
-    assert m["rows"] == df.count() > 0
-    assert m["parts_with_similar"] > 0
-    row = df.where("size(top_similar) > 0").first()
-    assert len(row.top_similar) == len(row.top_similar_jaccard) <= 5
-    # strengths arrive rank-ordered: non-increasing jaccard
-    js = row.top_similar_jaccard
-    assert all(js[i] >= js[i + 1] for i in range(len(js) - 1))
-    # spot-check one part against the standalone operators
-    from pyspark.sql import functions as F
-
-    from retailfeaturestore_spark.io import load_table
-    from retailfeaturestore_spark.operators.graph import (
-        copurchase_edges,
-        pagerank_scaled,
-    )
-
-    edges = copurchase_edges(load_table(spark, "/root/testdata/sf0.001", "lineitem"))
-    pr = {r.id: r.pagerank_scaled for r in pagerank_scaled(edges, n_iter=3).collect()}
-    got = {r.part_id: round(r.pagerank * 1e12) for r in df.collect()}
-    sample = list(pr)[:20]
-    assert all(abs(got[p] - pr[p]) <= 1 for p in sample)
-
-
-@pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_graph_gold_mtable_bucket_surgical_rebuild_and_cf_refresh(spark, tmp_path):
-    """VERDICT r10 next-round #9: the graph gold commits as an mtable; a
-    rebuild publishes ONLY changed buckets (identical rebuild commits
-    nothing), and read_changes between graph versions drives an
-    incremental CF refresh equal to the full recompute."""
-    from pyspark.sql import functions as F
-
-    from retailfeaturestore_spark.jobs import build_graph_features
-    from retailfeaturestore_spark.sources.mtable import MTable
-
-    out = str(tmp_path / "graph_gold")
-    sf = "/root/testdata/sf0.001"
-    m1 = build_graph_features(spark, sf, out, table_format="mtable")
-    t = MTable(spark, out)
-    assert t.versions() == [1]
-    assert m1["version"] == 1 and m1["rows"] > 0
-
-    # identical rebuild: every bucket hash matches -> NO new version
-    m2 = build_graph_features(spark, sf, out, table_format="mtable")
-    assert m2["version"] == 1 and m2["changed_buckets"] == []
-    assert t.versions() == [1]
-
-    # damage two known buckets (the GDPR-delete shape), then rebuild:
-    # only those buckets should republish
-    victims = [r.part_id for r in t.read().orderBy("part_id").limit(2).collect()]
-    t.delete(F.col("part_id").isin(victims))  # v2
-    m3 = build_graph_features(spark, sf, out, table_format="mtable")  # v3
-    want_buckets = sorted({f"b{p % 16:02d}" for p in victims})
-    assert m3["version"] == 3
-    assert m3["changed_buckets"] == want_buckets
-    t3 = MTable(spark, out)
-    assert t3.versions() == [1, 2, 3]
-
-    def rowset(df):
-        return {
-            (
-                r.part_id,
-                r.degree,
-                r.pagerank,
-                r.n_triangles,
-                r.clustering,
-                tuple(r.top_similar),
-                tuple(r.top_similar_jaccard),
-            )
-            for r in df.collect()
-        }
-
-    cols = [
-        "part_id", "degree", "pagerank", "n_triangles", "clustering",
-        "top_similar", "top_similar_jaccard",
-    ]
-    # the rebuild restored the deleted rows exactly
-    assert rowset(t3.read(version=3).select(cols)) == rowset(
-        t3.read(version=1).select(cols)
-    )
-    # the feed between graph versions touches ONLY the changed buckets...
-    feed = t3.read_changes(2, 3)
-    assert {
-        r.part_bucket for r in feed.select("part_bucket").distinct().collect()
-    } == set(want_buckets)
-    # ...and applying it incrementally to a v2 serving copy reproduces the
-    # full v3 recompute: (base \ deletes) ∪ inserts, keyed rows
-    base = rowset(t3.read(version=2).select(cols))
-    dels = rowset(feed.where(F.col("_change_type") == "delete").select(cols))
-    ins = rowset(feed.where(F.col("_change_type") == "insert").select(cols))
-    assert (base - dels) | ins == rowset(t3.read(version=3).select(cols))

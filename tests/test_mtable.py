@@ -245,7 +245,7 @@ def test_stream_commit_gold_mtable_exactly_once(spark, tmp_path):
     assert t.versions() == [1, 2, 3]  # one atomic version per micro-batch
     out = {(r.customer_id, r.score) for r in t.read().collect()}
     assert out == {(1, 10.0), (2, 2.0), (3, 3.0)}
-    assert t.latest_meta() == {"stream_batch_id": 2}
+    assert t.history()[-1]["meta"] == {"stream_batch_id": 2}
 
     # FULL replay from a fresh checkpoint: every row re-arrives, but the
     # ledger in the committed manifest marks it already-applied -> no new
@@ -502,7 +502,7 @@ def test_ledger_max_survives_interleaved_maintenance_commits(spark, tmp_path):
         mode="append",
     )  # e.g. a backfill: no stream meta
     t.compact()
-    assert t.latest_meta().get("stream_batch_id") is None
+    assert t.history()[-1]["meta"].get("stream_batch_id") is None
     assert t.ledger_max("stream_batch_id") == 4
 
 
@@ -642,3 +642,34 @@ def test_stats_carry_forward_through_merge_and_compact(spark, tmp_path):
     live3 = {rel for files in m3["partitions"].values() for rel in files}
     assert set(m3["stats"]) == live3
     assert all("score" in ent for ent in m3["stats"].values())
+
+
+def test_plain_append_inherits_stats_and_bloom_sets(spark, tmp_path):
+    # ADVICE r9: write(mode="append") without explicit column sets used to
+    # commit stat-less files, so pruning silently degraded after any plain
+    # append.
+    df = spark.createDataFrame(
+        [(i, f"u{i}", "1") for i in range(500)], "k long, tag string, d string"
+    ).repartition(2)
+    t = MTable(spark, str(tmp_path / "inherit"))
+    t.write(df, partition_by="d", stats_cols=["k"], bloom_cols=["tag"])
+    extra = spark.createDataFrame(
+        [(1000 + i, f"v{i}", "1") for i in range(100)], "k long, tag string, d string"
+    )
+    t.write(extra, mode="append")  # no column sets: must inherit
+    m = t._read_manifest(2)
+    appended = [
+        rel for rel in m["partitions"]["1"]
+        if rel not in t._read_manifest(1)["stats"]
+    ]
+    assert appended
+    for rel in appended:
+        ent = m["stats"][rel]
+        assert "mn" in ent["k"], rel
+        assert "bf" in ent["tag"], rel
+    # explicit [] still means "stat nothing" for the new files
+    t.write(extra.withColumn("k", F.col("k") + 10000), mode="append", stats_cols=[],
+            bloom_cols=[])
+    m3 = t._read_manifest(3)
+    new3 = [rel for rel in m3["partitions"]["1"] if rel not in m["stats"]]
+    assert new3 and all(rel not in m3["stats"] for rel in new3)

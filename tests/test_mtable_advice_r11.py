@@ -264,26 +264,22 @@ def test_merge_upsert_into_new_colliding_partition(spark, tmp_path):
     }
 
 
-def test_read_ndv_compact_fail_loud_on_escaped_key_misuse(spark, tmp_path):
+def test_read_compact_fail_loud_on_escaped_key_misuse(spark, tmp_path):
     """r12 review finding: the retired escaped-key convention failed loud
-    only in overwrite_partitions; read() silently returned None, ndv()
-    0.0, compact() a no-op — three silent-wrong behaviors for the same
-    caller mistake.  All three now raise."""
+    only in overwrite_partitions; read() silently returned None and
+    compact() was a no-op — silent-wrong behaviors for the same caller
+    mistake.  Both now raise."""
     t = MTable(spark, str(tmp_path / "loud"))
     t.write(
         _kx(spark, [("a:b", 1), ("a:b", 2), ("plain", 3)]),
         partition_by="k",
         stats_cols=["x"],
-        ndv_cols=["x"],
     )
     with pytest.raises(ValueError, match="read: .*escaped"):
         t.read(partitions=["a%3Ab"])
-    with pytest.raises(ValueError, match="ndv: .*escaped"):
-        t.ndv("x", partitions=["a%3Ab"])
     with pytest.raises(ValueError, match="compact: .*escaped"):
         t.compact(partitions=["a%3Ab"])
-    # the TRUE value keeps working (ndv's own sketch-presence contract is
-    # covered by its dedicated tests; here only the guard is under test)
+    # the TRUE value keeps working
     assert t.read(partitions=["a:b"]).count() == 2
     # a simply-nonexistent value (no key collision) stays a quiet miss:
     # read None, compact no-op — that is the normal empty-selection path

@@ -268,34 +268,15 @@ def test_describe_is_manifest_only(spark, tmp_path):
     d = t.describe()
     assert d["version"] == 2 and d["operation"] == "append"
     assert d["partition_by"] == "date" and d["n_partitions"] == 3
-    assert d["stats_cols"] == ["score"] and d["constraints"] == {}
+    assert d["stats_cols"] == ["score"]
     assert d["schema"]["score"] == "double"
     # exact row count from the stats scan's per-file rowcounts — no data read
     assert d["n_rows"] == 5
     assert t.describe(version=1)["n_rows"] == 3
-    t.add_constraint("score_pos", "score > 0")
-    assert t.describe()["constraints"] == {"score_pos": "score > 0"}
     # a stats-less table degrades to None, never a wrong number
     t2 = MTable(spark, str(tmp_path / "nostats"))
     t2.write(_with_date(_snap(spark, BASE)), partition_by="date")
     assert t2.describe()["n_rows"] is None
-
-
-@pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_timestamp_as_of_resolution(spark, tmp_path):
-    t = _mk4(spark, tmp_path)
-    hist = {h["version"]: h["committed_at_ms"] for h in t.history()}
-    # at each commit's own timestamp, that commit is the snapshot
-    for v, ts in hist.items():
-        assert t.version_at(ts) == v or hist[t.version_at(ts)] == ts
-    # just before v3's commit, v2 (or a same-ms sibling) is what a reader saw
-    v = t.version_at(hist[3] - 1)
-    assert v < 3
-    assert t.read(as_of_ms=hist[2]).count() == t.read(version=2).count()
-    with pytest.raises(NoSuchVersion):
-        t.version_at(hist[1] - 1)
-    with pytest.raises(ValueError):
-        t.read(version=1, as_of_ms=hist[1])
 
 
 def test_schema_evolution_null_fills_old_events(spark, tmp_path):

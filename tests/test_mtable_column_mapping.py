@@ -10,9 +10,7 @@ logical surface.  Under test:
 - time travel presents each version under ITS OWN names;
 - a re-added logical name after a drop takes a FRESH physical name, so
   the retired bytes in still-live files can never resurrect;
-- constraints referencing a column block its rename/drop (the Delta
-  stance) and keep enforcing under the new name after a legal rename;
-- restore/clone carry the mapping; racing a rename against an in-flight
+- restore carries the mapping; racing a rename against an in-flight
   append is an OCC conflict, not a silent resurrection.
 """
 
@@ -23,7 +21,6 @@ from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.sources.mtable import (
     ConcurrentCommit,
-    ConstraintViolation,
     MTable,
 )
 
@@ -168,25 +165,6 @@ def test_drop_guards(spark, tmp_path):
         t.rename_column("score", "note")
 
 
-def test_constraints_block_and_follow_renames(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.add_constraint("score_pos", "score > 0")
-    with pytest.raises(ValueError, match="score_pos"):
-        t.rename_column("score", "quality")
-    with pytest.raises(ValueError, match="score_pos"):
-        t.drop_column("score")
-    t.drop_constraint("score_pos")
-    t.rename_column("score", "quality")
-    # a constraint added under the NEW name enforces appends (and the
-    # enforcement scan maps the staged physical files back to logical)
-    t.add_constraint("quality_pos", "quality > 0")
-    bad = _with_date(
-        _snap(spark, [(9, "2024-01-09 10:00:00", -1.0, "x")])
-    ).withColumnRenamed("score", "quality")
-    with pytest.raises(ConstraintViolation):
-        t.write(bad, mode="append")
-
-
 def test_change_feed_across_rename_uses_endpoint_names(spark, tmp_path):
     t = _mk(spark, tmp_path)
     extra = _with_date(_snap(spark, [(4, "2024-01-03 10:00:00", 4.0, "d")]))
@@ -199,12 +177,10 @@ def test_change_feed_across_rename_uses_endpoint_names(spark, tmp_path):
     assert {r["quality"] for r in rows} == {4.0}
 
 
-def test_restore_and_clone_carry_mapping(spark, tmp_path):
+def test_restore_carries_mapping(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.rename_column("score", "quality")  # v2
     t.drop_column("note")  # v3
-    c = t.clone_to(str(tmp_path / "branch"))
-    assert "quality" in c.read().columns and "note" not in c.read().columns
     t.restore(1)  # back to the v1 names
     assert "score" in t.read().columns and "note" in t.read().columns
     t.restore(3)

@@ -170,32 +170,9 @@ def test_change_feed_emits_position_deletes_and_algebra_holds(spark, tmp_path):
             assert got == want, (v_from, v_to)
 
 
-def test_position_delete_on_a_clone_never_touches_the_source(spark, tmp_path):
-    """Tombstoning rows of a SOURCE-referenced file from a clone: the
-    tombstone names the source file's URI, the clone's reads anti-apply
-    it, and the source — which does not carry the clone's DV — still
-    reads every row.  Zero-copy branching composes with merge-on-read."""
-    src = _mk(spark, tmp_path)
-    clone = src.clone_to(str(tmp_path / "c"))
-    clone.delete_positions(F.col("customer_id").isin(1, 5))
-    assert _ids(clone) == {2, 3, 4}
-    assert _ids(src) == {1, 2, 3, 4, 5}
-    # no data file was written clone-side — only the tombstone file
-    assert clone.describe()["n_dv_files"] == 1
-    # the plan's only clone-owned input is the tombstone file itself (the
-    # anti-join's broadcast side); every DATA file is still source-owned
-    clone_owned = {
-        f for f in clone.read().inputFiles() if str(tmp_path / "c") in f
-    }
-    dv_abs = {clone._abs(r) for r in clone._latest()[1]["dv"]}
-    assert all(any(f.endswith(d.split("/")[-1]) for d in dv_abs) for f in clone_owned)
-
-
-def test_clone_and_restore_carry_dvs(spark, tmp_path):
+def test_restore_carries_dvs(spark, tmp_path):
     t = _mk(spark, tmp_path)
     v_dv = t.delete_positions(F.col("customer_id") == 2)
-    clone = t.clone_to(str(tmp_path / "c"))
-    assert _ids(clone) == {1, 3, 4, 5}
     t.update(F.col("customer_id") == 3, {"score": F.lit(30.0)})
     t.restore(v_dv)
     assert _ids(t) == {1, 3, 4, 5}

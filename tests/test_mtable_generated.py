@@ -87,41 +87,6 @@ def test_merge_without_partition_col_value(spark, tmp_path):
     assert got[2] == (99.0, "2024-01-04") and len(got) == 3
 
 
-def test_add_and_drop_declaration_on_existing_column(spark, tmp_path):
-    t = MTable(spark, str(tmp_path / "plain"))
-    df = _ev(spark, BASE).withColumn("year", F.date_format("ts", "yyyy"))
-    t.write(df.withColumn("day", F.date_format("ts", "yyyy-MM-dd")),
-            partition_by="day")
-    # existing values already satisfy -> declarable with validation
-    t.add_generated_column("year", "date_format(ts, 'yyyy')")
-    with pytest.raises(ValueError, match="already generated"):
-        t.add_generated_column("year", "date_format(ts, 'yyyy')")
-    # a declaration current rows break is refused
-    with pytest.raises(ConstraintViolation):
-        t.add_generated_column("amount", "cast(0.0 as double)")
-    # enforcement now applies to appends (wrong year refused)
-    bad = _ev(spark, [(9, "2024-01-09 10:00:00", 9.0)]).withColumn(
-        "year", F.lit("1999")
-    ).withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-    with pytest.raises(ConstraintViolation):
-        t.write(bad, mode="append")
-    # raw append derives it
-    t.write(
-        _ev(spark, [(9, "2024-01-09 10:00:00", 9.0)]).withColumn(
-            "day", F.date_format("ts", "yyyy-MM-dd")
-        ),
-        mode="append",
-    )
-    assert {r.year for r in t.read().where("id = 9").collect()} == {"2024"}
-    t.drop_generated_column("year")
-    assert t.describe()["generated"] == {}
-    # plain again: a disagreeing value is no longer refused
-    t.write(bad, mode="append")
-    # a brand-new column cannot be declared (needs a backfill rewrite)
-    with pytest.raises(ValueError, match="no column"):
-        t.add_generated_column("month", "date_format(ts, 'yyyy-MM')")
-
-
 def test_rename_follows_and_source_drop_refused(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.rename_column("day", "event_day")
@@ -138,15 +103,65 @@ def test_rename_follows_and_source_drop_refused(spark, tmp_path):
         t.drop_column("ts")
 
 
-def test_restore_and_clone_carry_declarations(spark, tmp_path):
+def test_every_write_path_enforces_before_the_commit(spark, tmp_path):
+    """A disagreeing value is refused on append, merge and partition
+    overwrite before the manifest CAS, so no version lands.  Forging the
+    compaction marker through ``extra_meta`` does not waive the check
+    (the maintenance exemption is an internal flag only).  Deletes only
+    remove rows and are never re-validated."""
     t = _mk(spark, tmp_path)
-    c = t.clone_to(str(tmp_path / "branch"))
-    assert c.describe()["generated"] == GEN
+    bad = _ev(spark, [(9, "2024-01-01 12:00:00", 9.0)]).withColumn(
+        "day", F.lit("1999-12-31")
+    )
+    v = t.history()[-1]["version"]
+    with pytest.raises(ConstraintViolation):
+        t.write(bad, mode="append")
+    with pytest.raises(ConstraintViolation):
+        t.merge_upsert(bad, ["id"])
+    with pytest.raises(ConstraintViolation):
+        t.overwrite_partitions(
+            bad, partition_values=["2024-01-01"], extra_meta={"compacted": True}
+        )
+    assert t.history()[-1]["version"] == v
+    assert {(r.id, r.day) for r in t.read().collect()} == {
+        (1, "2024-01-01"), (2, "2024-01-01"), (3, "2024-01-02"),
+    }
+    t.delete(F.col("id") == 2)
+    assert {r.id for r in t.read().collect()} == {1, 3}
+
+
+def test_declarations_ride_the_chain_and_compaction_skips_revalidation(
+    spark, tmp_path, monkeypatch
+):
+    t = _mk(spark, tmp_path)
+    t.write(_ev(spark, [(4, "2024-01-01 12:00:00", 40.0)]), mode="append")
+    t.update("id = 1", {"amount": F.lit(11.0)})
+    # the declaration survived data commits (carried by every manifest form)
+    assert t.describe()["generated"] == GEN
+    calls = []
+    orig = MTable._enforce
+    monkeypatch.setattr(
+        MTable, "_enforce", lambda self, df, cons, what: calls.append(what)
+        or orig(self, df, cons, what)
+    )
+    t.compact()
+    assert calls == []  # maintenance rewrite: rows already passed
+    t.write(_ev(spark, [(5, "2024-01-02 12:00:00", 50.0)]), mode="append")
+    assert calls == ["append rows"]
+
+
+def test_restore_carries_declarations(spark, tmp_path):
+    t = _mk(spark, tmp_path)
+    # a full overwrite without declarations clears them (v2)
+    t.write(
+        _ev(spark, BASE).withColumn("day", F.date_format("ts", "yyyy-MM-dd")),
+        partition_by="day",
+    )
+    assert t.describe()["generated"] == {}
+    t.restore(1)
+    assert t.describe()["generated"] == GEN
     bad = _ev(spark, [(7, "2024-01-07 10:00:00", 7.0)]).withColumn(
         "day", F.lit("1999-12-31")
     )
     with pytest.raises(ConstraintViolation):
-        c.write(bad, mode="append")
-    t.drop_generated_column("day")
-    t.restore(1)
-    assert t.describe()["generated"] == GEN
+        t.write(bad, mode="append")

@@ -1,6 +1,6 @@
 """LogStore commit seam (VERDICT r10 next-round #6): the manifest CAS is a
 pluggable put-if-absent, the default Hadoop implementation keeps the
-existing semantics, and a conditional-PUT store (the S3 shape) serializes
+existing semantics, and a substituted conditional-PUT store serializes
 two racing writers through the same ConcurrentCommit/retry protocol.
 """
 
@@ -17,7 +17,6 @@ from retailfeaturestore_spark.sources.mtable import (
     HadoopLogStore,
     LogStore,
     MTable,
-    S3ConditionalPutLogStore,
 )
 
 
@@ -81,84 +80,3 @@ def test_hadoop_store_is_the_default_and_wins_once(spark, tmp_path):
     assert t.log_store.put_if_absent(spark, mp, b"{}") is False
     # and the manifest bytes were NOT clobbered by the losing put
     assert json.loads(open(mp).read())["version"] == 1
-
-
-class FakeS3Client:
-    """Mock boto3 S3 client honoring IfNoneMatch=* with a 412 on conflict."""
-
-    def __init__(self):
-        self.objects: dict[tuple[str, str], bytes] = {}
-
-    def put_object(self, Bucket, Key, Body, IfNoneMatch=None):
-        assert IfNoneMatch == "*"
-        if (Bucket, Key) in self.objects:
-            e = RuntimeError("PreconditionFailed")
-            e.response = {
-                "Error": {"Code": "PreconditionFailed"},
-                "ResponseMetadata": {"HTTPStatusCode": 412},
-            }
-            raise e
-        self.objects[(Bucket, Key)] = Body
-
-
-def test_s3_conditional_put_contract():
-    client = FakeS3Client()
-    store = S3ConditionalPutLogStore(client=client)
-    p = "s3a://bucket/tbl/_manifest/v0000000001.json"
-    assert store.put_if_absent(None, p, b"m1") is True
-    assert store.put_if_absent(None, p, b"m2") is False  # lost CAS -> False
-    assert client.objects[("bucket", "tbl/_manifest/v0000000001.json")] == b"m1"
-
-
-def test_s3_store_reraises_non_cas_errors():
-    class BrokenClient:
-        def put_object(self, **kw):
-            e = RuntimeError("AccessDenied")
-            e.response = {
-                "Error": {"Code": "AccessDenied"},
-                "ResponseMetadata": {"HTTPStatusCode": 403},
-            }
-            raise e
-
-    store = S3ConditionalPutLogStore(client=BrokenClient())
-    with pytest.raises(RuntimeError, match="AccessDenied"):
-        store.put_if_absent(None, "s3a://b/k", b"x")
-
-
-def test_s3_store_retries_409_until_definitive():
-    """409 = outcome unknown (a racing conditional PUT in flight): retry
-    until a definitive 200 (we won) or 412 (lost CAS), never map it
-    straight to ConcurrentCommit."""
-
-    class Flaky409Client:
-        def __init__(self, outcomes):
-            self.outcomes = list(outcomes)
-            self.calls = 0
-
-        def put_object(self, **kw):
-            self.calls += 1
-            o = self.outcomes.pop(0)
-            if o == "ok":
-                return
-            e = RuntimeError(o)
-            e.response = {
-                "Error": {"Code": o},
-                "ResponseMetadata": {
-                    "HTTPStatusCode": 409
-                    if o == "ConditionalRequestConflict"
-                    else 412
-                },
-            }
-            raise e
-
-    # 409, 409, then we win
-    c = Flaky409Client(
-        ["ConditionalRequestConflict", "ConditionalRequestConflict", "ok"]
-    )
-    store = S3ConditionalPutLogStore(client=c)
-    assert store.put_if_absent(None, "s3a://b/k", b"m") is True
-    assert c.calls == 3
-    # 409 then definitive 412: lost CAS
-    c = Flaky409Client(["ConditionalRequestConflict", "PreconditionFailed"])
-    store = S3ConditionalPutLogStore(client=c)
-    assert store.put_if_absent(None, "s3a://b/k", b"m") is False

@@ -68,6 +68,48 @@ def test_materialize_online_foreachpartition(spark, tmp_path):
     assert rec["key"] == "fs:customer:1" and rec["spend_30d"] == "10.0"
 
 
+def test_online_onehot_fields_agree_with_meta_country(spark, tmp_path):
+    """Every stored ``country__{c}`` field must agree with ``meta:country``:
+    serving lets a present field win over the one-hot it re-derives from
+    ``meta:country``, so a disagreeing field would change a prediction."""
+    out_dir = str(tmp_path / "sink")
+    os.makedirs(out_dir, exist_ok=True)
+
+    class FileRedis(DictRedis):
+        def hset(self, key, mapping):
+            with open(f"{out_dir}/{key.replace(':', '_')}.json", "w") as f:
+                json.dump({"key": key, **mapping}, f)
+
+    cats = ["United Kingdom", "France", "EIRE", "Germany"]
+    countries = cats + ["Japan", None]  # one unlisted country, one null
+    gold = [
+        (cid, datetime(2024, 1, 1 + cid % 28), countries[cid % len(countries)],
+         float(cid))
+        for cid in range(1, 25)
+    ]
+    df = spark.createDataFrame(
+        gold, "customer_id int, t_ref timestamp, country string, spend_30d double"
+    ).repartition(3)
+    n = materialize_online(
+        df, ["spend_30d"], onehot_categories=cats, client_factory=FileRedis
+    )
+    assert n == len(gold)
+    stored = {}
+    for path in glob.glob(f"{out_dir}/*.json"):
+        rec = json.load(open(path))
+        stored[rec["key"]] = rec
+    assert len(stored) == len(gold)
+    for cid, _, country, _ in gold:
+        rec = stored[f"fs:customer:{cid}"]
+        assert rec["meta:country"] == (country or "")
+        for c in cats:
+            want = 1.0 if country == c else 0.0
+            assert float(rec[f"country__{c}"]) == want, (cid, c)
+            assert float(rec[f"country__{c}"]) == (
+                1.0 if rec["meta:country"] == c else 0.0
+            ), (cid, c)
+
+
 def test_pred_log_single_and_bulk(spark, tmp_path):
     p = log_prediction(
         str(tmp_path / "preds"),

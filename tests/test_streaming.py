@@ -230,10 +230,11 @@ def test_stream_upsert_gold_equals_batch_latest(spark, tmp_path):
 def test_windowed_counts_on_rocksdb_state_equal_batch(spark, tmp_path):
     """The production state backend (RocksDB, disk-spilling) must produce
     identical results to the default provider / batch formulation."""
-    from retailfeaturestore_spark.streaming.events_stream import use_rocksdb_state
-
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
     try:
         stage = tmp_path / "events_rocks"
         stage.mkdir()
@@ -269,6 +270,7 @@ def test_stream_to_online_to_serving_closes_the_loop(spark, tmp_path):
     runs this as two separate batch jobs (materialize_online + serving);
     here one continuous pipeline feeds the same serving chain."""
     import json
+    import os
 
     import pandas as pd
     import pyarrow.parquet as pq
@@ -294,6 +296,12 @@ def test_stream_to_online_to_serving_closes_the_loop(spark, tmp_path):
     half = tbl.num_rows // 2
     pq.write_table(tbl.slice(0, half), stage / "part-0.parquet")
     pq.write_table(tbl.slice(half), stage / "part-1.parquet")
+    # the file source orders batches by modification time and breaks ties
+    # in directory-listing order; two files written in the same
+    # millisecond can then stream newest-half first.  Date part-0 a
+    # second earlier so the batch order is the event-time order.
+    t1 = (stage / "part-1.parquet").stat().st_mtime
+    os.utime(stage / "part-0.parquet", (t1 - 1, t1 - 1))
 
     # the sink closure runs in executor python workers, so the fake store
     # must be file-backed to be visible to the test process (same pattern
@@ -317,7 +325,10 @@ def test_stream_to_online_to_serving_closes_the_loop(spark, tmp_path):
         tiebreak_col="event_id",
         checkpoint_dir=str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
+    # availableNow: False means the stream was still running at the
+    # timeout, and the sink below would be half-written
+    assert q.awaitTermination(120), "stream did not finish within 120 s"
+    assert q.exception() is None
 
     # rebuild the hash store the serving chain reads from the sink files
     store: dict = {}
