@@ -1,9 +1,10 @@
-"""mtable CHECK constraints: add/drop, enforcement at every write path,
-carry-forward across the manifest chain, and the restore/feed interplay.
+"""mtable write-time enforcement of generated columns' implicit CHECK.
 
-CHECK semantics under test are SQL's: NULL passes, FALSE rejects — and
-rejection happens BEFORE the manifest CAS, so a violating commit leaves no
-version behind (the next reader never sees partial state).
+A generated column's declaration is enforced as a null-safe-equality
+CHECK at every write path that adds rows, and rejection happens BEFORE
+the manifest CAS, so a violating commit leaves no version behind (the
+next reader never sees partial state).  Deletes only remove rows and
+are never re-validated.
 """
 
 from __future__ import annotations
@@ -14,213 +15,73 @@ from pyspark.sql import functions as F
 from retailfeaturestore_spark.sources.mtable import (
     ConstraintViolation,
     MTable,
-    NoSuchVersion,
 )
 
 
-def _snap(spark, rows):
+def _ev(spark, rows):
     return spark.createDataFrame(
-        rows, "customer_id long, t_ref string, score double"
-    ).withColumn("t_ref", F.col("t_ref").cast("timestamp"))
-
-
-def _with_date(df):
-    return df.withColumn("date", F.date_format("t_ref", "yyyy-MM-dd"))
+        rows, "id long, ts string, amount double"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 BASE = [
-    (1, "2024-01-01 10:00:00", 1.0),
-    (2, "2024-01-01 11:00:00", 2.0),
-    (3, "2024-01-02 10:00:00", 3.0),
+    (1, "2024-01-01 10:00:00", 10.0),
+    (2, "2024-01-01 11:00:00", 20.0),
+    (3, "2024-01-02 10:00:00", 30.0),
 ]
+
+GEN = {"day": "date_format(ts, 'yyyy-MM-dd')"}
 
 
 def _mk(spark, tmp_path, name="tbl"):
     t = MTable(spark, str(tmp_path / name))
-    t.write(_with_date(_snap(spark, BASE)), partition_by="date")
+    t.write(_ev(spark, BASE), partition_by="day", generated=GEN)
     return t
 
 
-def test_add_validates_existing_rows_and_is_metadata_only(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    files_before = set(t.read().inputFiles())
-    assert t.add_constraint("score_pos", "score > 0") == 2
-    assert t.constraints() == {"score_pos": "score > 0"}
-    # O(manifest): no file was rewritten
-    assert set(t.read().inputFiles()) == files_before
-    # and the change feed sees NO row events for the metadata commit
-    assert t.read_changes(1, 2) is None
-    # adding a constraint current rows break is refused up front
-    with pytest.raises(ConstraintViolation):
-        t.add_constraint("score_big", "score > 2.5")
-    assert t.constraints() == {"score_pos": "score > 0"}
+def _rows(t):
+    return {(r.id, r.day) for r in t.read().collect()}
+
+
+def _bad(spark, ts="2024-01-05 10:00:00"):
+    return _ev(spark, [(9, ts, 9.0)]).withColumn("day", F.lit("1999-12-31"))
 
 
 def test_enforced_on_append_update_merge_not_delete(spark, tmp_path):
     t = _mk(spark, tmp_path)
-    t.add_constraint("score_pos", "score > 0")
-    bad = _with_date(_snap(spark, [(9, "2024-01-05 10:00:00", -1.0)]))
+    bad = _bad(spark)
     v = t.history()[-1]["version"]
     with pytest.raises(ConstraintViolation):
         t.write(bad, mode="append")
     # nothing partial landed: no new version, state unchanged
     assert t.history()[-1]["version"] == v
     assert t.read().count() == 3
+    # an update may not set the generated column to a disagreeing value
+    with pytest.raises(ValueError, match="generated"):
+        t.update(F.col("id") == 1, {"day": F.lit("1999-12-31")})
     with pytest.raises(ConstraintViolation):
-        t.update(F.col("customer_id") == 1, {"score": F.lit(-5.0)})
-    assert {r.score for r in t.read().collect()} == {1.0, 2.0, 3.0}
-    with pytest.raises(ConstraintViolation):
-        t.merge_upsert(
-            bad,
-            keys=["customer_id"],
-            partition_col_value=F.date_format("t_ref", "yyyy-MM-dd"),
-        )
+        t.merge_upsert(bad, ["id"])
+    assert t.history()[-1]["version"] == v
+    assert _rows(t) == {
+        (1, "2024-01-01"), (2, "2024-01-01"), (3, "2024-01-02"),
+    }
     # deletes can only remove rows — never re-validated, never refused
-    t.delete(F.col("customer_id") == 2)
-    assert t.read().count() == 2
+    t.delete(F.col("id") == 2)
+    assert {r.id for r in t.read().collect()} == {1, 3}
     # a conforming append is unaffected
-    good = _with_date(_snap(spark, [(9, "2024-01-05 10:00:00", 9.0)]))
-    t.write(good, mode="append")
-    assert t.read().count() == 3
-
-
-def test_null_passes_check_semantics(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    t.add_constraint("score_pos", "score > 0")
-    withnull = _with_date(
-        _snap(spark, [(7, "2024-01-06 10:00:00", None)])
-    )
-    t.write(withnull, mode="append")  # NULL is UNKNOWN -> passes
-    assert t.read().where(F.col("score").isNull()).count() == 1
-
-
-def test_constraints_ride_the_chain_and_compaction_skips_revalidation(
-    spark, tmp_path, monkeypatch
-):
-    t = _mk(spark, tmp_path)
-    t.add_constraint("score_pos", "score > 0")
-    t.write(
-        _with_date(_snap(spark, [(5, "2024-01-01 12:00:00", 5.0)])),
-        mode="append",
-    )
-    t.update(F.col("customer_id") == 1, {"score": F.lit(10.0)})
-    # the constraint survived data commits (carried by every manifest form)
-    assert t.constraints() == {"score_pos": "score > 0"}
-    calls = []
-    orig = MTable._enforce
-    monkeypatch.setattr(
-        MTable, "_enforce", lambda self, df, cons, what: calls.append(what)
-        or orig(self, df, cons, what)
-    )
-    t.compact()
-    assert calls == []  # maintenance rewrite: rows already passed
-    t.write(
-        _with_date(_snap(spark, [(6, "2024-01-02 12:00:00", 6.0)])),
-        mode="append",
-    )
-    assert calls == ["append rows"]
-    t.drop_constraint("score_pos")
-    assert t.constraints() == {}
-    # dropped means the next bad write lands
-    t.write(
-        _with_date(_snap(spark, [(8, "2024-01-03 10:00:00", -8.0)])),
-        mode="append",
-    )
-    with pytest.raises(ValueError):
-        t.drop_constraint("nope")
+    t.write(_ev(spark, [(9, "2024-01-05 10:00:00", 9.0)]), mode="append")
+    assert (9, "2024-01-05") in _rows(t)
 
 
 def test_user_metadata_cannot_waive_enforcement(spark, tmp_path):
     t = _mk(spark, tmp_path)
-    t.add_constraint("score_pos", "score > 0")
-    bad = _with_date(_snap(spark, [(9, "2024-01-01 12:00:00", -1.0)]))
+    bad = _bad(spark, ts="2024-01-01 12:00:00")
+    v = t.history()[-1]["version"]
     # forging the compaction marker through extra_meta must NOT bypass the
     # CHECK — the maintenance exemption is an internal flag only
     with pytest.raises(ConstraintViolation):
         t.overwrite_partitions(
             bad, partition_values=["2024-01-01"], extra_meta={"compacted": True}
         )
-    assert t.read().where(F.col("score") < 0).count() == 0
-
-
-def test_add_constraint_resolves_expression_even_without_validation(
-    spark, tmp_path
-):
-    t = _mk(spark, tmp_path)
-    with pytest.raises(Exception, match="scoer|UNRESOLVED|cannot be resolved"):
-        t.add_constraint("typo", "scoer > 0", validate=False)
-    assert t.constraints() == {}
-    # partition column is resolvable too
-    t.add_constraint("date_set", "date IS NOT NULL", validate=False)
-    t.write(
-        _with_date(_snap(spark, [(5, "2024-01-05 10:00:00", 5.0)])),
-        mode="append",
-    )
-
-
-def test_restore_restores_the_constraint_set(spark, tmp_path):
-    t = _mk(spark, tmp_path)
-    v_con = t.add_constraint("score_pos", "score > 0")
-    t.drop_constraint("score_pos")
-    t.write(
-        _with_date(_snap(spark, [(8, "2024-01-03 10:00:00", -8.0)])),
-        mode="append",
-    )
-    # restore to the constrained version brings the constraint back with
-    # the data it validated
-    t.restore(v_con)
-    assert t.constraints() == {"score_pos": "score > 0"}
-    with pytest.raises(ConstraintViolation):
-        t.write(
-            _with_date(_snap(spark, [(9, "2024-01-03 11:00:00", -9.0)])),
-            mode="append",
-        )
-
-
-def test_racing_constraint_change_is_a_rebase_conflict(
-    spark, tmp_path, monkeypatch
-):
-    """A writer validated its rows against the base snapshot's constraint
-    set; if ADD CONSTRAINT lands before its commit, the lost CAS must
-    SURFACE (recompute-and-retry) instead of auto-rebasing rows onto a
-    constraint set they were never validated against — in both OCC loops
-    (the append fast path and the overwrite_partitions rebase)."""
-    from retailfeaturestore_spark.sources.mtable import ConcurrentCommit
-
-    t = _mk(spark, tmp_path)
-    real_stage = MTable._stage_files
-    raced = {}
-
-    def stage_with_race(self, df, partition_by):
-        out = real_stage(self, df, partition_by)
-        if "done" not in raced:
-            raced["done"] = True
-            MTable(spark, self.path).add_constraint(
-                "score_pos", "score > 0", validate=False
-            )
-        return out
-
-    monkeypatch.setattr(MTable, "_stage_files", stage_with_race)
-    ok = _with_date(_snap(spark, [(5, "2024-01-05 10:00:00", 5.0)]))
-    with pytest.raises(ConcurrentCommit):
-        t.write(ok, mode="append")
-    monkeypatch.undo()
-    # retry on the fresh base re-validates under the new set and lands
-    t.write(ok, mode="append")
-    assert t.read().count() == 4
-
-    raced.clear()
-    t2 = _mk(spark, tmp_path, name="tbl2")
-    monkeypatch.setattr(MTable, "_stage_files", stage_with_race)
-    with pytest.raises(ConcurrentCommit):
-        t2.overwrite_partitions(
-            _with_date(_snap(spark, [(9, "2024-01-01 12:00:00", 9.0)])),
-            partition_values=["2024-01-01"],
-        )
-    monkeypatch.undo()
-
-
-def test_empty_table_guard(spark, tmp_path):
-    t = MTable(spark, str(tmp_path / "empty"))
-    with pytest.raises(NoSuchVersion):
-        t.add_constraint("x", "score > 0")
+    assert t.history()[-1]["version"] == v
+    assert t.read().where(F.col("day") == "1999-12-31").count() == 0

@@ -103,33 +103,6 @@ def test_rename_follows_and_source_drop_refused(spark, tmp_path):
         t.drop_column("ts")
 
 
-def test_every_write_path_enforces_before_the_commit(spark, tmp_path):
-    """A disagreeing value is refused on append, merge and partition
-    overwrite before the manifest CAS, so no version lands.  Forging the
-    compaction marker through ``extra_meta`` does not waive the check
-    (the maintenance exemption is an internal flag only).  Deletes only
-    remove rows and are never re-validated."""
-    t = _mk(spark, tmp_path)
-    bad = _ev(spark, [(9, "2024-01-01 12:00:00", 9.0)]).withColumn(
-        "day", F.lit("1999-12-31")
-    )
-    v = t.history()[-1]["version"]
-    with pytest.raises(ConstraintViolation):
-        t.write(bad, mode="append")
-    with pytest.raises(ConstraintViolation):
-        t.merge_upsert(bad, ["id"])
-    with pytest.raises(ConstraintViolation):
-        t.overwrite_partitions(
-            bad, partition_values=["2024-01-01"], extra_meta={"compacted": True}
-        )
-    assert t.history()[-1]["version"] == v
-    assert {(r.id, r.day) for r in t.read().collect()} == {
-        (1, "2024-01-01"), (2, "2024-01-01"), (3, "2024-01-02"),
-    }
-    t.delete(F.col("id") == 2)
-    assert {r.id for r in t.read().collect()} == {1, 3}
-
-
 def test_declarations_ride_the_chain_and_compaction_skips_revalidation(
     spark, tmp_path, monkeypatch
 ):
