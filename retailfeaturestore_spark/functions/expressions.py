@@ -18,7 +18,21 @@ __all__ = [
     "from_cents",
     "money_sum",
     "epoch_us",
+    "sql_ident",
+    "sql_with",
 ]
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a back-quoted identifier inside a ``spark.sql`` text that
+    binds frames as ``{name}`` arguments: backticks are doubled for SQL,
+    braces for the ``str.format`` pass."""
+    return "`" + name.replace("`", "``").replace("{", "{{").replace("}", "}}") + "`"
+
+
+def sql_with(ctes: list[tuple[str, str]], query: str) -> str:
+    """``WITH name AS (body), ... query``: one statement from named stages."""
+    return "WITH " + ",\n".join(f"{n} AS ({b})" for n, b in ctes) + "\n" + query
 
 
 def epoch_us(col: Column | str) -> Column:

@@ -15,9 +15,10 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.dataset as pads
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.expressions import sql_ident
 from .io import write_date_partitioned
 from .ml.artifacts import save_artifacts
 from .ml.training import build_training_set
@@ -25,6 +26,7 @@ from .operators.encode import topk_categories
 from .operators.normalize import normalize_orders_raw
 from .operators.pit import interval_existence_labels, latest_per_key
 from .operators.window_features import build_customer_features
+from .schemas import ORDERS_BRONZE
 
 __all__ = [
     "read_excel_sheets",
@@ -113,12 +115,16 @@ def _gold_frame(
     """Bronze -> the gold feature-view frame (W1-W6 window family + tenure +
     A2 country mode), shared by every gold sink flavor.
 
-    The per-customer attributes come from ONE full-history aggregate:
-    ``groupBy(customer_id, country).agg(count, min(invoice_date))``, then one
-    window per customer ordered by count descending, country ascending
-    (NULLs first) — ``operators.encode.group_mode``'s tie-break — whose
-    first row is the mode country and whose frame minimum is the
-    customer's first-seen time.
+    Bronze is read with its declared schema (``schemas.ORDERS_BRONZE``), so
+    no job infers it.  The per-customer attributes come from ONE
+    full-history aggregate: ``GROUP BY customer_id, country`` with
+    ``count`` and ``min(invoice_date)``, then one window per customer
+    ordered by count descending, country ascending (NULLs first) —
+    ``operators.encode.group_mode``'s tie-break — whose first row is the
+    mode country and whose frame minimum is the customer's first-seen
+    time.  The aggregate, the range filter and the join are one SQL
+    statement over the family's frame, so the whole plan is four
+    transformations, each analysed once.
 
     With ``[start_date, end_date]`` only the rows whose ``t_ref`` falls in
     the range are built, equal to a full build's rows there: the window
@@ -128,49 +134,64 @@ def _gold_frame(
     build takes tenure from the family's own running minimum.  So bronze is
     scanned twice either way: once by the family, once by the aggregate."""
     windows = windows or {"1d": 1, "7d": 7, "30d": 30}
-    bronze = spark.read.parquet(bronze_path)
+    bronze = spark.read.schema(ORDERS_BRONZE).parquet(bronze_path)
+    ranged = start_date is not None
     events = bronze
-    if start_date is not None:
+    if ranged:
         start, end = F.lit(start_date).cast("date"), F.lit(end_date).cast("date")
         day = F.col("invoice_date").cast("date")
         events = bronze.where((day >= F.date_sub(start, max(windows.values()))) & (day <= end))
-    feats = build_customer_features(events.drop("country"), windows=windows)
-
-    by_country = Window.partitionBy("customer_id").orderBy(
-        F.col("__n").desc(), F.col("country").asc()
-    )
-    customers = (
-        bronze.groupBy("customer_id", "country")
-        .agg(F.count(F.lit(1)).alias("__n"), F.min("invoice_date").alias("__first_ts"))
-        .withColumns(
-            {
-                "__rn": F.row_number().over(by_country),
-                "__first_ts": F.min("__first_ts").over(
-                    by_country.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-                ),
-            }
-        )
-        .where(F.col("__rn") == 1)
-        .select("customer_id", "country", "__first_ts")
-    )
-    if start_date is not None:
-        t_day = F.col("t_ref").cast("date")
-        micros = F.unix_micros("t_ref") - F.unix_micros("__first_ts")
-        feats = (
-            feats.where((t_day >= start) & (t_day <= end))
-            .join(customers, "customer_id", "left")
-            .withColumn("tenure_days", F.floor(micros / 86_400_000_000))
-        )
-    else:
-        feats = feats.join(customers, "customer_id", "left")
+    # carry nothing: the line columns stay in bronze, and t_ref is rebuilt
+    # from the family's epoch-microseconds ordering attribute
+    feats = build_customer_features(events, windows=windows, carry_cols=())
     # Gold contract (FIXTURES.md §3): keys + windowed features + tenure +
-    # mode country — raw line columns stay in bronze.
-    feature_cols = [
-        f"{base}_{w}"
+    # mode country.
+    feature_cols = ", ".join(
+        "f." + sql_ident(f"{base}_{w}")
         for base in ("txn_count", "spend", "unique_skus", "avg_basket_value", "cancel_rate")
         for w in windows
-    ]
-    return feats.select("customer_id", "t_ref", *feature_cols, "tenure_days", "country")
+    )
+    tenure = (
+        "floor((unix_micros(f.t_ref) - unix_micros(c.first_ts)) / 86400000000)"
+        if ranged else "f.tenure_days"
+    )
+    in_range = (
+        "WHERE CAST(f.t_ref AS DATE) BETWEEN CAST({start} AS DATE) AND CAST({end} AS DATE)"
+        if ranged else ""
+    )
+    by_country = "PARTITION BY customer_id ORDER BY n DESC, country ASC"
+    return spark.sql(
+        f"""
+        WITH counts AS (
+            SELECT customer_id, country, count(1) AS n, min(invoice_date) AS first_ts
+            FROM {{bronze}} GROUP BY customer_id, country),
+        customers AS (
+            SELECT customer_id, country, first_ts FROM (
+                SELECT customer_id, country,
+                    row_number() OVER ({by_country}) AS rn,
+                    min(first_ts) OVER ({by_country}
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS first_ts
+                FROM counts)
+            WHERE rn = 1)
+        SELECT f.customer_id, f.t_ref, {feature_cols}, {tenure} AS tenure_days, c.country
+        FROM {{feats}} f LEFT JOIN customers c ON c.customer_id = f.customer_id
+        {in_range}""",
+        bronze=bronze, feats=feats, start=start_date, end=end_date,
+    )
+
+
+def _gold_writer(gold: DataFrame):
+    """The gold frame's ``date=YYYY-MM-DD`` partitioned writer, one file per
+    date directory: the family runs on every core, so the frame is
+    hash-partitioned by date before the ``partitionBy`` write, into
+    ``defaultParallelism`` partitions that AQE does not coalesce, so the
+    files are written on every core too."""
+    par = gold.sparkSession.sparkContext.defaultParallelism
+    return (
+        gold.withColumn("date", F.date_format("t_ref", "yyyy-MM-dd"))
+        .repartition(par, "date")
+        .write.partitionBy("date")
+    )
 
 
 def build_feature_views(
@@ -185,8 +206,7 @@ def build_feature_views(
     is one window pass here; the per-customer mode country (``:59``) is a
     second tiny aggregation joined back on the entity key.
     """
-    gold = _gold_frame(spark, bronze_path, windows)
-    write_date_partitioned(gold, gold_path, "t_ref")
+    _gold_writer(_gold_frame(spark, bronze_path, windows)).mode("overwrite").parquet(gold_path)
 
 
 def build_feature_views_mtable(
@@ -248,12 +268,8 @@ def backfill_feature_views(
     closures.)  A range day the recompute no longer produces keeps, and
     counts, its old rows — the mtable sink replaces those."""
     gold = _gold_frame(spark, bronze_path, windows, start_date, end_date)
-    (
-        gold.withColumn("date", F.date_format("t_ref", "yyyy-MM-dd"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date")
-        .parquet(gold_path)
+    _gold_writer(gold).mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(
+        gold_path
     )
     # a driver-side footer read (no Spark job) on the range's partitions
     part = pads.partitioning(pa.schema([("date", pa.string())]), flavor="hive")

@@ -126,12 +126,15 @@ def lineitem_to_bronze(
     lineitem⋈orders join is an equi shuffle join on ``l_orderkey`` (AQE picks
     sort-merge; both sides could be bucketed by orderkey at rest to kill the
     shuffle entirely).  The optional customer join broadcasts.
+    ``customer_id`` is cast to int, as ``schemas.ORDERS_BRONZE`` declares
+    and ``normalize_orders_raw`` writes, so one declared schema reads either
+    face's bronze.
     """
     o = orders.select("o_orderkey", "o_custkey", "o_orderdate")
     df = (
         lineitem.join(o, lineitem.l_orderkey == o.o_orderkey, "inner")
         .select(
-            F.col("o_custkey").alias("customer_id"),
+            F.col("o_custkey").cast("int").alias("customer_id"),
             F.col("l_orderkey").cast("string").alias("invoice"),
             F.col("l_linenumber").alias("line_no"),
             F.col("l_partkey").cast("string").alias("stock_code"),

@@ -23,7 +23,7 @@ from pandas positional rolling (SURVEY.md §2.4 tie caveat); the DuckDB oracle
 agrees with this engine.
 
 Scale notes (100 TB):
-- ``rangeBetween`` bounds are in MICROSECONDS over ``unix_micros(ts)`` so
+- Range-frame bounds are in MICROSECONDS over ``unix_micros(ts)`` so
   sub-second event times are exact (casting to seconds would truncate).
 - The per-frame ``collect_set`` state for W3 is bounded by per-entity distinct
   SKUs inside the window horizon; for whale entities enable
@@ -62,18 +62,32 @@ prefix past 2^63 raises ``ARITHMETIC_OVERFLOW`` rather than wrapping.  An
 empty or all-NULL window reads 0 where a bounded SUM reads NULL; the gold
 family's NaN sweep maps both to 0.0, and ``user_activity_features`` guards
 its nullable sum with a windowed non-null count.
+
+How the plan is built: each public builder renders its whole plan as ONE
+Spark SQL statement (named stages as common table expressions, the input
+frames bound as ``{src}`` arguments of ``spark.sql``), with every
+caller-supplied column name back-quoted.  A Column-by-Column DataFrame
+program pays one py4j round trip per Column object and method call, and
+Spark analyses the plan again at every ``withColumn``/``select``: a
+30-day gold backfill's plan took 5,500-6,500 round trips and 1.0-1.5 s of
+driver time before its first job, against ~150 round trips and about
+0.45 s as SQL text, for the same analysed frame.  The statement starts with
+a ``REPARTITION(defaultParallelism, entity)`` hint (:func:`_spread_entity`)
+so the window stage runs on every core.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.expressions import cents, clip, epoch_us, from_cents, guarded_div
+from ..functions.expressions import epoch_us, sql_ident, sql_with
+from .windowed_distinct import windowed_distinct_ctes
 
 __all__ = [
     "MICROS_PER_DAY",
-    "range_window",
     "build_customer_features",
     "incremental_customer_features",
     "user_activity_features",
@@ -81,81 +95,73 @@ __all__ = [
 
 MICROS_PER_DAY = 86_400 * 1_000_000
 
-# Ordering column name used by all range frames (injected, then dropped).
-_TS_US = "__ts_us"
+_UPTO = "RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 
-def _spread_entity(df: DataFrame, entity_col: str) -> DataFrame:
-    """Entity-hash repartition when the input is under-parallel.
+def _before(days: int) -> str:
+    """The growing frame that ends just outside ``[t - days, t]``."""
+    return f"RANGE BETWEEN UNBOUNDED PRECEDING AND {days * MICROS_PER_DAY + 1} PRECEDING"
 
-    A small local scan (or single-row-group file) arrives in ~1 partition;
-    the window family's own exchange would then be sized by AQE from the
-    tiny byte count and coalesced to a few partitions, serializing the
-    sort + frame evaluation (compute-bound, not byte-bound).  An explicit
-    hash repartition on the entity key at full parallelism is AQE-exempt,
-    satisfies every downstream window's ClusteredDistribution requirement
-    (so NO second exchange appears), and parallelizes the whole family:
-    measured 2.76 -> 1.75 s on the delta flagship at sf0.1.  On a cluster
-    the input already has >= defaultParallelism partitions and this is a
-    no-op.
-    """
+
+def _sliding(days: int) -> str:
+    """The both-closed ``[t - days, t]`` range frame."""
+    return f"RANGE BETWEEN {days * MICROS_PER_DAY} PRECEDING AND CURRENT ROW"
+
+
+def _in_window(c: str, i: int) -> str:
+    """``sum(c)`` over window ``i``: the growing frame up to t minus the one
+    before the window (``{c}_upto``, ``{c}_before{i}``)."""
+    return f"(coalesce({c}_upto, 0) - coalesce({c}_before{i}, 0))"
+
+
+def _positive_or_one(x: str) -> str:
+    """The guarded denominator of ``functions.expressions.guarded_div``."""
+    return f"CASE WHEN {x} > 0 THEN {x} ELSE 1.0D END"
+
+
+def _scans_bucketed_table(df: DataFrame) -> bool:
+    """Whether any relation ``df`` reads is a bucketed file-source table,
+    read from the analysed logical plan's leaves (nothing is planned)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        try:
+            if leaf.relation().bucketSpec().isDefined():
+                return True
+        except Py4JError:  # a relation that is not file-based has no bucketSpec
+            pass
+    return False
+
+
+def _spread_entity(df: DataFrame, entity: str) -> str:
+    """The ``REPARTITION(defaultParallelism, entity)`` hint that starts the
+    family's stage, or ``""`` when ``df`` reads a bucketed table.
+
+    The family's own exchange on the entity key is sized by AQE from the
+    bytes it shuffles, and a small input (a late day's 60-day slice, a
+    local scan) is coalesced to one partition: the sort and every frame
+    then run in one task on one core, although the work is compute-bound,
+    not byte-bound.  A repartition with an explicit count is a
+    ``REPARTITION_BY_NUM`` exchange, which AQE leaves at that width; it
+    satisfies every downstream window's ClusteredDistribution (so no second
+    exchange appears) and runs the family on every core — measured 2.76 ->
+    1.75 s on the delta flagship at sf0.1.  It applies whatever the input's
+    own partition count: a 72-file bronze scan already has
+    defaultParallelism partitions, but its partitioning is not the
+    family's, and the family's own exchange was still coalesced to one
+    task.  No plan is built to decide it; only the analysed plan's leaves
+    are read.
+
+    A bucketed input is exempt: the window's own exchange is elided against
+    the at-rest clustering (tests/test_scale_paths.py asserts it), and a
+    repartition here would reintroduce the shuffle bucketing exists to
+    remove."""
+    if _scans_bucketed_table(df):
+        return ""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    try:
-        jqe = df._jdf.queryExecution()
-        mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        plan = jqe.explainString(mode)
-    except Exception:  # pragma: no cover - defensive for exotic plans
-        plan = ""
-    if "Bucketed:" in plan:
-        # Input scans a bucketed table: the window's own exchange is elided
-        # against the at-rest clustering (tests/test_scale_paths.py asserts
-        # it) — a repartition here would reintroduce the shuffle bucketing
-        # exists to remove.  (A bare bucketed scan reports "Bucketed: false
-        # (disabled by query planner)" until a downstream operator requires
-        # the distribution, so match the spec line, not the enabled state.)
-        return df
-    return df.repartition(par, entity_col)
-
-
-def range_window(entity_col: str, days: int) -> WindowSpec:
-    """``[t - days, t]`` both-closed event-time range frame (W1-W5 frame)."""
-    return (
-        Window.partitionBy(entity_col)
-        .orderBy(F.col(_TS_US))
-        .rangeBetween(-days * MICROS_PER_DAY, 0)
-    )
-
-
-def _range_sum(col: Column | str, entity_col: str, lo_us: int, hi_us: int) -> Column:
-    """Integer ``sum(col)`` over the range frame ``[t + lo_us, t + hi_us]``
-    as two growing frames: ``[unbounded, t + hi_us]`` minus ``[unbounded,
-    t + lo_us - 1µs]`` (module docstring).  Exact for integer columns only;
-    an empty or all-NULL frame gives 0, not NULL."""
-    order = Window.partitionBy(entity_col).orderBy(F.col(_TS_US))
-    upto = F.sum(col).over(order.rangeBetween(Window.unboundedPreceding, hi_us))
-    before = F.sum(col).over(order.rangeBetween(Window.unboundedPreceding, lo_us - 1))
-    return F.coalesce(upto, F.lit(0)) - F.coalesce(before, F.lit(0))
-
-
-def _windowed(
-    df: DataFrame,
-    entity_col: str,
-    windows: dict[str, int],
-    per_window_exprs,
-) -> DataFrame:
-    """Apply ``per_window_exprs(window_spec, days) -> dict[str, Column]`` for
-    every horizon.  All frames share partitioning+ordering, so Catalyst plans
-    ONE exchange + ONE sort for the whole family."""
-    cols = dict()
-    for suffix, days in windows.items():
-        w = range_window(entity_col, days)
-        for base, expr in per_window_exprs(w, days).items():
-            cols[f"{base}_{suffix}"] = expr
-    return df.withColumns(cols)
+    return f"/*+ REPARTITION({par}, {entity}) */ "
 
 
 def build_customer_features(
@@ -202,7 +208,7 @@ def build_customer_features(
     every family aggregate and to tenure's running min, which skips marker
     timestamps) and the label is one more running aggregate, a future range
     frame ``sum(markers) OVER [t + 1µs, t + horizon]`` (a difference of two
-    growing frames), that CollapseWindow merges into the family pass.
+    growing frames), evaluated in the family's WindowExec.
     Marker rows are dropped before output.
     The events come from their own frame (not the bronze rows) because an
     event with no bronze line — e.g. an order with zero line items — must
@@ -222,161 +228,137 @@ def build_customer_features(
     windows = windows or {"1d": 1, "7d": 7, "30d": 30}
     if unique_mode not in ("set", "approx", "delta"):
         raise ValueError(f"unknown unique_mode: {unique_mode!r}")
+    q = sql_ident
+    e, ts, sku, cancel = q(entity_col), q(ts_col), q(sku_col), q(cancel_col)
+    labelled = label_events is not None
+    types = {f.name: f.dataType for f in bronze.schema.fields}
+    scale = f"CAST({10 ** amount_scale} AS DOUBLE)"
+    internal = ["__ts_us", "__txn", "__cancel", "__spend", *(["__lab"] if labelled else [])]
+    cols = [*types, *internal]
 
-    txn = (~F.col(cancel_col)).cast("long")
-    cancel = F.col(cancel_col).cast("long")
     # P7: cancel lines contribute 0 spend (jobs/build_feature_views.py:15).
-    spend = cents(
-        F.when(~F.col(cancel_col), F.col(amount_col)).otherwise(F.lit(0.0)), amount_scale
-    )
-
-    df = bronze.withColumns(
-        {
-            _TS_US: epoch_us(ts_col),
-            "__txn": txn,
-            "__cancel": cancel,
-            "__spend": spend,
+    spend = f"CASE WHEN NOT {cancel} THEN {q(amount_col)} ELSE 0.0D END"
+    ctes = [("__lines", (
+        f"SELECT *, unix_micros(CAST({ts} AS TIMESTAMP)) AS __ts_us, "
+        f"CAST(NOT {cancel} AS BIGINT) AS __txn, CAST({cancel} AS BIGINT) AS __cancel, "
+        f"CAST(round({spend} * {scale}) AS BIGINT) AS __spend"
+        + (", 0 AS __lab" if labelled else "") + " FROM {src}"
+    ))]
+    if labelled:
+        # Zero-weight marker rows; every other column is NULL, widened by
+        # the union to the bronze column's type.
+        marker = {
+            entity_col: e,
+            "__ts_us": f"unix_micros(CAST({q(label_ts_col)} AS TIMESTAMP))",
+            **{c: "CAST(0 AS BIGINT)" for c in ("__txn", "__cancel", "__spend")},
+            "__lab": "1",
         }
-    )
-    if label_events is not None:
-        df = df.withColumn("__lab", F.lit(0))
-        types = {f.name: f.dataType for f in df.schema.fields}
-        mk = label_events.select(
-            F.col(entity_col), epoch_us(label_ts_col).alias(_TS_US)
-        ).withColumns(
-            {
-                "__txn": F.lit(0).cast(types["__txn"]),
-                "__cancel": F.lit(0).cast(types["__cancel"]),
-                "__spend": F.lit(0).cast(types["__spend"]),
-                "__lab": F.lit(1),
-            }
-        )
-        mk = mk.withColumns(
-            {c: F.lit(None).cast(types[c]) for c in df.columns if c not in mk.columns}
-        )
-        df = df.unionByName(mk.select(df.columns))
-    df = _spread_entity(df, entity_col)
+        ctes.append(("__events", "SELECT * FROM __lines UNION ALL SELECT "
+                     + ", ".join(marker.get(c, "NULL") for c in cols) + " FROM {labels}"))
+    ctes.append(("__spread", f"SELECT {_spread_entity(bronze, e)}* FROM {ctes[-1][0]}"))
 
-    # Delta W3 runs FIRST, emitting (entity, ts_us) as alias-aware columns:
-    # the W1-W5 range frames below then reuse the delta pass's entity-hash
-    # exchange and (entity, time, kind) sort — the sort order (entity, ts_us)
-    # they require is a prefix of it — so the whole family still costs ONE
-    # wide shuffle, same as the collect_set path.
-    reconstruct_ts = False
+    # Delta W3 runs FIRST, emitting (entity, ts_us) as aliases of its own
+    # partitioning and ordering attributes: the W1-W5 frames below then
+    # reuse the delta pass's entity-hash exchange and (entity, time) sort,
+    # so the whole family still costs ONE wide shuffle, same as the
+    # collect_set path.
+    uniq = []
     if unique_mode == "delta":
-        from pyspark.sql import types as T
-
-        from .windowed_distinct import exact_windowed_distinct
-
-        payload = None
-        if carry_cols is not None:
-            carry = [c for c in dict.fromkeys(carry_cols) if c != entity_col]
-            reconstruct_ts = (
-                isinstance(df.schema[ts_col].dataType, T.TimestampType)
-                and ts_col not in carry
-            )
-            if not reconstruct_ts and ts_col not in carry:
-                carry.append(ts_col)
-            payload = [*carry, "__txn", "__cancel", "__spend"]
-            if label_events is not None:
-                payload.append("__lab")
-        df = exact_windowed_distinct(
-            df, entity_col, ts_col, sku_col, windows,
-            out_prefix="unique_skus", epoch_col=_TS_US, payload_cols=payload,
+        reconstruct_ts = False
+        if carry_cols is None:
+            payload = [c for c in cols if c not in (entity_col, "__ts_us")]
+        else:
+            payload = [c for c in dict.fromkeys(carry_cols) if c != entity_col]
+            reconstruct_ts = isinstance(types[ts_col], T.TimestampType) and ts_col not in payload
+            if not reconstruct_ts and ts_col not in payload:
+                payload.append(ts_col)
+            payload += internal[1:]
+        uniq = [f"unique_skus_{s}" for s in windows]
+        ctes += windowed_distinct_ctes(
+            "__spread", e, "__ts_us", sku, windows, [q(c) for c in payload], [q(c) for c in uniq]
         )
+        cols = [entity_col, "__ts_us", *payload, *uniq]
+        select = [f"__e AS {e}", "__time AS __ts_us", *(q(c) for c in payload + uniq)]
         if reconstruct_ts:
-            df = df.withColumn(ts_col, F.timestamp_micros(F.col(_TS_US)))
+            # timestamp_micros inverts unix_micros exactly
+            cols.append(ts_col)
+            select.append(f"timestamp_micros(__time) AS {ts}")
+        source = "__wd_out"
     elif carry_cols is not None:
-        keep = dict.fromkeys(
-            [entity_col, ts_col, sku_col, _TS_US, "__txn", "__cancel", "__spend",
-             *(("__lab",) if label_events is not None else ()),
-             *carry_cols]
-        )
-        df = df.select(*keep)
-
-    # The tenure min must skip marker rows.  Materialize the guarded
-    # timestamp as a plain column BEFORE the window block: a CASE inside the
-    # min() argument would be extracted into a Project BETWEEN the family
-    # Window and the tenure/label Window, blocking CollapseWindow from
-    # merging them into one WindowExec (measured: a whole extra frame pass).
-    if label_events is not None:
-        df = df.withColumn("__ts_lab", F.when(F.col("__lab") == 0, F.col(_TS_US)))
-
-    def uniq(w: WindowSpec) -> Column:
-        if unique_mode == "approx":
-            # Documented divergence: HLL estimate for whale-entity scale.
-            return F.approx_count_distinct(sku_col).over(w).cast("double")
-        return F.size(F.collect_set(sku_col).over(w)).cast("double")
-
-    def fam(w: WindowSpec, days: int) -> dict[str, Column]:
-        # Integer counts and long-cents spend are exact prefix differences.
-        def wsum(c: str) -> Column:
-            return _range_sum(c, entity_col, -days * MICROS_PER_DAY, 0)
-
-        txn_c = wsum("__txn").cast("double")
-        spend_c = from_cents(wsum("__spend"), amount_scale)
-        cancel_c = wsum("__cancel").cast("double")
-        cols = {
-            "txn_count": txn_c,
-            "spend": spend_c,
-            "unique_skus": uniq(w),
-            "avg_basket_value": guarded_div(spend_c, txn_c),
-            "cancel_rate": clip(guarded_div(cancel_c, cancel_c + txn_c), 0.0, 1.0),
-        }
-        if unique_mode == "delta":
-            del cols["unique_skus"]
-        return cols
-
-    df = _windowed(df, entity_col, windows, fam)
-
-    # W6 tenure: whole-24h-period floor since first event.  The entity-wide
-    # min is expressed as a RUNNING min over the same (entity, ts) ordering
-    # as the W1-W5 frames — identical value (ordered ascending, the running
-    # min IS the partition min seen so far = first event), but CollapseWindow
-    # then merges it into the family's WindowExec instead of paying a whole
-    # extra unordered-frame pass over the output rows.
-    w_cum0 = (
-        Window.partitionBy(entity_col)
-        .orderBy(F.col(_TS_US))
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    # Marker rows (label_events) must not pull the first-event min earlier:
-    # min() skips the NULLed-out marker timestamps; every output row is a
-    # real event, so its own frame always holds >= 1 non-null value.
-    first_ts = (
-        F.min("__ts_lab").over(w_cum0)
-        if label_events is not None
-        else F.min(_TS_US).over(w_cum0)
-    )
-    df = df.withColumn(
-        "tenure_days",
-        F.floor((F.col(_TS_US) - first_ts) / F.lit(MICROS_PER_DAY)),
-    )
-
-    if label_events is not None:
-        future = _range_sum("__lab", entity_col, 1, label_horizon_days * MICROS_PER_DAY)
-        df = (
-            df.withColumn(label_col, (future == 0).cast("int"))
-            .where(F.col("__lab") == 0)
-            .drop("__lab")
-        )
-
-    feature_cols = [f"{b}_{s}" for b in
-                    ("txn_count", "spend", "unique_skus", "avg_basket_value", "cancel_rate")
-                    for s in windows]
-    if round_to is not None:
-        df = df.withColumns(
-            {c: F.round(F.col(c).cast("double"), round_to) for c in feature_cols}
-        )
+        cols = list(dict.fromkeys([entity_col, ts_col, sku_col, *internal, *carry_cols]))
+        select, source = [q(c) for c in cols], "__spread"
     else:
-        df = df.withColumns({c: F.col(c).cast("double") for c in feature_cols})
+        select, source = ["*"], "__spread"
+    ctes.append(("__family_in", f"SELECT {', '.join(select)} FROM {source}"))
 
-    # P13 NaN sweep parity (jobs/build_feature_views.py:68-70).
-    df = df.na.fill(0.0, subset=feature_cols)
+    # Every frame shares the (entity, ts) spec, so Catalyst plans ONE
+    # exchange + ONE sort and one WindowExec for the family, tenure and the
+    # label.  Integer sums are prefix differences (module docstring): the
+    # growing frame up to t, minus the growing frame before each window.
+    spec = f"PARTITION BY {e} ORDER BY __ts_us"
+    sums = ["__txn", "__cancel", "__spend"]
+    frames = [f"sum({c}) OVER ({spec} {_UPTO}) AS {c}_upto" for c in sums]
+    for i, days in enumerate(windows.values()):
+        frames += [f"sum({c}) OVER ({spec} {_before(days)}) AS {c}_before{i}" for c in sums]
+        if unique_mode == "set":
+            frames.append(f"size(collect_set({sku}) OVER ({spec} {_sliding(days)})) AS __uniq{i}")
+        elif unique_mode == "approx":
+            # Documented divergence: HLL estimate for whale-entity scale.
+            frames.append(
+                f"approx_count_distinct({sku}) OVER ({spec} {_sliding(days)}) AS __uniq{i}"
+            )
+    # W6 tenure: the entity-wide first event is a RUNNING min over the same
+    # ordering — identical value (ordered ascending, the running min IS the
+    # partition min seen so far), but it shares the family's WindowExec
+    # instead of paying an extra unordered-frame pass.  The min skips marker
+    # rows' NULLed timestamps; every output row is a real event, so its own
+    # frame holds >= 1 non-null value.
+    first = "CASE WHEN __lab = 0 THEN __ts_us END" if labelled else "__ts_us"
+    frames.append(f"min({first}) OVER ({spec} {_UPTO}) AS __first")
+    if labelled:
+        # the churn label's future marker count over [t + 1us, t + horizon]
+        horizon = label_horizon_days * MICROS_PER_DAY
+        ahead = f"RANGE BETWEEN UNBOUNDED PRECEDING AND {horizon} FOLLOWING"
+        frames += [f"sum(__lab) OVER ({spec} {ahead}) AS __lab_ahead",
+                   f"sum(__lab) OVER ({spec} {_UPTO}) AS __lab_upto"]
+    ctes.append(("__family", f"SELECT *, {', '.join(frames)} FROM __family_in"))
 
-    return df.withColumn("t_ref", F.col(ts_col)).drop(
-        _TS_US, "__txn", "__cancel", "__spend", "__ts_lab"
-    )
+    ctes.append(("__sums", "SELECT *, " + ", ".join(
+        f"CAST({_in_window('__txn', i)} AS DOUBLE) AS __txn{i}, "
+        f"{_in_window('__spend', i)} / {scale} AS __spend{i}, "
+        f"CAST({_in_window('__cancel', i)} AS DOUBLE) AS __cancel{i}"
+        for i in range(len(windows))
+    ) + " FROM __family"))
+
+    feats = {}
+    for i, s in enumerate(windows):
+        txn, cancels = f"__txn{i}", f"__cancel{i}"
+        feats[f"txn_count_{s}"] = txn
+        feats[f"spend_{s}"] = f"__spend{i}"
+        if unique_mode != "delta":
+            feats[f"unique_skus_{s}"] = f"__uniq{i}"
+        feats[f"avg_basket_value_{s}"] = f"__spend{i} / {_positive_or_one(txn)}"
+        rate = f"{cancels} / {_positive_or_one(f'({cancels} + {txn})')}"
+        feats[f"cancel_rate_{s}"] = f"least(greatest({rate}, 0.0D), 1.0D)"
+
+    def final(x: str) -> str:
+        # double, optionally rounded, then the P13 NaN sweep
+        # (jobs/build_feature_views.py:68-70) as DataFrame.na.fill does it
+        x = f"CAST({x} AS DOUBLE)"
+        if round_to is not None:
+            x = f"round({x}, {int(round_to)})"
+        return f"coalesce(nanvl({x}, NULL), 0.0D)"
+
+    out = [f"{final(q(c))} AS {q(c)}" if c in uniq else q(c) for c in cols if c not in internal]
+    out += [f"{final(x)} AS {q(c)}" for c, x in feats.items()]
+    out.append(f"floor((__ts_us - __first) / {MICROS_PER_DAY}) AS tenure_days")
+    if labelled:
+        out.append(f"CAST(coalesce(__lab_ahead, 0) - coalesce(__lab_upto, 0) = 0 AS INT) "
+                   f"AS {q(label_col)}")
+    out.append(f"{ts} AS t_ref")
+    query = f"SELECT {', '.join(out)} FROM __sums" + (" WHERE __lab = 0" if labelled else "")
+    frames_in = {"src": bronze, **({"labels": label_events} if labelled else {})}
+    return bronze.sparkSession.sql(sql_with(ctes, query), **frames_in)
 
 
 def incremental_customer_features(
@@ -495,43 +477,53 @@ def user_activity_features(
     engine: count, sum, distinct-type, guarded average, error rate, tenure.
     """
     windows = windows or {"1d": 1, "7d": 7}
-    df = events.withColumns(
-        {_TS_US: epoch_us("ts"), "__val": cents(F.col("value"), amount_scale)}
+    scale = f"CAST({10 ** amount_scale} AS DOUBLE)"
+    spec = "PARTITION BY user_id ORDER BY __ts_us"
+    # a window whose values are all NULL sums to NULL, as a bounded SUM
+    sums = {"__n": "1", "__n_val": "CAST(__val IS NOT NULL AS BIGINT)", "__val": "__val",
+            "__err": "CAST(event_type = 'error' AS BIGINT)"}
+    frames = [f"sum({x}) OVER ({spec} {_UPTO}) AS {c}_upto" for c, x in sums.items()]
+    for i, days in enumerate(windows.values()):
+        frames += [f"sum({x}) OVER ({spec} {_before(days)}) AS {c}_before{i}"
+                   for c, x in sums.items()]
+        frames.append(f"CAST(size(collect_set(event_type) OVER ({spec} {_sliding(days)})) "
+                      f"AS BIGINT) AS __types{i}")
+    # Running min == partition min under the ascending (user, ts) order the
+    # family already sorts by, so it shares the family's WindowExec.
+    frames.append(f"floor((__ts_us - min(__ts_us) OVER ({spec} {_UPTO})) / {MICROS_PER_DAY}) "
+                  "AS __tenure")
+
+    sums_i = ", ".join(
+        f"{_in_window('__n', i)} AS __n{i}, "
+        f"CASE WHEN {_in_window('__n_val', i)} > 0 THEN {_in_window('__val', i)} / {scale} END "
+        f"AS __sum{i}, CAST({_in_window('__err', i)} AS DOUBLE) AS __err{i}"
+        for i in range(len(windows))
     )
-    df = _spread_entity(df, "user_id")
 
-    def fam(w: WindowSpec, days: int) -> dict[str, Column]:
-        def wsum(c: Column | str) -> Column:
-            return _range_sum(c, "user_id", -days * MICROS_PER_DAY, 0)
+    def rounded(x: str) -> str:
+        return x if round_to is None else f"round({x}, {int(round_to)})"
 
-        n = wsum(F.lit(1))
-        # a window whose values are all NULL sums to NULL, as a bounded SUM
-        n_val = wsum(F.col("__val").isNotNull().cast("long"))
-        s = F.when(n_val > 0, from_cents(wsum("__val"), amount_scale))
+    q = sql_ident
+    out = [q(c) for c in events.columns]
+    for i, s in enumerate(windows):
+        n = f"CAST(__n{i} AS DOUBLE)"
         # no NULL guard: an all-NULL window's NULL ratio and the difference's
         # 0 both clip to an error_rate of 0.0
-        err = wsum((F.col("event_type") == "error").cast("long")).cast("double")
-        return {
-            "event_count": n,
-            "value_sum": s,
-            "unique_types": F.size(F.collect_set("event_type").over(w)).cast("long"),
-            "avg_value": guarded_div(s, n.cast("double")),
-            "error_rate": clip(guarded_div(err, n.cast("double")), 0.0, 1.0),
-        }
-
-    df = _windowed(df, "user_id", windows, fam)
-    # Running min == partition min under the ascending (user, ts) order the
-    # family already sorts by — CollapseWindow folds this into the same pass.
-    w_cum0 = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col(_TS_US))
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    df = df.withColumn(
-        "tenure_days",
-        F.floor((F.col(_TS_US) - F.min(_TS_US).over(w_cum0)) / F.lit(MICROS_PER_DAY)),
-    )
-    float_cols = [f"{b}_{s}" for b in ("value_sum", "avg_value", "error_rate") for s in windows]
-    if round_to is not None:
-        df = df.withColumns({c: F.round(F.col(c), round_to) for c in float_cols})
-    return df.drop(_TS_US, "__val")
+        rate = f"least(greatest(__err{i} / {_positive_or_one(n)}, 0.0D), 1.0D)"
+        out += [
+            f"__n{i} AS {q(f'event_count_{s}')}",
+            f"{rounded(f'__sum{i}')} AS {q(f'value_sum_{s}')}",
+            f"__types{i} AS {q(f'unique_types_{s}')}",
+            f"{rounded(f'__sum{i} / {_positive_or_one(n)}')} AS {q(f'avg_value_{s}')}",
+            f"{rounded(rate)} AS {q(f'error_rate_{s}')}",
+        ]
+    out.append("__tenure AS tenure_days")
+    ctes = [
+        ("__events", f"SELECT {_spread_entity(events, 'user_id')}*, "
+                     "unix_micros(CAST(ts AS TIMESTAMP)) AS __ts_us, "
+                     f"CAST(round(value * {scale}) AS BIGINT) AS __val FROM {{src}}"),
+        ("__family", f"SELECT *, {', '.join(frames)} FROM __events"),
+        ("__sums", f"SELECT *, {sums_i} FROM __family"),
+    ]
+    return events.sparkSession.sql(sql_with(ctes, f"SELECT {', '.join(out)} FROM __sums"),
+                                   src=events)

@@ -1,6 +1,6 @@
 """Exact event-time-windowed distinct counts WITHOUT per-row set state.
 
-``collect_set(...).over(range_window)`` (the small-entity W3 path in
+``size(collect_set(key) OVER [t - w, t])`` (the small-entity W3 path in
 ``window_features``) keeps every distinct key of the window in memory per
 row — fine at retail cardinalities, pathological for whale entities at
 100 TB (a customer seeing 10^6 SKUs in a 30-day horizon materializes a
@@ -24,7 +24,9 @@ P(t) is a cumulative sum.  Pairs with ``b - a > w`` can never be active and
 are dropped at the source.
 
 Physical shape (v4 — ONE exchange, ONE post-explode sort, every frame
-*incremental* inside ONE WindowExec):
+*incremental* inside ONE WindowExec), rendered as Spark SQL common table
+expressions (:func:`windowed_distinct_ctes`) so a caller can embed the
+operator in its own statement and the plan is parsed and analysed once:
 
 - One hash exchange on the entity key serves the entire operator.  The
   previous-same-key-occurrence lag runs over a partition-local
@@ -63,14 +65,108 @@ executed as distributed window algebra.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from ..functions.expressions import epoch_us
+from ..functions.expressions import sql_ident, sql_with
 
-__all__ = ["exact_windowed_distinct", "MICROS_PER_DAY"]
+__all__ = ["exact_windowed_distinct", "windowed_distinct_ctes", "MICROS_PER_DAY"]
 
 MICROS_PER_DAY = 86_400 * 1_000_000
+
+
+def windowed_distinct_ctes(
+    rel: str,
+    entity: str,
+    time: str,
+    key: str,
+    windows: dict[str, int],
+    payload: list[str],
+    outputs: list[str],
+) -> list[tuple[str, str]]:
+    """The operator as SQL common table expressions over the relation
+    ``rel``.  ``entity``, ``time`` (epoch microseconds) and ``key`` are SQL
+    expressions over ``rel``; ``payload`` (the ``rel`` columns carried to
+    the output) and ``outputs`` (one per window) are quoted column names.
+
+    The last CTE, ``__wd_out``, holds one row per input row: ``__e`` and
+    ``__time`` — the operator's own partitioning and ordering attributes,
+    which a caller aliases back to its entity and time columns so that a
+    downstream window over them reuses this operator's exchange and sort
+    (ProjectExec is alias-aware) — then the payload, then the outputs.
+
+    The payload rides each query event as one struct.  Catalyst's
+    nested-column pruning does not reach inside the explode's
+    array-of-struct construction (verified on the physical plan: the
+    Generate materializes every field even when downstream extracts a
+    subset), so callers pass exactly the columns they need; the delta rows
+    always stay skinny (key, time, kind, ±1 deltas, NULL payload)."""
+    horizons = [d * MICROS_PER_DAY for d in windows.values()]
+    d_cols = [f"__d{i}" for i in range(len(horizons))]
+
+    def event(t: str, kind: int, c: str, ds: list, p: str) -> str:
+        fields = [f"'t', {t}", f"'k', {kind}", f"'c', CAST({c} AS BIGINT)"]
+        fields += [f"'{d}', CAST({x} AS BIGINT)" for d, x in zip(d_cols, ds)]
+        return f"named_struct({', '.join(fields)}, 'p', {p})"
+
+    # One array element per event: the query row itself (kind 1, carries the
+    # payload), a +1 pair-start at t (kind 0, indicator per horizon the pair
+    # can ever hit), and a -1 pair-end one tick past the inclusive activity
+    # bound prev + w per surviving horizon (kind 2), so P(t) is a pure
+    # range-frame cumulative sum over (time) — see module docstring.  Dead
+    # elements are exploded as NULL rows and dropped by a flat filter rather
+    # than compacted with the array ``filter`` higher-order function: HOF
+    # lambdas are evaluated outside whole-stage codegen, and this expression
+    # runs once per input row on the hot path.
+    gap = "(__t - __prev)"
+    elems = [event("__t", 1, "__k IS NOT NULL", [0] * len(d_cols), "__p")]
+    elems.append(
+        f"CASE WHEN __prev IS NOT NULL AND {gap} <= {max(horizons)} THEN "
+        f"{event('__t', 0, '0', [f'{gap} <= {w}' for w in horizons], 'NULL')} END"
+    )
+    elems += [
+        f"CASE WHEN __prev IS NOT NULL AND {gap} <= {w} THEN "
+        f"{event(f'__prev + {w + 1}', 2, '0', [-(j == i) for j in range(len(d_cols))], 'NULL')} END"
+        for i, w in enumerate(horizons)
+    ]
+    # ONE exchange for the whole operator: the previous-occurrence lag runs
+    # partitioned by the entity alone (ordered key-then-time, with a
+    # same-key guard), and each row then EXPLODES into its query event plus
+    # its pair-delta events — explode preserves hash partitioning, where a
+    # union of two branches would not (UnionExec reports unknown
+    # partitioning and forces a re-exchange AND re-executes the upstream
+    # scan per branch).  The running-sum window then needs only a
+    # partition-local re-sort.  Skew note: partitioning the lag by entity
+    # (not (entity, key)) concentrates a whale entity in one partition — the
+    # same exposure as the final per-entity window itself, so it does not
+    # change the operator's skew class.
+    lag = "OVER (PARTITION BY __e ORDER BY __k, __t)"
+    # Every frame is a growing range frame over the single (entity, time)
+    # ordering -> one sort, one WindowExec (module docstring, v4 shape).
+    order = "PARTITION BY __e ORDER BY __time RANGE BETWEEN UNBOUNDED PRECEDING AND"
+    sums = [f"sum(__c) OVER ({order} CURRENT ROW) AS __c_upto"]
+    for i, (d, w) in enumerate(zip(d_cols, horizons)):
+        sums += [
+            f"sum(__c) OVER ({order} {w + 1} PRECEDING) AS __c_before{i}",
+            f"sum({d}) OVER ({order} CURRENT ROW) AS {d}_upto",
+        ]
+    counts = [
+        f"__c_upto - coalesce(__c_before{i}, 0) - {d}_upto AS {out}"
+        for i, (d, out) in enumerate(zip(d_cols, outputs))
+    ]
+    return [
+        ("__wd_in", f"SELECT {entity} AS __e, {time} AS __t, {key} AS __k, "
+                    f"struct({', '.join(payload)}) AS __p FROM {rel}"),
+        ("__wd_lag", f"SELECT *, CASE WHEN lag(__k) {lag} = __k THEN lag(__t) {lag} END "
+                     "AS __prev FROM __wd_in"),
+        ("__wd_ev", "SELECT __e, __ev.t AS __time, __ev.k AS __kind, __ev.c AS __c, "
+                    + "".join(f"__ev.{d} AS {d}, " for d in d_cols)
+                    + f"__ev.p AS __p FROM (SELECT __e, explode(array({', '.join(elems)})) "
+                    "AS __ev FROM __wd_lag) WHERE __ev IS NOT NULL"),
+        ("__wd_sum", f"SELECT __e, __time, __kind, __p, {', '.join(sums)} FROM __wd_ev"),
+        ("__wd_out", "SELECT "
+                     + ", ".join(["__e", "__time", *(f"__p.{c} AS {c}" for c in payload), *counts])
+                     + " FROM __wd_sum WHERE __kind = 1"),
+    ]
 
 
 def exact_windowed_distinct(
@@ -80,154 +176,21 @@ def exact_windowed_distinct(
     key_col: str,
     windows: dict[str, int],
     out_prefix: str = "unique",
-    epoch_col: str | None = None,
-    payload_cols: list[str] | None = None,
 ) -> DataFrame:
     """Append ``{out_prefix}_{suffix}`` = exact distinct ``key_col`` count
-    over the both-closed range window ``[t - days, t]`` per entity.
+    over the both-closed range window ``[t - days, t]`` per entity, as one
+    SQL statement over ``df``.
 
     ``windows`` maps suffix -> horizon days.  NULL keys are excluded from
     the count (SQL ``count(DISTINCT ...)`` / ``collect_set`` semantics).
     All original columns are preserved; one entity-key shuffle feeds every
     output frame.
-
-    ``epoch_col`` names an *existing* epoch-microseconds long column to use
-    as the event time.  When given, the output emits ``entity_col`` and
-    ``epoch_col`` as direct aliases of the internal partition/order
-    attributes — ProjectExec is alias-aware, so downstream operators that
-    partition on ``entity_col`` and order by ``epoch_col`` (e.g. the W1-W5
-    range-frame family) reuse this operator's exchange and sort instead of
-    shuffling again.
-
-    ``payload_cols`` (optional) trims the struct that rides each exploded
-    query event to exactly these columns — others are DROPPED from the
-    output.  Catalyst's nested-column pruning does not reach inside the
-    explode's array-of-struct construction (verified on the physical plan:
-    the Generate materializes every field even when downstream extracts a
-    subset), so callers that know their projection pass it explicitly; the
-    delta rows always stay skinny (key, time, kind, ±1 deltas, NULL
-    payload) either way.
     """
-    horizons = {s: d * MICROS_PER_DAY for s, d in windows.items()}
-    d_cols = [f"__d_{s}" for s in horizons]
-
-    if epoch_col is None:
-        base = df.withColumn("__t", epoch_us(ts_col))
-        default_payload = df.columns
-    else:
-        base = df.withColumn("__t", F.col(epoch_col))
-        default_payload = [c for c in df.columns if c not in (entity_col, epoch_col)]
-    payload_cols = default_payload if payload_cols is None else list(payload_cols)
-    payload = F.struct(*payload_cols)
-    payload_type = base.select(payload.alias("__p")).schema["__p"].dataType
-
-    # ONE exchange for the whole operator: the previous-occurrence lag runs
-    # partitioned by the entity alone (ordered key-then-time, with a
-    # same-key guard), and each row then EXPLODES into its query event plus
-    # its pair-delta events — explode preserves hash partitioning, where a
-    # union of two branches would not (UnionExec reports unknown
-    # partitioning and forces a re-exchange AND re-executes the upstream
-    # scan per branch).  The running-sum window below then needs only a
-    # partition-local re-sort.  Skew note: partitioning the lag by entity
-    # (not (entity, key)) concentrates a whale entity in one partition — the
-    # same exposure as the final per-entity window itself, so it does not
-    # change the operator's skew class.
-    pre = base.select(
-        F.col(entity_col).alias("__e"),
-        "__t",
-        F.col(key_col).alias("__k"),
-        payload.alias("__p"),
+    cols = [sql_ident(c) for c in df.columns]
+    outputs = [sql_ident(f"{out_prefix}_{s}") for s in windows]
+    ctes = windowed_distinct_ctes(
+        "{src}", sql_ident(entity_col), f"unix_micros(CAST({sql_ident(ts_col)} AS TIMESTAMP))",
+        sql_ident(key_col), windows, cols, outputs,
     )
-    w_lag = Window.partitionBy("__e").orderBy("__k", "__t")
-    same_key = F.lag("__k").over(w_lag) == F.col("__k")
-    pre = pre.withColumn(
-        "__prev", F.when(same_key, F.lag("__t").over(w_lag))
-    )
-
-    # One array element per event: the query row itself (kind 1, carries the
-    # payload), a +1 pair-start at t (kind 0, indicator per horizon the pair
-    # can ever hit), and a -1 pair-end at prev + w per surviving horizon
-    # (kind 2); dead elements are nulled then compacted.
-    gap = F.col("__t") - F.col("__prev")
-    max_w = max(horizons.values())
-    elem_fields = lambda time, kind, c, ds, p: F.struct(  # noqa: E731
-        time.alias("t"), F.lit(kind).alias("k"), c.cast("long").alias("c"),
-        *[d.cast("long").alias(col) for d, col in zip(ds, d_cols)],
-        p.alias("p"),
-    )
-    null_p = F.lit(None).cast(payload_type)
-    query_elem = elem_fields(
-        F.col("__t"), 1, F.col("__k").isNotNull().cast("long"),
-        [F.lit(0) for _ in d_cols], F.col("__p"),
-    )
-    pair_live = F.col("__prev").isNotNull() & (gap <= F.lit(max_w))
-    plus = F.when(
-        pair_live,
-        elem_fields(
-            F.col("__t"), 0, F.lit(0),
-            [(gap <= F.lit(w)).cast("long") for w in horizons.values()], null_p,
-        ),
-    )
-    # -1 one tick past the inclusive activity bound a+w, so P(t) is a pure
-    # range-frame cumulative sum over (time) — see module docstring.
-    minuses = [
-        F.when(
-            F.col("__prev").isNotNull() & (gap <= F.lit(w_us)),
-            elem_fields(
-                F.col("__prev") + F.lit(w_us + 1), 2, F.lit(0),
-                [F.lit(-1 if c2 == c else 0) for c2 in d_cols], null_p,
-            ),
-        )
-        for (s, w_us), c in zip(horizons.items(), d_cols)
-    ]
-    # Dead elements are exploded as NULL rows and dropped by a flat filter
-    # rather than compacted with the array ``filter`` higher-order function:
-    # HOF lambdas are evaluated outside whole-stage codegen, and this
-    # expression runs once per input row on the hot path.
-    u = (
-        pre.select(
-            "__e",
-            F.explode(F.array(query_elem, plus, *minuses)).alias("__ev"),
-        )
-        .where(F.col("__ev").isNotNull())
-        .select(
-            "__e",
-            F.col("__ev.t").alias("__time"),
-            F.col("__ev.k").alias("__kind"),
-            F.col("__ev.c").alias("__c"),
-            *[F.col(f"__ev.{c}").alias(c) for c in d_cols],
-            F.col("__ev.p").alias("__p"),
-        )
-    )
-
-    # Every frame is a growing range frame over the single (entity, time)
-    # ordering -> one sort, one WindowExec for the whole family (module
-    # docstring, v4 shape).
-    w_cum = Window.partitionBy("__e").orderBy("__time").rangeBetween(
-        Window.unboundedPreceding, 0
-    )
-    out_cols = {}
-    for (s, w_us), c in zip(horizons.items(), d_cols):
-        w_before = Window.partitionBy("__e").orderBy("__time").rangeBetween(
-            Window.unboundedPreceding, -w_us - 1
-        )
-        c_in_window = F.sum("__c").over(w_cum) - F.coalesce(
-            F.sum("__c").over(w_before), F.lit(0)
-        )
-        out_cols[f"{out_prefix}_{s}"] = c_in_window - F.sum(c).over(w_cum)
-    u = u.withColumns(out_cols)
-
-    filtered = u.where(F.col("__kind") == 1)
-    if epoch_col is None:
-        return filtered.select(
-            *[F.col("__p")[c].alias(c) for c in payload_cols],
-            *[F.col(n).alias(n) for n in out_cols],
-        )
-    # Alias-aware output: __e/__time carry the hash-partitioning and the
-    # (entity, time) sort order through to downstream window operators.
-    return filtered.select(
-        F.col("__e").alias(entity_col),
-        F.col("__time").alias(epoch_col),
-        *[F.col("__p")[c].alias(c) for c in payload_cols],
-        *[F.col(n).alias(n) for n in out_cols],
-    )
+    query = f"SELECT {', '.join(cols + outputs)} FROM __wd_out"
+    return df.sparkSession.sql(sql_with(ctes, query), src=df)

@@ -114,6 +114,56 @@ def test_backfill_sees_lookback_and_tenure_epoch(spark, tmp_path):
     assert row.tenure_days == 57        # Jan 5 -> Mar 3, full-history epoch
 
 
+def _many_customers_bronze(spark, root):
+    """Three days of eight customers each: a bronze whose scan has fewer
+    partitions than defaultParallelism, and whose days each span several
+    entity hashes."""
+    lines = [(c, datetime(2011, 3, d, 10, c), "UK", False) for d in (1, 2, 3) for c in range(1, 9)]
+    bronze = str(root / "bronze")
+    ingest_to_bronze(spark, _raw(spark, lines), bronze)
+    return bronze
+
+
+def _files_per_date(gold):
+    return Counter(os.path.basename(os.path.dirname(p)) for p in glob.glob(f"{gold}/date=*/*.parquet"))
+
+
+def test_gold_writes_one_file_per_date(spark, tmp_path):
+    """The family runs on every core, and the full build and the backfill
+    still leave one parquet file in each date directory they write."""
+    bronze = _many_customers_bronze(spark, tmp_path)
+    gold = str(tmp_path / "gold")
+    build_feature_views(spark, bronze, gold)
+    days = {f"date=2011-03-0{d}": 1 for d in (1, 2, 3)}
+    assert _files_per_date(gold) == days
+    before = set(glob.glob(f"{gold}/date=*/*.parquet"))
+    assert backfill_feature_views(spark, bronze, gold, "2011-03-02", "2011-03-03") == 16
+    assert _files_per_date(gold) == days
+    assert len(set(glob.glob(f"{gold}/date=*/*.parquet")) - before) == 2
+
+
+def test_range_gold_frame_is_built_in_few_py4j_round_trips(spark, tmp_path, monkeypatch):
+    """A range ``_gold_frame`` renders its plan as SQL text over a few
+    transformations: at most 300 py4j round trips to the JVM before any job
+    runs, where a Column-by-Column plan makes thousands."""
+    import py4j.clientserver
+
+    from retailfeaturestore_spark.jobs import _gold_frame
+
+    bronze = _many_customers_bronze(spark, tmp_path)
+    calls = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
+    _gold_frame(spark, bronze, None, "2011-03-02", "2011-03-03")
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 300, len(calls)
+
+
 # ---------------------------------------------------------------------------
 # Repair vs full rebuild, for any base bronze plus one late day.
 # ---------------------------------------------------------------------------

@@ -193,3 +193,38 @@ def test_label_fold_matches_join_formulation(spark):
     a = sorted(map(tuple, folded.select(cols).collect()))
     b = sorted(map(tuple, joined.select(cols).collect()))
     assert a == b and len(a) == len(rows)
+
+
+def test_column_names_with_a_space_and_a_dot(spark):
+    """Every caller-supplied column name is quoted in the rendered plan: the
+    entity, timestamp and SKU columns renamed to names that hold a space
+    and a dot give the same rows, for every engine and option."""
+    rows = [
+        (1, ts("2024-01-01 10:00:00"), "A", False, 10.0),
+        (1, ts("2024-01-01 10:00:00"), "B", True, 5.0),
+        (1, ts("2024-01-03 09:00:00"), "A", False, 2.5),
+        (2, ts("2024-01-02 12:00:00"), "C", False, 7.0),
+    ]
+    df = spark.createDataFrame(rows, BRONZE_SCHEMA)
+    labels = spark.createDataFrame([(1, ts("2024-01-02 00:00:00"))], "customer_id int, ts timestamp")
+    names = {"customer_id": "cust id.no", "invoice_date": "invoice date.ts",
+             "stock_code": "stock code.sku", "ts": "label ts.at"}
+    renamed = {"entity_col": names["customer_id"], "ts_col": names["invoice_date"],
+               "sku_col": names["stock_code"]}
+    for kw in (
+        {"unique_mode": "delta", "carry_cols": ("line_amount",)},
+        {"unique_mode": "delta", "label_events": labels, "label_ts_col": "ts"},
+        {"unique_mode": "set", "round_to": 2, "carry_cols": ("line_amount",)},
+        {"unique_mode": "approx", "amount_scale": 2},
+    ):
+        want = build_customer_features(df, windows={"1d": 1, "7d": 7}, **kw)
+        if "label_events" in kw:
+            kw = {**kw, "label_events": labels.withColumnsRenamed(names),
+                  "label_ts_col": names["ts"]}
+        got = build_customer_features(
+            df.withColumnsRenamed(names), windows={"1d": 1, "7d": 7}, **renamed, **kw
+        )
+        assert got.columns == [names.get(c, c) for c in want.columns]
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+            map(tuple, want.collect()), key=repr
+        )

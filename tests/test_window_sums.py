@@ -197,3 +197,19 @@ def test_family_is_one_exchange_one_window_and_no_sliding_integer_sum(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
     assert set(_sliding_functions(plan)) == {"collect_set"}, plan
+
+
+def test_family_exchange_spreads_an_input_already_at_default_parallelism(spark):
+    """The family's entity exchange is a repartition at defaultParallelism,
+    which AQE does not coalesce, whatever the input's own partition count:
+    an input already split defaultParallelism ways is spread by entity
+    too, instead of leaving a size-sized exchange that AQE collapses to one
+    task."""
+    par = spark.sparkContext.defaultParallelism
+    rows = [(c, BASE + timedelta(days=c % 5), "A", c % 3 == 0, 1.0) for c in range(40)]
+    df = spark.createDataFrame(rows, BRONZE_SCHEMA).repartition(par)
+    assert df.rdd.getNumPartitions() == par
+    for mode in ("delta", "set"):
+        plan = _plan(build_customer_features(df, windows=WINDOWS, unique_mode=mode))
+        exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)", plan)
+        assert exchanges == [("customer_id", str(par), "REPARTITION_BY_NUM")], plan

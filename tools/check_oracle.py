@@ -2,7 +2,8 @@
 
 Runs each registered query through Spark AND its DuckDB oracle on the same
 parquet, then compares row count, column names, and an order-insensitive
-value hash.  Usage::
+value hash, and prints both engines' hashes, so two checkouts' runs show
+whether a query's rows moved on both engines alike.  Usage::
 
     python tools/check_oracle.py [query ...] [--sf /root/testdata/sf0.01]
 """
@@ -224,15 +225,17 @@ def main() -> int:
         t0 = time.time()
         sdf = qd.fn(spark, args.sf).toPandas()
         t_spark = time.time() - t0
+        h_spark = canonical(sdf)
         if qd.oracle is None:
-            print(f"{name}: rows-only, {len(sdf)} rows ({t_spark:.1f}s)")
+            print(f"{name}: rows-only, {len(sdf)} rows spark={h_spark} ({t_spark:.1f}s)")
             continue
         t0 = time.time()
         ddf = con.execute(qd.oracle).df()
         t_duck = time.time() - t0
+        h_duck = canonical(ddf)
         ok_rows = len(sdf) == len(ddf)
         ok_cols = sorted(sdf.columns) == sorted(ddf.columns)
-        ok_hash = ok_rows and ok_cols and canonical(sdf) == canonical(ddf)
+        ok_hash = ok_rows and ok_cols and h_spark == h_duck
         # Since r8 even the sketch-backed queries ("approx" tag) hash-gate:
         # their outputs are boolean error-bound verdicts (each engine checks
         # its OWN sketch against its OWN exact aggregate), not raw
@@ -241,7 +244,8 @@ def main() -> int:
         status = "OK" if passed else "FAIL"
         print(
             f"{name}: {status} rows={len(sdf)}/{len(ddf)} cols={ok_cols} "
-            f"hash={ok_hash} (spark {t_spark:.1f}s, duck {t_duck:.1f}s)"
+            f"hash={ok_hash} spark={h_spark} duck={h_duck} "
+            f"(spark {t_spark:.1f}s, duck {t_duck:.1f}s)"
         )
         if not passed:
             failures += 1
