@@ -14,7 +14,7 @@ JPEG pipeline needs.
 
 from __future__ import annotations
 
-__all__ = ["encode_ppm", "decode_ppm", "resize_ppm_bytes"]
+__all__ = ["encode_ppm", "decode_ppm"]
 
 
 def encode_ppm(width: int, height: int, rgb: bytes) -> bytes:
@@ -60,19 +60,3 @@ def decode_ppm(data: bytes) -> tuple[int, int, bytes]:
     if len(rgb) != width * height * 3:
         raise ValueError("truncated PPM pixel data")
     return width, height, rgb
-
-
-def resize_ppm_bytes(data: bytes, out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbor resize, re-encoded as P6 — deterministic integer
-    sampling (no float filtering), so the distributed result is
-    byte-reproducible across engines and partitionings."""
-    w, h, rgb = decode_ppm(data)
-    out = bytearray()
-    for y in range(out_h):
-        sy = y * h // out_h
-        row = sy * w * 3
-        for x in range(out_w):
-            sx = x * w // out_w
-            p = row + sx * 3
-            out += rgb[p : p + 3]
-    return encode_ppm(out_w, out_h, bytes(out))

@@ -31,7 +31,6 @@ __all__ = [
     "write_date_partitioned",
     "write_bucketed_table",
     "write_csv",
-    "create_views",
     "DEFAULT_SF_DIR",
 ]
 
@@ -236,16 +235,3 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     header on, single directory of part files (coalesce(1) only for tiny
     outputs — never at scale)."""
     df.write.mode(mode).option("header", "true").csv(path)
-
-
-def create_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> list[str]:
-    """Register every testdata table (or ``names``) as a temp view so users
-    can work in pure ``spark.sql`` — the ergonomic bridge for anyone
-    arriving from a SQL engine: the same table names the DuckDB oracles
-    use (``TESTDATA_TABLES``), loaded through :func:`load_table` so the
-    timestamp normalization and scan confs apply identically.  Returns the
-    view names registered."""
-    targets = tuple(names) if names is not None else tuple(TESTDATA_TABLES)
-    for name, df in load_tables(spark, sf_dir, targets).items():
-        df.createOrReplaceTempView(name)
-    return list(targets)

@@ -37,7 +37,6 @@ __all__ = [
     "backfill_feature_views_mtable",
     "materialize_online_job",
     "make_training",
-    "build_packed_corpus",
 ]
 
 
@@ -413,36 +412,3 @@ def make_training(
     metrics = {"n_rows": int(len(y)), "pos_rate": float(y.mean()), "flavor": flavor}
     paths = save_artifacts(model_dir, model, feature_names, metrics)
     return model, feature_names, paths
-
-
-def build_packed_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    max_tokens: int = 512,
-    n_shards: int = 8,
-) -> dict:
-    """The LLM-corpus analogue of the retail pipeline above, end to end:
-
-        documents --judge_corpus_admission (canonical-copy dedup, Gopher
-                    gates, held-out-source exclusion, decontamination)
-                  --pack_chunk_text--> fixed-length training sequences
-                  --write_packed_shards--> one file per shard + manifest
-
-    Returns the manifest.  The admission judgment is the SAME function the
-    ``corpus_curation_pipeline`` audit query rolls up
-    (``operators/curation.judge_corpus_admission``) — the audit is this
-    job's dry run by construction, including the benchmark-source
-    exclusion and the shingle-overlap decontamination gate.  Plan: the
-    judgment's three data-scale exchanges, a doc_id join back to the text,
-    then packing's one shard exchange.
-    """
-    from .io import load_table
-    from .operators.curation import judge_corpus_admission
-    from .operators.packing import pack_chunk_text, write_packed_shards
-
-    d = load_table(spark, sf_dir, "documents")
-    admitted_ids = judge_corpus_admission(d).where(F.col("kept") == 1).select("doc_id")
-    admitted = d.join(admitted_ids, "doc_id").select("doc_id", "text")
-    chunks = pack_chunk_text(admitted, max_tokens=max_tokens, n_shards=n_shards)
-    return write_packed_shards(chunks, out_dir)

@@ -11,10 +11,7 @@ documented corrections (§7.4):
 The model fit itself (LightGBM in the reference) happens at the driver on
 the aggregated training frame via ``toPandas()`` — after the heavy lifting
 (windows, labels, joins) ran distributed, the matrix is small; gradient
-boosting does not belong inside the Spark plan.  When the matrix does NOT
-fit a driver (100 TB training sets), use
-:mod:`retailfeaturestore_spark.ml.distributed` — a pyspark.ml logistic fit
-whose coefficients re-enter the same ``predict_proba`` protocol.
+boosting does not belong inside the Spark plan.
 """
 
 from __future__ import annotations

@@ -1,9 +1,6 @@
-"""Corpus admission judgment — the ONE implementation of the curation
-rules, shared by the audit query (``corpus_curation_pipeline``, which rolls
-it up into a per-source report against a DuckDB oracle) and the write path
-(``jobs.build_packed_corpus``, which packs the admitted documents).  Keeping
-the rule set in a single function is what makes "the audit is the dry-run
-of the job" literally true — they cannot drift.
+"""Corpus admission judgment — the curation rules behind the audit query
+``corpus_curation_pipeline``, which rolls it up into a per-source report
+against a DuckDB oracle.
 
 Rules (all engine-exact integer comparisons):
 - canonical copy: ``doc_id == min(doc_id)`` over the md5 content digest;

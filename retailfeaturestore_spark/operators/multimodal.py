@@ -2,12 +2,12 @@
 
 Extension surface (BASELINE.json north star): image/audio/video content is
 carried as ``binary`` columns with a typed metadata struct; decode /
-feature-extract / resize / frame-sample run as Arrow-batched ``mapInPandas``
-stages.  The actual media codecs are NOT available in this environment, so
-the decode step is STUBBED (clearly marked below): ``decode_stub='fake'``
-produces a deterministic digest-derived feature vector so the Spark-side
-plumbing — schema, batching, partitioning, UDF signature — is real and
-tested; ``decode_stub='raise'`` shows where a real libjpeg/ffmpeg call goes.
+feature-extract run as Arrow-batched ``mapInPandas`` stages.  The actual
+media codecs are NOT available in this environment, so the decode step is
+STUBBED (clearly marked below): ``decode_stub='fake'`` produces a
+deterministic digest-derived feature vector so the Spark-side plumbing —
+schema, batching, partitioning, UDF signature — is real and tested;
+``decode_stub='raise'`` shows where a real libjpeg/ffmpeg call goes.
 
 At 100 TB the payload column dominates IO: keep it OUT of shuffle keys and
 aggregations (metadata-only exchanges), read it only in the final mapInPandas
@@ -30,9 +30,6 @@ __all__ = [
     "payload_meta",
     "extract_features",
     "extract_audio_features",
-    "frame_sample",
-    "resize_stub",
-    "resize_ppm",
 ]
 
 FEATURE_DIM = 8
@@ -254,119 +251,3 @@ def extract_audio_features(
         _extract, AUDIO_SCHEMA
     )
 
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_bytes", T.BinaryType()),
-        T.StructField("frame_len", T.LongType()),
-    ]
-)
-
-
-def frame_sample(
-    docs_with_payload: DataFrame,
-    id_col: str = "doc_id",
-    frame_size: int = 64,
-    stride: int = 256,
-    max_frames: int = 8,
-) -> DataFrame:
-    """Video-style frame sampling over binary payloads (mapInPandas):
-    one output row per sampled frame (fixed-size byte window every
-    ``stride`` bytes, capped).  With real video this is the
-    every-Nth-keyframe decode; the chunking/batching/explode shape is
-    identical.  Output rows carry only the sampled bytes — the full payload
-    never re-enters the plan after this stage."""
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames, lens = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                for i in range(max_frames):
-                    off = i * stride
-                    if off >= len(payload):
-                        break
-                    chunk = bytes(payload[off : off + frame_size])
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    frames.append(chunk)
-                    lens.append(len(chunk))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame_bytes": frames, "frame_len": lens}
-            )
-
-    return docs_with_payload.select(F.col(id_col), "payload").mapInPandas(
-        _sample, FRAME_SCHEMA
-    )
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("resized", T.BinaryType()),
-        T.StructField("n_bytes_out", T.LongType()),
-    ]
-)
-
-
-def resize_stub(
-    docs_with_payload: DataFrame, id_col: str = "doc_id", target_bytes: int = 32
-) -> DataFrame:
-    """Image-resize seam (mapInPandas).  STUB: real implementation decodes
-    with PIL/libjpeg (unavailable here) and re-encodes at target resolution;
-    the deterministic fake downsamples the byte stream to ``target_bytes``
-    by even striding, preserving the batch/schema contract."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for payload in pdf["payload"]:
-                b = bytes(payload)
-                if len(b) <= target_bytes:
-                    out.append(b)
-                else:
-                    step = max(len(b) // target_bytes, 1)
-                    out.append(b[::step][:target_bytes])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "resized": out,
-                    "n_bytes_out": [len(x) for x in out],
-                }
-            )
-
-    return docs_with_payload.select(F.col(id_col), "payload").mapInPandas(
-        _resize, RESIZED_SCHEMA
-    )
-
-
-def resize_ppm(
-    docs_with_payload: DataFrame,
-    id_col: str = "doc_id",
-    out_w: int = 4,
-    out_h: int = 4,
-) -> DataFrame:
-    """REAL image resize through the same mapInPandas seam as
-    :func:`resize_stub`: payloads are decoded as PPM (P6), nearest-neighbor
-    resampled to ``(out_w, out_h)``, and re-encoded — pure-stdlib codec
-    (``functions.ppm``), deterministic integer sampling, identical output
-    schema.  This is the filled-in version of the stub's documented plug
-    point; a JPEG pipeline swaps the codec functions and nothing else."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.ppm import resize_ppm_bytes
-
-        for pdf in batches:
-            out = [resize_ppm_bytes(bytes(p), out_w, out_h) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "resized": out,
-                    "n_bytes_out": [len(x) for x in out],
-                }
-            )
-
-    return docs_with_payload.select(F.col(id_col), "payload").mapInPandas(
-        _resize, RESIZED_SCHEMA
-    )

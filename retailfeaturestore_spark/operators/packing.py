@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import words
 
-__all__ = ["pack_chunks", "pack_chunk_text", "pack_bins_ffd", "write_packed_shards"]
+__all__ = ["pack_chunks", "pack_chunk_text", "pack_bins_ffd"]
 
 
 def _shard_col(id_col: str, n_shards: int):
@@ -314,75 +314,3 @@ def pack_bins_ffd(
         pack,
         "shard long, bin_id long, n_docs long, n_tokens long, max_doc_tokens long",
     )
-
-
-def write_packed_shards(
-    chunks: DataFrame,
-    out_dir: str,
-    mode: str = "overwrite",
-) -> dict:
-    """Land :func:`pack_chunk_text` output as training-data files: one
-    parquet file per shard directory (``shard=N/``), rows sorted by
-    ``chunk_id`` within the file for sequential reads, plus a
-    ``manifest.json`` with per-shard chunk/token counts and totals.
-
-    The manifest is written LAST (marker-last commit, same convention as
-    the PQ index lifecycle): a reader that requires the manifest never
-    observes a half-written dataset.  It is named ``_manifest.json`` —
-    underscore-prefixed files are invisible to Spark's file index (like
-    ``_SUCCESS``), so ``spark.read.parquet(out_dir)`` works on the dataset
-    root.  Stats are aggregated from the WRITTEN dataset, not the input
-    plan: (a) the expensive upstream pipeline runs exactly once (the
-    write), the stats pass reads only footers + the two stat columns; and
-    (b) under ``mode="append"`` the manifest reflects the FULL on-disk
-    dataset, never just the increment (append also adds a second file to
-    touched shard dirs — the one-file-per-shard invariant is an
-    overwrite-mode property).  Local-path manifest write, matching the
-    engine's POSIX swap conventions (fail-fast on URI targets); on object
-    stores put the manifest through the store's conditional-put.
-
-    Scale shape: ``repartition("shard")`` puts each shard wholly in one
-    task => exactly one file per shard; shard count (chosen at pack time)
-    is the file-size knob.  The within-partition sort includes ``shard``
-    FIRST: the dynamic-partition writer requires ordering on the partition
-    column, and a child sort that doesn't satisfy it gets a SortExec
-    re-sort stacked on top — under which a spilling shard's chunk order
-    would depend on merge stability, silently losing the sequential-read
-    layout.
-    """
-    import json
-    from pathlib import Path
-
-    if "://" in out_dir:
-        raise ValueError(
-            f"write_packed_shards writes its manifest via local POSIX paths; "
-            f"got URI target {out_dir!r} — mount it or add a store-native "
-            "manifest writer"
-        )
-    (
-        chunks.repartition("shard")
-        .sortWithinPartitions("shard", "chunk_id")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(out_dir)
-    )
-    spark = chunks.sparkSession
-    stats = (
-        spark.read.parquet(out_dir)
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .collect()
-    )
-    manifest = {
-        "shards": {
-            str(r["shard"]): {"n_chunks": r["n_chunks"], "n_tokens": r["n_tokens"]}
-            for r in sorted(stats, key=lambda r: r["shard"])
-        },
-        "n_chunks_total": int(sum(r["n_chunks"] for r in stats)),
-        "n_tokens_total": int(sum(r["n_tokens"] for r in stats)),
-    }
-    Path(out_dir, "_manifest.json").write_text(json.dumps(manifest, indent=2))
-    return manifest

@@ -75,7 +75,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "range_prefix_sum",
-    "global_row_number",
     "exact_ntile",
     "exact_ntile_multi",
 ]
@@ -181,25 +180,6 @@ def range_prefix_sum(
     """
     out, _ = _prefix_and_total(
         df, order_by, value, out_col, num_partitions, cache_key, cache_scope
-    )
-    return out
-
-
-def global_row_number(
-    df: DataFrame,
-    order_by: Sequence[Column],
-    out_col: str,
-    *,
-    num_partitions: int | None = None,
-    cache_key: str | None = None,
-    cache_scope: str | None = None,
-) -> DataFrame:
-    """Exact global 1-based row number under ``order_by`` (which must be a
-    total order — include a unique tiebreak — for a deterministic result),
-    without a single-partition window."""
-    out, _ = _prefix_and_total(
-        df, order_by, F.lit(1).cast("long"), out_col, num_partitions,
-        cache_key, cache_scope,
     )
     return out
 

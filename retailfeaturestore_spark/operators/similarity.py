@@ -46,7 +46,6 @@ __all__ = [
     "pq_topk_adc",
     "pq_topk_adc_resident",
     "build_pq_index",
-    "append_pq_index",
     "load_pq_index",
     "search_pq_index",
     "build_pq_index_mtable",
@@ -996,82 +995,6 @@ def build_pq_index(
     return meta
 
 
-def append_pq_index(
-    spark,
-    index_dir: str,
-    vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> dict:
-    """Incremental index maintenance: encode NEW vectors against the
-    FROZEN codebooks and append their codes — no retraining, no rescan or
-    rewrite of the existing corpus codes.  This is the production IVF/PQ
-    protocol at 100 TB: codebooks drift slowly and retrain on a schedule
-    (``build_pq_index`` at a versioned path), while ingest appends cheaply
-    between rebuilds; a search after append sees old + new rows with zero
-    index downtime.
-
-    Cost envelope: one column-pruned scan of the existing ``codes`` id
-    column (the duplicate-id guard — ids are the self-exclusion and
-    result identity, so silent collisions would corrupt search results),
-    plus a pure map encode of the APPEND BATCH only (the same
-    literal-codebook argmin expression the build uses — no join, no
-    shuffle).  Crash safety: the parquet append commits files atomically
-    via the job committer (a crashed append leaves only ``_temporary``
-    residue, which readers ignore); ``codebooks.json`` is untouched except
-    for an observability counter rewritten tmp+rename LAST, so a crashed
-    append never un-commits the index.
-
-    Returns the updated metadata dict."""
-    import json
-
-    cents, codes, meta = load_pq_index(spark, index_dir)
-    m, w = int(meta["m"]), int(meta["d_sub"])
-    dims = m * w
-    # Pin the batch once: the guards and the write must see the SAME rows
-    # (an unpinned non-deterministic ingest frame would re-evaluate per
-    # action, letting unchecked rows reach the write), and one scan pays
-    # for all three actions.
-    newv = vectors.select(
-        F.col(id_col).alias("id"),
-        F.size(F.col(vec_col)).alias("__dims"),
-        F.transform(F.col(vec_col), lambda x: _quant(x)).alias("__q"),
-    ).localCheckpoint(eager=True)  # blocks reclaimed by ContextCleaner on GC
-    bad = newv.where(F.col("__dims") != dims).count()
-    if bad:
-        raise ValueError(
-            f"{bad} append vectors have dims != {dims} (index m={m} d_sub={w})"
-        )
-    # ids are search identities — a collision (against the index OR inside
-    # the batch itself) would serve one id with two code rows.
-    dup_in = newv.groupBy("id").count().where(F.col("count") > 1).count()
-    if dup_in:
-        raise ValueError(
-            f"{dup_in} ids appear more than once in the append batch at "
-            f"{index_dir!r}: dedupe the batch before appending"
-        )
-    dup = newv.join(codes.select("id"), "id", "left_semi").count()
-    if dup:
-        raise ValueError(
-            f"{dup} append ids already exist in the index at {index_dir!r}: "
-            "ids are search identities — re-encoding under a duplicate id "
-            "would corrupt results; use a fresh id range or rebuild"
-        )
-    coded = newv.withColumn(
-        "__codes",
-        F.array(*[_pq_code_expr(cents[s], s * w + 1, w) for s in range(m)]),
-    )
-    coded.select("id", "__codes").write.mode("append").parquet(
-        os.path.join(index_dir, "codes")
-    )
-    meta["appended_batches"] = int(meta.get("appended_batches", 0)) + 1
-    tmp = os.path.join(index_dir, "codebooks.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(index_dir, "codebooks.json"))
-    return meta
-
-
 def load_pq_index(spark, index_dir: str):
     """-> ``(cents, codes_df, meta)``; raises if the build never committed."""
     import json
@@ -1207,10 +1130,13 @@ def append_pq_index_mtable(
 ) -> int:
     """Incremental index maintenance on the table backend: encode NEW
     vectors against the FROZEN codebooks and commit them as an mtable
-    append — same guards as :func:`append_pq_index` (dimension check,
-    batch-internal and against-index duplicate ids), but the publish is a
-    CAS'd manifest commit: a racing append/compaction rebases instead of
-    interleaving files, and the pre-append index version remains
+    append — no retraining, no rescan or rewrite of the existing codes:
+    codebooks drift slowly and retrain on a schedule (a rebuild), while
+    ingest appends cheaply between rebuilds.  Guards: dimension check,
+    batch-internal and against-index duplicate ids (ids are search
+    identities; a collision would serve one id with two code rows).  The
+    publish is a CAS'd manifest commit: a racing append/compaction rebases
+    instead of interleaving files, and the pre-append index version remains
     searchable (time travel) until vacuum.  Returns the committed
     version."""
     cur = tbl._latest()

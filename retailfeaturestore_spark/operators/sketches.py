@@ -73,39 +73,13 @@ def kmv_group_sketch_packed(
     This is the natural output of the aggregation tournament — the final
     per-group aggregate already holds the sorted k-array, and every
     estimator (:func:`kmv_pair_overlap` / :func:`kmv_tuple_overlap`)
-    consumes packed arrays.  The row form (:func:`kmv_group_sketch`) is
-    one ``explode`` away; sketch-only pipelines that go straight to the
-    estimators should stay packed — r14: the overlap query's
-    explode->re-collect round trip was one whole exchange plus a
-    distinct-months exchange of pure overhead (guide §2.4)."""
-    # (build shape documented in kmv_group_sketch below)
-    hashed = df.select(
-        F.col(group_col), kmv_hash(F.col(value_col)).alias("h")
-    ).where(F.col("h").isNotNull())
-    lanes = hashed.groupBy(
-        group_col, F.pmod(F.col("h"), F.lit(fanout)).alias("__lane")
-    ).agg(F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("__ks"))
-    return lanes.groupBy(group_col).agg(
-        F.slice(F.array_sort(F.flatten(F.collect_list("__ks"))), 1, k).alias("hs")
-    )
-
-
-def kmv_group_sketch(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    k: int = 64,
-    fanout: int = 16,
-) -> DataFrame:
-    """Per-group KMV sketch rows: the k smallest 56-bit hashes of the
-    group's distinct values.
-
-    Returns ``(group_col, h)`` with <= k rows per group, via the
-    tournament described in the module docstring.  Groups with fewer than
-    k distinct values keep ALL of them — the sketch degrades gracefully to
-    an exact distinct set (and every downstream estimator returns exact
-    answers for such groups).
-    """
+    consumes packed arrays.  The tournament is described in the module
+    docstring; groups with fewer than k distinct values keep ALL of them,
+    so the sketch degrades gracefully to an exact distinct set (and every
+    estimator returns exact answers for such groups).  Staying packed
+    matters — r14: the overlap query's explode->re-collect round trip was
+    one whole exchange plus a distinct-months exchange of pure overhead
+    (guide §2.4)."""
     # r13 re-plan (guide §2.3/§2.4): the r11-r12 shape was a distinct
     # groupBy(g, h) exchange followed by TWO window passes (lane
     # row_number, then final row_number) — three exchanges and two full
@@ -130,8 +104,15 @@ def kmv_group_sketch(
     # moves task memory, never results).
     # NULL-hash filter: NULL values hash to NULL; a (g, NULL) row would
     # waste a sketch slot and diverge from DuckDB's NULLS-LAST ordering.
-    grp = kmv_group_sketch_packed(df, group_col, value_col, k=k, fanout=fanout)
-    return grp.select(group_col, F.explode("hs").alias("h"))
+    hashed = df.select(
+        F.col(group_col), kmv_hash(F.col(value_col)).alias("h")
+    ).where(F.col("h").isNotNull())
+    lanes = hashed.groupBy(
+        group_col, F.pmod(F.col("h"), F.lit(fanout)).alias("__lane")
+    ).agg(F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("__ks"))
+    return lanes.groupBy(group_col).agg(
+        F.slice(F.array_sort(F.flatten(F.collect_list("__ks"))), 1, k).alias("hs")
+    )
 
 
 def kmv_pair_overlap(
@@ -139,10 +120,10 @@ def kmv_pair_overlap(
     pairs: DataFrame,
     group_col: str,
     k: int = 64,
-    packed: bool = False,
 ) -> DataFrame:
     """Estimate distinct-value UNION, JACCARD, and INTERSECTION sizes for
-    every (group_a, group_b) row of ``pairs`` from the groups' KMV sketches
+    every (group_a, group_b) row of ``pairs`` from the groups' packed KMV
+    sketches (:func:`kmv_group_sketch_packed`, columns ``(group_col, hs)``)
     alone.
 
     The Beyer et al. estimators over the combined sketch
@@ -157,20 +138,12 @@ def kmv_pair_overlap(
     is a window over <= 2k rows per pair and two broadcast-sized joins.
     Output: (group_a, group_b, ku, union_est, jaccard_est, inter_est).
     """
-    # Pack each group's sketch into ONE sorted array row (k longs = ~2 kB
-    # at k=256): the pairwise stage is then two broadcast joins plus
-    # per-row array arithmetic — ZERO additional exchanges, which is the
-    # point of a sketch (a row-relational merge would re-shuffle per pair;
-    # measured 3x slower on the month-overlap query).  ``packed=True``
-    # callers hand in the sketch already in this form
-    # (:func:`kmv_group_sketch_packed` — columns (group_col, hs)), which
-    # drops even the pack exchange (r14, guide §2.4).
-    if packed:
-        arr = sketch.select(group_col, "hs")
-    else:
-        arr = sketch.groupBy(group_col).agg(
-            F.array_sort(F.collect_list("h")).alias("hs")
-        )
+    # Each group's sketch is ONE sorted array row (k longs = ~2 kB at
+    # k=256): the pairwise stage is two broadcast joins plus per-row array
+    # arithmetic — ZERO additional exchanges, which is the point of a
+    # sketch (a row-relational merge would re-shuffle per pair; measured 3x
+    # slower on the month-overlap query).
+    arr = sketch.select(group_col, "hs")
     joined = pairs.join(
         F.broadcast(
             arr.select(F.col(group_col).alias("group_a"), F.col("hs").alias("ha"))
@@ -221,7 +194,6 @@ def kmv_tuple_overlap(
     group_cols: list[str],
     group_col: str = "g",
     k: int = 64,
-    packed: bool = False,
 ) -> DataFrame:
     """N-WAY distinct-intersection estimate: for every row of ``tuples``
     (columns ``group_cols`` naming n groups), estimate
@@ -240,12 +212,7 @@ def kmv_tuple_overlap(
     """
     if len(group_cols) < 2:
         raise ValueError("tuple overlap needs at least two group columns")
-    if packed:  # sketch already (group_col, hs) — see kmv_pair_overlap
-        arr = sketch.select(group_col, "hs")
-    else:
-        arr = sketch.groupBy(group_col).agg(
-            F.array_sort(F.collect_list("h")).alias("hs")
-        )
+    arr = sketch.select(group_col, "hs")
     j = tuples
     for i, gc in enumerate(group_cols):
         j = j.join(

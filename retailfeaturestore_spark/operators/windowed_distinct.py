@@ -65,11 +65,7 @@ executed as distributed window algebra.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from ..functions.expressions import sql_ident, sql_with
-
-__all__ = ["exact_windowed_distinct", "windowed_distinct_ctes", "MICROS_PER_DAY"]
+__all__ = ["windowed_distinct_ctes", "MICROS_PER_DAY"]
 
 MICROS_PER_DAY = 86_400 * 1_000_000
 
@@ -167,30 +163,3 @@ def windowed_distinct_ctes(
                      + ", ".join(["__e", "__time", *(f"__p.{c} AS {c}" for c in payload), *counts])
                      + " FROM __wd_sum WHERE __kind = 1"),
     ]
-
-
-def exact_windowed_distinct(
-    df: DataFrame,
-    entity_col: str,
-    ts_col: str,
-    key_col: str,
-    windows: dict[str, int],
-    out_prefix: str = "unique",
-) -> DataFrame:
-    """Append ``{out_prefix}_{suffix}`` = exact distinct ``key_col`` count
-    over the both-closed range window ``[t - days, t]`` per entity, as one
-    SQL statement over ``df``.
-
-    ``windows`` maps suffix -> horizon days.  NULL keys are excluded from
-    the count (SQL ``count(DISTINCT ...)`` / ``collect_set`` semantics).
-    All original columns are preserved; one entity-key shuffle feeds every
-    output frame.
-    """
-    cols = [sql_ident(c) for c in df.columns]
-    outputs = [sql_ident(f"{out_prefix}_{s}") for s in windows]
-    ctes = windowed_distinct_ctes(
-        "{src}", sql_ident(entity_col), f"unix_micros(CAST({sql_ident(ts_col)} AS TIMESTAMP))",
-        sql_ident(key_col), windows, cols, outputs,
-    )
-    query = f"SELECT {', '.join(cols + outputs)} FROM __wd_out"
-    return df.sparkSession.sql(sql_with(ctes, query), src=df)

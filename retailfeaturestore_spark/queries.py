@@ -3834,7 +3834,7 @@ def q_approx_customer_overlap_months(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .select(F.col("a.m").alias("group_a"), F.col("b.m").alias("group_b"))
     )
-    est = kmv_pair_overlap(sk, pairs, "m", k=_KMV_K, packed=True)
+    est = kmv_pair_overlap(sk, pairs, "m", k=_KMV_K)
     exact = (
         pairs.join(dm.withColumnRenamed("m", "group_a"), "group_a")
         .join(
@@ -3977,7 +3977,7 @@ def q_approx_customer_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .select(F.col("a.m").alias("group_a"), F.col("b.m").alias("group_b"))
     )
-    return kmv_pair_overlap(sk, pairs, "m", k=_KMV_K, packed=True).select(
+    return kmv_pair_overlap(sk, pairs, "m", k=_KMV_K).select(
         F.col("group_a").alias("month_a"),
         F.col("group_b").alias("month_b"),
         "ku",
@@ -4109,7 +4109,7 @@ def q_approx_customer_retention_months(spark: SparkSession, sf_dir: str) -> Data
         )
     )
     est = kmv_tuple_overlap(
-        sk, trip, ["month_a", "month_b", "month_c"], "m", k=_KMV_K, packed=True
+        sk, trip, ["month_a", "month_b", "month_c"], "m", k=_KMV_K
     )
     exact = (
         trip.join(dm.select(F.col("m").alias("month_a"), "c"), "month_a")
@@ -8402,9 +8402,7 @@ def q_corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup's partial-agg exchange over a handful of (source) groups (four
     hash exchanges in the plan, the fourth carrying ~n_sources rows); the
     Gopher flags ride along map-side.  The judgment itself lives in
-    ``operators/curation.judge_corpus_admission`` — the SAME function the
-    write-path job (``jobs.build_packed_corpus``) packs from, so this
-    audit is literally the job's dry run."""
+    ``operators/curation.judge_corpus_admission``."""
     from .operators.curation import judge_corpus_admission
 
     d = load_table(spark, sf_dir, "documents")

@@ -6,20 +6,17 @@ model artifact name, and the flattened ``feat__*`` vector; files land under
 ``date=YYYY-MM-DD/`` with collision-free ``part-HHMMSS-<uuid8>.parquet``
 names like the reference (``serving/pred_logger.py:53``).
 
-Two writers:
-- ``log_prediction``: the serving-path append (pyarrow, no Spark session —
-  a point write must not pay job-launch latency).  Rows are buffered per
-  log directory and written one parquet file per batch, because even an
-  uncompressed one-row ``write_table`` costs more than the rest of a
-  request.  A batch holds one UTC day and one column set; it is written at
-  ``FLUSH_ROWS`` rows, at the first append after it has been open
-  ``FLUSH_SECONDS``, when a row of another day or column set arrives, on
-  ``flush_predictions()`` and at interpreter exit.  The returned path names
-  the file the row will land in; it exists once that batch is flushed.  A
-  crash loses at most ``FLUSH_ROWS - 1`` rows (one open batch per log
-  directory).
-- ``write_pred_log``: the batch/streaming sink (Spark ``partitionBy`` append)
-  for bulk scoring and foreachBatch streaming.
+The writer, ``log_prediction``, is the serving-path append (pyarrow, no
+Spark session — a point write must not pay job-launch latency).  Rows are
+buffered per log directory and written one parquet file per batch, because
+even an uncompressed one-row ``write_table`` costs more than the rest of a
+request.  A batch holds one UTC day and one column set; it is written at
+``FLUSH_ROWS`` rows, at the first append after it has been open
+``FLUSH_SECONDS``, when a row of another day or column set arrives, on
+``flush_predictions()`` and at interpreter exit.  The returned path names
+the file the row will land in; it exists once that batch is flushed.  A
+crash loses at most ``FLUSH_ROWS - 1`` rows (one open batch per log
+directory).
 """
 
 from __future__ import annotations
@@ -35,10 +32,7 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from pyspark.sql import DataFrame
-
-__all__ = ["FLUSH_ROWS", "FLUSH_SECONDS", "flush_predictions", "log_prediction",
-           "write_pred_log"]
+__all__ = ["FLUSH_ROWS", "FLUSH_SECONDS", "flush_predictions", "log_prediction"]
 
 FLUSH_ROWS = 256
 FLUSH_SECONDS = 1.0
@@ -155,16 +149,3 @@ def _flush_at_exit() -> None:
 
 
 atexit.register(_flush_at_exit)
-
-
-def write_pred_log(preds: DataFrame, base_dir: str, ts_col: str = "ts_served") -> None:
-    """Bulk sink: date-partitioned append (Delta/Iceberg at scale — append
-    mode keeps it idempotent per batch with unique task files)."""
-    from pyspark.sql import functions as F
-
-    (
-        preds.withColumn("date", F.substring(F.col(ts_col), 1, 10))
-        .write.mode("append")
-        .partitionBy("date")
-        .parquet(base_dir)
-    )

@@ -29,8 +29,8 @@ def stage_microbatches(spark, tmp_path, schema: str, batches):
     """Stage one parquet file per micro-batch, written in batch order (the
     file source with maxFilesPerTrigger=1 takes the oldest modification
     time first, ties in listing order; one Spark write per file keeps the
-    times apart), and return the readStream over them.  Shared by the
-    streaming eviction / sessionizer differential tests."""
+    times apart), and return the readStream over them.  Used by the
+    mtable streaming-sink tests."""
     import glob as _glob
     import shutil as _shutil
 

@@ -147,15 +147,21 @@ def test_range_gold_frame_is_built_in_few_py4j_round_trips(spark, tmp_path, monk
     transformations: at most 300 py4j round trips to the JVM before any job
     runs, where a Column-by-Column plan makes thousands."""
     import py4j.clientserver
+    from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
 
     from retailfeaturestore_spark.jobs import _gold_frame
 
     bronze = _many_customers_bronze(spark, tmp_path)
     calls = []
     send = py4j.clientserver.ClientServerConnection.send_command
+    # py4j releases the JVM objects of Python proxies that earlier code
+    # dropped whenever the garbage collector runs; those deletes are not
+    # round trips of this plan.
+    gc_delete = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 
     def counted(self, command):
-        calls.append(command)
+        if not command.startswith(gc_delete):
+            calls.append(command)
         return send(self, command)
 
     monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)

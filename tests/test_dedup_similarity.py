@@ -487,33 +487,33 @@ def test_containment_threshold_is_integer_exact(spark):
 @requires_testdata
 def test_pq_index_append_encodes_with_frozen_codebooks(spark, tmp_path):
     """Incremental index maintenance: append encodes ONLY the new batch
-    against the frozen codebooks (python-replay-exact), old + new rows
-    serve immediately, and the duplicate-id / dim guards refuse loudly."""
+    against the frozen codebooks (python-replay-exact), and old + new rows
+    serve immediately.  The append's guards are pinned in test_pq_mtable."""
     import math
-    import os as _os
 
-    import pytest as _pytest
     from pyspark.sql import functions as F
 
     from retailfeaturestore_spark.io import load_table
     from retailfeaturestore_spark.operators.similarity import (
-        append_pq_index,
-        build_pq_index,
-        load_pq_index,
-        search_pq_index,
+        _pq_meta_mtable,
+        append_pq_index_mtable,
+        build_pq_index_mtable,
+        search_pq_index_mtable,
     )
+    from retailfeaturestore_spark.sources.mtable import MTable
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     n_total = emb.count()
     base = emb.where(F.col("vec_id") < 400)
     extra = emb.where(F.col("vec_id") >= 400)
-    idx = str(tmp_path / "pq_index")
-    build_pq_index(base, idx, m=4, k_codes=8, iters=2)
+    t = MTable(spark, str(tmp_path / "pq_index"))
+    build_pq_index_mtable(base, t, m=4, k_codes=8, iters=2)
+    v = append_pq_index_mtable(t, extra)
 
-    meta2 = append_pq_index(spark, idx, extra)
-    assert meta2["appended_batches"] == 1
-
-    cents, codes, meta = load_pq_index(spark, idx)
+    meta = _pq_meta_mtable(t, v)
+    cents = [[(int(cid), [int(x) for x in vec]) for cid, vec in sub]
+             for sub in meta["codebooks"]]
+    codes = t.read(version=v)
     assert codes.count() == n_total
     scale = float(meta["fixed_point_scale"])
     m, w = int(meta["m"]), int(meta["d_sub"])
@@ -555,17 +555,8 @@ def test_pq_index_append_encodes_with_frozen_codebooks(spark, tmp_path):
     py_best = min(
         float(sum(luts[s][cs[s]] for s in range(m))) for cs in all_codes.values()
     )
-    served = search_pq_index(spark, idx, [(qid, qvec)], k_neighbors=3).collect()
+    served = search_pq_index_mtable(t, [(qid, qvec)], k_neighbors=3).collect()
     assert min(r.adc_dist for r in served) == py_best
-
-    # guards: duplicate ids and wrong dims refuse loudly
-    with _pytest.raises(ValueError, match="already exist"):
-        append_pq_index(spark, idx, extra)
-    badv = spark.createDataFrame([(9001, [0.1, 0.2])], "vec_id long, embedding array<float>")
-    with _pytest.raises(ValueError, match="dims"):
-        append_pq_index(spark, idx, badv)
-    # the commit marker survived all of it
-    assert _os.path.exists(_os.path.join(idx, "codebooks.json"))
 
 
 def test_containment_matches_bruteforce_on_random_corpora(spark):

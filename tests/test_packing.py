@@ -255,112 +255,12 @@ if _HYP:
             assert sum(members) <= cap or len(members) == 1
 
 
-def test_write_packed_shards_one_file_per_shard_with_manifest(spark, tmp_path):
-    """The packing sink: one parquet file per shard dir, manifest written
-    last with exact per-shard chunk/token counts, roundtrip equality."""
-    import glob
-    import json
-
-    from retailfeaturestore_spark.operators.packing import (
-        pack_chunk_text,
-        write_packed_shards,
-    )
-
-    docs = _docs(spark)
-    chunks = pack_chunk_text(docs, max_tokens=MAX_TOKENS, n_shards=N_SHARDS)
-    out = str(tmp_path / "packed")
-    manifest = write_packed_shards(chunks, out)
-
-    on_disk = json.loads((tmp_path / "packed" / "_manifest.json").read_text())
-    assert on_disk == manifest
-    rows = chunks.collect()
-    assert manifest["n_chunks_total"] == len(rows)
-    assert manifest["n_tokens_total"] == sum(r["n_tokens"] for r in rows)
-    for shard_dir in glob.glob(f"{out}/shard=*"):
-        files = [f for f in glob.glob(f"{shard_dir}/*.parquet") if "_" not in f.rsplit("/", 1)[-1][:1]]
-        assert len(files) == 1, f"{shard_dir}: {files}"
-        shard = shard_dir.rsplit("=", 1)[-1]
-        assert str(shard) in manifest["shards"]
-    back = sorted(
-        map(tuple, spark.read.parquet(out).select("shard", "chunk_id", "chunk_text", "n_tokens").collect())
-    )
-    assert back == sorted(
-        (r["shard"], r["chunk_id"], r["chunk_text"], r["n_tokens"]) for r in rows
-    )
-
-
-@requires_testdata
-def test_build_packed_corpus_job_end_to_end(spark, tmp_path):
-    """The corpus write-path job: full admission judgment (canonical dedup,
-    Gopher gates, src0 exclusion, decontamination), packing, sharded sink —
-    manifest totals must equal an independent python recomputation of the
-    admitted token stream, and the audit query's kept-token report must
-    agree with what the job wrote (the audit IS the dry run)."""
-    from retailfeaturestore_spark.io import load_table
-    from retailfeaturestore_spark.jobs import build_packed_corpus
-    from retailfeaturestore_spark.operators.curation import judge_corpus_admission
-    from retailfeaturestore_spark.operators.textops import gopher_quality
-
-    out = str(tmp_path / "corpus")
-    manifest = build_packed_corpus(spark, TESTDATA_SF, out, max_tokens=128, n_shards=4)
-
-    d = load_table(spark, TESTDATA_SF, "documents")
-    flags = {r["doc_id"]: r["gopher_pass"] for r in gopher_quality(d).collect()}
-    rows = {r["doc_id"]: (r["text"], r["source"]) for r in d.collect()}
-
-    def sh3(text):
-        ws = text.split(" ")
-        return {" ".join(ws[i : i + 3]) for i in range(len(ws) - 2)}
-
-    ref = set()
-    for text, source in rows.values():
-        if source == "src0":
-            ref |= sh3(text)
-    canon: dict[str, int] = {}
-    for doc_id in sorted(rows):
-        canon.setdefault(rows[doc_id][0], doc_id)
-    admitted = []
-    for i in sorted(rows):
-        text, source = rows[i]
-        grams = sh3(text)
-        hits = sum(1 for g in grams if g in ref)
-        if (
-            flags[i] == 1
-            and canon[text] == i
-            and source != "src0"
-            and 2 * hits < max(len(grams), 1)
-        ):
-            admitted.append(i)
-    assert admitted, "fixture must admit some documents"
-    total_tokens = sum(len(rows[i][0].split(" ")) for i in admitted)
-    assert manifest["n_tokens_total"] == total_tokens
-    back = spark.read.parquet(out)
-    assert back.count() == manifest["n_chunks_total"]
-    # dry-run agreement: the shared admission judgment (what the audit
-    # query rolls up — built fresh here, NOT via the registry, whose
-    # prepared-plan cache would hand the plan-shape tests an already
-    # executed AQE plan) == what was packed
-    audit = judge_corpus_admission(load_table(spark, TESTDATA_SF, "documents")).collect()
-    assert sum(r["n_words"] for r in audit if r["kept"] == 1) == total_tokens
-
-
 def test_pack_rejects_bad_params(spark):
     docs = _docs(spark)
     with pytest.raises(ValueError):
         pack_chunks(docs, max_tokens=0)
     with pytest.raises(ValueError):
         pack_bins_ffd(docs, n_shards=0)
-
-
-def test_write_packed_shards_rejects_uri_targets(spark):
-    from retailfeaturestore_spark.operators.packing import (
-        pack_chunk_text,
-        write_packed_shards,
-    )
-
-    chunks = pack_chunk_text(_docs(spark), MAX_TOKENS, N_SHARDS)
-    with pytest.raises(ValueError, match="URI target"):
-        write_packed_shards(chunks, "s3a://bucket/corpus")
 
 
 def test_empty_and_null_docs_pack_to_nothing(spark):

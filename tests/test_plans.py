@@ -644,13 +644,13 @@ def test_kmv_sketch_plan_two_exchanges_no_window(spark):
     shape paid a distinct groupBy plus two ranking windows)."""
     import re
 
-    from retailfeaturestore_spark.operators.sketches import kmv_group_sketch
+    from retailfeaturestore_spark.operators.sketches import kmv_group_sketch_packed
 
     df = spark.createDataFrame(
         [("g1", i) for i in range(50)] + [("g2", i) for i in range(5)],
         "g string, v long",
     )
-    plan = formatted_plan(kmv_group_sketch(df, "g", "v", k=8))
+    plan = formatted_plan(kmv_group_sketch_packed(df, "g", "v", k=8))
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 0, plan[:2000]
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2, plan[:2000]
 
@@ -658,7 +658,7 @@ def test_kmv_sketch_plan_two_exchanges_no_window(spark):
 def test_kmv_packed_overlap_plan_two_exchanges_total(spark):
     """r14 packed-sketch contract (VERDICT r13 #4): a pair-overlap pipeline
     consuming the PACKED sketch (``kmv_group_sketch_packed`` +
-    ``kmv_pair_overlap(..., packed=True)``) adds ZERO exchanges beyond the
+    ``kmv_pair_overlap``) adds ZERO exchanges beyond the
     sketch build's own two — the r13 shape exploded the sketch to rows and
     re-collected it inside the estimator (a third exchange) and needed a
     distinct over the exploded rows for the group list (a fourth)."""
@@ -677,23 +677,11 @@ def test_kmv_packed_overlap_plan_two_exchanges_total(spark):
     pairs = spark.createDataFrame(
         [("g1", "g2")], "group_a string, group_b string"
     )
-    # the packed build itself: same 2-exchange / 0-window tournament as
-    # the row form (the explode simply never happens)
-    bplan = formatted_plan(sk)
-    assert len(re.findall(r"\(\d+\) Window\b", bplan)) == 0, bplan[:2000]
-    assert len(re.findall(r"\(\d+\) Exchange", bplan)) == 2, bplan[:2000]
-    # the estimator over the materialized packed sketch (the query shape:
+    # (the build's own 2-exchange tournament is pinned by
+    # test_kmv_sketch_plan_two_exchanges_no_window); the estimator over the materialized packed sketch (the query shape:
     # the sketch is localCheckpoint-ed, consumers read its blocks) adds
     # ZERO hash exchanges — broadcasts + per-row array math only
     skc = sk.localCheckpoint()
-    plan = formatted_plan(kmv_pair_overlap(skc, pairs, "g", k=8, packed=True))
+    plan = formatted_plan(kmv_pair_overlap(skc, pairs, "g", k=8))
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 0, plan[:2000]
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 0, plan[:2000]
-    # row-form results identical: packed is a consumption-shape change only
-    from retailfeaturestore_spark.operators.sketches import kmv_group_sketch
-
-    got = kmv_pair_overlap(skc, pairs, "g", k=8, packed=True).collect()[0]
-    want = kmv_pair_overlap(
-        kmv_group_sketch(df, "g", "v", k=8), pairs, "g", k=8
-    ).collect()[0]
-    assert got == want

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.operators.ranks import (
     exact_ntile,
-    global_row_number,
     range_prefix_sum,
 )
 
@@ -59,15 +58,6 @@ def test_prefix_sum_survives_exchange_reuse_disabled(spark):
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
     want = df.withColumn("ps", F.sum("v").over(w).cast("long")).collect()
     assert sorted(got) == sorted(want)
-
-
-@pytest.mark.parametrize("n_part", [1, 4])
-def test_global_row_number_matches_window(spark, n_part):
-    df = spark.createDataFrame(_rows(250, seed=7), "k long, v long")
-    got = global_row_number(df, [F.col("k").desc()], "rn", num_partitions=n_part)
-    w = Window.orderBy(F.col("k").desc())
-    want = df.withColumn("rn", F.row_number().over(w).cast("long"))
-    assert sorted(got.collect()) == sorted(want.collect())
 
 
 @pytest.mark.parametrize("n,k", [(400, 4), (401, 4), (399, 10), (7, 10), (3, 3)])

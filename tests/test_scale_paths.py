@@ -1,5 +1,6 @@
 """Scale-path techniques: bucketed tables eliminate the entity shuffle,
-salted aggregation spreads whale keys, CSV sink round-trips."""
+the interval-delta distinct engine matches collect_set, CSV sink
+round-trips."""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.io import write_bucketed_table, write_csv
-from retailfeaturestore_spark.operators.skew import salted_agg
 from retailfeaturestore_spark.operators.window_features import build_customer_features
 from retailfeaturestore_spark.plans import formatted_plan
 
@@ -33,23 +33,6 @@ def test_bucketed_bronze_elides_window_exchange(spark, tmp_path):
     assert "hashpartitioning(customer_id" not in plan, plan[:1500]
     # and the result is still correct
     assert feats.count() == 200
-
-
-def test_salted_agg_matches_plain_agg(spark):
-    df = spark.createDataFrame(
-        [(1, 10.0)] * 50 + [(2, 1.0)] * 3, "k int, v double"
-    )
-    out = {
-        r.k: (r.v_sum, r.n)
-        for r in salted_agg(
-            df,
-            "k",
-            {"v_sum": F.sum("v"), "n": F.count(F.lit(1))},
-            lambda c: {"v_sum": F.sum("v_sum"), "n": F.sum("n")}[c],
-            n_salts=8,
-        ).collect()
-    }
-    assert out == {1: (500.0, 50), 2: (3.0, 3)}
 
 
 def test_csv_sink_roundtrip(spark, tmp_path):
@@ -157,15 +140,21 @@ def test_approx_sketches_within_bounds(spark):
 @requires_testdata
 def test_delta_distinct_matches_collect_set(spark):
     from retailfeaturestore_spark.io import load_table
-    from retailfeaturestore_spark.operators.windowed_distinct import (
-        exact_windowed_distinct,
-    )
     from pyspark.sql import Window, functions as F
 
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
+    # the events as feature-family lines: event_type is the distinct key
+    lines = ev.select(
+        "event_id", "user_id", "ts", "event_type",
+        F.lit(False).alias("is_cancel"), F.lit(0.0).alias("line_amount"),
+    )
     got = (
-        exact_windowed_distinct(ev, "user_id", "ts", "event_type", {"1d": 1, "7d": 7})
-        .select("event_id", "unique_1d", "unique_7d")
+        build_customer_features(
+            lines, windows={"1d": 1, "7d": 7}, entity_col="user_id", ts_col="ts",
+            sku_col="event_type", unique_mode="delta",
+        )
+        .select("event_id", F.col("unique_skus_1d").alias("unique_1d"),
+                F.col("unique_skus_7d").alias("unique_7d"))
         .collect()
     )
     us = F.unix_micros("ts")

@@ -8,21 +8,17 @@ import os
 from datetime import datetime
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.ml.scoring import LinearStubModel, ScoredModel, score_batch
 from retailfeaturestore_spark.sources.pred_log import (
     flush_predictions,
     log_prediction,
-    write_pred_log,
 )
 from retailfeaturestore_spark.sources.redis_sink import (
     DictRedis,
     _row_fields,
     materialize_online,
 )
-
-from conftest import requires_testdata
 
 
 def test_redis_field_contract():
@@ -127,14 +123,6 @@ def test_pred_log_single_and_bulk(spark, tmp_path):
     got = spark.read.parquet(str(tmp_path / "preds")).collect()[0]
     assert got.prediction == 1 and got.feat__spend_30d == 1.5
 
-    bulk = spark.createDataFrame(
-        [("2024-01-01T00:00:00+00:00", 1.0, 9, None, 0.5, 0.4, 0, "m1")],
-        "ts_served string, latency_ms double, customer_id int, t_ref string,"
-        "threshold double, probability double, prediction int, model_artifact string",
-    )
-    write_pred_log(bulk, str(tmp_path / "bulk"))
-    assert spark.read.parquet(str(tmp_path / "bulk")).count() == 1
-
 
 def test_score_batch_pandas_udf(spark):
     model = ScoredModel(
@@ -184,72 +172,3 @@ def test_online_feature_service_typed_decode():
             return {}
 
     assert OnlineFeatureService(EmptyClient()).get_snapshot(1) is None
-
-
-def test_zscore_per_entity_grouped_map(spark):
-    from retailfeaturestore_spark.ml.normalize_features import zscore_per_entity
-
-    df = spark.createDataFrame(
-        [(1, 10.0), (1, 20.0), (1, 30.0), (2, 5.0)],
-        "customer_id int, spend double",
-    )
-    out = zscore_per_entity(df, "customer_id", ["spend"]).collect()
-    by = {}
-    for r in out:
-        by.setdefault(r.customer_id, []).append(round(r.spend_z, 6))
-    import math
-    sd = math.sqrt(((10-20)**2 + 0 + (30-20)**2) / 3)
-    assert sorted(by[1]) == [round(-10/sd, 6), 0.0, round(10/sd, 6)]
-    assert by[2] == [0.0]  # single row -> zero variance -> 0
-
-
-def test_weighted_mean_udaf_matches_builtin(spark):
-    from retailfeaturestore_spark.functions.python_udfs import weighted_mean_udaf
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(1, 10.0, 2.0), (1, 20.0, 0.0), (1, 40.0, 2.0), (2, 5.0, 0.0)],
-        "k int, v double, w double",
-    )
-    got = {
-        r.k: r.wm
-        for r in df.groupBy("k").agg(weighted_mean_udaf("v", "w").alias("wm")).collect()
-    }
-    exp = {
-        r.k: r.wm
-        for r in df.groupBy("k")
-        .agg(
-            F.coalesce(
-                F.sum(F.col("v") * F.col("w")) / F.nullif(F.sum("w"), F.lit(0.0)),
-                F.lit(0.0),
-            ).alias("wm")
-        )
-        .collect()
-    }
-    assert got == exp == {1: 25.0, 2: 0.0}
-
-
-@requires_testdata
-def test_word_ngrams_udtf_matches_column_shingles(spark):
-    from retailfeaturestore_spark.functions.python_udfs import WordNGrams
-    from retailfeaturestore_spark.functions.text import shingles
-    from retailfeaturestore_spark.io import load_table
-    from pyspark.sql import functions as F
-
-    spark.udtf.register("word_ngrams", WordNGrams)
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
-    docs.createOrReplaceTempView("docs_50")
-    via_udtf = {
-        (r.doc_id, r.ngram)
-        for r in spark.sql(
-            "SELECT d.doc_id, g.ngram FROM docs_50 d, LATERAL word_ngrams(d.text, 3) g"
-        ).collect()
-    }
-    via_columns = {
-        (r.doc_id, r.ngram)
-        for r in docs.select(
-            "doc_id", F.explode(shingles(F.col("text"), 3)).alias("ngram")
-        ).collect()
-    }
-    assert via_udtf == via_columns
-    assert len(via_udtf) > 0

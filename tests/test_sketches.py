@@ -13,7 +13,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.operators.sketches import (
-    kmv_group_sketch,
+    kmv_group_sketch_packed,
     kmv_hash,
     kmv_pair_overlap,
 )
@@ -57,13 +57,8 @@ def test_sketch_matches_python_and_degrades_to_exact(spark):
         "c": [1, 2, 3],                  # < k: exact set kept whole
     }
     k = 64
-    sk = kmv_group_sketch(_groups(spark, data), "g", "v", k=k)
-    got = {
-        g: sorted(r.h for r in rows)
-        for g, rows in __import__("itertools").groupby(
-            sorted(sk.collect(), key=lambda r: r.g), key=lambda r: r.g
-        )
-    }
+    sk = kmv_group_sketch_packed(_groups(spark, data), "g", "v", k=k)
+    got = {r.g: list(r.hs) for r in sk.collect()}
     for g, vs in data.items():
         assert got[g] == _py_sketch(vs, k), g
     assert len(got["c"]) == 3  # graceful exact degradation
@@ -78,7 +73,7 @@ def test_pair_overlap_matches_python_including_floats(spark):
     }
     k = 64
     df = _groups(spark, data)
-    sk = kmv_group_sketch(df, "g", "v", k=k)
+    sk = kmv_group_sketch_packed(df, "g", "v", k=k)
     pairs = spark.createDataFrame(
         [("a", "b"), ("c", "d"), ("a", "c")], "group_a string, group_b string"
     )
@@ -95,7 +90,7 @@ def test_pair_overlap_matches_python_including_floats(spark):
 def test_exact_groups_give_exact_set_estimates(spark):
     # both groups under k distinct -> union/intersection are EXACT
     data = {"c": list(range(40)), "d": list(range(20, 60))}
-    sk = kmv_group_sketch(_groups(spark, data), "g", "v", k=64)
+    sk = kmv_group_sketch_packed(_groups(spark, data), "g", "v", k=64)
     pairs = spark.createDataFrame([("c", "d")], "group_a string, group_b string")
     r = kmv_pair_overlap(sk, pairs, "g", k=64).collect()[0]
     assert r.union_est == 60.0
@@ -123,7 +118,7 @@ def test_tuple_overlap_matches_python_three_way(spark):
         "d": list(range(5000, 5020)),  # disjoint tiny group
     }
     k = 64
-    sk = kmv_group_sketch(_groups(spark, data), "g", "v", k=k)
+    sk = kmv_group_sketch_packed(_groups(spark, data), "g", "v", k=k)
     trips = spark.createDataFrame(
         [("a", "b", "c"), ("a", "b", "d")], "g1 string, g2 string, g3 string"
     )
@@ -149,5 +144,5 @@ def test_tournament_equals_single_window_topk(spark):
     vals = rnd.sample(range(10**9), 5000)
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v long")
     k = 100
-    got = sorted(r.h for r in kmv_group_sketch(df, "g", "v", k=k, fanout=16).collect())
+    got = list(kmv_group_sketch_packed(df, "g", "v", k=k, fanout=16).collect()[0].hs)
     assert got == _py_sketch(vals, k)

@@ -3,8 +3,6 @@ and the watermark must bound state (late-arrival drop behavior)."""
 
 from __future__ import annotations
 
-import pytest
-
 import shutil
 import uuid
 
@@ -76,102 +74,6 @@ def test_sliding_stream_replay_equals_batch(spark, tmp_path):
         batch_equivalent_counts(spark, SF).select("window_start").distinct().count()
     )
     assert len({k[0] for k in streamed}) > tumbling_days
-
-
-def test_stream_dedup_drops_replayed_duplicates(spark, tmp_path):
-    from retailfeaturestore_spark.streaming.events_stream import dedup_events_stream
-
-    stage = tmp_path / "dup_stream"
-    stage.mkdir()
-    # the same file twice = an at-least-once source replaying every event
-    shutil.copy(f"{SF}/events.parquet", stage / "part-0.parquet")
-    shutil.copy(f"{SF}/events.parquet", stage / "part-1.parquet")
-    stream = read_events_stream(spark, str(stage))
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(dedup_events_stream(stream), name, output_mode="append")
-    q.awaitTermination(120)
-    got = spark.table(name)
-    n_unique = got.select("event_id").distinct().count()
-    assert got.count() == n_unique  # no duplicate ids survived the replay
-    from retailfeaturestore_spark.io import load_table
-    assert n_unique == load_table(spark, SF, "events").count()
-
-
-@pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_stream_interval_join_equals_batch(spark, tmp_path):
-    from retailfeaturestore_spark.streaming.events_stream import (
-        purchase_attribution_stream,
-    )
-    from retailfeaturestore_spark.io import load_table
-
-    stage = tmp_path / "join_stream"
-    stage.mkdir()
-    shutil.copy(f"{SF}/events.parquet", stage / "part-0.parquet")
-    stream = read_events_stream(spark, str(stage))
-    name = f"attr_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(
-        purchase_attribution_stream(stream, within="1 hour"), name, "append"
-    )
-    q.awaitTermination(180)
-    streamed = {
-        (r.purchase_id, r.click_id) for r in spark.table(name).collect()
-    }
-    ev = load_table(spark, SF, "events")
-    from pyspark.sql import functions as F
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"))
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"),
-        F.col("event_id").alias("purchase_id"))
-    batch = {
-        (r.purchase_id, r.click_id)
-        for r in purchases.join(
-            clicks,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 hour")),
-        ).collect()
-    }
-    assert streamed == batch
-    assert len(batch) > 0
-
-
-def test_streaming_session_windows_equal_batch(spark, tmp_path):
-    from retailfeaturestore_spark.streaming.events_stream import (
-        session_window_counts,
-    )
-    from retailfeaturestore_spark.io import load_table
-    from pyspark.sql import functions as F
-
-    stage = tmp_path / "sess_stream"
-    stage.mkdir()
-    shutil.copy(f"{SF}/events.parquet", stage / "part-0.parquet")
-    stream = read_events_stream(spark, str(stage))
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(
-        session_window_counts(stream, gap="30 minutes"), name, output_mode="complete"
-    )
-    q.awaitTermination(180)
-    streamed = {
-        (r.session_start, r.user_id): (r.n_events, r.value_sum)
-        for r in spark.table(name).collect()
-    }
-    ev = load_table(spark, SF, "events")
-    batch = {
-        (r["win"]["start"], r.user_id): (r.n_events, r.value_sum)
-        for r in ev.groupBy(
-            F.session_window("ts", "30 minutes").alias("win"), F.col("user_id")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(F.round(F.col("value") * 1e6).cast("long")).cast("double") / 1e6
-             ).alias("value_sum"),
-        )
-        .collect()
-    }
-    assert streamed == batch
-    assert len(batch) > 0
 
 
 def test_stream_upsert_gold_equals_batch_latest(spark, tmp_path):
@@ -363,43 +265,3 @@ def test_stream_to_online_to_serving_closes_the_loop(spark, tmp_path):
         assert snap["t_ref"] == ts  # meta:t_ref decodes to the event time
     cold = svc.get_snapshot(cold_id)
     assert cold is not None and cold["value"] == 42.5  # offline fallback
-
-
-def test_stream_dedup_catches_time_jittered_redelivery(spark, tmp_path):
-    """The dropDuplicatesWithinWatermark upgrade (r6): a redelivered event
-    whose timestamp was jittered (clock skew between redeliveries — common
-    with at-least-once producers) must still dedup on the id.  A plain
-    dropDuplicates([event_id, ts]) — the old workaround that keeps state
-    eviction — would pass both copies through."""
-    import pandas as pd
-
-    stage = tmp_path / "jitter_stream"
-    stage.mkdir()
-    base = pd.read_parquet(f"{SF}/events.parquet").head(50)
-    # testdata generations ship ts as long-ns or timestamp; normalize both
-    # staged files to one timestamp physical type so the stream schema is
-    # consistent across them
-    if not str(base["ts"].dtype).startswith("datetime64"):
-        base["ts"] = pd.to_datetime(base["ts"], unit="ns")
-    base["ts"] = base["ts"].astype("datetime64[us]")
-    jit = base.copy()
-    # cast AFTER the addition: pandas timedelta arithmetic silently
-    # promotes datetime64[us] back to [ns], and two different parquet
-    # physical types in one stream fail the fixed stream schema
-    jit["ts"] = (jit["ts"] + pd.Timedelta(seconds=7)).astype("datetime64[us]")
-    base.to_parquet(stage / "part-0.parquet")
-    jit.to_parquet(stage / "part-1.parquet")
-
-    from retailfeaturestore_spark.streaming.events_stream import (
-        dedup_events_stream,
-    )
-
-    stream = read_events_stream(spark, str(stage))
-    name = f"jitter_{uuid.uuid4().hex[:8]}"
-    q = stream_to_memory(
-        dedup_events_stream(stream), name, output_mode="append"
-    )
-    q.awaitTermination(120)
-    got = spark.table(name)
-    assert got.count() == 50  # one row per id, jittered copies dropped
-    assert got.select("event_id").distinct().count() == 50

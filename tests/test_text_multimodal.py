@@ -87,30 +87,6 @@ def test_multimodal_raise_stub_marks_real_decoder_seam(spark):
         extract_features(d, decode_stub="raise").collect()
 
 
-def test_frame_sample_chunks_payload(spark):
-    from retailfeaturestore_spark.operators.multimodal import frame_sample
-
-    d = attach_payload(docs(spark, [(1, "x" * 1000), (2, "short")]))
-    frames = frame_sample(d, frame_size=64, stride=256, max_frames=8).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    assert len(by_doc[1]) == 4            # 1000 bytes / 256 stride -> 4 frames
-    assert all(r.frame_len == 64 for r in by_doc[1][:3])
-    assert len(by_doc[2]) == 1 and by_doc[2][0].frame_len == 5
-
-
-def test_resize_stub_deterministic_downsample(spark):
-    from retailfeaturestore_spark.operators.multimodal import resize_stub
-
-    d = attach_payload(docs(spark, [(1, "abcdefgh" * 100), (2, "tiny")]))
-    out = {r.doc_id: r for r in resize_stub(d, target_bytes=32).collect()}
-    assert out[1].n_bytes_out == 32
-    assert out[2].n_bytes_out == 4        # smaller than target -> unchanged
-    out2 = {r.doc_id: r.resized for r in resize_stub(d, target_bytes=32).collect()}
-    assert bytes(out2[1]) == bytes(out[1].resized)  # deterministic
-
-
 def _ppm_frame(spark, images):
     """(doc_id, payload) frame of encoded PPM bytes."""
     return spark.createDataFrame(images, "doc_id long, payload binary")
@@ -153,30 +129,6 @@ def test_extract_features_decodes_real_ppm_distributed(spark):
     # [w, h, n_pixels, meanR, meanG, meanB, min_luma, max_luma]
     assert rows[1].features == [2.0, 1.0, 2.0, 127.5, 127.5, 0.0, 85.0, 85.0]
     assert rows[2].features == [1.0, 1.0, 1.0, 100.0, 100.0, 100.0, 100.0, 100.0]
-
-
-def test_resize_ppm_real_nearest_neighbor(spark):
-    """Real resize through the stub's documented plug point: decode ->
-    nearest-neighbor resample -> re-encode, asserted pixel-exact."""
-    from retailfeaturestore_spark.functions.ppm import decode_ppm, encode_ppm
-    from retailfeaturestore_spark.operators.multimodal import resize_ppm
-
-    # 4x4 image with distinct quadrant colors (2x2 blocks)
-    quad = {(0, 0): (255, 0, 0), (1, 0): (0, 255, 0),
-            (0, 1): (0, 0, 255), (1, 1): (255, 255, 0)}
-    rgb = bytearray()
-    for y in range(4):
-        for x in range(4):
-            rgb += bytes(quad[(x // 2, y // 2)])
-    img = encode_ppm(4, 4, bytes(rgb))
-    out = resize_ppm(_ppm_frame(spark, [(7, img)]), out_w=2, out_h=2).collect()
-    assert len(out) == 1 and out[0].n_bytes_out == len(bytes(out[0].resized))
-    w, h, small = decode_ppm(bytes(out[0].resized))
-    assert (w, h) == (2, 2)
-    # nearest-neighbor picks the top-left pixel of each quadrant
-    assert small == bytes(
-        quad[(0, 0)] + quad[(1, 0)] + quad[(0, 1)] + quad[(1, 1)]
-    )
 
 
 def test_pii_scrub_kinds_order_and_counts(spark):
