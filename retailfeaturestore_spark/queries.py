@@ -957,10 +957,6 @@ from .operators.dedup import (  # noqa: E402
     connected_components,
     dedup_exact,
     jaccard_pairs_exact,
-    minhash_candidate_pairs,
-    minhash_signatures,
-    posting_lists,
-    shingle_docs,
     simhash_pairs,
     simhash_signatures,
 )
@@ -2152,7 +2148,6 @@ def q_multimodal_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # M6c — streaming batch-equivalent + training-set composite (J1 + full M3)
 # ---------------------------------------------------------------------------
 
-from .ml.training import build_training_set  # noqa: E402
 from .streaming.events_stream import batch_equivalent_counts  # noqa: E402
 
 _TUMBLING_ORACLE = """

@@ -6,8 +6,12 @@ snapshot the Spark jobs materialize — exactly the reference's architecture:
 
 - offline: lazily-cached gold parquet -> per-entity as-of lookup
   (``serving/feature_service.py:19-46``: full-frame cache ``:26-30``,
-  ``refresh()`` ``:32-34``, time-travel filter+last ``:36-46``), here an
-  entity-sorted frame searched by binary search;
+  ``refresh()`` ``:32-34``, time-travel filter+last ``:36-46``), here
+  entity-sorted column arrays searched by binary search.  ``refresh()``
+  reloads only when gold's file set changed, by a fingerprint of each
+  file's path, inode, size and mtime; the one change it cannot see is a
+  same-size in-place rewrite within one ``mtime_ns`` tick on the same
+  inode, which Spark's writes (new file names per job) never make;
 - online: hash-store point get with typed decode — float-parse with string
   fallback, ``meta:*`` extraction (``serving/feature_service.py:69-89``);
 - vector alignment ``row_to_X``: the model-input rule of
@@ -24,6 +28,7 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -40,59 +45,102 @@ __all__ = [
 ]
 
 
+class _Snapshot(NamedTuple):
+    key: tuple          # gold's file set when it was listed, see _list_gold
+    ids: np.ndarray     # entity ids, sorted
+    ts: np.ndarray      # timestamps as int64 ns, sorted within an entity
+    columns: list       # (name, array, is_ts) per column, in gold's order
+
+
 class OfflineFeatureService:
     """Point-in-time feature lookup over the published gold parquet.
 
-    The snapshot is held sorted by ``(entity, ts)`` together with the entity
-    ids and the timestamps (int64 ns) as numpy arrays, so a lookup is two
-    binary searches and one row read.  The three are swapped in as one
-    tuple: a lookup running during ``refresh()`` sees the old snapshot or the
-    new one, never a mix."""
+    The snapshot holds gold sorted by ``(entity, ts)`` as one numpy array
+    per column, with the entity ids and the timestamps (int64 ns) as the
+    search keys, so a lookup is two binary searches and one read per column.
+    It also holds the fingerprint of the file set it was loaded from, and
+    ``refresh()`` reads no file while that fingerprint is unchanged.  All of
+    it is swapped in as one tuple: a lookup running during ``refresh()``
+    sees the old snapshot or the new one, never a mix."""
 
     def __init__(self, gold_dir: str, entity_col: str = "customer_id", ts_col: str = "t_ref"):
         self.gold_dir = gold_dir
         self.entity_col = entity_col
         self.ts_col = ts_col
-        self._snapshot: tuple[pd.DataFrame, np.ndarray, np.ndarray] | None = None
+        self._snapshot: _Snapshot | None = None
 
-    def _load(self) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
+    def _list_gold(self) -> tuple[list[Path], tuple]:
+        """Gold's parquet files and their fingerprint, the sorted
+        ``(path, st_ino, st_size, st_mtime_ns)`` of each.  A Spark write
+        names its files after its job, so a rewritten partition shows as
+        new paths, and a file rewritten in place shows a new size or mtime.
+        The one change it cannot see is a same-size in-place rewrite within
+        one ``mtime_ns`` tick on the same inode.  The files are stat'ed
+        before they are read, so a snapshot is never older than its
+        fingerprint."""
         files = sorted(Path(self.gold_dir).rglob("*.parquet"))
+        key = []
+        for f in files:
+            st = f.stat()
+            key.append((str(f), st.st_ino, st.st_size, st.st_mtime_ns))
+        return files, tuple(key)
+
+    def _load(self, files: list[Path], key: tuple) -> _Snapshot:
         if not files:
             raise FileNotFoundError(f"no parquet under {self.gold_dir}")
         tables = [pq.ParquetFile(f).read() for f in files]
         df = pa.concat_tables(tables, promote_options="default").to_pandas()
         df = df.sort_values([self.entity_col, self.ts_col], kind="stable", ignore_index=True)
+        columns = []
+        for name, s in df.items():
+            # datetimes are kept as int64 ns and boxed per lookup, as
+            # ``Series.to_dict`` boxes them; every other column's ``item()``
+            # is already the Python value it gives
+            is_ts = isinstance(s.dtype, np.dtype) and s.dtype.kind == "M"
+            a = s.to_numpy("datetime64[ns]").view("int64") if is_ts else s.to_numpy()
+            columns.append((name, a, is_ts))
         ts = df[self.ts_col].to_numpy("datetime64[ns]").view("int64")
-        return df, df[self.entity_col].to_numpy(), ts
+        return _Snapshot(key, df[self.entity_col].to_numpy(), ts, columns)
 
-    def _current(self) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
+    def _current(self) -> _Snapshot:
         if self._snapshot is None:
-            self._snapshot = self._load()
+            self._snapshot = self._load(*self._list_gold())
         return self._snapshot
 
     def refresh(self) -> int:
-        """Reload the snapshot cache; returns row count
-        (``serving/feature_service.py:32-34`` / ``/refresh`` endpoint parity).
-        The new snapshot is built before it replaces the old one, so a reload
-        that raises leaves the previous snapshot serving."""
-        self._snapshot = self._load()
-        return len(self._snapshot[0])
+        """Reload the snapshot cache if gold's files changed; returns the
+        row count (``serving/feature_service.py:32-34`` / ``/refresh``
+        endpoint parity).  An unchanged fingerprint (see ``_list_gold``)
+        returns the current count without reading a file.  A changed one
+        builds the new snapshot before it replaces the old one, so a load
+        that raises leaves the previous snapshot and its fingerprint
+        serving, and the next call tries again."""
+        files, key = self._list_gold()
+        snap = self._snapshot
+        if snap is None or snap.key != key:
+            snap = self._snapshot = self._load(files, key)
+        return len(snap.ids)
 
     def row_count(self) -> int:
-        return len(self._current()[0])
+        return len(self._current().ids)
 
     def get_snapshot(self, entity_id, as_of=None) -> dict | None:
-        """Latest row for the entity with ``ts <= as_of`` (None -> latest).
-        Gold's ``(entity, t_ref)`` keys are not unique (one row per bronze
-        line, ROADMAP Direction 5): a tie goes to the last of the tied rows
-        in file order, which the stable sort keeps."""
-        df, ids, ts = self._current()
+        """Latest row for the entity with ``ts <= as_of`` (None -> latest),
+        as ``Series.to_dict()`` of that gold row would give it: gold's
+        column order and Python ``int``/``float``/``str``/``None`` and
+        ``pd.Timestamp`` values.  Gold's ``(entity, t_ref)`` keys are not
+        unique (one row per bronze line, ROADMAP Direction 5): a tie goes to
+        the last of the tied rows in file order, which the stable sort
+        keeps."""
+        _, ids, ts, columns = self._current()
         lo, hi = ids.searchsorted(entity_id, "left"), ids.searchsorted(entity_id, "right")
         if as_of is not None:
             hi = lo + ts[lo:hi].searchsorted(pd.Timestamp(as_of).value, "right")
         if hi == lo:
             return None
-        return df.iloc[hi - 1].to_dict()
+        i = hi - 1
+        return {name: pd.Timestamp(a.item(i)) if is_ts else a.item(i)
+                for name, a, is_ts in columns}
 
 
 class OnlineFeatureService:

@@ -22,6 +22,7 @@ directory).
 from __future__ import annotations
 
 import atexit
+import functools
 import sys
 import threading
 import time
@@ -94,6 +95,12 @@ def _appender(base_dir: str) -> _Appender:
     return a
 
 
+@functools.lru_cache(maxsize=64)
+def _feature_columns(names: tuple[str, ...]) -> tuple[str, ...]:
+    """The ``feat__*`` column names of one feature contract, built once."""
+    return tuple(f"feat__{name}" for name in names)
+
+
 def log_prediction(
     base_dir: str,
     customer_id: int,
@@ -119,9 +126,9 @@ def log_prediction(
         "model_artifact": model_artifact,
     }
     features = features or {}
-    for name, val in features.items():
-        row[f"feat__{name}"] = float(val)
-    return _appender(base_dir).append(row, (now.date().isoformat(), tuple(features)), now)
+    names = tuple(features)
+    row.update(zip(_feature_columns(names), map(float, features.values())))
+    return _appender(base_dir).append(row, (now.date().isoformat(), names), now)
 
 
 def flush_predictions() -> None:

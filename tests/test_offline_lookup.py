@@ -1,10 +1,13 @@
 """Serving lookups against independent oracles: the indexed offline as-of
-lookup against a pandas mask over the gold files, a reload racing the
-lookups, and the online ``meta:t_ref`` decode against ``pd.to_datetime``."""
+lookup against a pandas mask over the gold files, a refresh after each kind
+of gold change against a cold load, a reload racing the lookups, and the
+online ``meta:t_ref`` decode against ``pd.to_datetime``."""
 
 from __future__ import annotations
 
 import math
+import os
+import shutil
 import tempfile
 import threading
 import time
@@ -12,9 +15,12 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from retailfeaturestore_spark.serving import feature_service
 from retailfeaturestore_spark.serving.feature_service import (
     FallbackFeatureService,
     OfflineFeatureService,
@@ -152,6 +158,98 @@ def test_reload_while_requests_are_running(tmp_path):
     assert not th.is_alive()
     assert bad == [] and n > 0
     assert set(reloads) == {40, 65}
+
+
+QUERIES = [(c, a) for c in range(0, 10)
+           for a in (None, DAY0, DAY0 + pd.Timedelta(days=4), DAY0 + pd.Timedelta(days=12))]
+
+
+def answers(svc: OfflineFeatureService) -> list[dict | None]:
+    return [svc.get_snapshot(*q) for q in QUERIES]
+
+
+def count_file_reads(monkeypatch) -> list:
+    reads = []
+    real = feature_service.pq.ParquetFile
+
+    def counted(path, *args, **kwargs):
+        reads.append(path)
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(feature_service.pq, "ParquetFile", counted)
+    return reads
+
+
+def test_refresh_without_a_file_change_reads_no_file(tmp_path, monkeypatch):
+    gold_version(tmp_path, 1)
+    reads = count_file_reads(monkeypatch)
+    svc = OfflineFeatureService(str(tmp_path))
+    assert svc.refresh() == 65 and len(reads) == 3
+    before = answers(svc)
+    assert svc.refresh() == 65 and svc.row_count() == 65
+    assert len(reads) == 3
+    assert all(same(g, w) for g, w in zip(answers(svc), before))
+
+
+def add_partition(root: Path) -> None:
+    gold_version(root / "new", 2)
+    shutil.move(root / "new" / "date=2011-01-01", root / "date=2011-01-09")
+    shutil.rmtree(root / "new")
+
+
+def delete_partition(root: Path) -> None:
+    shutil.rmtree(root / "date=2011-01-02")
+
+
+def replace_under_new_name(root: Path) -> None:
+    """As a Spark dynamic overwrite does: the new file has the job's name."""
+    part = root / "date=2011-01-02"
+    pd.read_parquet(part / "part-0.parquet").assign(spend_30d=-1.0).to_parquet(
+        part / "part-00000-3f9c.c000.parquet", index=False)
+    os.remove(part / "part-0.parquet")
+
+
+def rewrite_in_place(root: Path) -> None:
+    """Same path and inode, other content; the fingerprint sees the size."""
+    f = root / "date=2011-01-02" / "part-0.parquet"
+    st = f.stat()
+    df = pd.read_parquet(f)
+    pd.concat([df, df.assign(spend_30d=-1.0)], ignore_index=True).to_parquet(f, index=False)
+    assert f.stat().st_ino == st.st_ino and f.stat().st_size != st.st_size
+
+
+@pytest.mark.parametrize("change", [add_partition, delete_partition,
+                                    replace_under_new_name, rewrite_in_place])
+def test_refresh_after_a_change_equals_a_cold_load(tmp_path, change):
+    gold_version(tmp_path, 1)
+    svc = OfflineFeatureService(str(tmp_path))
+    before = answers(svc)
+    change(tmp_path)
+    cold = OfflineFeatureService(str(tmp_path))
+    assert svc.refresh() == cold.row_count()
+    got, want = answers(svc), answers(cold)
+    assert all(same(g, w) for g, w in zip(got, want)), change.__name__
+    assert not all(same(g, b) for g, b in zip(got, before)), "the change moved no answer"
+
+
+def test_failed_load_keeps_the_snapshot_and_the_next_refresh_retries(tmp_path):
+    gold_version(tmp_path, 1)
+    svc = OfflineFeatureService(str(tmp_path))
+    before = answers(svc)
+    bad = tmp_path / "date=2011-01-09" / "part-0.parquet"
+    bad.parent.mkdir()
+    bad.write_bytes(b"not a parquet file")
+    for _ in range(2):  # a failed load is not remembered as loaded
+        with pytest.raises(pa.ArrowInvalid):
+            svc.refresh()
+        assert svc.row_count() == 65
+        assert all(same(g, w) for g, w in zip(answers(svc), before))
+    gold_version(tmp_path / "new", 2)
+    shutil.copy(tmp_path / "new" / "date=2011-01-01" / "part-0.parquet", bad)
+    shutil.rmtree(tmp_path / "new")
+    cold = OfflineFeatureService(str(tmp_path))
+    assert svc.refresh() == cold.row_count() > 65
+    assert all(same(g, w) for g, w in zip(answers(svc), answers(cold)))
 
 
 def old_decode(v):
