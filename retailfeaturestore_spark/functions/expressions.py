@@ -1,7 +1,7 @@
 """Scalar expression helpers mirroring the reference's pandas idioms.
 
 All of these are pure Column expressions — they stay inside whole-stage
-codegen, no Python in the hot path (SURVEY.md §2.2 P7/P8/P11/P12).
+codegen, no Python in the hot path (SURVEY.md §2.2).
 """
 
 from __future__ import annotations
@@ -10,9 +10,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "guarded_div",
-    "clip",
-    "indicator",
     "not_null_filter",
     "cents",
     "from_cents",
@@ -69,27 +66,6 @@ def from_cents(col: Column, scale: int = 2) -> Column:
 def money_sum(col: Column, scale: int = 2) -> Column:
     """groupBy form: ``sum(cents(x)) / 10^scale`` (double)."""
     return from_cents(F.sum(cents(col, scale)), scale)
-
-
-def guarded_div(num: Column, denom: Column) -> Column:
-    """``num / max(denom-if-positive, 1)``.
-
-    Parity with the reference's guarded ratio idiom
-    ``denom = x.where(x > 0, other=1); num / denom``
-    (``jobs/build_feature_views.py:49-50,53`` — P11): a zero or negative
-    denominator is replaced by 1, never producing null/inf.
-    """
-    return num / F.when(denom > 0, denom).otherwise(F.lit(1.0))
-
-
-def clip(col: Column, lo: float, hi: float) -> Column:
-    """``.clip(lo, hi)`` (``jobs/build_feature_views.py:54`` — P12)."""
-    return F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
-
-
-def indicator(pred: Column) -> Column:
-    """Boolean predicate -> 0/1 int (``jobs/build_feature_views.py:14`` — P8)."""
-    return pred.cast("int")
 
 
 def not_null_filter(df: DataFrame, *cols: str) -> DataFrame:

@@ -29,7 +29,6 @@ __all__ = [
     "load_table_parallel",
     "load_tables",
     "write_date_partitioned",
-    "write_bucketed_table",
     "write_csv",
     "DEFAULT_SF_DIR",
 ]
@@ -203,31 +202,6 @@ def write_date_partitioned(
         .partitionBy("date")
         .parquet(path)
     )
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed + sorted table at rest: the 100 TB trick that removes the
-    entity-key shuffle from every downstream window/join.
-
-    Writing bronze bucketed by ``customer_id`` (and sorted by event time)
-    means the feature build's ``Window.partitionBy(customer_id)`` reads
-    pre-clustered data — Catalyst elides the Exchange entirely (asserted in
-    tests/test_plans.py).  On a cluster this is Delta/Iceberg clustering or
-    Hive bucketing; the plan effect is identical.
-    """
-    w = df.write.mode(mode).format("parquet")
-    if sort_col is not None:
-        w = w.bucketBy(n_buckets, bucket_col).sortBy(bucket_col, sort_col)
-    else:
-        w = w.bucketBy(n_buckets, bucket_col)
-    w.saveAsTable(table_name)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -319,8 +319,6 @@ def materialize_online_job(
     feature_cols: list[str],
     client_factory,
     onehot_categories: list[str] | None = None,
-    limit: int | None = None,
-    ttl_seconds: int | None = None,
 ) -> int:
     """Gold -> deterministic latest-per-customer (A4) -> hash-store sink (S5).
     Returns the number of entities materialized, as counted by the sink."""
@@ -328,14 +326,11 @@ def materialize_online_job(
 
     gold = spark.read.parquet(gold_path)
     latest = latest_per_key(gold, "customer_id", "t_ref", "t_ref")
-    if limit:
-        latest = latest.limit(limit)
     return materialize_online(
         latest,
         feature_cols,
         onehot_categories=onehot_categories,
         client_factory=client_factory,
-        ttl_seconds=ttl_seconds,
     )
 
 

@@ -1,105 +1,14 @@
-"""Incremental table maintenance: upsert-by-key and keyed table diff.
+"""Keyed table diff: the audit between two versions of a table.
 
-The reference materializes by full overwrite-on-rerun (SURVEY.md §4.1
-idempotence row); a production gold table wants MERGE semantics.
-``upsert_latest`` is that MERGE on an mtable (``sources.mtable``): the
-batch reduces to its latest row per key (the A4 single-window pass), the
-winners that beat the stored row go through ``MTable.merge_upsert``, and a
-partitioned table rewrites only the partitions the updates touch — one
-atomic manifest commit, readers snapshot-isolated.  ``table_diff`` is the
-keyed audit between two versions of a table.
+``MTable.diff`` runs it over two snapshots of an mtable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .pit import latest_per_key
-
-__all__ = ["upsert_latest", "table_diff"]
-
-
-def upsert_latest(
-    spark: SparkSession,
-    table_path: str,
-    updates: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    tiebreak_col: str | None = None,
-    partition_col: str | None = None,
-) -> int:
-    """Merge ``updates`` into the mtable at ``table_path``: for each key,
-    the row with the greatest (ts, tiebreak) wins.  Returns the row count
-    after the merge.
-
-    Each call is one atomic manifest commit through
-    :meth:`..sources.mtable.MTable.merge_upsert`; readers are
-    snapshot-isolated for the whole apply window.  An update row that TIES
-    the stored row (equal ts and tiebreak) wins, so the merge is
-    deterministic and replay-idempotent.
-
-    With no table at ``table_path``, the first call commits the batch's
-    latest-per-key rows as version 1 (``MTable.write``, partitioned by
-    ``partition_col`` when given).  A path that holds files but no
-    mtable manifest raises ``ValueError``: the merge never starts a new
-    table beside existing data.
-    """
-    tb = tiebreak_col or ts_col
-    from ..sources.mtable import MTable, _fs, _jpath
-
-    t = MTable(spark, table_path)
-    cand = latest_per_key(updates, keys, ts_col, tb)
-    cur = t._latest()
-    if cur is None:
-        fs, jvm = _fs(spark, t.path)
-        root = _jpath(jvm, t.path)
-        # data/ and _manifest/ alone are residue of a first write that
-        # crashed before its manifest commit: invisible to readers, safe
-        # to write over
-        if fs.exists(root) and any(
-            st.getPath().getName() not in ("data", "_manifest")
-            for st in fs.listStatus(root)
-        ):
-            raise ValueError(
-                f"{table_path} holds files but no mtable manifest; "
-                "convert it with MTable.write before merging into it"
-            )
-        t.write(cand, partition_by=partition_col)
-        return t.read().count()
-    # keep only the batch winners that beat (or miss) the stored row for
-    # their key — merge_upsert replaces matched keys and appends new ones,
-    # all in one manifest commit against the version read here
-    ex = t.read().select(
-        *keys,
-        F.col(ts_col).alias("__ex_ts"),
-        F.col(tb).alias("__ex_tb"),
-    )
-    beats = (
-        F.col("__ex_ts").isNull()
-        | (F.col(ts_col) > F.col("__ex_ts"))
-        | ((F.col(ts_col) == F.col("__ex_ts")) & (F.col(tb) >= F.col("__ex_tb")))
-    )
-    winners = (
-        cand.join(ex, on=list(keys), how="left")
-        .where(beats)
-        .drop("__ex_ts", "__ex_tb")
-    )
-    if t._logical_pby(cur[1]) is not None:
-        # partitioned table: keyed merge rewrites only touched partitions
-        pval = F.col(partition_col) if partition_col is not None else None
-        t.merge_upsert(winners, keys=list(keys), partition_col_value=pval)
-    else:
-        # unpartitioned table: survivors + winners as one atomic
-        # whole-table version (there is no partition grain to scope the
-        # rewrite to)
-        survivors = t.read().join(
-            F.broadcast(winners.select(*keys).distinct()),
-            on=list(keys),
-            how="left_anti",
-        )
-        t.write(survivors.unionByName(winners.select(*survivors.columns)))
-    return t.read().count()
+__all__ = ["table_diff"]
 
 
 def table_diff(
@@ -128,8 +37,7 @@ def table_diff(
     Shape: ONE full-outer join on the key (both sides shuffle once, the
     standard co-partitioned diff); per-column comparison is null-safe
     (``<=>``) column algebra — no row serialization, no UDF.  At scale,
-    bucket both versions by the key to elide the exchanges entirely
-    (``io.write_bucketed_table``).
+    bucket both versions by the key to elide the exchanges entirely.
     """
     # `is None`, not truthiness: an explicit empty list means "classify
     # added/removed only" and must not auto-derive the shared columns.

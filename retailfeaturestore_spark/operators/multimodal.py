@@ -1,46 +1,20 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Extension surface (BASELINE.json north star): image/audio/video content is
-carried as ``binary`` columns with a typed metadata struct; decode /
-feature-extract run as Arrow-batched ``mapInPandas`` stages.  The actual
-media codecs are NOT available in this environment, so the decode step is
-STUBBED (clearly marked below): ``decode_stub='fake'`` produces a
-deterministic digest-derived feature vector so the Spark-side plumbing —
-schema, batching, partitioning, UDF signature — is real and tested;
-``decode_stub='raise'`` shows where a real libjpeg/ffmpeg call goes.
+carried as a ``binary`` column with a typed metadata struct.  No query
+decodes media, so no codec lives here.
 
 At 100 TB the payload column dominates IO: keep it OUT of shuffle keys and
-aggregations (metadata-only exchanges), read it only in the final mapInPandas
-stage, and size ``spark.sql.files.maxPartitionBytes`` so one Arrow batch of
-payloads fits executor memory.
+aggregations (metadata-only exchanges), and project it away wherever only
+metadata is read (``payload_meta``: the scan's ReadSchema drops it).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-__all__ = [
-    "attach_payload",
-    "payload_meta",
-    "extract_features",
-    "extract_audio_features",
-]
-
-FEATURE_DIM = 8
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("features", T.ArrayType(T.DoubleType())),
-    ]
-)
+__all__ = ["attach_payload", "payload_meta"]
 
 
 def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -71,183 +45,3 @@ def payload_meta(docs_with_payload: DataFrame, id_col: str = "doc_id") -> DataFr
         F.col("media_meta.checksum").alias("checksum"),
         F.col("media_meta.mime").alias("mime"),
     )
-
-
-def extract_features(
-    docs_with_payload: DataFrame,
-    id_col: str = "doc_id",
-    decode_stub: str = "fake",
-) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads (mapInPandas).
-
-    ``decode_stub='fake'``: deterministic FEATURE_DIM-vector derived from the
-    payload bytes (byte-sum buckets) — exercises the full batch path.
-    ``decode_stub='ppm'``: a REAL decode — payloads are parsed as PPM (P6)
-    images with the pure-stdlib codec (``functions.ppm``) and the features
-    are actual image statistics ``[w, h, n_pixels, mean R, mean G, mean B,
-    min luma, max luma]`` — the end-to-end proof of the seam on real bytes.
-    ``decode_stub='png'``: same REAL decode for the most common compressed
-    format — pure-stdlib zlib inflate + scanline unfiltering
-    (``functions.png``), identical feature statistics and failure surface.
-    ``decode_stub='bmp'``: the third real codec — 24-bit uncompressed
-    Windows DIB (``functions.bmp``), same statistics and failure surface.
-    ``decode_stub='image'``: magic-byte dispatch between the real codecs
-    per row (PNG / BMP / PPM) — a mixed-format media column at ingest.
-    ``decode_stub='raise'``: the seam where a general media decoder
-    (video/audio: ffmpeg et al.) plugs in; raises NotImplementedError
-    because those codec libraries are not available in this environment.
-    """
-    if decode_stub not in ("fake", "ppm", "png", "bmp", "image", "raise"):
-        raise ValueError(f"unknown decode_stub: {decode_stub}")
-
-    def _rgb_features(b: bytes) -> list[float]:
-        from ..functions.bmp import bmp_to_rgb
-        from ..functions.png import png_to_rgb
-        from ..functions.ppm import decode_ppm
-
-        b = bytes(b)
-        if decode_stub == "png" or (
-            decode_stub == "image" and b.startswith(b"\x89PNG")
-        ):
-            w, h, rgb = png_to_rgb(b)
-        elif decode_stub == "bmp" or (
-            decode_stub == "image" and b.startswith(b"BM")
-        ):
-            w, h, rgb = bmp_to_rgb(b)
-        else:
-            w, h, rgb = decode_ppm(b)
-        n = w * h
-        # vectorized over the pixel buffer (VERDICT r9 "what's wrong" #1:
-        # the per-pixel python loop here was the last row/element-at-a-time
-        # loop in the data plane; measured 14x faster on a 512x512 image —
-        # 234 ms -> 17 ms).  All-integer numpy sums, so the emitted floats
-        # are bit-identical to the loop's.
-        import numpy as np
-
-        px = np.frombuffer(bytes(rgb), dtype=np.uint8).reshape(-1, 3)
-        sums = px.sum(axis=0, dtype=np.int64)
-        luma = px.sum(axis=1, dtype=np.int64)
-        return [
-            float(w), float(h), float(n),
-            int(sums[0]) / n, int(sums[1]) / n, int(sums[2]) / n,
-            int(luma.min()) / 3.0, int(luma.max()) / 3.0,
-        ]
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decode_stub == "raise":
-                # STUB: real implementation decodes pdf["payload"] with a
-                # media library (unavailable here by design).  Still-image
-                # formats are covered by the real stdlib codecs below; this
-                # seam remains only for video/audio containers.
-                raise NotImplementedError(
-                    "media decode requires codec libraries not present in "
-                    "this environment; use decode_stub='fake', 'ppm', "
-                    "'png', 'bmp', or 'image'"
-                )
-            payloads = pdf["payload"]
-            n_bytes = payloads.map(len)
-            if decode_stub in ("ppm", "png", "bmp", "image"):
-                # per-ROW failure surface: a malformed payload yields null
-                # features for that row instead of aborting the whole task
-                # (one adversarial blob must not kill the batch)
-                def _safe(b):
-                    try:
-                        return _rgb_features(b)
-                    except ValueError:
-                        return None
-
-                feats = payloads.map(_safe)
-            else:
-                feats = payloads.map(
-                    lambda b: [
-                        float(sum(b[j::FEATURE_DIM]) % 997) for j in range(FEATURE_DIM)
-                    ]
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "features": feats,
-                }
-            )
-
-    return docs_with_payload.select(F.col(id_col), "payload").mapInPandas(
-        _extract, FEATURE_SCHEMA
-    )
-
-
-AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("sample_rate", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("rms_milli", T.LongType()),
-        T.StructField("peak", T.LongType()),
-    ]
-)
-
-
-def extract_audio_features(
-    docs_with_payload: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """REAL audio decode through the same mapInPandas seam as the image
-    paths: payloads parse as PCM16 WAV (``functions.wav``, pure stdlib)
-    and the features are exact sample statistics — duration, RMS (scaled
-    to integer milli-units of full scale via an exact integer
-    sum-of-squares then one floor'd sqrt), absolute peak.  A malformed or
-    compressed payload nulls only its own row (same per-row failure
-    surface as PPM/PNG); mp3/opus/flac swap in a codec library at this
-    seam and nothing else changes."""
-    import math
-
-    def _features(b: bytes):
-        from ..functions.wav import decode_wav
-
-        rate, ch, samples = decode_wav(bytes(b))
-        n = len(samples)
-        frames = n // ch if ch else 0
-        ssq = sum(s * s for s in samples)  # exact int
-        # rms/32768 in milli-units, floored: integer in [0, 1000]
-        rms_milli = (
-            math.floor(1000.0 * math.sqrt(ssq / n) / 32768.0) if n else 0
-        )
-        return {
-            "sample_rate": rate,
-            "n_channels": ch,
-            "n_samples": n,
-            "duration_ms": (frames * 1000) // rate if rate else 0,
-            "rms_milli": rms_milli,
-            "peak": max((abs(s) for s in samples), default=0),
-        }
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
-                row = {"doc_id": doc_id, "n_bytes": len(payload)}
-                try:
-                    row.update(_features(payload))
-                except ValueError:
-                    row.update(
-                        dict.fromkeys(
-                            (
-                                "sample_rate", "n_channels", "n_samples",
-                                "duration_ms", "rms_milli", "peak",
-                            ),
-                            None,
-                        )
-                    )
-                rows.append(row)
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in AUDIO_SCHEMA.fields],
-            )
-
-    return docs_with_payload.select(F.col(id_col), "payload").mapInPandas(
-        _extract, AUDIO_SCHEMA
-    )
-

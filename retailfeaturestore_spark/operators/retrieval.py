@@ -1,13 +1,9 @@
-"""Retrieval operators: BM25 lexical ranking, reciprocal-rank fusion, and
-the artifact-backed hybrid search serving path.
+"""Retrieval operators: BM25 lexical ranking and reciprocal-rank fusion.
 
 Extracted from the certified query implementations (``bm25_retrieval``,
 ``hybrid_retrieval_rrf`` — both hash-exact vs their DuckDB oracles) so the
-same ranking code serves three callers: the oracle-checked queries, ad-hoc
-corpus curation searches, and ``hybrid_search_pq`` — the serving
-composition that answers a (terms, vector) query from a live documents
-table plus a PERSISTED PQ index (``operators/similarity.build_pq_index``)
-without touching the float corpus.
+same ranking code serves the oracle-checked queries and ad-hoc corpus
+curation searches.
 
 Determinism contract (SURVEY.md §5.2): BM25 keeps the exact rational idf
 (no log) and quantizes per-term scores to x1e12 longs BEFORE the cross-term
@@ -19,10 +15,10 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["bm25_topk", "rrf_fuse", "hybrid_search_pq"]
+__all__ = ["bm25_topk", "rrf_fuse"]
 
 
 def bm25_topk(
@@ -293,44 +289,3 @@ def rrf_fuse(
             (F.col("rrf_scaled").cast("double") / F.lit(1e12)).alias("rrf"),
         )
     )
-
-
-def hybrid_search_pq(
-    spark: SparkSession,
-    index_dir: str,
-    docs: DataFrame,
-    queries: Iterable[tuple[int, Iterable[str], Iterable[float]]],
-    k: int = 10,
-    k0: int = 60,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Serve hybrid (lexical + dense) retrieval from artifacts: BM25 over
-    the documents table fused with ADC search over the PERSISTED PQ index
-    — the float corpus is never touched (the dense half reads only the
-    m-byte codes; ``operators/similarity.search_pq_index``).
-
-    ``queries``: ``[(query_id, [term, ...], [float, ...]), ...]`` —
-    request-sized by definition.  Index ids must be the document ids
-    (build the index with ``vec_id = doc_id``), or the fusion would join
-    unrelated identities.  Returns the ``rrf_fuse`` frame."""
-    from .similarity import search_pq_index
-
-    queries = [(int(q), list(ts), list(v)) for q, ts, v in queries]
-    if not queries:
-        raise ValueError("queries must be non-empty")
-    lex = bm25_topk(
-        docs,
-        [(q, t) for q, ts, _ in queries for t in ts],
-        k=k,
-        text_col=text_col,
-        id_col=id_col,
-    ).select("query_id", "doc_id", F.col("rank").alias("rank_lex"))
-    dense = search_pq_index(
-        spark, index_dir, [(q, v) for q, _, v in queries], k_neighbors=k
-    ).select(
-        F.col("q_id").alias("query_id"),
-        F.col("n_id").alias("doc_id"),
-        F.col("rank").alias("rank_dense"),
-    )
-    return rrf_fuse(lex, dense, k=k, k0=k0)

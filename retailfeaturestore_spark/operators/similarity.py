@@ -27,8 +27,6 @@ Scale paths:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,11 +41,7 @@ __all__ = [
     "ivf_topk_label",
     "kmeans_cells",
     "ivf_topk_cells",
-    "pq_topk_adc",
     "pq_topk_adc_resident",
-    "build_pq_index",
-    "load_pq_index",
-    "search_pq_index",
     "build_pq_index_mtable",
     "append_pq_index_mtable",
     "search_pq_index_mtable",
@@ -742,66 +736,6 @@ def pq_train_encode(
     return cents, coded, dict(seed)
 
 
-def pq_topk_adc(
-    corpus: DataFrame,
-    query_ids,
-    k_neighbors: int = 5,
-    m: int = 4,
-    k_codes: int = 16,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cache_scope: str | None = None,
-) -> DataFrame:
-    """PQ-compressed ANN with asymmetric distance computation (ADC).
-
-    Jegou et al., "Product Quantization for Nearest Neighbor Search"
-    (TPAMI 2011) — the standard memory-bounded ANN scheme: the corpus is
-    stored as ``m`` code ids per vector; a query precomputes an ``m x k``
-    lookup table of exact squared distances from its subvectors to every
-    codeword, and a corpus vector's approximate distance is ``m`` table
-    lookups summed — no float math over the corpus at all.
-
-    Spark-first shape: codebooks and per-query LUTs are driver-side integer
-    literals (``m * k * d_sub`` and ``|Q| * m * k`` longs — tiny by PQ
-    design), so the scoring pass is a PURE MAP over the encoded corpus
-    (explode of |Q| scored structs per row), followed by the single
-    per-query top-k window exchange.  The corpus never joins and never
-    shuffles its vectors; only ``(q_id, n_id, dist)`` longs move.
-
-    Determinism: every distance is an int64 sum of squared int diffs;
-    ranking ties break on neighbor id — the SQL oracle replays training,
-    encoding, LUTs, and ADC bit-for-bit.
-    """
-    query_ids = list(query_ids)
-    if not query_ids:
-        raise ValueError("query_ids must be non-empty")
-    cents, coded, seed_vecs = pq_train_encode(
-        corpus, m=m, k_codes=k_codes, iters=iters, vec_col=vec_col,
-        id_col=id_col, cache_scope=cache_scope,
-    )
-    # Query vectors already pulled by the seed collect need no second job.
-    missing = [qid for qid in query_ids if qid not in seed_vecs]
-    fetched = {
-        int(r["id"]): [int(x) for x in r["__q"]]
-        for r in (
-            coded.where(F.col("id").isin(missing)).select("id", "__q").collect()
-            if missing
-            else ()
-        )
-    }
-    absent = [qid for qid in missing if qid not in fetched]
-    if absent:
-        raise ValueError(f"query ids not present in the corpus: {absent[:10]}")
-    qrows = sorted(
-        (int(qid), seed_vecs.get(qid) or fetched[qid]) for qid in query_ids
-    )
-    return _adc_scored_topk(
-        coded, cents, qrows, m=m, k_codes=k_codes,
-        k_neighbors=k_neighbors, exclude_self=True,
-    )
-
-
 def pq_topk_adc_resident(
     corpus: DataFrame,
     query_ids,
@@ -815,18 +749,29 @@ def pq_topk_adc_resident(
 ) -> DataFrame:
     """Serving-semantics PQ ANN: train once per dataset, score per request.
 
-    The first call per ``cache_scope`` pays the identical honest build as
-    :func:`pq_topk_adc` (deterministic Lloyd training + corpus encoding);
-    every later call reuses the memoized codebooks and the PERSISTED
-    encoded corpus and pays only the ADC scoring map + one top-k window —
-    the resident-pipeline lifecycle where an index is (re)built on a
-    schedule and served many times (the in-session analogue of
-    :func:`build_pq_index`/:func:`search_pq_index`; VERDICT r9 next-round
-    #2).  ``queries.invalidate_caches`` evicts the codebook memo and the
-    encoded frame together by scope, so a table rewrite forces retraining.
-    Results are bit-identical to :func:`pq_topk_adc` (same codebooks, same
-    integer ADC, same tiebreak), which is what keeps the SQL oracle —
-    always a fresh-session honest build — hash-exact on either path."""
+    PQ-compressed ANN with asymmetric distance computation (ADC), Jegou et
+    al., "Product Quantization for Nearest Neighbor Search" (TPAMI 2011):
+    the corpus is stored as ``m`` code ids per vector; a query precomputes
+    an ``m x k`` lookup table of exact squared distances from its
+    subvectors to every codeword, and a corpus vector's approximate
+    distance is ``m`` table lookups summed.  Codebooks and per-query LUTs
+    are integer literals in the plan, so scoring is a pure map over the
+    encoded corpus plus one per-query top-k window; every distance is an
+    int64 sum and ties break on neighbor id, so the SQL oracle replays
+    training, encoding, LUTs and ADC bit-for-bit.
+
+    The first call per ``cache_scope`` pays the honest build
+    (:func:`pq_train_encode`: deterministic Lloyd training + corpus
+    encoding); every later call reuses the memoized codebooks and the
+    PERSISTED encoded corpus and pays only the ADC scoring map + one top-k
+    window — the resident-pipeline lifecycle where an index is (re)built on
+    a schedule and served many times (the table-backed index is
+    :func:`build_pq_index_mtable`/:func:`search_pq_index_mtable`; VERDICT r9
+    next-round #2).  ``queries.invalidate_caches`` evicts the codebook memo
+    and the encoded frame together by scope, so a table rewrite forces
+    retraining.  A fresh scope and a warm one give bit-identical results
+    (same codebooks, same integer ADC, same tiebreak), which is what keeps
+    the SQL oracle — always a fresh-session honest build — hash-exact."""
     from ._cache import get_or_register, session_memo
 
     query_ids = list(query_ids)
@@ -898,9 +843,10 @@ def _adc_scored_topk(
     k_neighbors: int,
     exclude_self: bool,
 ) -> DataFrame:
-    """ADC scoring core shared by the in-session path (:func:`pq_topk_adc`)
-    and the persisted-index path (:func:`search_pq_index`): driver-side
-    per-query LUT literals, one pure-map explode over the encoded corpus,
+    """ADC scoring core shared by the in-session path
+    (:func:`pq_topk_adc_resident`) and the table-backed index
+    (:func:`search_pq_index_mtable`): per-query LUT literals, one
+    pure-map explode over the encoded corpus,
     one per-query top-k window exchange.  ``exclude_self`` drops
     ``n_id == q_id`` matches — correct when queries are corpus members,
     wrong for an external query id space."""
@@ -948,110 +894,6 @@ def _adc_scored_topk(
     )
 
 
-def build_pq_index(
-    corpus: DataFrame,
-    index_dir: str,
-    m: int = 4,
-    k_codes: int = 16,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> dict:
-    """Train PQ once and PERSIST the index: the production ANN lifecycle
-    (index build is a batch job; queries are served without ever touching
-    the float corpus again).
-
-    Layout: ``index_dir/codes/`` — the encoded corpus as parquet
-    ``(id, __codes array<bigint>)``, m smallints-worth per vector, the
-    entire scan surface of a search; ``index_dir/codebooks.json`` — the
-    ``m x k_codes x d_sub`` integer codebooks plus parameters, driver-side
-    tiny by PQ design, written LAST as the commit marker
-    (:func:`load_pq_index` refuses an index without it, so a crashed build
-    is never served).  Re-building overwrites in place; point queries at a
-    versioned path for zero-downtime swaps at scale.
-
-    Returns the metadata dict that was written."""
-    import json
-
-    cents, coded, _seed = pq_train_encode(
-        corpus, m=m, k_codes=k_codes, iters=iters,
-        vec_col=vec_col, id_col=id_col, cache_scope=f"build:{index_dir}",
-    )
-    coded.select("id", "__codes").write.mode("overwrite").parquet(
-        os.path.join(index_dir, "codes")
-    )
-    meta = {
-        "m": m,
-        "k_codes": k_codes,
-        "iters": iters,
-        "d_sub": len(cents[0][0][1]),
-        "fixed_point_scale": FIXED_POINT_SCALE,
-        "codebooks": [[[cid, list(vec)] for cid, vec in sub] for sub in cents],
-    }
-    tmp = os.path.join(index_dir, "codebooks.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(index_dir, "codebooks.json"))  # atomic commit
-    return meta
-
-
-def load_pq_index(spark, index_dir: str):
-    """-> ``(cents, codes_df, meta)``; raises if the build never committed."""
-    import json
-
-    marker = os.path.join(index_dir, "codebooks.json")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"no committed PQ index at {index_dir!r}: codebooks.json absent "
-            "(incomplete or crashed build_pq_index run)"
-        )
-    with open(marker) as f:
-        meta = json.load(f)
-    cents = [
-        [(int(cid), [int(x) for x in vec]) for cid, vec in sub]
-        for sub in meta["codebooks"]
-    ]
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
-    return cents, codes, meta
-
-
-def search_pq_index(
-    spark,
-    index_dir: str,
-    queries,
-    k_neighbors: int = 5,
-) -> DataFrame:
-    """Serve ANN queries from a persisted PQ index — NO training jobs, no
-    float corpus access: load codebooks (driver-side JSON), quantize the
-    request's query vectors driver-side with the same floor(x * 2^25)
-    fixed-point rule the build used, and run the ADC scoring map over the
-    compressed codes.
-
-    ``queries``: ``[(query_id, [float, ...]), ...]`` — request-sized by
-    definition (this is the serving path), so driver-side LUT construction
-    is control-plane work, same as :func:`pq_topk_adc`'s.  External query
-    ids are NOT corpus ids: no self-exclusion is applied."""
-    import math
-
-    queries = list(queries)
-    if not queries:
-        raise ValueError("queries must be non-empty")
-    cents, codes, meta = load_pq_index(spark, index_dir)
-    scale = float(meta["fixed_point_scale"])
-    dims = meta["d_sub"] * meta["m"]
-    qrows = []
-    for qid, vec in sorted((int(q), list(v)) for q, v in queries):
-        if len(vec) != dims:
-            raise ValueError(
-                f"query {qid} has {len(vec)} dims, index expects {dims}"
-            )
-        qrows.append((qid, [math.floor(float(x) * scale) for x in vec]))
-    return _adc_scored_topk(
-        codes, cents, qrows, m=meta["m"], k_codes=meta["k_codes"],
-        k_neighbors=k_neighbors, exclude_self=False,
-    )
-
-
 def build_pq_index_mtable(
     corpus: DataFrame,
     tbl,
@@ -1064,8 +906,7 @@ def build_pq_index_mtable(
     """The ANN index AS AN ACID TABLE: train PQ once and commit the encoded
     corpus as one mtable version, with the codebooks + parameters riding
     the SAME atomic manifest commit (``extra_meta``) — composing the two
-    scale subsystems into the production index lifecycle the directory
-    backend (:func:`build_pq_index`) can only approximate:
+    scale subsystems into the production index lifecycle:
 
     - **atomic publish / rollback**: a crashed build publishes NOTHING (no
       marker-file ordering to reason about); a bad rebuild rolls back by
@@ -1203,8 +1044,8 @@ def search_pq_index_mtable(
     retained version (``version=n``): the snapshot read plans against
     exactly that version's code files and the codebooks that encoded them,
     so a historical search replays bit-for-bit (the eval-reproducibility
-    contract no directory index can offer).  Same driver-side LUT protocol
-    as :func:`search_pq_index`; external query ids, no self-exclusion."""
+    contract no directory index can offer).  Query LUTs as in
+    :func:`pq_topk_adc_resident`; external query ids, no self-exclusion."""
     import math
 
     queries = list(queries)

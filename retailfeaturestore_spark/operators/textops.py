@@ -283,7 +283,7 @@ def pii_scrub(
     100 TB this is a map-only stage with zero shuffle.  Patterns are the
     conservative, cross-engine-identical subset — a production deployment
     extends PII_PATTERNS per policy (names/addresses need NER models, which
-    belong in the mapInPandas seam next to the multimodal codecs)."""
+    belong in a mapInPandas stage)."""
     clean = F.col(text_col)
     counts = {}
     for kind in PII_ORDER:

@@ -115,7 +115,8 @@ def _in_window(c: str, i: int) -> str:
 
 
 def _positive_or_one(x: str) -> str:
-    """The guarded denominator of ``functions.expressions.guarded_div``."""
+    """The guarded ratio denominator: a zero or negative value becomes 1
+    (the reference's ``x.where(x > 0, other=1)``, P11)."""
     return f"CASE WHEN {x} > 0 THEN {x} ELSE 1.0D END"
 
 

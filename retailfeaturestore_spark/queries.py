@@ -1501,7 +1501,7 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # subspaces, an independent 16-codeword codebook per subspace (seeds = the
 # 16 smallest vec_ids' subvectors, 2 unrolled iterations), then ADC:
 # per-query LUT of exact integer subspace distances joined to the corpus
-# code assignments and summed.  Replays operators/similarity.py:pq_topk_adc
+# code assignments and summed.  Replays operators/similarity.py:pq_topk_adc_resident
 # bit-for-bit.  The subvector width is derived FROM THE DATA (max ordinal /
 # m), exactly as the operator computes w = len(vec) // m — a hardcoded
 # width silently collapsed every dimension into subspace 0 on corpora whose
@@ -2145,7 +2145,7 @@ def q_multimodal_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M6c — streaming batch-equivalent + training-set composite (J1 + full M3)
+# M6c — event-time window counts + training-set composite (J1 + full M3)
 # ---------------------------------------------------------------------------
 
 from .streaming.events_stream import batch_equivalent_counts  # noqa: E402
@@ -2165,9 +2165,8 @@ GROUP BY date_trunc('day', ts), event_type
 
 @register("events_tumbling_daily", oracle=_TUMBLING_ORACLE, tags=("window", "streaming"))
 def q_events_tumbling_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-day event-time windows — the batch formulation of the
-    streaming aggregation (streaming/events_stream.py); the streaming test
-    asserts replay-equality with this exact query."""
+    """Tumbling 1-day event-time windows per event type
+    (streaming/events_stream.py)."""
     return batch_equivalent_counts(spark, sf_dir)
 
 
@@ -2416,7 +2415,7 @@ GROUP BY ws
 def q_events_sliding_7d_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding event-time windows (7-day width, 1-day slide): each event
     lands in 7 epoch-aligned windows; partial aggregation applies per
-    window replica.  Same operator powers the streaming sliding variant."""
+    window replica."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "7 days", "1 day").alias("win"))
@@ -8910,8 +8909,7 @@ def q_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy, no broadcast barrier; the split pass that was this query's
     measured floor runs once per dataset inside the artifact build and
     amortizes across the whole text family (tfidf / ngram / LM / dedup
-    consumers).  Implementation lives in operators/retrieval.py:bm25_topk
-    (shared with the hybrid_search_pq serving path)."""
+    consumers).  Implementation lives in operators/retrieval.py:bm25_topk."""
     from .operators.retrieval import bm25_topk
     from .operators.tokenize import corpus_stats_and_dfs, token_corpus
 
@@ -9178,9 +9176,8 @@ def q_hybrid_retrieval_rrf(
     Artifact reuse (VERDICT r6 #7 / r7 #5): with ``reuse_artifacts`` (the
     registry default) the two half-rankings — top-k-sized frames — are
     persisted per dataset and every later call fuses from them without
-    re-deriving postings or corpus dots, the same resident-serving
-    semantics as ``operators/retrieval.hybrid_search_pq``; a table rewrite
-    invalidates via ``invalidate_caches``.  ``reuse_artifacts=False`` keeps
+    re-deriving postings or corpus dots (resident-serving semantics); a
+    table rewrite invalidates via ``invalidate_caches``.  ``reuse_artifacts=False`` keeps
     the honest full-rebuild path (what the oracle differential and a cold
     batch job measure — identical values either way, since the artifacts
     are deterministic)."""

@@ -161,7 +161,7 @@ manifests diff in O(touched files)), tagging rows insert/delete per commit
 ``skip_compactions=True`` omits row-preserving maintenance churn entirely.
 The O(delta) consumption path ``diff()`` (a full two-snapshot re-read) is
 not; ``streaming/changes_stream.ChangeFeedConsumer`` tails it with
-table-version offsets and an exactly-once mtable sink.
+table-version offsets.
 
 **RESTORE / DESCRIBE**: ``restore(v)`` re-commits a historical state by
 reference (one manifest write, history preserved, feed delta = exact
@@ -459,7 +459,7 @@ class MTable:
         """The manifest JSON exactly as committed — a FULL manifest (carries
         ``partitions``/``stats``) or a DELTA one (carries ``delta`` with only
         the touched partitions' entries).  ``meta``/``operation``/
-        ``committed_at_ms`` live top-level in both forms, so ledger and
+        ``committed_at_ms`` live top-level in both forms, so replay probes and
         history readers use this O(1)-size read."""
         m = self._read_json(self._manifest_path(version))
         if m is None:
@@ -2430,26 +2430,6 @@ class MTable:
         # projection on top
         return self._logical_view(self._apply_dv(df, m.get("dv") or []), m)
 
-    def ledger_max(self, key: str):
-        """Max value of ``meta[key]`` across ALL retained manifests — the
-        robust form of the exactly-once stream ledger.  Reading only the
-        newest version's meta is wrong the moment any non-stream commit
-        (compact, backfill) interleaves: it carries its own meta and the
-        last-batch-id check silently passes for a replayed batch (ADVICE
-        r8).  O(retained versions) manifest reads, bounded by vacuum's
-        ``keep_versions`` horizon — and vacuum must therefore retain at
-        least the manifests younger than the stream checkpoint's replay
-        horizon (one version is always safe: a replay can only be of a
-        batch at-or-before the newest commit)."""
-        best = None
-        for v in self.versions():
-            # raw read: meta lives top-level in full AND delta manifests,
-            # so the ledger scan never pays state reconstruction
-            val = (self._read_manifest_raw(v).get("meta") or {}).get(key)
-            if val is not None and (best is None or val > best):
-                best = val
-        return best
-
     def diff(
         self,
         keys: list[str],
@@ -2579,7 +2559,7 @@ class MTable:
         retained version, no state reconstruction, no data IO: version
         chain, operation, commit time, and the operation's own metadata
         (merge/delete rewrite counts, compacted partitions, rename/respec
-        parameters, stream batch ids — whatever the commit recorded)."""
+        parameters, ingest batch ids — whatever the commit recorded)."""
         return [
             {
                 "version": m["version"],

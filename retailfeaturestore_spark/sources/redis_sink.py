@@ -108,20 +108,18 @@ def materialize_online(
     cat_col: str | None = "country",
     onehot_categories: list[str] | None = None,
     client_factory: Callable[[], object] | None = None,
-    ttl_seconds: int | None = None,
     pipeline_batch: int = 500,
 ) -> int:
     """Publish latest-per-entity snapshots to the online hash store.
 
     One connection + pipeline per partition; flush every ``pipeline_batch``
     HSETs (the reference pipelines the whole snapshot at once — fine for 6k
-    customers, not for 600M).  Returns the number of hashes written, summed
+    customers, not for 600M).  Every key gets the TTL ``REDIS_TTL_SECONDS``
+    names, when it is set.  Returns the number of hashes written, summed
     over the partitions by the publishing job itself.
     """
     cats = onehot_categories or []
-    ttl = ttl_seconds if ttl_seconds is not None else (
-        int(os.environ["REDIS_TTL_SECONDS"]) if os.environ.get("REDIS_TTL_SECONDS") else None
-    )
+    ttl = int(os.environ["REDIS_TTL_SECONDS"]) if os.environ.get("REDIS_TTL_SECONDS") else None
     factory = client_factory or redis_client_factory()
     cols = [entity_col, ts_col] + ([cat_col] if cat_col else []) + feature_cols
 

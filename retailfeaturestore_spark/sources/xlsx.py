@@ -464,13 +464,12 @@ def read_xlsx_sharded(
     sheets: Iterable[str] | None = None,
     add_source_columns: bool = False,
     target_shard_bytes: int = 8 << 20,
-    max_shards_per_sheet: int | None = None,
 ) -> DataFrame:
     """``read_xlsx`` semantics (same schema/header/coercion contract, same
     multi-sheet UNION) with INTRA-sheet parallelism: each worksheet is cut
     into ``ceil(uncompressed_xml / target_shard_bytes)`` row-aligned byte
-    shards (capped at the session's default parallelism per sheet unless
-    ``max_shards_per_sheet`` overrides), each parsed by its own task.  Use
+    shards (capped at the session's default parallelism per sheet), each
+    parsed by its own task.  Use
     it when the landing zone is one giant workbook rather than many; for
     directories of ordinary workbooks the per-file reader avoids the
     duplicated inflation and is the better default."""
@@ -489,7 +488,7 @@ def read_xlsx_sharded(
     names = [f.name for f in out_schema.fields]
     dtypes = [f.dataType for f in out_schema.fields]
     want = set(sheets) if sheets is not None else None
-    cap = max_shards_per_sheet or spark.sparkContext.defaultParallelism
+    cap = spark.sparkContext.defaultParallelism
 
     # enumeration: central directory + workbook.xml per file — KBs each,
     # the control-plane read every split-planning scan does

@@ -1,14 +1,5 @@
-from .events_stream import (  # noqa: F401
-    read_events_stream,
-    stream_to_memory,
-    windowed_event_counts,
-)
-from .changes_stream import (  # noqa: F401
-    ChangeFeedConsumer,
-    mtable_append_sink,
-)
+from .changes_stream import ChangeFeedConsumer  # noqa: F401
 from .neardup_stream import (  # noqa: F401
     ingest_batch_neardup,
     ingest_batch_neardup_mtable,
-    neardup_ingest_stream,
 )

@@ -11,42 +11,22 @@ tail the table.  At 100 TB cadence each invocation plans the day's
 changed files, never the table — the consumption loop that replaces the
 reference's full gold rebuild (jobs/build_feature_views.py).
 
-Delivery semantics, explicitly:
-
-- The local version checkpoint alone is AT-LEAST-ONCE: a crash between
-  ``process()`` returning and the checkpoint write replays that one
-  version batch on restart.  Fine for idempotent/semilattice consumers
-  (the KMV state merge next door, overwrite-by-key sinks).
-- EXACTLY-ONCE needs the sink to be transactional: pass ``ledger`` (e.g.
-  ``lambda: dest.ledger_max("cdc_through")`` for an mtable sink that
-  commits ``extra_meta={"cdc_through": v1}`` WITH each batch's data —
-  one atomic manifest PUT carries both).  ``processed_through`` takes the
-  max of checkpoint and ledger, so a replayed batch whose commit already
-  landed is skipped.  :func:`mtable_append_sink` wires this up.
-
-The checkpoint file is swapped atomically (temp + ``os.replace``).  With a
-transactional sink it is usually recoverable from the ledger — but the
-ledger's horizon is the sink's VACUUM retention over ledger-CARRYING
-manifests (maintenance commits carry no ledger key, the same caveat
-``ledger_max`` documents), so the cursor file is the durable record
-whenever the sink is vacuumed aggressively.  The lost-cursor +
-vacuumed-ledger + non-empty-sink state is detected and REFUSED rather
-than silently re-fed (see :meth:`ChangeFeedConsumer.processed_through`).
-Single consumer per checkpoint dir, like every state-dir protocol in
-this package.
+Delivery semantics: the version checkpoint is AT-LEAST-ONCE.  A crash
+between ``process()`` returning and the checkpoint write replays that one
+version batch on restart, which suits idempotent or semilattice consumers
+(overwrite-by-key sinks, the near-dup admission keyed by batch id).  The
+checkpoint file is swapped atomically (temp + ``os.replace``).  Single
+consumer per checkpoint dir, like every state-dir protocol in this package.
 """
 
 from __future__ import annotations
 
 import os
-import time
 import uuid
-
-from pyspark.sql import DataFrame
 
 from ..sources.mtable import NoSuchVersion
 
-__all__ = ["ChangeFeedConsumer", "mtable_append_sink"]
+__all__ = ["ChangeFeedConsumer"]
 
 
 class ChangeFeedConsumer:
@@ -60,12 +40,10 @@ class ChangeFeedConsumer:
         tbl,
         checkpoint_dir: str,
         max_versions_per_batch: int | None = None,
-        ledger=None,
     ):
         self.tbl = tbl
         self.checkpoint_dir = checkpoint_dir
         self.max_versions = max_versions_per_batch
-        self.ledger = ledger
         os.makedirs(checkpoint_dir, exist_ok=True)
 
     @property
@@ -73,38 +51,12 @@ class ChangeFeedConsumer:
         return os.path.join(self.checkpoint_dir, "processed_through")
 
     def processed_through(self) -> int:
-        """Highest version durably processed: max of the checkpoint file
-        and the sink ledger (the ledger is authoritative when present —
-        it rode the sink's own atomic commit).
-
-        Catastrophe guard: a MISSING cursor with an EMPTY ledger over a
-        NON-EMPTY sink is indistinguishable from a fresh bootstrap, and
-        re-feeding from 0 would double every row — this happens when the
-        sink's vacuum dropped all ledger-carrying manifests (maintenance
-        commits carry no ledger key) AND the cursor file was lost.  When
-        the ledger exposes a ``sink_nonempty`` probe (``mtable_append_sink``
-        does), that state raises instead of silently re-feeding."""
-        ckpt = None
+        """Highest version durably processed (0 before the first batch)."""
         try:
             with open(self._ckpt, encoding="utf-8") as f:
-                ckpt = int(f.read().strip())
+                return int(f.read().strip())
         except (FileNotFoundError, ValueError):
-            pass
-        lv = self.ledger() if self.ledger is not None else None
-        if ckpt is None and lv is None and self.ledger is not None:
-            probe = getattr(self.ledger, "sink_nonempty", None)
-            if probe is not None and probe():
-                raise RuntimeError(
-                    "change-feed cursor lost AND the sink's ledger trail "
-                    "was vacuumed away, but the sink holds data — a "
-                    "re-feed from version 0 would double every row. "
-                    "Restore the checkpoint file, or rebuild the sink "
-                    "from scratch (cursor 0 against an empty sink)."
-                )
-        v = ckpt or 0
-        if lv is not None:
-            v = max(v, int(lv))
-        return v
+            return 0
 
     def _write_ckpt(self, v: int) -> None:
         tmp = f"{self._ckpt}.{uuid.uuid4().hex}.tmp"
@@ -121,9 +73,6 @@ class ChangeFeedConsumer:
         ranges processed.  A batch whose commits changed no files still
         advances the cursor (process is not called with an empty feed)."""
         done: list[tuple[int, int]] = []
-        # one ledger consult at entry (it is an O(retained versions)
-        # manifest scan); within the drain the local cursor is exact —
-        # single consumer per checkpoint dir, as documented
         v0 = self.processed_through()
         while True:
             cur = self.tbl._latest()
@@ -157,62 +106,3 @@ class ChangeFeedConsumer:
             self._write_ckpt(v1)
             done.append((v0, v1))
             v0 = v1
-
-    def run_continuous(
-        self,
-        process,
-        poll_interval_s: float = 1.0,
-        max_cycles: int | None = None,
-        stop_when=None,
-    ) -> list[list[tuple[int, int]]]:
-        """Long-running micro-batch mode (the ``Trigger.ProcessingTime``
-        shape, VERDICT r10 next-round #7): poll the table on a fixed
-        cadence, each cycle draining every commit that has landed since
-        the last — including commits that land WHILE a drain is running
-        (``run_available`` re-reads the latest version per iteration, so a
-        racing writer extends the current drain instead of waiting a
-        cycle).  The batching / checkpoint / ledger protocol is byte-
-        identical to :meth:`run_available` — exactly-once through a
-        transactional sink holds across cycles and restarts because every
-        cycle re-derives its cursor from the same (checkpoint, ledger)
-        max.
-
-        Runs until ``stop_when()`` is truthy (checked after each cycle) or
-        ``max_cycles`` cycles complete (None = forever — the deploy shape,
-        paired with an external supervisor).  Returns the per-cycle
-        processed ranges (empty list = an idle cycle)."""
-        cycles: list[list[tuple[int, int]]] = []
-        while True:
-            cycles.append(self.run_available(process))
-            if max_cycles is not None and len(cycles) >= max_cycles:
-                return cycles
-            if stop_when is not None and stop_when():
-                return cycles
-            time.sleep(poll_interval_s)
-
-
-def mtable_append_sink(dest, transform=None, ledger_key: str = "cdc_through"):
-    """(process, ledger) pair for EXACTLY-ONCE append into another mtable:
-    each batch's rows commit WITH ``extra_meta={ledger_key: v_to}`` in one
-    atomic manifest PUT, and the ledger reads it back via
-    ``dest.ledger_max`` — so a replayed batch (crash before the consumer
-    checkpoint landed) is skipped, never double-appended.  ``transform``
-    maps the raw feed batch (data columns + ``_change_type`` /
-    ``_commit_version`` / ``_commit_operation``) to the rows to append —
-    e.g. the signed per-group aggregate for O(delta) rollup maintenance.
-    Vacuum note: ``ledger_max`` scans retained manifests and maintenance
-    commits (compact/zorder) carry no ledger key, so ``dest``'s vacuum
-    must retain at least the newest LEDGER-CARRYING manifest for the
-    ledger to recover a lost cursor — vacuum past it and the cursor file
-    becomes the only record (the consumer refuses the ambiguous
-    lost-both-over-data state instead of re-feeding)."""
-
-    def process(feed: DataFrame, v_from: int, v_to: int) -> None:
-        batch = transform(feed) if transform is not None else feed
-        dest.write(batch, mode="append", extra_meta={ledger_key: v_to})
-
-    def ledger():
-        return dest.ledger_max(ledger_key)
-
-    ledger.sink_nonempty = lambda: dest._latest() is not None
-    return process, ledger

@@ -33,8 +33,7 @@ decision write — none of it transactional, so a crash replays the batch
 unwritten).  Witness postings are deduped on the candidate-bounded re-read
 so a replayed append never double-counts intersections, and self-pairs are
 excluded from the probe so a replayed doc never matches its own earlier
-append.  Under the streaming ``foreachBatch`` replay path a replay can
-still OVER-flag (never under-flag): a
+append.  A replayed batch can still OVER-flag (never under-flag): a
 same-batch near-dup pair (a < b; only b flagged originally) reappears with
 a's bands already in the store, so a is flagged too on the second pass —
 conservative in the safe direction for dedup.  A caller driving
@@ -44,9 +43,8 @@ order plus the orphan-witness guard turn that misuse into a loud
 ``RuntimeError`` rather than silent admission of true duplicates.
 Downstream consumers dedupe
 decisions by ``doc_id`` keeping the earliest batch's row.  (On a lakehouse
-table both writes become one transactional MERGE keyed by ``batch_id`` —
-the standard foreachBatch idempotence pattern — and the replay caveat
-disappears.)
+table both writes become one transactional commit keyed by ``batch_id`` —
+:func:`ingest_batch_neardup_mtable` — and the replay caveat disappears.)
 """
 
 from __future__ import annotations
@@ -61,7 +59,6 @@ from ..operators.dedup import band_rows, minhash_signatures, posting_lists
 __all__ = [
     "ingest_batch_neardup",
     "ingest_batch_neardup_mtable",
-    "neardup_ingest_stream",
 ]
 
 
@@ -103,8 +100,7 @@ def ingest_batch_neardup(
     decisions are computed (the decisions must not see the batch's own
     state rows except via the explicit within-batch probe).
 
-    The caller owns triggering: this is a plain batch function so the
-    foreachBatch wrapper and tests drive the identical code path.
+    The caller owns triggering: this is a plain batch function.
     """
     spark = batch.sparkSession
     bands_path = os.path.join(state_dir, "bands")
@@ -351,35 +347,3 @@ def ingest_batch_neardup_mtable(
         )
     return decisions
 
-
-def neardup_ingest_stream(
-    docs_stream: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = 12,
-    bands: int = 4,
-    threshold: float = 0.5,
-):
-    """Continuous near-dup admission: ``foreachBatch`` over a document
-    stream, each micro-batch admitted by :func:`ingest_batch_neardup`,
-    decisions appended to ``out_dir``."""
-
-    def step(batch_df: DataFrame, batch_id: int) -> None:
-        decisions = ingest_batch_neardup(
-            batch_df, state_dir, text_col=text_col, id_col=id_col,
-            n=n, k=k, bands=bands, threshold=threshold,
-        )
-        decisions.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    return (
-        docs_stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

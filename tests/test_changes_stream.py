@@ -1,24 +1,18 @@
 """Change-feed consumer (streaming a table) + RESTORE semantics.
 
 Covers: the Trigger.AvailableNow drain loop with version-batch bounding,
-exactly-once into an mtable sink via the ledger riding the sink's own
-atomic commit (crash-before-checkpoint replays are SKIPPED), and RESTORE
-as an O(manifest) commit whose change-feed delta exactly un-does what it
-reverts.
+a signed rollup kept equal to the recompute across a partition-spec change,
+and RESTORE as an O(manifest) commit whose change-feed delta exactly
+un-does what it reverts.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.sources.mtable import MTable, NoSuchVersion
-from retailfeaturestore_spark.streaming.changes_stream import (
-    ChangeFeedConsumer,
-    mtable_append_sink,
-)
+from retailfeaturestore_spark.streaming.changes_stream import ChangeFeedConsumer
 
 
 def _snap(spark, rows):
@@ -133,64 +127,6 @@ def _dest_counts(dest):
     }
 
 
-def test_consumer_exactly_once_rollup(spark, tmp_path):
-    src = _mk4(spark, tmp_path)
-    dest = MTable(spark, str(tmp_path / "rollup"))
-    process, ledger = mtable_append_sink(dest, transform=_signed_date_counts)
-    c = ChangeFeedConsumer(
-        src, str(tmp_path / "ckpt"), max_versions_per_batch=2, ledger=ledger
-    )
-    ranges = c.run_available(process)
-    assert ranges == [(0, 2), (2, 4)]
-    want = {
-        r.date: r.n
-        for r in src.read().groupBy("date").agg(F.count("*").alias("n")).collect()
-    }
-    assert _dest_counts(dest) == want
-    # drained: nothing to do
-    assert c.run_available(process) == []
-    # crash-before-checkpoint: losing the cursor file must NOT double-apply
-    # — the ledger rode the sink's own commits
-    os.remove(os.path.join(str(tmp_path / "ckpt"), "processed_through"))
-    assert c.processed_through() == 4
-    assert c.run_available(process) == []
-    assert _dest_counts(dest) == want
-    # new upstream commit -> one more batch, state stays consistent
-    src.delete(F.col("customer_id") == 1)
-    assert c.run_available(process) == [(4, 5)]
-    want = {
-        r.date: r.n
-        for r in src.read().groupBy("date").agg(F.count("*").alias("n")).collect()
-    }
-    assert _dest_counts(dest) == want
-
-
-def test_lost_cursor_with_vacuumed_ledger_refuses_to_refeed(spark, tmp_path):
-    src = _mk4(spark, tmp_path)
-    dest = MTable(spark, str(tmp_path / "sink"))
-    process, ledger = mtable_append_sink(dest, transform=_signed_date_counts)
-    c = ChangeFeedConsumer(src, str(tmp_path / "ckpt"), ledger=ledger)
-    c.run_available(process)
-    # a commit WITHOUT the ledger key (manual backfill/maintenance) then
-    # aggressive vacuum: every ledger-carrying manifest is gone
-    dest.write(
-        spark.createDataFrame([("2024-01-09", 0)], "date string, n long"),
-        mode="append",
-    )
-    dest.vacuum(keep_versions=1, min_age_ms=0)
-    assert ledger() is None and dest._latest() is not None
-    # cursor intact: normal operation continues (nothing new -> no-op)
-    assert c.run_available(process) == []
-    # cursor lost on top: the ambiguous state must refuse, not re-feed
-    os.remove(os.path.join(str(tmp_path / "ckpt"), "processed_through"))
-    with pytest.raises(RuntimeError, match="double every row"):
-        c.processed_through()
-    n = dest.read().count()
-    with pytest.raises(RuntimeError):
-        c.run_available(process)
-    assert dest.read().count() == n  # nothing re-fed
-
-
 def test_consumer_horizon_loss_is_a_loud_operator_error(spark, tmp_path):
     src = _mk4(spark, tmp_path)
     c = ChangeFeedConsumer(src, str(tmp_path / "ckpt"), max_versions_per_batch=2)
@@ -232,8 +168,11 @@ def test_consumer_sails_through_respec_and_migrate(spark, tmp_path):
     src = MTable(spark, str(tmp_path / "src_respec"))
     src.write(_with_date(_snap(spark, BASE)), partition_by="date")
     dest = MTable(spark, str(tmp_path / "rollup_respec"))
-    process, ledger = mtable_append_sink(dest, transform=_signed_date_counts)
-    c = ChangeFeedConsumer(src, str(tmp_path / "ckpt_respec"), ledger=ledger)
+
+    def process(feed, v_from, v_to):
+        dest.write(_signed_date_counts(feed), mode="append")
+
+    c = ChangeFeedConsumer(src, str(tmp_path / "ckpt_respec"))
     c.run_available(process)
 
     src.repartition_table("customer_id")  # metadata-only: no events
@@ -253,61 +192,18 @@ def test_consumer_sails_through_respec_and_migrate(spark, tmp_path):
     assert c.processed_through() == src.versions()[-1]
 
 
-def test_continuous_trigger_interleaved_commits_exactly_once(spark, tmp_path):
-    """VERDICT r10 next-round #7: the ProcessingTime-trigger mode
-    (run_continuous) consumes upstream commits that land BOTH mid-drain
-    (a writer racing the current cycle) and between trigger cycles,
-    exactly once each, across 3+ cycles, through the same transactional
-    sink ledger as run_available."""
-    src = MTable(spark, str(tmp_path / "csrc"))
+def test_consumer_drain_extends_to_a_commit_landing_mid_drain(spark, tmp_path):
+    """run_available re-reads the latest version on every iteration, so a
+    commit that lands while a batch is processed drains in the same call."""
+    src = MTable(spark, str(tmp_path / "race_src"))
     src.write(_with_date(_snap(spark, BASE)), partition_by="date")
-    dest = MTable(spark, str(tmp_path / "cdest"))
-    process, ledger = mtable_append_sink(dest, transform=_signed_date_counts)
-    c = ChangeFeedConsumer(
-        src, str(tmp_path / "cckpt"), max_versions_per_batch=1, ledger=ledger
-    )
+    c = ChangeFeedConsumer(src, str(tmp_path / "race_ckpt"), max_versions_per_batch=1)
+    seen: list[tuple[int, int]] = []
 
-    batches: list[tuple[int, int]] = []
-
-    def proc(feed, v0, v1):
-        if not batches:
-            # upstream commit lands WHILE cycle 1 is draining v1: the same
-            # drain must extend to it (run_available re-reads latest per
-            # iteration), not wait for the next trigger
+    def process(feed, v_from, v_to):
+        if not seen:
             src.write(_with_date(_snap(spark, APPEND)), mode="append")
-        batches.append((v0, v1))
-        process(feed, v0, v1)
+        seen.append((v_from, v_to))
 
-    injections = iter(
-        [
-            lambda: src.delete(F.col("customer_id") == 2),
-            lambda: src.update(F.col("customer_id") == 3, {"score": F.lit(30.0)}),
-        ]
-    )
-
-    def stop_when():
-        nxt = next(injections, None)
-        if nxt is None:
-            return True  # all interleavings landed and drained: stop
-        nxt()  # commit between trigger cycles
-        return False
-
-    cycles = c.run_continuous(proc, poll_interval_s=0.0, stop_when=stop_when)
-    # cycle 1 drained v1 AND the mid-drain v2; cycles 2 and 3 each drained
-    # one between-cycle commit
-    assert cycles == [[(0, 1), (1, 2)], [(2, 3)], [(3, 4)]]
-    assert batches == [(0, 1), (1, 2), (2, 3), (3, 4)]
-    # state equals the full recompute: every commit applied exactly once
-    want = {
-        r.date: r.n
-        for r in src.read().groupBy("date").agg(F.count("*").alias("n")).collect()
-    }
-    assert _dest_counts(dest) == want
-    # the ledger rode each batch's sink commit: cursor survives file loss
-    os.remove(os.path.join(str(tmp_path / "cckpt"), "processed_through"))
-    assert c.processed_through() == 4
-    # idle continuous run: 2 cycles, no batches, no sink commits
-    v_dest = dest.versions()
-    idle = c.run_continuous(proc, poll_interval_s=0.0, max_cycles=2)
-    assert idle == [[], []]
-    assert dest.versions() == v_dest
+    assert c.run_available(process) == [(0, 1), (1, 2)] == seen
+    assert c.run_available(process) == []

@@ -1,14 +1,10 @@
-"""CLI scoring surface, quality-check gate, streaming foreachBatch sink."""
+"""CLI scoring surface and quality-check gate."""
 
 from __future__ import annotations
 
-import pytest
-
-import glob
 import json
-import os
-import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.jobs import build_feature_views, ingest_to_bronze, make_training
@@ -19,8 +15,6 @@ from retailfeaturestore_spark.operators.quality_checks import (
     run_checks,
 )
 from retailfeaturestore_spark.serving.cli import main as cli_main
-from retailfeaturestore_spark.sources.redis_sink import DictRedis
-from retailfeaturestore_spark.streaming.materialize import stream_materialize_online
 
 
 def _mini_gold(spark, tmp_path):
@@ -102,41 +96,3 @@ def test_unique_key_suite_rejects_non_sum_checks(spark):
     mx = Check(name="max(v)<=1", violations=F.max("v"), sum_shaped=False)
     with _pytest.raises(ValueError, match="sum"):
         run_checks(df, [mx, expect_unique_key("id")])
-
-
-def test_stream_materialize_foreachbatch(spark, tmp_path):
-    """readStream over gold-shaped parquet -> foreachBatch -> hash-store fake:
-    the continuous online materialization path."""
-    src = tmp_path / "goldstream"
-    src.mkdir()
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", 5.0), (1, "2024-01-02 00:00:00", 7.0),
-         (2, "2024-01-01 12:00:00", 9.0)],
-        "customer_id int, t_ref string, spend_30d double",
-    ).withColumn("t_ref", F.col("t_ref").cast("timestamp"))
-    df.coalesce(1).write.parquet(str(src / "batch0"))
-    for f in glob.glob(str(src / "batch0") + "/*.parquet"):
-        shutil.move(f, str(src / os.path.basename(f)))
-    shutil.rmtree(str(src / "batch0"))
-
-    sink_dir = str(tmp_path / "online")
-    os.makedirs(sink_dir)
-
-    class FileRedis(DictRedis):
-        def hset(self, key, mapping):
-            with open(f"{sink_dir}/{key.replace(':', '_')}.json", "w") as f:
-                json.dump({"key": key, **mapping}, f)
-
-    stream = (
-        spark.readStream.schema("customer_id int, t_ref timestamp, spend_30d double")
-        .parquet(str(src))
-    )
-    q = stream_materialize_online(
-        stream, ["spend_30d"], FileRedis,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    files = sorted(glob.glob(f"{sink_dir}/*.json"))
-    assert len(files) == 2
-    rec1 = json.load(open(f"{sink_dir}/fs_customer_1.json"))
-    assert rec1["spend_30d"] == "7.0"  # latest-per-entity within the batch won

@@ -15,7 +15,7 @@ from retailfeaturestore_spark.operators.dedup import (
 )
 from retailfeaturestore_spark.operators.similarity import cosine_topk, sign_lsh_neardup
 
-from conftest import requires_testdata
+from conftest import TESTDATA_SF, requires_testdata
 
 
 def docs(spark, rows):
@@ -259,12 +259,17 @@ def test_pq_adc_deterministic_and_ranked(spark):
     """PQ/ADC: 5 neighbors per query, ranks dense 1..5, distance
     non-decreasing with rank, and the whole pipeline (training included)
     is identical under a different input partitioning — nothing in the
-    integer Lloyd/LUT path may depend on row order."""
+    integer Lloyd/LUT path may depend on row order.  Each call gets its
+    own cache scope, so each pays a fresh training."""
     from retailfeaturestore_spark.io import load_table
-    from retailfeaturestore_spark.operators.similarity import pq_topk_adc
+    from retailfeaturestore_spark.operators.similarity import pq_topk_adc_resident
+    from retailfeaturestore_spark.queries import invalidate_caches
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    a = pq_topk_adc(emb, query_ids=list(range(5)), k_neighbors=5)
+    sf = TESTDATA_SF
+    emb = load_table(spark, sf, "embeddings")
+    a = pq_topk_adc_resident(
+        emb, query_ids=list(range(5)), k_neighbors=5, cache_scope=sf + "#det-a"
+    )
     rows = a.collect()
     by_q = {}
     for r in rows:
@@ -276,8 +281,13 @@ def test_pq_adc_deterministic_and_ranked(spark):
         dists = [r.adc_dist for r in rs]
         assert dists == sorted(dists)
         assert all(r.n_id != q for r in rs)
-    b = pq_topk_adc(emb.repartition(7), query_ids=list(range(5)), k_neighbors=5)
+    b = pq_topk_adc_resident(
+        emb.repartition(7), query_ids=list(range(5)), k_neighbors=5,
+        cache_scope=sf + "#det-b",
+    )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    for scope in ("#det-a", "#det-b"):
+        invalidate_caches(spark, sf_dir=sf + scope)
 
 
 @requires_testdata
@@ -289,14 +299,22 @@ def test_pq_adc_approximates_exact_neighbors(spark):
     ~0.01 random baseline (5/499 per pick); the assert guards the order of
     magnitude, not a production recall target."""
     from retailfeaturestore_spark.io import load_table
-    from retailfeaturestore_spark.operators.similarity import cosine_topk, pq_topk_adc
+    from retailfeaturestore_spark.operators.similarity import (
+        cosine_topk,
+        pq_topk_adc_resident,
+    )
+    from retailfeaturestore_spark.queries import invalidate_caches
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    sf = TESTDATA_SF
+    emb = load_table(spark, sf, "embeddings")
     qids = list(range(10))
     exact = cosine_topk(emb, emb.where(emb.vec_id < 10), k=5)
-    approx = pq_topk_adc(emb, query_ids=qids, k_neighbors=5)
+    approx = pq_topk_adc_resident(
+        emb, query_ids=qids, k_neighbors=5, cache_scope=sf + "#recall"
+    )
     e = {(r.q_id, r.n_id) for r in exact.collect()}
     a = {(r.q_id, r.n_id) for r in approx.collect()}
+    invalidate_caches(spark, sf_dir=sf + "#recall")
     overlap = len(e & a) / len(e)
     assert overlap >= 0.1, overlap
 
@@ -349,92 +367,6 @@ def test_mmr_matches_local_greedy(spark):
                     best = (n, r, score)
             selected.append(best)
             assert got[(q, pick)] == best, (q, pick, got[(q, pick)], best)
-
-
-@requires_testdata
-def test_pq_index_build_persist_search_lifecycle(spark, tmp_path):
-    """Persisted PQ index (r6): build once -> codes parquet + committed
-    codebooks.json -> serve searches with NO training jobs.  Corpus-member
-    queries through the persisted path must match the in-session
-    pq_topk_adc exactly (modulo its self-exclusion); an external query
-    vector scores by the same ADC arithmetic (verified in Python over the
-    loaded codes); an uncommitted index refuses to load."""
-    import math
-    import os
-
-    import pytest as _pytest
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from retailfeaturestore_spark.io import load_table
-    from retailfeaturestore_spark.operators.similarity import (
-        build_pq_index,
-        load_pq_index,
-        pq_topk_adc,
-        search_pq_index,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    idx = str(tmp_path / "pq_index")
-    meta = build_pq_index(emb, idx, m=4, k_codes=8, iters=2)
-    assert os.path.exists(os.path.join(idx, "codebooks.json"))
-
-    # corpus-member queries: persisted-path results == in-session results
-    qids = [0, 1, 2]
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in emb.where(F.col("vec_id").isin(qids)).collect()
-    }
-    served = search_pq_index(
-        spark, idx, [(q, qvecs[q]) for q in qids], k_neighbors=4
-    )
-    # drop self-matches (external path doesn't exclude them) then compare
-    served_rows = {
-        (r.q_id, r.rank - 1): (r.n_id, r.adc_dist)
-        for r in served.where(F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy("adc_dist", "n_id")
-            ),
-        )
-        .where(F.col("rank") <= 3)
-        .collect()
-    }
-    insession = pq_topk_adc(emb, qids, k_neighbors=3, m=4, k_codes=8, iters=2)
-    for r in insession.collect():
-        assert served_rows[(r.q_id, r.rank - 1)] == (r.n_id, r.adc_dist), r
-
-    # external (non-corpus) query: verify the served ADC distances in
-    # Python over the loaded index — no self-exclusion, exact integers
-    cents, codes_df, meta2 = load_pq_index(spark, idx)
-    ext = [0.25] * (meta2["d_sub"] * meta2["m"])
-    out = search_pq_index(spark, idx, [(999_999, ext)], k_neighbors=3).collect()
-    scale = float(meta2["fixed_point_scale"])
-    qq = [math.floor(x * scale) for x in ext]
-    w = meta2["d_sub"]
-    luts = []
-    for s in range(meta2["m"]):
-        row = [0] * meta2["k_codes"]
-        for cid, cvec in cents[s]:
-            row[cid] = sum(
-                (a - b) * (a - b) for a, b in zip(qq[s * w : (s + 1) * w], cvec)
-            )
-        luts.append(row)
-    dist = {}
-    for r in codes_df.collect():
-        dist[int(r["id"])] = float(
-            sum(luts[s][int(r["__codes"][s])] for s in range(meta2["m"]))
-        )
-    want = sorted(dist.items(), key=lambda kv: (kv[1], kv[0]))[:3]
-    got = [(r.n_id, r.adc_dist) for r in sorted(out, key=lambda r: r.rank)]
-    assert got == [(n, d) for n, d in want]
-
-    # crashed build (no commit marker) refuses to serve
-    os.remove(os.path.join(idx, "codebooks.json"))
-    with _pytest.raises(ValueError, match="codebooks.json absent"):
-        load_pq_index(spark, idx)
 
 
 # ---------------------------------------------------------------------------
@@ -841,25 +773,33 @@ def test_semantic_dedup_partitioning_invariant(spark):
 @requires_testdata
 def test_pq_resident_matches_honest_build_and_memoizes(spark):
     """The serving-semantics path (train once per dataset, score per
-    request) must be bit-identical to the honest per-call build, reuse the
-    memoized codebooks on repeat calls, serve NEW query sets off the
-    resident index, and retrain after invalidate_caches."""
+    request) must be bit-identical to an honest build (the first call of a
+    fresh cache scope), reuse the memoized codebooks on repeat calls, serve
+    NEW query sets off the resident index, and retrain after
+    invalidate_caches."""
     from retailfeaturestore_spark.io import load_table
     from retailfeaturestore_spark.operators._cache import session_memo
-    from retailfeaturestore_spark.operators.similarity import (
-        pq_topk_adc,
-        pq_topk_adc_resident,
-    )
+    from retailfeaturestore_spark.operators.similarity import pq_topk_adc_resident
     from retailfeaturestore_spark.queries import invalidate_caches
 
     sf = "/root/testdata/sf0.001"
     scope = sf + "#resident-test"
     emb = load_table(spark, sf, "embeddings")
-    honest = pq_topk_adc(emb, query_ids=list(range(5)), k_neighbors=5)
+
+    def honest(query_ids, tag):
+        fresh = f"{sf}#honest-{tag}"
+        out = pq_topk_adc_resident(
+            emb, query_ids=query_ids, k_neighbors=5, cache_scope=fresh
+        )
+        rows = out.collect()
+        invalidate_caches(spark, sf_dir=fresh)
+        return spark.createDataFrame(rows, out.schema)
+
+    honest5 = honest(list(range(5)), "5")
     r1 = pq_topk_adc_resident(
         emb, query_ids=list(range(5)), k_neighbors=5, cache_scope=scope
     )
-    assert honest.exceptAll(r1).count() == 0 and r1.exceptAll(honest).count() == 0
+    assert honest5.exceptAll(r1).count() == 0 and r1.exceptAll(honest5).count() == 0
     memo = session_memo(spark)
     assert ("pq_resident_model", scope) in memo
     cents_obj = memo[("pq_resident_model", scope)]
@@ -870,7 +810,7 @@ def test_pq_resident_matches_honest_build_and_memoizes(spark):
     assert memo[("pq_resident_model", scope)] is cents_obj
     assert r1.exceptAll(r2).count() == 0 and r2.exceptAll(r1).count() == 0
     # a NEW query set is answered from the resident index, same codebooks
-    honest37 = pq_topk_adc(emb, query_ids=[3, 7], k_neighbors=5)
+    honest37 = honest([3, 7], "37")
     r37 = pq_topk_adc_resident(
         emb, query_ids=[3, 7], k_neighbors=5, cache_scope=scope
     )

@@ -1,79 +1,13 @@
-"""Artifact-backed hybrid search (operators/retrieval.hybrid_search_pq):
-BM25 over documents fused with ADC search over the persisted PQ index,
-validated against a python RRF recompute of the two component lists."""
+"""BM25 ranking edge cases (operators/retrieval.bm25_topk): NULL-text
+docs, an empty term set, and the join fallback against the literal path."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from retailfeaturestore_spark.io import load_table
-from retailfeaturestore_spark.operators.retrieval import bm25_topk, hybrid_search_pq
-from retailfeaturestore_spark.operators.similarity import (
-    build_pq_index,
-    search_pq_index,
-)
+from retailfeaturestore_spark.operators.retrieval import bm25_topk
 
 from conftest import requires_testdata
 
 pytestmark = requires_testdata
-
-SF = "/root/testdata/sf0.001"
-
-QUERIES = [
-    (0, ["hash", "join", "merge"]),
-    (1, ["stream", "window", "agg"]),
-]
-
-
-def test_hybrid_search_pq_matches_component_fusion(spark, tmp_path):
-    docs = load_table(spark, SF, "documents")
-    emb = load_table(spark, SF, "embeddings")  # vec_id aligns with doc_id
-    idx = str(tmp_path / "pq")
-    build_pq_index(emb, idx, m=4, k_codes=8, iters=2)
-
-    qvecs = {
-        int(r["vec_id"]): [float(x) for x in r["embedding"]]
-        for r in emb.where(F.col("vec_id").isin([0, 1])).collect()
-    }
-    queries = [(q, terms, qvecs[q]) for q, terms in QUERIES]
-    got = {
-        (r.query_id, r.doc_id): (r.rank, r.rank_lex, r.rank_dense, r.rrf_scaled)
-        for r in hybrid_search_pq(spark, idx, docs, queries, k=5).collect()
-    }
-
-    lex = {
-        (r.query_id, r.doc_id): r.rank
-        for r in bm25_topk(
-            docs, [(q, t) for q, ts in QUERIES for t in ts], k=5
-        ).collect()
-    }
-    dense = {
-        (r.q_id, r.n_id): r.rank
-        for r in search_pq_index(
-            spark, idx, [(q, qvecs[q]) for q, _ in QUERIES], k_neighbors=5
-        ).collect()
-    }
-    fused: dict[tuple[int, int], int] = {}
-    for key in set(lex) | set(dense):
-        s = 0
-        if key in lex:
-            s += round(1e12 / (60 + lex[key]))
-        if key in dense:
-            s += round(1e12 / (60 + dense[key]))
-        fused[key] = s
-    want = {}
-    for qid in {k[0] for k in fused}:
-        ranked = sorted(
-            ((s, d) for (q, d), s in fused.items() if q == qid),
-            key=lambda t: (-t[0], t[1]),
-        )[:5]
-        for i, (s, d) in enumerate(ranked, 1):
-            want[(qid, d)] = (i, lex.get((qid, d)), dense.get((qid, d)), s)
-
-    assert got == want and len(got) > 0
-    # both halves actually contribute somewhere in the fused lists
-    assert any(v[1] is not None for v in got.values())
-    assert any(v[2] is not None for v in got.values())
 
 
 def test_bm25_null_text_doc_still_counts_in_corpus_stats(spark):

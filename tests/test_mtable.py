@@ -211,63 +211,6 @@ def test_file_uri_table(spark, tmp_path):
 
 
 @pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_stream_commit_gold_mtable_exactly_once(spark, tmp_path):
-    """Each micro-batch is one atomic manifest commit; a full replay (the
-    at-least-once failure mode) is detected against the table's OWN ledger
-    (the batch id rides the committing manifest) and writes nothing."""
-    from conftest import stage_microbatches
-
-    from retailfeaturestore_spark.streaming.materialize import (
-        stream_commit_gold_mtable,
-    )
-
-    schema = "customer_id long, t_ref timestamp, score double"
-    batches = [
-        [(1, "2024-01-01 10:00:00", 1.0), (2, "2024-01-01 11:00:00", 2.0)],
-        [(1, "2024-01-01 10:00:00", 10.0)],  # update key in batch 2
-        [(3, "2024-01-02 09:00:00", 3.0)],   # new partition in batch 3
-    ]
-    cast = [
-        [(c, __import__("datetime").datetime.fromisoformat(t), s) for c, t, s in b]
-        for b in batches
-    ]
-    stream = stage_microbatches(spark, tmp_path, schema, cast)
-    tbl = str(tmp_path / "gold_mtable")
-    q = stream_commit_gold_mtable(
-        stream,
-        tbl,
-        keys=["customer_id", "t_ref"],
-        ts_col="t_ref",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    t = MTable(spark, tbl)
-    assert t.versions() == [1, 2, 3]  # one atomic version per micro-batch
-    out = {(r.customer_id, r.score) for r in t.read().collect()}
-    assert out == {(1, 10.0), (2, 2.0), (3, 3.0)}
-    assert t.history()[-1]["meta"] == {"stream_batch_id": 2}
-
-    # FULL replay from a fresh checkpoint: every row re-arrives, but the
-    # ledger in the committed manifest marks it already-applied -> no new
-    # version, identical data.
-    stream2 = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path / "stream"))
-    )
-    q2 = stream_commit_gold_mtable(
-        stream2,
-        tbl,
-        keys=["customer_id", "t_ref"],
-        ts_col="t_ref",
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-    )
-    q2.awaitTermination(120)
-    assert t.versions() == [1, 2, 3]
-    assert {(r.customer_id, r.score) for r in t.read().collect()} == out
-
-
-@pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
 def test_build_feature_views_mtable_matches_directory_gold(spark, tmp_path):
     """The ACID gold build commits the SAME rows the plain directory sink
     writes, and a rerun over identical bronze converges (merge by key)."""
@@ -485,69 +428,6 @@ def test_commit_reraises_non_cas_failures(spark, tmp_path, monkeypatch):
     # and a REAL already-committed version still maps to ConcurrentCommit
     with pytest.raises(ConcurrentCommit):
         t._commit({"version": 1}, 1)
-
-
-def test_ledger_max_survives_interleaved_maintenance_commits(spark, tmp_path):
-    """ADVICE r9: the exactly-once stream ledger reads the MAX
-    stream_batch_id across retained manifests — an interleaved compact()
-    (which carries its own meta) must not blind the replay check."""
-    t = MTable(spark, str(tmp_path / "ledger_tbl"))
-    t.write(
-        _with_date(_snap(spark, BASE)),
-        partition_by="date",
-        extra_meta={"stream_batch_id": 4},
-    )
-    t.write(
-        _with_date(_snap(spark, [(7, "2024-01-01 09:00:00", 7.0)])),
-        mode="append",
-    )  # e.g. a backfill: no stream meta
-    t.compact()
-    assert t.history()[-1]["meta"].get("stream_batch_id") is None
-    assert t.ledger_max("stream_batch_id") == 4
-
-
-@pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_stream_replay_skipped_after_compact_interleaves(spark, tmp_path):
-    """End-to-end form of the ledger fix: batch 0 committed, compact()
-    interleaves, replaying batch 0 must be a no-op (no new version, same
-    rows)."""
-    from retailfeaturestore_spark.streaming.materialize import (
-        stream_commit_gold_mtable,
-    )
-    from conftest import stage_microbatches
-
-    rows = [[(1, "2024-01-01 10:00:00", 1.0), (1, "2024-01-01 11:00:00", 2.0)]]
-    tbl = str(tmp_path / "gold_replay")
-
-    def run(ckpt):
-        stream = stage_microbatches(
-            spark,
-            tmp_path / ckpt,
-            "customer_id long, t_ref string, score double",
-            rows,
-        ).withColumn("t_ref", F.col("t_ref").cast("timestamp"))
-        q = stream_commit_gold_mtable(
-            stream,
-            tbl,
-            keys=["customer_id", "t_ref"],
-            ts_col="t_ref",
-            checkpoint_dir=str(tmp_path / ckpt / "ckpt"),
-        )
-        q.awaitTermination(120)
-
-    run("run1")
-    t = MTable(spark, tbl)
-    v_compact = t.compact()  # may be a no-op when files are already single
-    # fresh checkpoint -> the stream replays batch 0 from scratch
-    run("run2")
-    assert t.ledger_max("stream_batch_id") == 0
-    # the replay added NO version beyond the compact: ledger skip worked
-    assert t.versions()[-1] == v_compact
-    out = {(r.customer_id, str(r.t_ref), r.score) for r in t.read().collect()}
-    assert out == {
-        (1, "2024-01-01 10:00:00", 1.0),
-        (1, "2024-01-01 11:00:00", 2.0),
-    }
 
 
 def test_cluster_files_one_file_per_touched_partition(spark, tmp_path):

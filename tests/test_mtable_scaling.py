@@ -268,7 +268,10 @@ def test_time_travel_and_ledger_survive_delta_chains(spark, tmp_path):
             mode="append",
             extra_meta={"stream_batch_id": i},
         )
-    assert t.ledger_max("stream_batch_id") == 3
+    # the batch-id trail reads back from every manifest of the chain
+    assert [(h["meta"] or {}).get("stream_batch_id") for h in t.history()] == [
+        None, 0, 1, 2, 3,
+    ]
     assert [h["version"] for h in t.history()] == [1, 2, 3, 4, 5]
     # time travel reads every retained version exactly
     for v, extra in [(1, 0), (2, 1), (3, 2), (4, 3), (5, 4)]:

@@ -11,9 +11,7 @@ from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.operators.similarity import (
     append_pq_index_mtable,
-    build_pq_index,
     build_pq_index_mtable,
-    search_pq_index,
     search_pq_index_mtable,
 )
 from retailfeaturestore_spark.sources.mtable import MTable
@@ -36,21 +34,44 @@ def _queries(spark, n=3):
 
 
 @requires_testdata
-def test_table_index_matches_directory_backend(spark, tmp_path):
+def test_table_index_matches_python_adc_replay(spark, tmp_path):
+    """Searches over the committed index equal a pure-Python ADC replay:
+    query LUTs from the manifest's codebooks, one table lookup per
+    subspace over the committed codes, ties to the smaller id."""
+    import math
+
     emb = _emb(spark)
-    idx_dir = str(tmp_path / "pq_dir")
-    build_pq_index(emb, idx_dir, m=4, k_codes=8, iters=2)
     t = MTable(spark, str(tmp_path / "pq_tbl"))
     v = build_pq_index_mtable(emb, t, m=4, k_codes=8, iters=2)
     assert v == 1
-    q = _queries(spark)
-    a = search_pq_index(spark, idx_dir, q, k_neighbors=5)
-    b = search_pq_index_mtable(t, q, k_neighbors=5)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # the codes table is partitioned by the first subspace code
+    # the codes table is partitioned by the first subspace code, and the
+    # codebooks ride the same commit
     m1 = t._read_manifest(1)
     assert m1["partition_by"] == "c0"
-    assert (m1["meta"]["pq"]["m"], m1["meta"]["pq"]["k_codes"]) == (4, 8)
+    pq = m1["meta"]["pq"]
+    assert (pq["m"], pq["k_codes"]) == (4, 8)
+
+    m, w, scale = pq["m"], pq["d_sub"], float(pq["fixed_point_scale"])
+    codes = {int(r["id"]): list(r["__codes"]) for r in t.read().collect()}
+    q = _queries(spark) + [(999_999, [0.25] * (m * w))]
+    want = set()
+    for qid, vec in q:
+        qq = [math.floor(float(x) * scale) for x in vec]
+        luts = []
+        for s, sub in enumerate(pq["codebooks"]):
+            row = [0] * pq["k_codes"]
+            for cid, cvec in sub:
+                row[cid] = sum(
+                    (a - b) * (a - b) for a, b in zip(qq[s * w : (s + 1) * w], cvec)
+                )
+            luts.append(row)
+        dist = {
+            i: sum(luts[s][int(c[s])] for s in range(m)) for i, c in codes.items()
+        }
+        top = sorted(dist.items(), key=lambda kv: (kv[1], kv[0]))[:5]
+        want |= {(qid, n, float(d), r) for r, (n, d) in enumerate(top, 1)}
+    got = {tuple(r) for r in search_pq_index_mtable(t, q, k_neighbors=5).collect()}
+    assert got == want
 
 
 @requires_testdata

@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from retailfeaturestore_spark.io import write_bucketed_table, write_csv
+from retailfeaturestore_spark.io import write_csv
 from retailfeaturestore_spark.operators.window_features import build_customer_features
 from retailfeaturestore_spark.plans import formatted_plan
 
@@ -26,7 +26,12 @@ def test_bucketed_bronze_elides_window_exchange(spark, tmp_path):
     import uuid
 
     table = f"bronze_bucketed_{uuid.uuid4().hex[:8]}"
-    write_bucketed_table(df, table, "customer_id", n_buckets=4, sort_col="invoice_date")
+    (
+        df.write.format("parquet")
+        .bucketBy(4, "customer_id")
+        .sortBy("customer_id", "invoice_date")
+        .saveAsTable(table)
+    )
     bucketed = spark.table(table)
     feats = build_customer_features(bucketed, windows={"7d": 7})
     plan = formatted_plan(feats)
@@ -40,59 +45,6 @@ def test_csv_sink_roundtrip(spark, tmp_path):
     write_csv(df, str(tmp_path / "scores"))
     back = spark.read.option("header", "true").csv(str(tmp_path / "scores"))
     assert back.count() == 2 and set(back.columns) == {"customer_id", "probability"}
-
-
-def test_upsert_latest_merges_by_key(spark, tmp_path):
-    import os
-    import re
-    from datetime import datetime
-
-    from retailfeaturestore_spark.operators.incremental import upsert_latest
-    from retailfeaturestore_spark.sources.mtable import MTable
-
-    path = str(tmp_path / "gold_inc")
-    t = MTable(spark, path)
-    base = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), 10.0), (2, datetime(2024, 1, 1), 20.0)],
-        "customer_id int, t_ref timestamp, spend double",
-    )
-    n = upsert_latest(spark, path, base, ["customer_id"], "t_ref")
-    assert n == 2
-    assert t.versions() == [1]  # first call on a missing path commits v1
-
-    updates = spark.createDataFrame(
-        [(2, datetime(2024, 2, 1), 25.0), (3, datetime(2024, 1, 15), 30.0)],
-        "customer_id int, t_ref timestamp, spend double",
-    )
-    n = upsert_latest(spark, path, updates, ["customer_id"], "t_ref")
-    assert n == 3
-    out = {r.customer_id: r.spend for r in t.read().collect()}
-    assert out == {1: 10.0, 2: 25.0, 3: 30.0}  # 2 updated, 1 kept, 3 inserted
-
-    # stale update (older ts) must NOT win
-    stale = spark.createDataFrame(
-        [(2, datetime(2023, 1, 1), 1.0)], "customer_id int, t_ref timestamp, spend double"
-    )
-    upsert_latest(spark, path, stale, ["customer_id"], "t_ref")
-    out = {r.customer_id: r.spend for r in t.read().collect()}
-    assert out[2] == 25.0
-
-    # plain parquet with no manifest: refused, files left as they were
-    plain = str(tmp_path / "plain")
-    base.write.parquet(plain)
-
-    def snapshot():
-        snap = {}
-        for root, _dirs, files in os.walk(plain):
-            for f in files:
-                with open(os.path.join(root, f), "rb") as fh:
-                    snap[os.path.relpath(os.path.join(root, f), plain)] = fh.read()
-        return snap
-
-    before = snapshot()
-    with pytest.raises(ValueError, match=re.escape(plain)):
-        upsert_latest(spark, plain, updates, ["customer_id"], "t_ref")
-    assert snapshot() == before
 
 
 @requires_testdata
@@ -249,93 +201,3 @@ def test_whale_skew_delta_completes_where_set_degrades(spark):
         f"the delta engine's whale-safety margin (delta={delta_secs:.1f}s) "
         "no longer demonstrates; grow the stress size"
     )
-
-
-def test_upsert_latest_routes_mtable_targets_through_manifest_commit(
-    spark, tmp_path
-):
-    """r13 (VERDICT r12 #8): when the target is an existing ACID mtable,
-    upsert_latest must merge through MTable.merge_upsert — each call lands
-    as one atomic manifest version, stale updates lose, and full (ts,
-    tiebreak) ties resolve in favor of the update (deterministic, unlike
-    the directory route's partition-order luck)."""
-    from datetime import datetime
-
-    from retailfeaturestore_spark.operators.incremental import upsert_latest
-    from retailfeaturestore_spark.sources.mtable import MTable
-
-    path = str(tmp_path / "gold_mt")
-    t = MTable(spark, path)
-    t.write(
-        spark.createDataFrame(
-            [(1, datetime(2024, 1, 1), 10.0), (2, datetime(2024, 1, 1), 20.0)],
-            "customer_id int, t_ref timestamp, spend double",
-        )
-    )
-    v0 = t.versions()[-1]
-
-    updates = spark.createDataFrame(
-        [
-            (2, datetime(2024, 2, 1), 25.0),  # newer: wins
-            (3, datetime(2024, 1, 15), 30.0),  # new key: inserts
-        ],
-        "customer_id int, t_ref timestamp, spend double",
-    )
-    n = upsert_latest(spark, path, updates, ["customer_id"], "t_ref")
-    assert n == 3
-    assert t.versions()[-1] == v0 + 1  # ONE atomic commit, not a dir swap
-    out = {r.customer_id: r.spend for r in t.read().collect()}
-    assert out == {1: 10.0, 2: 25.0, 3: 30.0}
-
-    # stale update (older ts) must NOT win — and must not burn data
-    stale = spark.createDataFrame(
-        [(2, datetime(2023, 1, 1), 1.0)],
-        "customer_id int, t_ref timestamp, spend double",
-    )
-    upsert_latest(spark, path, stale, ["customer_id"], "t_ref")
-    assert {r.customer_id: r.spend for r in t.read().collect()}[2] == 25.0
-
-    # full tie (equal ts, equal tiebreak): the UPDATE wins
-    tie = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1), 11.0)],
-        "customer_id int, t_ref timestamp, spend double",
-    )
-    upsert_latest(spark, path, tie, ["customer_id"], "t_ref")
-    assert {r.customer_id: r.spend for r in t.read().collect()}[1] == 11.0
-
-
-def test_stream_upsert_gold_lands_on_mtable_when_target_is_one(spark, tmp_path):
-    """The streaming gold maintainer inherits the mtable route through
-    upsert_latest: micro-batches land as manifest commits."""
-    from datetime import datetime
-
-    from retailfeaturestore_spark.sources.mtable import MTable
-    from retailfeaturestore_spark.streaming.materialize import stream_upsert_gold
-
-    path = str(tmp_path / "gold_stream_mt")
-    t = MTable(spark, path)
-    t.write(
-        spark.createDataFrame(
-            [(1, datetime(2024, 1, 1), 10.0)],
-            "customer_id int, t_ref timestamp, spend double",
-        )
-    )
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(1, datetime(2024, 3, 1), 99.0), (2, datetime(2024, 1, 2), 7.0)],
-        "customer_id int, t_ref timestamp, spend double",
-    ).write.parquet(src)
-    stream = spark.readStream.schema(
-        "customer_id int, t_ref timestamp, spend double"
-    ).parquet(src)
-    q = stream_upsert_gold(
-        stream,
-        path,
-        keys=["customer_id"],
-        ts_col="t_ref",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-    out = {r.customer_id: r.spend for r in t.read().collect()}
-    assert out == {1: 99.0, 2: 7.0}
-    assert len(t.versions()) == 2

@@ -64,6 +64,44 @@ def test_materialize_online_foreachpartition(spark, tmp_path):
     assert rec["key"] == "fs:customer:1" and rec["spend_30d"] == "10.0"
 
 
+def test_materialize_online_ttl_comes_from_the_environment(spark, tmp_path, monkeypatch):
+    """``REDIS_TTL_SECONDS`` is the one TTL route (the reference's
+    ``jobs/materialize_online.py:55-56``): set, every published key gets
+    that TTL; unset, no key gets one.  Partitions publish in worker
+    processes, so the fake records each call in a file."""
+    df = spark.createDataFrame(
+        [(i, datetime(2024, 1, i), "UK", float(i)) for i in range(1, 7)],
+        "customer_id int, t_ref timestamp, country string, spend_30d double",
+    ).repartition(3)
+    keys = {f"fs:customer:{i}" for i in range(1, 7)}
+
+    def publish(run):
+        out_dir = tmp_path / run
+        out_dir.mkdir()
+
+        class FileRedis(DictRedis):
+            def hset(self, key, mapping):
+                (out_dir / f"hset_{key.replace(':', '_')}").write_text(key)
+
+            def expire(self, key, ttl):
+                (out_dir / f"expire_{key.replace(':', '_')}").write_text(
+                    json.dumps([key, ttl])
+                )
+
+        assert materialize_online(df, ["spend_30d"], client_factory=FileRedis) == 6
+        written = {p.read_text() for p in out_dir.glob("hset_*")}
+        ttls = dict(json.loads(p.read_text()) for p in out_dir.glob("expire_*"))
+        return written, ttls
+
+    monkeypatch.setenv("REDIS_TTL_SECONDS", "60")
+    written, ttls = publish("with_ttl")
+    assert written == keys and ttls == {k: 60 for k in keys}
+
+    monkeypatch.delenv("REDIS_TTL_SECONDS")
+    written, ttls = publish("without_ttl")
+    assert written == keys and ttls == {}
+
+
 def test_online_onehot_fields_agree_with_meta_country(spark, tmp_path):
     """Every stored ``country__{c}`` field must agree with ``meta:country``:
     serving lets a present field win over the one-hot it re-derives from
