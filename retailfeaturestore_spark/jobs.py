@@ -27,6 +27,7 @@ from .operators.normalize import normalize_orders_raw
 from .operators.pit import interval_existence_labels, latest_per_key
 from .operators.window_features import build_customer_features
 from .schemas import ORDERS_BRONZE
+from .sources.xlsx import read_xlsx
 
 __all__ = [
     "read_excel_sheets",
@@ -40,63 +41,20 @@ __all__ = [
 ]
 
 
-def read_excel_sheets(
-    spark: SparkSession,
-    xlsx_path: str,
-    schema: str | None = None,
-    shard_threshold_bytes: int = 64 << 20,
-) -> DataFrame:
+def read_excel_sheets(spark: SparkSession, xlsx_path: str) -> DataFrame:
     """S1 Excel multi-sheet scan: every sheet of every workbook, UNION ALL
-    (``jobs/ingest_xlsx_to_parquet.py:8-11``).  Parsed on EXECUTORS by the
-    dependency-free reader in :mod:`..sources.xlsx` (binaryFile ->
-    mapInPandas, one task per workbook) — no openpyxl needed, and unlike the
+    (``jobs/ingest_xlsx_to_parquet.py:8-11``), in the reference's retail
+    invoice layout.  Parsed on EXECUTORS by the dependency-free reader
+    :func:`..sources.xlsx.read_xlsx` — no openpyxl needed, and unlike the
     reference's driver-side ``pd.read_excel`` it scales with the number of
-    workbooks in the landing zone.  ``schema`` declares the output columns
-    (DDL string); defaults to the reference's retail invoice layout.
-
-    Giant-workbook dispatch (r12): when any worksheet's uncompressed XML
-    exceeds ``shard_threshold_bytes`` (the zip central directory records
-    it), the whole read goes through
-    :func:`..sources.xlsx.read_xlsx_sharded` so ONE 1M-row workbook parses
-    at full cluster width (row-aligned byte shards, ~4x the per-file
-    reader's throughput) instead of serializing through one task per
-    sheet.  Directories of ordinary workbooks stay on the per-file reader,
-    which avoids the sharded path's duplicated inflation.  Probe cost is
-    bounded: the listing's COMPRESSED size (free) prefilters — only
-    workbooks above a small absolute floor (1 MiB compressed) get a
-    central-directory read (a few KB each), so a landing zone of
-    thousands of small workbooks pays zero zip opens (r12 code-review
-    finding).  The floor is absolute, NOT a compression-ratio guess:
-    repetitive numeric sheet XML routinely deflates 25-50:1, so a
-    threshold/20 cut would silently serialize exactly the giant
-    worksheets the sharded path targets (r12 advice finding)."""
-    import zipfile
-
-    from .sources.xlsx import _list_workbooks, _open_input, read_xlsx, read_xlsx_sharded
-
-    ddl = schema or (
+    workbooks and sheets in the landing zone, and a giant sheet is cut into
+    row-aligned shards parsed in parallel."""
+    return read_xlsx(
+        spark,
+        xlsx_path,
         "Invoice string, StockCode string, Description string, Quantity long, "
-        "InvoiceDate double, Price double, `Customer ID` double, Country string"
+        "InvoiceDate double, Price double, `Customer ID` double, Country string",
     )
-    probe_floor = min(1 << 20, shard_threshold_bytes)
-    for _, loc, csize in _list_workbooks(xlsx_path):
-        if csize < probe_floor:
-            continue  # small workbook: skip the (cheap) directory probe
-        raw = _open_input(loc)
-        try:
-            with zipfile.ZipFile(raw) as zf:
-                if any(
-                    zi.file_size > shard_threshold_bytes
-                    for zi in zf.infolist()
-                    if zi.filename.startswith("xl/worksheets/")
-                ):
-                    return read_xlsx_sharded(spark, xlsx_path, ddl, header=True)
-        finally:
-            try:
-                raw.close()
-            except Exception:  # noqa: BLE001 — already closed
-                pass
-    return read_xlsx(spark, xlsx_path, ddl, header=True)
 
 
 def ingest_to_bronze(spark: SparkSession, raw: DataFrame, bronze_path: str) -> None:

@@ -26,9 +26,9 @@ Scale notes (100 TB):
 - Range-frame bounds are in MICROSECONDS over ``unix_micros(ts)`` so
   sub-second event times are exact (casting to seconds would truncate).
 - The per-frame ``collect_set`` state for W3 is bounded by per-entity distinct
-  SKUs inside the window horizon; for whale entities enable
-  ``unique_mode="approx"`` (HLL ``approx_count_distinct``) — documented opt-in,
-  divergence recorded, or pre-aggregate to (entity, sku, day) grain first.
+  SKUs inside the window horizon; whale entities use the default
+  ``unique_mode="delta"`` (exact interval-delta running sums, O(1) per-row
+  state), or pre-aggregate to (entity, sku, day) grain first.
 - AQE skew-join/partition handling covers entity-key skew; no salting needed
   for window ops (Spark windows don't support partial aggregation anyway, so
   the mitigation for a pathological whale is the day-grain pre-aggregation).
@@ -39,7 +39,8 @@ shuffles).  Monetary inputs are fixed-decimal, so the engine accumulates
 them as exact long 'cents' (``functions.expressions.cents`` — round to the
 input's decimal scale, sum integers, divide back): order-independent,
 bit-reproducible, and on the primitive-long codegen fast path (~2x over
-DECIMAL aggregation).  ``amount_scale`` sets the quantization.
+DECIMAL aggregation).  The quantization is 4 decimals for order-line
+amounts and 6 for event values.
 
 Windowed sums in O(1) per row: a bounded ``[t - w, t]`` range frame is a
 sliding frame, and Spark re-aggregates a sliding frame's whole buffer on
@@ -173,8 +174,6 @@ def build_customer_features(
     sku_col: str = "stock_code",
     amount_col: str = "line_amount",
     cancel_col: str = "is_cancel",
-    round_to: int | None = None,
-    amount_scale: int = 4,
     unique_mode: str = "delta",
     carry_cols: tuple[str, ...] | None = None,
     label_events: DataFrame | None = None,
@@ -193,11 +192,10 @@ def build_customer_features(
     ``unique_mode`` selects the W3 distinct-count engine: ``"delta"``
     (default: exact interval-delta running sums, O(1) per-row state — safe
     for whale entities at 100 TB, see ``operators.windowed_distinct``),
-    ``"set"`` (``collect_set`` window state — exact and ~1.5x faster at
+    or ``"set"`` (``collect_set`` window state — exact and ~1.5x faster at
     retail cardinalities, but per-row set state is the known memory cliff
-    when one entity sees millions of distinct keys inside a window), or
-    ``"approx"`` (HLL estimate).  All three produce the same column names;
-    "set" and "delta" the same values.  The default is the engine that
+    when one entity sees millions of distinct keys inside a window).  Both
+    produce the same columns and values.  The default is the engine that
     cannot fall over — callers that know their cardinality opt into "set".
 
     ``label_events`` (optional) folds an interval-existence churn label (J2,
@@ -227,13 +225,13 @@ def build_customer_features(
     carried.  ``None`` preserves every input column (the generic contract).
     """
     windows = windows or {"1d": 1, "7d": 7, "30d": 30}
-    if unique_mode not in ("set", "approx", "delta"):
+    if unique_mode not in ("set", "delta"):
         raise ValueError(f"unknown unique_mode: {unique_mode!r}")
     q = sql_ident
     e, ts, sku, cancel = q(entity_col), q(ts_col), q(sku_col), q(cancel_col)
     labelled = label_events is not None
     types = {f.name: f.dataType for f in bronze.schema.fields}
-    scale = f"CAST({10 ** amount_scale} AS DOUBLE)"
+    scale = "CAST(10000 AS DOUBLE)"
     internal = ["__ts_us", "__txn", "__cancel", "__spend", *(["__lab"] if labelled else [])]
     cols = [*types, *internal]
 
@@ -303,11 +301,6 @@ def build_customer_features(
         frames += [f"sum({c}) OVER ({spec} {_before(days)}) AS {c}_before{i}" for c in sums]
         if unique_mode == "set":
             frames.append(f"size(collect_set({sku}) OVER ({spec} {_sliding(days)})) AS __uniq{i}")
-        elif unique_mode == "approx":
-            # Documented divergence: HLL estimate for whale-entity scale.
-            frames.append(
-                f"approx_count_distinct({sku}) OVER ({spec} {_sliding(days)}) AS __uniq{i}"
-            )
     # W6 tenure: the entity-wide first event is a RUNNING min over the same
     # ordering — identical value (ordered ascending, the running min IS the
     # partition min seen so far), but it shares the family's WindowExec
@@ -336,19 +329,16 @@ def build_customer_features(
         txn, cancels = f"__txn{i}", f"__cancel{i}"
         feats[f"txn_count_{s}"] = txn
         feats[f"spend_{s}"] = f"__spend{i}"
-        if unique_mode != "delta":
+        if unique_mode == "set":
             feats[f"unique_skus_{s}"] = f"__uniq{i}"
         feats[f"avg_basket_value_{s}"] = f"__spend{i} / {_positive_or_one(txn)}"
         rate = f"{cancels} / {_positive_or_one(f'({cancels} + {txn})')}"
         feats[f"cancel_rate_{s}"] = f"least(greatest({rate}, 0.0D), 1.0D)"
 
     def final(x: str) -> str:
-        # double, optionally rounded, then the P13 NaN sweep
-        # (jobs/build_feature_views.py:68-70) as DataFrame.na.fill does it
-        x = f"CAST({x} AS DOUBLE)"
-        if round_to is not None:
-            x = f"round({x}, {int(round_to)})"
-        return f"coalesce(nanvl({x}, NULL), 0.0D)"
+        # double, then the P13 NaN sweep (jobs/build_feature_views.py:68-70)
+        # as DataFrame.na.fill does it
+        return f"coalesce(nanvl(CAST({x} AS DOUBLE), NULL), 0.0D)"
 
     out = [f"{final(q(c))} AS {q(c)}" if c in uniq else q(c) for c in cols if c not in internal]
     out += [f"{final(x)} AS {q(c)}" for c, x in feats.items()]
@@ -470,15 +460,13 @@ def incremental_customer_features(
 def user_activity_features(
     events: DataFrame,
     windows: dict[str, int] | None = None,
-    round_to: int | None = None,
-    amount_scale: int = 6,
 ) -> DataFrame:
     """The same W1-W6 family expressed over the ``events`` stream table
     (user_id/ts/event_type/value) — the driver-testdata face of the feature
     engine: count, sum, distinct-type, guarded average, error rate, tenure.
     """
     windows = windows or {"1d": 1, "7d": 7}
-    scale = f"CAST({10 ** amount_scale} AS DOUBLE)"
+    scale = "CAST(1000000 AS DOUBLE)"
     spec = "PARTITION BY user_id ORDER BY __ts_us"
     # a window whose values are all NULL sums to NULL, as a bounded SUM
     sums = {"__n": "1", "__n_val": "CAST(__val IS NOT NULL AS BIGINT)", "__val": "__val",
@@ -501,9 +489,6 @@ def user_activity_features(
         for i in range(len(windows))
     )
 
-    def rounded(x: str) -> str:
-        return x if round_to is None else f"round({x}, {int(round_to)})"
-
     q = sql_ident
     out = [q(c) for c in events.columns]
     for i, s in enumerate(windows):
@@ -513,10 +498,10 @@ def user_activity_features(
         rate = f"least(greatest(__err{i} / {_positive_or_one(n)}, 0.0D), 1.0D)"
         out += [
             f"__n{i} AS {q(f'event_count_{s}')}",
-            f"{rounded(f'__sum{i}')} AS {q(f'value_sum_{s}')}",
+            f"__sum{i} AS {q(f'value_sum_{s}')}",
             f"__types{i} AS {q(f'unique_types_{s}')}",
-            f"{rounded(f'__sum{i} / {_positive_or_one(n)}')} AS {q(f'avg_value_{s}')}",
-            f"{rounded(rate)} AS {q(f'error_rate_{s}')}",
+            f"__sum{i} / {_positive_or_one(n)} AS {q(f'avg_value_{s}')}",
+            f"{rate} AS {q(f'error_rate_{s}')}",
         ]
     out.append("__tenure AS tenure_days")
     ctes = [

@@ -8424,49 +8424,40 @@ def q_xlsx_ingest_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 -> P1-P8/P16 composed end-to-end: a two-sheet workbook (sheet 2
     column-reordered, serial-number dates with fractional day parts, padded
     strings, quarantine rows) is parsed ON EXECUTORS by the dependency-free
-    xlsx reader (binaryFile -> mapInPandas), then pushed through the full
-    ingest normalize contract — including the Excel-serial -> UTC timestamp
+    xlsx reader (one task per sheet), then pushed through the full ingest
+    normalize contract — including the Excel-serial -> UTC timestamp
     repair the reference gets for free from pandas ``read_excel``
     (``jobs/ingest_xlsx_to_parquet.py:8-42``).  The oracle is a VALUES
     relation generated from the same row source as the workbook bytes, so
     this row is a true file-format-to-bronze differential check."""
-    from .operators.normalize import normalize_orders_raw
-    from .sources.xlsx import read_xlsx
-    from .sources.xlsx_fixture import ensure_fixture_workbook
-
-    path = ensure_fixture_workbook()
-    raw = read_xlsx(
-        spark,
-        path,
-        "Invoice string, StockCode string, Description string, Quantity long, "
-        "InvoiceDate double, Price double, `Customer ID` double, Country string",
-    )
-    return normalize_orders_raw(raw)
+    return _xlsx_ingest(spark)
 
 
 @register("xlsx_ingest_sharded", oracle=_XLSX_INGEST_ORACLE, tags=("source", "projection"))
 def q_xlsx_ingest_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same S1 file-format-to-bronze differential as
-    ``xlsx_ingest_normalize``, through the INTRA-sheet sharded reader
-    (``sources/xlsx.read_xlsx_sharded``): each worksheet's XML is cut into
+    ``xlsx_ingest_normalize``, with each worksheet's XML cut into
     row-aligned byte shards parsed by independent tasks — the scale path
-    for ONE giant workbook (the per-file reader serializes it through one
-    task per sheet; the sharded reader measured 52k rows/s vs 10k on the
-    1.07M-row UCI-shaped synthetic).  ``target_shard_bytes`` is forced
-    tiny here so the fixture exercises REAL multi-shard cuts (header-only
-    shards, boundary ownership, final sheetData cut) under the driver's
-    hash gate, not a degenerate single shard."""
+    for ONE giant workbook (the sharded parse measured 52k rows/s against
+    10k for one task per sheet on the 1.07M-row UCI-shaped synthetic).
+    ``target_shard_bytes`` is forced tiny here so the fixture exercises REAL
+    multi-shard cuts (header-only shards, boundary ownership, final
+    sheetData cut) under the driver's hash gate, not a degenerate single
+    shard."""
+    return _xlsx_ingest(spark, target_shard_bytes=2 << 10)
+
+
+def _xlsx_ingest(spark: SparkSession, **shards) -> DataFrame:
     from .operators.normalize import normalize_orders_raw
-    from .sources.xlsx import read_xlsx_sharded
+    from .sources.xlsx import read_xlsx
     from .sources.xlsx_fixture import ensure_fixture_workbook
 
-    path = ensure_fixture_workbook()
-    raw = read_xlsx_sharded(
+    raw = read_xlsx(
         spark,
-        path,
+        ensure_fixture_workbook(),
         "Invoice string, StockCode string, Description string, Quantity long, "
         "InvoiceDate double, Price double, `Customer ID` double, Country string",
-        target_shard_bytes=2 << 10,
+        **shards,
     )
     return normalize_orders_raw(raw)
 

@@ -4,17 +4,23 @@ Parity target: the reference loads both workbook sheets through pandas
 ``read_excel`` and concatenates them (``jobs/ingest_xlsx_to_parquet.py:8-11``,
 SURVEY.md §2.1 S1).  This environment has no openpyxl, and more importantly
 the reference's driver-side parse is the wrong shape for a lakehouse: here
-each workbook is parsed *on an executor* instead.
+each worksheet is parsed *on executors* instead.
 
-Spark shape: ``binaryFile`` source -> ``mapInPandas`` (Arrow-batched) with a
-caller-declared schema.  An xlsx file is a zip archive of XML parts, so the
-parser below is plain stdlib ``zipfile`` + ``xml.etree`` — no imports beyond
-what ships with Python.  Parallelism is per-FILE (a zip member cannot be
-split mid-stream), which is the honest unit for spreadsheet ingest: a 100 TB
-landing zone is thousands of workbooks, and each task parses one while the
-downstream normalize/bronze write redistributes on real keys.  A single
-giant workbook should be landed as CSV/parquet instead — documented limit,
-same advice the reference's pandas path would need.
+Spark shape: the driver lists the workbooks and reads each zip's central
+directory and ``workbook.xml`` (a few KB, the control-plane read every
+split-planning scan does) into ``(workbook, sheet, shard)`` plan rows, and
+``mapInPandas`` over a range of one id per partition parses plan row i in
+task i.  An ordinary sheet is one shard.  A giant sheet's
+DECOMPRESSED XML is cut into ``ceil(xml / target_shard_bytes)`` byte ranges
+aligned to ``<row>`` starts (capped at the session's default parallelism):
+row starts can never appear inside cell text (XML escapes '<' in content,
+and string payloads live in the separate sharedStrings part anyway), so a
+C-speed regex scan is a sound row splitter.  Each shard task re-opens the
+workbook, streams the member through zipfile's incremental inflater up to
+its slice end (DEFLATE is not seekable, but inflation is ~10x cheaper than
+the XML parse, so duplicating it buys N-way parse parallelism), cuts
+[first row start >= i*L/N, first row start >= (i+1)*L/N) and parses only
+that slice.  The parser is plain stdlib ``zipfile`` + ``xml.etree``.
 
 Supported xlsx surface (everything the reference's UCI retail workbook and
 common exporters emit): shared strings, inline strings, formula-cached
@@ -26,19 +32,17 @@ type repair.
 
 from __future__ import annotations
 
-import io
+import os
 import re
 import zipfile
 import xml.etree.ElementTree as ET
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 __all__ = [
     "read_xlsx",
-    "read_xlsx_sharded",
-    "parse_xlsx_bytes",
     "write_minimal_xlsx",
 ]
 
@@ -78,55 +82,6 @@ def _cell_value(cell: ET.Element, shared: list[str]):
         return None
 
 
-def parse_xlsx_bytes(
-    data: bytes, sheets: Iterable[str] | None = None
-) -> Iterator[tuple[str, list[list]]]:
-    """Yield ``(sheet_name, rows)`` per worksheet; rows are dense lists
-    (sparse cells filled with None), in sheet order."""
-    want = set(sheets) if sheets is not None else None
-    with zipfile.ZipFile(io.BytesIO(data)) as zf:
-        shared: list[str] = []
-        if "xl/sharedStrings.xml" in zf.namelist():
-            root = ET.fromstring(zf.read("xl/sharedStrings.xml"))
-            shared = [
-                "".join(t.text or "" for t in si.iter(f"{_MAIN_NS}t"))
-                for si in root.iter(f"{_MAIN_NS}si")
-            ]
-        rels = {
-            rel.get("Id"): rel.get("Target")
-            for rel in ET.fromstring(zf.read("xl/_rels/workbook.xml.rels")).iter(
-                f"{_PKG_REL_NS}Relationship"
-            )
-        }
-        wb = ET.fromstring(zf.read("xl/workbook.xml"))
-        for sheet_el in wb.iter(f"{_MAIN_NS}sheet"):
-            name = sheet_el.get("name")
-            if want is not None and name not in want:
-                continue
-            target = rels[sheet_el.get(_REL_NS)].lstrip("/")
-            member = target if target.startswith("xl/") else f"xl/{target}"
-            ws = ET.fromstring(zf.read(member))
-            rows: list[list] = []
-            width = 0
-            for row_el in ws.iter(f"{_MAIN_NS}row"):
-                row: list = []
-                for cell in row_el.iter(f"{_MAIN_NS}c"):
-                    ref = cell.get("r")
-                    if ref is not None:
-                        m = _CELL_REF.match(ref)
-                        idx = _col_index(m.group(1)) if m else len(row)
-                    else:
-                        idx = len(row)
-                    while len(row) <= idx:
-                        row.append(None)
-                    row[idx] = _cell_value(cell, shared)
-                width = max(width, len(row))
-                rows.append(row)
-            for row in rows:
-                row.extend([None] * (width - len(row)))
-            yield name, rows
-
-
 def coerce_cell(v, dt: T.DataType):
     """Coerce a raw cell value to the declared Spark type; uncoercible cells
     become null (ingest never fails on a bad cell — type repair beyond this
@@ -149,143 +104,41 @@ def coerce_cell(v, dt: T.DataType):
         return None
 
 
-def iter_workbook_rows(
-    content: bytes,
-    names: list[str],
-    dtypes: list[T.DataType],
-    header: bool,
-    sheet_list: list[str] | None,
-) -> Iterator[tuple[list, str]]:
-    """Yield ``(coerced_row, sheet_name)`` for every data row of every
-    selected sheet — the per-file parse of the mapInPandas reader."""
-    for sheet_name, rows in parse_xlsx_bytes(content, sheet_list):
-        if not rows:
-            continue
-        if header:
-            head = [str(c) if c is not None else "" for c in rows[0]]
-            pos = [head.index(n) if n in head else -1 for n in names]
-            body = rows[1:]
-        else:
-            pos = list(range(len(names)))
-            body = rows
-        for row in body:
-            yield (
-                [
-                    coerce_cell(row[p], dt) if 0 <= p < len(row) else None
-                    for p, dt in zip(pos, dtypes)
-                ],
-                sheet_name,
-            )
-
-
-def read_xlsx(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    header: bool = True,
-    sheets: Iterable[str] | None = None,
-    add_source_columns: bool = False,
-) -> DataFrame:
-    """All sheets of all workbooks under ``path`` as ONE DataFrame (the
-    reference's multi-sheet UNION ALL), parsed on executors.
-
-    ``schema`` declares the output columns; with ``header=True`` each sheet's
-    first row maps declared names to positions (sheets may order columns
-    differently), otherwise declared order = positional.  Values are coerced
-    to the declared type (numbers parsed from strings, integral floats
-    narrowed to ints); cells that don't coerce become null rather than
-    failing the ingest — type repair beyond that is the normalize layer's
-    contract.  ``add_source_columns`` appends (_source_file, _sheet) lineage.
-    """
-    out_schema = (
-        schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
-    )
-    full_schema = out_schema
-    if add_source_columns:
-        full_schema = T.StructType(
-            list(out_schema.fields)
-            + [
-                T.StructField("_source_file", T.StringType()),
-                T.StructField("_sheet", T.StringType()),
-            ]
-        )
-    names = [f.name for f in out_schema.fields]
-    dtypes = [f.dataType for f in out_schema.fields]
-    sheet_list = list(sheets) if sheets is not None else None
-
-    def _parse(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            for file_path, content in zip(pdf["path"], pdf["content"]):
-                out_rows: list[list] = []
-                out_meta: list[tuple[str, str]] = []
-                for row, sheet_name in iter_workbook_rows(
-                    bytes(content), names, dtypes, header, sheet_list
-                ):
-                    out_rows.append(row)
-                    out_meta.append((file_path, sheet_name))
-                pdf_out = pd.DataFrame(out_rows, columns=names)
-                if add_source_columns:
-                    pdf_out["_source_file"] = [m[0] for m in out_meta]
-                    pdf_out["_sheet"] = [m[1] for m in out_meta]
-                yield pdf_out
-
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
-    return binary.mapInPandas(_parse, schema=full_schema)
-
-
-# ---------------------------------------------------------------------------
-# SHARDED single-workbook reader — intra-sheet parallelism.
-#
-# read_xlsx parallelizes per FILE (a zip member can't be split mid-DEFLATE
-# stream), which is the right unit for a landing zone of thousands of
-# workbooks but serializes ONE giant workbook through two tasks (VERDICT r11
-# next-round #7: ~18k rows/s on the 1.07M-row UCI-shaped synthetic).  The
-# fix is to shard each worksheet's DECOMPRESSED XML by byte ranges aligned
-# to <row> boundaries: row starts ('<row ') can never appear inside cell
-# text (XML escapes '<' in content, and xlsx string payloads live in the
-# separate sharedStrings part anyway), so a C-speed bytes.find() scan is a
-# sound row splitter.  Each shard is its own Spark task that re-opens the
-# workbook, streams the member through zipfile's incremental inflater up to
-# its slice end (shard i decompresses ~i/N of the member — DEFLATE is not
-# seekable, but inflation is ~10x cheaper than XML parse, so duplicating it
-# buys N-way parse parallelism), cuts [first row-start >= i*L/N, first
-# row-start >= (i+1)*L/N), and ET-parses only that slice.  The plan is a
-# tiny (path, member, shard) DataFrame repartitioned one-row-per-task —
-# the same shape Spark itself uses for parquet row-group splits.
-# ---------------------------------------------------------------------------
-
 _ROW_START = re.compile(rb"<(?:[A-Za-z0-9._]+:)?row[ >/]")
 _SHEETDATA_END = re.compile(rb"</(?:[A-Za-z0-9._]+:)?sheetData>")
 
 
-def _list_workbooks(path: str) -> list[tuple[str, str, int]]:
-    """Driver-side file enumeration (the same role Spark's own
-    InMemoryFileIndex plays for parquet): ``(lineage_uri, open_loc,
-    compressed_size)`` per workbook under ``path`` — lineage_uri matches
-    the binaryFile source's ``path`` column format (``file:/abs/path``
-    locally, the full scheme URI otherwise) so ``_source_file`` is
-    byte-identical across the two readers; open_loc is what pyarrow.fs
-    resolves; compressed_size is the listing's file size (free — no open),
-    used by dispatch prefilters.  pyarrow handles local paths and any
-    scheme the installed arrow filesystems support (file://, hdfs://,
-    s3://)."""
+def _hidden(name: str) -> bool:
+    """A file or directory name Spark's file index skips: dot files,
+    ``_`` names that are not ``key=value`` partitions (``_SUCCESS``,
+    ``_temporary``) and in-flight ``._COPYING_`` uploads."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _list_workbooks(path: str) -> list[str]:
+    """Driver-side file enumeration (the role Spark's own InMemoryFileIndex
+    plays for parquet): the location of every workbook under ``path``,
+    skipping hidden files and directories as that index does.  pyarrow
+    handles local paths and any scheme the installed arrow filesystems
+    support (file://, hdfs://, s3://)."""
     import pyarrow.fs as pafs
 
-    scheme = path.split("://", 1)[0] + "://" if "://" in path else None
+    if "://" not in path:
+        path = os.path.abspath(path)
+    scheme = path.split("://", 1)[0] + "://" if "://" in path else ""
     fs, p = pafs.FileSystem.from_uri(path)
-    info = fs.get_file_info(p)
-    if info.type == pafs.FileType.File:
-        files = [(p, info.size or 0)]
-    else:
-        sel = pafs.FileSelector(p, recursive=True)
-        files = sorted(
-            (i.path, i.size or 0) for i in fs.get_file_info(sel) if i.is_file
-        )
-    if scheme:
-        return [(scheme + f, scheme + f, sz) for f, sz in files]
-    return [("file:" + f, f, sz) for f, sz in files]
+    if fs.get_file_info(p).type == pafs.FileType.File:
+        return [scheme + p]
+    root = p.rstrip("/") + "/"
+    return sorted(
+        scheme + i.path
+        for i in fs.get_file_info(pafs.FileSelector(p, recursive=True))
+        if i.is_file and not any(map(_hidden, i.path[len(root):].split("/")))
+    )
 
 
 def _open_input(path: str):
@@ -295,9 +148,9 @@ def _open_input(path: str):
     return fs.open_input_file(p)
 
 
-def _workbook_sheets(zf: zipfile.ZipFile) -> list[tuple[str, str]]:
-    """(sheet_name, member) in workbook order — the enumeration read is
-    workbook.xml + its rels, a few KB regardless of data size."""
+def _sheet_members(zf: zipfile.ZipFile) -> list[str]:
+    """Every worksheet's zip member, in workbook order — the enumeration
+    read is workbook.xml + its rels, a few KB regardless of data size."""
     rels = {
         rel.get("Id"): rel.get("Target")
         for rel in ET.fromstring(zf.read("xl/_rels/workbook.xml.rels")).iter(
@@ -308,7 +161,7 @@ def _workbook_sheets(zf: zipfile.ZipFile) -> list[tuple[str, str]]:
     for sheet_el in ET.fromstring(zf.read("xl/workbook.xml")).iter(f"{_MAIN_NS}sheet"):
         target = rels[sheet_el.get(_REL_NS)].lstrip("/")
         member = target if target.startswith("xl/") else f"xl/{target}"
-        out.append((sheet_el.get("name"), member))
+        out.append(member)
     return out
 
 
@@ -419,10 +272,8 @@ def _parse_row_elements(
     data: bytes, shared: list[str], ns_decls: list[tuple[str, str]] = ()
 ) -> Iterator[list]:
     """Parse a byte slice of complete <row> elements (cut on row starts)
-    into sparse-filled row lists — the same cell semantics as
-    parse_xlsx_bytes, minus the per-sheet global width pad (consumers
-    index by header position with a bounds guard, so trailing Nones are
-    equivalent).  ``ns_decls`` replays the worksheet root's namespace
+    into sparse-filled row lists (no trailing pad: consumers index by
+    header position with a bounds guard).  ``ns_decls`` replays the worksheet root's namespace
     declarations on the synthetic wrapper so prefixed row/cell attributes
     (x14ac:dyDescent et al.) stay bound."""
     parts = [b"<sheetData"]
@@ -456,182 +307,121 @@ def _parse_row_elements(
         yield row
 
 
-def read_xlsx_sharded(
+def parse_shard(
+    zf: zipfile.ZipFile,
+    member: str,
+    shard: int,
+    n_shards: int,
+    names: list[str],
+    dtypes: list[T.DataType],
+) -> list[list]:
+    """The data rows of shard ``shard`` of ``n_shards`` of worksheet
+    ``member``, coerced to ``dtypes`` — the body of one reader task.
+
+    The sheet's first row is its header: it maps each of ``names`` to a
+    column position (sheets may order columns differently; a name the
+    header lacks reads NULL).  A shard owns the data rows whose ``<row``
+    start lies in its byte range ``[shard * L/N, (shard + 1) * L/N)`` of
+    the member's ``L`` decompressed bytes, so every row belongs to exactly
+    one shard."""
+    xml_size = zf.getinfo(member).file_size
+    chunk = -(-xml_size // n_shards)
+    start_t, end_t = shard * chunk, (shard + 1) * chunk
+    with zf.open(member) as fh:
+        sc = _MemberScanner(fh)
+        first = sc.find(_ROW_START, 0)
+        if first < 0:
+            return []  # empty sheet
+        ns_decls = _root_namespaces(sc.slice(0, first))
+        shared = _shared_strings(zf)
+        hdr_end = sc.find(_ROW_START, first + 4)
+        if hdr_end < 0:
+            hdr_end = sc.find(_SHEETDATA_END, first)
+        if hdr_end < 0:
+            hdr_end = sc.end()
+        hdr = next(_parse_row_elements(sc.slice(first, hdr_end), shared, ns_decls), [])
+        head = [str(c) if c is not None else "" for c in hdr]
+        pos_map = [head.index(n) if n in head else -1 for n in names]
+        # '<row[ >/]' cannot match outside sheetData (worksheet-level
+        # elements like <rowBreaks> fail the delimiter; '<' is escaped
+        # inside cell text), so no sheetData-end probe is needed to
+        # validate lo — and the skip phase discards behind its frontier,
+        # so memory stays O(shard slice)
+        scan_from = max(start_t, hdr_end)
+        sc.discard_to(max(scan_from - sc._STRADDLE, 0))
+        lo = sc.find(_ROW_START, scan_from, discard=True)
+        if lo < 0 or lo >= end_t:
+            return []  # no row starts inside this shard's range
+        hi = sc.find(_ROW_START, end_t)
+        if hi < 0:
+            # last occupied shard: cut at the sheetData close.  Search from
+            # lo, NOT end_t — the ceil-sized final range can overshoot EOF,
+            # and '</sheetData>' never appears between rows, so the first
+            # match past lo is the data end.
+            hi = sc.find(_SHEETDATA_END, lo)
+            if hi < 0:
+                hi = sc.end()
+        return [
+            [
+                coerce_cell(row[p], dt) if 0 <= p < len(row) else None
+                for p, dt in zip(pos_map, dtypes)
+            ]
+            for row in _parse_row_elements(sc.slice(lo, hi), shared, ns_decls)
+        ]
+
+
+def read_xlsx(
     spark: SparkSession,
     path: str,
     schema: T.StructType | str,
-    header: bool = True,
-    sheets: Iterable[str] | None = None,
-    add_source_columns: bool = False,
     target_shard_bytes: int = 8 << 20,
 ) -> DataFrame:
-    """``read_xlsx`` semantics (same schema/header/coercion contract, same
-    multi-sheet UNION) with INTRA-sheet parallelism: each worksheet is cut
-    into ``ceil(uncompressed_xml / target_shard_bytes)`` row-aligned byte
-    shards (capped at the session's default parallelism per sheet), each
-    parsed by its own task.  Use
-    it when the landing zone is one giant workbook rather than many; for
-    directories of ordinary workbooks the per-file reader avoids the
-    duplicated inflation and is the better default."""
+    """All sheets of all workbooks under ``path`` as ONE DataFrame (the
+    reference's multi-sheet UNION ALL), parsed on executors.
+
+    ``schema`` declares the output columns; each sheet's header row maps
+    the declared names to positions, as the reference's ``pd.read_excel``
+    does.  Values are coerced to the declared type (numbers parsed from
+    strings, integral floats narrowed to ints); cells that don't coerce
+    become null rather than failing the ingest — type repair beyond that is
+    the normalize layer's contract.  Each worksheet is
+    ``ceil(uncompressed_xml / target_shard_bytes)`` row-aligned shards,
+    capped at the session's default parallelism, each parsed by its own
+    task (:func:`parse_shard`)."""
     out_schema = (
         schema if isinstance(schema, T.StructType) else T.StructType.fromDDL(schema)
     )
-    full_schema = out_schema
-    if add_source_columns:
-        full_schema = T.StructType(
-            list(out_schema.fields)
-            + [
-                T.StructField("_source_file", T.StringType()),
-                T.StructField("_sheet", T.StringType()),
-            ]
-        )
     names = [f.name for f in out_schema.fields]
     dtypes = [f.dataType for f in out_schema.fields]
-    want = set(sheets) if sheets is not None else None
     cap = spark.sparkContext.defaultParallelism
 
-    # enumeration: central directory + workbook.xml per file — KBs each,
-    # the control-plane read every split-planning scan does
-    plan_rows: list[tuple] = []
-    for uri, loc, _csize in _list_workbooks(path):
-        raw = _open_input(loc)
-        try:
-            with zipfile.ZipFile(raw) as zf:
-                sizes = {zi.filename: zi.file_size for zi in zf.infolist()}
-                for sheet_name, member in _workbook_sheets(zf):
-                    if want is not None and sheet_name not in want:
-                        continue
-                    xml_size = sizes.get(member, 0)
-                    n_shards = max(
-                        1, min(cap, -(-xml_size // target_shard_bytes))
-                    )
-                    for i in range(n_shards):
-                        plan_rows.append(
-                            (uri, loc, member, sheet_name, i, n_shards, xml_size)
-                        )
-        finally:
-            try:
-                raw.close()
-            except Exception:  # noqa: BLE001 — already closed
-                pass
+    plan_rows: list[tuple[str, str, int, int]] = []
+    for loc in _list_workbooks(path):
+        with _open_input(loc) as raw, zipfile.ZipFile(raw) as zf:
+            for member in _sheet_members(zf):
+                xml_size = zf.getinfo(member).file_size
+                n_shards = max(1, min(cap, -(-xml_size // target_shard_bytes)))
+                plan_rows += [(loc, member, i, n_shards) for i in range(n_shards)]
     if not plan_rows:
-        return spark.createDataFrame([], schema=full_schema)
+        return spark.createDataFrame([], schema=out_schema)
 
     def _parse_shards(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        # per-task handle cache; BOTH layers closed in the finally below
-        # (ZipFile.close() does not close a file object it was handed, so
-        # the pyarrow NativeFile must be tracked separately — r12
-        # code-review finding: long-lived executors leaked one descriptor
-        # per workbook per batch)
-        opened: dict[str, tuple[object, zipfile.ZipFile, list[str]]] = {}
+        for pdf in batches:
+            for i in pdf["id"]:
+                loc, member, shard, n_shards = plan_rows[i]
+                with _open_input(loc) as raw, zipfile.ZipFile(raw) as zf:
+                    rows = parse_shard(zf, member, shard, n_shards, names, dtypes)
+                if rows:
+                    yield pd.DataFrame(rows, columns=names)
 
-        def handle(loc: str) -> tuple[zipfile.ZipFile, list[str]]:
-            if loc not in opened:
-                raw = _open_input(loc)
-                zf = zipfile.ZipFile(raw)
-                opened[loc] = (raw, zf, _shared_strings(zf))
-            _raw, zf, shared = opened[loc]
-            return zf, shared
-
-        def shard_frames():
-            for pdf in batches:
-                for uri, loc, member, sheet_name, shard, n_shards, xml_size in zip(
-                    pdf["path"], pdf["loc"], pdf["member"], pdf["sheet"],
-                    pdf["shard"], pdf["n_shards"], pdf["xml_size"],
-                ):
-                    zf, shared = handle(loc)
-                    chunk = -(-int(xml_size) // int(n_shards))
-                    start_t, end_t = int(shard) * chunk, (int(shard) + 1) * chunk
-                    with zf.open(member) as fh:
-                        sc = _MemberScanner(fh)
-                        first = sc.find(_ROW_START, 0)
-                        if first < 0:
-                            continue  # empty sheet
-                        ns_decls = _root_namespaces(sc.slice(0, first))
-                        hdr_end = first
-                        if header:
-                            nxt = sc.find(_ROW_START, first + 4)
-                            if nxt < 0:
-                                nxt = sc.find(_SHEETDATA_END, first)
-                            hdr_end = nxt if nxt >= 0 else sc.end()
-                            hdr_rows = list(
-                                _parse_row_elements(
-                                    sc.slice(first, hdr_end), shared, ns_decls
-                                )
-                            )
-                            head = [
-                                str(c) if c is not None else ""
-                                for c in (hdr_rows[0] if hdr_rows else [])
-                            ]
-                            pos_map = [
-                                head.index(n) if n in head else -1 for n in names
-                            ]
-                        else:
-                            pos_map = list(range(len(names)))
-                        # data region begins after the header row (or at the
-                        # first row when header=False); shard ownership = row
-                        # starts in [start_t, end_t).  '<row[ >/]' cannot
-                        # match outside sheetData (worksheet-level elements
-                        # like <rowBreaks> fail the delimiter; '<' is escaped
-                        # inside cell text), so no sheetData-end probe is
-                        # needed to validate lo — and the skip phase discards
-                        # behind its frontier, so memory stays O(shard slice)
-                        data_floor = hdr_end if header else first
-                        scan_from = max(start_t, data_floor)
-                        sc.discard_to(max(scan_from - sc._STRADDLE, 0))
-                        lo = sc.find(_ROW_START, scan_from, discard=True)
-                        if lo < 0 or lo >= end_t:
-                            continue  # no row starts inside this shard's range
-                        hi = sc.find(_ROW_START, end_t)
-                        if hi < 0:
-                            # last occupied shard: cut at the sheetData
-                            # close.  Search from lo, NOT end_t — the
-                            # ceil-sized final range can overshoot EOF, and
-                            # '</sheetData>' never appears between rows so
-                            # the first match past lo is the data end.
-                            # (Only THIS shard ever scans the member tail.)
-                            hi = sc.find(_SHEETDATA_END, lo)
-                            if hi < 0:
-                                hi = sc.end()
-                        out_rows: list[list] = []
-                        for row in _parse_row_elements(
-                            sc.slice(lo, hi), shared, ns_decls
-                        ):
-                            out_rows.append(
-                                [
-                                    coerce_cell(row[p], dt)
-                                    if 0 <= p < len(row)
-                                    else None
-                                    for p, dt in zip(pos_map, dtypes)
-                                ]
-                            )
-                    yield uri, sheet_name, out_rows
-
-        try:
-            for uri, sheet_name, out_rows in shard_frames():
-                pdf_out = pd.DataFrame(out_rows, columns=names)
-                if add_source_columns:
-                    pdf_out["_source_file"] = uri
-                    pdf_out["_sheet"] = sheet_name
-                yield pdf_out
-        finally:
-            for raw, zf, _shared in opened.values():
-                try:
-                    zf.close()
-                finally:
-                    try:
-                        raw.close()
-                    except Exception:  # noqa: BLE001 — already closed
-                        pass
-
-    plan = spark.createDataFrame(
-        plan_rows,
-        schema="path string, loc string, member string, sheet string, "
-        "shard int, n_shards int, xml_size bigint",
-    ).repartition(len(plan_rows))
-    return plan.mapInPandas(_parse_shards, schema=full_schema)
+    # one plan row per partition and no exchange: task i parses plan row i.
+    # A JVM range, not a frame of the plan rows: those would go through a
+    # Python worker of their own in every task (~40 ms more per read of a
+    # two-sheet workbook on 4 cores).
+    plan = spark.range(0, len(plan_rows), 1, len(plan_rows))
+    return plan.mapInPandas(_parse_shards, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------

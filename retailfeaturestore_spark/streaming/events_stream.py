@@ -17,22 +17,14 @@ from pyspark.sql import functions as F
 from ..functions.expressions import money_sum
 
 
-def batch_equivalent_counts(
-    spark: SparkSession, sf_dir: str, window: str = "1 day", slide: str | None = None
-) -> DataFrame:
-    """Per-window event counts over a batch scan of ``events`` (tumbling
+def batch_equivalent_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-day event counts over a batch scan of ``events`` (tumbling
     windows are date_trunc-expressible, so the DuckDB oracle checks them)."""
     from ..io import load_table
 
-    return _batch_counts(load_table(spark, sf_dir, "events"), window, slide)
-
-
-def _batch_counts(
-    events: DataFrame, window: str = "1 day", slide: str | None = None
-) -> DataFrame:
-    win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
-        events.groupBy(win.alias("win"), F.col("event_type"))
+        load_table(spark, sf_dir, "events")
+        .groupBy(F.window("ts", "1 day").alias("win"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             money_sum(F.col("value"), 6).alias("value_sum"),

@@ -5,10 +5,6 @@ from __future__ import annotations
 
 from retailfeaturestore_spark.operators.retrieval import bm25_topk
 
-from conftest import requires_testdata
-
-pytestmark = requires_testdata
-
 
 def test_bm25_null_text_doc_still_counts_in_corpus_stats(spark):
     """Code-review r11: the sentinel row must survive a NULL-text doc —

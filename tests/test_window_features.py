@@ -214,8 +214,8 @@ def test_column_names_with_a_space_and_a_dot(spark):
     for kw in (
         {"unique_mode": "delta", "carry_cols": ("line_amount",)},
         {"unique_mode": "delta", "label_events": labels, "label_ts_col": "ts"},
-        {"unique_mode": "set", "round_to": 2, "carry_cols": ("line_amount",)},
-        {"unique_mode": "approx", "amount_scale": 2},
+        {"unique_mode": "set", "carry_cols": ("line_amount",)},
+        {"unique_mode": "set"},
     ):
         want = build_customer_features(df, windows={"1d": 1, "7d": 7}, **kw)
         if "label_events" in kw:

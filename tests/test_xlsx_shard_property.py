@@ -1,14 +1,14 @@
-"""Property test for the sharded-xlsx cutting logic (Spark-free).
+"""Property test for the xlsx row-shard cutter (Spark-free).
 
-The shard loop below is the same sequence `read_xlsx_sharded`'s task body
-executes (scan for first row, parse header, skip-with-discard to the shard
-range, cut [first row-start >= i*L/N, first row-start >= (i+1)*L/N), parse
-the slice).  Running it for EVERY shard of a randomly generated workbook at
-a randomly drawn shard size, and comparing the union of parsed rows against
-``parse_xlsx_bytes`` (the well-tested whole-document parser), pins the two
-invariants example tests cannot sweep: no row is lost or duplicated at ANY
-byte boundary, and cell content (XML-escaped specials, unicode, numerics,
-booleans, sparse Nones) never confuses the C-speed row splitter.
+Every shard of a randomly generated workbook, at a randomly drawn shard
+size, goes through :func:`parse_shard`, the same function each reader
+task runs (scan for the first row, map the header, skip with discard to the
+shard range, cut [first row start >= i*L/N, first row start >= (i+1)*L/N),
+parse the slice).  The union of the shards' rows must equal the rows the
+workbook was written from, which pins the two invariants example tests
+cannot sweep: no row is lost or duplicated at ANY byte boundary, and cell
+content (XML-escaped specials, unicode, numerics, booleans, sparse Nones)
+never confuses the C-speed row splitter.
 """
 
 from __future__ import annotations
@@ -19,15 +19,12 @@ import zipfile
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
 
 from retailfeaturestore_spark.sources.xlsx import (
-    _SHEETDATA_END,
     _ROW_START,
     _MemberScanner,
-    _parse_row_elements,
-    _root_namespaces,
-    _shared_strings,
-    parse_xlsx_bytes,
+    parse_shard,
     write_minimal_xlsx,
 )
 
@@ -59,80 +56,49 @@ _TEXT = st.one_of(
         max_size=12,
     ),
 )
-_CELL = st.one_of(
-    st.none(),
-    st.booleans(),
+_NUMBER = st.one_of(
     st.floats(allow_nan=False, allow_infinity=False, width=32),
     st.integers(min_value=-10**6, max_value=10**6),
-    _TEXT,
 )
+# each column has one declared type; its cells are that type's values or
+# None (an omitted, sparse cell)
+_COLUMN_TYPES = {
+    "string": (T.StringType(), _TEXT),
+    "double": (T.DoubleType(), _NUMBER),
+    "boolean": (T.BooleanType(), st.booleans()),
+}
 
 
-def _shard_rows(zf: zipfile.ZipFile, member: str, xml_size: int, n_shards: int):
-    """Union of every shard's parsed rows, in shard order — mirrors the
-    executor task body of read_xlsx_sharded (header=False variant: all
-    rows are data)."""
-    shared = _shared_strings(zf)
-    chunk = -(-xml_size // n_shards)
-    out: list[list] = []
-    for shard in range(n_shards):
-        start_t, end_t = shard * chunk, (shard + 1) * chunk
-        with zf.open(member) as fh:
-            sc = _MemberScanner(fh)
-            first = sc.find(_ROW_START, 0)
-            if first < 0:
-                continue
-            ns = _root_namespaces(sc.slice(0, first))
-            scan_from = max(start_t, first)
-            sc.discard_to(max(scan_from - sc._STRADDLE, 0))
-            lo = sc.find(_ROW_START, scan_from, discard=True)
-            if lo < 0 or lo >= end_t:
-                continue
-            hi = sc.find(_ROW_START, end_t)
-            if hi < 0:
-                hi = sc.find(_SHEETDATA_END, lo)
-                if hi < 0:
-                    hi = sc.end()
-            out.extend(_parse_row_elements(sc.slice(lo, hi), shared, ns))
-    return out
+@st.composite
+def _sheets(draw):
+    kinds = draw(st.lists(st.sampled_from(sorted(_COLUMN_TYPES)), min_size=1, max_size=5))
+    row = st.tuples(*(st.one_of(st.none(), _COLUMN_TYPES[k][1]) for k in kinds))
+    return kinds, draw(st.lists(row, min_size=0, max_size=40))
 
 
 @settings(max_examples=40, deadline=None)
-@given(
-    rows=st.lists(
-        st.lists(_CELL, min_size=1, max_size=5), min_size=1, max_size=40
-    ),
-    shard_bytes=st.integers(min_value=20, max_value=5000),
-)
-def test_sharded_cut_equals_whole_document_parse(rows, shard_bytes):
+@given(sheet=_sheets(), shard_bytes=st.integers(min_value=20, max_value=5000))
+def test_sharded_cut_equals_whole_document_parse(sheet, shard_bytes):
+    kinds, rows = sheet
+    names = [f"c{j}" for j in range(len(kinds))]
+    dtypes = [_COLUMN_TYPES[k][0] for k in kinds]
+    # what the reader must return: the written rows, numbers as float
+    want = [
+        tuple(float(v) if k == "double" and v is not None else v for k, v in zip(kinds, r))
+        for r in rows
+    ]
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "prop.xlsx")
-        write_minimal_xlsx(path, {"S": rows})
+        write_minimal_xlsx(path, {"S": [names, *map(list, rows)]})
         with zipfile.ZipFile(path) as zf:
             member = "xl/worksheets/sheet1.xml"
-            xml_size = next(
-                zi.file_size for zi in zf.infolist() if zi.filename == member
-            )
-            n_shards = max(1, -(-xml_size // shard_bytes))
-            got = _shard_rows(zf, member, xml_size, n_shards)
-        (_, expect), = parse_xlsx_bytes(open(path, "rb").read())
-
-        # the whole-document parser pads every row to the sheet's global
-        # width; the shard parser leaves trailing Nones implicit
-        def norm(rs):
-            return [
-                tuple(r[: _rstrip_len(r)]) for r in rs
+            n_shards = max(1, -(-zf.getinfo(member).file_size // shard_bytes))
+            got = [
+                tuple(r)
+                for shard in range(n_shards)
+                for r in parse_shard(zf, member, shard, n_shards, names, dtypes)
             ]
-
-        def _rstrip_len(r):
-            n = len(r)
-            while n and r[n - 1] is None:
-                n -= 1
-            return n
-
-        assert norm(got) == norm(expect), (
-            f"{len(got)} rows from {n_shards} shards vs {len(expect)}"
-        )
+    assert got == want, f"{len(got)} rows from {n_shards} shards vs {len(want)}"
 
 
 class _PeakTrackingScanner(_MemberScanner):

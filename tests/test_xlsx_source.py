@@ -12,45 +12,102 @@ import pytest
 
 from retailfeaturestore_spark.jobs import read_excel_sheets
 from retailfeaturestore_spark.sources.xlsx import (
-    parse_xlsx_bytes,
+    _ROW_START,
+    _SHEETDATA_END,
+    _parse_row_elements,
+    _shared_strings,
+    _sheet_members,
+    parse_shard,
     read_xlsx,
     write_minimal_xlsx,
 )
+
+# Tiny enough that every row of the fixtures is its own shard: header-only
+# shards, boundary ownership and the final sheetData cut all run.
+TINY_SHARDS = 64
+
+_SHEETS = {
+    "Year 2009-2010": [
+        ["Invoice", "StockCode", "Quantity", "Price", "Country"],
+        ["536365", "85123A", 6, 2.55, "United Kingdom"],
+        ["536366", "71053", 4, 3.39, "France"],
+        # sparse row: missing Country cell
+        ["536367", "84406B", 2, 2.75, None],
+    ],
+    # second sheet reorders columns — header mapping must fix it
+    "Year 2010-2011": [
+        ["Country", "Invoice", "StockCode", "Quantity", "Price"],
+        ["Germany", "579001", "22720", 12, 1.25],
+    ],
+}
+
+
+def _written_rows(cols):
+    """The fixture's data rows as the declared columns, straight from the
+    rows the writer was given (a column a sheet lacks reads None)."""
+    out = []
+    for rows in _SHEETS.values():
+        head = rows[0]
+        out += [tuple(r[head.index(c)] if c in head else None for c in cols) for r in rows[1:]]
+    return sorted(out, key=repr)
 
 
 @pytest.fixture(scope="module")
 def workbook(tmp_path_factory):
     path = str(tmp_path_factory.mktemp("xlsx") / "retail.xlsx")
-    header = ["Invoice", "StockCode", "Quantity", "Price", "Country"]
-    write_minimal_xlsx(
-        path,
-        {
-            "Year 2009-2010": [
-                header,
-                ["536365", "85123A", 6, 2.55, "United Kingdom"],
-                ["536366", "71053", 4, 3.39, "France"],
-                # sparse row: missing Country cell
-                ["536367", "84406B", 2, 2.75, None],
-            ],
-            # second sheet reorders columns — header mapping must fix it
-            "Year 2010-2011": [
-                ["Country", "Invoice", "StockCode", "Quantity", "Price"],
-                ["Germany", "579001", "22720", 12, 1.25],
-            ],
-        },
-    )
+    write_minimal_xlsx(path, _SHEETS)
     return path
 
 
 def test_parse_bytes_roundtrip(workbook):
+    """An in-memory copy of the workbook parses sheet by sheet, in workbook
+    order, through the reader task's body at one shard per sheet."""
+    import io
+    import zipfile
+
+    from pyspark.sql import types as T
+
     with open(workbook, "rb") as f:
         data = f.read()
-    sheets = dict(parse_xlsx_bytes(data))
-    assert list(sheets) == ["Year 2009-2010", "Year 2010-2011"]
-    rows = sheets["Year 2009-2010"]
-    assert rows[0][:2] == ["Invoice", "StockCode"]
-    assert rows[1] == ["536365", "85123A", 6.0, 2.55, "United Kingdom"]
-    assert rows[3][4] is None  # sparse cell -> None
+    names = ["Invoice", "StockCode", "Quantity", "Price", "Country"]
+    dtypes = [T.StringType(), T.StringType(), T.DoubleType(), T.DoubleType(), T.StringType()]
+    with zipfile.ZipFile(io.BytesIO(data)) as zf:
+        members = _sheet_members(zf)
+        assert members == ["xl/worksheets/sheet1.xml", "xl/worksheets/sheet2.xml"]
+        first, second = (parse_shard(zf, m, 0, 1, names, dtypes) for m in members)
+    assert len(first) == 3
+    assert first[0] == ["536365", "85123A", 6.0, 2.55, "United Kingdom"]
+    assert first[2][4] is None  # sparse cell -> None
+    # the second sheet's reordered header maps back to the declared order
+    assert second == [["579001", "22720", 12.0, 1.25, "Germany"]]
+
+
+def test_read_xlsx_returns_the_written_rows(spark, workbook):
+    """Multi-sheet union + header remapping + sparse cells, at the default
+    shard size (one shard per sheet) and at one row per shard."""
+    cols = ["Invoice", "StockCode", "Quantity", "Price", "Country"]
+    for shard_bytes in (8 << 20, TINY_SHARDS):
+        df = read_xlsx(
+            spark,
+            workbook,
+            "Invoice string, StockCode string, Quantity long, Price double, Country string",
+            target_shard_bytes=shard_bytes,
+        )
+        assert df.columns == cols
+        assert sorted(map(tuple, df.collect()), key=repr) == _written_rows(cols), shard_bytes
+
+
+def test_sharded_reader_equals_per_file_reader(spark, workbook):
+    """The workbook cut to ~1 row per shard reads the same rows as the
+    whole-sheet read (one shard per sheet): header-only shards, mid-row cut
+    candidates and the final-shard sheetData cut lose or repeat nothing."""
+    schema = "Invoice string, StockCode string, Quantity long, Price double, Country string"
+    whole = read_xlsx(spark, workbook, schema)
+    sharded = read_xlsx(spark, workbook, schema, target_shard_bytes=TINY_SHARDS)
+    assert sharded.rdd.getNumPartitions() > whole.rdd.getNumPartitions()
+    assert sorted(map(tuple, sharded.collect()), key=repr) == sorted(
+        map(tuple, whole.collect()), key=repr
+    )
 
 
 def test_read_xlsx_unions_sheets_with_header_mapping(spark, workbook):
@@ -58,18 +115,42 @@ def test_read_xlsx_unions_sheets_with_header_mapping(spark, workbook):
         spark,
         workbook,
         "Invoice string, StockCode string, Quantity long, Price double, Country string",
-        add_source_columns=True,
     )
     rows = {r.Invoice: r for r in df.collect()}
     assert len(rows) == 4
     # sheet 2's reordered columns land under the right names
     assert rows["579001"].Country == "Germany"
     assert rows["579001"].Quantity == 12
-    assert rows["579001"]._sheet == "Year 2010-2011"
     # numeric-typed coercion + integral-float narrowing for string ids
     assert rows["536365"].Price == 2.55
     assert rows["536365"].Invoice == "536365"
     assert rows["536367"].Country is None
+
+
+def test_read_xlsx_plans_one_task_per_shard_without_exchange(spark, workbook):
+    """The plan frame holds one (workbook, sheet, shard) row per partition,
+    so the read is one task per shard and adds no shuffle."""
+    df = read_xlsx(spark, workbook, "Invoice string")
+    assert df.rdd.getNumPartitions() == 2  # two sheets, one shard each
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+def test_read_xlsx_skips_hidden_files(spark, tmp_path):
+    """A landing directory holds what Spark's file index hides: a job's
+    empty ``_SUCCESS`` marker, an editor lock file, an in-flight
+    ``._COPYING_`` upload and a hidden staging directory.  The reader skips
+    them as that index does, instead of failing to open them as zips."""
+    write_minimal_xlsx(str(tmp_path / "late.xlsx"), {"S": [["K", "V"], ["a", 1.0]]})
+    (tmp_path / "_SUCCESS").write_bytes(b"")
+    (tmp_path / ".~lock.late.xlsx#").write_text("user,host,2024-01-01;")
+    (tmp_path / "next.xlsx._COPYING_").write_bytes(b"PK\x03")
+    staging = tmp_path / "_temporary" / "0"
+    staging.mkdir(parents=True)
+    write_minimal_xlsx(str(staging / "part.xlsx"), {"S": [["K", "V"], ["b", 2.0]]})
+    for shard_bytes in (8 << 20, TINY_SHARDS):
+        df = read_xlsx(spark, str(tmp_path), "K string, V double", target_shard_bytes=shard_bytes)
+        assert [tuple(r) for r in df.collect()] == [("a", 1.0)]
 
 
 def test_read_excel_sheets_defaults(spark, workbook):
@@ -80,20 +161,14 @@ def test_read_excel_sheets_defaults(spark, workbook):
     assert df.where(df["Description"].isNotNull()).count() == 0
 
 
-def test_read_xlsx_sheet_filter(spark, workbook):
-    df = read_xlsx(
-        spark,
-        workbook,
-        "Invoice string, Quantity long",
-        sheets=["Year 2010-2011"],
-    )
-    assert [r.Invoice for r in df.collect()] == ["579001"]
-
-
 def test_workbook_roundtrip_property():
     """Property: any grid of strings/numbers/bools/Nones written by the
     minimal writer parses back cell-for-cell (strings via sharedStrings,
     numbers as floats, None as sparse-omitted -> None)."""
+    import os
+    import tempfile
+    import zipfile
+
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -113,27 +188,26 @@ def test_workbook_roundtrip_property():
     @settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
     @given(grid)
     def prop(rows):
-        import os
-        import tempfile
-
         width = max(len(r) for r in rows)
         padded = [list(r) + [None] * (width - len(r)) for r in rows]
-        fd, path = tempfile.mkstemp(suffix=".xlsx")
-        os.close(fd)
-        try:
+        with tempfile.TemporaryDirectory() as d:
+            path = os.path.join(d, "grid.xlsx")
             write_minimal_xlsx(path, {"S": padded})
-            with open(path, "rb") as f:
-                parsed = dict(parse_xlsx_bytes(f.read()))["S"]
-        finally:
-            os.unlink(path)
-        # all-None trailing columns narrow the parsed width; compare on the
-        # parsed grid padded back out
+            with zipfile.ZipFile(path) as zf:
+                (member,) = _sheet_members(zf)
+                xml = zf.read(member)
+                shared = _shared_strings(zf)
+        lo = _ROW_START.search(xml).start()
+        hi = _SHEETDATA_END.search(xml, lo).start()
+        parsed = list(_parse_row_elements(xml[lo:hi], shared))
+        # sparse rows carry no trailing pad; compare on the parsed grid
+        # padded back out
         got = [list(r) + [None] * (width - len(r)) for r in parsed]
         assert len(got) == len(padded)
         for prow, grow in zip(padded, got):
             for pv, gv in zip(prow, grow):
                 if pv is None or isinstance(pv, (bool, str)):
-                    assert gv == pv or (pv == "" and gv is None) or gv == (None if pv == "" else pv)
+                    assert gv == pv
                 else:
                     assert gv == float(pv)
 
@@ -277,8 +351,8 @@ def test_xlsx_parser_throughput_100k_rows(spark, tmp_path):
     assert got["500000"]["Quantity"] == 1
     assert got[str(500000 + half)]["InvoiceDate"] == row(half)[4]
     assert got["C500049"]["Price"] == row(49)[5]
-    # throughput gate: measured ~10k rows/s (single-task stdlib XML parse)
-    # on the r5-r12 boxes; the r13 box measures 5.3k cold / 6.5k warm on
+    # throughput gate: measured ~10k rows/s (one task per sheet, stdlib XML
+    # parse) on the r5-r12 boxes; the r13 box measures 5.3k cold / 6.5k warm on
     # BIT-IDENTICAL reader code (box drift, same class as the r11/r12
     # drift records in BASELINE.md).  r14 (ADVICE r13 #4): the floor is
     # env-parameterized PER BOX instead of permanently relaxed — the
@@ -287,8 +361,8 @@ def test_xlsx_parser_throughput_100k_rows(spark, tmp_path):
     # a drifted box states its calibration explicitly, e.g.
     # RFS_XLSX_MIN_ROWS_PER_SEC=3500 on the r13/r14 sandbox.  Either floor
     # extrapolates the 1.07M-row UCI workbook to single-digit minutes per
-    # file (the sharded reader is the large-workbook path;
-    # read_excel_sheets auto-dispatches above 64 MiB worksheet XML).
+    # file.  This workbook's sheets are each over the reader's default
+    # 8 MiB shard size, so the parse runs several row shards per sheet.
     import os
 
     floor = float(os.environ.get("RFS_XLSX_MIN_ROWS_PER_SEC", "6000"))
@@ -296,65 +370,9 @@ def test_xlsx_parser_throughput_100k_rows(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Sharded single-workbook reader (VERDICT r11 next-round #7): intra-sheet
-# row-range parallelism must be invisible — byte-identical output to the
-# per-file reader on every fixture shape, at every shard granularity.
+# Row shards: intra-sheet row-range parallelism must be invisible — the
+# written rows at every shard granularity.
 # ---------------------------------------------------------------------------
-
-
-def _sorted_pdf(df, cols):
-    return (
-        df.toPandas()
-        .sort_values(cols, na_position="last")
-        .reset_index(drop=True)
-    )
-
-
-def test_sharded_reader_equals_per_file_reader(spark, workbook):
-    """Multi-sheet + header remapping + sparse cells + lineage columns,
-    forced to many tiny shards so every boundary case (header-only shard,
-    mid-row cut candidates, final-shard sheetData cut) is exercised."""
-    import pandas as pd
-
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx_sharded
-
-    schema = (
-        "Invoice string, StockCode string, Quantity long, Price double, "
-        "Country string"
-    )
-    cols = ["Invoice", "StockCode", "Quantity", "Price", "Country"]
-    a = read_xlsx(spark, workbook, schema, add_source_columns=True)
-    b = read_xlsx_sharded(
-        spark, workbook, schema, add_source_columns=True,
-        target_shard_bytes=64,  # ~1 row per shard: maximal boundary stress
-    )
-    pd.testing.assert_frame_equal(
-        _sorted_pdf(a, cols), _sorted_pdf(b, cols)
-    )
-
-
-def test_sharded_reader_headerless_and_sheet_filter(spark, workbook):
-    import pandas as pd
-
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx_sharded
-
-    schema = (
-        "Country string, Invoice string, StockCode string, Quantity long, "
-        "Price double"
-    )
-    cols = ["Country", "Invoice", "StockCode", "Quantity", "Price"]
-    a = read_xlsx(
-        spark, workbook, schema, header=False, sheets=["Year 2010-2011"]
-    )
-    b = read_xlsx_sharded(
-        spark, workbook, schema, header=False, sheets=["Year 2010-2011"],
-        target_shard_bytes=48,
-    )
-    # header=False surfaces the header text row as data in both readers
-    pa = _sorted_pdf(a, cols)
-    pb = _sorted_pdf(b, cols)
-    assert len(pa) == 2  # header text row + 1 data row
-    pd.testing.assert_frame_equal(pa, pb)
 
 
 def test_sharded_reader_boundary_sweep(spark, tmp_path):
@@ -362,16 +380,12 @@ def test_sharded_reader_boundary_sweep(spark, tmp_path):
     duplicated at a shard boundary is the failure mode this reader must
     prove against (ownership rule: a row belongs to the shard whose byte
     range contains its '<row' start)."""
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx_sharded
-
     n = 500
     rows = [["K", "V"]] + [[f"k{i:04d}", float(i)] for i in range(n)]
     path = str(tmp_path / "sweep.xlsx")
     write_minimal_xlsx(path, {"S": rows})
     for tsb in (37, 256, 4096, 1 << 30):
-        df = read_xlsx_sharded(
-            spark, path, "K string, V double", target_shard_bytes=tsb
-        )
+        df = read_xlsx(spark, path, "K string, V double", target_shard_bytes=tsb)
         got = df.toPandas()
         assert len(got) == n, (tsb, len(got))
         assert got["K"].nunique() == n, tsb
@@ -379,32 +393,9 @@ def test_sharded_reader_boundary_sweep(spark, tmp_path):
 
 
 def test_sharded_reader_empty_sheet(spark, tmp_path):
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx_sharded
-
     path = str(tmp_path / "empty.xlsx")
     write_minimal_xlsx(path, {"E": []})
-    assert read_xlsx_sharded(spark, path, "K string, V double").count() == 0
-
-
-def test_read_excel_sheets_dispatches_giant_workbooks(spark, tmp_path, workbook):
-    """The ingest entry point must route a workbook whose worksheet XML
-    exceeds the shard threshold through the sharded reader (same output
-    contract), and keep ordinary workbooks on the per-file reader."""
-    import pandas as pd
-
-    from retailfeaturestore_spark.jobs import read_excel_sheets
-
-    schema = "Invoice string, StockCode string, Quantity long, Price double"
-    cols = ["Invoice", "StockCode", "Quantity", "Price"]
-    small = read_excel_sheets(spark, workbook, schema)
-    # threshold of 1 byte forces every workbook onto the sharded path
-    sharded = read_excel_sheets(
-        spark, workbook, schema, shard_threshold_bytes=1
-    )
-    a = small.toPandas().sort_values(cols, na_position="last").reset_index(drop=True)
-    b = sharded.toPandas().sort_values(cols, na_position="last").reset_index(drop=True)
-    assert len(a) == 4  # 3 + 1 rows across the two sheets
-    pd.testing.assert_frame_equal(a, b)
+    assert read_xlsx(spark, path, "K string, V double").count() == 0
 
 
 def test_sharded_reader_handles_excel_prefixed_attributes(spark, tmp_path):
@@ -417,14 +408,6 @@ def test_sharded_reader_handles_excel_prefixed_attributes(spark, tmp_path):
     Excel writes them."""
     import re
     import zipfile
-
-    import pandas as pd
-
-    from retailfeaturestore_spark.sources.xlsx import (
-        read_xlsx,
-        read_xlsx_sharded,
-        write_minimal_xlsx,
-    )
 
     src = str(tmp_path / "plain.xlsx")
     n = 300
@@ -454,48 +437,23 @@ def test_sharded_reader_handles_excel_prefixed_attributes(spark, tmp_path):
                 data = xml.encode()
             zout.writestr(zi.filename, data)
 
-    schema = "K string, V double"
-    a = (
-        read_xlsx(spark, dst, schema)
-        .toPandas()
-        .sort_values("K")
-        .reset_index(drop=True)
-    )
-    b = (
-        read_xlsx_sharded(spark, dst, schema, target_shard_bytes=2048)
-        .toPandas()
-        .sort_values("K")
-        .reset_index(drop=True)
-    )
-    assert len(a) == n
-    pd.testing.assert_frame_equal(a, b)
+    for shard_bytes in (8 << 20, 2048):
+        got = sorted(map(tuple, read_xlsx(spark, dst, "K string, V double",
+                                          target_shard_bytes=shard_bytes).collect()))
+        assert got == [tuple(r) for r in rows[1:]], shard_bytes
 
 
 def test_sharded_reader_over_workbook_directory(spark, tmp_path):
-    """Directory enumeration: the sharded reader must union every sheet
-    of every workbook under the path with correct per-file lineage, same
-    as the per-file reader."""
-    import pandas as pd
-
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx_sharded
-
+    """Directory enumeration: the reader must union every sheet of every
+    workbook under the path."""
+    want = []
     for i in range(3):
         rows = [["K", "V"]] + [[f"w{i}k{j}", float(j)] for j in range(50)]
         write_minimal_xlsx(str(tmp_path / f"wb{i}.xlsx"), {"S": rows})
-    schema = "K string, V double"
-    a = (
-        read_xlsx(spark, str(tmp_path), schema, add_source_columns=True)
-        .toPandas().sort_values("K").reset_index(drop=True)
-    )
-    b = (
-        read_xlsx_sharded(
-            spark, str(tmp_path), schema,
-            add_source_columns=True, target_shard_bytes=256,
-        )
-        .toPandas().sort_values("K").reset_index(drop=True)
-    )
-    assert len(a) == 150
-    pd.testing.assert_frame_equal(a, b)
+        want += [tuple(r) for r in rows[1:]]
+    for shard_bytes in (8 << 20, 256):
+        df = read_xlsx(spark, str(tmp_path), "K string, V double", target_shard_bytes=shard_bytes)
+        assert sorted(map(tuple, df.collect())) == sorted(want), shard_bytes
 
 
 def _write_foreign_style_workbook(path: str) -> None:
@@ -591,32 +549,28 @@ def _write_foreign_style_workbook(path: str) -> None:
 
 
 def test_foreign_style_workbook_both_readers_agree(spark, tmp_path):
-    """Both readers must parse the foreign-producer byte shape (pretty-
-    printed rows, style attributes, multi-run shared strings) and agree."""
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx_sharded
-
+    """The reader must parse the foreign-producer byte shape (pretty-printed
+    rows, style attributes, multi-run shared strings) alike at one shard
+    per sheet and at many shards per sheet."""
     path = str(tmp_path / "foreign.xlsx")
     _write_foreign_style_workbook(path)
-    schema = "Invoice string, Country string"
-    per_file = read_xlsx(spark, path, schema)
-    # tiny shard size forces multiple shards across the indented XML, so
-    # the row cutter must handle whitespace BETWEEN row elements
-    sharded = read_xlsx_sharded(spark, path, schema, target_shard_bytes=64)
-    a = sorted(map(tuple, per_file.collect()))
-    b = sorted(map(tuple, sharded.collect()))
-    assert a == b
-    assert a == [
-        ("536365", "United Kingdom"),  # multi-run si concatenated
-        ("536366", "France"),
-    ]
+    # the tiny shard size forces multiple shards across the indented XML,
+    # so the row cutter must handle whitespace BETWEEN row elements
+    for shard_bytes in (8 << 20, TINY_SHARDS):
+        got = read_xlsx(spark, path, "Invoice string, Country string",
+                        target_shard_bytes=shard_bytes)
+        assert sorted(map(tuple, got.collect())) == [
+            ("536365", "United Kingdom"),  # multi-run si concatenated
+            ("536366", "France"),
+        ], shard_bytes
 
 
 def test_openpyxl_written_workbook_differential(spark, tmp_path):
     """Where openpyxl exists (the real-deps CI leg), write a genuinely
-    foreign workbook with it and require both readers to parse it
-    identically (VERDICT r12 next-round #7)."""
+    foreign workbook with it and require the reader to return its rows at
+    one shard per sheet and at many shards per sheet (VERDICT r12
+    next-round #7)."""
     openpyxl = pytest.importorskip("openpyxl")
-    from retailfeaturestore_spark.sources.xlsx import read_xlsx_sharded
 
     path = str(tmp_path / "opx.xlsx")
     wb = openpyxl.Workbook()
@@ -628,18 +582,10 @@ def test_openpyxl_written_workbook_differential(spark, tmp_path):
     ws.append(["536367", None, 2.75, None])  # sparse row
     wb.save(path)
     schema = "Invoice string, Quantity long, Price double, Country string"
-    per_file = sorted(map(tuple, read_xlsx(spark, path, schema).collect()))
-    sharded = sorted(
-        map(
-            tuple,
-            read_xlsx_sharded(
-                spark, path, schema, target_shard_bytes=64
-            ).collect(),
-        )
-    )
-    assert per_file == sharded
-    assert per_file == [
-        ("536365", 6, 2.55, "United Kingdom"),
-        ("536366", 4, 3.39, "Français & <co>"),
-        ("536367", None, 2.75, None),
-    ]
+    for shard_bytes in (8 << 20, TINY_SHARDS):
+        got = read_xlsx(spark, path, schema, target_shard_bytes=shard_bytes)
+        assert sorted(map(tuple, got.collect())) == [
+            ("536365", 6, 2.55, "United Kingdom"),
+            ("536366", 4, 3.39, "Français & <co>"),
+            ("536367", None, 2.75, None),
+        ], shard_bytes

@@ -7,8 +7,8 @@ closes the remaining question — does the executor-side stdlib parser hold up
 at the real row count? — by generating a synthetic workbook with the same
 two-sheet split, column mix (string ids through sharedStrings, float
 quantities/prices, serial datetimes, sparse nulls), and row count, then
-timing `read_xlsx` end-to-end through the same Spark path the ingest job
-uses.
+timing `read_xlsx` (row shards of each sheet, parsed in parallel)
+end-to-end through the same Spark path the ingest job uses.
 
 Usage::
 
@@ -31,11 +31,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from retailfeaturestore_spark.session import get_spark  # noqa: E402
-from retailfeaturestore_spark.sources.xlsx import (  # noqa: E402
-    read_xlsx,
-    read_xlsx_sharded,
-    write_minimal_xlsx,
-)
+from retailfeaturestore_spark.sources.xlsx import read_xlsx, write_minimal_xlsx  # noqa: E402
 
 
 def synth_rows(n: int, seed: int = 42) -> list[list]:
@@ -81,12 +77,8 @@ def main() -> None:
         "InvoiceDate double, Price double, `Customer ID` double, Country string"
     )
     t0 = time.time()
-    df = read_xlsx(spark, path, schema)  # all sheets, header per sheet
-    n_read = df.count()
+    n_read = read_xlsx(spark, path, schema).count()  # all sheets, header per sheet
     t_read = time.time() - t0
-    t0 = time.time()
-    n_shard = read_xlsx_sharded(spark, path, schema).count()
-    t_shard = time.time() - t0
     print(json.dumps({
         "metric": "xlsx_parse_throughput",
         "rows": n_read,
@@ -95,11 +87,8 @@ def main() -> None:
         "write_sec": round(t_write, 2),
         "read_sec": round(t_read, 2),
         "rows_per_sec": round(n_read / t_read),
-        "sharded_read_sec": round(t_shard, 2),
-        "sharded_rows_per_sec": round(n_shard / t_shard),
     }))
     assert n_read == n_total, (n_read, n_total)
-    assert n_shard == n_total, (n_shard, n_total)
 
 
 if __name__ == "__main__":
