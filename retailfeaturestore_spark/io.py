@@ -204,8 +204,8 @@ def write_date_partitioned(
     )
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S7 CSV sink (``serving/local_infer.py:126-129`` batch-scores parity);
-    header on, single directory of part files (coalesce(1) only for tiny
-    outputs — never at scale)."""
-    df.write.mode(mode).option("header", "true").csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """S7 CSV sink (``serving/local_infer.py:126-129`` batch-scores parity):
+    overwrite, header on, single directory of part files (coalesce(1) only
+    for tiny outputs — never at scale)."""
+    df.write.mode("overwrite").option("header", "true").csv(path)

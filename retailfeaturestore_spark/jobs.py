@@ -26,7 +26,7 @@ from .operators.encode import topk_categories
 from .operators.normalize import normalize_orders_raw
 from .operators.pit import interval_existence_labels, latest_per_key
 from .operators.window_features import build_customer_features
-from .schemas import ORDERS_BRONZE
+from .schemas import ORDERS_BRONZE, XLSX_RAW
 from .sources.xlsx import read_xlsx
 
 __all__ = [
@@ -40,6 +40,13 @@ __all__ = [
     "make_training",
 ]
 
+# The gold feature windows (``jobs/build_feature_views.py:7``), the churn
+# horizon (``jobs/make_training_and_train.py:30``) and the number of
+# one-hot countries (``:50``), fixed as the reference fixes them.
+WINDOWS = {"1d": 1, "7d": 7, "30d": 30}
+CHURN_HORIZON_DAYS = 30
+TOP_K_COUNTRIES = 10
+
 
 def read_excel_sheets(spark: SparkSession, xlsx_path: str) -> DataFrame:
     """S1 Excel multi-sheet scan: every sheet of every workbook, UNION ALL
@@ -49,12 +56,7 @@ def read_excel_sheets(spark: SparkSession, xlsx_path: str) -> DataFrame:
     reference's driver-side ``pd.read_excel`` it scales with the number of
     workbooks and sheets in the landing zone, and a giant sheet is cut into
     row-aligned shards parsed in parallel."""
-    return read_xlsx(
-        spark,
-        xlsx_path,
-        "Invoice string, StockCode string, Description string, Quantity long, "
-        "InvoiceDate double, Price double, `Customer ID` double, Country string",
-    )
+    return read_xlsx(spark, xlsx_path, XLSX_RAW)
 
 
 def ingest_to_bronze(spark: SparkSession, raw: DataFrame, bronze_path: str) -> None:
@@ -65,12 +67,12 @@ def ingest_to_bronze(spark: SparkSession, raw: DataFrame, bronze_path: str) -> N
 def _gold_frame(
     spark: SparkSession,
     bronze_path: str,
-    windows: dict[str, int] | None,
     start_date: str | None = None,
     end_date: str | None = None,
 ) -> DataFrame:
-    """Bronze -> the gold feature-view frame (W1-W6 window family + tenure +
-    A2 country mode), shared by every gold sink flavor.
+    """Bronze -> the gold feature-view frame (W1-W6 window family over
+    ``WINDOWS`` + tenure + A2 country mode), shared by every gold sink
+    flavor.
 
     Bronze is read with its declared schema (``schemas.ORDERS_BRONZE``), so
     no job infers it.  The per-customer attributes come from ONE
@@ -85,28 +87,27 @@ def _gold_frame(
 
     With ``[start_date, end_date]`` only the rows whose ``t_ref`` falls in
     the range are built, equal to a full build's rows there: the window
-    family reads bronze from ``start - max(windows)`` (the lookback) to
+    family reads bronze from ``start - max(WINDOWS)`` (the lookback) to
     ``end``, and ``tenure_days`` is re-measured from that first-seen time
     (in a production lakehouse, a maintained customer dimension).  A full
     build takes tenure from the family's own running minimum.  So bronze is
     scanned twice either way: once by the family, once by the aggregate."""
-    windows = windows or {"1d": 1, "7d": 7, "30d": 30}
     bronze = spark.read.schema(ORDERS_BRONZE).parquet(bronze_path)
     ranged = start_date is not None
     events = bronze
     if ranged:
         start, end = F.lit(start_date).cast("date"), F.lit(end_date).cast("date")
         day = F.col("invoice_date").cast("date")
-        events = bronze.where((day >= F.date_sub(start, max(windows.values()))) & (day <= end))
+        events = bronze.where((day >= F.date_sub(start, max(WINDOWS.values()))) & (day <= end))
     # carry nothing: the line columns stay in bronze, and t_ref is rebuilt
     # from the family's epoch-microseconds ordering attribute
-    feats = build_customer_features(events, windows=windows, carry_cols=())
+    feats = build_customer_features(events, windows=WINDOWS, carry_cols=())
     # Gold contract (FIXTURES.md §3): keys + windowed features + tenure +
     # mode country.
     feature_cols = ", ".join(
         "f." + sql_ident(f"{base}_{w}")
         for base in ("txn_count", "spend", "unique_skus", "avg_basket_value", "cancel_rate")
-        for w in windows
+        for w in WINDOWS
     )
     tenure = (
         "floor((unix_micros(f.t_ref) - unix_micros(c.first_ts)) / 86400000000)"
@@ -151,27 +152,17 @@ def _gold_writer(gold: DataFrame):
     )
 
 
-def build_feature_views(
-    spark: SparkSession,
-    bronze_path: str,
-    gold_path: str,
-    windows: dict[str, int] | None = None,
-) -> None:
+def build_feature_views(spark: SparkSession, bronze_path: str, gold_path: str) -> None:
     """Bronze -> W1-W6 window family + A2 country mode -> gold sink.
 
     The reference's per-customer Python loop (``jobs/build_feature_views.py:24``)
     is one window pass here; the per-customer mode country (``:59``) is a
     second tiny aggregation joined back on the entity key.
     """
-    _gold_writer(_gold_frame(spark, bronze_path, windows)).mode("overwrite").parquet(gold_path)
+    _gold_writer(_gold_frame(spark, bronze_path)).mode("overwrite").parquet(gold_path)
 
 
-def build_feature_views_mtable(
-    spark: SparkSession,
-    bronze_path: str,
-    table_path: str,
-    windows: dict[str, int] | None = None,
-) -> int:
+def build_feature_views_mtable(spark: SparkSession, bronze_path: str, table_path: str) -> int:
     """The same gold build committed to an ACID ``mtable`` instead of a
     plain partitioned directory — the production shape BASELINE.json names
     Delta for.  First run creates version 1; every later run MERGEs on
@@ -183,7 +174,7 @@ def build_feature_views_mtable(
     version."""
     from .sources.mtable import MTable
 
-    gold = _gold_frame(spark, bronze_path, windows)
+    gold = _gold_frame(spark, bronze_path)
     t = MTable(spark, table_path)
     if not t.versions():
         return t.write(
@@ -205,7 +196,6 @@ def backfill_feature_views(
     gold_path: str,
     start_date: str,
     end_date: str,
-    windows: dict[str, int] | None = None,
 ) -> int:
     """Incrementally recompute ONLY the gold date partitions in
     ``[start_date, end_date]`` — the late-data / bug-fix repair path the
@@ -224,7 +214,7 @@ def backfill_feature_views(
     Spark 4.1 it leaves the session unserializable for later Spark ML
     closures.)  A range day the recompute no longer produces keeps, and
     counts, its old rows — the mtable sink replaces those."""
-    gold = _gold_frame(spark, bronze_path, windows, start_date, end_date)
+    gold = _gold_frame(spark, bronze_path, start_date, end_date)
     _gold_writer(gold).mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(
         gold_path
     )
@@ -240,7 +230,6 @@ def backfill_feature_views_mtable(
     table_path: str,
     start_date: str,
     end_date: str,
-    windows: dict[str, int] | None = None,
 ) -> int:
     """The backfill repair path committed to an ACID ``mtable``: the
     recomputed ``[start_date, end_date]`` gold slice replaces that date
@@ -252,7 +241,7 @@ def backfill_feature_views_mtable(
     entire recompute.  Returns the committed version."""
     from .sources.mtable import MTable
 
-    gold = _gold_frame(spark, bronze_path, windows, start_date, end_date)
+    gold = _gold_frame(spark, bronze_path, start_date, end_date)
     t = MTable(spark, table_path)
     cur = t.versions()
     if not cur:
@@ -292,27 +281,18 @@ def materialize_online_job(
     )
 
 
-def make_training(
-    spark: SparkSession,
-    bronze_path: str,
-    gold_path: str,
-    model_dir: str,
-    horizon_days: int = 30,
-    time_cutoff: str | None = None,
-    top_k_countries: int = 10,
-    max_driver_rows: int = 2_000_000,
-    sample_over_limit: bool = False,
-):
+def make_training(spark: SparkSession, bronze_path: str, gold_path: str, model_dir: str):
     """Labels (J2) -> training set (J1+J4) -> guarded collect -> fit ->
     artifacts (S8).
 
     Divergences from the reference, by design (SURVEY.md §7.4): deduped label
-    spine, true time-cutoff split, contract categories from a one-time top-k.
-    The model fit runs at the driver on the aggregated frame via the
-    row-budgeted ``collect_training_frame`` (raises past ``max_driver_rows``
-    unless a deterministic hash-sample is opted into); ``fit_model`` trains
-    LightGBM where installed and the protocol-typed LinearStubModel
-    otherwise.
+    spine and contract categories from a one-time top-k.  The model fits on
+    every labelled row, with no held-out split; the registry's
+    ``training_set_build`` query shows the event-time cutoff split.  The fit
+    runs at the driver on the aggregated frame via the row-budgeted
+    ``collect_training_frame`` (raises past ``MAX_DRIVER_ROWS``);
+    ``fit_model`` trains LightGBM where installed and the protocol-typed
+    LinearStubModel otherwise.
     """
     from .ml.scoring import contract_columns
     from .ml.training import collect_training_frame, fit_model
@@ -327,38 +307,23 @@ def make_training(
         key="customer_id",
         spine_ts="t_ref",
         event_ts="invoice_date",
-        horizon_days=horizon_days,
+        horizon_days=CHURN_HORIZON_DAYS,
         label_col="churn_30d",
     )
     cats = [
         r[0]
-        for r in topk_categories(gold.where(F.col("country").isNotNull()), "country", top_k_countries)
+        for r in topk_categories(gold.where(F.col("country").isNotNull()), "country", TOP_K_COUNTRIES)
         .select("country")
         .collect()
     ]
-    ts = build_training_set(
-        gold,
-        labels,
-        cat_col="country",
-        cat_categories=sorted(cats),
-        time_cutoff=time_cutoff,
-        labels_deduped=True,  # interval_existence_labels dedupes internally
-    )
+    ts = build_training_set(gold, labels, cat_col="country", cat_categories=sorted(cats))
     numeric = {
         c for c, t in ts.dtypes if t in ("double", "int", "bigint", "float", "smallint")
     }
     feature_names = [
-        c
-        for c in ts.columns
-        if c in numeric
-        and c not in ("customer_id", "churn_30d", "is_train")
+        c for c in ts.columns if c in numeric and c not in ("customer_id", "churn_30d")
     ]
-    pdf = collect_training_frame(
-        ts,
-        [*contract_columns(ts.columns, feature_names), "churn_30d"],
-        max_driver_rows=max_driver_rows,
-        sample_over_limit=sample_over_limit,
-    )
+    pdf = collect_training_frame(ts, [*contract_columns(ts.columns, feature_names), "churn_30d"])
     X = pdf[feature_names].to_numpy(dtype="float64")
     y = pdf["churn_30d"].to_numpy(dtype="float64")
     model, flavor = fit_model(X, y)

@@ -39,7 +39,6 @@ class LinearStubModel:
 
     weights: tuple[float, ...]
     bias: float = 0.0
-    name: str = "linear_stub_v1"
 
     def predict_proba(self, X: np.ndarray) -> np.ndarray:
         raw = X @ np.asarray(self.weights, dtype="float64") + self.bias
@@ -81,13 +80,12 @@ def score_batch(
     features: DataFrame,
     scored: ScoredModel,
     threshold: float = 0.5,
-    proba_col: str = "probability",
 ) -> DataFrame:
     """Append probability + decision columns via a broadcast-model pandas_udf.
 
     The model's inputs are built by :func:`contract_columns` — the same rule
     serving's ``row_to_vector`` applies to one row — so the output is the
-    input columns plus ``proba_col`` and ``prediction``.
+    input columns plus ``probability`` and ``prediction``.
     """
     bc = spark.sparkContext.broadcast(scored.model)
 
@@ -97,6 +95,6 @@ def score_batch(
         return pd.Series(bc.value.predict_proba(X)[:, 1])
 
     inputs = contract_columns(features.columns, scored.feature_names)
-    return features.withColumn(proba_col, predict(*inputs)).withColumn(
-        "prediction", (F.col(proba_col) >= F.lit(threshold)).cast("int")
+    return features.withColumn("probability", predict(*inputs)).withColumn(
+        "prediction", (F.col("probability") >= F.lit(threshold)).cast("int")
     )

@@ -1,12 +1,15 @@
-"""Training-set construction: features ⊕ labels ⊕ encoding ⊕ time split.
+"""Training-set construction: features ⊕ labels ⊕ encoding.
 
 Parity with ``jobs/make_training_and_train.py`` (SURVEY.md §3.2), with the
 documented corrections (§7.4):
 - the label spine is deduped BEFORE the join (the reference's m x n
   duplicate-label blowup on multi-line invoices, ``:46``, is avoided);
-- the train/test split is a TRUE event-time cutoff on ``t_ref`` (the
-  reference's ``shuffle=False`` split is actually customer-ordered, ``:57-58``);
 - one-hot categories come from the frozen contract, not a per-run top-k.
+
+``jobs.make_training`` fits on every labelled row, with no held-out split
+(the reference's ``shuffle=False`` split, ``:57-58``, is customer-ordered,
+not a time split); the registry's ``training_set_build`` query shows an
+event-time cutoff split on ``t_ref``.
 
 The model fit itself (LightGBM in the reference) happens at the driver on
 the aggregated training frame via ``toPandas()`` — after the heavy lifting
@@ -17,51 +20,34 @@ boosting does not belong inside the Spark plan.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.encode import onehot_encode
 
 __all__ = ["build_training_set", "collect_training_frame", "fit_model"]
 
+# The row budget of the one collect to the driver.
+MAX_DRIVER_ROWS = 2_000_000
+
 
 def build_training_set(
     features: DataFrame,
     labels: DataFrame,
-    keys: tuple[str, str] = ("customer_id", "t_ref"),
-    label_col: str = "churn_30d",
     cat_col: str | None = None,
     cat_categories: list[str] | None = None,
-    time_cutoff: str | None = None,
-    labels_deduped: bool = False,
 ) -> DataFrame:
-    """J1 inner equi-join of the feature view with the (deduped) label spine,
-    optional frozen-contract one-hot, optional ``is_train`` time-cutoff flag.
-
-    ``labels_deduped=True`` skips the defensive ``distinct()`` when the
-    caller guarantees unique ``keys`` (both interval-label operators dedupe
-    internally) — one fewer exchange on the label side.
+    """J1 inner equi-join of the feature view with the ``churn_30d`` label
+    spine on ``(customer_id, t_ref)``, plus an optional frozen-contract
+    one-hot.  The labels are unique on the keys (both interval-label
+    operators dedupe internally), so the label side runs no ``distinct()``.
     """
-    lab = labels.select(*keys, label_col)
-    if not labels_deduped:
-        lab = lab.distinct()
-    out = features.join(lab, list(keys), "inner")
+    keys = ["customer_id", "t_ref"]
+    out = features.join(labels.select(*keys, "churn_30d"), keys, "inner")
     if cat_col is not None and cat_categories:
         out = onehot_encode(out, cat_col, cat_categories)
-    if time_cutoff is not None:
-        out = out.withColumn(
-            "is_train",
-            (F.col(keys[1]) < F.lit(time_cutoff).cast("timestamp")).cast("int"),
-        )
     return out
 
 
-def collect_training_frame(
-    ts: DataFrame,
-    columns: list[str | Column],
-    max_driver_rows: int = 2_000_000,
-    sample_over_limit: bool = False,
-    sample_key_cols: tuple[str, ...] = ("customer_id", "t_ref"),
-):
+def collect_training_frame(ts: DataFrame, columns: list[str | Column]):
     """Guarded ``toPandas()`` at the model boundary.
 
     The distributed plan (windows, labels, joins) must have already shrunk
@@ -71,29 +57,20 @@ def collect_training_frame(
     ``jobs/make_training_and_train.py:49-55`` — the exact failure mode this
     guards against at 100 TB).
 
-    Over budget: raise by default — silently training on partial data is
-    worse than failing.  ``sample_over_limit=True`` opts into a
-    DETERMINISTIC hash-sample down to ~``max_driver_rows`` (xxhash64 of the
-    key columns, not ``DataFrame.sample`` — reproducible across retries and
-    partitionings).
+    The plan runs once: at most ``MAX_DRIVER_ROWS + 1`` rows are collected,
+    and more than the budget raises — silently training on partial data is
+    worse than failing.
     """
-    n = ts.count()
-    if n > max_driver_rows:
-        if not sample_over_limit:
-            raise ValueError(
-                f"training frame has {n} rows > max_driver_rows="
-                f"{max_driver_rows}; aggregate further, raise the budget, or "
-                "pass sample_over_limit=True for a deterministic hash-sample"
-            )
-        keep = int(max_driver_rows / n * 1_000_000)
-        ts = ts.where(
-            F.pmod(F.xxhash64(*[F.col(c) for c in sample_key_cols]), F.lit(1_000_000))
-            < F.lit(keep)
+    pdf = ts.select(*columns).limit(MAX_DRIVER_ROWS + 1).toPandas()
+    if len(pdf) > MAX_DRIVER_ROWS:
+        raise ValueError(
+            f"training frame has more than MAX_DRIVER_ROWS={MAX_DRIVER_ROWS} "
+            "rows; aggregate further or raise the budget"
         )
-    return ts.select(*columns).toPandas()
+    return pdf
 
 
-def fit_model(X, y, params: dict | None = None):
+def fit_model(X, y):
     """Fit the churn model on the driver-side matrix.
 
     Import-gated LightGBM (``jobs/make_training_and_train.py:62-85`` trains
@@ -113,16 +90,15 @@ def fit_model(X, y, params: dict | None = None):
         lgb = None
 
     if lgb is not None:
-        defaults = {
-            "n_estimators": 200,
-            "learning_rate": 0.05,
-            "num_leaves": 31,
-            "random_state": 42,
-            "deterministic": True,
-            "n_jobs": 1,
-            "verbosity": -1,
-        }
-        model = lgb.LGBMClassifier(**{**defaults, **(params or {})})
+        model = lgb.LGBMClassifier(
+            n_estimators=200,
+            learning_rate=0.05,
+            num_leaves=31,
+            random_state=42,
+            deterministic=True,
+            n_jobs=1,
+            verbosity=-1,
+        )
         model.fit(X, y)
         return model, "lightgbm"
 

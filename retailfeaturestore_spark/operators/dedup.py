@@ -44,7 +44,6 @@ __all__ = [
     "posting_lists",
     "minhash_signatures",
     "band_rows",
-    "minhash_candidate_pairs",
     "jaccard_pairs_exact",
     "containment_pairs",
     "repeated_ngram_spans",
@@ -265,9 +264,8 @@ def band_rows(
     sigs: DataFrame, id_col: str = "doc_id", k: int = 12, bands: int = 4
 ) -> DataFrame:
     """Signature table -> ``(id, band, band_key)`` LSH band rows via a
-    single explode (shared by the batch self-join candidate stage and the
-    streaming ingest probe, which joins new-batch bands against an
-    accumulated band store instead of self-joining)."""
+    single explode — the streaming ingest probe joins new-batch bands
+    against an accumulated band store instead of self-joining."""
     r = k // bands
     band_structs = F.array(
         *[
@@ -283,43 +281,6 @@ def band_rows(
     return sigs.select(
         F.col(id_col).alias("id"), F.explode(band_structs).alias("__bb")
     ).select("id", F.col("__bb.band").alias("band"), F.col("__bb.band_key").alias("band_key"))
-
-
-def minhash_candidate_pairs(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    k: int = 12,
-    bands: int = 4,
-    materialize: bool = True,
-) -> DataFrame:
-    """LSH banding: equal band signature in ANY band -> candidate pair.
-
-    Emits (band, band_key, id) via a single ``explode`` over the signature
-    row (NOT a b-way union — union branches don't share work, so a 4-band
-    union under a self-join re-evaluated the signature pipeline 8x) and
-    self-joins on the band key — the shuffle key is a short hash concat,
-    never the documents.  Distinct (a, b) with a < b.
-
-    ``materialize=True`` (default) eagerly ``localCheckpoint``s the
-    signature table first: it is tiny (one row per doc, k longs) and feeds
-    BOTH sides of the self-join, so cutting its lineage halves the
-    upstream shingle+digest work and stops cache-population races.
-    """
-    if materialize:
-        sigs = sigs.localCheckpoint()
-    all_bands = band_rows(sigs, id_col=id_col, k=k, bands=bands)
-    a = all_bands.alias("a")
-    b = all_bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-        .distinct()
-    )
 
 
 def jaccard_pairs_exact(

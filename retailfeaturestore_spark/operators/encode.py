@@ -19,18 +19,14 @@ from pyspark.sql import functions as F
 __all__ = ["onehot_encode", "topk_categories", "group_mode"]
 
 
-def onehot_encode(
-    df: DataFrame, col: str, categories: list[str], prefix: str | None = None
-) -> DataFrame:
+def onehot_encode(df: DataFrame, col: str, categories: list[str]) -> DataFrame:
     """J4: static one-hot against a frozen category list, one int column
-    ``{prefix}__{value}`` per raw category value (``prefix`` defaults to
-    ``col``).  Unknown/null values encode as all-zeros, matching the
-    reference's contract-driven re-derivation
+    ``{col}__{value}`` per raw category value.  Unknown/null values encode
+    as all-zeros, matching the reference's contract-driven re-derivation
     (``serving/feature_service.py:51-54``)."""
-    prefix = prefix or col
     return df.withColumns(
         {
-            f"{prefix}__{c}": F.coalesce((F.col(col) == F.lit(c)).cast("int"), F.lit(0))
+            f"{col}__{c}": F.coalesce((F.col(col) == F.lit(c)).cast("int"), F.lit(0))
             for c in categories
         }
     )

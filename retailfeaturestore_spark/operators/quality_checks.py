@@ -22,7 +22,6 @@ __all__ = [
     "expect_not_null",
     "expect_between",
     "expect_unique_key",
-    "run_checks",
     "checks_report",
 ]
 
@@ -129,7 +128,7 @@ def _compile_suite(df: DataFrame, checks: list[Check]):
 
 
 def checks_report(df: DataFrame, checks: list[Check]) -> DataFrame:
-    """The same one-pass suite as :func:`run_checks`, but fully declarative:
+    """Evaluate the whole suite in one aggregation, fully declarative:
     returns a DataFrame of ``(check, violations, n_rows)`` — no collect, so
     the report itself can be a pipeline stage (sunk next to the data it
     gates) and the whole suite still costs one shuffle."""
@@ -138,15 +137,3 @@ def checks_report(df: DataFrame, checks: list[Check]) -> DataFrame:
     return agg.selectExpr(
         f"stack({len(checks)}, {stack_expr}) as (check, violations)", "__n as n_rows"
     )
-
-
-def run_checks(df: DataFrame, checks: list[Check]) -> dict:
-    """Evaluate the whole suite in one aggregation; returns
-    {'passed': bool, 'n_rows': int, 'violations': {check: count}}."""
-    row = _compile_suite(df, checks).collect()[0]
-    violations = {c.name: int(row[f"__c{i}"] or 0) for i, c in enumerate(checks)}
-    return {
-        "passed": all(v == 0 for v in violations.values()),
-        "n_rows": int(row["__n"]),
-        "violations": violations,
-    }

@@ -51,13 +51,13 @@ def bm25_topk(
       ``max_literal_terms`` a broadcast-semi-join explode path handles
       arbitrary vocabularies at one token-level exchange);
     - ``term_dfs`` (document frequencies for the literal query terms,
-      from ``operators.tokenize.query_term_dfs``) folds the df side to
+      from ``operators.tokenize.corpus_stats_and_dfs``) folds the df side to
       PLAN LITERALS — no stats groupBy, no broadcast barrier.  Without
       it, df derives from the matched rows themselves by a count over a
       term-partitioned window (matched rows are query-working-set-sized,
       so the term partitions cannot whale);
     - ``stats`` (``(n_docs, total_tokens)`` from
-      ``operators.tokenize.corpus_token_stats``) folds the corpus-stat
+      ``operators.tokenize.corpus_stats_and_dfs``) folds the corpus-stat
       side to literals; without it a single-row broadcast aggregate over
       the token frame supplies them (one auxiliary corpus pass);
     - ``pretokenized`` (the ``operators.tokenize.token_corpus`` L1 frame:

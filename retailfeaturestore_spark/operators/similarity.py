@@ -34,7 +34,6 @@ from ._cache import get_or_register, register_persisted, session_memo
 
 __all__ = [
     "dot_fixed",
-    "cosine",
     "cosine_topk",
     "cosine_topk_quantized",
     "quantized_vec_rows",
@@ -68,12 +67,6 @@ def dot_fixed(a: Column, b: Column) -> Column:
 
 def norm2_fixed(a: Column) -> Column:
     return dot_fixed(a, a)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot_fixed(a, b).cast("double") / (
-        F.sqrt(norm2_fixed(a).cast("double")) * F.sqrt(norm2_fixed(b).cast("double"))
-    )
 
 
 def _with_norm(df: DataFrame, vec_col: str) -> DataFrame:

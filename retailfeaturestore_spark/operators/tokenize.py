@@ -15,19 +15,15 @@ used for the rank engine and the PQ index):
   the raw whitespace split (empties preserved: ``dl`` is the RAW array
   length, the same document-length definition the BM25 oracle uses) —
   one corpus scan, persisted.
-- **L1 ``corpus_token_stats``** — ``(n_docs, total_tokens)`` as driver
-  INTEGERS, memoized in ``session_memo``.  One tiny aggregate job over
-  the persisted L1 frame; the integers become plan literals in consumers
-  (same control-plane-collect boundary as the PQ codebook literals —
-  bounded at 2 scalars, never row-scale).
 - **L2 ``term_postings``** — ``(doc_id, term, tf, dl)``, the classic
   inverted-posting aggregate (empty terms dropped), persisted.  Built
   from L1, so it never re-splits.
-- **L2 ``term_df``** — ``(term, df)``, vocabulary-sized document
-  frequencies, derived from the postings, persisted.
-- **``query_term_dfs``** — the df values for a LITERAL query-term set as
-  a driver dict, memoized per (dataset, terms).  Bounded collect:
-  ``|terms|`` rows off the vocabulary-sized L2 frame.
+- **``corpus_stats_and_dfs``** — ``(n_docs, total_tokens)`` and the df
+  values for a LITERAL query-term set, as driver integers from one job,
+  memoized per (dataset, terms) in ``session_memo``; the integers become
+  plan literals in consumers (same control-plane-collect boundary as the
+  PQ codebook literals — bounded at ``|terms| + 1`` rows, never
+  row-scale).
 
 Consumers pass these into their plans (``bm25_topk(pretokenized=...,
 stats=..., term_dfs=...)``) and drop from three-job pipelines to a single
@@ -38,9 +34,8 @@ stale postings.
 Scale notes (100 TB): L1 is corpus-sized — persisted MEMORY_AND_DISK it
 spills per-executor and replaces every consumer's full text re-scan with
 a local columnar read; L2 postings are |distinct (doc, term)|-sized (the
-standard inverted-index bound); the vocab df table is vocabulary-sized;
-the only driver-side materialization anywhere is 2 integers + |query
-terms| df values.
+standard inverted-index bound); the only driver-side materialization
+anywhere is 2 integers + |query terms| df values.
 
 Routing ledger (r13 A/B, sf0.1 local[32], honest-evicted cold + warm):
 
@@ -76,10 +71,7 @@ from ._cache import session_memo
 
 __all__ = [
     "token_corpus",
-    "corpus_token_stats",
     "term_postings",
-    "term_df",
-    "query_term_dfs",
     "corpus_stats_and_dfs",
 ]
 
@@ -134,28 +126,6 @@ def token_corpus(
     )
 
 
-def corpus_token_stats(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> tuple[int, int]:
-    """``(n_docs, total_tokens)`` as exact driver integers, memoized.
-    ``n_docs`` counts EVERY document (null/empty text included);
-    ``total_tokens`` sums the raw split lengths (null text contributes
-    0) — the exact BM25-oracle definitions."""
-    memo = session_memo(spark)
-    key = ("token_corpus_stats", sf_dir)
-    if key not in memo:
-        row = (
-            token_corpus(spark, sf_dir, docs=docs)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.coalesce(F.col("dl"), F.lit(0).cast("long"))).alias("t"),
-            )
-            .first()
-        )
-        memo[key] = (int(row["n"]), int(row["t"] or 0))
-    return memo[key]
-
-
 def term_postings(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
 ) -> DataFrame:
@@ -181,98 +151,27 @@ def term_postings(
     )
 
 
-def term_df(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> DataFrame:
-    """The L2 vocabulary document-frequency table ``(term, df)`` —
-    vocabulary-sized, derived from the postings (df = posting count per
-    term, since postings are distinct on (doc, term)), persisted."""
-
-    def build() -> DataFrame:
-        return (
-            term_postings(spark, sf_dir, docs=docs)
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).cast("long").alias("df"))
-        )
-
-    return _get_or_register_level(
-        spark, ("term_df", sf_dir), build, StorageLevel.MEMORY_AND_DISK
-    )
-
-
-def query_term_dfs(
-    spark: SparkSession,
-    sf_dir: str,
-    terms: tuple[str, ...],
-    docs: DataFrame | None = None,
-    via_vocab: bool = False,
-) -> dict[str, int]:
-    """Document frequencies for a LITERAL query-term set, as a driver
-    dict (absent terms omitted — df 0).  Memoized per (dataset, terms);
-    the collect is bounded at ``|terms|`` rows — control-plane, same
-    boundary class as the PQ codebook literals.
-
-    Two build paths:
-
-    - default: ONE pass over the persisted L1 arrays — per-doc
-      ``array_distinct(filter(toks, isin(terms)))`` (map-side, so the
-      only exchange is a |terms|-row aggregate).  Strictly less work
-      than materializing the full vocabulary when the caller asks about
-      a handful of terms; this is what a cold batch query pays.
-    - ``via_vocab=True``: read the persisted ``term_df`` table — right
-      for a SERVING deployment answering many different term sets per
-      corpus version, where the one-time vocabulary build amortizes to
-      zero per query."""
-    terms = tuple(sorted(set(map(str, terms))))
-    if not terms:
-        return {}
-    memo = session_memo(spark)
-    key = ("query_term_dfs", sf_dir, terms)
-    if key not in memo:
-        if via_vocab:
-            rows = (
-                term_df(spark, sf_dir, docs=docs)
-                .where(F.col("term").isin(*terms))
-                .collect()
-            )
-        else:
-            tok = token_corpus(spark, sf_dir, docs=docs)
-            rows = (
-                tok.select(
-                    F.explode(
-                        F.array_distinct(
-                            F.filter(F.col("toks"), lambda x: x.isin(*terms))
-                        )
-                    ).alias("term")
-                )
-                .groupBy("term")
-                .agg(F.count(F.lit(1)).cast("long").alias("df"))
-                .collect()
-            )
-        memo[key] = {r["term"]: int(r["df"]) for r in rows}
-    return memo[key]
-
-
 def corpus_stats_and_dfs(
     spark: SparkSession,
     sf_dir: str,
     terms: tuple[str, ...],
     docs: DataFrame | None = None,
 ) -> tuple[tuple[int, int], dict[str, int]]:
-    """``(corpus_token_stats, query_term_dfs)`` from ONE job — the cold
+    """``((n_docs, total_tokens), {term: df})`` from ONE job — the cold
     path for a literal-term ranking query (BM25) where paying two
     separate control-plane jobs would double the per-job scheduling
-    floor.  Per doc, the matched DISTINCT query terms and a sentinel
-    term ride one explode into a |terms|+1-row aggregate: the sentinel
-    row's (count, sum dl) is (n_docs, total_tokens), each real term's
-    count is its document frequency.  The collect is bounded at
-    |terms|+1 rows.  Results land in the same ``session_memo`` keys the
-    individual helpers use, so either entry point hits warm after
-    either runs."""
+    floor.  ``n_docs`` counts EVERY document (null/empty text included)
+    and ``total_tokens`` sums the raw split lengths (null text
+    contributes 0) — the exact BM25-oracle definitions.  Per doc, the
+    matched DISTINCT query terms and a sentinel term ride one explode
+    into a |terms|+1-row aggregate: the sentinel row's (count, sum dl) is
+    (n_docs, total_tokens), each real term's count is its document
+    frequency (absent terms omitted — df 0).  The collect is bounded at
+    |terms|+1 rows, and both results are memoized per dataset."""
     terms = tuple(sorted(set(map(str, terms))))
     memo = session_memo(spark)
     skey = ("token_corpus_stats", sf_dir)
-    dkey = ("query_term_dfs", sf_dir, terms)
+    dkey = ("term_dfs", sf_dir, terms)
     if skey in memo and dkey in memo:
         return memo[skey], memo[dkey]
     tok = token_corpus(spark, sf_dir, docs=docs)
@@ -309,7 +208,7 @@ def n_docs_with_tokens(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
 ) -> int:
     """Count of documents with at least one NON-EMPTY token — the tf-idf
-    ``N`` (distinct from ``corpus_token_stats``' n_docs, which counts
+    ``N`` (distinct from ``corpus_stats_and_dfs``' n_docs, which counts
     every document including null/whitespace-only text).  Memoized; one
     map+count job over the persisted L1 arrays."""
     memo = session_memo(spark)

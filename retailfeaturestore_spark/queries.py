@@ -1095,8 +1095,8 @@ def _minhash_spark_sql(sig_view: str, stop_at: str = "pairs") -> str:
     SQL string over the (persisted) per-doc signature view.
 
     Identical semantics to the composable operator path
-    (``posting_lists`` -> ``minhash_signatures`` -> ``minhash_candidate_pairs``
-    -> ``jaccard_pairs_exact``), but parsed JVM-side in a single call: the
+    (``posting_lists`` -> ``minhash_signatures`` -> a ``band_rows``
+    self-join -> ``jaccard_pairs_exact``), but parsed JVM-side in a single call: the
     DataFrame construction of this plan costs ~0.7-0.9 s of py4j round trips
     (measured, 12 min-aggs + band structs + 4 joins), ~40% of the query's
     wall time at sf0.1.  SQL and DataFrame paths produce bit-identical
@@ -1137,8 +1137,8 @@ WHERE CAST(n_int AS DOUBLE) / CAST(n_a + n_b - n_int AS DOUBLE) >= 0.5
     # BROADCAST(b) on the band self-join is the small-corpus strategy (the
     # bands frame is 4 short rows/doc; broadcasting skips the exchange that
     # dominated the candidate stage at bench scale).  At 100 TB drop the
-    # hint: the operator path (minhash_candidate_pairs) keeps the
-    # band_key-partitioned shuffle join, which is the strategy that scales.
+    # hint: a band_key-partitioned shuffle join of ``band_rows`` is the
+    # strategy that scales.
     return f"""
 WITH bands AS (
   SELECT id, bb.band AS band, bb.band_key AS band_key
@@ -1663,9 +1663,6 @@ def q_knn_pq_index_mtable(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialized through the manifest CAS.  See
     operators/similarity.py:build_pq_index_mtable and
     tests/test_pq_mtable.py for the race/travel/rollback matrix."""
-    import shutil
-    import tempfile
-    import uuid
 
     from .operators.similarity import (
         append_pq_index_mtable,
@@ -1677,15 +1674,7 @@ def q_knn_pq_index_mtable(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",))
     nmax = int(emb.agg(F.max("vec_id")).collect()[0][0])
     split = (nmax + 1) * 9 // 10
-    dirs = getattr(spark, "_rfs_mtable_q_dirs", None)
-    if dirs is None:
-        dirs = spark._rfs_mtable_q_dirs = {}
-    key = f"pqidx:{sf_dir}"
-    prev = dirs.pop(key, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    root = os.path.join(tempfile.gettempdir(), "rfs_pq_mtable", uuid.uuid4().hex)
-    dirs[key] = root
+    root = _q_tmp_root(spark, sf_dir, "pqidx", "rfs_pq_mtable")
     tbl = MTable(spark, root)
     build_pq_index_mtable(
         emb.where(F.col("vec_id") < split), tbl, m=_PQ_M, k_codes=_PQ_K, iters=2
@@ -3608,9 +3597,6 @@ def q_events_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning-count assertions live in tests/test_mtable_zorder.py — the
     oracle certifies values, the suite certifies the IO actually
     shrinks)."""
-    import shutil
-    import tempfile
-    import uuid
 
     from .sources.mtable import MTable
 
@@ -3620,15 +3606,7 @@ def q_events_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
     )
-    dirs = getattr(spark, "_rfs_mtable_q_dirs", None)
-    if dirs is None:
-        dirs = spark._rfs_mtable_q_dirs = {}
-    key = f"{sf_dir}#zorder"
-    prev = dirs.pop(key, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    root = os.path.join(tempfile.gettempdir(), "rfs_mtable_z", uuid.uuid4().hex)
-    dirs[key] = root
+    root = _q_tmp_root(spark, sf_dir, "zorder", "rfs_mtable_z")
 
     tbl = MTable(spark, root)
     # deliberately UNclustered initial commit (4 files per day) — the
@@ -3667,9 +3645,6 @@ def q_events_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic) would drop rows and fail the hash; false positives only
     cost IO.  Pruning-count assertions live in tests/test_mtable_bloom.py
     — the oracle certifies values, the suite certifies the IO shrinks."""
-    import shutil
-    import tempfile
-    import uuid
 
     from .sources.mtable import MTable
 
@@ -3679,15 +3654,7 @@ def q_events_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
     )
-    dirs = getattr(spark, "_rfs_mtable_q_dirs", None)
-    if dirs is None:
-        dirs = spark._rfs_mtable_q_dirs = {}
-    key = f"{sf_dir}#bloom"
-    prev = dirs.pop(key, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    root = os.path.join(tempfile.gettempdir(), "rfs_mtable_bf", uuid.uuid4().hex)
-    dirs[key] = root
+    root = _q_tmp_root(spark, sf_dir, "bloom", "rfs_mtable_bf")
 
     tbl = MTable(spark, root)
     tbl.write(
@@ -4174,9 +4141,6 @@ def q_feature_view_build_mtable(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits (persisted); both writes are hash-clustered on the month so
     file count is O(partitions), not O(partitions x tasks); the merge
     rewrites only touched months."""
-    import shutil
-    import tempfile
-    import uuid
 
     from .sources.mtable import MTable
 
@@ -4190,14 +4154,7 @@ def q_feature_view_build_mtable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first: its snapshot frame was either collected already (the plan
     # cache memoizes this query's result until the bench/driver evicts it)
     # or evicted along with the plan cache, so the files are dead.
-    dirs = getattr(spark, "_rfs_mtable_q_dirs", None)
-    if dirs is None:
-        dirs = spark._rfs_mtable_q_dirs = {}
-    prev = dirs.pop(sf_dir, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    root = os.path.join(tempfile.gettempdir(), "rfs_mtable_fv", uuid.uuid4().hex)
-    dirs[sf_dir] = root
+    root = _q_tmp_root(spark, sf_dir, "fv_build", "rfs_mtable_fv")
 
     late = F.col("t_ref") >= F.to_date(F.lit("1995-06-17"))
     month = F.date_format("t_ref", "yyyy-MM")
@@ -4253,9 +4210,6 @@ def q_feature_view_incremental_mtable(spark: SparkSession, sf_dir: str) -> DataF
     corrections are the backfill path).  Reference stake: the reference
     rebuilds gold from scratch every run (jobs/build_feature_views.py) —
     this is the incremental shape that replaces it at scale."""
-    import shutil
-    import tempfile
-    import uuid
 
     from .operators.window_features import incremental_customer_features
     from .sources.mtable import MTable
@@ -4267,15 +4221,7 @@ def q_feature_view_incremental_mtable(spark: SparkSession, sf_dir: str) -> DataF
     hist = bronze.where(F.col("invoice_date") < cut)
     arriving = bronze.where(F.col("invoice_date") >= cut)
 
-    dirs = getattr(spark, "_rfs_mtable_q_dirs", None)
-    if dirs is None:
-        dirs = spark._rfs_mtable_q_dirs = {}
-    key = f"{sf_dir}#incr"
-    prev = dirs.pop(key, None)
-    if prev:
-        shutil.rmtree(prev, ignore_errors=True)
-    root = os.path.join(tempfile.gettempdir(), "rfs_mtable_fv", uuid.uuid4().hex)
-    dirs[key] = root
+    root = _q_tmp_root(spark, sf_dir, "incr", "rfs_mtable_fv")
 
     month = F.date_format("t_ref", "yyyy-MM")
     width = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -8449,17 +8395,11 @@ def q_xlsx_ingest_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _xlsx_ingest(spark: SparkSession, **shards) -> DataFrame:
     from .operators.normalize import normalize_orders_raw
+    from .schemas import XLSX_RAW
     from .sources.xlsx import read_xlsx
     from .sources.xlsx_fixture import ensure_fixture_workbook
 
-    raw = read_xlsx(
-        spark,
-        ensure_fixture_workbook(),
-        "Invoice string, StockCode string, Description string, Quantity long, "
-        "InvoiceDate double, Price double, `Customer ID` double, Country string",
-        **shards,
-    )
-    return normalize_orders_raw(raw)
+    return normalize_orders_raw(read_xlsx(spark, ensure_fixture_workbook(), XLSX_RAW, **shards))
 
 
 # Concat-and-chunk packing is integer interval arithmetic over a per-shard

@@ -16,6 +16,14 @@ from pyspark.sql import types as T
 # Retail domain (reference parity): bronze orders, pred log.
 # ---------------------------------------------------------------------------
 
+# The raw retail workbook's columns as the xlsx reader returns them (DDL):
+# the header names of ``jobs/ingest_xlsx_to_parquet.py``'s sheets, Excel
+# serial dates and numeric ids as doubles, before normalization.
+XLSX_RAW = (
+    "Invoice string, StockCode string, Description string, Quantity long, "
+    "InvoiceDate double, Price double, `Customer ID` double, Country string"
+)
+
 # Post-ingest bronze contract — jobs/ingest_xlsx_to_parquet.py:24-42.
 # float32 accumulation in the reference is deliberately widened to double
 # (SURVEY.md §7.4.5); narrowing happens only at the online-store boundary.

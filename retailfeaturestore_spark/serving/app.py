@@ -51,7 +51,6 @@ class ServingContext:
     service: object                    # get_snapshot(id, as_of=None) provider
     model: object                      # predict_proba protocol
     feature_names: list[str]
-    model_artifact: str = "model"
     pred_log_dir: str | None = None
     threshold: float = 0.5
 
@@ -83,7 +82,7 @@ def predict_once(
                 probability=proba,
                 threshold=thr,
                 latency_ms=latency_ms,
-                model_artifact=ctx.model_artifact,
+                model_artifact="model",
                 t_ref=snap.get("t_ref"),
                 features=dict(zip(ctx.feature_names, x)),
             )

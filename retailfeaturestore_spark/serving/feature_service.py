@@ -55,18 +55,16 @@ class _Snapshot(NamedTuple):
 class OfflineFeatureService:
     """Point-in-time feature lookup over the published gold parquet.
 
-    The snapshot holds gold sorted by ``(entity, ts)`` as one numpy array
-    per column, with the entity ids and the timestamps (int64 ns) as the
+    The snapshot holds gold sorted by ``(customer_id, t_ref)`` as one numpy
+    array per column, with the ids and the timestamps (int64 ns) as the
     search keys, so a lookup is two binary searches and one read per column.
     It also holds the fingerprint of the file set it was loaded from, and
     ``refresh()`` reads no file while that fingerprint is unchanged.  All of
     it is swapped in as one tuple: a lookup running during ``refresh()``
     sees the old snapshot or the new one, never a mix."""
 
-    def __init__(self, gold_dir: str, entity_col: str = "customer_id", ts_col: str = "t_ref"):
+    def __init__(self, gold_dir: str):
         self.gold_dir = gold_dir
-        self.entity_col = entity_col
-        self.ts_col = ts_col
         self._snapshot: _Snapshot | None = None
 
     def _list_gold(self) -> tuple[list[Path], tuple]:
@@ -90,7 +88,7 @@ class OfflineFeatureService:
             raise FileNotFoundError(f"no parquet under {self.gold_dir}")
         tables = [pq.ParquetFile(f).read() for f in files]
         df = pa.concat_tables(tables, promote_options="default").to_pandas()
-        df = df.sort_values([self.entity_col, self.ts_col], kind="stable", ignore_index=True)
+        df = df.sort_values(["customer_id", "t_ref"], kind="stable", ignore_index=True)
         columns = []
         for name, s in df.items():
             # datetimes are kept as int64 ns and boxed per lookup, as
@@ -99,8 +97,8 @@ class OfflineFeatureService:
             is_ts = isinstance(s.dtype, np.dtype) and s.dtype.kind == "M"
             a = s.to_numpy("datetime64[ns]").view("int64") if is_ts else s.to_numpy()
             columns.append((name, a, is_ts))
-        ts = df[self.ts_col].to_numpy("datetime64[ns]").view("int64")
-        return _Snapshot(key, df[self.entity_col].to_numpy(), ts, columns)
+        ts = df["t_ref"].to_numpy("datetime64[ns]").view("int64")
+        return _Snapshot(key, df["customer_id"].to_numpy(), ts, columns)
 
     def _current(self) -> _Snapshot:
         if self._snapshot is None:

@@ -60,7 +60,6 @@ def _default_local_dir() -> str:
 def get_spark(
     app_name: str = "retailfeaturestore-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's canonical config.
@@ -88,10 +87,7 @@ def get_spark(
         # converts them to microsecond TimestampType against the declared
         # schema.  (Spark has no native ns timestamp — documented truncation.)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         # Parquet scans: vectorized reader + pushdown are on by default; keep
         # partition files at a size that parallelizes a 100 TB scan well.
         .config("spark.sql.files.maxPartitionBytes", "128m")

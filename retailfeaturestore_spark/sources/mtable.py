@@ -159,8 +159,7 @@ per-commit file-list differences (O(changed files), never the table; delta
 manifests diff in O(touched files)), tagging rows insert/delete per commit
 — copy-on-write rewrite pairs cancel under per-row netting, and
 ``skip_compactions=True`` omits row-preserving maintenance churn entirely.
-The O(delta) consumption path ``diff()`` (a full two-snapshot re-read) is
-not; ``streaming/changes_stream.ChangeFeedConsumer`` tails it with
+``streaming/changes_stream.ChangeFeedConsumer`` tails it with
 table-version offsets.
 
 **RESTORE / DESCRIBE**: ``restore(v)`` re-commits a historical state by
@@ -2430,28 +2429,6 @@ class MTable:
         # projection on top
         return self._logical_view(self._apply_dv(df, m.get("dv") or []), m)
 
-    def diff(
-        self,
-        keys: list[str],
-        v_old: int,
-        v_new: int | None = None,
-        compare_cols: list[str] | None = None,
-    ) -> DataFrame:
-        """Keyed audit between two committed versions (time-travel CDC):
-        one row per added/removed/changed key with the changed column
-        names — ``operators.incremental.table_diff`` over two snapshot
-        reads, so the answer is exact against the manifests' file lists
-        regardless of concurrent commits.  ``v_new=None`` = latest.  The
-        gate a gold publish runs before flipping consumers to a new
-        version."""
-        from ..operators.incremental import table_diff
-
-        old = self.read(version=v_old)
-        new = self.read(version=v_new)
-        if old is None or new is None:
-            raise NoSuchVersion("diff needs two non-empty versions")
-        return table_diff(old, new, keys, compare_cols=compare_cols)
-
     def describe(self, version: int | None = None) -> dict:
         """DESCRIBE DETAIL from the manifest alone — no data scan: version,
         operation, commit time, partition layout, file/partition counts,
@@ -2581,11 +2558,11 @@ class MTable:
         the commits AFTER snapshot ``v_from`` (0 = "before the first
         commit") up to and including ``v_to`` (None = latest), tagged with
         ``_change_type`` ('insert' | 'delete'), ``_commit_version`` and
-        ``_commit_operation``.  This is the O(delta) consumption path
-        :meth:`diff` is not: ``diff`` re-reads BOTH snapshots in full,
-        while the feed plans exactly the manifests' per-commit file-list
-        differences — a downstream pipeline over a 100 TB table reads the
-        day's changed files, never the table.
+        ``_commit_operation``.  This is the O(delta) consumption path: a
+        two-snapshot comparison re-reads BOTH snapshots in full, while the
+        feed plans exactly the manifests' per-commit file-list differences
+        — a downstream pipeline over a 100 TB table reads the day's changed
+        files, never the table.
 
         Semantics are Delta Lake's CDF-without-change-files contract:
         copy-on-write DML (delete/update/merge/compact) rewrites whole

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 __all__ = ["DictRedis", "materialize_online", "redis_client_factory"]
 
 KEY_PREFIX = "fs:customer:"
+# HSETs per pipeline flush
+PIPELINE_BATCH = 500
 
 
 class DictRedis:
@@ -37,8 +39,8 @@ class DictRedis:
     sink and the serving reader use (pipeline / hset mapping / expire /
     execute / hgetall / scan_iter)."""
 
-    def __init__(self, store: dict | None = None):
-        self.store: dict[str, dict[str, str]] = store if store is not None else {}
+    def __init__(self):
+        self.store: dict[str, dict[str, str]] = {}
         self.ttls: dict[str, int] = {}
 
     def pipeline(self):
@@ -80,22 +82,19 @@ def redis_client_factory(url: str | None = None) -> Callable[[], object]:
     return _connect
 
 
-def _row_fields(
-    row, feature_cols: list[str], onehot_categories: list[str], ts_col: str, cat_col: str | None
-) -> dict[str, str]:
+def _row_fields(row, feature_cols: list[str], onehot_categories: list[str]) -> dict[str, str]:
     """The reference's field map: stringified floats + one-hots + meta:*
     (jobs/materialize_online.py:23-42)."""
     fields: dict[str, str] = {}
     for c in feature_cols:
         v = row[c]
         fields[c] = str(float(v)) if v is not None else "0.0"
-    cat_val = row[cat_col] if cat_col else None
+    country = row["country"]
     for cat in onehot_categories:
-        fields[f"{cat_col}__{cat}"] = "1" if cat_val == cat else "0"
-    t_ref = row[ts_col]
+        fields[f"country__{cat}"] = "1" if country == cat else "0"
+    t_ref = row["t_ref"]
     fields["meta:t_ref"] = t_ref.isoformat() if t_ref is not None else ""
-    if cat_col is not None:
-        fields["meta:country"] = str(cat_val) if cat_val is not None else ""
+    fields["meta:country"] = str(country) if country is not None else ""
     fields["meta:updated_at"] = datetime.now(timezone.utc).isoformat()
     return fields
 
@@ -103,16 +102,13 @@ def _row_fields(
 def materialize_online(
     snapshots: DataFrame,
     feature_cols: list[str],
-    entity_col: str = "customer_id",
-    ts_col: str = "t_ref",
-    cat_col: str | None = "country",
     onehot_categories: list[str] | None = None,
     client_factory: Callable[[], object] | None = None,
-    pipeline_batch: int = 500,
 ) -> int:
-    """Publish latest-per-entity snapshots to the online hash store.
+    """Publish latest-per-customer snapshots (``customer_id``, ``t_ref``,
+    ``country`` and ``feature_cols``) to the online hash store.
 
-    One connection + pipeline per partition; flush every ``pipeline_batch``
+    One connection + pipeline per partition; flush every ``PIPELINE_BATCH``
     HSETs (the reference pipelines the whole snapshot at once — fine for 6k
     customers, not for 600M).  Every key gets the TTL ``REDIS_TTL_SECONDS``
     names, when it is set.  Returns the number of hashes written, summed
@@ -121,15 +117,11 @@ def materialize_online(
     cats = onehot_categories or []
     ttl = int(os.environ["REDIS_TTL_SECONDS"]) if os.environ.get("REDIS_TTL_SECONDS") else None
     factory = client_factory or redis_client_factory()
-    cols = [entity_col, ts_col] + ([cat_col] if cat_col else []) + feature_cols
 
     def sink(rows):
-        yield publish_rows(
-            rows, factory, feature_cols, cats,
-            ts_col=ts_col, cat_col=cat_col, entity_col=entity_col,
-            ttl=ttl, pipeline_batch=pipeline_batch,
-        )
+        yield publish_rows(rows, factory, feature_cols, cats, ttl=ttl)
 
+    cols = ["customer_id", "t_ref", "country", *feature_cols]
     return snapshots.select(*cols).rdd.mapPartitions(sink).sum()
 
 
@@ -138,11 +130,7 @@ def publish_rows(
     factory: Callable[[], object],
     feature_cols: list[str],
     onehot_categories: list[str],
-    ts_col: str = "t_ref",
-    cat_col: str | None = "country",
-    entity_col: str = "customer_id",
     ttl: int | None = None,
-    pipeline_batch: int = 500,
 ) -> int:
     """One partition's publish: connect, pipeline, flush per batch.
     Returns the number of hashes written.
@@ -156,15 +144,12 @@ def publish_rows(
     pipe = client.pipeline()
     n = 0
     for row in rows:
-        key = f"{KEY_PREFIX}{row[entity_col]}"
-        pipe.hset(
-            key,
-            mapping=_row_fields(row, feature_cols, onehot_categories, ts_col, cat_col),
-        )
+        key = f"{KEY_PREFIX}{row['customer_id']}"
+        pipe.hset(key, mapping=_row_fields(row, feature_cols, onehot_categories))
         if ttl:
             pipe.expire(key, ttl)
         n += 1
-        if n % pipeline_batch == 0:
+        if n % PIPELINE_BATCH == 0:
             pipe.execute()
     pipe.execute()
     return n

@@ -21,6 +21,6 @@ requires_testdata = pytest.mark.skipif(
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("rfs-tests", shuffle_partitions=8)
+    s = get_spark("rfs-tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield s
 

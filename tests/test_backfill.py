@@ -165,7 +165,7 @@ def test_range_gold_frame_is_built_in_few_py4j_round_trips(spark, tmp_path, monk
         return send(self, command)
 
     monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
-    _gold_frame(spark, bronze, None, "2011-03-02", "2011-03-03")
+    _gold_frame(spark, bronze, "2011-03-02", "2011-03-03")
     monkeypatch.undo()
     assert 0 < len(calls) <= 300, len(calls)
 

@@ -9,12 +9,24 @@ from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.jobs import build_feature_views, ingest_to_bronze, make_training
 from retailfeaturestore_spark.operators.quality_checks import (
+    checks_report,
     expect_between,
     expect_not_null,
     expect_unique_key,
-    run_checks,
 )
 from retailfeaturestore_spark.serving.cli import main as cli_main
+
+
+def run_checks(df, checks) -> dict:
+    """The suite's one-pass report, collected:
+    ``{'passed', 'n_rows', 'violations': {check: count}}``."""
+    rows = checks_report(df, checks).collect()
+    violations = {r["check"]: int(r["violations"] or 0) for r in rows}
+    return {
+        "passed": all(v == 0 for v in violations.values()),
+        "n_rows": int(rows[0]["n_rows"]),
+        "violations": violations,
+    }
 
 
 def _mini_gold(spark, tmp_path):

@@ -3,12 +3,13 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.operators.dedup import (
+    band_rows,
     containment_pairs,
     dedup_exact,
     jaccard_pairs_exact,
-    minhash_candidate_pairs,
     minhash_signatures,
     simhash_pairs,
     simhash_signatures,
@@ -33,8 +34,16 @@ def test_minhash_finds_near_duplicate(spark):
     near = base.replace("today", "tomorrow")
     far = "completely different words in this document about spark engines ok"
     d = docs(spark, [(1, base), (2, near), (3, far)])
-    sigs = minhash_signatures(d)
-    cand = minhash_candidate_pairs(sigs)
+    # LSH banding: an equal band key in any band makes a candidate pair
+    bands = band_rows(minhash_signatures(d))
+    a, b = bands.alias("a"), bands.alias("b")
+    cand = (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.band_key") == F.col("b.band_key"))
+               & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
+        .distinct()
+    )
     pairs = jaccard_pairs_exact(d, candidates=cand, threshold=0.5)
     got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     assert (1, 2) in got and all(3 not in p for p in got)

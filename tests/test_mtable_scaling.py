@@ -276,6 +276,7 @@ def test_time_travel_and_ledger_survive_delta_chains(spark, tmp_path):
     # time travel reads every retained version exactly
     for v, extra in [(1, 0), (2, 1), (3, 2), (4, 3), (5, 4)]:
         assert t.read(version=v).count() == 3 + extra
-    # diff across a delta chain
-    d = t.diff(["customer_id"], v_old=1, v_new=5)
-    assert d.where("change = 'added'").count() == 4
+    # the keys added across a delta chain
+    old = {r.customer_id for r in t.read(version=1).collect()}
+    new = {r.customer_id for r in t.read(version=5).collect()}
+    assert old <= new and len(new - old) == 4

@@ -15,14 +15,21 @@ The walk's rules:
 - A function or class is reached when reached code names it, directly or
   through an import alias (``from .x import f as g``, ``import a.b as m``
   then ``m.f``), including re-exports through a package's ``__init__``.
-  A string that is exactly one identifier names it too (``getattr(obj,
-  "name")``, a registry or cache key); names in comments, docstrings,
-  ``__all__`` and longer strings (SQL text, messages) do not count.
+  A string names it only as an identifier argument of ``getattr`` or
+  ``hasattr``; other strings (registry and cache keys, column names, SQL
+  text, messages), comments, docstrings and ``__all__`` name nothing.
 - A method is reached once its class is reached and reached code takes an
   attribute of that name (``obj.meth``); dunder methods count with their
   class. The walk does not infer types, so any object's ``.meth`` counts.
 - The query registry's entries are the functions ``queries.py`` decorates
   with ``@register(...)``; the CLI's entry is ``serving.cli.main``.
+
+A second walk starts from the live paths only: the batch jobs, the HTTP app,
+the CLI and the benchmark's non-test files without its registry query mix.
+It prints the live closure's line count, fails if that closure reaches the
+query registry, and fails on any defaulted parameter of a reached function,
+method or class ``__init__`` that no non-test call site passes: a value no
+program sets is a constant, not an option.
 """
 
 from __future__ import annotations
@@ -45,6 +52,27 @@ _NAMED_ENTRIES = (f"{_PKG}.serving.cli.main", f"{_PKG}.serving.app.app_from_env"
 # all of their code counts as reached.
 _SCRIPT_FILES = ("bench.py", "__spark_entry__.py")
 _SCRIPT_DIRS = ("tools", "perfbench")
+# The live paths: the batch jobs, the HTTP app, the CLI and the benchmark's
+# non-test files, without the benchmark's functions that run registry
+# queries and the tools they load.
+_LIVE_PKG_ENTRIES = ("jobs", "serving.app", "serving.cli")
+_LIVE_SCRIPT_DIRS = ("perfbench",)
+_LIVE_DROPPED = ("query_mix", "tool")
+
+# Defaulted parameters of live code that no program passes but that stay,
+# each with its reason, as ``module.function(parameter)``.
+_ALLOWED_UNSET: dict[str, str] = {
+    "session.get_spark(master)": (
+        "deployment setting: spark-submit supplies the master on a cluster"
+    ),
+    "sources.redis_sink.redis_client_factory(url)": (
+        "deployment setting: the store's URL, else REDIS_URL"
+    ),
+    "ml.artifacts.save_artifacts(mlflow_experiment)": (
+        "deployment setting: the MLflow experiment, where a tracking server exists"
+    ),
+    "serving.cli.main(argv)": "test seam: the console script parses sys.argv",
+}
 
 # Package names that only tests reach but that stay, each with its reason.
 _MTABLE_GOLD = "ROADMAP Direction 4 makes the mtable twins the gold sink"
@@ -54,7 +82,6 @@ _REFERENCE_NEARDUP = (
     "core's failure tests"
 )
 _PLAN_ASSERT = "a plan predicate the tests assert physical plans with"
-_LATER = "deletion candidate left for a later pass"
 _ALLOWED_TEST_ONLY: dict[str, str] = {
     "jobs.build_feature_views_mtable": _MTABLE_GOLD,
     "jobs.backfill_feature_views_mtable": _MTABLE_GOLD,
@@ -75,9 +102,6 @@ _ALLOWED_TEST_ONLY: dict[str, str] = {
     "plans.has_sort_merge_join": _PLAN_ASSERT,
     "plans.pushed_filters": _PLAN_ASSERT,
     "plans.wholestage_codegen_spans": _PLAN_ASSERT,
-    "operators.quality_checks.run_checks": _LATER,
-    "operators.tokenize.corpus_token_stats": _LATER,
-    "operators.dedup.minhash_candidate_pairs": _LATER,
 }
 
 
@@ -99,17 +123,9 @@ class _Module:
         self._collect(self.tree.body)
         # local name -> qualified targets, from every import in the file
         self.aliases: dict[str, set[str]] = {}
-        # the string constants that are docstrings, which name nothing
-        self.docstrings: set[int] = set()
         for node in ast.walk(self.tree):
             for local, target in self._bindings(node):
                 self.aliases.setdefault(local, set()).add(target)
-            body = getattr(node, "body", None)
-            if (isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
-                    and body and isinstance(body[0], ast.Expr)
-                    and isinstance(body[0].value, ast.Constant)
-                    and isinstance(body[0].value.value, str)):
-                self.docstrings.add(id(body[0].value))
 
     def _collect(self, body: list[ast.stmt]) -> None:
         for stmt in body:
@@ -173,13 +189,14 @@ def _package_files() -> dict[str, tuple[str, bool]]:
     return mods
 
 
-def _entry_files() -> list[str]:
-    files = [os.path.join(_REPO, f) for f in _SCRIPT_FILES]
-    for d in _SCRIPT_DIRS:
+def _entry_files(files: tuple[str, ...], dirs: tuple[str, ...]) -> list[str]:
+    """The scripts ``files`` and the non-test ``.py`` files of ``dirs``."""
+    out = [os.path.join(_REPO, f) for f in files]
+    for d in dirs:
         for fn in sorted(os.listdir(os.path.join(_REPO, d))):
             if fn.endswith(".py") and not fn.startswith("test_"):
-                files.append(os.path.join(_REPO, d, fn))
-    return files
+                out.append(os.path.join(_REPO, d, fn))
+    return out
 
 
 def _with_parents(name: str) -> list[str]:
@@ -200,8 +217,24 @@ def _is_registered(node: ast.AST) -> bool:
     )
 
 
+def _getattr_name(node: ast.AST) -> str | None:
+    """``name`` for ``getattr(obj, "name", ...)`` or ``hasattr(obj, "name")``."""
+    if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+            and node.func.id in ("getattr", "hasattr") and len(node.args) >= 2):
+        arg = node.args[1]
+        if isinstance(arg, ast.Constant) and isinstance(arg.value, str) and arg.value.isidentifier():
+            return arg.value
+    return None
+
+
 class _Walk:
-    def __init__(self) -> None:
+    """The walk from the package modules ``pkg_entries``, the named entries
+    and the entry scripts ``scripts``, less their top-level definitions
+    named in ``dropped``."""
+
+    def __init__(self, pkg_entries: tuple[str, ...], scripts: list[str],
+                 dropped: tuple[str, ...] = ()) -> None:
+        self.pkg_entries, self.scripts, self.dropped = pkg_entries, scripts, dropped
         self.mods = {n: _Module(n, p, pkg) for n, (p, pkg) in _package_files().items()}
         self.modules: set[str] = set()  # modules whose import the walk reaches
         self.names: set[str] = set()    # qualified functions, classes, methods
@@ -295,23 +328,23 @@ class _Walk:
                     self.resolve_local(mod, chain)
                 if isinstance(node, ast.Attribute):
                     self.attrs.add(node.attr)
-                elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
-                        and node.value.isidentifier() and id(node) not in mod.docstrings):
-                    # ``getattr(obj, "name")``, a registry or cache key
-                    self.resolve_local(mod, node.value)
-                    self.attrs.add(node.value)
+                name = _getattr_name(node)
+                if name is not None:
+                    self.resolve_local(mod, name)
+                    self.attrs.add(name)
                 for m in mod.imported_modules(node):
                     self.reach_module(m)
 
     def run(self) -> None:
         self.reach_module(f"{_PKG}")
-        for e in _PKG_ENTRIES:
+        for e in self.pkg_entries:
             self.reach_module(f"{_PKG}.{e}")
         for q in _NAMED_ENTRIES:
             self.resolve(q)
-        for path in _entry_files():
+        for path in self.scripts:
             script = _Module(None, path, False)
-            self.todo.append((script, [script.tree]))
+            body = [s for s in script.tree.body if getattr(s, "name", None) not in self.dropped]
+            self.todo.append((script, body))
         while self.todo:
             while self.todo:
                 self.walk_unit(*self.todo.pop())
@@ -343,9 +376,113 @@ def _chain(node: ast.AST) -> str | None:
 
 @functools.lru_cache(maxsize=1)
 def walk() -> _Walk:
-    w = _Walk()
+    w = _Walk(_PKG_ENTRIES, _entry_files(_SCRIPT_FILES, _SCRIPT_DIRS))
     w.run()
     return w
+
+
+@functools.lru_cache(maxsize=1)
+def live_walk() -> _Walk:
+    w = _Walk(_LIVE_PKG_ENTRIES, _entry_files((), _LIVE_SCRIPT_DIRS), _LIVE_DROPPED)
+    w.run()
+    return w
+
+
+def _callee(func: ast.AST) -> str | None:
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+@functools.lru_cache(maxsize=1)
+def _call_sites() -> dict[str, list[tuple[int, frozenset[str], bool]]]:
+    """Callee name -> ``(positional arguments, keyword names, unpacks)`` of
+    each call in non-test code (the package and the entry scripts); a
+    ``partial(f, ...)`` counts as a call of ``f``.  Calls match definitions
+    by name only, so a call of any same-named function counts."""
+    paths = [p for p, _ in _package_files().values()]
+    paths += _entry_files(_SCRIPT_FILES, _SCRIPT_DIRS)
+    sites: dict[str, list[tuple[int, frozenset[str], bool]]] = {}
+    for path in paths:
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func, args = node.func, node.args
+            if _callee(func) == "partial" and args:
+                func, args = args[0], args[1:]
+            name = _callee(func)
+            if name is None:
+                continue
+            unpacks = (any(isinstance(a, ast.Starred) for a in args)
+                       or any(k.arg is None for k in node.keywords))
+            keywords = frozenset(k.arg for k in node.keywords if k.arg)
+            sites.setdefault(name, []).append((len(args), keywords, unpacks))
+    return sites
+
+
+def _is_dataclass(node: ast.ClassDef) -> bool:
+    for d in node.decorator_list:
+        d = d.func if isinstance(d, ast.Call) else d
+        if _callee(d) == "dataclass":
+            return True
+    return False
+
+
+def _function_defaults(fn: ast.AST, skip: int):
+    """``(parameter, positional index or None)`` for each defaulted
+    parameter of ``fn``, the first ``skip`` positional ones (``self``)
+    left out of the index."""
+    a = fn.args
+    positional = [*a.posonlyargs, *a.args]
+    first = len(positional) - len(a.defaults)
+    for i, arg in enumerate(positional[first:], start=first):
+        yield arg.arg, i - skip
+    for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+        if default is not None:
+            yield arg.arg, None
+
+
+def _live_defaults(w: _Walk):
+    """``(label, callee name, parameter, positional index)`` for each
+    defaulted parameter of a reached function, method, class ``__init__``
+    or dataclass field."""
+    for mod in w.mods.values():
+        short = mod.name[len(_PKG) + 1:]
+        for n, node in mod.defs.items():
+            qname = f"{mod.name}.{n}"
+            if qname not in w.names:
+                continue
+            if _is_method(node):
+                for p, i in _function_defaults(node, 0):
+                    yield f"{short}.{n}({p})", n, p, i
+                continue
+            if not isinstance(node, ast.ClassDef):
+                continue
+            if _is_dataclass(node):
+                fields = [s for s in node.body
+                          if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)]
+                for i, f in enumerate(fields):
+                    if f.value is not None:
+                        yield f"{short}.{n}({f.target.id})", n, f.target.id, i
+            for m in node.body:
+                if not _is_method(m) or f"{qname}.{m.name}" not in w.names:
+                    continue
+                static = any(_callee(d) == "staticmethod" for d in m.decorator_list)
+                if m.name == "__init__":
+                    for p, i in _function_defaults(m, 1):
+                        yield f"{short}.{n}({p})", n, p, i
+                elif not m.name.startswith("__"):
+                    for p, i in _function_defaults(m, 0 if static else 1):
+                        yield f"{short}.{n}.{m.name}({p})", m.name, p, i
+
+
+def _passed(sites, param: str, index: int | None) -> bool:
+    return any(unpacks or param in keywords or (index is not None and n_pos > index)
+               for n_pos, keywords, unpacks in sites)
 
 
 def test_every_package_module_is_reached_from_an_entry_point():
@@ -378,3 +515,35 @@ def test_every_package_function_class_and_method_is_reached():
     )
     stale = sorted(n for n in allowed if n in w.names or n not in w.all_names())
     assert stale == [], f"allow-listed names that are reached or gone: {stale}"
+
+
+def test_live_closure_stays_off_the_query_registry():
+    w = live_walk()
+    for m in ("jobs", "serving.app", "serving.feature_service", "ml.training",
+              "sources.redis_sink", "sources.xlsx", "sources.pred_log"):
+        assert f"{_PKG}.{m}" in w.modules, m
+    lines = 0
+    for m in w.modules:
+        with open(w.mods[m].path, encoding="utf-8") as f:
+            lines += sum(1 for _ in f)
+    print(f"live closure: {len(w.modules)} modules, {lines} lines")
+    assert f"{_PKG}.queries" not in w.modules, (
+        "the live paths reach the query registry"
+    )
+
+
+def test_live_options_are_set_by_a_program():
+    w = live_walk()
+    sites = _call_sites()
+    defaults = list(_live_defaults(w))
+    assert len(defaults) > len(_ALLOWED_UNSET)  # the walk saw the live code
+    unset = sorted({label for label, callee, p, i in defaults
+                    if not _passed(sites.get(callee, ()), p, i)})
+    extra = [u for u in unset if u not in _ALLOWED_UNSET]
+    assert extra == [], (
+        "defaulted parameters of live code that no job, tool, perfbench or "
+        "bench.py passes (make each a constant, or give it a reason in "
+        f"_ALLOWED_UNSET): {extra}"
+    )
+    stale = sorted(set(_ALLOWED_UNSET) - set(unset))
+    assert stale == [], f"_ALLOWED_UNSET entries that are passed or gone: {stale}"

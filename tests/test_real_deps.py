@@ -34,7 +34,7 @@ def test_fit_model_returns_lightgbm_flavor():
     assert (model2.predict_proba(X) == proba).all()
 
 
-def test_redis_pipeline_roundtrip_through_fakeredis():
+def test_redis_pipeline_roundtrip_through_fakeredis(monkeypatch):
     """The sink's exact production call sequence (publish_rows: pipeline /
     hset mapping / expire / batched execute) against fakeredis — a faithful
     redis-py implementation — then read back through the serving layer's
@@ -45,8 +45,10 @@ def test_redis_pipeline_roundtrip_through_fakeredis():
     from retailfeaturestore_spark.serving.feature_service import (
         OnlineFeatureService,
     )
+    from retailfeaturestore_spark.sources import redis_sink
     from retailfeaturestore_spark.sources.redis_sink import publish_rows
 
+    monkeypatch.setattr(redis_sink, "PIPELINE_BATCH", 1)  # force the mid-stream flush branch
     client = fakeredis.FakeStrictRedis()
     rows = [
         {
@@ -70,7 +72,6 @@ def test_redis_pipeline_roundtrip_through_fakeredis():
         feature_cols=["spend_30d", "txn_count_30d"],
         onehot_categories=["UK", "FR"],
         ttl=3600,
-        pipeline_batch=1,  # force the mid-stream flush branch
     )
     svc = OnlineFeatureService(client)
     snap = svc.get_snapshot(1)
@@ -156,18 +157,20 @@ def test_live_uvicorn_serving_endpoints(live_server):
     assert bad.status_code == 422  # pydantic validation over the wire
 
 
-def test_publish_rows_roundtrip_through_dict_fake():
+def test_publish_rows_roundtrip_through_dict_fake(monkeypatch):
     """Sandbox-runnable twin of the fakeredis roundtrip: same production
     publish_rows sequence against the hand-rolled DictRedis — keeps the
     refactored partition publisher covered where fakeredis is absent."""
     from retailfeaturestore_spark.serving.feature_service import (
         OnlineFeatureService,
     )
+    from retailfeaturestore_spark.sources import redis_sink
     from retailfeaturestore_spark.sources.redis_sink import (
         DictRedis,
         publish_rows,
     )
 
+    monkeypatch.setattr(redis_sink, "PIPELINE_BATCH", 1)
     client = DictRedis()
     publish_rows(
         [
@@ -183,7 +186,6 @@ def test_publish_rows_roundtrip_through_dict_fake():
         feature_cols=["spend_30d", "txn_count_30d"],
         onehot_categories=["UK", "DE"],
         ttl=60,
-        pipeline_batch=1,
     )
     snap = OnlineFeatureService(client).get_snapshot(7)
     assert snap["spend_30d"] == 4.25

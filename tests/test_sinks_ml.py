@@ -30,7 +30,7 @@ def test_redis_field_contract():
         "spend_30d": 12.5,
         "txn_count_30d": None,
     }
-    fields = _row_fields(row, ["spend_30d", "txn_count_30d"], ["UK", "FR"], "t_ref", "country")
+    fields = _row_fields(row, ["spend_30d", "txn_count_30d"], ["UK", "FR"])
     assert fields["spend_30d"] == "12.5"
     assert fields["txn_count_30d"] == "0.0"      # null -> stringified zero
     assert fields["country__UK"] == "1" and fields["country__FR"] == "0"

@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.operators.tokenize import (
     corpus_stats_and_dfs,
-    corpus_token_stats,
     n_docs_with_tokens,
-    query_term_dfs,
-    term_df,
     term_postings,
     token_corpus,
 )
@@ -56,7 +53,8 @@ def test_token_corpus_shapes_and_dl(spark, docs):
 
 def test_stats_and_postings_match_direct(spark, docs):
     _evict(spark)
-    n_docs, total = corpus_token_stats(spark, "mem://t", docs=docs)
+    (n_docs, total), dfs = corpus_stats_and_dfs(spark, "mem://t", ("a", "c", "zz"), docs=docs)
+    assert dfs == {"a": 2, "c": 2}  # absent term omitted (df 0)
     assert n_docs == 5  # null-text doc still counts
     assert total == 4 + 3 + 1 + 0 + 2
     post = {
@@ -67,24 +65,15 @@ def test_stats_and_postings_match_direct(spark, docs):
     assert post[(2, "b")] == (2, 3)
     assert (3, "") not in post  # empty terms dropped
     assert not any(d == 4 for d, _t in post)  # null text: no postings
-    dfs = {r["term"]: r["df"] for r in term_df(spark, "mem://t", docs=docs).collect()}
+    # document frequency = posting count per term (postings are distinct
+    # on (doc, term))
+    dfs = {}
+    for _doc, term in post:
+        dfs[term] = dfs.get(term, 0) + 1
     assert dfs == {"a": 2, "b": 2, "c": 2}
     # doc 3 is "" (only an empty token) and doc 4 is NULL -> excluded;
     # docs 1, 2, 5 qualify
     assert n_docs_with_tokens(spark, "mem://t", docs=docs) == 3
-
-
-def test_query_term_dfs_and_combined_agree(spark, docs):
-    _evict(spark)
-    dfs = query_term_dfs(spark, "mem://t", ("a", "c", "zz"), docs=docs)
-    assert dfs == {"a": 2, "c": 2}  # absent term omitted (df 0)
-    _evict(spark)
-    stats, dfs2 = corpus_stats_and_dfs(spark, "mem://t", ("a", "c", "zz"), docs=docs)
-    assert stats == (5, 10) and dfs2 == dfs
-    # combined call populated both memo keys: the individual entry points
-    # must now answer without a new job (same dict object back)
-    assert corpus_token_stats(spark, "mem://t", docs=docs) == stats
-    assert query_term_dfs(spark, "mem://t", ("a", "c", "zz"), docs=docs) is dfs2
 
 
 def test_invalidate_evicts_all_layers(spark, docs):
@@ -93,7 +82,7 @@ def test_invalidate_evicts_all_layers(spark, docs):
 
     _evict(spark)
     corpus_stats_and_dfs(spark, "mem://t", ("a",), docs=docs)
-    term_df(spark, "mem://t", docs=docs)
+    term_postings(spark, "mem://t", docs=docs)
     memo = session_memo(spark)
     assert any(k[1] == "mem://t" for k in memo)
     reg = spark._rfs_persisted

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from retailfeaturestore_spark.ml import training
 from retailfeaturestore_spark.ml.training import collect_training_frame, fit_model
 
 
@@ -21,30 +22,38 @@ def _frame(spark, n):
     )
 
 
-def test_guard_trips_on_oversized_frame(spark):
+def test_guard_trips_on_oversized_frame(spark, monkeypatch):
+    monkeypatch.setattr(training, "MAX_DRIVER_ROWS", 100)
     ts = _frame(spark, 1000)
-    with pytest.raises(ValueError, match="max_driver_rows"):
-        collect_training_frame(ts, ["x", "churn_30d"], max_driver_rows=100)
+    with pytest.raises(ValueError, match="MAX_DRIVER_ROWS"):
+        collect_training_frame(ts, ["x", "churn_30d"])
+    with pytest.raises(ValueError, match="MAX_DRIVER_ROWS"):
+        collect_training_frame(_frame(spark, 101), ["x", "churn_30d"])
 
 
-def test_guard_passes_under_budget(spark):
-    pdf = collect_training_frame(
-        _frame(spark, 50), ["x", "churn_30d"], max_driver_rows=100
-    )
+def test_guard_passes_under_budget(spark, monkeypatch):
+    monkeypatch.setattr(training, "MAX_DRIVER_ROWS", 100)
+    pdf = collect_training_frame(_frame(spark, 50), ["x", "churn_30d"])
     assert len(pdf) == 50 and list(pdf.columns) == ["x", "churn_30d"]
+    pdf = collect_training_frame(_frame(spark, 100), ["customer_id", "x"])
+    assert sorted(pdf["customer_id"]) == list(range(100))
 
 
-def test_guard_hash_sample_is_deterministic(spark):
-    ts = _frame(spark, 1000)
-    a = collect_training_frame(
-        ts, ["customer_id", "x"], max_driver_rows=100, sample_over_limit=True
-    )
-    b = collect_training_frame(
-        ts.repartition(13), ["customer_id", "x"], max_driver_rows=100,
-        sample_over_limit=True,
-    )
-    assert 0 < len(a) < 1000
-    assert sorted(a["customer_id"]) == sorted(b["customer_id"])
+def test_guarded_collect_runs_the_plan_once(spark):
+    """A counting UDF in a filter of the frame fires once per row: the
+    guard and the collect are one pass over the plan, not a ``count()``
+    followed by a ``toPandas()``."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def counted(x):
+        calls.add(1)
+        return True
+
+    ts = _frame(spark, 50).where(counted("x"))
+    pdf = collect_training_frame(ts, ["customer_id", "x"])
+    assert sorted(pdf["customer_id"]) == list(range(50))
+    assert calls.value == 50
 
 
 def test_fit_model_flavor_matches_environment():

@@ -185,13 +185,10 @@ def test_label_fold_matches_join_formulation(spark):
     feats = build_customer_features(
         spark.createDataFrame(rows, BRONZE_SCHEMA), windows={"1d": 1}
     )
-    joined = build_training_set(
-        feats, lab, keys=("customer_id", "t_ref"), label_col="churn",
-        labels_deduped=True,
-    )
+    joined = build_training_set(feats, lab.withColumnRenamed("churn", "churn_30d"))
     cols = ["customer_id", "t_ref", "txn_count_1d", "tenure_days", "churn"]
     a = sorted(map(tuple, folded.select(cols).collect()))
-    b = sorted(map(tuple, joined.select(cols).collect()))
+    b = sorted(map(tuple, joined.withColumnRenamed("churn_30d", "churn").select(cols).collect()))
     assert a == b and len(a) == len(rows)
 
 

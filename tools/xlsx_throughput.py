@@ -30,6 +30,7 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from retailfeaturestore_spark.schemas import XLSX_RAW  # noqa: E402
 from retailfeaturestore_spark.session import get_spark  # noqa: E402
 from retailfeaturestore_spark.sources.xlsx import read_xlsx, write_minimal_xlsx  # noqa: E402
 
@@ -72,12 +73,8 @@ def main() -> None:
 
     spark = get_spark("xlsx-throughput")
     spark.sparkContext.setLogLevel("ERROR")
-    schema = (
-        "Invoice string, StockCode string, Description string, Quantity bigint, "
-        "InvoiceDate double, Price double, `Customer ID` double, Country string"
-    )
     t0 = time.time()
-    n_read = read_xlsx(spark, path, schema).count()  # all sheets, header per sheet
+    n_read = read_xlsx(spark, path, XLSX_RAW).count()  # all sheets, header per sheet
     t_read = time.time() - t0
     print(json.dumps({
         "metric": "xlsx_parse_throughput",
