@@ -233,7 +233,7 @@ def _evict_all(spark, sf_dir: str) -> None:
     All of this runs OUTSIDE the timed section."""
     import gc
 
-    invalidate_caches(spark, sf_dir=sf_dir)  # names=None: all plans for sf
+    invalidate_caches(spark, sf_dir=sf_dir)
     gc.collect()  # release py4j handles of the evicted plans' frames
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for jid in list(jmap.keySet().toArray()):

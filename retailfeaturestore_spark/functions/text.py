@@ -13,9 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["words", "shingles", "minhash_hash_pairs", "minhash_component", "HEX_DIGITS"]
-
-HEX_DIGITS = "0123456789abcdef"
+__all__ = ["words", "shingles"]
 
 
 def words(text: Column) -> Column:
@@ -47,34 +45,3 @@ def shingles(text: Column, n: int = 3) -> Column:
         )
         gram = F.zip_with(gram, shifted, lambda a, b: F.concat_ws(" ", a, b))
     return F.array_distinct(F.slice(gram, F.lit(1), k))
-
-
-def minhash_hash_pairs(shingle_arr: Column) -> Column:
-    """ONE md5 per shingle -> array<struct<h1,h2>> of its two 56-bit halves.
-
-    The k MinHash components are derived arithmetically from these pairs
-    (:func:`minhash_component`) — Kirsch-Mitzenmacher double hashing
-    ``g_i = h1 + (i+1)*h2`` gives k pairwise-independent-enough functions
-    for ONE digest evaluation instead of k (the digest dominates the cost:
-    this cut the minhash bench 3-4x).  Materialize this array in its own
-    projection (``withColumn``) before fanning out to the k components so
-    the digest is provably evaluated once per shingle.
-
-    56-bit halves (14 hex chars) keep ``h1 + 12*h2 < 2^60`` — no int64
-    overflow, no modular reduction needed, and exactly reproducible in
-    DuckDB via ``CAST('0x'||substr(md5(sh),..) AS BIGINT)``.
-    """
-    return F.transform(
-        F.transform(shingle_arr, F.md5),
-        lambda d: F.struct(
-            F.conv(F.substring(d, 1, 14), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(d, 15, 14), 16, 10).cast("long").alias("h2"),
-        ),
-    )
-
-
-def minhash_component(pairs: Column, i: int) -> Column:
-    """MinHash component i: min over shingles of ``h1 + (i+1)*h2``."""
-    return F.array_min(
-        F.transform(pairs, lambda p: p["h1"] + F.lit(i + 1) * p["h2"])
-    )

@@ -145,7 +145,6 @@ def load_table_parallel(
     sf_dir: str,
     name: str,
     keys: tuple[str, ...],
-    width: int | None = None,
 ) -> DataFrame:
     """``load_table`` plus a scan-parallelism rescue for row-group-starved
     layouts.
@@ -175,7 +174,7 @@ def load_table_parallel(
     path = os.path.join(sf_dir, f"{name}.parquet")
     cores = spark.sparkContext.defaultParallelism
     if _row_group_count(path) < max(cores // 2, 2):
-        w = width or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        w = int(spark.conf.get("spark.sql.shuffle.partitions"))
         df = df.repartition(w, *[F.col(k) for k in keys])
     return df
 

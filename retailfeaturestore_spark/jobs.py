@@ -316,7 +316,7 @@ def make_training(spark: SparkSession, bronze_path: str, gold_path: str, model_d
         .select("country")
         .collect()
     ]
-    ts = build_training_set(gold, labels, cat_col="country", cat_categories=sorted(cats))
+    ts = build_training_set(gold, labels, sorted(cats))
     numeric = {
         c for c, t in ts.dtypes if t in ("double", "int", "bigint", "float", "smallint")
     }

@@ -32,18 +32,17 @@ MAX_DRIVER_ROWS = 2_000_000
 def build_training_set(
     features: DataFrame,
     labels: DataFrame,
-    cat_col: str | None = None,
-    cat_categories: list[str] | None = None,
+    cat_categories: list[str],
 ) -> DataFrame:
     """J1 inner equi-join of the feature view with the ``churn_30d`` label
-    spine on ``(customer_id, t_ref)``, plus an optional frozen-contract
-    one-hot.  The labels are unique on the keys (both interval-label
+    spine on ``(customer_id, t_ref)``, plus the frozen-contract one-hot of
+    ``country`` over ``cat_categories`` (none when the list is empty).  The labels are unique on the keys (both interval-label
     operators dedupe internally), so the label side runs no ``distinct()``.
     """
     keys = ["customer_id", "t_ref"]
     out = features.join(labels.select(*keys, "churn_30d"), keys, "inner")
-    if cat_col is not None and cat_categories:
-        out = onehot_encode(out, cat_col, cat_categories)
+    if cat_categories:
+        out = onehot_encode(out, "country", cat_categories)
     return out
 
 
@@ -108,5 +107,5 @@ def fit_model(X, y):
     scale = np.abs(X).max(axis=0)
     scale[scale == 0] = 1.0
     w = (X / scale).T @ y / max(len(y), 1)
-    model = LinearStubModel(weights=tuple((w / scale).tolist()), bias=0.0)
+    model = LinearStubModel(weights=tuple((w / scale).tolist()))
     return model, "linear_stub"

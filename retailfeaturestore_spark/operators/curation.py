@@ -32,13 +32,11 @@ GOPHER_FLAGS = (
     "flag_stopwords",
     "flag_symbol_ratio",
 )
+# the held-out benchmark source whose shingles mark contamination
+_HELDOUT_SOURCE = "src0"
 
 
-def judge_corpus_admission(
-    docs: DataFrame,
-    heldout_source: str = "src0",
-    shingle_n: int = 3,
-) -> DataFrame:
+def judge_corpus_admission(docs: DataFrame) -> DataFrame:
     """-> per-document ``(doc_id, source, n_words, kept)`` (kept in {0,1})."""
     flags = (
         gopher_quality(docs, carry_cols=("source", "text"))
@@ -51,12 +49,12 @@ def judge_corpus_admission(
         )
         .drop("text")
     )
-    cand = docs.where(F.col("source") != heldout_source).select(
-        "doc_id", F.explode(shingles(F.col("text"), shingle_n)).alias("sh")
+    cand = docs.where(F.col("source") != _HELDOUT_SOURCE).select(
+        "doc_id", F.explode(shingles(F.col("text"), 3)).alias("sh")
     )
     ref = (
-        docs.where(F.col("source") == heldout_source)
-        .select(F.explode(shingles(F.col("text"), shingle_n)).alias("sh"))
+        docs.where(F.col("source") == _HELDOUT_SOURCE)
+        .select(F.explode(shingles(F.col("text"), 3)).alias("sh"))
         .distinct()
     )
     contam = (
@@ -67,7 +65,7 @@ def judge_corpus_admission(
             F.sum(F.coalesce(F.col("__hit"), F.lit(0))).cast("long").alias("__n_hit"),
         )
     )
-    kept = (F.col("__canon") == 1) & (F.col("source") != heldout_source)
+    kept = (F.col("__canon") == 1) & (F.col("source") != _HELDOUT_SOURCE)
     for flag in GOPHER_FLAGS:
         kept = kept & (F.col(flag) == 1)
     kept = kept & (

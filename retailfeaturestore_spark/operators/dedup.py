@@ -13,9 +13,7 @@ Four families, each chosen for a different scale/recall tradeoff:
   classic near-dup path: candidate generation is O(docs x bands) with tiny
   keys, and the quadratic blowup is confined to hash-bucket collisions.
 - **inverted-index exact Jaccard**: shared-shingle candidate join (posting
-  lists), then exact Jaccard.  Recall-exact baseline; at 100 TB you cap
-  posting-list length (drop shingles with document frequency > max_df, the
-  standard trick) — parameterized here.
+  lists), then exact Jaccard.  Recall-exact baseline.
 - **SimHash**: per-word hash bits weighted by term frequency -> 32-bit
   signature; near-dups = small Hamming distance, candidates via 8-bit
   signature bands.
@@ -29,13 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    HEX_DIGITS,
-    minhash_component,
-    minhash_hash_pairs,
-    shingles,
-    words,
-)
+from ..functions.text import shingles, words
 
 __all__ = [
     "spread_compute",
@@ -77,21 +69,17 @@ def spread_compute(df: DataFrame) -> DataFrame:
     return df
 
 
-def shingle_docs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def shingle_docs(docs: DataFrame, n: int) -> DataFrame:
     """(id, shingle-set) projection — compute ONCE and pass to the signature
     / candidate / verification stages (shingling + md5 dominate the pipeline;
     recomputing it per stage tripled the wall time in bench).  Callers
     should ``.persist()`` this when feeding multiple consumers."""
     return spread_compute(docs).select(
-        F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("__sh")
+        F.col("doc_id").alias("id"), shingles(F.col("text"), n).alias("__sh")
     ).where(F.size("__sh") > 0)
 
 
-def posting_lists(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def posting_lists(docs: DataFrame, n: int) -> DataFrame:
     """``(id, sh, h1, h2)``: one exploded row per distinct shingle, ONE md5
     per shingle, hex halves as 56-bit longs (Kirsch-Mitzenmacher bases).
 
@@ -106,8 +94,8 @@ def posting_lists(
     return (
         spread_compute(docs)
         .select(
-            F.col(id_col).alias("id"),
-            F.explode(shingles(F.col(text_col), n)).alias("sh"),
+            F.col("doc_id").alias("id"),
+            F.explode(shingles(F.col("text"), n)).alias("sh"),
         )
         .withColumn("__d", F.md5("sh"))
         .select(
@@ -119,13 +107,13 @@ def posting_lists(
     )
 
 
-def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def dedup_exact(docs: DataFrame) -> DataFrame:
     """Exact dedup groups: content digest -> canonical (min) id + copy count."""
     return (
-        docs.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
+        docs.select(F.md5(F.col("text")).alias("content_hash"), F.col("doc_id"))
         .groupBy("content_hash")
         .agg(
-            F.min(id_col).alias("keep_doc_id"),
+            F.min("doc_id").alias("keep_doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -133,8 +121,6 @@ def dedup_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
 
 def containment_pairs(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     max_df: int = 20,
     thr_num: int = 4,
@@ -153,7 +139,7 @@ def containment_pairs(
     no analogue in the reference (pandas rows, ``/root/reference/jobs``).
 
     The ``max_df`` cap serves double duty: it bounds the posting-list
-    self-join exactly like ``jaccard_pairs_exact`` (no quadratic blowup on
+    self-join (no quadratic blowup on
     boilerplate shingles shared by thousands of docs), and it makes the
     measure boilerplate-insensitive — a shared navigation header should
     not make every page "contained" in every other.  Restricting BOTH the
@@ -176,7 +162,7 @@ def containment_pairs(
     single long/long IEEE division — bit-identical across engines.
     """
     post = (
-        shingle_docs(docs, text_col, id_col, n)
+        shingle_docs(docs, n)
         .select("id", F.explode("__sh").alias("sh"))
         .select("id", F.md5("sh").alias("shd"))
     )
@@ -184,8 +170,7 @@ def containment_pairs(
     # a boilerplate shingle shared by millions of docs would form one
     # window partition a single task must buffer just to discard, while the
     # groupBy collapses it map-side to one (digest, count) row — the skew
-    # the cap exists to defuse must not be paid computing the cap (same
-    # shape as jaccard_pairs_exact's max_df guard).
+    # the cap exists to defuse must not be paid computing the cap.
     dfreq = post.groupBy("shd").agg(F.count(F.lit(1)).cast("long").alias("__df"))
     rare = post.join(
         dfreq.where(F.col("__df") <= max_df).select("shd"), "shd", "left_semi"
@@ -228,41 +213,21 @@ def containment_pairs(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = 12,
-    shingled: DataFrame | None = None,
-    postings: DataFrame | None = None,
-) -> DataFrame:
-    """doc -> k-component MinHash signature over word n-gram shingles.
-
-    Preferred input: ``postings`` (from :func:`posting_lists`, persisted) —
-    the k components are then ONE ``groupBy(id).agg(min(h1 + (i+1)*h2))``,
-    partially aggregated map-side before the (tiny) shuffle.  The legacy
-    ``shingled`` array path computes the same values via array arithmetic
-    (``functions.text.minhash_hash_pairs`` — one md5 per shingle either way).
+def minhash_signatures(postings: DataFrame, k: int = 12) -> DataFrame:
+    """``(doc_id, h0..h{k-1})``: the k-component MinHash signature over the
+    word n-gram shingles of :func:`posting_lists` (persisted) — ONE
+    ``groupBy(id).agg(min(h1 + (i+1)*h2))``, partially aggregated map-side
+    before the (tiny) shuffle.
     """
-    if postings is not None:
-        return postings.groupBy(F.col("id").alias(id_col)).agg(
-            *[
-                F.min(F.col("h1") + F.lit(s + 1) * F.col("h2")).alias(f"h{s}")
-                for s in range(k)
-            ]
-        )
-    d = shingled if shingled is not None else shingle_docs(docs, text_col, id_col, n)
-    d = d.withColumn("__mh", minhash_hash_pairs(F.col("__sh")))
-    return d.select(
-        F.col("id").alias(id_col),
-        *[minhash_component(F.col("__mh"), s).alias(f"h{s}") for s in range(k)],
+    return postings.groupBy(F.col("id").alias("doc_id")).agg(
+        *[
+            F.min(F.col("h1") + F.lit(s + 1) * F.col("h2")).alias(f"h{s}")
+            for s in range(k)
+        ]
     )
 
 
-def band_rows(
-    sigs: DataFrame, id_col: str = "doc_id", k: int = 12, bands: int = 4
-) -> DataFrame:
+def band_rows(sigs: DataFrame, k: int = 12, bands: int = 4) -> DataFrame:
     """Signature table -> ``(id, band, band_key)`` LSH band rows via a
     single explode — the streaming ingest probe joins new-batch bands
     against an accumulated band store instead of self-joining."""
@@ -279,72 +244,31 @@ def band_rows(
         ]
     )
     return sigs.select(
-        F.col(id_col).alias("id"), F.explode(band_structs).alias("__bb")
+        F.col("doc_id").alias("id"), F.explode(band_structs).alias("__bb")
     ).select("id", F.col("__bb.band").alias("band"), F.col("__bb.band_key").alias("band_key"))
 
 
-def jaccard_pairs_exact(
-    docs: DataFrame,
-    candidates: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-    shingled: DataFrame | None = None,
-    postings: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs.
-
-    ``candidates=None`` -> inverted-index candidates: explode distinct
-    shingles, self-join the posting lists (pairs sharing >= 1 shingle).
-    ``max_df`` caps posting-list length (drop ubiquitous shingles) — the
-    standard scale guard against quadratic hot posting lists.
-
-    Preferred input: ``postings`` (from :func:`posting_lists`, persisted) —
-    sizes and intersections derive from the same skinny cached rows.
+def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact word-trigram Jaccard over inverted-index candidates: explode
+    distinct shingles, self-join the posting lists (pairs sharing >= 1
+    shingle).
 
     Jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) over integer counts —
     engine-exact arithmetic.
     """
-    if postings is not None:
-        sizes = postings.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-        postings = postings.select("id", "sh")
-    else:
-        d = shingled if shingled is not None else shingle_docs(docs, text_col, id_col, n)
-        sizes = d.select(F.col("id"), F.size("__sh").alias("n_sh"))
-        postings = d.select(F.col("id"), F.explode("__sh").alias("sh"))
-    if max_df is not None:
-        keep = (
-            postings.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") <= max_df)
-            .select("sh")
+    d = shingle_docs(docs, 3)
+    sizes = d.select(F.col("id"), F.size("__sh").alias("n_sh"))
+    postings = d.select(F.col("id"), F.explode("__sh").alias("sh"))
+    a = postings.alias("a")
+    b = postings.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")),
         )
-        postings = postings.join(keep, "sh")
-
-    if candidates is None:
-        a = postings.alias("a")
-        b = postings.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("n_int"))
-        )
-    else:
-        # verify only the candidate pairs: explode each side's shingles and
-        # count matches (candidate set is small by construction)
-        pa = postings.select(F.col("id").alias("doc_a"), F.col("sh"))
-        pb = postings.select(F.col("id").alias("doc_b"), F.col("sh"))
-        inter = (
-            candidates.join(pa, "doc_a")
-            .join(pb, ["doc_b", "sh"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_int"))
-        )
+        .groupBy(F.col("a.id").alias("doc_a"), F.col("b.id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_int"))
+    )
 
     sa = sizes.withColumnsRenamed({"id": "doc_a", "n_sh": "n_a"})
     sb = sizes.withColumnsRenamed({"id": "doc_b", "n_sh": "n_b"})
@@ -367,9 +291,7 @@ def jaccard_pairs_exact(
 SIMHASH_BITS = 32
 
 
-def simhash_signatures(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """32-bit SimHash over the word multiset (term frequency weighted).
 
     Per word: first 8 hex chars of md5 -> 32 bits.  Per bit position j:
@@ -382,7 +304,7 @@ def simhash_signatures(
     """
     w = (
         spread_compute(docs)
-        .select(F.col(id_col), F.explode(words(F.col(text_col))).alias("__w"))
+        .select(F.col("doc_id"), F.explode(words(F.col("text"))).alias("__w"))
         # parse the 8 hex chars ONCE into a 32-bit integer; each of the 32
         # per-bit aggregates is then a shift+mask on that long instead of a
         # substring+instr string scan (32 string ops per word occurrence
@@ -399,16 +321,15 @@ def simhash_signatures(
         aggs.append(
             F.sum(F.when(bit == 1, F.lit(1)).otherwise(F.lit(-1))).alias(f"b{j}")
         )
-    sums = w.groupBy(id_col).agg(*aggs)
+    sums = w.groupBy("doc_id").agg(*aggs)
     sig = F.concat(
         *[F.when(F.col(f"b{j}") > 0, F.lit("1")).otherwise(F.lit("0")) for j in range(SIMHASH_BITS)]
     )
-    return sums.select(F.col(id_col), sig.alias("simhash"))
+    return sums.select(F.col("doc_id"), sig.alias("simhash"))
 
 
 def simhash_pairs(
     sigs: DataFrame,
-    id_col: str = "doc_id",
     max_hamming: int = 6,
     bands: int = 4,
     cache_scope: str | None = None,
@@ -438,7 +359,7 @@ def simhash_pairs(
         sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
         register_persisted(sigs, ("simhash_sigs", cache_scope))
     band_rows = sigs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.col("simhash").alias("sig"),
         F.explode(
             F.array(
@@ -481,11 +402,14 @@ def simhash_pairs(
     )
 
 
+# round cap of both connected-components loops
+CC_MAX_ITER = 25
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    max_iter: int = 25,
     algorithm: str = "propagation",
 ) -> DataFrame:
     """Cluster the near-dup pair graph: (id, cluster_id) with cluster_id =
@@ -515,7 +439,7 @@ def connected_components(
     ``cluster_id == id`` as the canonical survivor.
     """
     if algorithm == "star":
-        return _cc_star(pairs, a_col, b_col, max_iter)
+        return _cc_star(pairs, a_col, b_col)
     if algorithm != "propagation":
         raise ValueError(f"unknown algorithm: {algorithm!r}")
     # Materialize the edge set ONCE — it is consumed every round, and an
@@ -536,7 +460,7 @@ def connected_components(
         .localCheckpoint()
     )
     rounds = 0
-    for _round in range(max_iter):
+    for _round in range(CC_MAX_ITER):
         neighbor_min = (
             edges.join(labels, edges["src"] == labels["id"])
             .select(F.col("dst").alias("id"), F.col("label"))
@@ -571,7 +495,7 @@ def connected_components(
     return out
 
 
-def _cc_star(pairs: DataFrame, a_col: str, b_col: str, max_iter: int) -> DataFrame:
+def _cc_star(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al., SoCC'14).
 
     Each round: LARGE-STAR links every neighbor larger than u to u's
@@ -676,7 +600,7 @@ def _cc_star(pairs: DataFrame, a_col: str, b_col: str, max_iter: int) -> DataFra
         return not bad.take(1)
 
     rounds = 0
-    for i in range(max_iter):
+    for i in range(CC_MAX_ITER):
         edges = small_star(large_star(edges)).localCheckpoint()
         rounds = i + 1
         if is_star_forest(edges):
@@ -691,15 +615,13 @@ def _cc_star(pairs: DataFrame, a_col: str, b_col: str, max_iter: int) -> DataFra
     return out
 
 
-def _position_ngrams(
-    docs: DataFrame, n: int, text_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame]:
+def _position_ngrams(docs: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
     """(base, grams): base = (doc_id, ws, n_tokens); grams = one row per
     token position (doc_id, s, gram) with gram = md5 of the n-token window
     starting at 1-based position s."""
-    ws = F.split(F.col(text_col), " ")
+    ws = F.split(F.col("text"), " ")
     base = docs.select(
-        F.col(id_col).alias("doc_id"), ws.alias("ws")
+        F.col("doc_id"), ws.alias("ws")
     ).withColumn("n_tokens", F.size("ws").cast("long"))
     gram_arr = F.when(
         F.size("ws") >= n,
@@ -768,15 +690,13 @@ def apply_span_removal(base: DataFrame, spans: DataFrame) -> DataFrame:
     )
 
 
-def _dup_span_frames(
-    docs: DataFrame, n: int, text_col: str, id_col: str
-) -> tuple[DataFrame, DataFrame]:
+def _dup_span_frames(docs: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
     """(base, spans): base = (doc_id, ws, n_tokens) for every doc; spans =
     (doc_id, st, en) maximal merged token spans whose n-grams occur more
     than once corpus-wide.  Shared engine for the audit and removal ops —
     see repeated_ngram_spans for the scale rationale (map-side gram count,
     AQE-splittable shuffle-hash join, per-doc island window)."""
-    base, grams = _position_ngrams(docs, n, text_col, id_col)
+    base, grams = _position_ngrams(docs, n)
     dup_grams = (
         grams.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -785,12 +705,7 @@ def _dup_span_frames(
     )
     dup = grams.join(dup_grams.hint("shuffle_hash"), "gram").select("doc_id", "s")
     return base, merge_positions_to_spans(dup, n)
-def repeated_ngram_spans(
-    docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def repeated_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """Substring-level exact dedup statistics (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): mark every
     token position whose n-gram occurs MORE THAN ONCE corpus-wide
@@ -811,7 +726,7 @@ def repeated_ngram_spans(
     doc-keyed.  All span arithmetic is integer-exact; the single division
     per doc is exact-input IEEE.
     """
-    base, spans = _dup_span_frames(docs, n, text_col, id_col)
+    base, spans = _dup_span_frames(docs, n)
     islands = (
         spans.groupBy("doc_id")
         .agg(
@@ -835,12 +750,7 @@ def repeated_ngram_spans(
     )
 
 
-def remove_repeated_ngram_spans(
-    docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def remove_repeated_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """The actionable half of substring dedup: REWRITE every document with
     its corpus-duplicated n-gram spans removed — ``(doc_id, n_tokens,
     kept_tokens, clean_text)``.  Every doc survives (a fully-duplicated doc
@@ -853,5 +763,5 @@ def remove_repeated_ngram_spans(
     drops covered positions inside whole-stage codegen — no UDF, no
     explode of the token stream, no extra exchange beyond the span
     engine's two."""
-    base, spans = _dup_span_frames(docs, n, text_col, id_col)
+    base, spans = _dup_span_frames(docs, n)
     return apply_span_removal(base, spans)

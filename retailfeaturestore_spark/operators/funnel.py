@@ -25,31 +25,28 @@ __all__ = ["funnel_stage_times", "funnel_summary"]
 def funnel_stage_times(
     events: DataFrame,
     stages: tuple[str, ...],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
-    """One row per user: ``stage_<name>`` = first qualifying timestamp of
+    """One row per ``user_id``: ``stage_<name>`` = first qualifying timestamp of
     each funnel stage (null = user never reached it).  Strict ordering:
     a stage-k event only qualifies with ``ts >`` the stage-(k-1) time, so
     an out-of-order conversion (purchase logged before the click) does not
     count — the semantics a time-ordered funnel needs."""
     if not stages:
         raise ValueError("stages must be non-empty")
-    w = Window.partitionBy(user_col)
-    df = events.select(user_col, ts_col, type_col)
+    w = Window.partitionBy("user_id")
+    df = events.select("user_id", "ts", "event_type")
     prev: str | None = None
     for stage in stages:
-        cond = F.col(type_col) == stage
+        cond = F.col("event_type") == stage
         if prev is not None:
-            cond = cond & (F.col(ts_col) > F.col(prev))
+            cond = cond & (F.col("ts") > F.col(prev))
         col_name = f"stage_{stage}"
-        df = df.withColumn(col_name, F.min(F.when(cond, F.col(ts_col))).over(w))
+        df = df.withColumn(col_name, F.min(F.when(cond, F.col("ts"))).over(w))
         prev = col_name
     # collapse to one row per user; the stage columns are per-user constants
     # and the groupBy key is the window partition key, so this aggregation is
     # partition-local (no second exchange).
-    return df.groupBy(user_col).agg(
+    return df.groupBy("user_id").agg(
         *[F.max(f"stage_{s}").alias(f"stage_{s}") for s in stages]
     )
 

@@ -29,24 +29,19 @@ from ._cache import register_persisted
 __all__ = ["copurchase_edges", "pagerank_scaled", "triangle_counts", "similar_by_neighbors"]
 
 _SCALE = 1_000_000_000_000  # 1e12 — shared with the oracle CTEs
+_DAMPING_NUM, _DAMPING_DEN = 85, 100
+# PageRank rounds between lineage truncations
+PAGERANK_CHECKPOINT_EVERY = 8
 
 
-def copurchase_edges(
-    lineitem: DataFrame, max_items_per_order: int | None = None
-) -> DataFrame:
+def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Directed co-purchase edge list: (src, dst) part pairs that appear in
     the same order, both directions, no self-loops, distinct.
 
     Scale shape: the self-join keys on l_orderkey (both sides hash-partition
     on the same key — one exchange per side, no broadcast of a fact table);
     per-order fan-out is quadratic in ORDER SIZE only (~items-per-order²,
-    a small constant), never in corpus size.  Whale orders (a single order
-    with thousands of line items) are the one skew hazard —
-    ``max_items_per_order`` is the valve: each order contributes at most
-    its (deterministically) first-k parts, bounding per-order fan-out at
-    k² regardless of basket size.  The cap window rides the SAME orderkey
-    partitioning the self-join needs, so it costs a sort, not an extra
-    exchange."""
+    a small constant), never in corpus size."""
     # r13 re-plan (guide §2.3/§2.4): the r6-r12 shape was distinct(ok, part)
     # -> SMJ self-join on ok -> distinct(src, dst) — FOUR exchanges plus two
     # merge-join sorts, and the self-join shipped every (ok, part) row twice
@@ -58,22 +53,14 @@ def copurchase_edges(
     #   explode x explode, src != dst   [map-side, k^2 per order]
     #   distinct(src, dst)              [exchange 2]
     # Per-order state is the order's DISTINCT part set — bounded by basket
-    # size exactly like the old self-join's per-key fan-out, with
-    # ``max_items_per_order`` as the same whale valve (first-k parts in
-    # part order == slice(array_sort, 1, k) over the set).  Measured at
+    # size exactly like the old self-join's per-key fan-out.  Measured at
     # sf0.1: the shared edge build drops ~40% (see OPTIMIZATION_r13.md).
     li = lineitem.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part")
     )
     sets = li.groupBy("ok").agg(F.collect_set("part").alias("__ps"))
-    ps = F.col("__ps")
-    if max_items_per_order is not None:
-        # deterministic first-k: k smallest part ids, identical to the old
-        # row_number-over-(ok ORDER BY part) cap
-        ps = F.slice(F.array_sort(ps), 1, max_items_per_order)
     return (
-        sets.select(ps.alias("__ps"))
-        .select(F.explode("__ps").alias("src"), F.col("__ps"))
+        sets.select(F.explode("__ps").alias("src"), F.col("__ps"))
         .select("src", F.explode("__ps").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
@@ -83,14 +70,11 @@ def copurchase_edges(
 def pagerank_scaled(
     edges: DataFrame,
     n_iter: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    checkpoint_every: int = 8,
     cache_scope: str | None = None,
     seeds: DataFrame | None = None,
-    seed_id_col: str = "id",
 ) -> DataFrame:
-    """Unweighted PageRank over a directed edge list, integer-exact.
+    """Unweighted PageRank over a directed edge list, integer-exact, with
+    damping ``_DAMPING_NUM / _DAMPING_DEN``.
 
     Vertices = nodes with out-edges (in an undirected/symmetrized graph —
     e.g. copurchase_edges — that is every connected node, so no dangling
@@ -111,7 +95,7 @@ def pagerank_scaled(
     partitioning is reused every round since edges are the static side) and
     ONE aggregation exchange (sum of contributions keyed on dst).  Rank
     state is 2 longs per vertex — never driver-side; with ``n_iter`` beyond
-    a handful, ``checkpoint_every`` truncates the growing lineage via
+    a handful, every ``PAGERANK_CHECKPOINT_EVERY``-th round truncates the growing lineage via
     localCheckpoint exactly like connected_components' rounds
     (operators/dedup.py).  Returns (id, degree, pagerank_scaled, pagerank).
     """
@@ -149,12 +133,12 @@ def pagerank_scaled(
         ed = ed.persist()
         register_persisted(deg, ("pagerank_deg", cache_scope))
         register_persisted(ed, ("pagerank_edges", cache_scope))
-    base = (damping_den - damping_num) * _SCALE // damping_den
+    base = (_DAMPING_DEN - _DAMPING_NUM) * _SCALE // _DAMPING_DEN
     verts = deg.select(F.col("src").alias("id"))
     if seeds is None:
         vbase = verts.withColumn("b", F.lit(base).cast("long"))
     else:
-        sd = seeds.select(F.col(seed_id_col).alias("id")).distinct().withColumn(
+        sd = seeds.select("id").distinct().withColumn(
             "__s", F.lit(1)
         )
         vbase = verts.join(sd.hint("shuffle_hash"), "id", "left").select(
@@ -193,11 +177,11 @@ def pagerank_scaled(
                 "id",
                 (
                     F.col("b")
-                    + F.expr(f"({damping_num} * coalesce(s, 0L)) div {damping_den}")
+                    + F.expr(f"({_DAMPING_NUM} * coalesce(s, 0L)) div {_DAMPING_DEN}")
                 ).cast("long").alias("r"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < n_iter:
             ranks = ranks.localCheckpoint(eager=True)
     out = (
         ranks.join(deg.select(F.col("src").alias("id"), "deg").hint("shuffle_hash"), "id")

@@ -17,8 +17,9 @@ from pyspark.sql import functions as F
 __all__ = ["attach_payload", "payload_meta"]
 
 
-def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Simulate media ingest: utf-8 payload bytes + typed metadata struct.
+def attach_payload(docs: DataFrame) -> DataFrame:
+    """Simulate media ingest of ``text``: utf-8 payload bytes + typed
+    metadata struct.
 
     With real media, the payload comes off object storage
     (``spark.read.format("binaryFile")``) and metadata from the container
@@ -26,21 +27,21 @@ def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     return docs.withColumns(
         {
-            "payload": F.encode(F.col(text_col), "utf-8"),
+            "payload": F.encode(F.col("text"), "utf-8"),
             "media_meta": F.struct(
-                F.octet_length(F.col(text_col)).cast("long").alias("n_bytes"),
-                F.md5(F.col(text_col)).alias("checksum"),
+                F.octet_length(F.col("text")).cast("long").alias("n_bytes"),
+                F.md5(F.col("text")).alias("checksum"),
                 F.lit("text/plain").alias("mime"),
             ),
         }
     )
 
 
-def payload_meta(docs_with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def payload_meta(docs_with_payload: DataFrame) -> DataFrame:
     """Metadata-only projection — the payload column is pruned from the scan
     when downstream consumers only touch metadata (verify via ReadSchema)."""
     return docs_with_payload.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("media_meta.n_bytes").alias("n_bytes"),
         F.col("media_meta.checksum").alias("checksum"),
         F.col("media_meta.mime").alias("mime"),

@@ -36,7 +36,7 @@ from ..functions.text import words
 __all__ = ["pack_chunks", "pack_chunk_text", "pack_bins_ffd"]
 
 
-def _shard_col(id_col: str, n_shards: int):
+def _shard_col(n_shards: int):
     """md5-uniform shard id (first 8 hex chars of md5('pack#'||id), i.e. 32
     bits, mod n_shards) — the engine-portable coin used throughout (cf.
     hash_split, negative sampling): DuckDB computes the identical value, so
@@ -45,7 +45,7 @@ def _shard_col(id_col: str, n_shards: int):
     skew above 64 — the docstring's per-task memory bound must hold for
     thousands of shards)."""
     return (
-        F.conv(F.substring(F.md5(F.concat(F.lit("pack#"), F.col(id_col).cast("string"))), 1, 8), 16, 10)
+        F.conv(F.substring(F.md5(F.concat(F.lit("pack#"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
         .cast("long")
         % F.lit(n_shards)
     )
@@ -71,15 +71,13 @@ def _positions(
     docs: DataFrame,
     max_tokens: int,
     n_shards: int,
-    text_col: str,
-    id_col: str,
     with_text: bool,
 ) -> DataFrame:
     """Shared packing front: per document ``(shard, __n_tokens, __start``
     and, with ``with_text``, ``__ws)`` — the md5 shard assignment and the
     running token offset (ONE window over the one shard exchange).
 
-    Precondition: ``id_col`` is unique (the documents table's key).  A
+    Precondition: ``doc_id`` is unique (the documents table's key).  A
     duplicated id would make the running-offset window's tie order — hence
     every downstream offset — partition-order-dependent.
 
@@ -91,16 +89,16 @@ def _positions(
     """
     if max_tokens <= 0 or n_shards <= 0:
         raise ValueError("max_tokens and n_shards must be positive")
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     cols = [
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(ws).cast("long").alias("__n_tokens"),
-        _shard_col(id_col, n_shards).alias("shard"),
+        _shard_col(n_shards).alias("shard"),
     ]
     if with_text:
         cols.insert(1, ws.alias("__ws"))
-    t = docs.where(F.col(text_col) != "").select(*cols).where(F.col("__n_tokens") > 0)
-    w = Window.partitionBy("shard").orderBy(id_col).rowsBetween(Window.unboundedPreceding, 0)
+    t = docs.where(F.col("text") != "").select(*cols).where(F.col("__n_tokens") > 0)
+    w = Window.partitionBy("shard").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
     carry = ["shard", "__n_tokens"] + (["__ws"] if with_text else [])
     return t.select(
         *carry,
@@ -112,12 +110,10 @@ def _fragments(
     docs: DataFrame,
     max_tokens: int,
     n_shards: int,
-    text_col: str,
-    id_col: str,
 ) -> DataFrame:
     """Ledger fragments: one row per (document, intersected chunk) with the
     token interval bounds — :func:`_positions` + the chunk-span explode."""
-    pos = _positions(docs, max_tokens, n_shards, text_col, id_col, with_text=False)
+    pos = _positions(docs, max_tokens, n_shards, with_text=False)
     frag = pos.select(
         "shard",
         "__n_tokens",
@@ -134,8 +130,6 @@ def pack_chunks(
     docs: DataFrame,
     max_tokens: int = 512,
     n_shards: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Concat-and-chunk packing statistics: per (shard, chunk) — how many
     document fragments land in the chunk, how many documents *start* there,
@@ -152,10 +146,10 @@ def pack_chunks(
     fragment explode is bounded by ``total_tokens/max_tokens + n_docs``
     rows (each document adds at most its chunk-span), then a partial-agg
     rollup on (shard, chunk_id).  Nothing is quadratic and no stage holds
-    more than a shard's token ledger.  Precondition: unique ``id_col``
+    more than a shard's token ledger.  Precondition: unique ``doc_id``
     (see :func:`_positions`).
     """
-    frag = _fragments(docs, max_tokens, n_shards, text_col, id_col)
+    frag = _fragments(docs, max_tokens, n_shards)
     started = F.when(F.col("__start") >= F.col("chunk_id") * F.lit(max_tokens), 1).otherwise(0)
     return (
         frag.groupBy("shard", "chunk_id")
@@ -172,8 +166,6 @@ def pack_chunk_text(
     docs: DataFrame,
     max_tokens: int = 512,
     n_shards: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The MATERIALIZED packed sequences (``pack_chunks`` emits the ledger;
     this emits the training rows): per (shard, chunk_id) the actual
@@ -185,7 +177,7 @@ def pack_chunk_text(
     second sort pass.  Plan: the text rides the ONE shard exchange (a
     packing job must move text to its output shard — that is the job),
     and the rollup again reuses the shard partitioning.  Precondition:
-    unique ``id_col`` (see :func:`_positions`).
+    unique ``doc_id`` (see :func:`_positions`).
 
     Whale-doc safety: the piece is SLICED INSIDE the chunk-sequence
     ``transform`` so only the (chunk_id, piece) structs ride the explode —
@@ -193,7 +185,7 @@ def pack_chunk_text(
     first and slicing after would copy the full token array into every
     fragment row: quadratic for a document spanning many chunks).
     """
-    pos = _positions(docs, max_tokens, n_shards, text_col, id_col, with_text=True)
+    pos = _positions(docs, max_tokens, n_shards, with_text=True)
 
     def piece_struct(c):
         lo, hi = _interval_cols(F.col("__start"), F.col("__n_tokens"), c, max_tokens)
@@ -262,8 +254,6 @@ def pack_bins_ffd(
     docs: DataFrame,
     max_tokens: int = 512,
     n_shards: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """First-fit-decreasing packing (documents kept whole): per (shard,
     bin) — document count, token fill, and the largest member.  The greedy
@@ -277,19 +267,19 @@ def pack_bins_ffd(
     this surface is pytest-verified (differential vs an independent python
     packer) rather than oracle-backed, like the streaming operators.
 
-    Precondition: unique ``id_col``; a duplicated id would let two rows
+    Precondition: unique ``doc_id``; a duplicated id would let two rows
     share one greedy placement and silently overflow a bin, so the
     per-shard packer fails loudly instead.
     """
     if max_tokens <= 0 or n_shards <= 0:
         raise ValueError("max_tokens and n_shards must be positive")
-    n_tok = F.size(words(F.col(text_col))).cast("long")
+    n_tok = F.size(words(F.col("text"))).cast("long")
     ledger = (
-        docs.where(F.col(text_col) != "")  # empty docs contribute nothing
+        docs.where(F.col("text") != "")  # empty docs contribute nothing
         .select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             n_tok.alias("n_tokens"),
-            _shard_col(id_col, n_shards).alias("shard"),
+            _shard_col(n_shards).alias("shard"),
         )
         .where(F.col("n_tokens") > 0)
     )

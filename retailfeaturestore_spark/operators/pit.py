@@ -73,17 +73,16 @@ def asof_join(
     lookup_ts: str,
     value_cols: list[str],
     lookup_tiebreak: str,
-    strict: bool = False,
 ) -> DataFrame:
     """Batch as-of join: for every spine row, the latest lookup row with
-    ``lookup_ts <= spine_ts`` (or ``<`` when ``strict``) for the same key.
+    ``lookup_ts <= spine_ts`` for the same key.
 
     Union trick: tag both sides, union by key, one event-time-sorted window,
     ONE ``last_value(struct, ignoreNulls)`` carried forward onto spine rows —
     a single struct of all value columns, so the carried values always come
     from the SAME lookup row (carrying columns independently would let an
     older row's stale non-null value leak through a newer row's null).  Equal
-    timestamps: lookup rows sort before spine rows (non-strict as-of), and
+    timestamps: lookup rows sort before spine rows, and
     among equal-ts lookup rows the largest ``lookup_tiebreak`` wins (native
     dtype ordering — no lossy cast).
 
@@ -104,7 +103,7 @@ def asof_join(
     lu = lookup.select(
         F.col(key),
         epoch_us(lookup_ts).alias("__ts_us"),
-        F.lit(0 if not strict else 2).alias("__side"),
+        F.lit(0).alias("__side"),
         F.col(lookup_tiebreak).alias("__tb"),
         vals.alias("__vals"),
     )
@@ -119,8 +118,7 @@ def asof_join(
         *[F.lit(None).cast(dict(spine.dtypes)[c]).alias(c) for c in spine_cols if c != key],
     )
     unioned = s_sel.unionByName(lu_sel)
-    # strict=False: lookups (side 0) sort before spine (side 1) at equal ts;
-    # strict=True: lookups get side 2, sorting after -> excluded at equal ts.
+    # lookups (side 0) sort before spine (side 1) at equal ts
     w = (
         Window.partitionBy(key)
         .orderBy("__ts_us", "__side", "__tb")

@@ -29,17 +29,12 @@ __all__ = [
 @dataclass
 class Check:
     name: str
-    # aggregate producing the number of VIOLATIONS
+    # aggregate producing the number of VIOLATIONS: a SUM over per-row
+    # indicators, since the two-level plan used when a unique_key check is
+    # present evaluates the other checks per key group and sums the partials
     violations: Column
     # uniqueness checks carry the key instead (see _compile_suite)
     unique_cols: tuple[str, ...] | None = None
-    # True iff ``violations`` is a SUM over per-row indicators.  The
-    # two-level plan used when a unique_key check is present evaluates the
-    # other checks per key group and sums the partials — only valid for
-    # sum-shaped aggregates.  Custom max/avg-style checks must set this
-    # False; combining one with a unique_key check raises at compile time
-    # instead of silently summing group-wise results.
-    sum_shaped: bool = True
 
 
 def expect_not_null(col: str) -> Check:
@@ -90,13 +85,6 @@ def _compile_suite(df: DataFrame, checks: list[Check]):
         )
     if len(uniq) > 1:
         raise ValueError("at most one unique_key check per suite")
-    bad = [c for c in checks if c.unique_cols is None and not c.sum_shaped]
-    if bad:
-        raise ValueError(
-            "unique_key suites aggregate other checks per key group and sum "
-            f"the partials; non-sum-shaped checks {[c.name for c in bad]} "
-            "would be silently wrong — run them in a separate suite"
-        )
     key = [F.col(c) for c in uniq[0].unique_cols]
     # groupBy treats NULL as a regular group, but a null key component must
     # stay a violation (matching count_distinct's null-tuple drop in the

@@ -114,7 +114,6 @@ def _prefix_and_total(
     order_by: Sequence[Column],
     value: Column,
     out_col: str,
-    num_partitions: int | None,
     cache_key: str | None = None,
     cache_scope: str | None = None,
 ) -> tuple[DataFrame, int]:
@@ -125,7 +124,7 @@ def _prefix_and_total(
     With ``cache_key``/``cache_scope``, the checkpointed frame + totals
     memoize per dataset version and repeat calls skip both control jobs.
     """
-    n_part = num_partitions or _num_partitions(df)
+    n_part = _num_partitions(df)
 
     def build():
         part = df.repartitionByRange(n_part, *order_by).localCheckpoint(
@@ -164,7 +163,6 @@ def range_prefix_sum(
     value: Column,
     out_col: str,
     *,
-    num_partitions: int | None = None,
     cache_key: str | None = None,
     cache_scope: str | None = None,
 ) -> DataFrame:
@@ -179,7 +177,7 @@ def range_prefix_sum(
     ordering key first, so keys are unique) are safe either way.
     """
     out, _ = _prefix_and_total(
-        df, order_by, value, out_col, num_partitions, cache_key, cache_scope
+        df, order_by, value, out_col, cache_key, cache_scope
     )
     return out
 
@@ -190,7 +188,6 @@ def exact_ntile(
     k: int,
     out_col: str,
     *,
-    num_partitions: int | None = None,
     cache_key: str | None = None,
     cache_scope: str | None = None,
 ) -> DataFrame:
@@ -205,8 +202,7 @@ def exact_ntile(
     extra job, aggregate, or join."""
     rank_col = "__rp_rank"
     ranked, n = _prefix_and_total(
-        df, order_by, F.lit(1).cast("long"), rank_col, num_partitions,
-        cache_key, cache_scope,
+        df, order_by, F.lit(1).cast("long"), rank_col, cache_key, cache_scope,
     )
     return ranked.withColumn(out_col, _tile_expr(rank_col, n, k)).drop(rank_col)
 
@@ -240,7 +236,6 @@ def exact_ntile_multi(
     k: int,
     tiebreak: Sequence[str],
     *,
-    num_partitions: int | None = None,
     carry: Sequence[str] | None = None,
     cache_key: str | None = None,
     cache_scope: str | None = None,
@@ -272,7 +267,7 @@ def exact_ntile_multi(
     n_specs = len(specs)
     if n_specs == 0:
         raise ValueError("exact_ntile_multi needs at least one spec")
-    n_part = num_partitions or _num_partitions(df)
+    n_part = _num_partitions(df)
     packed = F.array(
         *[
             F.struct(

@@ -20,16 +20,17 @@ from pyspark.sql import functions as F
 
 __all__ = ["bm25_topk", "rrf_fuse"]
 
+# query-term count up to which bm25_topk matches terms map-side; above it a
+# broadcast-semi-join explode path handles arbitrary vocabularies
+BM25_MAX_LITERAL_TERMS = 64
+# BM25 term-saturation and length-normalization constants
+_K1, _B = 1.2, 0.75
+
 
 def bm25_topk(
     docs: DataFrame,
     term_queries: Iterable[tuple[int, str]],
     k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    max_literal_terms: int = 64,
     pretokenized: DataFrame | None = None,
     stats: tuple[int, int] | None = None,
     term_dfs: dict[str, int] | None = None,
@@ -48,7 +49,7 @@ def bm25_topk(
       the token array to query-term matches, then |terms| cheap counts
       over that small array; what explodes is |terms| pre-aggregated
       rows per doc, pruned to tf > 0 before any exchange (above
-      ``max_literal_terms`` a broadcast-semi-join explode path handles
+      ``BM25_MAX_LITERAL_TERMS`` a broadcast-semi-join explode path handles
       arbitrary vocabularies at one token-level exchange);
     - ``term_dfs`` (document frequencies for the literal query terms,
       from ``operators.tokenize.corpus_stats_and_dfs``) folds the df side to
@@ -80,7 +81,7 @@ def bm25_topk(
     the expression tree is identical.
 
     Reference parity: ranking semantics per Robertson-Sparck Jones BM25
-    (k1/b defaults 1.2/0.75), the curation-search shape of SURVEY.md
+    (k1/b 1.2/0.75), the curation-search shape of SURVEY.md
     LLM-pipeline coverage."""
     spark = docs.sparkSession
     q_by_id: dict[int, list[str]] = {}
@@ -94,7 +95,7 @@ def bm25_topk(
         return docs.select(
             F.lit(0).cast("long").alias("query_id"),
             F.lit(0).cast("long").alias("rank"),
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             F.lit(0).cast("long").alias("n_terms_hit"),
             F.lit(0).cast("long").alias("score_scaled"),
             F.lit(0.0).alias("score"),
@@ -104,9 +105,9 @@ def bm25_topk(
             F.col("doc_id"), F.col("toks"), F.col("dl")
         )
     else:
-        ws = F.split(F.col(text_col), " ")
+        ws = F.split(F.col("text"), " ")
         tok = docs.select(
-            F.col(id_col).alias("doc_id"),
+            F.col("doc_id"),
             ws.alias("toks"),
             F.size(ws).cast("long").alias("dl"),
         )
@@ -115,7 +116,7 @@ def bm25_topk(
     # the driver, no BroadcastExchange, no join operator in the plan; a
     # matched row fans out to its queries by exploding a map lookup.
     # Plan size grows with |terms| like every literal here, so it shares
-    # the max_literal_terms gate economics (the map is query-bag-sized).
+    # the BM25_MAX_LITERAL_TERMS gate economics (the map is query-bag-sized).
     q_of_term: dict[str, list[int]] = {}
     for q, ts in sorted(q_by_id.items()):
         for t in ts:
@@ -138,10 +139,10 @@ def bm25_topk(
         # F.filter pass the element INDEX into it
         return lambda x: x == F.lit(t)
 
-    if len(terms) <= max_literal_terms:
+    if len(terms) <= BM25_MAX_LITERAL_TERMS:
         # literal map-side path: plan/codegen size and per-doc work grow
         # linearly with |terms| (one F.size(F.filter(...)) struct each),
-        # so it is gated at max_literal_terms (ADVICE r12 #4); above the
+        # so it is gated at BM25_MAX_LITERAL_TERMS (ADVICE r12 #4); above the
         # gate the explode+broadcast-semi-join path below handles
         # arbitrary vocabularies at one token-level exchange
         matched = F.filter(F.col("toks"), lambda x: x.isin(*terms))
@@ -219,10 +220,10 @@ def bm25_topk(
     idf = ((n_docs - df_d) + F.lit(0.5)) / (df_d + F.lit(0.5))
     avgdl = total_tokens / n_docs
     tfd = F.col("tf").cast("double")
-    tfn = (tfd * F.lit(k1 + 1.0)) / (
+    tfn = (tfd * F.lit(_K1 + 1.0)) / (
         tfd
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl))
+        + F.lit(_K1)
+        * (F.lit(1.0 - _B) + F.lit(_B) * (F.col("dl").cast("double") / avgdl))
     )
     scored = scored_in.select(
         F.explode(qmap[F.col("term")]).alias("query_id"),

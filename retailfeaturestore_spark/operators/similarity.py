@@ -69,8 +69,8 @@ def norm2_fixed(a: Column) -> Column:
     return dot_fixed(a, a)
 
 
-def _with_norm(df: DataFrame, vec_col: str) -> DataFrame:
-    return df.withColumn("__nn", norm2_fixed(F.col(vec_col)).cast("double"))
+def _with_norm(df: DataFrame) -> DataFrame:
+    return df.withColumn("__nn", norm2_fixed(F.col("embedding")).cast("double"))
 
 
 # Query sets up to this size ship as plan literals (ids + quantized vectors
@@ -81,7 +81,7 @@ _LITERAL_QUERY_MAX = 128
 
 
 def _quantized_corpus(
-    vectors: DataFrame, vec_col: str, id_col: str, cache_scope: str | None
+    vectors: DataFrame, cache_scope: str | None
 ) -> DataFrame:
     """The shared ``(id, __q int64-array)`` quantized corpus, persisted and
     memoized per (columns, dataset scope) — KMeans training, IVF search,
@@ -94,8 +94,8 @@ def _quantized_corpus(
 
     def build() -> DataFrame:
         return vectors.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: _quant(x)).alias("__q"),
+            F.col("vec_id").alias("id"),
+            F.transform(F.col("embedding"), lambda x: _quant(x)).alias("__q"),
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
     if cache_scope is None:
@@ -103,7 +103,7 @@ def _quantized_corpus(
         register_persisted(q, ("quant_corpus_unscoped", None))
         return q
     spark = vectors.sparkSession
-    key = (f"quant_corpus:{id_col}:{vec_col}", cache_scope)
+    key = ("quant_corpus:vec_id:embedding", cache_scope)
     reg = getattr(spark, "_rfs_persisted", None)
     if reg is None or not isinstance(reg, dict):
         spark._rfs_persisted = reg = {}
@@ -116,8 +116,6 @@ def _quantized_corpus(
 def quantized_vec_rows(
     vectors: DataFrame,
     ids,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cache_scope: str | None = None,
 ) -> list[tuple[int, list[int]]]:
     """Driver-side quantized vectors for a bounded literal id set, memoized
@@ -135,11 +133,11 @@ def quantized_vec_rows(
         )
     spark = vectors.sparkSession
     memo = session_memo(spark) if cache_scope is not None else {}
-    key = (f"quant_vec_rows:{id_col}:{vec_col}", cache_scope)
+    key = ("quant_vec_rows:vec_id:embedding", cache_scope)
     have: dict[int, list[int]] = memo.setdefault(key, {}) if cache_scope is not None else {}
     missing = [i for i in ids if i not in have]
     if missing:
-        q = _quantized_corpus(vectors, vec_col, id_col, cache_scope)
+        q = _quantized_corpus(vectors, cache_scope)
         for r in q.where(F.col("id").isin(missing)).collect():
             have[int(r["id"])] = [int(x) for x in r["__q"]]
     return [(i, have[i]) for i in ids if i in have]
@@ -195,8 +193,6 @@ def _kmeans_train(
     vectors: DataFrame,
     k: int,
     iters: int,
-    vec_col: str,
-    id_col: str,
     cache_scope: str | None,
     fetch_ids=None,
 ):
@@ -208,7 +204,7 @@ def _kmeans_train(
     consumers pay zero additional collects."""
     import math
 
-    q = _quantized_corpus(vectors, vec_col, id_col, cache_scope)
+    q = _quantized_corpus(vectors, cache_scope)
     extra = sorted({int(i) for i in fetch_ids or ()})
     pred = F.col("id") < k
     if extra:
@@ -218,12 +214,12 @@ def _kmeans_train(
     if cache_scope is not None and extra:
         memo = session_memo(q.sparkSession)
         memo.setdefault(
-            (f"quant_vec_rows:{id_col}:{vec_col}", cache_scope), {}
+            ("quant_vec_rows:vec_id:embedding", cache_scope), {}
         ).update(got)
     seed = [(i, v) for i, v in got.items() if i < k]
     if not seed:
         raise ValueError(
-            f"no seed vectors with {id_col} < {k}: the deterministic seed "
+            f"no seed vectors with vec_id < {k}: the deterministic seed "
             "rule (shared with the SQL oracle) assumes a dense 0-based id "
             "space — remap ids or lower k"
         )
@@ -254,8 +250,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact brute-force top-k cosine neighbors for each query vector.
 
@@ -264,14 +258,16 @@ def cosine_topk(
     (same id) is excluded.  Ties broken by neighbor id (deterministic).
     """
     q = F.broadcast(
-        _with_norm(queries, vec_col).select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("__qv"),
+        _with_norm(queries).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("__qv"),
             F.col("__nn").alias("__qn"),
         )
     )
-    c = _with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("__cv"), F.col("__nn").alias("__cn")
+    c = _with_norm(corpus).select(
+        F.col("vec_id").alias("n_id"),
+        F.col("embedding").alias("__cv"),
+        F.col("__nn").alias("__cn"),
     )
     scored = (
         c.crossJoin(q)
@@ -294,8 +290,6 @@ def cosine_topk_quantized(
     corpus: DataFrame,
     query_ids,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cache_scope: str | None = None,
 ) -> DataFrame:
     """Exact brute-force top-k cosine for a LITERAL query-id set, scored
@@ -309,10 +303,9 @@ def cosine_topk_quantized(
     this over a query sample.  Query ids absent from the corpus produce no
     rows (``cosine_topk`` parity).  r13, VERDICT r12 next-round #5."""
     qrows = quantized_vec_rows(
-        corpus, query_ids, vec_col=vec_col, id_col=id_col,
-        cache_scope=cache_scope,
+        corpus, query_ids, cache_scope=cache_scope,
     )
-    q = _quantized_corpus(corpus, vec_col, id_col, cache_scope)
+    q = _quantized_corpus(corpus, cache_scope)
     structs = ", ".join(
         "named_struct('q', {q}L, 'n', {n}L, 'v', array({vs}))".format(
             q=qid,
@@ -369,26 +362,23 @@ def ivf_topk_label(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cell_col: str = "label",
 ) -> DataFrame:
     """IVF-style ANN: restrict the search to the query's coarse cell
-    (``cell_col`` plays the quantizer assignment).  Equi-join on the cell id
+    (``label`` plays the quantizer assignment).  Equi-join on the cell id
     -> the cross product collapses to within-cell pairs; at scale this is the
     difference between O(n*q) and O(n*q / n_cells)."""
     q = F.broadcast(
-        _with_norm(queries, vec_col).select(
-            F.col(id_col).alias("q_id"),
-            F.col(cell_col).alias("__cell"),
-            F.col(vec_col).alias("__qv"),
+        _with_norm(queries).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("label").alias("__cell"),
+            F.col("embedding").alias("__qv"),
             F.col("__nn").alias("__qn"),
         )
     )
-    c = _with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("n_id"),
-        F.col(cell_col).alias("__ccell"),
-        F.col(vec_col).alias("__cv"),
+    c = _with_norm(corpus).select(
+        F.col("vec_id").alias("n_id"),
+        F.col("label").alias("__ccell"),
+        F.col("embedding").alias("__cv"),
         F.col("__nn").alias("__cn"),
     )
     scored = (
@@ -412,8 +402,6 @@ def kmeans_cells(
     vectors: DataFrame,
     k: int = 8,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cache_scope: str | None = None,
     with_dist: bool = False,
 ) -> DataFrame:
@@ -452,8 +440,7 @@ def kmeans_cells(
     summary values return to the driver.
     """
     q, cents, _ = _kmeans_train(
-        vectors, k=k, iters=iters, vec_col=vec_col, id_col=id_col,
-        cache_scope=cache_scope,
+        vectors, k=k, iters=iters, cache_scope=cache_scope,
     )
 
     def assign_struct(cents) -> Column:
@@ -481,8 +468,6 @@ def ivf_topk_cells(
     k_neighbors: int = 3,
     n_cells: int = 8,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cache_scope: str | None = None,
 ) -> DataFrame:
     """IVF ANN with a REAL trained coarse quantizer: KMeans cells from
@@ -502,8 +487,7 @@ def ivf_topk_cells(
     qids = sorted({int(i) for i in query_ids})
     if len(qids) <= _LITERAL_QUERY_MAX:
         q, cents, got = _kmeans_train(
-            corpus, k=n_cells, iters=iters, vec_col=vec_col, id_col=id_col,
-            cache_scope=cache_scope, fetch_ids=qids,
+            corpus, k=n_cells, iters=iters, cache_scope=cache_scope, fetch_ids=qids,
         )
         qrows = [(i, got[i]) for i in qids if i in got]
         structs = ", ".join(
@@ -566,25 +550,24 @@ def ivf_topk_cells(
             )
         )
     cells = kmeans_cells(
-        corpus, k=n_cells, iters=iters, vec_col=vec_col, id_col=id_col,
-        cache_scope=cache_scope,
+        corpus, k=n_cells, iters=iters, cache_scope=cache_scope,
     )
-    base = _with_norm(corpus, vec_col).join(
-        cells.withColumnRenamed("id", id_col), id_col
+    base = _with_norm(corpus).join(
+        cells.withColumnRenamed("id", "vec_id"), "vec_id"
     )
     q = F.broadcast(
-        base.where(F.col(id_col).isin(list(query_ids)))
+        base.where(F.col("vec_id").isin(list(query_ids)))
         .select(
-            F.col(id_col).alias("q_id"),
+            F.col("vec_id").alias("q_id"),
             F.col("cell").alias("__cell"),
-            F.col(vec_col).alias("__qv"),
+            F.col("embedding").alias("__qv"),
             F.col("__nn").alias("__qn"),
         )
     )
     c = base.select(
-        F.col(id_col).alias("n_id"),
+        F.col("vec_id").alias("n_id"),
         F.col("cell").alias("__ccell"),
-        F.col(vec_col).alias("__cv"),
+        F.col("embedding").alias("__cv"),
         F.col("__nn").alias("__cn"),
     )
     scored = (
@@ -637,8 +620,6 @@ def pq_train_encode(
     m: int = 4,
     k_codes: int = 16,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cache_scope: str | None = None,
 ):
     """Product-quantization training + encoding: split each vector into
@@ -665,7 +646,7 @@ def pq_train_encode(
     """
     import math
 
-    q = _quantized_corpus(vectors, vec_col, id_col, cache_scope)
+    q = _quantized_corpus(vectors, cache_scope)
 
     # Seed: the k_codes smallest ids; codebook s starts as their s-th
     # subvectors (bounded k-row collect — control-plane sized by design).
@@ -675,7 +656,7 @@ def pq_train_encode(
     )
     if not seed:
         raise ValueError(
-            f"no seed vectors with {id_col} < {k_codes}: the deterministic "
+            f"no seed vectors with vec_id < {k_codes}: the deterministic "
             "seed rule (shared with the SQL oracle) assumes a dense 0-based "
             "id space — remap ids or lower k_codes"
         )
@@ -736,8 +717,6 @@ def pq_topk_adc_resident(
     m: int = 4,
     k_codes: int = 16,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cache_scope: str | None = None,
 ) -> DataFrame:
     """Serving-semantics PQ ANN: train once per dataset, score per request.
@@ -776,8 +755,7 @@ def pq_topk_adc_resident(
     qk = ("pq_resident_queries", cache_scope, tuple(sorted(query_ids)))
     if mk not in memo:
         cents, coded0, seed_vecs = pq_train_encode(
-            corpus, m=m, k_codes=k_codes, iters=iters, vec_col=vec_col,
-            id_col=id_col, cache_scope=cache_scope,
+            corpus, m=m, k_codes=k_codes, iters=iters, cache_scope=cache_scope,
         )
         missing = [qid for qid in query_ids if qid not in seed_vecs]
         fetched = {
@@ -801,8 +779,8 @@ def pq_topk_adc_resident(
         spark,
         ("pq_resident_codes", cache_scope),
         lambda: corpus.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: _quant(x)).alias("__q"),
+            F.col("vec_id").alias("id"),
+            F.transform(F.col("embedding"), lambda x: _quant(x)).alias("__q"),
         )
         .withColumn(
             "__codes",
@@ -893,8 +871,6 @@ def build_pq_index_mtable(
     m: int = 4,
     k_codes: int = 16,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> int:
     """The ANN index AS AN ACID TABLE: train PQ once and commit the encoded
     corpus as one mtable version, with the codebooks + parameters riding
@@ -904,10 +880,6 @@ def build_pq_index_mtable(
     - **atomic publish / rollback**: a crashed build publishes NOTHING (no
       marker-file ordering to reason about); a bad rebuild rolls back by
       reading the previous version;
-    - **index time travel**: ``search_pq_index_mtable(tbl, q, version=n)``
-      answers with EXACTLY the index as of version n — codes AND the
-      codebooks that encoded them (reproducing yesterday's retrieval for
-      an eval re-run);
     - **OCC appends**: racing ingest appends rebase through the manifest
       CAS instead of corrupting the codes directory;
     - **compaction**: streaming appends' small files collapse via
@@ -919,7 +891,7 @@ def build_pq_index_mtable(
     coarsest quantization cell together.  Returns the committed version."""
     cents, coded, _seed = pq_train_encode(
         corpus, m=m, k_codes=k_codes, iters=iters,
-        vec_col=vec_col, id_col=id_col, cache_scope=f"mtable:{tbl.path}",
+        cache_scope=f"mtable:{tbl.path}",
     )
     rows = coded.select(
         "id",
@@ -959,8 +931,6 @@ def _pq_meta_mtable(tbl, version: int) -> dict:
 def append_pq_index_mtable(
     tbl,
     vectors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> int:
     """Incremental index maintenance on the table backend: encode NEW
     vectors against the FROZEN codebooks and commit them as an mtable
@@ -970,9 +940,7 @@ def append_pq_index_mtable(
     batch-internal and against-index duplicate ids (ids are search
     identities; a collision would serve one id with two code rows).  The
     publish is a CAS'd manifest commit: a racing append/compaction rebases
-    instead of interleaving files, and the pre-append index version remains
-    searchable (time travel) until vacuum.  Returns the committed
-    version."""
+    instead of interleaving files.  Returns the committed version."""
     cur = tbl._latest()
     if cur is None:
         raise ValueError(f"no committed index at {tbl.path}: build first")
@@ -985,9 +953,9 @@ def append_pq_index_mtable(
     m, w = int(pq["m"]), int(pq["d_sub"])
     dims = m * w
     newv = vectors.select(
-        F.col(id_col).alias("id"),
-        F.size(F.col(vec_col)).alias("__dims"),
-        F.transform(F.col(vec_col), lambda x: _quant(x)).alias("__q"),
+        F.col("vec_id").alias("id"),
+        F.size(F.col("embedding")).alias("__dims"),
+        F.transform(F.col("embedding"), lambda x: _quant(x)).alias("__q"),
     ).localCheckpoint(eager=True)
     bad = newv.where(F.col("__dims") != dims).count()
     if bad:
@@ -1031,24 +999,20 @@ def search_pq_index_mtable(
     tbl,
     queries,
     k_neighbors: int = 5,
-    version: int | None = None,
 ) -> DataFrame:
-    """Serve ANN queries from the table-backed index — optionally from ANY
-    retained version (``version=n``): the snapshot read plans against
-    exactly that version's code files and the codebooks that encoded them,
-    so a historical search replays bit-for-bit (the eval-reproducibility
-    contract no directory index can offer).  Query LUTs as in
+    """Serve ANN queries from the table-backed index's latest version: the
+    snapshot read plans against exactly that version's code files and the
+    codebooks that encoded them.  Query LUTs as in
     :func:`pq_topk_adc_resident`; external query ids, no self-exclusion."""
     import math
 
     queries = list(queries)
     if not queries:
         raise ValueError("queries must be non-empty")
-    if version is None:
-        cur = tbl._latest()
-        if cur is None:
-            raise ValueError(f"no committed index at {tbl.path}")
-        version = cur[0]
+    cur = tbl._latest()
+    if cur is None:
+        raise ValueError(f"no committed index at {tbl.path}")
+    version = cur[0]
     pq = _pq_meta_mtable(tbl, version)
     cents = [
         [(int(cid), [int(x) for x in vec]) for cid, vec in sub]
@@ -1076,13 +1040,10 @@ def search_pq_index_mtable(
 def random_projection(
     vectors: DataFrame,
     out_dims: int = 8,
-    in_dims: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     seed: str = "rp0",
 ) -> DataFrame:
     """Deterministic sparse random projection (Achlioptas ±1 /
-    Johnson-Lindenstrauss): project ``in_dims`` float embeddings to
+    Johnson-Lindenstrauss): project the corpus's float embeddings to
     ``out_dims`` via a sign matrix derived from md5 — the dimensionality
     reduction an ANN pipeline runs BEFORE indexing at 100 TB (shorter
     vectors = smaller codes, cheaper distances; JL guarantees pairwise
@@ -1100,19 +1061,18 @@ def random_projection(
     Returns long-form ``(id, j, value_scaled, value)`` — one row per
     output dimension, the layout the differential oracle hashes exactly.
 
-    ``in_dims=None`` (default) derives the width from the data (one
-    control-plane ``head()``) — a hardcoded width longer than the actual
+    The input width derives from the data (one control-plane ``head()``)
+    — a hardcoded width longer than the actual
     vectors made ``zip_with`` null-pad the corpus side and null-poison
     every projection sum on corpora of a different dim (caught by the r9
     sf5 sweep on 16-dim synthetic embeddings).
     """
     import hashlib
 
-    if in_dims is None:
-        first = vectors.select(vec_col).head()
-        if first is None:
-            raise ValueError("random_projection on an empty corpus")
-        in_dims = len(first[0])
+    first = vectors.select("embedding").head()
+    if first is None:
+        raise ValueError("random_projection on an empty corpus")
+    in_dims = len(first[0])
     signs = [
         [
             1 if int(hashlib.md5(f"{seed}#{i}#{j}".encode()).hexdigest()[0], 16) % 2 == 0
@@ -1122,8 +1082,8 @@ def random_projection(
         for j in range(out_dims)
     ]
     q = vectors.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: _quant(x).cast("long")).alias("__q"),
+        F.col("vec_id").alias("id"),
+        F.transform(F.col("embedding"), lambda x: _quant(x).cast("long")).alias("__q"),
     )
     rows = F.array(
         *[
@@ -1160,8 +1120,6 @@ def mmr_diverse_topk(
     queries: DataFrame,
     k_select: int = 5,
     k_candidates: int = 20,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Maximal Marginal Relevance (Carbonell & Goldstein, SIGIR 1998)
     diversified top-k: exact brute-force top-``k_candidates`` per query
@@ -1186,11 +1144,11 @@ def mmr_diverse_topk(
     import pandas as pd
 
     cand = cosine_topk(
-        corpus, queries, k=k_candidates, vec_col=vec_col, id_col=id_col
+        corpus, queries, k=k_candidates
     ).select("q_id", "n_id", F.col("cosine").alias("rel"))
     qvec = corpus.select(
-        F.col(id_col).alias("n_id"),
-        F.transform(F.col(vec_col), lambda x: _quant(x)).alias("__q"),
+        F.col("vec_id").alias("n_id"),
+        F.transform(F.col("embedding"), lambda x: _quant(x)).alias("__q"),
     )
     # candidates-to-vectors join: the candidate list is query-workload sized —
     # broadcast it against the corpus scan, never shuffle the corpus.
@@ -1246,8 +1204,6 @@ def sign_lsh_neardup(
     threshold: float = 0.35,
     bands: int = 4,
     band_bits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Embedding near-dup pairs via sign-pattern LSH.
 
@@ -1265,7 +1221,7 @@ def sign_lsh_neardup(
     sign agreement probability rises with angle similarity); candidates then
     pass an exact cosine filter.  Self-join shuffles only (band, w-char key).
     """
-    first = vectors.select(vec_col).head()
+    first = vectors.select("embedding").head()
     if first is None:
         return vectors.sparkSession.createDataFrame(
             [], "vec_a long, vec_b long, cosine double"
@@ -1274,12 +1230,15 @@ def sign_lsh_neardup(
     sig = F.concat_ws(
         "",
         F.transform(
-            F.slice(F.col(vec_col), 1, bands * band_bits),
+            F.slice(F.col("embedding"), 1, bands * band_bits),
             lambda x: F.when(x >= 0, F.lit("1")).otherwise(F.lit("0")),
         ),
     )
-    base = _with_norm(vectors, vec_col).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("__v"), F.col("__nn"), sig.alias("__sig")
+    base = _with_norm(vectors).select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("__v"),
+        F.col("__nn"),
+        sig.alias("__sig"),
     )
     # ONE explode, not a per-band union loop: the loop consumed `base`
     # once per band and Spark does not reuse the duplicated subtrees, so
@@ -1335,8 +1294,6 @@ def semantic_dedup(
     k: int = 8,
     iters: int = 2,
     threshold: float = 0.6,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     cache_scope: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1372,8 +1329,7 @@ def semantic_dedup(
     from pyspark import StorageLevel
 
     assigned = kmeans_cells(
-        vectors, k=k, iters=iters, vec_col=vec_col, id_col=id_col,
-        cache_scope=cache_scope, with_dist=True,
+        vectors, k=k, iters=iters, cache_scope=cache_scope, with_dist=True,
     )
     if cache_scope is not None:
         # three plan subtrees consume the assignment (both pair-join sides
@@ -1412,8 +1368,8 @@ def semantic_dedup(
     # pre-quantized int vectors + fixed-point norm, computed ONCE per side
     # (dot_fixed would re-floor both arrays per pair evaluation)
     qv = vectors.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: _quant(x)).alias("__q"),
+        F.col("vec_id").alias("id"),
+        F.transform(F.col("embedding"), lambda x: _quant(x)).alias("__q"),
     ).withColumn(
         "__nn",
         F.aggregate(

@@ -14,10 +14,10 @@ Scale shape (the 100 TB plan):
 - the raw stream is reduced to DISTINCT (group, hash) first — a map-side
   combinable aggregate, so no group ever ships duplicate values;
 - per-group k-smallest is computed as a TWO-LEVEL TOURNAMENT: k smallest
-  within each of ``fanout`` salt lanes (parallel, whale-group-safe), then
-  k smallest of the <= fanout*k survivors.  A single window over the raw
+  within each of ``KMV_FANOUT`` salt lanes (parallel, whale-group-safe), then
+  k smallest of the <= KMV_FANOUT*k survivors.  A single window over the raw
   group would make a 10^9-distinct whale group one task; the tournament
-  bounds every task at the lane's share and the final pass at fanout*k
+  bounds every task at the lane's share and the final pass at KMV_FANOUT*k
   rows per group;
 - the pairwise stage touches ONLY sketch rows (k per group), never the
   raw data — estimating overlap across G groups costs O(G * k), not a
@@ -49,12 +49,16 @@ _HASH_BITS = 56
 _HASH_SPAN = float(2**_HASH_BITS)
 
 
-def kmv_hash(col: Column, salt: str = "kmv#") -> Column:
+# salt lanes of the per-group tournament (see kmv_group_sketch_packed)
+KMV_FANOUT = 16
+
+
+def kmv_hash(col: Column) -> Column:
     """56-bit md5 hash of the salted value — cross-engine deterministic
     (DuckDB equivalent: ``CAST('0x' || substr(md5('kmv#' || v), 1, 14) AS
     BIGINT)``)."""
     return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, 14), 16, 10
+        F.substring(F.md5(F.concat(F.lit("kmv#"), col.cast("string"))), 1, 14), 16, 10
     ).cast("long")
 
 
@@ -63,7 +67,6 @@ def kmv_group_sketch_packed(
     group_col: str,
     value_col: str,
     k: int = 64,
-    fanout: int = 16,
 ) -> DataFrame:
     """Per-group KMV sketch as ONE PACKED ROW: ``(group_col, hs)`` where
     ``hs`` is the sorted array of the k smallest 56-bit hashes of the
@@ -89,26 +92,25 @@ def kmv_group_sketch_packed(
     # the separate distinct exchange disappears; partial collect_set
     # combines map-side), and because pmod partitions the hash space the
     # lanes are DISJOINT — the final k-of-group is a flatten+sort+slice
-    # over <= fanout*k survivors, a fanout-bounded second aggregate.  Two
+    # over <= KMV_FANOUT*k survivors, a fanout-bounded second aggregate.  Two
     # exchanges, zero sorts of the full stream, identical rows out.
     # Whale-group state note: a lane's collect_set holds that lane's
-    # distinct share (1/fanout of the group) in task memory — ``fanout``
-    # is the valve, exactly the task-size bound the window tournament had
-    # (the window buffered the same lane partition; it spilled where this
-    # holds heap).  Size fanout so distinct/fanout fits comfortably in a
-    # task: fanout >= expected_distinct_per_group * 8 bytes / (a few
-    # hundred MB).  A 1e9-distinct whale group wants fanout ~= 64-128, not
-    # the default 16 (ADVICE r13 #3) — the parameter exists precisely so
-    # call sites with whale groups raise it; lanes partition the hash
-    # space, so ANY fanout yields the identical k-minimum set (the choice
-    # moves task memory, never results).
+    # distinct share (1/KMV_FANOUT of the group) in task memory — the
+    # fanout is the valve, exactly the task-size bound the window
+    # tournament had (the window buffered the same lane partition; it
+    # spilled where this holds heap).  Size it so distinct/fanout fits
+    # comfortably in a task: fanout >= expected_distinct_per_group * 8
+    # bytes / (a few hundred MB).  A 1e9-distinct whale group wants 64-128
+    # (ADVICE r13 #3); lanes partition the hash space, so ANY fanout yields
+    # the identical k-minimum set (the choice moves task memory, never
+    # results).
     # NULL-hash filter: NULL values hash to NULL; a (g, NULL) row would
     # waste a sketch slot and diverge from DuckDB's NULLS-LAST ordering.
     hashed = df.select(
         F.col(group_col), kmv_hash(F.col(value_col)).alias("h")
     ).where(F.col("h").isNotNull())
     lanes = hashed.groupBy(
-        group_col, F.pmod(F.col("h"), F.lit(fanout)).alias("__lane")
+        group_col, F.pmod(F.col("h"), F.lit(KMV_FANOUT)).alias("__lane")
     ).agg(F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("__ks"))
     return lanes.groupBy(group_col).agg(
         F.slice(F.array_sort(F.flatten(F.collect_list("__ks"))), 1, k).alias("hs")

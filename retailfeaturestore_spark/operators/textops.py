@@ -39,12 +39,12 @@ def _marker_count(ws: Column, markers: tuple[str, ...]) -> Column:
     return F.size(in_set).cast("long")
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-marker language ID: per language, count marker tokens; argmax
     with fixed precedence on ties; 'und' (undetermined) when all zero."""
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     counted = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(ws).cast("long").alias("n_tokens"),
         *[
             _marker_count(ws, m).alias(f"score_{lang}")
@@ -65,17 +65,17 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     )
 
 
-def text_quality(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def text_quality(docs: DataFrame) -> DataFrame:
     """Heuristic quality score from length/stopword/uniqueness ratios.
 
     quality = clip(0.2*len_ok + 0.4*stopword_ratio_capped + 0.4*uniq_ratio)
     — a linear blend of integer-count ratios (engine-exact arithmetic).
     """
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     en = LANG_MARKERS["en"]
     d = docs.select(
-        F.col(id_col),
-        F.length(text_col).cast("long").alias("n_chars"),
+        F.col("doc_id"),
+        F.length("text").cast("long").alias("n_chars"),
         F.size(ws).cast("long").alias("n_tokens"),
         F.size(F.array_distinct(ws)).cast("long").alias("n_unique_tokens"),
         _marker_count(ws, en).alias("n_stopwords"),
@@ -98,30 +98,30 @@ def text_quality(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count + a BPE-ish subword estimate
     (ceil(len(word)/4) per word, integer arithmetic — the standard
     '~4 chars per token' heuristic)."""
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     subwords = F.aggregate(
         F.transform(ws, lambda w: F.floor((F.length(w) + F.lit(3)) / F.lit(4))),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
     return docs.select(
-        F.col(id_col),
-        F.length(text_col).cast("long").alias("n_chars"),
+        F.col("doc_id"),
+        F.length("text").cast("long").alias("n_chars"),
         F.size(ws).cast("long").alias("n_ws_tokens"),
         subwords.alias("n_subword_est"),
     )
 
 
+# the Gopher word-count window
+_GOPHER_MIN_WORDS, _GOPHER_MAX_WORDS = 50, 100_000
+
+
 def gopher_quality(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 50,
-    max_words: int = 100_000,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Gopher-style document quality rules (Rae et al. 2021, "Scaling
@@ -129,7 +129,7 @@ def gopher_quality(
     filter family), adapted to integer-exact arithmetic so the differential
     oracle matches bit-for-bit:
 
-    - ``flag_word_count``:   min_words <= n_words <= max_words
+    - ``flag_word_count``:   50 <= n_words <= 100,000
     - ``flag_mean_word_len``: mean word length in [3, 10] — compared as
       ``3*n_words <= sum_len <= 10*n_words`` (pure integers, no division)
     - ``flag_alpha_words``:  >= 80% of words contain an ASCII letter,
@@ -144,7 +144,7 @@ def gopher_quality(
     scale.  The reference has no text surface; this is the extension the
     100 TB training-data pipeline needs (SURVEY.md §7.1 M6).
     """
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     n_words = F.size(ws).cast("long")
     sum_len = F.aggregate(
         F.transform(ws, lambda w: F.length(w).cast("long")),
@@ -153,11 +153,11 @@ def gopher_quality(
     )
     n_alpha = F.size(F.filter(ws, lambda w: w.rlike("[A-Za-z]"))).cast("long")
     n_stop = F.size(F.filter(ws, lambda w: w.isin(*LANG_MARKERS["en"]))).cast("long")
-    n_hash = (F.length(text_col) - F.length(F.regexp_replace(F.col(text_col), "#", ""))).cast(
+    n_hash = (F.length("text") - F.length(F.regexp_replace(F.col("text"), "#", ""))).cast(
         "long"
     )
     d = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in carry_cols],
         n_words.alias("n_words"),
         sum_len.alias("__sum_len"),
@@ -166,7 +166,8 @@ def gopher_quality(
         n_hash.alias("__n_hash"),
     )
     flags = {
-        "flag_word_count": (F.col("n_words") >= min_words) & (F.col("n_words") <= max_words),
+        "flag_word_count": (F.col("n_words") >= _GOPHER_MIN_WORDS)
+        & (F.col("n_words") <= _GOPHER_MAX_WORDS),
         "flag_mean_word_len": (F.lit(3) * F.col("n_words") <= F.col("__sum_len"))
         & (F.col("__sum_len") <= F.lit(10) * F.col("n_words")),
         "flag_alpha_words": F.lit(5) * F.col("__n_alpha") >= F.lit(4) * F.col("n_words"),
@@ -192,8 +193,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_tokens: int = 32,
     stride: int = 24,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Split each document's token sequence into overlapping context chunks
     (size ``chunk_tokens``, step ``stride`` — overlap = chunk - stride), the
@@ -211,36 +210,34 @@ def chunk_documents(
     """
     if stride <= 0 or chunk_tokens <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     n = F.size(ws)
     # starts 1, 1+stride, ... <= n; an empty document yields NO chunks
     # (null sequence -> posexplode emits nothing).
     starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(stride)))
     chunked = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         ws.alias("__ws"),
         F.posexplode(starts).alias("chunk_id", "__start"),
     )
     piece = F.slice(F.col("__ws"), F.col("__start"), chunk_tokens)
     return chunked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_id").cast("long").alias("chunk_id"),
         F.concat_ws(" ", piece).alias("chunk_text"),
         F.size(piece).cast("long").alias("n_tokens"),
     )
 
 
-def doc_fingerprint(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3, k: int = 4
-) -> DataFrame:
-    """Winnowing-style fingerprint: the k smallest shingle hashes, sorted and
-    joined — a compact, order-stable document sketch for fast prefilter
-    dedup/provenance."""
-    sh = shingles(F.col(text_col), n)
+def doc_fingerprint(docs: DataFrame) -> DataFrame:
+    """Winnowing-style fingerprint: the 4 smallest word-trigram shingle
+    hashes, sorted and joined — a compact, order-stable document sketch for
+    fast prefilter dedup/provenance."""
+    sh = shingles(F.col("text"), 3)
     hashes = F.array_sort(F.transform(sh, lambda s: F.md5(s)))
     return docs.select(
-        F.col(id_col),
-        F.concat_ws(":", F.slice(hashes, 1, k)).alias("fingerprint"),
+        F.col("doc_id"),
+        F.concat_ws(":", F.slice(hashes, 1, 4)).alias("fingerprint"),
     ).where(F.col("fingerprint") != "")
 
 
@@ -273,9 +270,7 @@ PII_PATTERNS: dict[str, tuple[str, str]] = {
 PII_ORDER = ("email", "phone", "ipv4")
 
 
-def pii_scrub(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """PII redaction — the standard pre-training scrub stage: emails, phone
     numbers, and IPv4 literals replaced with typed placeholder tokens, plus
     per-kind match counts for audit/measurement.  Pure column algebra
@@ -284,7 +279,7 @@ def pii_scrub(
     conservative, cross-engine-identical subset — a production deployment
     extends PII_PATTERNS per policy (names/addresses need NER models, which
     belong in a mapInPandas stage)."""
-    clean = F.col(text_col)
+    clean = F.col("text")
     counts = {}
     for kind in PII_ORDER:
         pat, token = PII_PATTERNS[kind]
@@ -293,7 +288,7 @@ def pii_scrub(
         ).cast("long")
         clean = F.regexp_replace(clean, pat, token)
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         clean.alias("clean_text"),
         *[c.alias(n) for n, c in counts.items()],
     )
@@ -303,8 +298,6 @@ def boilerplate_scrub(
     docs: DataFrame,
     passage_tokens: int = 8,
     min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Corpus-global duplicated-passage removal (CCNet / RefinedWeb-style
     boilerplate scrub): split each document into consecutive
@@ -327,18 +320,18 @@ def boilerplate_scrub(
     (Wenzek et al., CCNet, 2020)."""
     if passage_tokens <= 0:
         raise ValueError("passage_tokens must be positive")
-    ws = words(F.col(text_col))
+    ws = words(F.col("text"))
     n = F.size(ws)
     starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(passage_tokens)))
     piece = F.slice(F.col("__ws"), F.col("__start"), passage_tokens)
     p = (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             ws.alias("__ws"),
             F.posexplode(starts).alias("__pid", "__start"),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("__pid").cast("long").alias("__pid"),
             F.concat_ws(" ", piece).alias("__ptext"),
             F.size(piece).cast("long").alias("__ptok"),
@@ -346,7 +339,7 @@ def boilerplate_scrub(
         .withColumn("__pdigest", F.md5(F.col("__ptext")))
     )
     dfreq = (
-        p.select("__pdigest", id_col)
+        p.select("__pdigest", "doc_id")
         .distinct()
         .groupBy("__pdigest")
         .agg(F.count(F.lit(1)).cast("long").alias("__df"))
@@ -356,7 +349,7 @@ def boilerplate_scrub(
     kept_sorted = F.array_sort(
         F.collect_list(F.when(keep, F.struct("__pid", "__ptext")))
     )
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.concat_ws(
             " ", F.transform(kept_sorted, lambda x: x["__ptext"])
         ).alias("clean_text"),

@@ -99,8 +99,6 @@ def token_corpus(
     spark: SparkSession,
     sf_dir: str,
     docs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """The L1 tokenized corpus: ``(doc_id, toks, dl)``, split once,
     persisted per dataset.  ``dl`` is the RAW split length (empty tokens
@@ -115,10 +113,10 @@ def token_corpus(
         else:
             from ..io import load_table_parallel
 
-            d = load_table_parallel(spark, sf_dir, "documents", keys=(id_col,))
+            d = load_table_parallel(spark, sf_dir, "documents", keys=("doc_id",))
         return d.select(
-            F.col(id_col).alias("doc_id"),
-            F.split(F.col(text_col), " ").alias("toks"),
+            F.col("doc_id"),
+            F.split(F.col("text"), " ").alias("toks"),
         ).withColumn("dl", F.size("toks").cast("long"))
 
     return _get_or_register_level(
@@ -126,16 +124,14 @@ def token_corpus(
     )
 
 
-def term_postings(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> DataFrame:
+def term_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The L2 inverted postings: one row per distinct ``(doc_id, term)``
     with its in-document frequency and the document's raw length —
     ``(doc_id, term, tf, dl)``.  Empty terms are dropped (they are
     split artifacts, not words).  Built from L1, persisted."""
 
     def build() -> DataFrame:
-        tok = token_corpus(spark, sf_dir, docs=docs)
+        tok = token_corpus(spark, sf_dir)
         return (
             tok.select("doc_id", "dl", F.explode("toks").alias("term"))
             .where(F.length("term") > 0)
@@ -204,9 +200,7 @@ def corpus_stats_and_dfs(
     return memo[skey], memo[dkey]
 
 
-def n_docs_with_tokens(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> int:
+def n_docs_with_tokens(spark: SparkSession, sf_dir: str) -> int:
     """Count of documents with at least one NON-EMPTY token — the tf-idf
     ``N`` (distinct from ``corpus_stats_and_dfs``' n_docs, which counts
     every document including null/whitespace-only text).  Memoized; one
@@ -214,7 +208,7 @@ def n_docs_with_tokens(
     memo = session_memo(spark)
     key = ("token_docs_nonempty", sf_dir)
     if key not in memo:
-        tok = token_corpus(spark, sf_dir, docs=docs)
+        tok = token_corpus(spark, sf_dir)
         memo[key] = int(
             tok.where(
                 F.exists(F.col("toks"), lambda x: F.length(x) > 0)

@@ -127,21 +127,19 @@ def registrable_domain(host: Column) -> Column:
     ).otherwise(F.when(last2 != "", last2).otherwise(host))
 
 
-def url_dedup(
-    df: DataFrame, url_col: str, id_col: str = "doc_id"
-) -> DataFrame:
-    """One row per canonical URL: the surviving ``keep_<id_col>`` (the
+def url_dedup(df: DataFrame, url_col: str) -> DataFrame:
+    """One row per canonical URL: the surviving ``keep_doc_id`` (the
     smallest id — deterministic, engine-independent), the duplicate count,
     and the registrable domain.  One hash aggregation on the canonical
     key; the canonicalization itself is map-side codegen."""
     canon = canonical_url(F.col(url_col))
     return (
         df.select(
-            canon.alias("canonical_url"), F.col(id_col).cast("long").alias("__id")
+            canon.alias("canonical_url"), F.col("doc_id").cast("long").alias("__id")
         )
         .groupBy("canonical_url")
         .agg(
-            F.min("__id").alias(f"keep_{id_col}"),
+            F.min("__id").alias("keep_doc_id"),
             F.count(F.lit(1)).cast("long").alias("n_dupes"),
         )
         .withColumn(

@@ -169,11 +169,6 @@ def _spread_entity(df: DataFrame, entity: str) -> str:
 def build_customer_features(
     bronze: DataFrame,
     windows: dict[str, int] | None = None,
-    entity_col: str = "customer_id",
-    ts_col: str = "invoice_date",
-    sku_col: str = "stock_code",
-    amount_col: str = "line_amount",
-    cancel_col: str = "is_cancel",
     unique_mode: str = "delta",
     carry_cols: tuple[str, ...] | None = None,
     label_events: DataFrame | None = None,
@@ -202,7 +197,7 @@ def build_customer_features(
     ``operators.pit`` semantics: ``label = 1`` iff NO event in ``(t_ref,
     t_ref + label_horizon_days]``) into the SAME WindowExec as W1-W6 instead
     of a separate label pass + J1 join.  The frame must carry
-    ``(entity_col, label_ts_col)``; its rows are unioned in as zero-weight
+    ``(customer_id, label_ts_col)``; its rows are unioned in as zero-weight
     markers (``__txn = __cancel = __spend = 0``, NULL sku — invisible to
     every family aggregate and to tenure's running min, which skips marker
     timestamps) and the label is one more running aggregate, a future range
@@ -225,6 +220,8 @@ def build_customer_features(
     carried.  ``None`` preserves every input column (the generic contract).
     """
     windows = windows or {"1d": 1, "7d": 7, "30d": 30}
+    entity_col, ts_col, sku_col = "customer_id", "invoice_date", "stock_code"
+    amount_col, cancel_col = "line_amount", "is_cancel"
     if unique_mode not in ("set", "delta"):
         raise ValueError(f"unknown unique_mode: {unique_mode!r}")
     q = sql_ident
@@ -356,15 +353,7 @@ def incremental_customer_features(
     bronze_new: DataFrame,
     bronze_hist: DataFrame,
     cutoff: str,
-    windows: dict[str, int] | None = None,
-    first_seen: DataFrame | None = None,
     carry_cols: tuple[str, ...] | None = None,
-    entity_col: str = "customer_id",
-    ts_col: str = "invoice_date",
-    sku_col: str = "stock_code",
-    amount_col: str = "line_amount",
-    cancel_col: str = "is_cancel",
-    unique_mode: str = "delta",
 ) -> DataFrame:
     """Incremental view maintenance for the W1-W6 family (r9): feature rows
     for exactly the NEWLY ARRIVED bronze lines, bit-identical to a full
@@ -375,7 +364,8 @@ def incremental_customer_features(
     PRECEDING range frame and tenure is a backward running min, so a new
     row at time t can never change an already-shipped row's features —
     only rows at-or-after t for the same entity need computing, and their
-    windows need at most ``max(windows)`` days of that entity's history.
+    windows need at most 30 days (the widest window) of that entity's
+    history.
     (Corrections to PAST rows are the other maintenance path —
     ``jobs.backfill_feature_views_mtable`` — not this one.)
 
@@ -388,64 +378,44 @@ def incremental_customer_features(
       ``[cutoff - horizon, cutoff)`` — just enough to seed every trailing
       window of every new row;
     - tenure's first-event timestamp cannot come from the truncated
-      context, so it comes from ``first_seen`` ENTITY STATE —
-      ``(entity, first_ts)``, the classic incrementally-maintainable
-      aggregate (min is associative; pass the maintained table, or omit it
-      and this function derives it from ``bronze_hist`` pruned to touched
-      entities) — merged with the new batch's own minima and applied as
-      the identical ``floor(us-delta / day)`` expression the batch engine
-      uses.
+      context, so it comes from ENTITY STATE — ``(entity, first_ts)``, the
+      classic incrementally-maintainable aggregate (min is associative),
+      derived from ``bronze_hist`` pruned to touched entities — merged with
+      the new batch's own minima and applied as the identical
+      ``floor(us-delta / day)`` expression the batch engine uses.
 
-    Contract: every ``bronze_new`` row has ``ts_col >= cutoff`` and every
+    Contract: every ``bronze_new`` row has ``invoice_date >= cutoff`` and every
     ``bronze_hist`` row ``< cutoff`` (both enforced defensively; a "new"
     row older than the cutoff belongs to the backfill path).  Output
     column set matches :func:`build_customer_features` for the same
     ``carry_cols`` (tenure recomputed via the state join)."""
-    windows = windows or {"1d": 1, "7d": 7, "30d": 30}
-    horizon = max(windows.values())
+    e, ts = "customer_id", "invoice_date"
     cut = F.to_date(F.lit(cutoff))
     need = list(
         dict.fromkeys(
-            [entity_col, ts_col, sku_col, amount_col, cancel_col, *(carry_cols or ())]
+            [e, ts, "stock_code", "line_amount", "is_cancel", *(carry_cols or ())]
         )
     )
-    new_rows = bronze_new.where(F.col(ts_col) >= cut).select(*need)
-    touched = new_rows.select(entity_col).distinct()
+    new_rows = bronze_new.where(F.col(ts) >= cut).select(*need)
+    touched = new_rows.select(e).distinct()
     context = (
-        bronze_hist.where(
-            (F.col(ts_col) >= F.date_sub(cut, horizon)) & (F.col(ts_col) < cut)
-        )
-        .join(touched, entity_col, "left_semi")
+        bronze_hist.where((F.col(ts) >= F.date_sub(cut, 30)) & (F.col(ts) < cut))
+        .join(touched, e, "left_semi")
         .select(*need)
     )
     feats = build_customer_features(
-        context.unionByName(new_rows),
-        windows=windows,
-        entity_col=entity_col,
-        ts_col=ts_col,
-        sku_col=sku_col,
-        amount_col=amount_col,
-        cancel_col=cancel_col,
-        carry_cols=carry_cols,
-        unique_mode=unique_mode,
+        context.unionByName(new_rows), carry_cols=carry_cols
     ).where(F.col("t_ref") >= cut)
-    if first_seen is None:
-        first_seen = (
-            bronze_hist.join(touched, entity_col, "left_semi")
-            .groupBy(entity_col)
-            .agg(F.min(ts_col).alias("first_ts"))
-        )
     first_all = (
-        first_seen.select(entity_col, "first_ts")
-        .unionByName(
-            new_rows.groupBy(entity_col).agg(F.min(ts_col).alias("first_ts"))
-        )
-        .groupBy(entity_col)
-        .agg(F.min("first_ts").alias("first_ts"))
+        bronze_hist.join(touched, e, "left_semi")
+        .select(e, ts)
+        .unionByName(new_rows.select(e, ts))
+        .groupBy(e)
+        .agg(F.min(ts).alias("first_ts"))
     )
     return (
         feats.drop("tenure_days")
-        .join(first_all, entity_col, "inner")
+        .join(first_all, e, "inner")
         .withColumn(
             "tenure_days",
             F.floor(
@@ -457,15 +427,16 @@ def incremental_customer_features(
     )
 
 
-def user_activity_features(
-    events: DataFrame,
-    windows: dict[str, int] | None = None,
-) -> DataFrame:
+# the trailing windows of the events-stream feature family
+USER_ACTIVITY_WINDOWS = {"1d": 1, "7d": 7}
+
+
+def user_activity_features(events: DataFrame) -> DataFrame:
     """The same W1-W6 family expressed over the ``events`` stream table
     (user_id/ts/event_type/value) — the driver-testdata face of the feature
     engine: count, sum, distinct-type, guarded average, error rate, tenure.
     """
-    windows = windows or {"1d": 1, "7d": 7}
+    windows = USER_ACTIVITY_WINDOWS
     scale = "CAST(1000000 AS DOUBLE)"
     spec = "PARTITION BY user_id ORDER BY __ts_us"
     # a window whose values are all NULL sums to NULL, as a bounded SUM

@@ -20,8 +20,8 @@ snapshot the Spark jobs materialize — exactly the reference's architecture:
   (``serving/feature_service.py:48-59``).
 
 The cache here is pandas-on-parquet (pyarrow), no Spark session in the
-serving process; the offline snapshot directory is whatever
-``io.write_date_partitioned`` produced.
+serving process; the offline snapshot directory is the gold table
+``jobs._gold_writer`` writes (date-partitioned parquet).
 """
 
 from __future__ import annotations

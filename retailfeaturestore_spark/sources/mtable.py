@@ -86,14 +86,10 @@ files whose bloom contains the key are opened.  Blooms and ranges inherit
 independently through merges/compaction; a bloom can only FALSE-POSITIVE
 (extra IO), never false-negative.
 
-**Schema evolution (additive)**: commits made with ``allow_evolution=True``
-may ADD columns; the manifest schema becomes the union, old files stay
-byte-identical, and readers surface typed nulls for rows written before a
-column existed (``mergeSchema`` over the manifest's explicit file list,
-plus a driver-side null-fill for selections that touch only pre-evolution
-files).  Non-widening retypes still raise — those need a rewrite, the
-same stance as Delta without ``overwriteSchema``.  A commit that replaces
-every live file re-homogenizes the table and clears the flag.
+**Fixed column set**: appends, partition overwrites and merges keep the
+table's columns — adding a column or a non-widening retype raises, and a
+full overwrite is the one path that changes the schema (the stance of
+Delta without ``mergeSchema``/``overwriteSchema``).
 
 **Type widening (RETYPE without rewrite)**: commits made with
 ``allow_widening=True`` may UP-cast column types (the integer chain,
@@ -135,8 +131,7 @@ stable PHYSICAL column names; the manifest's ``mapping`` (logical ->
 physical) and ``dropped`` (retired physicals) make
 ``rename_column``/``drop_column`` O(manifest) metadata commits — the
 Delta column-mapping (name mode) shape.  ``read()`` and the change feed
-present logical names; every write path maps back at staging; a re-added
-logical name gets a FRESH physical so retired bytes never resurrect;
+present logical names; every write path maps back at staging;
 stats/blooms/DVs stay physically keyed, so data skipping survives
 renames; time travel shows each version under its own names; racing a
 rename/drop against any in-flight writer is an OCC conflict.  A full
@@ -157,8 +152,7 @@ tombstone instead of the rewrite; when tombstones stop being small,
 **Change data feed**: ``read_changes(v_from, v_to)`` plans exactly the
 per-commit file-list differences (O(changed files), never the table; delta
 manifests diff in O(touched files)), tagging rows insert/delete per commit
-— copy-on-write rewrite pairs cancel under per-row netting, and
-``skip_compactions=True`` omits row-preserving maintenance churn entirely.
+— copy-on-write rewrite pairs cancel under per-row netting.
 ``streaming/changes_stream.ChangeFeedConsumer`` tails it with
 table-version offsets.
 
@@ -292,6 +286,10 @@ def _check_retired_key_misuse(
         )
 
 
+# rebase-and-retry attempts of one commit (see MTable._commit_rebase)
+_COMMIT_RETRIES = 5
+
+
 class ConcurrentCommit(RuntimeError):
     """Another writer claimed this version first (manifest CAS failed)."""
 
@@ -383,15 +381,10 @@ class MTable:
         self,
         spark: SparkSession,
         path: str,
-        checkpoint_interval: int | None = None,
         log_store: LogStore | None = None,
     ):
         self.spark = spark
         self.path = path.rstrip("/")
-        if checkpoint_interval is not None:
-            if checkpoint_interval < 1:
-                raise ValueError("checkpoint_interval must be >= 1")
-            self.checkpoint_interval = checkpoint_interval
         # commit-protocol seam: default is Hadoop create-if-absent; pass
         # another LogStore for stores where Hadoop's create is not atomic
         self.log_store: LogStore = log_store or HadoopLogStore()
@@ -624,7 +617,6 @@ class MTable:
         v0: int,
         m0: dict,
         touched: set[str],
-        retries: int = 5,
     ) -> int:
         """Commit with automatic OCC rebase-and-retry (VERDICT r9 #6).
 
@@ -639,11 +631,11 @@ class MTable:
         land, serialized).  Any overlap surfaces the original
         :class:`ConcurrentCommit` for the caller's recompute-and-retry."""
         vb, mb = v0, m0
-        for attempt in range(max(retries, 1)):
+        for attempt in range(_COMMIT_RETRIES):
             try:
                 return self._commit_state(build_manifest(vb, mb), vb + 1, mb)
             except ConcurrentCommit:
-                if attempt == max(retries, 1) - 1:
+                if attempt == _COMMIT_RETRIES - 1:
                     raise
                 cur = self._latest()
                 assert cur is not None  # someone committed: latest exists
@@ -652,7 +644,6 @@ class MTable:
                     raise
                 conflicting = (
                     m1["schema"] != m0["schema"]
-                    or bool(m1.get("evolved")) != bool(m0.get("evolved"))
                     or bool(m1.get("widened")) != bool(m0.get("widened"))
                     # a racing RENAME/DROP COLUMN changed the logical<->
                     # physical contract the staged files were written under
@@ -910,20 +901,19 @@ class MTable:
         return out
 
     def _evolve_schema(
-        self, old_fp: str, new_fp: str, allow: bool, allow_widening: bool = False
+        self, old_fp: str, new_fp: str, allow_widening: bool = False
     ) -> tuple[str, bool]:
         """Validate a schema change between commits; returns ``(resulting
-        fingerprint, widening_happened)``.  Identical -> old.  ADDITIVE
-        superset (every existing column present with the identical type,
-        plus new ones) with ``allow_evolution=True`` -> the new
-        fingerprint.  With ``allow_widening=True``, per-column TYPE
-        WIDENING is also accepted in either direction — the incoming frame
+        fingerprint, widening_happened)``.  Identical -> old.  With
+        ``allow_widening=True``, per-column TYPE WIDENING is accepted in
+        either direction — the incoming frame
         may widen the table's type (int -> bigint, float -> double, the
         manifest takes the wide type) or be narrower than an already-
         widened table (the manifest keeps the wide type); files stay
         byte-identical and reads resolve the width via an explicit
-        manifest schema (``_widens``).  Anything else (drop, non-widening
-        retype, rename) raises — a full rewrite is the sanctioned path,
+        manifest schema (``_widens``).  Anything else (add, drop,
+        non-widening retype, rename) raises — a full rewrite is the
+        sanctioned path,
         same stance as Delta without overwriteSchema (rename/drop have
         their own metadata path: column mapping)."""
         if new_fp == old_fp:
@@ -940,8 +930,8 @@ class MTable:
         if missing or bad:
             raise ValueError(
                 f"schema mismatch is not additive: missing={missing} "
-                f"retyped={bad} (evolution only ADDS columns; integer/"
-                "float/decimal UP-casts need allow_widening=True)"
+                f"retyped={bad} (integer/float/decimal UP-casts need "
+                "allow_widening=True)"
             )
         if widen and not allow_widening:
             raise ValueError(
@@ -949,10 +939,10 @@ class MTable:
                 "allow_widening=True to accept the up-cast without a rewrite"
             )
         added = sorted(set(new) - set(old))
-        if added and not allow:
+        if added:
             raise ValueError(
-                f"schema adds columns {added}; pass "
-                "allow_evolution=True to evolve the table additively"
+                f"schema adds columns {added}: a table's column set changes "
+                "only by a full overwrite"
             )
         if not widen:
             return new_fp, False
@@ -977,8 +967,7 @@ class MTable:
     # keys, partition directory names) never changes under a rename, so data
     # skipping, DVs, and the feed's per-file algebra are rename-oblivious.
     # A full overwrite replaces every file and RESETS both fields (logical
-    # names become the physical reality again), same re-homogenization rule
-    # as the ``evolved`` flag.
+    # names become the physical reality again).
 
     def _p(self, m: dict | None, name: str) -> str:
         """Physical name of logical column ``name`` (identity unless
@@ -1015,37 +1004,15 @@ class MTable:
         self, df: DataFrame, m: dict | None
     ) -> tuple[DataFrame, dict[str, str]]:
         """Rename a LOGICAL-named input frame to the table's PHYSICAL names
-        for staging.  A NEW logical column (additive evolution) takes its own
-        name as physical unless that name is already spoken for — retired by
-        a DROP, or serving as a live column's physical — in which case it
-        gets a fresh suffixed physical name (recorded in the returned
-        mapping) so the old bytes in existing files can never resurrect
-        through the new column.  Returns ``(physical df, updated mapping)``;
-        no-op ``(df, {})`` for tables that never renamed or dropped."""
+        for staging (a column the table lacks keeps its name; the schema
+        check rejects it).  Returns ``(physical df, mapping)``; no-op
+        for tables that never renamed a column."""
         if m is None:
             return df, {}
         mp = dict(m.get("mapping") or {})
-        retired = set(m.get("dropped") or ())
-        if not mp and not retired:
+        if not mp:
             return df, mp
-        phys = set(self._parse_schema(m["schema"]))
-        if m.get("partition_by"):
-            phys.add(m["partition_by"])
-        inv = {p: l for l, p in mp.items()}
-        live = {inv.get(p, p) for p in phys}
-        taken = phys | retired | set(mp.values())
-        sel = []
-        for c in df.columns:
-            if c in mp:
-                sel.append(F.col(c).alias(mp[c]))
-            elif c in live:
-                sel.append(F.col(c))
-            else:
-                pn = c
-                if pn in taken:
-                    pn = f"{c}_{uuid.uuid4().hex[:8]}"
-                    mp[c] = pn
-                sel.append(F.col(c).alias(pn) if pn != c else F.col(c))
+        sel = [F.col(c).alias(mp[c]) if c in mp else F.col(c) for c in df.columns]
         return df.select(*sel), mp
 
     def _logical_pby(self, m: dict | None) -> str | None:
@@ -1111,14 +1078,13 @@ class MTable:
         under the manifest's explicit schema — Spark's parquet reader
         up-casts each file's narrower physical type in the scan itself
         (int->bigint, float->double, decimal precision), which mergeSchema
-        refuses to reconcile; the explicit schema also null-fills columns
-        a file predates, so it subsumes the evolved path.  A RESPEC'd
+        refuses to reconcile.  A RESPEC'd
         table (partition spec evolution) likewise needs the explicit
         schema: the current partition column is DATA in legacy files but
         absent from new files' footers (and vice versa for retired
         columns), so footer sampling could drop either.  Non-widened,
-        single-spec tables keep the original footer/mergeSchema strategy
-        (identical plans and column order to the pre-widening code)."""
+        single-spec tables keep the footer schema (identical plans and
+        column order to the pre-widening code)."""
         legacy = self._has_legacy(m)
         if m.get("widened") or legacy:
             schema = dict(self._parse_schema(m["schema"]))
@@ -1131,15 +1097,7 @@ class MTable:
             return self.spark.read.schema(ddl).parquet(
                 *[self._abs(rel) for rel in rels]
             )
-        reader = self.spark.read
-        if m.get("evolved"):
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[self._abs(rel) for rel in rels])
-        if m.get("evolved"):
-            for name, typ in self._parse_schema(m["schema"]).items():
-                if name not in df.columns:
-                    df = df.withColumn(name, F.lit(None).cast(typ))
-        return df
+        return self.spark.read.parquet(*[self._abs(rel) for rel in rels])
 
     def _constraints_must_resolve(
         self,
@@ -1235,10 +1193,8 @@ class MTable:
         column is RETIRED — removed from the manifest schema and recorded in
         ``dropped``, so reads stop projecting it (Catalyst never decodes the
         bytes again; dropping a wide blob column pays off on the very next
-        scan), old snapshots still time-travel to it until vacuum retires
-        their manifests, and a later re-add of the same logical name (an
-        ``allow_evolution=True`` append) is assigned a FRESH physical name so
-        the retired bytes can never resurrect.  Refused for the partition
+        scan), and old snapshots still time-travel to it until vacuum
+        retires their manifests.  Refused for the partition
         column and while a generated column's expression references it."""
         cur = self._latest()
         if cur is None:
@@ -1388,7 +1344,7 @@ class MTable:
         if ptype is not None:
             manifest["partition_type"] = ptype
         for k in (
-            "evolved", "widened", "dv", "mapping", "dropped", "generated",
+            "widened", "dv", "mapping", "dropped", "generated",
         ):
             if m0.get(k):
                 manifest[k] = (
@@ -1398,31 +1354,23 @@ class MTable:
                 )
         return self._commit_state(manifest, v0 + 1, m0)
 
-    def migrate(self, partitions: list[str] | None = None) -> int:
+    def migrate(self) -> int:
         """Rewrite LEGACY-spec files into the CURRENT partition layout
         (the follow-up job to :meth:`repartition_table`, same motivation
-        as compaction): reads the selected legacy entries, restages under
-        the current spec, and commits a version where those entries are
-        gone.  ``partitions=None`` migrates every legacy entry; pass
-        specific legacy keys (as returned in ``describe()['legacy']``)
-        to bound the rewrite.  No-op (current version) without legacy
-        entries."""
+        as compaction): reads every legacy entry, restages under the
+        current spec, and commits a version where those entries are gone.
+        No-op (current version) without legacy entries."""
         cur = self._latest()
         if cur is None:
             raise ValueError("migrate needs an existing table")
         v0, m0 = cur
-        sel = [
-            k
-            for k in m0["partitions"]
-            if _SPEC_SEP in k and (partitions is None or k in set(partitions))
-        ]
+        sel = [k for k in m0["partitions"] if _SPEC_SEP in k]
         if not sel:
             return v0
         pby = m0["partition_by"]
         pby_l = self._logical_pby(m0)
-        # row-preserving maintenance, same contract as compact
-        # (meta["compacted"] keeps the change feed's skip_compactions
-        # netting sound).  Staged files MERGE into existing current-spec
+        # row-preserving maintenance, same contract as compact (meta
+        # ["compacted"] marks it).  Staged files MERGE into existing current-spec
         # entries — a migrated row's partition value may already hold live
         # files, so replace semantics (overwrite_partitions) would clobber
         # them.
@@ -1476,7 +1424,7 @@ class MTable:
             if mb.get("partition_type"):
                 manifest["partition_type"] = mb["partition_type"]
             for k in (
-                "evolved", "widened", "dv", "mapping", "dropped", "generated",
+                "widened", "dv", "mapping", "dropped", "generated",
             ):
                 if mb.get(k):
                     manifest[k] = (
@@ -1499,7 +1447,6 @@ class MTable:
         stats_cols: list[str] | None = None,
         bloom_cols: list[str] | None = None,
         bloom_bits: int = 4096,
-        allow_evolution: bool = False,
         allow_widening: bool = False,
         generated: dict[str, str] | None = None,
     ) -> int:
@@ -1510,13 +1457,9 @@ class MTable:
         carry existing files' stats forward, and an append that leaves
         ``stats_cols``/``bloom_cols`` unset inherits the table's existing
         stats/bloom column sets so pruning keeps working on the appended
-        files (pass ``[]`` to explicitly stat nothing).  ``allow_evolution=True``
-        permits an append whose schema ADDS columns (additive evolution —
-        readers surface the union schema with typed nulls for files written
-        before the column existed; drop/retype still raise).  Returns the
-        committed version."""
+        files (pass ``[]`` to explicitly stat nothing).  An append keeps the
+        table's column set.  Returns the committed version."""
         schema_fp = None
-        evolved = False
         widened = False
         mapping: dict[str, str] = {}
         cur = self._latest()
@@ -1553,17 +1496,10 @@ class MTable:
                     bloom_cols = [self._p(m0, c) for c in bloom_cols]
                 fp = self._schema_fingerprint(df, partition_by)
                 schema_fp, widen_d = self._evolve_schema(
-                    m0["schema"], fp, allow_evolution, allow_widening
+                    m0["schema"], fp, allow_widening
                 )
-                # heterogeneous live files once any carried file predates
-                # an added column (or carries a narrower accepted type);
-                # sticky until a full overwrite
-                added_cols = set(self._parse_schema(schema_fp)) - set(
-                    self._parse_schema(m0["schema"])
-                )
-                evolved = bool(m0.get("evolved")) or (
-                    bool(added_cols) and bool(m0["partitions"])
-                )
+                # heterogeneous live files once any carried file carries a
+                # narrower accepted type; sticky until a full overwrite
                 widened = bool(m0.get("widened")) or (
                     widen_d and bool(m0["partitions"])
                 )
@@ -1625,8 +1561,6 @@ class MTable:
                 "committed_at_ms": int(time.time() * 1000),
                 "meta": dict(extra_meta or {}),
             }
-            if evolved:
-                manifest["evolved"] = True
             if widened:
                 manifest["widened"] = True
             # deletion vectors survive an append (their files stay live);
@@ -1655,11 +1589,11 @@ class MTable:
         # only true conflict is a racing schema change, which the
         # re-evolution check below re-validates per attempt.
         vb, mb = v0, m0
-        for attempt in range(5):
+        for attempt in range(_COMMIT_RETRIES):
             try:
                 return self._commit_state(build_manifest(vb, mb), vb + 1, mb)
             except ConcurrentCommit:
-                if attempt == 4:
+                if attempt == _COMMIT_RETRIES - 1:
                     raise
                 cur = self._latest()
                 assert cur is not None  # someone committed: latest exists
@@ -1682,14 +1616,7 @@ class MTable:
                 schema_fp, widen_d = self._evolve_schema(
                     mb["schema"],
                     self._schema_fingerprint(df, partition_by),
-                    allow_evolution,
                     allow_widening,
-                )
-                added_cols = set(self._parse_schema(schema_fp)) - set(
-                    self._parse_schema(mb["schema"])
-                )
-                evolved = bool(mb.get("evolved")) or (
-                    bool(added_cols) and bool(mb["partitions"])
                 )
                 widened = bool(mb.get("widened")) or (
                     widen_d and bool(mb["partitions"])
@@ -1704,8 +1631,6 @@ class MTable:
         base_version: int | None = None,
         cluster_files: bool = False,
         stats_cols: list[str] | None = None,
-        allow_evolution: bool = False,
-        allow_widening: bool = False,
         _maintenance: bool = False,
     ) -> int:
         """Commit a version where the partitions carried by ``df`` (or the
@@ -1713,8 +1638,6 @@ class MTable:
         partition's files are carried forward by reference — the dynamic
         partition overwrite / MERGE publish primitive, made atomic and
         snapshot-isolated by the manifest commit.
-        ``allow_evolution=True`` permits an ADDITIVE schema change (new
-        columns; drop/retype still raise) — see :meth:`write`.
 
         ``base_version`` pins the snapshot the replacement was COMPUTED
         against: the commit claims exactly ``base_version + 1``, so a
@@ -1754,12 +1677,7 @@ class MTable:
         if stats_cols:
             stats_cols = [self._p(m0, c) for c in stats_cols]
         fp = self._schema_fingerprint(df, partition_by)
-        schema_fp, widen_d = self._evolve_schema(
-            m0["schema"], fp, allow_evolution, allow_widening
-        )
-        added_cols = set(self._parse_schema(schema_fp)) - set(
-            self._parse_schema(m0["schema"])
-        )
+        schema_fp, _ = self._evolve_schema(m0["schema"], fp)
         if cluster_files:
             # every partition value's rows land in one task -> one staged
             # file per partition dir; parallelism stays at the session's
@@ -1852,14 +1770,9 @@ class MTable:
                 if rel in live
             }
             stats.update(staged_stats)
-            # live files are heterogeneous once any carried file predates an
-            # added column; a commit that replaced EVERY live file resets it
-            evolved = bool(live - staged_set) and (
-                bool(mb.get("evolved")) or bool(added_cols)
-            )
-            widened = bool(live - staged_set) and (
-                bool(mb.get("widened")) or widen_d
-            )
+            # live files are heterogeneous once any carried file carries a
+            # narrower type; a commit that replaced EVERY live file resets it
+            widened = bool(live - staged_set) and bool(mb.get("widened"))
             manifest = {
                 "version": vb + 1,
                 "parent": vb,
@@ -1871,8 +1784,6 @@ class MTable:
                 "committed_at_ms": int(time.time() * 1000),
                 "meta": dict(extra_meta or {}),
             }
-            if evolved:
-                manifest["evolved"] = True
             if widened:
                 manifest["widened"] = True
             if mb.get("dv"):
@@ -1896,11 +1807,7 @@ class MTable:
         updates: DataFrame,
         keys: list[str],
         partition_col_value: F.Column | None = None,
-        extra_meta: dict | None = None,
         cluster_files: bool = False,
-        stats_cols: list[str] | None = None,
-        allow_evolution: bool = False,
-        allow_widening: bool = False,
     ) -> int:
         """MERGE by key into the touched partitions only: every stored row
         whose key appears in ``updates`` is replaced, new keys are appended,
@@ -1909,8 +1816,7 @@ class MTable:
         throughout.
         ``partition_col_value``: expression deriving the partition value
         from an updates row (e.g. ``F.date_format("t_ref","yyyy-MM-dd")``).
-        ``allow_evolution=True`` lets ``updates`` carry NEW columns (additive
-        evolution): surviving pre-existing rows take typed nulls there.
+        ``updates`` may not carry columns the table lacks.
 
         Serializable against racing writers: survivors are computed against
         the version read at entry and the commit claims exactly that
@@ -1959,36 +1865,27 @@ class MTable:
         if old_slice is not None:
             update_keys = F.broadcast(upd.select(*keys).distinct())
             survivors = old_slice.join(update_keys, keys, "left_anti")
-            if allow_evolution:
-                # survivors take typed nulls in any column only updates has
-                merged = survivors.unionByName(upd, allowMissingColumns=True)
-            else:
-                extra = sorted(set(upd.columns) - set(survivors.columns))
-                if extra:
-                    # silently projecting these away would LOSE update data
-                    raise ValueError(
-                        f"updates add columns {extra}; pass "
-                        "allow_evolution=True to evolve the table additively"
-                    )
-                merged = survivors.unionByName(upd.select(*survivors.columns))
+            extra = sorted(set(upd.columns) - set(survivors.columns))
+            if extra:
+                # silently projecting these away would LOSE update data
+                raise ValueError(
+                    f"updates add columns {extra}: a table's column set "
+                    "changes only by a full overwrite"
+                )
+            merged = survivors.unionByName(upd.select(*survivors.columns))
         else:
             merged = upd
         return self.overwrite_partitions(
             merged,
             partition_values=touched,
-            extra_meta=extra_meta,
             base_version=v0,
             cluster_files=cluster_files,
-            stats_cols=stats_cols,
-            allow_evolution=allow_evolution,
-            allow_widening=allow_widening,
         )
 
     def delete(
         self,
         condition,
         prune: list[tuple] | None = None,
-        extra_meta: dict | None = None,
     ) -> int:
         """Row-level DELETE: remove every row where ``condition`` is TRUE
         (a Column or SQL string; NULL-condition rows are KEPT, standard
@@ -2016,14 +1913,13 @@ class MTable:
             return df.where(~matched)
 
         return self._rewrite_matching(
-            condition, drop_matched, "delete", prune, extra_meta
+            condition, drop_matched, "delete", prune
         )
 
     def delete_positions(
         self,
         condition,
         prune: list[tuple] | None = None,
-        extra_meta: dict | None = None,
     ) -> int:
         """Merge-on-read DELETE via DELETION VECTORS — the high-frequency
         path copy-on-write :meth:`delete` is not: matching rows are
@@ -2112,13 +2008,9 @@ class MTable:
                 },
                 "stats": dict(mb.get("stats") or {}),
                 "committed_at_ms": int(time.time() * 1000),
-                "meta": dict(
-                    extra_meta or {}, delete_positions_rows=n
-                ),
+                "meta": {"delete_positions_rows": n},
                 "dv": sorted((mb.get("dv") or []) + new_dv),
             }
-            if mb.get("evolved"):
-                manifest["evolved"] = True
             if mb.get("widened"):
                 manifest["widened"] = True
             if mb.get("mapping"):
@@ -2138,7 +2030,6 @@ class MTable:
         condition,
         set: dict,
         prune: list[tuple] | None = None,
-        extra_meta: dict | None = None,
     ) -> int:
         """Row-level UPDATE: for every row where ``condition`` is TRUE
         (NULL-condition rows unchanged), assign each ``set`` column its
@@ -2178,7 +2069,7 @@ class MTable:
             )
 
         return self._rewrite_matching(
-            condition, apply_set, "update", prune, extra_meta
+            condition, apply_set, "update", prune
         )
 
     def _rewrite_matching(
@@ -2187,7 +2078,6 @@ class MTable:
         transform,
         operation: str,
         prune: list[tuple] | None,
-        extra_meta: dict | None,
     ) -> int:
         """Shared copy-on-write DML core (DELETE/UPDATE): select rewrite
         candidates via stats/bloom pruning, apply ``transform(df, matched)``
@@ -2303,7 +2193,6 @@ class MTable:
                 if rel in live
             }
             new_stats.update(staged_stats)
-            evolved = bool(live - staged_set) and bool(mb.get("evolved"))
             widened = bool(live - staged_set) and bool(mb.get("widened"))
             meta = {
                 f"{operation}_rewrote_files": len(cand),
@@ -2312,7 +2201,6 @@ class MTable:
                 )
                 - len(cand),
             }
-            meta.update(extra_meta or {})
             manifest = {
                 "version": vb + 1,
                 "parent": vb,
@@ -2324,8 +2212,6 @@ class MTable:
                 "committed_at_ms": int(time.time() * 1000),
                 "meta": meta,
             }
-            if evolved:
-                manifest["evolved"] = True
             if widened:
                 manifest["widened"] = True
             if mb.get("dv"):
@@ -2460,7 +2346,6 @@ class MTable:
                 inv.get(c, c): t
                 for c, t in self._parse_schema(m["schema"]).items()
             },
-            "evolved": bool(m.get("evolved")),
             "widened": bool(m.get("widened")),
             "generated": dict(m.get("generated") or {}),
             "column_mapping": dict(m.get("mapping") or {}),
@@ -2552,7 +2437,6 @@ class MTable:
         self,
         v_from: int,
         v_to: int | None = None,
-        skip_compactions: bool = False,
     ) -> DataFrame | None:
         """File-granularity CHANGE DATA FEED: every row added or removed by
         the commits AFTER snapshot ``v_from`` (0 = "before the first
@@ -2580,18 +2464,6 @@ class MTable:
         in the range changed any file.  Reference stake: the reference
         rebuilds gold from scratch every run (jobs/build_feature_views.py)
         — this feed is what lets a consumer NOT do that.
-
-        ``skip_compactions=True`` omits the events of commits whose meta
-        carries ``compacted`` (the :meth:`compact`/zorder maintenance
-        path — the one rewrite surface that preserves the row multiset by
-        construction).  Sound for NETTING consumers even when a later DML
-        rewrites a compacted file: the compacted file's values equal the
-        values of the files it replaced, which the feed DID emit (or the
-        v_from baseline holds), so per-row sums still cancel exactly — the
-        Delta ``dataChange=false`` analogue.  Per-commit-fidelity
-        consumers (audit trails) must leave it off.  At scale this is the
-        difference between a consumer re-reading a compacted terabyte of
-        no-op churn and reading nothing.
 
         The version walk itself is metadata-cheap: a DELTA manifest's
         events are computed from its ``delta`` entry in O(touched
@@ -2668,8 +2540,6 @@ class MTable:
                 parts = {pv: list(fl) for pv, fl in newparts.items()}
             dv_new = sorted(dv_curr - dv_prev)
             dv_before, dv_prev = sorted(dv_prev), dv_curr
-            if skip_compactions and "compacted" in (raw.get("meta") or {}):
-                continue
             if added:
                 scans.append((v, op, "insert", sorted(added), sorted(dv_curr), []))
             if removed:
@@ -2794,8 +2664,6 @@ class MTable:
             "committed_at_ms": int(time.time() * 1000),
             "meta": meta,
         }
-        if tgt.get("evolved"):
-            manifest["evolved"] = True
         if tgt.get("widened"):
             manifest["widened"] = True
         if tgt.get("dv"):
@@ -2838,8 +2706,6 @@ class MTable:
             "committed_at_ms": int(time.time() * 1000),
             "meta": dict(meta or {}),
         }
-        if m0.get("evolved"):
-            manifest["evolved"] = True
         if m0.get("widened"):
             manifest["widened"] = True
         if m0.get("dv"):
@@ -2933,15 +2799,11 @@ class MTable:
 
     def compact(
         self,
-        partitions: list[str] | None = None,
-        order_by: list[str] | None = None,
         zorder_by: list[str] | None = None,
         files_per_partition: int = 4,
-        zorder_method: str = "linear",
-        extra_meta: dict | None = None,
     ) -> int:
-        """Small-file OPTIMIZE: rewrite each selected partition (default:
-        every partition holding more than one file), committed as a normal
+        """Small-file OPTIMIZE: rewrite every partition holding more than
+        one file, committed as a normal
         snapshot-isolated version — readers on older versions keep their
         exact file lists, rows are byte-for-byte the same set.  Returns the
         committed version, or the current one when nothing needs
@@ -2950,9 +2812,7 @@ class MTable:
 
         Layout modes:
 
-        - default / ``order_by``: each partition collapses to ONE file,
-          optionally sorted within it (stats-locality clustering: tight
-          per-file min/max on the sort columns);
+        - default: each partition collapses to ONE file;
         - ``zorder_by=[c1, c2, ...]``: multi-dimensional clustering
           (Delta's OPTIMIZE ZORDER BY).  Rows are ordered by the
           interleaved-bit z-value of the named columns and range-split
@@ -2966,8 +2826,6 @@ class MTable:
           existing stats set).  At 100 TB this is the standard layout
           answer to "we filter this table by BOTH customer and date".
         """
-        if order_by and zorder_by:
-            raise ValueError("order_by and zorder_by are exclusive")
         cur = self._latest()
         if cur is None:
             raise ValueError("compact needs an existing table")
@@ -2975,30 +2833,13 @@ class MTable:
         pby = m0["partition_by"]
         if not pby:
             raise ValueError("compact targets partitioned tables")
-        if partitions is not None and any(_SPEC_SEP in p for p in partitions):
-            # replace-semantics would clobber a current-spec entry sharing
-            # the migrated rows' partition value; migrate() merges instead
-            raise ValueError(
-                "legacy-spec entries cannot be compacted in place: "
-                "use migrate() to rewrite them into the current layout"
-            )
-        # caller speaks TRUE values (same convention as
-        # overwrite_partitions / read); manifest keys match via _unq only.
-        # Escaped-key misuse fails loud — a silent no-op compact that
-        # "succeeded" is worse than the error.
-        want = (
-            {str(x) for x in partitions} if partitions is not None else None
-        )
-        if want is not None:
-            _check_retired_key_misuse(want, m0["partitions"], "compact")
+        # legacy-spec entries are never compacted in place: replace
+        # semantics would clobber a current-spec entry sharing the migrated
+        # rows' partition value; migrate() merges instead
         sel = [
             p
             for p, files in m0["partitions"].items()
-            if _SPEC_SEP not in p
-            and (
-                (want is None and len(files) > 1)
-                or (want is not None and _unq(p) in want)
-            )
+            if _SPEC_SEP not in p and len(files) > 1
         ]
         if not sel:
             return v0
@@ -3017,7 +2858,7 @@ class MTable:
             if missing:
                 raise ValueError(f"zorder columns not in table: {missing}")
             cols = list(df.columns)
-            z = _zvalue_expr(df, zorder_by, method=zorder_method)
+            z = _zvalue_expr(df, zorder_by)
             # range-split on (partition, z): every task holds one
             # partition value's contiguous z-slab -> partitionBy staging
             # emits one file per slab with tight min/max in every zorder
@@ -3047,13 +2888,9 @@ class MTable:
             # hash-clustering on the partition value puts every value's
             # rows in one task -> the writer emits one file per partition
             df = df.repartition(max(len(sel), 1), F.col(pby))
-            if order_by:
-                df = df.sortWithinPartitions(*order_by)
         meta = {"compacted": sorted(sel)}
         if zorder_by:
             meta["zorder_by"] = list(zorder_by)
-            meta["zorder_method"] = zorder_method
-        meta.update(extra_meta or {})
         # base_version: the rewritten rows are v0's — a commit racing in
         # between must fail the CAS, not be replaced by stale bytes.
         # sel holds ESCAPED manifest keys (exact-read selection above);
@@ -3169,54 +3006,28 @@ class MTable:
         return sorted(deleted)
 
 
-def _zvalue_expr(
-    df: DataFrame, cols: list[str], bits: int = 8, method: str = "linear"
-):
+# z-order cell bits per column (2**bits cells)
+_ZORDER_BITS = 8
+
+
+def _zvalue_expr(df: DataFrame, cols: list[str]):
     """Interleaved-bit z-value Column over ``cols``.
 
-    Each column is bucketed into ``2**bits`` cells, then the cell indices'
-    bits are interleaved: bit i of column j lands at position
-    ``i*len(cols) + j``.  A contiguous z-range therefore bounds EVERY
-    column to a small axis-aligned box, which is what makes per-file
-    min/max tight in all dimensions at once.
-
-    Cell methods (both driver-side literals — control-plane sized):
-
-    - ``linear``: equal-width cells between the column's global min/max
-      (one 2-scalar agg).  Cheapest, but skew-sensitive: a heavy-tailed
-      column wastes most cells on its tail and crams the data mass into
-      a few, so files stop separating where the rows actually are.
-    - ``quantile``: equal-MASS cells from ``approxQuantile`` boundaries
-      (Greenwald-Khanna, one pass, rel-err 0.01 — layout only ever needs
-      approximate bounds).  The cell index is a codegen'd literal-array
-      scan (``2**bits`` comparisons per row per column) — no join, no
-      extra exchange; this is Delta's range-partition-id idea expressed
-      as a pure Column.
+    Each column is bucketed into ``2**_ZORDER_BITS`` equal-width cells
+    between its global min/max (one 2-scalar agg; driver-side literals —
+    control-plane sized), then the cell indices' bits are interleaved:
+    bit i of column j lands at position ``i*len(cols) + j``.  A contiguous
+    z-range therefore bounds EVERY column to a small axis-aligned box,
+    which is what makes per-file min/max tight in all dimensions at once.
+    Equal-width cells are skew-sensitive: a heavy-tailed column wastes
+    most cells on its tail and crams the data mass into a few.
 
     Nulls bucket to cell 0 (they sort first, and stats-based pruning
     never drops files on null bounds).  Everything here is a pure Column
     expression consumed by the repartitionByRange that follows."""
+    bits = _ZORDER_BITS
     n = 2**bits
     z = F.lit(0).cast("long")
-    if method == "quantile":
-        qs = [i / n for i in range(1, n)]
-        for j, c in enumerate(cols):
-            bounds = df.stat.approxQuantile(c, qs, 0.01)
-            if not bounds or bounds[0] == bounds[-1]:
-                continue  # constant or all-null column contributes nothing
-            barr = F.array(*[F.lit(float(b)) for b in bounds])
-            idx = F.aggregate(
-                barr,
-                F.lit(0).cast("long"),
-                lambda acc, b: acc
-                + F.when(F.col(c).cast("double") >= b, F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("long"),
-            )
-            z = _interleave(z, idx, bits, j, len(cols))
-        return z
-    if method != "linear":
-        raise ValueError(f"unknown zorder method {method!r}")
     aggs = []
     for j, c in enumerate(cols):
         aggs += [

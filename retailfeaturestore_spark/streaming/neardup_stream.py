@@ -61,6 +61,10 @@ __all__ = [
     "ingest_batch_neardup_mtable",
 ]
 
+# word n-gram length, MinHash components, LSH bands and the Jaccard bar a
+# candidate must verify at; the batch path's (``operators.dedup``) values
+_N, _K, _BANDS, _THRESHOLD = 3, 12, 4, 0.5
+
 
 def _read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
     # Existence is probed with os.path, which is local/POSIX only — a
@@ -81,16 +85,7 @@ def _read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
-def ingest_batch_neardup(
-    batch: DataFrame,
-    state_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = 12,
-    bands: int = 4,
-    threshold: float = 0.5,
-) -> DataFrame:
+def ingest_batch_neardup(batch: DataFrame, state_dir: str) -> DataFrame:
     """Admit one batch of documents against the accumulated state.
 
     Returns the decision frame ``(doc_id, is_neardup, matched_id,
@@ -106,17 +101,13 @@ def ingest_batch_neardup(
     bands_path = os.path.join(state_dir, "bands")
     post_path = os.path.join(state_dir, "postings")
 
-    posts_b = posting_lists(batch, text_col, id_col, n).localCheckpoint()
-    sigs_b = minhash_signatures(None, id_col=id_col, k=k, postings=posts_b)
-    bands_b = band_rows(sigs_b, id_col=id_col, k=k, bands=bands).localCheckpoint()
-
+    posts_b, bands_b = _batch_state(batch)
     state_bands = _read_state(
         spark, bands_path, "id long, band int, band_key string"
     )
     state_posts = _read_state(spark, post_path, "id long, sh string")
     decisions = _neardup_decisions(
-        batch, id_col, posts_b, bands_b, state_bands, state_posts,
-        threshold, post_path,
+        batch, posts_b, bands_b, state_bands, state_posts, post_path
     )
     # Postings FIRST, bands second: the two appends are not one atomic
     # commit, and the failure modes are asymmetric.  Bands-without-postings
@@ -130,14 +121,19 @@ def ingest_batch_neardup(
     return decisions
 
 
+def _batch_state(batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The batch's checkpointed shingle postings and LSH band rows."""
+    posts_b = posting_lists(batch, _N).localCheckpoint()
+    sigs_b = minhash_signatures(posts_b, k=_K)
+    return posts_b, band_rows(sigs_b, k=_K, bands=_BANDS).localCheckpoint()
+
+
 def _neardup_decisions(
     batch: DataFrame,
-    id_col: str,
     posts_b: DataFrame,
     bands_b: DataFrame,
     state_bands: DataFrame,
     state_posts: DataFrame,
-    threshold: float,
     state_label: str,
 ) -> DataFrame:
     """The admission computation, backend-agnostic: decisions for
@@ -231,7 +227,7 @@ def _neardup_decisions(
         .where(
             F.col("n_i").cast("double")
             / (F.col("n_c") + F.col("n_w") - F.col("n_i"))
-            >= F.lit(threshold)
+            >= F.lit(_THRESHOLD)
         )
     )
     matches = verified.groupBy("cand").agg(
@@ -239,7 +235,7 @@ def _neardup_decisions(
         F.count(F.lit(1)).alias("n_matches"),
     )
     decisions = (
-        batch.select(F.col(id_col).alias("doc_id"))
+        batch.select("doc_id")
         .join(matches.withColumnRenamed("cand", "doc_id"), "doc_id", "left")
         .select(
             "doc_id",
@@ -256,12 +252,6 @@ def ingest_batch_neardup_mtable(
     batch: DataFrame,
     state_tbl,
     batch_id: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = 12,
-    bands: int = 4,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """The lakehouse-backed admission the module docstring promises: same
     decision computation as :func:`ingest_batch_neardup`, but the state is
@@ -318,15 +308,12 @@ def ingest_batch_neardup_mtable(
     cur = state_tbl._latest()
     state_v = (replay_v - 1) if replay_v is not None else (cur[0] if cur else 0)
 
-    posts_b = posting_lists(batch, text_col, id_col, n).localCheckpoint()
-    sigs_b = minhash_signatures(None, id_col=id_col, k=k, postings=posts_b)
-    bands_b = band_rows(sigs_b, id_col=id_col, k=k, bands=bands).localCheckpoint()
-
+    posts_b, bands_b = _batch_state(batch)
     decisions = _neardup_decisions(
-        batch, id_col, posts_b, bands_b,
+        batch, posts_b, bands_b,
         _kind(state_v, "band", band_schema),
         _kind(state_v, "post", post_schema),
-        threshold, state_tbl.path,
+        state_tbl.path,
     )
     if replay_v is None:
         state_rows = bands_b.select(

@@ -5,7 +5,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from retailfeaturestore_spark.jobs import build_feature_views, ingest_to_bronze, make_training
 from retailfeaturestore_spark.operators.quality_checks import (
@@ -97,14 +96,3 @@ def test_unique_key_null_components_are_violations(spark):
     rep = run_checks(df, [expect_not_null("v"), expect_unique_key("id")])
     assert rep["violations"]["unique_key(id)"] == 3
     assert run_checks(df, [expect_unique_key("id")])["violations"]["unique_key(id)"] == 3
-
-
-def test_unique_key_suite_rejects_non_sum_checks(spark):
-    from retailfeaturestore_spark.operators.quality_checks import Check
-    import pyspark.sql.functions as F
-    import pytest as _pytest
-
-    df = spark.createDataFrame([(1, 1.0)], "id int, v double")
-    mx = Check(name="max(v)<=1", violations=F.max("v"), sum_shaped=False)
-    with _pytest.raises(ValueError, match="sum"):
-        run_checks(df, [mx, expect_unique_key("id")])

@@ -3,6 +3,7 @@ docs, an empty term set, and the join fallback against the literal path."""
 
 from __future__ import annotations
 
+from retailfeaturestore_spark.operators import retrieval
 from retailfeaturestore_spark.operators.retrieval import bm25_topk
 
 
@@ -44,8 +45,8 @@ def test_bm25_empty_term_set_returns_empty_frame(spark):
     assert dict(out.dtypes)["doc_id"] == "bigint"
 
 
-def test_bm25_join_fallback_matches_literal_path(spark):
-    """ADVICE r12 #4: above max_literal_terms the explode+broadcast-join
+def test_bm25_join_fallback_matches_literal_path(spark, monkeypatch):
+    """ADVICE r12 #4: above BM25_MAX_LITERAL_TERMS the explode+broadcast-join
     path takes over; it must score identically to the literal map-side
     plan (same idf/tf quantization, same sentinel stats)."""
     docs = spark.createDataFrame(
@@ -58,10 +59,7 @@ def test_bm25_join_fallback_matches_literal_path(spark):
         "doc_id long, text string",
     )
     tq = [(0, "hash"), (0, "join"), (1, "scan"), (1, "agg"), (1, "merge")]
-    lit_rows = sorted(
-        tuple(r) for r in bm25_topk(docs, tq, k=10, max_literal_terms=64).collect()
-    )
-    join_rows = sorted(
-        tuple(r) for r in bm25_topk(docs, tq, k=10, max_literal_terms=2).collect()
-    )
+    lit_rows = sorted(tuple(r) for r in bm25_topk(docs, tq, k=10).collect())
+    monkeypatch.setattr(retrieval, "BM25_MAX_LITERAL_TERMS", 2)
+    join_rows = sorted(tuple(r) for r in bm25_topk(docs, tq, k=10).collect())
     assert lit_rows == join_rows and len(lit_rows) > 0

@@ -263,7 +263,7 @@ def test_compact_collapses_small_files_snapshot_isolated(spark, tmp_path):
     m3 = t._read_manifest(3)
     assert len(m3["partitions"]["2024-01-01"]) == 3  # one file per append
     before = {(r.customer_id, r.score) for r in t.read().collect()}
-    v = t.compact(order_by=["customer_id"])
+    v = t.compact()
     assert v == 4
     m4 = t._read_manifest(4)
     assert len(m4["partitions"]["2024-01-01"]) == 1  # OPTIMIZEd

@@ -181,9 +181,9 @@ def test_compact_selects_by_true_value_and_preserves_collisions(spark, tmp_path)
         ("a%20b", 2),
         ("a%20b", 12),
     }
-    # targeted compact speaks TRUE values too
+    # a later compact rewrites only the partition the append split
     t.write(_kx(spark, [("a b", 21)]), mode="append")
-    v2 = t.compact(partitions=["a b"])
+    v2 = t.compact()
     m2 = t._read_manifest(v2)
     assert all(len(files) == 1 for files in m2["partitions"].values())
     assert {(r.k, r.x) for r in t.read().collect()} == {
@@ -264,11 +264,10 @@ def test_merge_upsert_into_new_colliding_partition(spark, tmp_path):
     }
 
 
-def test_read_compact_fail_loud_on_escaped_key_misuse(spark, tmp_path):
+def test_read_fails_loud_on_escaped_key_misuse(spark, tmp_path):
     """r12 review finding: the retired escaped-key convention failed loud
-    only in overwrite_partitions; read() silently returned None and
-    compact() was a no-op — silent-wrong behaviors for the same caller
-    mistake.  Both now raise."""
+    only in overwrite_partitions; read() silently returned None — a
+    silent-wrong behavior for the same caller mistake.  It now raises."""
     t = MTable(spark, str(tmp_path / "loud"))
     t.write(
         _kx(spark, [("a:b", 1), ("a:b", 2), ("plain", 3)]),
@@ -277,10 +276,8 @@ def test_read_compact_fail_loud_on_escaped_key_misuse(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="read: .*escaped"):
         t.read(partitions=["a%3Ab"])
-    with pytest.raises(ValueError, match="compact: .*escaped"):
-        t.compact(partitions=["a%3Ab"])
     # the TRUE value keeps working
     assert t.read(partitions=["a:b"]).count() == 2
     # a simply-nonexistent value (no key collision) stays a quiet miss:
-    # read None, compact no-op — that is the normal empty-selection path
+    # read None — that is the normal empty-selection path
     assert t.read(partitions=["nope"]) is None

@@ -142,7 +142,7 @@ def test_blooms_inherit_through_merge_and_compact(spark, tmp_path):
     got = t.read(prune=[("k", "=", 5000)]).where("k = 5000").collect()
     assert [(r.k, r.tag) for r in got] == [(5000, "zz")]
     # compact keeps blooms alive too
-    v = t.compact(partitions=["1"])
+    v = t.compact()
     m2 = t._read_manifest(v)
     for rel in m2["partitions"]["1"]:
         assert "bf" in m2["stats"][rel]["k"], rel

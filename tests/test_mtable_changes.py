@@ -146,7 +146,8 @@ def test_every_version_pair_nets_to_the_snapshot_delta(spark, tmp_path):
     sequence (write, append, delete, update, compact, restore), EVERY
     ``(v_from, v_to)`` pair's netted feed equals the snapshot multiset
     delta — including ranges that span compaction churn and a restore."""
-    t = MTable(spark, str(tmp_path / "alg"), checkpoint_interval=3)
+    t = MTable(spark, str(tmp_path / "alg"))
+    t.checkpoint_interval = 3
     t.write(_with_date(_snap(spark, BASE)), partition_by="date")         # v1
     t.write(_with_date(_snap(spark, APPEND)), mode="append")             # v2
     t.delete(F.col("customer_id") == 2)                                  # v3
@@ -182,7 +183,8 @@ def test_long_commit_chain_across_checkpoint_boundaries(spark, tmp_path):
     manifests (touched-entry diffs) — per-commit tags and netting must be
     oblivious to the manifest FORM, and vacuum's checkpoint materialization
     must not disturb the retained-range feed."""
-    t = MTable(spark, str(tmp_path / "chain"), checkpoint_interval=3)
+    t = MTable(spark, str(tmp_path / "chain"))
+    t.checkpoint_interval = 3
     rows = [(i, f"2024-01-{(i % 3) + 1:02d} 10:00:00", float(i)) for i in range(12)]
     t.write(_with_date(_snap(spark, rows[:1])), partition_by="date")
     for i in range(1, 12):
@@ -204,29 +206,6 @@ def test_long_commit_chain_across_checkpoint_boundaries(spark, tmp_path):
     } == set(range(8, 12))
     with pytest.raises(NoSuchVersion):
         t.read_changes(4, 9)
-
-
-def test_skip_compactions_drops_churn_but_keeps_netting_exact(spark, tmp_path):
-    t = MTable(spark, str(tmp_path / "cmp"))
-    t.write(_with_date(_snap(spark, BASE)), partition_by="date")
-    t.write(_with_date(_snap(spark, APPEND)), mode="append")
-    assert t.compact() == 3  # multi-file partitions collapse; rows unchanged
-    # the DML-after-compaction case from the docstring: a delete rewrites a
-    # COMPACTED file whose insert events were skipped — netting must still
-    # equal the logical delta because the compacted file's values equal the
-    # values the feed did emit
-    t.delete(F.col("customer_id") == 1)
-
-    full = t.read_changes(0)
-    lean = t.read_changes(0, skip_compactions=True)
-    # the compaction commit contributes events only to the full feed
-    assert [r for r in full.collect() if r._commit_version == 3]
-    assert not [r for r in lean.collect() if r._commit_version == 3]
-    final = _multiset(t.read())
-    assert _netted(full) == final
-    assert _netted(lean) == final
-    # the omitted churn (compaction's delete+insert pairs) never ships
-    assert full.count() > lean.count()
 
 
 def test_retype_via_overwrite_casts_old_events_to_endpoint_type(spark, tmp_path):
@@ -277,16 +256,3 @@ def test_describe_is_manifest_only(spark, tmp_path):
     t2 = MTable(spark, str(tmp_path / "nostats"))
     t2.write(_with_date(_snap(spark, BASE)), partition_by="date")
     assert t2.describe()["n_rows"] is None
-
-
-def test_schema_evolution_null_fills_old_events(spark, tmp_path):
-    t = MTable(spark, str(tmp_path / "evo"))
-    t.write(_with_date(_snap(spark, BASE)), partition_by="date")
-    evolved = _with_date(_snap(spark, APPEND)).withColumn(
-        "src", F.lit("late")
-    )
-    t.write(evolved, mode="append", allow_evolution=True)
-    feed = t.read_changes(0)
-    by_cust = {r.customer_id: r.src for r in feed.collect()}
-    assert by_cust[1] is None and by_cust[4] == "late"
-    assert "src" in feed.columns

@@ -129,7 +129,7 @@ def test_rename_partition_column(spark, tmp_path):
     assert t.read().count() == 4
 
 
-def test_drop_and_fresh_physical_on_readd(spark, tmp_path):
+def test_drop_is_metadata_only_and_readd_raises(spark, tmp_path):
     t = _mk(spark, tmp_path)
     files_before = sorted(t.read().inputFiles())
     t.drop_column("note")
@@ -138,19 +138,14 @@ def test_drop_and_fresh_physical_on_readd(spark, tmp_path):
     assert "note" in t.read(version=1).columns  # time travel keeps it
     d = t.describe()
     assert d["dropped_columns"] == ["note"] and "note" not in d["schema"]
-    # re-add the same logical name: fresh physical, old bytes stay buried
+    # re-adding the logical name is a schema change an append refuses, so
+    # the retired bytes can never resurrect through it
     extra = _with_date(
         _snap(spark, [(4, "2024-01-03 10:00:00", 4.0, "NEW")])
     )
-    t.write(extra, mode="append", allow_evolution=True)
-    got = {r["customer_id"]: r["note"] for r in t.read().collect()}
-    assert got[4] == "NEW"
-    assert got[1] is None and got[2] is None and got[3] is None  # no resurrection
-    # and the staged file's footer proves the fresh physical name
-    new_files = [f for f in t.read().inputFiles() if "2024-01-03" in f]
-    raw = spark.read.parquet(*new_files)
-    phys = [c for c in raw.columns if c.startswith("note")]
-    assert phys and phys != ["note"]
+    with pytest.raises(ValueError, match="adds columns"):
+        t.write(extra, mode="append")
+    assert "note" not in t.read().columns
 
 
 def test_drop_guards(spark, tmp_path):
@@ -295,7 +290,8 @@ def test_widened_explicit_schema_scan_still_prunes_columns(spark, tmp_path):
 def test_mapping_survives_delta_manifests_and_vacuum_checkpoint(
     spark, tmp_path
 ):
-    t = MTable(spark, str(tmp_path / "chain"), checkpoint_interval=100)
+    t = MTable(spark, str(tmp_path / "chain"))
+    t.checkpoint_interval = 100
     t.write(_with_date(_snap(spark, BASE)), partition_by="date")
     t.rename_column("score", "quality")
     for i in range(3):  # delta commits carry the mapping forward

@@ -1,9 +1,9 @@
-"""mtable additive schema evolution.
+"""mtable schema changes outside a full overwrite.
 
-Add-column commits under ``allow_evolution=True``: old files stay
-byte-identical, every snapshot presents the union schema with typed nulls
-for pre-evolution rows, time travel keeps each version's own schema, and
-non-additive changes (drop/retype) or un-flagged additions still raise.
+Appends, partition overwrites and merges keep the table's column set:
+adding a column or a non-widening retype raises, a lossless up-cast needs
+``allow_widening``, and a full overwrite is the one path that changes the
+schema.
 """
 
 from __future__ import annotations
@@ -28,47 +28,22 @@ def _v2_extra(spark):
     )
 
 
-def test_append_evolves_additively_and_nullfills(spark, tmp_path):
+def test_additive_changes_raise_outside_a_full_overwrite(spark, tmp_path):
     t = MTable(spark, str(tmp_path / "ev"))
     t.write(_v1(spark), partition_by="d")
-    with pytest.raises(ValueError, match="allow_evolution"):
+    with pytest.raises(ValueError, match="adds columns"):
         t.write(_v2_extra(spark), mode="append", partition_by="d")
-    t.write(_v2_extra(spark), mode="append", partition_by="d", allow_evolution=True)
-    m = t._read_manifest(2)
-    assert m["evolved"] is True
-    assert "tier:string" in m["schema"]
-    got = {(r.k, r.v, r.tier, r.d) for r in t.read().collect()}
-    assert got == {
-        (1, 10.0, None, "a"),
-        (2, 20.0, None, "a"),
-        (3, 30.0, None, "b"),
-        (4, 40.0, "low", "b"),
-        (5, 50.0, "high", "c"),
-    }
-    # a selection touching ONLY pre-evolution files still presents the
-    # union schema (typed null column, not a missing one)
-    a_only = t.read(partitions=["a"])
-    assert dict(a_only.dtypes)["tier"] == "string"
-    assert {(r.k, r.tier) for r in a_only.collect()} == {(1, None), (2, None)}
-    # time travel: v1 keeps its own (pre-evolution) schema
-    assert "tier" not in t.read(version=1).columns
-
-
-def test_merge_evolves_and_survivors_take_nulls(spark, tmp_path):
-    t = MTable(spark, str(tmp_path / "evm"))
-    t.write(_v1(spark), partition_by="d")
     upd = spark.createDataFrame(
         [(2, 21.0, "gold")], "k int, v double, tier string"
     )
-    with pytest.raises(ValueError, match="allow_evolution"):
+    with pytest.raises(ValueError, match="add columns"):
         t.merge_upsert(upd, keys=["k"], partition_col_value=F.lit("a"))
-    t.merge_upsert(
-        upd, keys=["k"], partition_col_value=F.lit("a"), allow_evolution=True
-    )
-    got = {(r.k, r.v, r.tier) for r in t.read().collect()}
-    assert got == {(1, 10.0, None), (2, 21.0, "gold"), (3, 30.0, None)}
-    # untouched partition b carried by reference, still readable w/ nulls
-    assert {(r.k, r.tier) for r in t.read(partitions=["b"]).collect()} == {(3, None)}
+    # the refused commits left the table as it was
+    assert t.versions() == [1]
+    assert {(r.k, r.v) for r in t.read().collect()} == {(1, 10.0), (2, 20.0), (3, 30.0)}
+    # a full overwrite replaces the schema
+    t.write(_v2_extra(spark), partition_by="d")
+    assert {(r.k, r.tier) for r in t.read().collect()} == {(4, "low"), (5, "high")}
 
 
 def test_nonadditive_changes_always_raise(spark, tmp_path):
@@ -76,12 +51,12 @@ def test_nonadditive_changes_always_raise(spark, tmp_path):
     t.write(_v1(spark), partition_by="d")
     dropped = spark.createDataFrame([(9, "a")], "k int, d string")
     with pytest.raises(ValueError, match="not additive"):
-        t.write(dropped, mode="append", partition_by="d", allow_evolution=True)
+        t.write(dropped, mode="append", partition_by="d")
     # a retype in the LOSSLESS widening family is no longer categorically
     # refused — but it still raises without the explicit allow_widening flag
     retyped = spark.createDataFrame([(9, 1, "a")], "k int, v int, d string")
     with pytest.raises(ValueError, match="allow_widening"):
-        t.write(retyped, mode="append", partition_by="d", allow_evolution=True)
+        t.write(retyped, mode="append", partition_by="d")
     # a non-widening retype is refused regardless of flags
     restring = spark.createDataFrame([(9, "x", "a")], "k int, v string, d string")
     with pytest.raises(ValueError, match="not additive"):
@@ -89,34 +64,5 @@ def test_nonadditive_changes_always_raise(spark, tmp_path):
             restring,
             mode="append",
             partition_by="d",
-            allow_evolution=True,
             allow_widening=True,
         )
-
-
-def test_full_overwrite_rehomogenizes(spark, tmp_path):
-    t = MTable(spark, str(tmp_path / "evh"))
-    t.write(_v1(spark), partition_by="d")
-    t.write(_v2_extra(spark), mode="append", partition_by="d", allow_evolution=True)
-    assert t._read_manifest(2).get("evolved") is True
-    # compact every partition: all live files rewritten in the union schema
-    v = t.compact(partitions=["a", "b", "c"])
-    m = t._read_manifest(v)
-    assert m.get("evolved") is None  # flag cleared: files homogeneous again
-    got = {(r.k, r.tier) for r in t.read().collect()}
-    assert got == {(1, None), (2, None), (3, None), (4, "low"), (5, "high")}
-
-
-def test_evolution_coexists_with_stats_pruning(spark, tmp_path):
-    t = MTable(spark, str(tmp_path / "evs"))
-    t.write(_v1(spark), partition_by="d", stats_cols=["v"])
-    t.write(
-        _v2_extra(spark),
-        mode="append",
-        partition_by="d",
-        allow_evolution=True,
-        stats_cols=["v"],
-    )
-    pruned = t.read(prune=[("v", ">=", 40.0)])
-    got = {(r.k, r.v, r.tier) for r in pruned.where("v >= 40").collect()}
-    assert got == {(4, 40.0, "low"), (5, 50.0, "high")}

@@ -41,7 +41,9 @@ def _rows(spark, day: str, ids):
 
 def _wide_table(spark, tmp_path, name="wide", days=12, interval=None):
     """One partition per day, seeded in a single full v1 commit."""
-    t = MTable(spark, str(tmp_path / name), checkpoint_interval=interval)
+    t = MTable(spark, str(tmp_path / name))
+    if interval is not None:
+        t.checkpoint_interval = interval
     base = None
     for d in range(1, days + 1):
         day = f"2024-01-{d:02d}"

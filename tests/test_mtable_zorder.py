@@ -30,7 +30,7 @@ def test_zorder_compact_prunes_boxes_and_nonleading_dimension(spark, tmp_path):
     )
     before = {(r.x, r.y, r.payload) for r in t.read().collect()}
 
-    v = t.compact(partitions=["1"], zorder_by=["x", "y"], files_per_partition=16)
+    v = t.compact(zorder_by=["x", "y"], files_per_partition=16)
     assert v == 2
     m = t._read_manifest(v)
     assert m["meta"]["zorder_by"] == ["x", "y"]
@@ -109,53 +109,10 @@ def test_multitask_multipartition_stats_attach_to_the_right_files(spark, tmp_pat
     assert got2 == want and len(want) == 500
 
 
-def test_quantile_zorder_beats_linear_on_skew(spark, tmp_path):
-    """Heavy-tailed x: linear cells cram ~all rows into a few low cells
-    (the tail owns the range), so files stop separating where the data
-    mass is; quantile cells are equal-MASS, so a probe on the dense low
-    region prunes.  Same rows, same prune predicate, strictly fewer files
-    read under method='quantile'."""
-    import random
-
-    rnd = random.Random(11)
-    rows = []
-    for i in range(4096):
-        x = i**3  # dense at the bottom, tail owns 99.9% of the range
-        rows.append((x, rnd.randrange(1024), i, "1"))
-    rnd.shuffle(rows)
-    df = spark.createDataFrame(rows, "x long, y int, payload int, d string")
-
-    def build(name, method):
-        t = MTable(spark, str(tmp_path / name))
-        t.write(df.repartition(4), partition_by="d", stats_cols=["x", "y"])
-        t.compact(
-            partitions=["1"],
-            zorder_by=["x", "y"],
-            files_per_partition=16,
-            zorder_method=method,
-        )
-        return t
-
-    lin = build("lin", "linear")
-    qnt = build("qnt", "quantile")
-    assert qnt._read_manifest(2)["meta"]["zorder_method"] == "quantile"
-    # dense-region probe: x in the bottom 6% of rows but ~0.02% of range
-    pred = [("x", "<=", 250**3)]
-    n_lin = len(lin.read(prune=pred).inputFiles())
-    n_qnt = len(qnt.read(prune=pred).inputFiles())
-    assert n_qnt < n_lin, (n_qnt, n_lin)
-    # values identical through either layout
-    want = {r.payload for r in lin.read().where("x <= 15625000").collect()}
-    got = {r.payload for r in qnt.read(prune=pred).where("x <= 15625000").collect()}
-    assert got == want == set(range(251))
-
-
-def test_zorder_validates_columns_and_exclusivity(spark, tmp_path):
+def test_zorder_validates_columns(spark, tmp_path):
     import pytest
 
     t = MTable(spark, str(tmp_path / "zv"))
-    t.write(_grid_df(spark), partition_by="d")
-    with pytest.raises(ValueError, match="exclusive"):
-        t.compact(partitions=["1"], order_by=["x"], zorder_by=["y"])
+    t.write(_grid_df(spark).repartition(4), partition_by="d")
     with pytest.raises(ValueError, match="not in table"):
-        t.compact(partitions=["1"], zorder_by=["nope"])
+        t.compact(zorder_by=["nope"])

@@ -24,12 +24,16 @@ The walk's rules:
 - The query registry's entries are the functions ``queries.py`` decorates
   with ``@register(...)``; the CLI's entry is ``serving.cli.main``.
 
+Every defaulted parameter of a reached function, method, class
+``__init__`` or dataclass field must be passed by some non-test call site:
+a value no program sets is a constant, not an option.
+
 A second walk starts from the live paths only: the batch jobs, the HTTP app,
 the CLI and the benchmark's non-test files without its registry query mix.
 It prints the live closure's line count, fails if that closure reaches the
-query registry, and fails on any defaulted parameter of a reached function,
-method or class ``__init__`` that no non-test call site passes: a value no
-program sets is a constant, not an option.
+query registry, and fails on any defaulted parameter of live code that every
+non-test call site sets to one and the same literal: an option that only
+ever takes one value is a constant too.
 """
 
 from __future__ import annotations
@@ -59,8 +63,8 @@ _LIVE_PKG_ENTRIES = ("jobs", "serving.app", "serving.cli")
 _LIVE_SCRIPT_DIRS = ("perfbench",)
 _LIVE_DROPPED = ("query_mix", "tool")
 
-# Defaulted parameters of live code that no program passes but that stay,
-# each with its reason, as ``module.function(parameter)``.
+# Defaulted parameters that no program passes but that stay, each with its
+# reason, as ``module.function(parameter)``.
 _ALLOWED_UNSET: dict[str, str] = {
     "session.get_spark(master)": (
         "deployment setting: spark-submit supplies the master on a cluster"
@@ -72,6 +76,10 @@ _ALLOWED_UNSET: dict[str, str] = {
         "deployment setting: the MLflow experiment, where a tracking server exists"
     ),
     "serving.cli.main(argv)": "test seam: the console script parses sys.argv",
+    "sources.mtable.MTable(log_store)": (
+        "commit-protocol seam: a store whose Hadoop create is not atomic "
+        "needs its own put-if-absent; the tests inject a fake"
+    ),
 }
 
 # Package names that only tests reach but that stay, each with its reason.
@@ -396,15 +404,44 @@ def _callee(func: ast.AST) -> str | None:
     return None
 
 
+_NOT_LITERAL = object()
+
+
+def _literal(node: ast.AST):
+    try:
+        return ast.literal_eval(node)
+    except ValueError:
+        return _NOT_LITERAL
+
+
+class _Site:
+    """One non-test call: its positional arguments, keyword names and
+    whether it unpacks ``*args`` or ``**kwargs``."""
+
+    def __init__(self, args: list[ast.expr], keywords: list[ast.keyword]):
+        self.args = args
+        self.keywords = {k.arg: k.value for k in keywords if k.arg}
+        self.unpacks = (any(isinstance(a, ast.Starred) for a in args)
+                        or any(k.arg is None for k in keywords))
+
+    def argument(self, param: str, index: int | None) -> ast.expr | None:
+        """The expression this call passes for ``param``, else None."""
+        if param in self.keywords:
+            return self.keywords[param]
+        if index is not None and len(self.args) > index:
+            return self.args[index]
+        return None
+
+
 @functools.lru_cache(maxsize=1)
-def _call_sites() -> dict[str, list[tuple[int, frozenset[str], bool]]]:
-    """Callee name -> ``(positional arguments, keyword names, unpacks)`` of
-    each call in non-test code (the package and the entry scripts); a
-    ``partial(f, ...)`` counts as a call of ``f``.  Calls match definitions
-    by name only, so a call of any same-named function counts."""
+def _call_sites() -> dict[str, list[_Site]]:
+    """Callee name -> each call of that name in non-test code (the package
+    and the entry scripts); a ``partial(f, ...)`` counts as a call of ``f``.
+    Calls match definitions by name only, so a call of any same-named
+    function counts."""
     paths = [p for p, _ in _package_files().values()]
     paths += _entry_files(_SCRIPT_FILES, _SCRIPT_DIRS)
-    sites: dict[str, list[tuple[int, frozenset[str], bool]]] = {}
+    sites: dict[str, list[_Site]] = {}
     for path in paths:
         with open(path, encoding="utf-8") as f:
             tree = ast.parse(f.read(), filename=path)
@@ -415,12 +452,8 @@ def _call_sites() -> dict[str, list[tuple[int, frozenset[str], bool]]]:
             if _callee(func) == "partial" and args:
                 func, args = args[0], args[1:]
             name = _callee(func)
-            if name is None:
-                continue
-            unpacks = (any(isinstance(a, ast.Starred) for a in args)
-                       or any(k.arg is None for k in node.keywords))
-            keywords = frozenset(k.arg for k in node.keywords if k.arg)
-            sites.setdefault(name, []).append((len(args), keywords, unpacks))
+            if name is not None:
+                sites.setdefault(name, []).append(_Site(args, node.keywords))
     return sites
 
 
@@ -446,7 +479,7 @@ def _function_defaults(fn: ast.AST, skip: int):
             yield arg.arg, None
 
 
-def _live_defaults(w: _Walk):
+def _defaults(w: _Walk):
     """``(label, callee name, parameter, positional index)`` for each
     defaulted parameter of a reached function, method, class ``__init__``
     or dataclass field."""
@@ -480,9 +513,21 @@ def _live_defaults(w: _Walk):
                         yield f"{short}.{n}.{m.name}({p})", m.name, p, i
 
 
-def _passed(sites, param: str, index: int | None) -> bool:
-    return any(unpacks or param in keywords or (index is not None and n_pos > index)
-               for n_pos, keywords, unpacks in sites)
+def _passed(sites: list[_Site], param: str, index: int | None) -> bool:
+    return any(site.unpacks or site.argument(param, index) is not None
+               for site in sites)
+
+
+def _one_literal(sites: list[_Site], param: str, index: int | None) -> bool:
+    """True when every call passes ``param``, each as the same literal."""
+    values = []
+    for site in sites:
+        arg = None if site.unpacks else site.argument(param, index)
+        value = _NOT_LITERAL if arg is None else _literal(arg)
+        if value is _NOT_LITERAL:
+            return False
+        values.append(value)
+    return bool(values) and all(v == values[0] for v in values)
 
 
 def test_every_package_module_is_reached_from_an_entry_point():
@@ -532,18 +577,31 @@ def test_live_closure_stays_off_the_query_registry():
     )
 
 
-def test_live_options_are_set_by_a_program():
-    w = live_walk()
+def test_options_are_set_by_a_program():
+    w = walk()
     sites = _call_sites()
-    defaults = list(_live_defaults(w))
-    assert len(defaults) > len(_ALLOWED_UNSET)  # the walk saw the live code
+    defaults = list(_defaults(w))
+    assert len(defaults) > len(_ALLOWED_UNSET)  # the walk saw the code
     unset = sorted({label for label, callee, p, i in defaults
                     if not _passed(sites.get(callee, ()), p, i)})
     extra = [u for u in unset if u not in _ALLOWED_UNSET]
     assert extra == [], (
-        "defaulted parameters of live code that no job, tool, perfbench or "
-        "bench.py passes (make each a constant, or give it a reason in "
-        f"_ALLOWED_UNSET): {extra}"
+        "defaulted parameters that no job, query, tool, perfbench or "
+        "bench.py passes (delete each with the branches only its other "
+        f"values reach, or make it a constant): {extra}"
     )
     stale = sorted(set(_ALLOWED_UNSET) - set(unset))
     assert stale == [], f"_ALLOWED_UNSET entries that are passed or gone: {stale}"
+
+
+def test_live_options_are_set_by_a_program():
+    w = live_walk()
+    sites = _call_sites()
+    defaults = list(_defaults(w))
+    assert defaults  # the walk saw the live code
+    fixed = sorted({label for label, callee, p, i in defaults
+                    if _one_literal(sites.get(callee, ()), p, i)})
+    assert fixed == [], (
+        "defaulted parameters of live code that every job, tool, perfbench "
+        f"and bench.py call sets to one literal (fold it in): {fixed}"
+    )

@@ -313,7 +313,7 @@ def test_shard_coin_uniform_beyond_256_shards(spark):
     from retailfeaturestore_spark.operators.packing import _shard_col
 
     df = spark.range(4000).select(
-        F.col("id").alias("doc_id"), _shard_col("doc_id", 1024).alias("shard")
+        F.col("id").alias("doc_id"), _shard_col(1024).alias("shard")
     )
     n_high = df.where(F.col("shard") >= 256).count()
     assert n_high > 2000  # ~3/4 of rows under a uniform coin

@@ -25,7 +25,7 @@ class AnyRow:
 def context(log_dir: str, names: list[str]) -> ServingContext:
     return ServingContext(
         service=AnyRow(),
-        model=LinearStubModel(weights=tuple(0.1 for _ in names), bias=0.0),
+        model=LinearStubModel(weights=tuple(0.1 for _ in names)),
         feature_names=names,
         pred_log_dir=log_dir,
     )

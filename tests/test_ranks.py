@@ -12,6 +12,7 @@ boundaries.
 
 from __future__ import annotations
 
+import contextlib
 import random
 
 import pytest
@@ -24,6 +25,19 @@ from retailfeaturestore_spark.operators.ranks import (
 )
 
 
+@contextlib.contextmanager
+def _partitions(spark, n: int):
+    """Run the ranks operators over ``n`` range partitions: they take the
+    session's shuffle partition count."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def _rows(n: int, seed: int, *, negatives: bool = True) -> list[tuple[int, int]]:
     rng = random.Random(seed)
     keys = rng.sample(range(n * 10), n)  # unique -> total order
@@ -34,9 +48,8 @@ def _rows(n: int, seed: int, *, negatives: bool = True) -> list[tuple[int, int]]
 @pytest.mark.parametrize("n_part", [1, 3, 8])
 def test_prefix_sum_matches_global_window(spark, n_part):
     df = spark.createDataFrame(_rows(400, seed=n_part), "k long, v long")
-    got = range_prefix_sum(
-        df, [F.col("k")], F.col("v"), "ps", num_partitions=n_part
-    )
+    with _partitions(spark, n_part):
+        got = range_prefix_sum(df, [F.col("k")], F.col("v"), "ps")
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
     want = df.withColumn("ps", F.sum("v").over(w).cast("long"))
     assert sorted(got.collect()) == sorted(want.collect())
@@ -50,9 +63,8 @@ def test_prefix_sum_survives_exchange_reuse_disabled(spark):
     old = spark.conf.get(key, "true")
     try:
         spark.conf.set(key, "false")
-        got = range_prefix_sum(
-            df, [F.col("k")], F.col("v"), "ps", num_partitions=5
-        ).collect()
+        with _partitions(spark, 5):
+            got = range_prefix_sum(df, [F.col("k")], F.col("v"), "ps").collect()
     finally:
         spark.conf.set(key, old)
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
@@ -66,7 +78,8 @@ def test_exact_ntile_matches_sql_ntile(spark, n, k):
     tile) — exact SQL ntile tile-size semantics, deterministic because the
     ordering is total."""
     df = spark.createDataFrame(_rows(n, seed=n * 31 + k), "k long, v long")
-    got = exact_ntile(df, [F.col("v"), F.col("k")], k, "tile", num_partitions=4)
+    with _partitions(spark, 4):
+        got = exact_ntile(df, [F.col("v"), F.col("k")], k, "tile")
     w = Window.orderBy("v", "k")
     want = df.withColumn("tile", F.ntile(k).over(w).cast("long"))
     assert sorted(got.collect()) == sorted(want.collect())
@@ -79,10 +92,12 @@ def test_ranks_plans_have_no_single_partition_exchange(spark):
     from retailfeaturestore_spark.plans import formatted_plan
 
     df = spark.createDataFrame(_rows(100, seed=1), "k long, v long")
-    for out in (
-        range_prefix_sum(df, [F.col("k")], F.col("v"), "ps", num_partitions=4),
-        exact_ntile(df, [F.col("k")], 4, "tile", num_partitions=4),
-    ):
+    with _partitions(spark, 4):
+        outs = (
+            range_prefix_sum(df, [F.col("k")], F.col("v"), "ps"),
+            exact_ntile(df, [F.col("k")], 4, "tile"),
+        )
+    for out in outs:
         plan = formatted_plan(out)
         assert "SinglePartition" not in plan, plan[:1500]
         assert "windowspecdefinition(__rp_pid" in plan, plan[:1500]
@@ -112,12 +127,9 @@ def test_property_ntile_matches_python(spark, rows, n_part):
     data = [(i, v) for i, (_, v) in enumerate(rows)]
     k = 4
     df = spark.createDataFrame(data, "id long, v long")
-    got = {
-        r.id: r.tile
-        for r in exact_ntile(
-            df, [F.col("v"), F.col("id")], k, "tile", num_partitions=n_part
-        ).collect()
-    }
+    with _partitions(spark, n_part):
+        out = exact_ntile(df, [F.col("v"), F.col("id")], k, "tile")
+    got = {r.id: r.tile for r in out.collect()}
     order = sorted(data, key=lambda t: (t[1], t[0]))
     n = len(order)
     q, rem = divmod(n, k)
@@ -140,12 +152,9 @@ def test_property_prefix_sum_matches_python(spark, rows, n_part):
     any-sign values, arbitrary duplicates in the secondary key."""
     data = [(i, v) for i, (_, v) in enumerate(rows)]
     df = spark.createDataFrame(data, "id long, v long")
-    got = {
-        r.id: r.ps
-        for r in range_prefix_sum(
-            df, [F.col("id")], F.col("v"), "ps", num_partitions=n_part
-        ).collect()
-    }
+    with _partitions(spark, n_part):
+        out = range_prefix_sum(df, [F.col("id")], F.col("v"), "ps")
+    got = {r.id: r.ps for r in out.collect()}
     acc, want = 0, {}
     for i, v in sorted(data):
         acc += v
@@ -170,23 +179,23 @@ def test_exact_ntile_multi_matches_per_spec_ntile(spark, n, k, n_part):
         for i in range(n)
     ]
     df = spark.createDataFrame(rows, "id long, a long, b long, c double")
-    got = exact_ntile_multi(
-        df,
-        [
-            (F.col("a"), True, "ta"),
-            (F.col("b"), False, "tb"),
-            (F.col("c"), False, "tc"),
-        ],
-        k,
-        tiebreak=["id"],
-        carry=["id", "a", "b", "c"],
-        num_partitions=n_part,
-    )
-    want = df
-    for col, asc, out in (("a", True, "ta"), ("b", False, "tb"), ("c", False, "tc")):
-        order = [F.col(col).asc() if asc else F.col(col).desc(), F.col("id")]
-        t = exact_ntile(df, order, k, out, num_partitions=n_part).select("id", out)
-        want = want.join(t, "id")
+    with _partitions(spark, n_part):
+        got = exact_ntile_multi(
+            df,
+            [
+                (F.col("a"), True, "ta"),
+                (F.col("b"), False, "tb"),
+                (F.col("c"), False, "tc"),
+            ],
+            k,
+            tiebreak=["id"],
+            carry=["id", "a", "b", "c"],
+        )
+        want = df
+        for col, asc, out in (("a", True, "ta"), ("b", False, "tb"), ("c", False, "tc")):
+            order = [F.col(col).asc() if asc else F.col(col).desc(), F.col("id")]
+            t = exact_ntile(df, order, k, out).select("id", out)
+            want = want.join(t, "id")
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.select(*got.columns).collect())
     )
@@ -199,13 +208,13 @@ def test_exact_ntile_multi_plan_is_single_fused_exchange(spark):
     from retailfeaturestore_spark.plans import formatted_plan
 
     df = spark.createDataFrame(_rows(100, seed=9), "k long, v long")
-    out = exact_ntile_multi(
-        df,
-        [(F.col("v"), True, "t1"), (F.col("v"), False, "t2")],
-        4,
-        tiebreak=["k"],
-        num_partitions=4,
-    )
+    with _partitions(spark, 4):
+        out = exact_ntile_multi(
+            df,
+            [(F.col("v"), True, "t1"), (F.col("v"), False, "t2")],
+            4,
+            tiebreak=["k"],
+        )
     plan = formatted_plan(out)
     assert "SinglePartition" not in plan, plan[:1500]
     assert plan.count("rangepartitioning") <= 1 or plan.count("RangePartitioning") <= 1
@@ -218,11 +227,9 @@ def test_exact_ntile_multi_long_precision_beyond_double(spark):
     big = 1 << 53
     rows = [(1, big + 1), (2, big), (3, big - 1), (4, 0)]
     df = spark.createDataFrame(rows, "id long, v long")
-    got = {
-        r.id: r.t
-        for r in exact_ntile_multi(
-            df, [(F.col("v"), True, "t")], 4, tiebreak=["id"],
-            carry=["id"], num_partitions=2,
-        ).collect()
-    }
+    with _partitions(spark, 2):
+        out = exact_ntile_multi(
+            df, [(F.col("v"), True, "t")], 4, tiebreak=["id"], carry=["id"]
+        )
+    got = {r.id: r.t for r in out.collect()}
     assert got == {4: 1, 3: 2, 2: 3, 1: 4}

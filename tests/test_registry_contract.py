@@ -4,6 +4,8 @@ refactor cannot silently break the evaluation window."""
 
 from __future__ import annotations
 
+import os
+
 import bench
 from retailfeaturestore_spark.queries import DRIVER_PRIORITY, REGISTRY
 
@@ -85,3 +87,27 @@ def test_bench_evicts_caches_for_graph_and_iterative_queries():
     # the r6 crash query specifically
     assert bench._should_evict(REGISTRY["copurchase_triangles"].tags)
     assert bench._should_evict(REGISTRY["part_similar_by_copurchase"].tags)
+
+
+def test_mtable_query_scratch_root_is_reused_across_sessions(tmp_path, monkeypatch):
+    """Every session (or process) running an mtable-building query gets the
+    same scratch root for a dataset, emptied first: repeated runs leave one
+    table directory per query, not one per run."""
+    import tempfile
+
+    from retailfeaturestore_spark.queries import _q_tmp_root
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    roots = []
+    for run in range(2):  # two sessions, each with no memory of the other
+        root = _q_tmp_root("/data/sf0.01", "fv_build", "rfs_mtable_fv")
+        os.makedirs(root)
+        with open(os.path.join(root, "part-0.parquet"), "w") as f:
+            f.write(str(run))
+        roots.append(root)
+    assert roots[0] == roots[1]
+    assert os.listdir(tmp_path / "rfs_mtable_fv") == [os.path.basename(roots[0])]
+    with open(os.path.join(roots[1], "part-0.parquet")) as f:
+        assert f.read() == "1"  # the second run started from an empty root
+    # another dataset keeps its own root
+    assert _q_tmp_root("/data/sf0.1", "fv_build", "rfs_mtable_fv") != roots[0]

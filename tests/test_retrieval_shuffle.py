@@ -83,23 +83,26 @@ def test_epoch_shuffle_matches_hashlib_and_is_deterministic(spark):
 
 
 def test_hybrid_reuse_persists_halves_and_rebuild_path_matches(spark):
-    """reuse_artifacts=True (registry default) memoizes the two half-
-    rankings in the session registry; reuse_artifacts=False rebuilds from
-    scratch; values identical either way; invalidate_caches evicts."""
+    """The query memoizes the two half-rankings in the session registry;
+    invalidate_caches evicts them and the next call rebuilds from scratch;
+    values identical either way."""
     from retailfeaturestore_spark.queries import (
         invalidate_caches,
         q_hybrid_retrieval_rrf,
     )
 
     invalidate_caches(spark, sf_dir=SF)
-    warm = q_hybrid_retrieval_rrf(spark, SF, reuse_artifacts=True)
+    warm = q_hybrid_retrieval_rrf(spark, SF)
     reg = getattr(spark, "_rfs_persisted", {})
     assert ("hybrid_rrf_lex", SF) in reg and ("hybrid_rrf_dense", SF) in reg
     lex_first = reg[("hybrid_rrf_lex", SF)]
     # second call must reuse the SAME persisted frame, not rebuild
-    q_hybrid_retrieval_rrf(spark, SF, reuse_artifacts=True)
+    q_hybrid_retrieval_rrf(spark, SF)
     assert reg[("hybrid_rrf_lex", SF)] is lex_first
-    cold = q_hybrid_retrieval_rrf(spark, SF, reuse_artifacts=False)
-    assert sorted(map(tuple, warm.collect())) == sorted(map(tuple, cold.collect()))
+    warm_rows = sorted(map(tuple, warm.collect()))
     invalidate_caches(spark, sf_dir=SF)
     assert ("hybrid_rrf_lex", SF) not in getattr(spark, "_rfs_persisted", {})
+    cold = q_hybrid_retrieval_rrf(spark, SF)
+    assert getattr(spark, "_rfs_persisted", {})[("hybrid_rrf_lex", SF)] is not lex_first
+    assert sorted(map(tuple, cold.collect())) == warm_rows
+    invalidate_caches(spark, sf_dir=SF)

@@ -97,14 +97,12 @@ def test_delta_distinct_matches_collect_set(spark):
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
     # the events as feature-family lines: event_type is the distinct key
     lines = ev.select(
-        "event_id", "user_id", "ts", "event_type",
+        "event_id", F.col("user_id").alias("customer_id"),
+        F.col("ts").alias("invoice_date"), F.col("event_type").alias("stock_code"),
         F.lit(False).alias("is_cancel"), F.lit(0.0).alias("line_amount"),
     )
     got = (
-        build_customer_features(
-            lines, windows={"1d": 1, "7d": 7}, entity_col="user_id", ts_col="ts",
-            sku_col="event_type", unique_mode="delta",
-        )
+        build_customer_features(lines, windows={"1d": 1, "7d": 7}, unique_mode="delta")
         .select("event_id", F.col("unique_skus_1d").alias("unique_1d"),
                 F.col("unique_skus_7d").alias("unique_7d"))
         .collect()

@@ -78,7 +78,7 @@ def stub_ctx(tmp_path, monkeypatch):
     ).to_parquet(gold / "part-0.parquet")
     ctx = ServingContext(
         service=OfflineFeatureService(str(gold)),
-        model=LinearStubModel(weights=(0.1, 0.1), bias=0.0),
+        model=LinearStubModel(weights=(0.1, 0.1)),
         feature_names=["spend_30d", "txn_count_30d"],
         pred_log_dir=str(tmp_path / "preds"),
         threshold=0.5,

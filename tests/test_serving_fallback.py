@@ -89,7 +89,7 @@ def test_predict_through_fallback_chain(services, tmp_path):
     fb, _, _ = services
     ctx = ServingContext(
         service=fb,
-        model=LinearStubModel(weights=(0.1, 0.1), bias=0.0),
+        model=LinearStubModel(weights=(0.1, 0.1)),
         feature_names=["spend_30d", "txn_count_30d"],
         pred_log_dir=str(tmp_path / "preds"),
     )
@@ -105,7 +105,7 @@ def test_health_reports_online_and_offline_state(services, gold_dir):
     fb, _, offline = services
     ctx = ServingContext(
         service=fb,
-        model=LinearStubModel(weights=(0.1,), bias=0.0),
+        model=LinearStubModel(weights=(0.1,)),
         feature_names=["spend_30d"],
     )
     h = health_state(ctx)
@@ -116,7 +116,7 @@ def test_health_reports_online_and_offline_state(services, gold_dir):
     h2 = health_state(
         ServingContext(
             service=OfflineFeatureService(gold_dir),
-            model=LinearStubModel(weights=(0.1,), bias=0.0),
+            model=LinearStubModel(weights=(0.1,)),
             feature_names=["spend_30d"],
         )
     )
@@ -127,7 +127,7 @@ def test_debug_endpoints(services, tmp_path):
     fb, _, _ = services
     ctx = ServingContext(
         service=fb,
-        model=LinearStubModel(weights=(0.1,), bias=0.0),
+        model=LinearStubModel(weights=(0.1,)),
         feature_names=["spend_30d"],
         pred_log_dir=str(tmp_path / "preds"),
     )
@@ -159,7 +159,7 @@ def test_app_from_env_builds_context_to_the_fastapi_gate(tmp_path, monkeypatch):
 
     model_dir = tmp_path / "model"
     save_artifacts(
-        str(model_dir), LinearStubModel(weights=(0.1, 0.2), bias=0.0),
+        str(model_dir), LinearStubModel(weights=(0.1, 0.2)),
         ["spend_30d", "txn_count_30d"], {"auc": 0.5},
     )
     gold = tmp_path / "gold"
@@ -218,7 +218,7 @@ def test_failed_log_write_never_fails_the_request(tmp_path):
 
     ctx = ServingContext(
         service=OneRow(),
-        model=LinearStubModel(weights=(0.1,), bias=0.0),
+        model=LinearStubModel(weights=(0.1,)),
         feature_names=["spend_30d"],
         pred_log_dir=str(blocker / "preds"),
     )

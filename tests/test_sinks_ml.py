@@ -164,7 +164,7 @@ def test_pred_log_single_and_bulk(spark, tmp_path):
 
 def test_score_batch_pandas_udf(spark):
     model = ScoredModel(
-        model=LinearStubModel(weights=(0.1, 0.2), bias=0.0),
+        model=LinearStubModel(weights=(0.1, 0.2)),
         feature_names=("f1", "f2"),
     )
     df = spark.createDataFrame(

@@ -144,5 +144,5 @@ def test_tournament_equals_single_window_topk(spark):
     vals = rnd.sample(range(10**9), 5000)
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v long")
     k = 100
-    got = list(kmv_group_sketch_packed(df, "g", "v", k=k, fanout=16).collect()[0].hs)
+    got = list(kmv_group_sketch_packed(df, "g", "v", k=k).collect()[0].hs)
     assert got == _py_sketch(vals, k)

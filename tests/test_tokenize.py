@@ -59,7 +59,7 @@ def test_stats_and_postings_match_direct(spark, docs):
     assert total == 4 + 3 + 1 + 0 + 2
     post = {
         (r["doc_id"], r["term"]): (r["tf"], r["dl"])
-        for r in term_postings(spark, "mem://t", docs=docs).collect()
+        for r in term_postings(spark, "mem://t").collect()
     }
     assert post[(1, "a")] == (2, 4)
     assert post[(2, "b")] == (2, 3)
@@ -73,7 +73,7 @@ def test_stats_and_postings_match_direct(spark, docs):
     assert dfs == {"a": 2, "b": 2, "c": 2}
     # doc 3 is "" (only an empty token) and doc 4 is NULL -> excluded;
     # docs 1, 2, 5 qualify
-    assert n_docs_with_tokens(spark, "mem://t", docs=docs) == 3
+    assert n_docs_with_tokens(spark, "mem://t") == 3
 
 
 def test_invalidate_evicts_all_layers(spark, docs):
@@ -82,7 +82,7 @@ def test_invalidate_evicts_all_layers(spark, docs):
 
     _evict(spark)
     corpus_stats_and_dfs(spark, "mem://t", ("a",), docs=docs)
-    term_postings(spark, "mem://t", docs=docs)
+    term_postings(spark, "mem://t")
     memo = session_memo(spark)
     assert any(k[1] == "mem://t" for k in memo)
     reg = spark._rfs_persisted
@@ -122,14 +122,16 @@ def test_bm25_artifact_path_equals_self_contained(spark):
     assert len(art) > 0
 
 
-def test_bm25_join_path_equals_literal_path(spark):
-    """Forcing the large-vocabulary join path (max_literal_terms=0) must
+def test_bm25_join_path_equals_literal_path(spark, monkeypatch):
+    """Forcing the large-vocabulary join path (BM25_MAX_LITERAL_TERMS=0) must
     not change a single row vs the literal map-side path."""
     from retailfeaturestore_spark.io import load_table
+    from retailfeaturestore_spark.operators import retrieval
     from retailfeaturestore_spark.operators.retrieval import bm25_topk
 
     docs = load_table(spark, SF, "documents")
     qt = [(0, "hash"), (0, "join"), (1, "dup")]
     lit_rows = bm25_topk(docs, qt, k=5).collect()
-    join_rows = bm25_topk(docs, qt, k=5, max_literal_terms=0).collect()
+    monkeypatch.setattr(retrieval, "BM25_MAX_LITERAL_TERMS", 0)
+    join_rows = bm25_topk(docs, qt, k=5).collect()
     assert sorted(map(tuple, lit_rows)) == sorted(map(tuple, join_rows))

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from retailfeaturestore_spark.operators.window_features import build_customer_features
@@ -185,7 +186,7 @@ def test_label_fold_matches_join_formulation(spark):
     feats = build_customer_features(
         spark.createDataFrame(rows, BRONZE_SCHEMA), windows={"1d": 1}
     )
-    joined = build_training_set(feats, lab.withColumnRenamed("churn", "churn_30d"))
+    joined = build_training_set(feats, lab.withColumnRenamed("churn", "churn_30d"), [])
     cols = ["customer_id", "t_ref", "txn_count_1d", "tenure_days", "churn"]
     a = sorted(map(tuple, folded.select(cols).collect()))
     b = sorted(map(tuple, joined.withColumnRenamed("churn_30d", "churn").select(cols).collect()))
@@ -193,33 +194,35 @@ def test_label_fold_matches_join_formulation(spark):
 
 
 def test_column_names_with_a_space_and_a_dot(spark):
-    """Every caller-supplied column name is quoted in the rendered plan: the
-    entity, timestamp and SKU columns renamed to names that hold a space
-    and a dot give the same rows, for every engine and option."""
+    """Every caller-supplied column name is quoted in the rendered plan: a
+    carried column and the label events' timestamp renamed to names that
+    hold a space and a dot give the same rows, for every engine and
+    option."""
     rows = [
         (1, ts("2024-01-01 10:00:00"), "A", False, 10.0),
         (1, ts("2024-01-01 10:00:00"), "B", True, 5.0),
         (1, ts("2024-01-03 09:00:00"), "A", False, 2.5),
         (2, ts("2024-01-02 12:00:00"), "C", False, 7.0),
     ]
-    df = spark.createDataFrame(rows, BRONZE_SCHEMA)
+    df = spark.createDataFrame(rows, BRONZE_SCHEMA).withColumn(
+        "note", F.concat(F.lit("n"), F.col("stock_code"))
+    )
     labels = spark.createDataFrame([(1, ts("2024-01-02 00:00:00"))], "customer_id int, ts timestamp")
-    names = {"customer_id": "cust id.no", "invoice_date": "invoice date.ts",
-             "stock_code": "stock code.sku", "ts": "label ts.at"}
-    renamed = {"entity_col": names["customer_id"], "ts_col": names["invoice_date"],
-               "sku_col": names["stock_code"]}
+    names = {"note": "note id.no", "ts": "label ts.at"}
     for kw in (
-        {"unique_mode": "delta", "carry_cols": ("line_amount",)},
+        {"unique_mode": "delta", "carry_cols": ("note",)},
         {"unique_mode": "delta", "label_events": labels, "label_ts_col": "ts"},
-        {"unique_mode": "set", "carry_cols": ("line_amount",)},
+        {"unique_mode": "set", "carry_cols": ("note",)},
         {"unique_mode": "set"},
     ):
         want = build_customer_features(df, windows={"1d": 1, "7d": 7}, **kw)
         if "label_events" in kw:
             kw = {**kw, "label_events": labels.withColumnsRenamed(names),
                   "label_ts_col": names["ts"]}
+        if "carry_cols" in kw:
+            kw = {**kw, "carry_cols": (names["note"],)}
         got = build_customer_features(
-            df.withColumnsRenamed(names), windows={"1d": 1, "7d": 7}, **renamed, **kw
+            df.withColumnsRenamed(names), windows={"1d": 1, "7d": 7}, **kw
         )
         assert got.columns == [names.get(c, c) for c in want.columns]
         assert sorted(map(tuple, got.collect()), key=repr) == sorted(

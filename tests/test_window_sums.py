@@ -13,6 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
+from retailfeaturestore_spark.operators import window_features
 from retailfeaturestore_spark.operators.window_features import (
     build_customer_features,
     user_activity_features,
@@ -114,16 +115,15 @@ event = st.tuples(
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(event, min_size=1, max_size=30))
-def test_user_activity_sums_match_numpy_oracle(spark, events):
+def test_user_activity_sums_match_numpy_oracle(spark, monkeypatch, events):
     """Counts, the NULL-aware value sum (a window of NULL values sums to
     NULL, as a bounded SUM) and the error rate over NULL event types."""
     rows = [
         (u, BASE + timedelta(microseconds=us), et, None if v is None else v / 1e6)
         for u, us, et, v in events
     ]
-    got = user_activity_features(
-        spark.createDataFrame(rows, EVENTS_SCHEMA), windows=WINDOWS
-    ).collect()
+    monkeypatch.setattr(window_features, "USER_ACTIVITY_WINDOWS", WINDOWS)
+    got = user_activity_features(spark.createDataFrame(rows, EVENTS_SCHEMA)).collect()
     uid = np.array([r[0] for r in rows])
     us = np.array([_us(r[1]) for r in rows], dtype=np.int64)
     err = np.array([r[2] == "error" for r in rows])
@@ -175,7 +175,7 @@ def _sliding_functions(plan: str) -> list[str]:
     return out
 
 
-def test_family_is_one_exchange_one_window_and_no_sliding_integer_sum(spark):
+def test_family_is_one_exchange_one_window_and_no_sliding_integer_sum(spark, monkeypatch):
     """The prefix-difference frames share the family's (entity, ts) spec:
     one hash exchange, and one WindowExec for the family (the delta W3
     engine adds its lag and delta passes).  No integer SUM runs over a
@@ -193,7 +193,8 @@ def test_family_is_one_exchange_one_window_and_no_sliding_integer_sum(spark):
         assert set(_sliding_functions(plan)) == sliding, plan
         assert "RangeFrame, unboundedpreceding$(), -86400000001" in plan
     events = spark.createDataFrame([(1, BASE, "view", 1.0)], EVENTS_SCHEMA)
-    plan = _plan(user_activity_features(events, windows=WINDOWS))
+    monkeypatch.setattr(window_features, "USER_ACTIVITY_WINDOWS", WINDOWS)
+    plan = _plan(user_activity_features(events))
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
     assert set(_sliding_functions(plan)) == {"collect_set"}, plan
