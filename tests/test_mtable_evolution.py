@@ -28,22 +28,33 @@ def _v2_extra(spark):
     )
 
 
-def test_additive_changes_raise_outside_a_full_overwrite(spark, tmp_path):
+def test_append_evolves_additively_and_nullfills(spark, tmp_path):
+    # an append that adds a column raises; only a full overwrite evolves
     t = MTable(spark, str(tmp_path / "ev"))
     t.write(_v1(spark), partition_by="d")
     with pytest.raises(ValueError, match="adds columns"):
         t.write(_v2_extra(spark), mode="append", partition_by="d")
+    # the refused commit left the table as it was
+    assert t.versions() == [1]
+    assert "tier" not in t.read().columns
+    assert {(r.k, r.v) for r in t.read().collect()} == {(1, 10.0), (2, 20.0), (3, 30.0)}
+    # a full overwrite replaces the schema
+    t.write(_v2_extra(spark), partition_by="d")
+    assert {(r.k, r.tier) for r in t.read().collect()} == {(4, "low"), (5, "high")}
+
+
+def test_merge_evolves_and_survivors_take_nulls(spark, tmp_path):
+    # a merge that adds a column raises and commits nothing
+    t = MTable(spark, str(tmp_path / "evm"))
+    t.write(_v1(spark), partition_by="d")
     upd = spark.createDataFrame(
         [(2, 21.0, "gold")], "k int, v double, tier string"
     )
     with pytest.raises(ValueError, match="add columns"):
         t.merge_upsert(upd, keys=["k"], partition_col_value=F.lit("a"))
-    # the refused commits left the table as it was
     assert t.versions() == [1]
     assert {(r.k, r.v) for r in t.read().collect()} == {(1, 10.0), (2, 20.0), (3, 30.0)}
-    # a full overwrite replaces the schema
-    t.write(_v2_extra(spark), partition_by="d")
-    assert {(r.k, r.tier) for r in t.read().collect()} == {(4, "low"), (5, "high")}
+    assert {r.k for r in t.read(partitions=["b"]).collect()} == {3}
 
 
 def test_nonadditive_changes_always_raise(spark, tmp_path):
