@@ -70,7 +70,6 @@ HEADLINE = [
     "dedup_clusters",
     "dedup_edit_distance",
     "approx_distinct_users_daily",
-    "feature_view_build_set",
     "decayed_user_value",
     "rfm_segments",
     "qty_price_correlation",
@@ -92,7 +91,6 @@ HEADLINE = [
     "model_eval_auc",
     "model_calibration_bins",
     "xlsx_ingest_normalize",
-    "dedup_clusters_star",
     "doc_chunk_overlap",
     "corpus_token_budget_sample",
     "text_pii_scrub",
@@ -569,10 +567,10 @@ def _persist_full_record(full: dict) -> None:
 
 
 def _load_prev_headline_names() -> list[str]:
-    """The previous round's compact-line headline names (the dict the
-    driver's PERF diff compares), from the driver's parsed BENCH_r{N}.json
-    — strictly prior rounds only, most recent first.  Empty when no prior
-    driver record exists; errors degrade to the bare slowest-12."""
+    """The previous round's compact-line headline names that are still
+    registered, from the parsed record of BENCH_r{N}.json — strictly prior
+    rounds only, most recent first.  Empty when no prior record exists;
+    errors degrade to the bare slowest-12."""
     cur = _current_round()
     for n, path in sorted(
         _bench_round_files("BENCH_r*.json"), key=lambda t: -t[0]
@@ -584,7 +582,7 @@ def _load_prev_headline_names() -> list[str]:
                 parsed = json.load(f).get("parsed") or {}
             q = parsed.get("queries") if isinstance(parsed, dict) else None
             if q:
-                return list(q)
+                return [n for n in q if n in REGISTRY]
         except (OSError, ValueError):
             continue
     return []

@@ -36,8 +36,10 @@ def build_training_set(
 ) -> DataFrame:
     """J1 inner equi-join of the feature view with the ``churn_30d`` label
     spine on ``(customer_id, t_ref)``, plus the frozen-contract one-hot of
-    ``country`` over ``cat_categories`` (none when the list is empty).  The labels are unique on the keys (both interval-label
-    operators dedupe internally), so the label side runs no ``distinct()``.
+    ``country`` over ``cat_categories`` (none when the list is empty).  The
+    labels are unique on the keys (``pit.interval_existence_labels`` dedupes
+    duplicate ``(key, ts)`` spine rows), so the label side runs no
+    ``distinct()``.
     """
     keys = ["customer_id", "t_ref"]
     out = features.join(labels.select(*keys, "churn_30d"), keys, "inner")

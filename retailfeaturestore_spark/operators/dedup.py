@@ -15,7 +15,7 @@ Four families, each chosen for a different scale/recall tradeoff:
 - **inverted-index exact Jaccard**: shared-shingle candidate join (posting
   lists), then exact Jaccard.  Recall-exact baseline.
 - **SimHash**: per-word hash bits weighted by term frequency -> 32-bit
-  signature; near-dups = small Hamming distance, candidates via 8-bit
+  signature; near-dups = small Hamming distance, candidates via 16-bit
   signature bands.
 
 All hashing is md5-based so the DuckDB differential oracle reproduces results
@@ -119,18 +119,19 @@ def dedup_exact(docs: DataFrame) -> DataFrame:
     )
 
 
-def containment_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    max_df: int = 20,
-    thr_num: int = 4,
-    thr_den: int = 5,
-    cache_scope: str | None = None,
-) -> DataFrame:
+# containment_pairs: word n-gram shingles, the rare-shingle document
+# frequency cap, and the containment threshold as an integer ratio
+CONTAINMENT_NGRAM = 3
+CONTAINMENT_MAX_DF = 20
+CONTAINMENT_THR_NUM, CONTAINMENT_THR_DEN = 4, 5
+
+
+def containment_pairs(docs: DataFrame, cache_scope: str | None = None) -> DataFrame:
     """Asymmetric shingle-containment near-dup pairs: directed ``(inner,
     outer)`` rows where ``C(inner -> outer) = |S(inner) ∩ S(outer)| /
-    |S(inner)| >= thr_num/thr_den`` over the RARE-shingle subspace
-    (corpus document frequency <= ``max_df``).
+    |S(inner)| >= CONTAINMENT_THR_NUM / CONTAINMENT_THR_DEN`` over the
+    RARE-shingle subspace (corpus document frequency <=
+    ``CONTAINMENT_MAX_DF``) of word ``CONTAINMENT_NGRAM``-gram shingles.
 
     Containment is the dedup measure Jaccard-based MinHash structurally
     misses: a small document pasted inside a much larger one has Jaccard
@@ -138,9 +139,9 @@ def containment_pairs(
     containment ~ 1.0.  Broder's original resemblance/containment split;
     no analogue in the reference (pandas rows, ``/root/reference/jobs``).
 
-    The ``max_df`` cap serves double duty: it bounds the posting-list
-    self-join (no quadratic blowup on
-    boilerplate shingles shared by thousands of docs), and it makes the
+    The document-frequency cap serves double duty: it bounds the
+    posting-list self-join (no quadratic blowup on boilerplate shingles
+    shared by thousands of docs), and it makes the
     measure boilerplate-insensitive — a shared navigation header should
     not make every page "contained" in every other.  Restricting BOTH the
     overlap numerator and the |S(inner)| denominator to rare shingles
@@ -157,12 +158,12 @@ def containment_pairs(
     replace-on-re-entry).  The overlap self-join keys on the digest both
     sides are already hash-partitioned by, and the (inner, outer) rollup
     plus the two size joins move only id/long rows bounded by
-    O(rare-postings x max_df).  Threshold compares as integers
-    (``overlap * thr_den >= n_inner * thr_num``); the reported ratio is a
+    O(rare-postings x cap).  Threshold compares as integers
+    (``overlap * den >= n_inner * num``); the reported ratio is a
     single long/long IEEE division — bit-identical across engines.
     """
     post = (
-        shingle_docs(docs, n)
+        shingle_docs(docs, CONTAINMENT_NGRAM)
         .select("id", F.explode("__sh").alias("sh"))
         .select("id", F.md5("sh").alias("shd"))
     )
@@ -173,7 +174,7 @@ def containment_pairs(
     # the cap exists to defuse must not be paid computing the cap.
     dfreq = post.groupBy("shd").agg(F.count(F.lit(1)).cast("long").alias("__df"))
     rare = post.join(
-        dfreq.where(F.col("__df") <= max_df).select("shd"), "shd", "left_semi"
+        dfreq.where(F.col("__df") <= CONTAINMENT_MAX_DF).select("shd"), "shd", "left_semi"
     )
     if cache_scope is not None:
         from pyspark import StorageLevel
@@ -199,7 +200,7 @@ def containment_pairs(
             rsz.select(F.col("id").alias("doc_outer"), F.col("n_rare").alias("n_outer")),
             "doc_outer",
         )
-        .where(F.col("overlap") * thr_den >= F.col("n_inner") * thr_num)
+        .where(F.col("overlap") * CONTAINMENT_THR_DEN >= F.col("n_inner") * CONTAINMENT_THR_NUM)
         .select(
             "doc_inner",
             "doc_outer",
@@ -248,10 +249,14 @@ def band_rows(sigs: DataFrame, k: int = 12, bands: int = 4) -> DataFrame:
     ).select("id", F.col("__bb.band").alias("band"), F.col("__bb.band_key").alias("band_key"))
 
 
-def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+# the least word-trigram Jaccard a jaccard_pairs_exact pair has
+JACCARD_THRESHOLD = 0.5
+
+
+def jaccard_pairs_exact(docs: DataFrame) -> DataFrame:
     """Exact word-trigram Jaccard over inverted-index candidates: explode
     distinct shingles, self-join the posting lists (pairs sharing >= 1
-    shingle).
+    shingle), keep pairs at or above ``JACCARD_THRESHOLD``.
 
     Jaccard = |A ∩ B| / (|A| + |B| - |A ∩ B|) over integer counts —
     engine-exact arithmetic.
@@ -280,7 +285,7 @@ def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
             F.col("n_int").cast("double")
             / (F.col("n_a") + F.col("n_b") - F.col("n_int")).cast("double"),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
     )
     return out
@@ -289,6 +294,9 @@ def jaccard_pairs_exact(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
 # --- SimHash ---------------------------------------------------------------
 
 SIMHASH_BITS = 32
+# simhash_pairs: signature bands (16-bit band keys) and the Hamming cut
+SIMHASH_BANDS = 2
+SIMHASH_MAX_HAMMING = 3
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
@@ -328,17 +336,13 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return sums.select(F.col("doc_id"), sig.alias("simhash"))
 
 
-def simhash_pairs(
-    sigs: DataFrame,
-    max_hamming: int = 6,
-    bands: int = 4,
-    cache_scope: str | None = None,
-) -> DataFrame:
-    """Near-dup pairs by Hamming distance over SimHash signatures.
+def simhash_pairs(sigs: DataFrame, cache_scope: str | None = None) -> DataFrame:
+    """Near-dup pairs by Hamming distance (at most ``SIMHASH_MAX_HAMMING``)
+    over SimHash signatures.
 
-    Candidates: split the 32-bit signature into ``bands`` bands; any exact
-    band match -> candidate (guarantees recall for hamming <= bands-1 by
-    pigeonhole, probabilistic beyond).  Then exact Hamming filter.
+    Candidates: split the 32-bit signature into ``SIMHASH_BANDS`` bands; any
+    exact band match -> candidate (guarantees recall for hamming <= bands-1
+    by pigeonhole, probabilistic beyond).  Then exact Hamming filter.
 
     Scale shape: the band rows come from ONE explode over the signature
     table (not a bands-way union, which would re-run the signature
@@ -350,7 +354,7 @@ def simhash_pairs(
     ``bit_count(sig_a XOR sig_b)`` on the parsed 32-bit values — one
     integer op per candidate instead of 32 per-character compares.
     """
-    width = SIMHASH_BITS // bands
+    width = SIMHASH_BITS // SIMHASH_BANDS
     if cache_scope is not None:
         from pyspark import StorageLevel
 
@@ -368,7 +372,7 @@ def simhash_pairs(
                         F.lit(b).alias("band"),
                         F.substring("simhash", b * width + 1, width).alias("band_key"),
                     )
-                    for b in range(bands)
+                    for b in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("__bk"),
@@ -397,12 +401,12 @@ def simhash_pairs(
     )
     return (
         cand.withColumn("hamming", ham.cast("long"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
 
-# round cap of both connected-components loops
+# round cap of the connected-components loop
 CC_MAX_ITER = 25
 
 
@@ -410,120 +414,42 @@ def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    algorithm: str = "propagation",
 ) -> DataFrame:
     """Cluster the near-dup pair graph: (id, cluster_id) with cluster_id =
     the minimum id reachable through the undirected edge set.
 
-    Two engines behind one interface (select with ``algorithm``):
+    Large-star/small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC'14).  Each round: LARGE-STAR links every
+    neighbor larger than u to u's neighborhood minimum; SMALL-STAR re-points
+    u and its not-larger neighbors at that minimum.  Alternating the two
+    contracts component diameter geometrically, so rounds are O(log^2 n)
+    even on adversarial chain graphs where min-label propagation needs
+    O(diameter) rounds (tests/test_dedup_similarity.py asserts the round
+    count on a path graph).  All shuffles carry (long, long) edges;
+    convergence is detected by testing the star-forest property directly
+    (every child one parent, no parent itself a child) — the property holds
+    exactly at the fixpoint, so the loop stops the round it is reached.
+    Each round is ``localCheckpoint``-ed so the plan stays O(1) per round,
+    and the Spark driver reads one scalar row per round — the data never
+    leaves the cluster.  ``CC_MAX_ITER`` rounds that end before the fixpoint
+    raise rather than return partial labels.  The returned DataFrame carries the
+    round count as ``df._cc_rounds`` for observability.
 
-    - ``"propagation"`` (default): each round every vertex takes the min of
-      its own label and its neighbors' labels; converges in O(graph
-      diameter) rounds (near-dup clusters are shallow — single-digit rounds
-      in practice).  Each round is one join + one partial-aggregating
-      groupBy, both shuffling only (id, label) longs.
-    - ``"star"``: the large-star/small-star rewrite (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond", SoCC'14) — each round
-      rewires edges toward per-neighborhood minima, halving component
-      diameter, so rounds are O(log^2 n) EVEN on adversarial chain graphs
-      where propagation needs O(n) rounds (tests/test_dedup_similarity.py
-      asserts the round counts on a path graph).
-
-    Both loops ``localCheckpoint`` per round so the plan stays O(1) per
-    round instead of growing exponentially, and the driver reads ONE scalar
-    per round (changed-count / edge-set fingerprint) — the data never
-    leaves the cluster.  The returned DataFrame carries the round count as
-    ``df._cc_rounds`` for observability.
+    At the fixpoint the edge set is a star forest (child -> component min),
+    so labels read off directly; roots (minima) label themselves.
 
     The dedup use: group mutually-similar documents, keep
     ``cluster_id == id`` as the canonical survivor.
     """
-    if algorithm == "star":
-        return _cc_star(pairs, a_col, b_col)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
-    # Materialize the edge set ONCE — it is consumed every round, and an
-    # unmaterialized lineage would re-execute the whole upstream pipeline
-    # (shingle -> minhash -> verify) per iteration.
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    rounds = 0
-    for _round in range(CC_MAX_ITER):
-        neighbor_min = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .select(F.col("dst").alias("id"), F.col("label"))
-            .unionByName(labels)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
-        # r14 NOTE (measured rejection, guide §1): making this checkpoint
-        # LAZY so the changed-count aggregate's job materializes it (one
-        # driver barrier per round instead of two) measured a wash —
-        # run-1 job wall-sum 5.67 s lazy vs 5.34 s eager, 37 vs 39 jobs
-        # (plans/r14/cc_lazy_checkpoint_ab.txt).  The per-round cost is
-        # the 32-task stages over the small label frame (per-task launch
-        # overhead), not the job submissions; merging barriers moves the
-        # wall between job labels without removing it.  Kept eager.
-        merged = (
-            neighbor_min.alias("n")
-            .join(labels.alias("o"), "id")
-            .select(
-                "id",
-                F.col("n.label").alias("label"),
-                (F.col("n.label") < F.col("o.label")).cast("long").alias("__chg"),
-            )
-        ).localCheckpoint()
-        changed = merged.agg(F.sum("__chg")).collect()[0][0]
-        labels = merged.select("id", "label")
-        rounds = _round + 1
-        if not changed:
-            break
-    out = labels.select(F.col("id"), F.col("label").alias("cluster_id"))
-    out._cc_rounds = rounds
-    return out
-
-
-def _cc_star(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al., SoCC'14).
-
-    Each round: LARGE-STAR links every neighbor larger than u to u's
-    neighborhood minimum; SMALL-STAR re-points u and its not-larger
-    neighbors at that minimum.  Alternating the two contracts component
-    diameter geometrically, so chains converge in O(log^2 n) rounds.  All
-    shuffles carry (long, long) edges; convergence is detected by testing
-    the star-forest property directly (every child one parent, no parent
-    itself a child) — the property holds exactly at the fixpoint, so the
-    loop stops the round it is reached instead of paying a no-op round
-    for an edge-set-compare to notice.  One scalar row per round to the
-    driver, like the propagation loop's changed-counter.
-
-    At the fixpoint the edge set is a star forest (child -> component min),
-    so labels read off directly; roots (minima) label themselves.
-    """
     # Materialize the raw pair projection ONCE: edges and nodes both
     # derive from it, and checkpointing each separately executed the whole
-    # upstream candidate pipeline (shingle -> minhash -> verify) twice —
-    # that double execution, not the star rounds, was most of the
-    # star-vs-propagation gap on the bench graph.
+    # upstream candidate pipeline (shingle -> minhash -> verify) twice.
     raw = pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")).localCheckpoint()
     edges = raw.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
     # Node set from the UNFILTERED pairs: a doc appearing only in a
     # degenerate self-pair (u == v) has no surviving edge but must still
-    # self-label, matching the propagation engine whose symmetrized edge
-    # set keeps src == dst rows (ADVICE r3).  Lazy — read from the raw
-    # checkpoint once, at the final left-anti.
+    # self-label.  Lazy — read from the raw checkpoint once, at the final
+    # left-anti.
     nodes = (
         raw.select(F.col("u").alias("id"))
         .unionByName(raw.select(F.col("v").alias("id")))
@@ -599,19 +525,21 @@ def _cc_star(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
         )
         return not bad.take(1)
 
-    rounds = 0
     for i in range(CC_MAX_ITER):
         edges = small_star(large_star(edges)).localCheckpoint()
-        rounds = i + 1
         if is_star_forest(edges):
             break
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in CC_MAX_ITER={CC_MAX_ITER} rounds"
+        )
 
     lab = edges.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("cluster_id"))
     roots = nodes.join(lab, "id", "left_anti").select(
         "id", F.col("id").alias("cluster_id")
     )
     out = lab.unionByName(roots)
-    out._cc_rounds = rounds
+    out._cc_rounds = i + 1
     return out
 
 
@@ -705,12 +633,19 @@ def _dup_span_frames(docs: DataFrame, n: int) -> tuple[DataFrame, DataFrame]:
     )
     dup = grams.join(dup_grams.hint("shuffle_hash"), "gram").select("doc_id", "s")
     return base, merge_positions_to_spans(dup, n)
-def repeated_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
+
+
+# the token n-gram length of substring dedup
+REPEATED_NGRAM_N = 8
+
+
+def repeated_ngram_spans(docs: DataFrame) -> DataFrame:
     """Substring-level exact dedup statistics (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better"): mark every
-    token position whose n-gram occurs MORE THAN ONCE corpus-wide
-    (including self-repetition within one document), merge the per-document
-    duplicate positions into maximal overlapping spans, and report
+    token position whose ``REPEATED_NGRAM_N``-gram occurs MORE THAN ONCE
+    corpus-wide (including self-repetition within one document), merge the
+    per-document duplicate positions into maximal overlapping spans, and
+    report
     ``(doc_id, n_tokens, n_dup_spans, dup_tokens, dup_ratio)`` for EVERY
     document — the "what would substring dedup remove" audit that document-
     level MinHash/SimHash/containment structurally cannot see (a paragraph
@@ -726,7 +661,7 @@ def repeated_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     doc-keyed.  All span arithmetic is integer-exact; the single division
     per doc is exact-input IEEE.
     """
-    base, spans = _dup_span_frames(docs, n)
+    base, spans = _dup_span_frames(docs, REPEATED_NGRAM_N)
     islands = (
         spans.groupBy("doc_id")
         .agg(
@@ -750,7 +685,7 @@ def repeated_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
-def remove_repeated_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
+def remove_repeated_ngram_spans(docs: DataFrame) -> DataFrame:
     """The actionable half of substring dedup: REWRITE every document with
     its corpus-duplicated n-gram spans removed — ``(doc_id, n_tokens,
     kept_tokens, clean_text)``.  Every doc survives (a fully-duplicated doc
@@ -763,5 +698,5 @@ def remove_repeated_ngram_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     drops covered positions inside whole-stage codegen — no UDF, no
     explode of the token stream, no extra exchange beyond the span
     engine's two."""
-    base, spans = _dup_span_frames(docs, n)
+    base, spans = _dup_span_frames(docs, REPEATED_NGRAM_N)
     return apply_span_removal(base, spans)

@@ -192,35 +192,3 @@ def interval_existence_labels(
     )
     return out
 
-
-def interval_existence_labels_self(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    horizon_days: int,
-    label_col: str = "churn",
-) -> DataFrame:
-    """J2 special case where the spine and the event stream are the SAME
-    table (e.g. churn labels over the orders table itself): the union in
-    :func:`interval_existence_labels` becomes redundant — every row is both
-    a spine point and an event — so the whole label build is one window
-    over one scan (half the window input, one fewer subtree).  Semantics
-    identical to the general form: an event strictly after ``t`` within
-    ``(t, t + horizon]`` counts; duplicate ``(key, ts)`` spine rows are
-    deduped inside the same key clustering."""
-    horizon_us = horizon_days * 86_400 * MICROS
-    base = df.select(F.col(key), F.col(ts_col).alias("__t")).withColumn(
-        "__ts_us", epoch_us("__t")
-    )
-    w = Window.partitionBy(key).orderBy("__ts_us").rangeBetween(1, horizon_us)
-    w_dedupe = Window.partitionBy(key, "__ts_us").orderBy("__ts_us")
-    return (
-        base.withColumn("__n_future", F.count(F.lit(1)).over(w))
-        .withColumn("__rn", F.row_number().over(w_dedupe))
-        .where(F.col("__rn") == 1)
-        .select(
-            F.col(key),
-            F.col("__t").alias("t_ref"),
-            F.when(F.col("__n_future") > 0, F.lit(0)).otherwise(F.lit(1)).alias(label_col),
-        )
-    )

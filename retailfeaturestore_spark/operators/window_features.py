@@ -16,19 +16,18 @@ output row per input event:
 The reference computes these in a Python per-customer groupby loop with pandas
 rolling frames — its scalability cliff.  Here the whole family is a single
 window-function pass: ONE shuffle on the entity key, one sort, and every
-window frame over it, all inside whole-stage codegen (except ``collect_set``
-buffers).  Equal-timestamp ties follow SQL range-frame semantics (all rows at
-the same event time see the same window) — a documented, deliberate divergence
-from pandas positional rolling (SURVEY.md §2.4 tie caveat); the DuckDB oracle
-agrees with this engine.
+window frame over it, all inside whole-stage codegen.  Equal-timestamp ties
+follow SQL range-frame semantics (all rows at the same event time see the
+same window) — a documented, deliberate divergence from pandas positional
+rolling (SURVEY.md §2.4 tie caveat); the DuckDB oracle agrees with this
+engine.
 
 Scale notes (100 TB):
 - Range-frame bounds are in MICROSECONDS over ``unix_micros(ts)`` so
   sub-second event times are exact (casting to seconds would truncate).
-- The per-frame ``collect_set`` state for W3 is bounded by per-entity distinct
-  SKUs inside the window horizon; whale entities use the default
-  ``unique_mode="delta"`` (exact interval-delta running sums, O(1) per-row
-  state), or pre-aggregate to (entity, sku, day) grain first.
+- W3 is the exact interval-delta distinct count (``operators.windowed_distinct``):
+  running sums with O(1) per-row state, so a whale entity with millions of
+  distinct SKUs inside a window holds no per-row set.
 - AQE skew-join/partition handling covers entity-key skew; no salting needed
   for window ops (Spark windows don't support partial aggregation anyway, so
   the mitigation for a pathological whale is the day-grain pre-aggregation).
@@ -169,8 +168,8 @@ def _spread_entity(df: DataFrame, entity: str) -> str:
 def build_customer_features(
     bronze: DataFrame,
     windows: dict[str, int] | None = None,
-    unique_mode: str = "delta",
-    carry_cols: tuple[str, ...] | None = None,
+    *,
+    carry_cols: tuple[str, ...],
     label_events: DataFrame | None = None,
     label_ts_col: str = "ts",
     label_horizon_days: int = 30,
@@ -184,14 +183,8 @@ def build_customer_features(
     parameterized exactly like the reference's ``WINDOWS = ["1D","7D","30D"]``
     (``jobs/build_feature_views.py:7``).
 
-    ``unique_mode`` selects the W3 distinct-count engine: ``"delta"``
-    (default: exact interval-delta running sums, O(1) per-row state — safe
-    for whale entities at 100 TB, see ``operators.windowed_distinct``),
-    or ``"set"`` (``collect_set`` window state — exact and ~1.5x faster at
-    retail cardinalities, but per-row set state is the known memory cliff
-    when one entity sees millions of distinct keys inside a window).  Both
-    produce the same columns and values.  The default is the engine that
-    cannot fall over — callers that know their cardinality opt into "set".
+    W3 is the exact interval-delta distinct count (running sums, O(1)
+    per-row state, see ``operators.windowed_distinct``).
 
     ``label_events`` (optional) folds an interval-existence churn label (J2,
     ``operators.pit`` semantics: ``label = 1`` iff NO event in ``(t_ref,
@@ -210,20 +203,17 @@ def build_customer_features(
     ``jobs/make_training_and_train.py:26-46``: the lookup is against the
     full orders table).
 
-    ``carry_cols`` (optional) names the bronze columns to carry into the
-    output besides the keys and features; the rest are dropped.  In delta
-    mode this trims the struct riding the interval-delta explode (Catalyst's
-    nested pruning cannot reach inside the Generate's array-of-struct, so an
-    untrimmed payload is materialized three-ish times per row); the event
-    timestamp is reconstructed exactly from the epoch-microseconds ordering
-    attribute (``timestamp_micros`` inverts ``unix_micros``) rather than
-    carried.  ``None`` preserves every input column (the generic contract).
+    ``carry_cols`` names the bronze columns to carry into the output
+    besides the keys and features; the rest are dropped.  This trims the
+    struct riding the interval-delta explode (Catalyst's nested pruning
+    cannot reach inside the Generate's array-of-struct, so an untrimmed
+    payload is materialized three-ish times per row); the event timestamp
+    is reconstructed exactly from the epoch-microseconds ordering attribute
+    (``timestamp_micros`` inverts ``unix_micros``) rather than carried.
     """
     windows = windows or {"1d": 1, "7d": 7, "30d": 30}
     entity_col, ts_col, sku_col = "customer_id", "invoice_date", "stock_code"
     amount_col, cancel_col = "line_amount", "is_cancel"
-    if unique_mode not in ("set", "delta"):
-        raise ValueError(f"unknown unique_mode: {unique_mode!r}")
     q = sql_ident
     e, ts, sku, cancel = q(entity_col), q(ts_col), q(sku_col), q(cancel_col)
     labelled = label_events is not None
@@ -253,39 +243,26 @@ def build_customer_features(
                      + ", ".join(marker.get(c, "NULL") for c in cols) + " FROM {labels}"))
     ctes.append(("__spread", f"SELECT {_spread_entity(bronze, e)}* FROM {ctes[-1][0]}"))
 
-    # Delta W3 runs FIRST, emitting (entity, ts_us) as aliases of its own
+    # W3 runs FIRST, emitting (entity, ts_us) as aliases of its own
     # partitioning and ordering attributes: the W1-W5 frames below then
-    # reuse the delta pass's entity-hash exchange and (entity, time) sort,
-    # so the whole family still costs ONE wide shuffle, same as the
-    # collect_set path.
-    uniq = []
-    if unique_mode == "delta":
-        reconstruct_ts = False
-        if carry_cols is None:
-            payload = [c for c in cols if c not in (entity_col, "__ts_us")]
-        else:
-            payload = [c for c in dict.fromkeys(carry_cols) if c != entity_col]
-            reconstruct_ts = isinstance(types[ts_col], T.TimestampType) and ts_col not in payload
-            if not reconstruct_ts and ts_col not in payload:
-                payload.append(ts_col)
-            payload += internal[1:]
-        uniq = [f"unique_skus_{s}" for s in windows]
-        ctes += windowed_distinct_ctes(
-            "__spread", e, "__ts_us", sku, windows, [q(c) for c in payload], [q(c) for c in uniq]
-        )
-        cols = [entity_col, "__ts_us", *payload, *uniq]
-        select = [f"__e AS {e}", "__time AS __ts_us", *(q(c) for c in payload + uniq)]
-        if reconstruct_ts:
-            # timestamp_micros inverts unix_micros exactly
-            cols.append(ts_col)
-            select.append(f"timestamp_micros(__time) AS {ts}")
-        source = "__wd_out"
-    elif carry_cols is not None:
-        cols = list(dict.fromkeys([entity_col, ts_col, sku_col, *internal, *carry_cols]))
-        select, source = [q(c) for c in cols], "__spread"
-    else:
-        select, source = ["*"], "__spread"
-    ctes.append(("__family_in", f"SELECT {', '.join(select)} FROM {source}"))
+    # reuse the distinct pass's entity-hash exchange and (entity, time)
+    # sort, so the whole family costs ONE wide shuffle.
+    payload = [c for c in dict.fromkeys(carry_cols) if c != entity_col]
+    reconstruct_ts = isinstance(types[ts_col], T.TimestampType) and ts_col not in payload
+    if not reconstruct_ts and ts_col not in payload:
+        payload.append(ts_col)
+    payload += internal[1:]
+    uniq = [f"unique_skus_{s}" for s in windows]
+    ctes += windowed_distinct_ctes(
+        "__spread", e, "__ts_us", sku, windows, [q(c) for c in payload], [q(c) for c in uniq]
+    )
+    cols = [entity_col, "__ts_us", *payload, *uniq]
+    select = [f"__e AS {e}", "__time AS __ts_us", *(q(c) for c in payload + uniq)]
+    if reconstruct_ts:
+        # timestamp_micros inverts unix_micros exactly
+        cols.append(ts_col)
+        select.append(f"timestamp_micros(__time) AS {ts}")
+    ctes.append(("__family_in", f"SELECT {', '.join(select)} FROM __wd_out"))
 
     # Every frame shares the (entity, ts) spec, so Catalyst plans ONE
     # exchange + ONE sort and one WindowExec for the family, tenure and the
@@ -296,8 +273,6 @@ def build_customer_features(
     frames = [f"sum({c}) OVER ({spec} {_UPTO}) AS {c}_upto" for c in sums]
     for i, days in enumerate(windows.values()):
         frames += [f"sum({c}) OVER ({spec} {_before(days)}) AS {c}_before{i}" for c in sums]
-        if unique_mode == "set":
-            frames.append(f"size(collect_set({sku}) OVER ({spec} {_sliding(days)})) AS __uniq{i}")
     # W6 tenure: the entity-wide first event is a RUNNING min over the same
     # ordering — identical value (ordered ascending, the running min IS the
     # partition min seen so far), but it shares the family's WindowExec
@@ -326,8 +301,6 @@ def build_customer_features(
         txn, cancels = f"__txn{i}", f"__cancel{i}"
         feats[f"txn_count_{s}"] = txn
         feats[f"spend_{s}"] = f"__spend{i}"
-        if unique_mode == "set":
-            feats[f"unique_skus_{s}"] = f"__uniq{i}"
         feats[f"avg_basket_value_{s}"] = f"__spend{i} / {_positive_or_one(txn)}"
         rate = f"{cancels} / {_positive_or_one(f'({cancels} + {txn})')}"
         feats[f"cancel_rate_{s}"] = f"least(greatest({rate}, 0.0D), 1.0D)"
@@ -353,7 +326,7 @@ def incremental_customer_features(
     bronze_new: DataFrame,
     bronze_hist: DataFrame,
     cutoff: str,
-    carry_cols: tuple[str, ...] | None = None,
+    carry_cols: tuple[str, ...],
 ) -> DataFrame:
     """Incremental view maintenance for the W1-W6 family (r9): feature rows
     for exactly the NEWLY ARRIVED bronze lines, bit-identical to a full
@@ -387,13 +360,13 @@ def incremental_customer_features(
     Contract: every ``bronze_new`` row has ``invoice_date >= cutoff`` and every
     ``bronze_hist`` row ``< cutoff`` (both enforced defensively; a "new"
     row older than the cutoff belongs to the backfill path).  Output
-    column set matches :func:`build_customer_features` for the same
+    columns, in order, are :func:`build_customer_features`'s for the same
     ``carry_cols`` (tenure recomputed via the state join)."""
     e, ts = "customer_id", "invoice_date"
     cut = F.to_date(F.lit(cutoff))
     need = list(
         dict.fromkeys(
-            [e, ts, "stock_code", "line_amount", "is_cancel", *(carry_cols or ())]
+            [e, ts, "stock_code", "line_amount", "is_cancel", *carry_cols]
         )
     )
     new_rows = bronze_new.where(F.col(ts) >= cut).select(*need)
@@ -413,9 +386,10 @@ def incremental_customer_features(
         .groupBy(e)
         .agg(F.min(ts).alias("first_ts"))
     )
+    # withColumn replaces tenure in place: the columns and their order are
+    # the full build's
     return (
-        feats.drop("tenure_days")
-        .join(first_all, e, "inner")
+        feats.join(first_all, e, "inner")
         .withColumn(
             "tenure_days",
             F.floor(

@@ -1217,7 +1217,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall-exact n-gram Jaccard dedup via inverted-index candidates
     (pairs sharing >= 1 shingle).  At 100 TB add max_df posting-list caps;
     here uncapped for oracle parity."""
-    return jaccard_pairs_exact(load_table(spark, sf_dir, "documents"), threshold=0.5)
+    return jaccard_pairs_exact(load_table(spark, sf_dir, "documents"))
 
 
 def _simhash_bit_sql(j: int) -> str:
@@ -1283,7 +1283,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary: 8-bit bands barely filter when signatures concentrate —
     measured 7.6x candidate reduction moving to 16-bit bands at sf0.1."""
     sigs = simhash_signatures(load_table(spark, sf_dir, "documents"))
-    return simhash_pairs(sigs, max_hamming=3, bands=2, cache_scope=sf_dir)
+    return simhash_pairs(sigs, cache_scope=sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1852,8 +1852,8 @@ SELECT u AS vec_id, min(v) AS cluster_id FROM reach GROUP BY u
 def q_embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC near-dup clustering — the embedding-space twin of the
     text-shingle ``dedup_clusters``: sign-LSH banding -> exact-cosine
-    verified pairs (>= 0.35) -> connected components by min-label
-    propagation.  Composes two already-certified components (the banded
+    verified pairs (>= 0.35) -> connected components by large-star/small-star
+    rounds.  Composes two already-certified components (the banded
     candidate pipeline and the iterative CC engine) into the operation an
     LLM-data curation run actually executes: collapse paraphrase/template
     families that share no n-grams but sit together in embedding space,
@@ -4091,19 +4091,6 @@ def q_approx_customer_retention_months(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-@register("feature_view_build_set", oracle=_FEATURE_VIEW_ORACLE, tags=("window", "scale"))
-def q_feature_view_build_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME W1-W6 feature family as ``feature_view_build`` but with the
-    W3 distinct-count computed by per-row ``collect_set`` window state — the
-    small-entity fast path (the flagship defaults to the whale-safe
-    interval-delta engine, ``operators.windowed_distinct``); certified
-    against the identical DuckDB oracle."""
-    t = load_tables(spark, sf_dir, ("lineitem", "orders"))
-    bronze = lineitem_to_bronze(t["lineitem"], t["orders"])
-    feats = build_customer_features(bronze, unique_mode="set")
-    return feats.select(*_FEATURE_COL_ORDER)
-
-
 @register(
     "feature_view_build_mtable",
     oracle=_FEATURE_VIEW_ORACLE,
@@ -4874,24 +4861,12 @@ SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u
 @register("dedup_clusters", oracle=_DEDUP_CLUSTERS_ORACLE, tags=("dedup", "iterative"))
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster assignment: MinHash+LSH candidates -> exact-Jaccard
-    verified pairs (>= 0.5) -> connected components by iterative min-label
-    propagation (``operators.dedup.connected_components``).  The oracle
-    computes the same components with a recursive CTE — certifying a
-    genuinely iterative distributed algorithm against declarative SQL."""
+    verified pairs (>= 0.5) -> connected components by large-star/small-star
+    rounds (``operators.dedup.connected_components``).  The oracle computes
+    the same components with a recursive CTE — certifying a genuinely
+    iterative distributed algorithm against declarative SQL."""
     dup = _minhash_pipeline_df(spark, sf_dir)
     return connected_components(dup).select(
-        F.col("id").alias("doc_id"), F.col("cluster_id")
-    )
-
-
-@register("dedup_clusters_star", oracle=_DEDUP_CLUSTERS_ORACLE, tags=("dedup", "iterative"))
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME cluster assignment as ``dedup_clusters`` computed by the
-    large-star/small-star engine (Kiveris et al., SoCC'14) — O(log^2 n)
-    rounds on adversarial chain graphs where min-label propagation needs
-    O(diameter); certified against the identical recursive-CTE oracle."""
-    dup = _minhash_pipeline_df(spark, sf_dir)
-    return connected_components(dup, algorithm="star").select(
         F.col("id").alias("doc_id"), F.col("cluster_id")
     )
 
@@ -8935,7 +8910,7 @@ def q_dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/dedup.py:repeated_ngram_spans."""
     from .operators.dedup import repeated_ngram_spans
 
-    return repeated_ngram_spans(load_table(spark, sf_dir, "documents"), n=8)
+    return repeated_ngram_spans(load_table(spark, sf_dir, "documents"))
 
 
 _REMOVE_REPEATED_ORACLE = """
@@ -9000,9 +8975,7 @@ def q_dedup_remove_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame
     operators/dedup.py:remove_repeated_ngram_spans."""
     from .operators.dedup import remove_repeated_ngram_spans
 
-    return remove_repeated_ngram_spans(
-        load_table(spark, sf_dir, "documents"), n=8
-    )
+    return remove_repeated_ngram_spans(load_table(spark, sf_dir, "documents"))
 
 
 @register("dedup_containment", oracle=_CONTAINMENT_ORACLE, tags=("dedup", "llm"))
@@ -9020,10 +8993,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return containment_pairs(
         load_table_parallel(spark, sf_dir, "documents", keys=("doc_id",)),
-        n=3,
-        max_df=20,
-        thr_num=4,
-        thr_den=5,
         cache_scope=sf_dir,
     )
 
@@ -9888,10 +9857,8 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # OLDEST latest-green cohort leads, then every query whose
     # implementation changed since its last green run, then the next
     # cohort oldest-first (alphabetical within an equal-age cohort).
-    # Zero-history entries: none.  No query implementation changed in
-    # this rotation.
-    # --- block 1: the full r11-green cohort (25).
-    "feature_view_build_set",
+    # Zero-history entries: none.
+    # --- block 1: the full r11-green cohort (24).
     "forecast_revenue_change",
     "knn_cosine_bruteforce",
     "knn_ivf_kmeans",
@@ -9916,8 +9883,14 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "url_dedup_domains",
     "user_daily_snapshot_spine",
     "user_retention_cohorts",
-    # --- block 2: r12-green cohort, alphabetical, filling the
-    # remaining 25 slots.
+    # --- block 2: implementation changed since the last green run
+    # (3): connected components is now the large-star/small-star
+    # loop only.
+    "dedup_canonical_by_quality",
+    "dedup_clusters",
+    "embedding_dedup_clusters",
+    # --- block 3: r12-green cohort, alphabetical, filling the
+    # remaining 23 slots.
     "approx_heavy_hitters",
     "approx_value_percentiles",
     "asof_snapshot_lookup",
@@ -9933,9 +9906,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "daily_feature_snapshots",
     "dau_mau_stickiness",
     "decayed_user_value",
-    "dedup_canonical_by_quality",
-    "dedup_clusters",
-    "dedup_clusters_star",
     "dedup_containment",
     "dedup_cross_source_matrix",
     "dedup_ngram_jaccard",
@@ -9943,8 +9913,9 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "dedup_repeated_ngrams",
     "distinct_parts_per_customer",
     "doc_chunk_overlap",
+    "doc_fingerprint",
     # --- next rotation: the REMAINING r12 cohort FIRST
-    # (doc_fingerprint .. value_percentiles, 20), then any
+    # (doc_ngram_commonality .. value_percentiles, 18), then any
     # impl-changed queries, then the r13 cohort oldest-first.
 )
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from retailfeaturestore_spark.operators import dedup
 from retailfeaturestore_spark.operators.dedup import (
     band_rows,
     containment_pairs,
@@ -46,14 +47,15 @@ def test_minhash_finds_near_duplicate(spark):
         .distinct()
     )
     # exact verification of the LSH candidates
-    pairs = jaccard_pairs_exact(d, threshold=0.5).join(cand, ["doc_a", "doc_b"])
+    pairs = jaccard_pairs_exact(d).join(cand, ["doc_a", "doc_b"])
     got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
     assert (1, 2) in got and all(3 not in p for p in got)
 
 
-def test_ngram_jaccard_identical_docs_score_1(spark):
+def test_ngram_jaccard_identical_docs_score_1(spark, monkeypatch):
     d = docs(spark, [(1, "a b c d e"), (2, "a b c d e")])
-    out = jaccard_pairs_exact(d, threshold=0.99).collect()
+    monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 0.99)
+    out = jaccard_pairs_exact(d).collect()
     assert len(out) == 1 and out[0].jaccard == 1.0
 
 
@@ -102,61 +104,73 @@ def test_connected_components_chain_and_islands(spark):
     )
     got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-    # the star engine produces identical clusters on the same graph
-    star = {
-        r.id: r.cluster_id
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    assert star == got
 
 
 def test_connected_components_self_pair_isolated_doc(spark):
-    """A doc appearing ONLY in a degenerate self-pair must self-label in
-    BOTH engines (ADVICE r3: the star engine's u != v filter used to drop
-    it from the node set while the propagation engine labeled it)."""
+    """A doc appearing ONLY in a degenerate self-pair must self-label (the
+    u != v edge filter once dropped it from the node set)."""
     from retailfeaturestore_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (7, 7)], "doc_a long, doc_b long"
     )
-    prop = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
-    star = {
-        r.id: r.cluster_id
-        for r in connected_components(pairs, algorithm="star").collect()
-    }
-    assert prop == star == {1: 1, 2: 1, 7: 7}
+    got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 7: 7}
+
+
+def _path_graph(spark, n):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+
+
+def test_connected_components_raises_when_rounds_run_out(spark, monkeypatch):
+    """A path of 64 nodes needs several star rounds: a loop cut at one
+    round must raise, not return the partial labels of an unconverged
+    edge set."""
+    monkeypatch.setattr(dedup, "CC_MAX_ITER", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(_path_graph(spark, 64)).collect()
 
 
 @pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_connected_components_star_bounds_rounds_on_chain(spark, monkeypatch):
+def test_connected_components_star_bounds_rounds_on_chain(spark):
     """Adversarial chain: a path graph of n nodes has diameter n-1, so
-    min-label propagation needs O(n) rounds; large-star/small-star halves
-    the diameter per round and must converge in O(log^2 n).  This is the
-    documented 100 TB-scale upgrade path (operators/dedup.py) — here the
-    bound is demonstrated, not just cited."""
-    from retailfeaturestore_spark.operators import dedup
+    min-label propagation would need O(n) rounds; large-star/small-star
+    halves the diameter per round and must converge in O(log^2 n)."""
     from retailfeaturestore_spark.operators.dedup import connected_components
 
     n = 64
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    star = connected_components(pairs, algorithm="star")
+    star = connected_components(_path_graph(spark, n))
     labels = {r.id: r.cluster_id for r in star.collect()}
     assert labels == {i: 0 for i in range(n)}
     assert star._cc_rounds <= 10  # ~log2(64)=6 + slack; propagation needs 63
 
-    monkeypatch.setattr(dedup, "CC_MAX_ITER", 100)
-    prop = connected_components(pairs)
-    assert {r.id: r.cluster_id for r in prop.collect()} == labels
-    assert prop._cc_rounds > star._cc_rounds
+
+def _union_find_labels(edges):
+    """Minimum id of each node's component, by union-find over the edge
+    list."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 @pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_star_cc_equals_propagation_on_random_graphs(spark):
-    """Property: both CC engines produce identical min-label clusters on
-    arbitrary graphs (random edges over a small id space exercises merged
-    components, self-contained islands, and re-linking across rounds)."""
+def test_connected_components_equal_union_find_on_random_graphs(spark):
+    """Property: the clusters equal a pure-Python union-find's on arbitrary
+    graphs (random edges over a small id space exercise merged components,
+    self-contained islands, and re-linking across rounds)."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -171,14 +185,8 @@ def test_star_cc_equals_propagation_on_random_graphs(spark):
     @given(st.lists(edge, min_size=1, max_size=20))
     def prop(edges):
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        prop_labels = {
-            r.id: r.cluster_id for r in connected_components(pairs).collect()
-        }
-        star_labels = {
-            r.id: r.cluster_id
-            for r in connected_components(pairs, algorithm="star").collect()
-        }
-        assert star_labels == prop_labels
+        got = {r.id: r.cluster_id for r in connected_components(pairs).collect()}
+        assert got == _union_find_labels(edges)
 
     prop()
 
@@ -404,11 +412,12 @@ def test_containment_catches_doc_pasted_inside_larger_doc(spark):
 
 
 def test_containment_ignores_boilerplate_shingles_above_max_df(spark):
-    """A shingle shared by more than max_df docs (boilerplate header) must
-    not create pairs: 30 docs sharing only a header produce zero rows."""
+    """A shingle shared by more than CONTAINMENT_MAX_DF (20) docs
+    (boilerplate header) must not create pairs: 30 docs sharing only a
+    header produce zero rows."""
     header = "site nav header common to every page"
     rows = [(i, f"{header} unique{i} body{i} content{i} tail{i}") for i in range(30)]
-    out = containment_pairs(docs(spark, rows), max_df=20).collect()
+    out = containment_pairs(docs(spark, rows)).collect()
     assert out == []
 
 
@@ -504,13 +513,16 @@ def test_pq_index_append_encodes_with_frozen_codebooks(spark, tmp_path):
     assert min(r.adc_dist for r in served) == py_best
 
 
-def test_containment_matches_bruteforce_on_random_corpora(spark):
+def test_containment_matches_bruteforce_on_random_corpora(spark, monkeypatch):
     """Property: containment_pairs == a literal python replay (rare-shingle
     subspace, integer threshold) on random small-vocab corpora — small
     vocab forces shared shingles, df-cap hits, and threshold boundaries."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
+    monkeypatch.setattr(dedup, "CONTAINMENT_MAX_DF", 3)
+    monkeypatch.setattr(dedup, "CONTAINMENT_THR_NUM", 1)
+    monkeypatch.setattr(dedup, "CONTAINMENT_THR_DEN", 2)
     word = st.sampled_from(["aa", "bb", "cc", "dd", "ee"])
     doc = st.lists(word, min_size=3, max_size=9).map(" ".join)
 
@@ -545,7 +557,7 @@ def test_containment_matches_bruteforce_on_random_corpora(spark):
         d = docs(spark, list(corpus.items()))
         got = {
             (r.doc_inner, r.doc_outer): (r.overlap, r.n_inner, r.containment)
-            for r in containment_pairs(d, max_df=3, thr_num=1, thr_den=2).collect()
+            for r in containment_pairs(d).collect()
         }
         assert got == brute(corpus, 3, 1, 2)
 
@@ -618,7 +630,7 @@ def test_repeated_ngram_spans_fixture(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in repeated_ngram_spans(docs, n=8).collect()}
+    out = {r.doc_id: r for r in repeated_ngram_spans(docs).collect()}
     assert len(out) == 5  # every doc reported, including span-free ones
     # boiler = 10 tokens -> 3 dup 8-gram positions each side, merged to ONE
     # span of exactly the 10 boilerplate tokens
@@ -645,7 +657,7 @@ def test_repeated_ngram_spans_merges_overlaps(spark):
         [(1, passage), (2, passage + " " + " ".join(f"t{i}" for i in range(5)))],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in repeated_ngram_spans(docs, n=8).collect()}
+    out = {r.doc_id: r for r in repeated_ngram_spans(docs).collect()}
     assert out[1].n_dup_spans == 1 and out[1].dup_tokens == 12
     assert out[2].n_dup_spans == 1 and out[2].dup_tokens == 12
 
@@ -669,12 +681,12 @@ def test_remove_repeated_spans_rewrites_and_agrees_with_audit(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in remove_repeated_ngram_spans(docs, n=8).collect()}
+    out = {r.doc_id: r for r in remove_repeated_ngram_spans(docs).collect()}
     assert len(out) == 3
     assert out[1].clean_text == u1 and out[1].kept_tokens == 12
     assert out[2].clean_text == "" and out[2].kept_tokens == 0
     assert out[3].clean_text == "tiny one" and out[3].kept_tokens == 2
-    audit = {r.doc_id: r for r in repeated_ngram_spans(docs, n=8).collect()}
+    audit = {r.doc_id: r for r in repeated_ngram_spans(docs).collect()}
     for d in out:
         assert out[d].kept_tokens == audit[d].n_tokens - audit[d].dup_tokens
 

@@ -71,20 +71,17 @@ def _sorted(df):
     return sorted(map(tuple, df.collect()))
 
 
-@pytest.mark.parametrize("unique_mode", ["delta", "set"])
 @pytest.mark.slow  # driver verify-window fit (r14): see pyproject addopts
-def test_incremental_equals_full_recompute(spark, unique_mode):
-    """The incremental path (delta engine) equals a full recompute by
-    either W3 engine on every column it emits (the set engine also keeps
-    the SKU column)."""
+def test_incremental_equals_full_recompute(spark):
+    """The incremental path equals a full recompute on every row and
+    column, in the same column order."""
     hist, new = _fixture(spark)
     got = incremental_customer_features(new, hist, CUT, carry_cols=("invoice", "line_no"))
     full = build_customer_features(
-        hist.unionByName(new), carry_cols=("invoice", "line_no"),
-        unique_mode=unique_mode,
+        hist.unionByName(new), carry_cols=("invoice", "line_no")
     ).where(F.col("t_ref") >= F.to_date(F.lit(CUT)))
-    assert set(full.columns) - set(got.columns) <= {"stock_code"}
-    assert _sorted(got) == _sorted(full.select(*got.columns))
+    assert got.columns == full.columns
+    assert _sorted(got) == _sorted(full)
     # untouched entity 4 emitted nothing; new rows all present
     ids = {r.customer_id for r in got.collect()}
     assert ids == {1, 2, 3}

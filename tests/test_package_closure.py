@@ -101,9 +101,6 @@ _ALLOWED_TEST_ONLY: dict[str, str] = {
     "functions.bpe.learn_bpe": (
         "provenance of queries._BPE_FROZEN_MERGES, which its test replays"
     ),
-    "operators.pit.interval_existence_labels_self": (
-        "reference for the folded churn label"
-    ),
     "streaming.neardup_stream.ingest_batch_neardup": _REFERENCE_NEARDUP,
     "streaming.neardup_stream._read_state": _REFERENCE_NEARDUP,
     "plans.has_broadcast_join": _PLAN_ASSERT,

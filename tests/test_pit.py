@@ -11,7 +11,6 @@ from pyspark.sql import types as T
 from retailfeaturestore_spark.operators.pit import (
     asof_join,
     interval_existence_labels,
-    interval_existence_labels_self,
     latest_per_key,
 )
 
@@ -66,10 +65,11 @@ def test_label_horizon_boundaries(spark):
     assert out == {1: 1, 2: 0, 3: 1}
 
 
-def test_self_labels_equal_general_form(spark):
-    """The self-table label special case must equal the general union-window
-    form when spine == events, including duplicate (key, ts) dedup, horizon
-    boundaries, and equal-ts exclusion."""
+def test_labels_over_one_table_as_spine_and_events(spark):
+    """One table as both the spine and the events (churn labels over the
+    orders table): a duplicate (key, ts) spine row is deduped and is not an
+    event for its twin, an event at exactly t+30d counts (inclusive), a
+    singleton churns, and an event past the horizon does not count."""
     rows = [
         (1, 7, ts("2024-01-01 00:00:00"), 0.0),
         (2, 7, ts("2024-01-01 00:00:00"), 0.0),   # duplicate ts: deduped, not an event
@@ -79,23 +79,18 @@ def test_self_labels_equal_general_form(spark):
         (6, 9, ts("2024-02-15 00:00:00"), 0.0),   # past horizon: churn=1 for row 5
     ]
     df = spark.createDataFrame(rows, EV_SCHEMA)
-    general = {
-        (r.user_id, r.t_ref): r.churn
-        for r in interval_existence_labels(
-            df, df, key="user_id", spine_ts="ts", event_ts="ts",
-            horizon_days=30, label_col="churn",
-        ).collect()
+    out = interval_existence_labels(
+        df, df, key="user_id", spine_ts="ts", event_ts="ts",
+        horizon_days=30, label_col="churn",
+    ).collect()
+    assert len(out) == 5  # the duplicate (7, 2024-01-01) spine row is deduped
+    assert {(r.user_id, r.t_ref): r.churn for r in out} == {
+        (7, ts("2024-01-01 00:00:00")): 0,  # event at t+30d counts
+        (7, ts("2024-01-31 00:00:00")): 1,
+        (8, ts("2024-01-01 00:00:00")): 1,
+        (9, ts("2024-01-01 00:00:00")): 1,  # next event 45 days later
+        (9, ts("2024-02-15 00:00:00")): 1,
     }
-    self_form = {
-        (r.user_id, r.t_ref): r.churn
-        for r in interval_existence_labels_self(
-            df, key="user_id", ts_col="ts", horizon_days=30, label_col="churn"
-        ).collect()
-    }
-    assert self_form == general
-    assert general[(7, ts("2024-01-01 00:00:00"))] == 0  # event at t+30d counts
-    assert general[(8, ts("2024-01-01 00:00:00"))] == 1
-    assert general[(9, ts("2024-02-15 00:00:00"))] == 1
 
 
 def test_asof_join_equal_ts_included_and_tiebreak(spark):

@@ -65,7 +65,8 @@ def test_delta_engine_v4_one_sort_one_window_pass(spark):
     the delta sums (all growing range frames in ONE pass), and the W1-W5 +
     tenure family on the filtered rows (tenure folded in as a running min;
     it used to be a fourth, unordered pass).  More of either means the
-    +1µs shift or the frame grouping regressed."""
+    +1µs shift or the frame grouping regressed.  The whole family shares
+    ONE customer_id shuffle."""
     import re
 
     df = REGISTRY["feature_view_build"].fn(spark, SF)
@@ -74,12 +75,6 @@ def test_delta_engine_v4_one_sort_one_window_pass(spark):
     windows = len(re.findall(r"\(\d+\) Window\b", plan))
     assert sorts == 2, f"expected 2 sorts, got {sorts}\n{plan[:2000]}"
     assert windows == 3, f"expected 3 window passes, got {windows}\n{plan[:2000]}"
-
-
-def test_feature_view_set_single_exchange(spark):
-    """The collect_set fast path keeps its single customer_id shuffle."""
-    df = REGISTRY["feature_view_build_set"].fn(spark, SF)
-    plan = formatted_plan(df)
     assert plan.count("hashpartitioning(customer_id") == 1, plan[:2000]
 
 

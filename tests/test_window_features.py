@@ -26,9 +26,9 @@ def ts(s: str) -> datetime:
     return datetime.fromisoformat(s)
 
 
-def build(spark, rows, **kw):
+def build(spark, rows):
     df = spark.createDataFrame(rows, BRONZE_SCHEMA)
-    return build_customer_features(df, windows={"1d": 1}, **kw)
+    return build_customer_features(df, windows={"1d": 1}, carry_cols=("stock_code",))
 
 
 def snap(df, cols):
@@ -91,7 +91,7 @@ def test_one_row_per_input_line_and_contract_cols(spark):
         (2, ts("2024-01-05 00:00:00"), "B", False, 7.0),
     ]
     df = build_customer_features(
-        spark.createDataFrame(rows, BRONZE_SCHEMA)
+        spark.createDataFrame(rows, BRONZE_SCHEMA), carry_cols=()
     )
     assert df.count() == 2
     for base in ("txn_count", "spend", "unique_skus", "avg_basket_value", "cancel_rate"):
@@ -108,12 +108,12 @@ LABEL_SCHEMA = T.StructType(
 )
 
 
-def build_labeled(spark, rows, label_rows, horizon=30, **kw):
+def build_labeled(spark, rows, label_rows, horizon=30):
     df = spark.createDataFrame(rows, BRONZE_SCHEMA)
     lab = spark.createDataFrame(label_rows, LABEL_SCHEMA)
     return build_customer_features(
-        df, windows={"1d": 1}, label_events=lab, label_ts_col="event_ts",
-        label_horizon_days=horizon, label_col="churn", **kw
+        df, windows={"1d": 1}, carry_cols=(), label_events=lab,
+        label_ts_col="event_ts", label_horizon_days=horizon, label_col="churn",
     )
 
 
@@ -160,12 +160,14 @@ def test_label_fold_markers_invisible_to_features_and_tenure(spark):
 
 
 def test_label_fold_matches_join_formulation(spark):
-    """Differential: the folded label equals interval_existence_labels_self
-    ⊕ J1 join on shared (key, ts) grids — the exact plan the fold replaced."""
+    """Differential: the folded label equals the general interval label
+    over the orders table as both spine and events (interval_existence_labels,
+    the form churn_labels_orders certifies against DuckDB) ⊕ J1 join on
+    shared (key, ts) grids — the exact plan the fold replaced."""
     import random
 
     from retailfeaturestore_spark.ml.training import build_training_set
-    from retailfeaturestore_spark.operators.pit import interval_existence_labels_self
+    from retailfeaturestore_spark.operators.pit import interval_existence_labels
 
     rnd = random.Random(11)
     rows, labels = [], []
@@ -179,12 +181,13 @@ def test_label_fold_matches_join_formulation(spark):
             labels.append((cid, ts(f"2024-01-{rnd.randint(1, 27):02d} 12:00:00")))
 
     folded = build_labeled(spark, rows, labels, horizon=7)
-    lab = interval_existence_labels_self(
-        spark.createDataFrame(labels, LABEL_SCHEMA),
-        key="customer_id", ts_col="event_ts", horizon_days=7, label_col="churn",
+    events = spark.createDataFrame(labels, LABEL_SCHEMA)
+    lab = interval_existence_labels(
+        events, events, key="customer_id", spine_ts="event_ts", event_ts="event_ts",
+        horizon_days=7, label_col="churn",
     )
     feats = build_customer_features(
-        spark.createDataFrame(rows, BRONZE_SCHEMA), windows={"1d": 1}
+        spark.createDataFrame(rows, BRONZE_SCHEMA), windows={"1d": 1}, carry_cols=()
     )
     joined = build_training_set(feats, lab.withColumnRenamed("churn", "churn_30d"), [])
     cols = ["customer_id", "t_ref", "txn_count_1d", "tenure_days", "churn"]
@@ -196,8 +199,8 @@ def test_label_fold_matches_join_formulation(spark):
 def test_column_names_with_a_space_and_a_dot(spark):
     """Every caller-supplied column name is quoted in the rendered plan: a
     carried column and the label events' timestamp renamed to names that
-    hold a space and a dot give the same rows, for every engine and
-    option."""
+    hold a space and a dot give the same rows, with and without the folded
+    label."""
     rows = [
         (1, ts("2024-01-01 10:00:00"), "A", False, 10.0),
         (1, ts("2024-01-01 10:00:00"), "B", True, 5.0),
@@ -209,20 +212,16 @@ def test_column_names_with_a_space_and_a_dot(spark):
     )
     labels = spark.createDataFrame([(1, ts("2024-01-02 00:00:00"))], "customer_id int, ts timestamp")
     names = {"note": "note id.no", "ts": "label ts.at"}
-    for kw in (
-        {"unique_mode": "delta", "carry_cols": ("note",)},
-        {"unique_mode": "delta", "label_events": labels, "label_ts_col": "ts"},
-        {"unique_mode": "set", "carry_cols": ("note",)},
-        {"unique_mode": "set"},
-    ):
-        want = build_customer_features(df, windows={"1d": 1, "7d": 7}, **kw)
+    for kw in ({}, {"label_events": labels, "label_ts_col": "ts"}):
+        want = build_customer_features(
+            df, windows={"1d": 1, "7d": 7}, carry_cols=("note",), **kw
+        )
         if "label_events" in kw:
-            kw = {**kw, "label_events": labels.withColumnsRenamed(names),
+            kw = {"label_events": labels.withColumnsRenamed(names),
                   "label_ts_col": names["ts"]}
-        if "carry_cols" in kw:
-            kw = {**kw, "carry_cols": (names["note"],)}
         got = build_customer_features(
-            df.withColumnsRenamed(names), windows={"1d": 1, "7d": 7}, **kw
+            df.withColumnsRenamed(names), windows={"1d": 1, "7d": 7},
+            carry_cols=(names["note"],), **kw
         )
         assert got.columns == [names.get(c, c) for c in want.columns]
         assert sorted(map(tuple, got.collect()), key=repr) == sorted(

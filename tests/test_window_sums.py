@@ -96,7 +96,7 @@ def test_family_sums_match_numpy_oracle(spark, lines):
         for c, us, cancel, cents in lines
     ]
     got = build_customer_features(
-        spark.createDataFrame(rows, BRONZE_SCHEMA), windows=WINDOWS
+        spark.createDataFrame(rows, BRONZE_SCHEMA), windows=WINDOWS, carry_cols=()
     ).collect()
     want = _family_oracle(rows)
     assert len(got) == len(rows)
@@ -177,21 +177,16 @@ def _sliding_functions(plan: str) -> list[str]:
 
 def test_family_is_one_exchange_one_window_and_no_sliding_integer_sum(spark, monkeypatch):
     """The prefix-difference frames share the family's (entity, ts) spec:
-    one hash exchange, and one WindowExec for the family (the delta W3
-    engine adds its lag and delta passes).  No integer SUM runs over a
-    sliding ``[-w, current row]`` range frame; collect_set's bounded frames
-    are expected on the set path."""
+    one hash exchange, and one WindowExec for the family (the W3 distinct
+    count adds its lag and delta passes).  No SUM runs over a sliding
+    ``[-w, current row]`` range frame."""
     rows = [(1, BASE, "A", False, 1.5), (1, BASE + timedelta(days=2), "B", True, 2.0)]
     df = spark.createDataFrame(rows, BRONZE_SCHEMA)
-    for mode, windows, sliding in (
-        ("set", 1, {"collect_set"}),
-        ("delta", 3, set()),
-    ):
-        plan = _plan(build_customer_features(df, windows=WINDOWS, unique_mode=mode))
-        assert plan.count("Exchange hashpartitioning") == 1, plan
-        assert len(re.findall(r"\bWindow \[", plan)) == windows, plan
-        assert set(_sliding_functions(plan)) == sliding, plan
-        assert "RangeFrame, unboundedpreceding$(), -86400000001" in plan
+    plan = _plan(build_customer_features(df, windows=WINDOWS, carry_cols=()))
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 3, plan
+    assert _sliding_functions(plan) == [], plan
+    assert "RangeFrame, unboundedpreceding$(), -86400000001" in plan
     events = spark.createDataFrame([(1, BASE, "view", 1.0)], EVENTS_SCHEMA)
     monkeypatch.setattr(window_features, "USER_ACTIVITY_WINDOWS", WINDOWS)
     plan = _plan(user_activity_features(events))
@@ -210,7 +205,6 @@ def test_family_exchange_spreads_an_input_already_at_default_parallelism(spark):
     rows = [(c, BASE + timedelta(days=c % 5), "A", c % 3 == 0, 1.0) for c in range(40)]
     df = spark.createDataFrame(rows, BRONZE_SCHEMA).repartition(par)
     assert df.rdd.getNumPartitions() == par
-    for mode in ("delta", "set"):
-        plan = _plan(build_customer_features(df, windows=WINDOWS, unique_mode=mode))
-        exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)", plan)
-        assert exchanges == [("customer_id", str(par), "REPARTITION_BY_NUM")], plan
+    plan = _plan(build_customer_features(df, windows=WINDOWS, carry_cols=()))
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)", plan)
+    assert exchanges == [("customer_id", str(par), "REPARTITION_BY_NUM")], plan

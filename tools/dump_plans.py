@@ -21,7 +21,6 @@ SHOW = {
     "knn_cosine_bruteforce": "Corpus never shuffles: broadcast queries x scan, per-query top-k window.",
     "discounted_revenue": "Q19 OR-of-ANDs: implied per-side filters pushed to BOTH scans before the broadcast join.",
     "nation_market_share": "Q8 five-way star: every dim broadcast; the only exchange is fact-fact + final agg.",
-    "feature_view_build_set": "collect_set fast path: same single customer_id exchange, per-frame set state (opt-in for known-small cardinalities).",
     "dedup_minhash": "Minhash over the persisted per-doc signature artifact: banding reads cached min-hash longs; exact-Jaccard verifies via array_intersect on the cached shingle sets (no postings re-join).",
     "training_set_build": "Folded-label training set: ONE entity exchange, 2 sorts, 3 Window passes (labels as a future range frame over zero-weight order markers); no label join anywhere.",
     "events_funnel_conversion": "Ordered funnel: three chained stage windows + per-user collapse over ONE user_id exchange; funnel state never leaves the executor.",
