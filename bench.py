@@ -168,7 +168,7 @@ RUNS = 3
 EVICT_TAGS = frozenset({"iterative", "graph"})
 
 # Queries that memoize a session-resident artifact via get_or_register /
-# ranks cache_key (ADVICE r12 #3): without eviction, runs 2-3 reuse the
+# the ranks memo (ADVICE r12 #3): without eviction, runs 2-3 reuse the
 # artifact and min-of-3 records the warm path while the co-measured DuckDB
 # anchor pays its full query every run — the ratio-of-record would be
 # warm-only by construction.  These evict before EVERY run so the

@@ -37,7 +37,6 @@ def exact_auc(
     score_col: str,
     label_col: str,
     *,
-    cache_key: str | None = None,
     cache_scope: str | None = None,
 ) -> DataFrame:
     """-> one row ``(n_pos, n_neg, u2, auc)``.
@@ -45,8 +44,8 @@ def exact_auc(
     ``u2 = 2*U`` where U is the tie-corrected Mann-Whitney statistic (kept
     doubled so it stays integer under midranks); ``auc = u2 / (2*n1*n0)``
     is the single floating-point operation.  Labels must be 0/1.
-    ``cache_key``/``cache_scope`` memoize the rank engine's control-plane
-    artifact per dataset version (resident serving — see operators/ranks).
+    ``cache_scope`` memoizes the rank engine's control-plane artifact per
+    dataset version (resident serving — see operators/ranks).
     """
     per_score = (
         scored.select(
@@ -59,8 +58,7 @@ def exact_auc(
     # Grouping made "s" unique, so the ordering is total and the prefix is
     # deterministic (ranks.range_prefix_sum's tie caveat doesn't apply).
     ranked = range_prefix_sum(
-        per_score, [F.col("s")], F.col("n"), "cum",
-        cache_key=cache_key, cache_scope=cache_scope,
+        per_score, [F.col("s")], F.col("n"), "cum", cache_scope=cache_scope
     ).withColumn(
         # sum over positives at this score of (2 * midrank):
         # midrank = cnt_less + (cnt_eq + 1)/2, doubled to stay integral

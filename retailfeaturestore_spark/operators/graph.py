@@ -30,8 +30,13 @@ __all__ = ["copurchase_edges", "pagerank_scaled", "triangle_counts", "similar_by
 
 _SCALE = 1_000_000_000_000  # 1e12 — shared with the oracle CTEs
 _DAMPING_NUM, _DAMPING_DEN = 85, 100
-# PageRank rounds between lineage truncations
+# PageRank rounds, and the rounds between lineage truncations
+PAGERANK_ITERATIONS = 3
 PAGERANK_CHECKPOINT_EVERY = 8
+# similar_by_neighbors: the stopword-vertex degree cap and the neighbors
+# kept per vertex
+SIMILAR_MAX_DEGREE = 100
+SIMILAR_TOP_K = 5
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
@@ -69,12 +74,12 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
 
 def pagerank_scaled(
     edges: DataFrame,
-    n_iter: int = 3,
     cache_scope: str | None = None,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Unweighted PageRank over a directed edge list, integer-exact, with
-    damping ``_DAMPING_NUM / _DAMPING_DEN``.
+    damping ``_DAMPING_NUM / _DAMPING_DEN``, for ``PAGERANK_ITERATIONS``
+    rounds.
 
     Vertices = nodes with out-edges (in an undirected/symmetrized graph —
     e.g. copurchase_edges — that is every connected node, so no dangling
@@ -94,7 +99,7 @@ def pagerank_scaled(
     Per iteration: ONE join shuffle (ranks ⋈ edges on src; the edge table's
     partitioning is reused every round since edges are the static side) and
     ONE aggregation exchange (sum of contributions keyed on dst).  Rank
-    state is 2 longs per vertex — never driver-side; with ``n_iter`` beyond
+    state is 2 longs per vertex — never driver-side; with more rounds than
     a handful, every ``PAGERANK_CHECKPOINT_EVERY``-th round truncates the growing lineage via
     localCheckpoint exactly like connected_components' rounds
     (operators/dedup.py).  Returns (id, degree, pagerank_scaled, pagerank).
@@ -157,7 +162,7 @@ def pagerank_scaled(
         vbase = vbase.persist()
         register_persisted(vbase, ("pagerank_vbase", cache_scope))
     ranks = verts.withColumn("r", F.lit(_SCALE).cast("long"))
-    for i in range(n_iter):
+    for i in range(PAGERANK_ITERATIONS):
         # ranks is the shuffle-hash BUILD side: per iteration only the
         # (id, r) table moves — |V|/nPartitions longs per task — while the
         # src-partitioned edge cache is scanned in place.  Never broadcast:
@@ -181,7 +186,7 @@ def pagerank_scaled(
                 ).cast("long").alias("r"),
             )
         )
-        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < n_iter:
+        if (i + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < PAGERANK_ITERATIONS:
             ranks = ranks.localCheckpoint(eager=True)
     out = (
         ranks.join(deg.select(F.col("src").alias("id"), "deg").hint("shuffle_hash"), "id")
@@ -359,19 +364,15 @@ def triangle_counts(
     )
 
 
-def similar_by_neighbors(
-    edges: DataFrame,
-    max_degree: int = 100,
-    k: int = 5,
-    cache_scope: str | None = None,
-) -> DataFrame:
-    """Item-item collaborative filtering: per-vertex top-k neighbors by
+def similar_by_neighbors(edges: DataFrame, cache_scope: str | None = None) -> DataFrame:
+    """Item-item collaborative filtering: per-vertex top-``SIMILAR_TOP_K``
+    neighbors by
     JACCARD over co-purchase neighborhoods — the "customers who bought
     this also gravitate to" primitive, per-item ranked (distinct from the
     global pair ranking brand_basket_affinity produces).
 
     The skew valve is STOPWORD-VERTEX REMOVAL: vertices with degree >
-    ``max_degree`` are dropped from the analysis graph entirely (a part in
+    ``SIMILAR_MAX_DEGREE`` are dropped from the analysis graph entirely (a part in
     every basket correlates with everything and carries no signal — the
     same reasoning as dedup's max_df posting caps), which bounds the
     common-neighbor join at sum-over-kept C(deg, 2) with deg <= cap.  All
@@ -381,7 +382,7 @@ def similar_by_neighbors(
 
     Scale shape: two semi-joins apply the cap; common-neighbor pairs are
     generated by collect_set + ordered slice-explode over each customer's
-    capped neighborhood (exactly C(d, 2) wedges per center, d <= max_degree
+    capped neighborhood (exactly C(d, 2) wedges per center, d <= SIMILAR_MAX_DEGREE
     — no self-join; r14, see the inline note); the degree attach joins are
     vertex-scale — shuffle_hash, never broadcast (the pagerank AQE lesson).
     Jaccard = c / (da + db - c), one exact long/long IEEE division; ties
@@ -394,7 +395,7 @@ def similar_by_neighbors(
         edges = edges.persist()
         register_persisted(edges, ("simneigh_raw_edges", cache_scope))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    keep = deg.where(F.col("d") <= max_degree).select("src")
+    keep = deg.where(F.col("d") <= SIMILAR_MAX_DEGREE).select("src")
     ec = (
         edges.join(keep.hint("shuffle_hash"), "src", "left_semi")
         .join(
@@ -412,7 +413,7 @@ def similar_by_neighbors(
     # customer u (d^2 candidate rows per wedge center, then pa < pb drops
     # half) — one exchange + a hash join whose output is re-aggregated
     # anyway.  Collect each center's capped neighborhood once
-    # (collect_set, <= max_degree elements by construction — the cap IS
+    # (collect_set, <= SIMILAR_MAX_DEGREE elements by construction — the cap IS
     # the memory valve) and explode exactly the C(d, 2) ordered pairs via
     # slice(sorted, i+2, ...): half the generated rows, the join and its
     # probe-side exchange gone.  array_sort gives ascending part ids, so
@@ -446,7 +447,7 @@ def similar_by_neighbors(
     w = Window.partitionBy("pa").orderBy(F.col("jaccard").desc(), F.col("pb"))
     return (
         j.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= SIMILAR_TOP_K)
         .select(
             F.col("pa").alias("part_id"),
             F.col("pb").alias("similar_part"),

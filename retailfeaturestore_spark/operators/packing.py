@@ -1,13 +1,13 @@
 """Sequence packing: assemble tokenized documents into fixed-length training
 sequences — the last mile of an LLM data pipeline (after dedup/quality the
-corpus must become uniform ``max_tokens`` training rows).
+corpus must become uniform ``PACK_MAX_TOKENS``-token training rows).
 
 Two packing disciplines, both deterministic and seedless so results are
 engine-portable and retry-stable:
 
 - ``pack_chunks``: concat-and-chunk (the GPT-style pretraining layout) —
   documents are concatenated in ``doc_id`` order within a shard and the
-  token stream is cut every ``max_tokens``.  Pure column algebra + one
+  token stream is cut every ``PACK_MAX_TOKENS``.  Pure column algebra + one
   window, integer-exact, so it carries a bit-exact DuckDB oracle.
 - ``pack_bins_ffd``: first-fit-decreasing bin packing (the SFT layout where
   documents must NOT be split) — greedy per shard via ``applyInPandas``.
@@ -15,9 +15,9 @@ engine-portable and retry-stable:
 
 Scale shape: the shard is the unit of packing AND the unit of output (one
 shard ≙ one training-data file), exactly how a 100 TB packing job is laid
-out — shards are md5-uniform over documents, so 100 TB / n_shards stays
-bounded per worker by choosing n_shards, and no stage ever sees the whole
-corpus in one task.  The reference has no text surface (it is a retail
+out — shards are md5-uniform over documents, so 100 TB / PACK_N_SHARDS
+stays bounded per worker by choosing PACK_N_SHARDS, and no stage ever sees
+the whole corpus in one task.  The reference has no text surface (it is a retail
 feature-store, SURVEY.md §0); this extends the engine per the
 training-data-pipeline brief.
 """
@@ -35,44 +35,44 @@ from ..functions.text import words
 
 __all__ = ["pack_chunks", "pack_chunk_text", "pack_bins_ffd"]
 
+# tokens per packed sequence (bin capacity for FFD) and the number of
+# md5 shards, each one training-data file
+PACK_MAX_TOKENS = 512
+PACK_N_SHARDS = 8
 
-def _shard_col(n_shards: int):
+
+def _shard_col():
     """md5-uniform shard id (first 8 hex chars of md5('pack#'||id), i.e. 32
-    bits, mod n_shards) — the engine-portable coin used throughout (cf.
+    bits, mod ``PACK_N_SHARDS``) — the engine-portable coin used throughout (cf.
     hash_split, negative sampling): DuckDB computes the identical value, so
     oracles survive.  32 bits keeps the distribution uniform to ~1/2^32 for
-    any realistic n_shards (a single byte would cap the knob at 256 and
+    any realistic shard count (a single byte would cap the knob at 256 and
     skew above 64 — the docstring's per-task memory bound must hold for
     thousands of shards)."""
     return (
         F.conv(F.substring(F.md5(F.concat(F.lit("pack#"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
         .cast("long")
-        % F.lit(n_shards)
+        % F.lit(PACK_N_SHARDS)
     )
 
 
-def _interval_cols(start, n, c, max_tokens: int):
+def _interval_cols(start, n, c):
     """The per-(doc, chunk) token interval [lo, hi) — the arithmetic BOTH
     packing oracles certify, kept in exactly one place."""
-    lo = F.greatest(start, c * F.lit(max_tokens))
-    hi = F.least(start + n, (c + F.lit(1)) * F.lit(max_tokens))
+    lo = F.greatest(start, c * F.lit(PACK_MAX_TOKENS))
+    hi = F.least(start + n, (c + F.lit(1)) * F.lit(PACK_MAX_TOKENS))
     return lo, hi
 
 
-def _chunk_seq(max_tokens: int):
+def _chunk_seq():
     """chunk ids a document intersects: start div m .. (end-1) div m."""
     return F.sequence(
-        F.expr(f"__start div {max_tokens}"),
-        F.expr(f"(__start + __n_tokens - 1) div {max_tokens}"),
+        F.expr(f"__start div {PACK_MAX_TOKENS}"),
+        F.expr(f"(__start + __n_tokens - 1) div {PACK_MAX_TOKENS}"),
     )
 
 
-def _positions(
-    docs: DataFrame,
-    max_tokens: int,
-    n_shards: int,
-    with_text: bool,
-) -> DataFrame:
+def _positions(docs: DataFrame, with_text: bool) -> DataFrame:
     """Shared packing front: per document ``(shard, __n_tokens, __start``
     and, with ``with_text``, ``__ws)`` — the md5 shard assignment and the
     running token offset (ONE window over the one shard exchange).
@@ -87,13 +87,11 @@ def _positions(
     subsequent offset; the streaming packer skips empties, and the two
     must agree).
     """
-    if max_tokens <= 0 or n_shards <= 0:
-        raise ValueError("max_tokens and n_shards must be positive")
     ws = words(F.col("text"))
     cols = [
         F.col("doc_id"),
         F.size(ws).cast("long").alias("__n_tokens"),
-        _shard_col(n_shards).alias("shard"),
+        _shard_col().alias("shard"),
     ]
     if with_text:
         cols.insert(1, ws.alias("__ws"))
@@ -106,51 +104,42 @@ def _positions(
     )
 
 
-def _fragments(
-    docs: DataFrame,
-    max_tokens: int,
-    n_shards: int,
-) -> DataFrame:
+def _fragments(docs: DataFrame) -> DataFrame:
     """Ledger fragments: one row per (document, intersected chunk) with the
     token interval bounds — :func:`_positions` + the chunk-span explode."""
-    pos = _positions(docs, max_tokens, n_shards, with_text=False)
+    pos = _positions(docs, with_text=False)
     frag = pos.select(
         "shard",
         "__n_tokens",
         "__start",
-        F.explode(_chunk_seq(max_tokens)).alias("chunk_id"),
+        F.explode(_chunk_seq()).alias("chunk_id"),
     )
-    lo, hi = _interval_cols(
-        F.col("__start"), F.col("__n_tokens"), F.col("chunk_id"), max_tokens
-    )
+    lo, hi = _interval_cols(F.col("__start"), F.col("__n_tokens"), F.col("chunk_id"))
     return frag.withColumns({"__lo": lo, "__hi": hi})
 
 
-def pack_chunks(
-    docs: DataFrame,
-    max_tokens: int = 512,
-    n_shards: int = 8,
-) -> DataFrame:
+def pack_chunks(docs: DataFrame) -> DataFrame:
     """Concat-and-chunk packing statistics: per (shard, chunk) — how many
     document fragments land in the chunk, how many documents *start* there,
-    and the token fill (== ``max_tokens`` everywhere except each shard's
-    final chunk).
+    and the token fill (== ``PACK_MAX_TOKENS`` everywhere except each
+    shard's final chunk).
 
     Within a shard documents are laid head-to-tail in ``doc_id`` order; a
     document occupying token interval [start, end) intersects chunks
-    ``start div max_tokens .. (end-1) div max_tokens``.  The per-chunk
+    ``start div m .. (end-1) div m`` for ``m = PACK_MAX_TOKENS``.  The per-chunk
     attribution is interval arithmetic on longs — no floats anywhere, so
     the DuckDB oracle is hash-exact.
 
     Plan: ONE hash exchange (shard) for the running-offset window; the
-    fragment explode is bounded by ``total_tokens/max_tokens + n_docs``
+    fragment explode is bounded by ``total_tokens/m + n_docs``
     rows (each document adds at most its chunk-span), then a partial-agg
     rollup on (shard, chunk_id).  Nothing is quadratic and no stage holds
     more than a shard's token ledger.  Precondition: unique ``doc_id``
     (see :func:`_positions`).
     """
-    frag = _fragments(docs, max_tokens, n_shards)
-    started = F.when(F.col("__start") >= F.col("chunk_id") * F.lit(max_tokens), 1).otherwise(0)
+    frag = _fragments(docs)
+    chunk_start = F.col("chunk_id") * F.lit(PACK_MAX_TOKENS)
+    started = F.when(F.col("__start") >= chunk_start, 1).otherwise(0)
     return (
         frag.groupBy("shard", "chunk_id")
         .agg(
@@ -162,14 +151,10 @@ def pack_chunks(
     )
 
 
-def pack_chunk_text(
-    docs: DataFrame,
-    max_tokens: int = 512,
-    n_shards: int = 8,
-) -> DataFrame:
+def pack_chunk_text(docs: DataFrame) -> DataFrame:
     """The MATERIALIZED packed sequences (``pack_chunks`` emits the ledger;
     this emits the training rows): per (shard, chunk_id) the actual
-    ``max_tokens``-token text, document fragments stitched in stream order.
+    ``PACK_MAX_TOKENS``-token text, document fragments stitched in stream order.
 
     Same interval arithmetic as :func:`pack_chunks`; each fragment carries
     its token ``slice`` across to the chunk rollup, where fragments are
@@ -185,10 +170,10 @@ def pack_chunk_text(
     first and slicing after would copy the full token array into every
     fragment row: quadratic for a document spanning many chunks).
     """
-    pos = _positions(docs, max_tokens, n_shards, with_text=True)
+    pos = _positions(docs, with_text=True)
 
     def piece_struct(c):
-        lo, hi = _interval_cols(F.col("__start"), F.col("__n_tokens"), c, max_tokens)
+        lo, hi = _interval_cols(F.col("__start"), F.col("__n_tokens"), c)
         piece = F.concat_ws(
             " ",
             F.slice(F.col("__ws"), (lo - F.col("__start") + 1).cast("int"), (hi - lo).cast("int")),
@@ -201,7 +186,7 @@ def pack_chunk_text(
         )
 
     pieces = pos.select(
-        "shard", F.explode(F.transform(_chunk_seq(max_tokens), piece_struct)).alias("__x")
+        "shard", F.explode(F.transform(_chunk_seq(), piece_struct)).alias("__x")
     ).select(
         "shard",
         F.col("__x.c").alias("chunk_id"),
@@ -250,11 +235,7 @@ def _ffd_pack(lengths: Iterable[tuple[int, int]], max_tokens: int) -> dict[int, 
     return out
 
 
-def pack_bins_ffd(
-    docs: DataFrame,
-    max_tokens: int = 512,
-    n_shards: int = 8,
-) -> DataFrame:
+def pack_bins_ffd(docs: DataFrame) -> DataFrame:
     """First-fit-decreasing packing (documents kept whole): per (shard,
     bin) — document count, token fill, and the largest member.  The greedy
     is per-shard ``applyInPandas`` over the (doc_id, n_tokens) LEDGER only
@@ -271,18 +252,18 @@ def pack_bins_ffd(
     share one greedy placement and silently overflow a bin, so the
     per-shard packer fails loudly instead.
     """
-    if max_tokens <= 0 or n_shards <= 0:
-        raise ValueError("max_tokens and n_shards must be positive")
     n_tok = F.size(words(F.col("text"))).cast("long")
     ledger = (
         docs.where(F.col("text") != "")  # empty docs contribute nothing
         .select(
             F.col("doc_id"),
             n_tok.alias("n_tokens"),
-            _shard_col(n_shards).alias("shard"),
+            _shard_col().alias("shard"),
         )
         .where(F.col("n_tokens") > 0)
     )
+
+    cap = PACK_MAX_TOKENS
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf["doc_id"].duplicated().any():
@@ -291,7 +272,7 @@ def pack_bins_ffd(
                 f"pack_bins_ffd requires unique doc ids; id {dup!r} appears "
                 "more than once — dedupe upstream"
             )
-        assign = _ffd_pack(zip(pdf["doc_id"].tolist(), pdf["n_tokens"].tolist()), max_tokens)
+        assign = _ffd_pack(zip(pdf["doc_id"].tolist(), pdf["n_tokens"].tolist()), cap)
         pdf = pdf.assign(bin_id=pdf["doc_id"].map(assign))
         g = pdf.groupby(["shard", "bin_id"], as_index=False).agg(
             n_docs=("doc_id", "size"),

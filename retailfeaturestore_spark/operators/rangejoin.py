@@ -12,7 +12,7 @@ like any other — with the exact range predicate applied as a post-filter.
 
 Each (point, interval) match appears exactly once (the point's single
 bucket), so no dedup pass is needed.  Cost model: interval replication =
-ceil(span / bucket) + 1 rows per interval — pick ``bucket_days`` near the
+ceil(span / bucket) + 1 rows per interval — ``BUCKET_DAYS`` sits near the
 typical span so replication stays O(1) while each bucket pairs only
 time-adjacent rows.  At 100 TB this is the difference between a shuffle
 keyed on (key, week) and a nested loop over every whale customer's
@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 
 __all__ = ["bucketed_range_join"]
 
+# the time-bucket width, near the callers' 7- and 14-day interval spans
+BUCKET_DAYS = 7
+
 
 def bucketed_range_join(
     points: DataFrame,
@@ -34,7 +37,6 @@ def bucketed_range_join(
     point_ts: str,
     start_ts: str,
     end_ts: str,
-    bucket_days: int = 7,
     closed: str = "right",
 ) -> DataFrame:
     """Join each ``points`` row to every ``intervals`` row of the same
@@ -57,7 +59,7 @@ def bucketed_range_join(
         raise ValueError(f"closed must be one of {sorted(preds)}")
     inc_start, inc_end = preds[closed]
 
-    bucket_us = bucket_days * 86_400 * 1_000_000
+    bucket_us = BUCKET_DAYS * 86_400 * 1_000_000
 
     def bucket_of(c: Column) -> Column:
         return F.floor(F.unix_micros(c) / F.lit(bucket_us))

@@ -55,12 +55,12 @@ precedent): the expensive slice is CONTROL-PLANE — the range boundary
 sample, the localCheckpoint materialization, and the O(P) totals collect,
 ~1.4-1.7 s of fixed driver-visible jobs at any data size — while the
 per-row execute slice is 0.3-0.5 s.  Passing ``cache_scope=<dataset>``
-(+ a ``cache_key`` uniquely naming the input recipe) memoizes the
-(checkpointed frame, totals) artifact in the session's scope-keyed memo,
-so repeat calls pay only the execute slice; ``queries.invalidate_caches``
-evicts by scope, and a fresh session's first call pays the honest build —
-the oracle hash certifies both paths because they are the same literals
-over the same blocks.
+memoizes the (checkpointed frame, totals) artifact in the session's
+scope-keyed memo under the operator's name — each operator serves one
+input recipe, its one registry query — so repeat calls pay only the
+execute slice; ``queries.invalidate_caches`` evicts by scope, and a fresh
+session's first call pays the honest build — the oracle hash certifies
+both paths because they are the same literals over the same blocks.
 Reference parity: the single-process engine sorts everything in memory
 anyway (pandas ``sort_values`` in jobs/build_feature_views.py), so any
 faithful distributed ranking is new surface, not a translation.
@@ -88,15 +88,15 @@ def _num_partitions(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
 
 
-def _resident(spark, cache_key: str | None, cache_scope: str | None, build):
+def _resident(spark, cache_key: str, cache_scope: str | None, build):
     """Memoize a control-plane artifact — (checkpointed frame, totals
     rows) — per (recipe, dataset version) in the session's scope-keyed
-    memo (the knn resident-serving recipe).  ``cache_key`` must uniquely
-    name the INPUT RECIPE (frame + ordering + partitioning); the scope is
-    the dataset version, and ``queries.invalidate_caches`` evicts both
-    together on any rewrite.  No key/scope = build every call (the
-    pre-r11 behavior)."""
-    if cache_scope is None or cache_key is None:
+    memo (the knn resident-serving recipe).  ``cache_key`` names the
+    INPUT RECIPE (frame + ordering + partitioning): the calling operator,
+    whose one program caller fixes the recipe; the scope is the dataset
+    version, and ``queries.invalidate_caches`` evicts both together on any
+    rewrite.  No scope = build every call (the pre-r11 behavior)."""
+    if cache_scope is None:
         return build()
     from ._cache import session_memo
 
@@ -114,15 +114,16 @@ def _prefix_and_total(
     order_by: Sequence[Column],
     value: Column,
     out_col: str,
-    cache_key: str | None = None,
-    cache_scope: str | None = None,
+    cache_key: str,
+    cache_scope: str | None,
 ) -> tuple[DataFrame, int]:
     """(frame + inclusive global prefix of ``value``, grand total).
 
     One eager job (the O(P) totals collect, which also materializes the
     lazy localCheckpoint); the per-row work stays lazy for the consumer.
-    With ``cache_key``/``cache_scope``, the checkpointed frame + totals
-    memoize per dataset version and repeat calls skip both control jobs.
+    With ``cache_scope``, the checkpointed frame + totals memoize per
+    ``cache_key`` and dataset version, and repeat calls skip both control
+    jobs.
     """
     n_part = _num_partitions(df)
 
@@ -163,7 +164,6 @@ def range_prefix_sum(
     value: Column,
     out_col: str,
     *,
-    cache_key: str | None = None,
     cache_scope: str | None = None,
 ) -> DataFrame:
     """Add ``out_col`` = inclusive prefix sum of ``value`` under the global
@@ -177,7 +177,7 @@ def range_prefix_sum(
     ordering key first, so keys are unique) are safe either way.
     """
     out, _ = _prefix_and_total(
-        df, order_by, value, out_col, cache_key, cache_scope
+        df, order_by, value, out_col, "range_prefix_sum", cache_scope
     )
     return out
 
@@ -188,7 +188,6 @@ def exact_ntile(
     k: int,
     out_col: str,
     *,
-    cache_key: str | None = None,
     cache_scope: str | None = None,
 ) -> DataFrame:
     """SQL ``ntile(k) OVER (ORDER BY ...)`` semantics — the first
@@ -202,7 +201,7 @@ def exact_ntile(
     extra job, aggregate, or join."""
     rank_col = "__rp_rank"
     ranked, n = _prefix_and_total(
-        df, order_by, F.lit(1).cast("long"), rank_col, cache_key, cache_scope,
+        df, order_by, F.lit(1).cast("long"), rank_col, "exact_ntile", cache_scope,
     )
     return ranked.withColumn(out_col, _tile_expr(rank_col, n, k)).drop(rank_col)
 
@@ -236,8 +235,6 @@ def exact_ntile_multi(
     k: int,
     tiebreak: Sequence[str],
     *,
-    carry: Sequence[str] | None = None,
-    cache_key: str | None = None,
     cache_scope: str | None = None,
 ) -> DataFrame:
     """N independent exact ntile(k) rankings of the SAME frame for the cost
@@ -249,9 +246,10 @@ def exact_ntile_multi(
     non-null NUMERIC column expression (ordered exactly via decimal(38,9);
     descending = exact decimal negation); ``tiebreak``: column names whose
     ascending order completes each spec's TOTAL order (the same
-    SQL-determinism requirement as :func:`exact_ntile`).  Returns one row
-    per input row's ``carry`` key (default: the tiebreak columns, which
-    must then be unique per row) with every spec's tile column attached.
+    SQL-determinism requirement as :func:`exact_ntile`).  Returns ``df``'s
+    columns — the caller selects the ones to carry through the pass — with
+    every spec's tile column attached, one row per input row (the unique
+    tiebreak columns are among them).
 
     Shape — this is a FUSION, not a loop: the frame map-side explodes to
     (spec, value, tiebreak) rows, ONE range exchange partitions the union
@@ -263,7 +261,7 @@ def exact_ntile_multi(
     ``exact_ntile`` calls: 1/N the control-plane jobs and boundary samples,
     the same two all-to-all data exchanges (over N x skinny rows), still
     zero single-partition stages and O(N x P) driver state."""
-    carry_cols = list(carry) if carry is not None else list(tiebreak)
+    cols = df.columns
     n_specs = len(specs)
     if n_specs == 0:
         raise ValueError("exact_ntile_multi needs at least one spec")
@@ -281,11 +279,8 @@ def exact_ntile_multi(
             for i, (value, asc, _) in enumerate(specs)
         ]
     )
-    tagged = df.select(
-        *carry_cols, *[c for c in tiebreak if c not in carry_cols],
-        F.explode(packed).alias("__e"),
-    ).select(
-        *dict.fromkeys([*carry_cols, *tiebreak]),
+    tagged = df.select(*cols, F.explode(packed).alias("__e")).select(
+        *cols,
         F.col("__e.s").alias(_SPEC),
         F.col("__e.v").alias(_VAL),
     )
@@ -302,7 +297,7 @@ def exact_ntile_multi(
             .collect()
         )
 
-    base, rows = _resident(df.sparkSession, cache_key, cache_scope, build)
+    base, rows = _resident(df.sparkSession, "exact_ntile_multi", cache_scope, build)
     # exclusive prefix per spec over pid order; map key = pid * N + spec
     per_spec: dict[int, list[tuple[int, int]]] = {}
     for r in rows:
@@ -343,7 +338,7 @@ def exact_ntile_multi(
             else F.when(F.col(_SPEC) == F.lit(i), expr).otherwise(tile_by_spec)
         )
     ranked = ranked.withColumn(_TILE, tile_by_spec)
-    return ranked.groupBy(*carry_cols).agg(
+    return ranked.groupBy(*cols).agg(
         *[
             F.max(F.when(F.col(_SPEC) == F.lit(i), F.col(_TILE)))
             .cast("long")

@@ -25,17 +25,20 @@ __all__ = ["bm25_topk", "rrf_fuse"]
 BM25_MAX_LITERAL_TERMS = 64
 # BM25 term-saturation and length-normalization constants
 _K1, _B = 1.2, 0.75
+# documents kept per query by bm25_topk and by rrf_fuse
+TOP_K = 10
+# the RRF rank offset (Cormack et al.'s k = 60)
+RRF_K0 = 60
 
 
 def bm25_topk(
     docs: DataFrame,
     term_queries: Iterable[tuple[int, str]],
-    k: int = 10,
     pretokenized: DataFrame | None = None,
     stats: tuple[int, int] | None = None,
     term_dfs: dict[str, int] | None = None,
 ) -> DataFrame:
-    """BM25 top-k per query over a (query_id, term) bag.
+    """BM25 top-``TOP_K`` per query over a (query_id, term) bag.
 
     Scale shape (re-planned r13; history: the pre-r11 path exploded EVERY
     token and re-ran the corpus pipeline under two broadcast branches;
@@ -247,7 +250,7 @@ def bm25_topk(
     )
     return (
         per_qd.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "rank",
@@ -259,16 +262,15 @@ def bm25_topk(
     )
 
 
-def rrf_fuse(
-    lex: DataFrame, dense: DataFrame, k: int = 10, k0: int = 60
-) -> DataFrame:
+def rrf_fuse(lex: DataFrame, dense: DataFrame) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al.): full-outer merge of two
-    (query_id, doc_id, rank_*) lists, contributions quantized to x1e12
-    longs BEFORE the sum (order-free exact); single-list docs keep a null
-    rank on the missing side.  Fusion is top-k-sized regardless of corpus
-    size — the scale cost lives entirely in the two input retrievers."""
+    (query_id, doc_id, rank_*) lists into each query's top ``TOP_K``,
+    contributions quantized to x1e12 longs BEFORE the sum (order-free
+    exact); single-list docs keep a null rank on the missing side.  Fusion
+    is top-k-sized regardless of corpus size — the scale cost lives
+    entirely in the two input retrievers."""
     contrib = lambda c: F.coalesce(  # noqa: E731
-        F.round(F.lit(1e12) / (F.lit(k0) + F.col(c))).cast("long"),
+        F.round(F.lit(1e12) / (F.lit(RRF_K0) + F.col(c))).cast("long"),
         F.lit(0).cast("long"),
     )
     fused = lex.join(dense, ["query_id", "doc_id"], "full_outer").withColumn(
@@ -279,7 +281,7 @@ def rrf_fuse(
     )
     return (
         fused.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "rank",

@@ -50,6 +50,20 @@ __all__ = [
 ]
 
 FIXED_POINT_SCALE = 2**25
+# fixed Lloyd rounds of every deterministic trainer here (KMeans cells,
+# PQ codebooks); the SQL oracles unroll exactly this many
+KMEANS_ITERS = 2
+# neighbors per query: the IVF searches and their exact recall baseline
+# (cosine_topk_quantized) keep IVF_TOP_K, the PQ/ADC searches PQ_TOP_K
+IVF_TOP_K = 3
+PQ_TOP_K = 5
+# random_projection: output dimensions and the md5 sign-matrix seed
+RP_OUT_DIMS = 8
+RP_SEED = "rp0"
+# sign_lsh_neardup: bands, sign bits per band, and the exact-cosine cut
+SIGN_LSH_BANDS = 4
+SIGN_LSH_BAND_BITS = 8
+SIGN_LSH_THRESHOLD = 0.35
 
 
 def _quant(x: Column) -> Column:
@@ -192,7 +206,6 @@ def _assign_py(cents, vec: list[int]) -> int:
 def _kmeans_train(
     vectors: DataFrame,
     k: int,
-    iters: int,
     cache_scope: str | None,
     fetch_ids=None,
 ):
@@ -224,7 +237,7 @@ def _kmeans_train(
             "space — remap ids or lower k"
         )
     cents = sorted(seed)
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         stats = (
             q.withColumn("cell", _assign_struct_expr(cents).getField("cell"))
             .select("cell", F.posexplode("__q").alias("i", "__qi"))
@@ -289,17 +302,17 @@ def cosine_topk(
 def cosine_topk_quantized(
     corpus: DataFrame,
     query_ids,
-    k: int = 5,
     cache_scope: str | None = None,
 ) -> DataFrame:
-    """Exact brute-force top-k cosine for a LITERAL query-id set, scored
-    over the shared quantized corpus (:func:`_quantized_corpus`) —
-    bit-identical ranking to :func:`cosine_topk` (same int64 dot products
+    """Exact brute-force top-``IVF_TOP_K`` cosine for a LITERAL query-id
+    set, scored over the shared quantized corpus (:func:`_quantized_corpus`)
+    — bit-identical ranking to :func:`cosine_topk` (same int64 dot products
     and norms, same IEEE division, same tiebreak) with ONE pure-map job:
     query vectors + norms are plan literals (``quantized_vec_rows`` memo —
     zero collects when a training pass already fetched them), so there is
     no broadcast exchange and no second scan of the raw vectors.  The
-    eval-only baseline leg of ``knn_recall_eval`` at 100 TB runs exactly
+    eval-only baseline leg of ``knn_recall_eval`` (against
+    :func:`ivf_topk_cells`' top-``IVF_TOP_K``) at 100 TB runs exactly
     this over a query sample.  Query ids absent from the corpus produce no
     rows (``cosine_topk`` parity).  r13, VERDICT r12 next-round #5."""
     qrows = quantized_vec_rows(
@@ -353,20 +366,17 @@ def cosine_topk_quantized(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= IVF_TOP_K)
         .select("q_id", "n_id", "cosine", F.col("rank").cast("long").alias("rank"))
     )
 
 
-def ivf_topk_label(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-) -> DataFrame:
-    """IVF-style ANN: restrict the search to the query's coarse cell
-    (``label`` plays the quantizer assignment).  Equi-join on the cell id
-    -> the cross product collapses to within-cell pairs; at scale this is the
-    difference between O(n*q) and O(n*q / n_cells)."""
+def ivf_topk_label(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF-style ANN, top ``IVF_TOP_K`` per query: restrict the search to
+    the query's coarse cell (``label`` plays the quantizer assignment).
+    Equi-join on the cell id -> the cross product collapses to within-cell
+    pairs; at scale this is the difference between O(n*q) and
+    O(n*q / n_cells)."""
     q = F.broadcast(
         _with_norm(queries).select(
             F.col("vec_id").alias("q_id"),
@@ -393,7 +403,7 @@ def ivf_topk_label(
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= IVF_TOP_K)
         .select("q_id", "n_id", "cosine", F.col("rank").cast("long").alias("rank"))
     )
 
@@ -401,7 +411,6 @@ def ivf_topk_label(
 def kmeans_cells(
     vectors: DataFrame,
     k: int = 8,
-    iters: int = 2,
     cache_scope: str | None = None,
     with_dist: bool = False,
 ) -> DataFrame:
@@ -420,7 +429,7 @@ def kmeans_cells(
       integer grid (sum < 2^53, so the double division is exact-input and
       correctly rounded — identical across engines);
     - FIXED iteration count (no data-dependent convergence test), so the
-      oracle is ``iters`` unrolled CTEs.
+      oracle is ``KMEANS_ITERS`` unrolled CTEs.
 
     Scale shape per iteration: one broadcast of k centroid rows against the
     corpus (no corpus shuffle) for assignment + one (cell, dim) groupBy for
@@ -439,9 +448,7 @@ def kmeans_cells(
     cluster does ONE map-side-combinable per-cell aggregation; only k*dims
     summary values return to the driver.
     """
-    q, cents, _ = _kmeans_train(
-        vectors, k=k, iters=iters, cache_scope=cache_scope,
-    )
+    q, cents, _ = _kmeans_train(vectors, k=k, cache_scope=cache_scope)
 
     def assign_struct(cents) -> Column:
         return _assign_struct_expr(cents)
@@ -465,16 +472,14 @@ def kmeans_cells(
 def ivf_topk_cells(
     corpus: DataFrame,
     query_ids,
-    k_neighbors: int = 3,
     n_cells: int = 8,
-    iters: int = 2,
     cache_scope: str | None = None,
 ) -> DataFrame:
     """IVF ANN with a REAL trained coarse quantizer: KMeans cells from
-    :func:`kmeans_cells`, then cell-restricted exact cosine top-k for the
-    query ids (nprobe=1 — the query searches its own cell).  The recall/
-    speed knob at scale is (n_cells, nprobe); the corpus never leaves its
-    cell partition.
+    :func:`kmeans_cells`, then cell-restricted exact cosine
+    top-``IVF_TOP_K`` for the query ids (nprobe=1 — the query searches its
+    own cell).  The recall/speed knob at scale is (n_cells, nprobe); the
+    corpus never leaves its cell partition.
 
     Query sets up to ``_LITERAL_QUERY_MAX`` take the LITERAL path (r13,
     VERDICT r12 next-round #5): the query vectors ride along in the seed
@@ -487,7 +492,7 @@ def ivf_topk_cells(
     qids = sorted({int(i) for i in query_ids})
     if len(qids) <= _LITERAL_QUERY_MAX:
         q, cents, got = _kmeans_train(
-            corpus, k=n_cells, iters=iters, cache_scope=cache_scope, fetch_ids=qids,
+            corpus, k=n_cells, cache_scope=cache_scope, fetch_ids=qids,
         )
         qrows = [(i, got[i]) for i in qids if i in got]
         structs = ", ".join(
@@ -544,14 +549,12 @@ def ivf_topk_cells(
         )
         return (
             scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k_neighbors)
+            .where(F.col("rank") <= IVF_TOP_K)
             .select(
                 "q_id", "n_id", "cosine", F.col("rank").cast("long").alias("rank")
             )
         )
-    cells = kmeans_cells(
-        corpus, k=n_cells, iters=iters, cache_scope=cache_scope,
-    )
+    cells = kmeans_cells(corpus, k=n_cells, cache_scope=cache_scope)
     base = _with_norm(corpus).join(
         cells.withColumnRenamed("id", "vec_id"), "vec_id"
     )
@@ -582,7 +585,7 @@ def ivf_topk_cells(
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k_neighbors)
+        .where(F.col("rank") <= IVF_TOP_K)
         .select("q_id", "n_id", "cosine", F.col("rank").cast("long").alias("rank"))
     )
 
@@ -619,7 +622,6 @@ def pq_train_encode(
     vectors: DataFrame,
     m: int = 4,
     k_codes: int = 16,
-    iters: int = 2,
     cache_scope: str | None = None,
 ):
     """Product-quantization training + encoding: split each vector into
@@ -681,7 +683,7 @@ def pq_train_encode(
             ]
         )
 
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         stats = (
             q.select(F.explode(sub_structs(cents)).alias("e"))
             .select("e.sub", "e.cell", F.posexplode("e.sv").alias("j", "qi"))
@@ -713,13 +715,12 @@ def pq_train_encode(
 def pq_topk_adc_resident(
     corpus: DataFrame,
     query_ids,
-    k_neighbors: int = 5,
     m: int = 4,
     k_codes: int = 16,
-    iters: int = 2,
     cache_scope: str | None = None,
 ) -> DataFrame:
-    """Serving-semantics PQ ANN: train once per dataset, score per request.
+    """Serving-semantics PQ ANN: train once per dataset, score per request,
+    ``PQ_TOP_K`` neighbors per query.
 
     PQ-compressed ANN with asymmetric distance computation (ADC), Jegou et
     al., "Product Quantization for Nearest Neighbor Search" (TPAMI 2011):
@@ -755,7 +756,7 @@ def pq_topk_adc_resident(
     qk = ("pq_resident_queries", cache_scope, tuple(sorted(query_ids)))
     if mk not in memo:
         cents, coded0, seed_vecs = pq_train_encode(
-            corpus, m=m, k_codes=k_codes, iters=iters, cache_scope=cache_scope,
+            corpus, m=m, k_codes=k_codes, cache_scope=cache_scope,
         )
         missing = [qid for qid in query_ids if qid not in seed_vecs]
         fetched = {
@@ -800,8 +801,7 @@ def pq_topk_adc_resident(
             raise ValueError(f"query ids not present in the corpus: {absent[:10]}")
         memo[qk] = sorted((int(qid), fetched[qid]) for qid in query_ids)
     return _adc_scored_topk(
-        coded, cents, memo[qk], m=m, k_codes=k_codes,
-        k_neighbors=k_neighbors, exclude_self=True,
+        coded, cents, memo[qk], m=m, k_codes=k_codes, exclude_self=True
     )
 
 
@@ -811,14 +811,13 @@ def _adc_scored_topk(
     qrows,
     m: int,
     k_codes: int,
-    k_neighbors: int,
     exclude_self: bool,
 ) -> DataFrame:
     """ADC scoring core shared by the in-session path
     (:func:`pq_topk_adc_resident`) and the table-backed index
     (:func:`search_pq_index_mtable`): per-query LUT literals, one
     pure-map explode over the encoded corpus,
-    one per-query top-k window exchange.  ``exclude_self`` drops
+    one per-query top-``PQ_TOP_K`` window exchange.  ``exclude_self`` drops
     ``n_id == q_id`` matches — correct when queries are corpus members,
     wrong for an external query id space."""
     w = len(qrows[0][1]) // m
@@ -855,7 +854,7 @@ def _adc_scored_topk(
     wnd = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("n_id").asc())
     return (
         flat.withColumn("rank", F.row_number().over(wnd))
-        .where(F.col("rank") <= k_neighbors)
+        .where(F.col("rank") <= PQ_TOP_K)
         .select(
             "q_id",
             "n_id",
@@ -870,7 +869,6 @@ def build_pq_index_mtable(
     tbl,
     m: int = 4,
     k_codes: int = 16,
-    iters: int = 2,
 ) -> int:
     """The ANN index AS AN ACID TABLE: train PQ once and commit the encoded
     corpus as one mtable version, with the codebooks + parameters riding
@@ -890,8 +888,7 @@ def build_pq_index_mtable(
     <= ``k_codes`` partitions): compactable, and the layout clusters the
     coarsest quantization cell together.  Returns the committed version."""
     cents, coded, _seed = pq_train_encode(
-        corpus, m=m, k_codes=k_codes, iters=iters,
-        cache_scope=f"mtable:{tbl.path}",
+        corpus, m=m, k_codes=k_codes, cache_scope=f"mtable:{tbl.path}",
     )
     rows = coded.select(
         "id",
@@ -902,7 +899,7 @@ def build_pq_index_mtable(
         "pq": {
             "m": m,
             "k_codes": k_codes,
-            "iters": iters,
+            "iters": KMEANS_ITERS,
             "d_sub": len(cents[0][0][1]),
             "fixed_point_scale": FIXED_POINT_SCALE,
             "codebooks": [[[cid, list(vec)] for cid, vec in sub] for sub in cents],
@@ -995,11 +992,7 @@ def append_pq_index_mtable(
     )
 
 
-def search_pq_index_mtable(
-    tbl,
-    queries,
-    k_neighbors: int = 5,
-) -> DataFrame:
+def search_pq_index_mtable(tbl, queries) -> DataFrame:
     """Serve ANN queries from the table-backed index's latest version: the
     snapshot read plans against exactly that version's code files and the
     codebooks that encoded them.  Query LUTs as in
@@ -1032,29 +1025,24 @@ def search_pq_index_mtable(
         raise ValueError(f"index version {version} at {tbl.path} is empty")
     return _adc_scored_topk(
         codes.select("id", "__codes"), cents, qrows,
-        m=int(pq["m"]), k_codes=int(pq["k_codes"]),
-        k_neighbors=k_neighbors, exclude_self=False,
+        m=int(pq["m"]), k_codes=int(pq["k_codes"]), exclude_self=False,
     )
 
 
-def random_projection(
-    vectors: DataFrame,
-    out_dims: int = 8,
-    seed: str = "rp0",
-) -> DataFrame:
+def random_projection(vectors: DataFrame) -> DataFrame:
     """Deterministic sparse random projection (Achlioptas ±1 /
     Johnson-Lindenstrauss): project the corpus's float embeddings to
-    ``out_dims`` via a sign matrix derived from md5 — the dimensionality
+    ``RP_OUT_DIMS`` via a sign matrix derived from md5 — the dimensionality
     reduction an ANN pipeline runs BEFORE indexing at 100 TB (shorter
     vectors = smaller codes, cheaper distances; JL guarantees pairwise
-    distances distort by at most eps with out_dims = O(log n / eps^2)).
+    distances distort by at most eps with O(log n / eps^2) output dims).
 
     Engine-exact randomness: ``sign(i, j) = +1 if the first hex digit of
-    md5('{seed}#i#j') is even else -1`` — both engines compute the
+    md5('{RP_SEED}#i#j') is even else -1`` — both engines compute the
     identical matrix, and the projection is an int64 sum of quantized
     components times ±1 (order-free exact; the double output is one IEEE
     division by the fixed-point scale).  The matrix is driver-side
-    literals (out_dims x in_dims ints — control-plane sized, the PQ
+    literals (out dims x in dims ints — control-plane sized, the PQ
     codebook pattern), so projection is a pure MAP over the corpus: no
     join, no shuffle, whole-stage codegen.
 
@@ -1075,11 +1063,11 @@ def random_projection(
     in_dims = len(first[0])
     signs = [
         [
-            1 if int(hashlib.md5(f"{seed}#{i}#{j}".encode()).hexdigest()[0], 16) % 2 == 0
+            1 if int(hashlib.md5(f"{RP_SEED}#{i}#{j}".encode()).hexdigest()[0], 16) % 2 == 0
             else -1
             for i in range(in_dims)
         ]
-        for j in range(out_dims)
+        for j in range(RP_OUT_DIMS)
     ]
     q = vectors.select(
         F.col("vec_id").alias("id"),
@@ -1099,7 +1087,7 @@ def random_projection(
                     lambda acc, v: acc + v,
                 ).alias("value_scaled"),
             )
-            for j in range(out_dims)
+            for j in range(RP_OUT_DIMS)
         ]
     )
     return (
@@ -1199,34 +1187,31 @@ def mmr_diverse_topk(
     return with_vec.groupBy("q_id").applyInPandas(_mmr, out_schema)
 
 
-def sign_lsh_neardup(
-    vectors: DataFrame,
-    threshold: float = 0.35,
-    bands: int = 4,
-    band_bits: int = 8,
-) -> DataFrame:
+def sign_lsh_neardup(vectors: DataFrame) -> DataFrame:
     """Embedding near-dup pairs via sign-pattern LSH.
 
     Band b's key = the sign bits of coordinates [b*w, (b+1)*w) where
-    ``w = min(band_bits, dim // bands)`` — the band width ADAPTS to the
+    ``w = min(SIGN_LSH_BAND_BITS, dim // SIGN_LSH_BANDS)`` — the band width ADAPTS to the
     corpus dimension (one control-plane ``head()``).  A hardcoded width
     longer than dim/bands left the trailing bands with EMPTY keys, turning
     them into a single whale bucket that degraded candidate generation to
     an all-pairs self-join (caught by the r9 sf5 sweep on 16-dim synthetic
     embeddings: the Spark job and the DuckDB oracle both went quadratic).
-    On a 64-dim corpus with the (4, 8) defaults w stays 8 — the original
+    On a 64-dim corpus with 4 bands of 8 bits w stays 8 — the original
     banding, hash-stable.
 
     Vectors agreeing on ANY full band are candidates (cosine-correlated:
     sign agreement probability rises with angle similarity); candidates then
-    pass an exact cosine filter.  Self-join shuffles only (band, w-char key).
+    pass an exact cosine >= ``SIGN_LSH_THRESHOLD`` filter.  Self-join
+    shuffles only (band, w-char key).
     """
     first = vectors.select("embedding").head()
     if first is None:
         return vectors.sparkSession.createDataFrame(
             [], "vec_a long, vec_b long, cosine double"
         )
-    band_bits = max(1, min(band_bits, len(first[0]) // bands))
+    bands = SIGN_LSH_BANDS
+    band_bits = max(1, min(SIGN_LSH_BAND_BITS, len(first[0]) // bands))
     sig = F.concat_ws(
         "",
         F.transform(
@@ -1284,7 +1269,7 @@ def sign_lsh_neardup(
             dot_fixed(F.col("__va"), F.col("__vb")).cast("double")
             / (F.sqrt("__na") * F.sqrt("__nb")),
         )
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= SIGN_LSH_THRESHOLD)
         .select("vec_a", "vec_b", "cosine")
     )
 
@@ -1292,7 +1277,6 @@ def sign_lsh_neardup(
 def semantic_dedup(
     vectors: DataFrame,
     k: int = 8,
-    iters: int = 2,
     threshold: float = 0.6,
     cache_scope: str | None = None,
 ) -> DataFrame:
@@ -1328,9 +1312,7 @@ def semantic_dedup(
     """
     from pyspark import StorageLevel
 
-    assigned = kmeans_cells(
-        vectors, k=k, iters=iters, cache_scope=cache_scope, with_dist=True,
-    )
+    assigned = kmeans_cells(vectors, k=k, cache_scope=cache_scope, with_dist=True)
     if cache_scope is not None:
         # three plan subtrees consume the assignment (both pair-join sides
         # and the final audit join); each would re-run the literal-centroid

@@ -194,14 +194,14 @@ def kmv_tuple_overlap(
     sketch: DataFrame,
     tuples: DataFrame,
     group_cols: list[str],
-    group_col: str = "g",
     k: int = 64,
 ) -> DataFrame:
     """N-WAY distinct-intersection estimate: for every row of ``tuples``
     (columns ``group_cols`` naming n groups), estimate
     ``|distinct(g1) INTERSECT ... INTERSECT distinct(gn)|`` from the KMV
-    sketches alone — the k-way generalization of :func:`kmv_pair_overlap`
-    (e.g. "customers active in ALL THREE consecutive months", the
+    sketches alone (:func:`kmv_group_sketch_packed`'s ``(group, hs)``
+    frame, whose first column names the group) — the k-way generalization
+    of :func:`kmv_pair_overlap` (e.g. "customers active in ALL THREE consecutive months", the
     retention-cohort shape).
 
     Estimator over the combined sketch ``K = k-min(UNION of all n
@@ -214,6 +214,7 @@ def kmv_tuple_overlap(
     """
     if len(group_cols) < 2:
         raise ValueError("tuple overlap needs at least two group columns")
+    group_col = sketch.columns[0]
     arr = sketch.select(group_col, "hs")
     j = tuples
     for i, gc in enumerate(group_cols):

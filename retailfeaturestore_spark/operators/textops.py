@@ -189,13 +189,15 @@ def gopher_quality(
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    chunk_tokens: int = 32,
-    stride: int = 24,
-) -> DataFrame:
+# chunk_documents: tokens per chunk and the step between chunk starts
+CHUNK_TOKENS = 32
+CHUNK_STRIDE = 24
+
+
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Split each document's token sequence into overlapping context chunks
-    (size ``chunk_tokens``, step ``stride`` — overlap = chunk - stride), the
+    (size ``CHUNK_TOKENS``, step ``CHUNK_STRIDE`` — overlap = chunk -
+    stride), the
     standard windowing that feeds embedding indexes and packed training
     sequences.  Output: one row per chunk with ``(id, chunk_id, chunk_text,
     n_tokens)``; a document shorter than one chunk yields a single partial
@@ -208,19 +210,17 @@ def chunk_documents(
     their own keys.  Start positions, not text, drive the plan: no
     quadratic substring work, one ``slice`` per chunk.
     """
-    if stride <= 0 or chunk_tokens <= 0:
-        raise ValueError("chunk_tokens and stride must be positive")
     ws = words(F.col("text"))
     n = F.size(ws)
     # starts 1, 1+stride, ... <= n; an empty document yields NO chunks
     # (null sequence -> posexplode emits nothing).
-    starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(stride)))
+    starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(CHUNK_STRIDE)))
     chunked = docs.select(
         F.col("doc_id"),
         ws.alias("__ws"),
         F.posexplode(starts).alias("chunk_id", "__start"),
     )
-    piece = F.slice(F.col("__ws"), F.col("__start"), chunk_tokens)
+    piece = F.slice(F.col("__ws"), F.col("__start"), CHUNK_TOKENS)
     return chunked.select(
         F.col("doc_id"),
         F.col("chunk_id").cast("long").alias("chunk_id"),
@@ -294,17 +294,19 @@ def pii_scrub(docs: DataFrame) -> DataFrame:
     )
 
 
-def boilerplate_scrub(
-    docs: DataFrame,
-    passage_tokens: int = 8,
-    min_docs: int = 2,
-) -> DataFrame:
+# boilerplate_scrub: words per passage, and the distinct documents a
+# passage must appear in to count as boilerplate
+PASSAGE_TOKENS = 8
+BOILERPLATE_MIN_DOCS = 2
+
+
+def boilerplate_scrub(docs: DataFrame) -> DataFrame:
     """Corpus-global duplicated-passage removal (CCNet / RefinedWeb-style
     boilerplate scrub): split each document into consecutive
-    ``passage_tokens``-word passages, count each passage's document
+    ``PASSAGE_TOKENS``-word passages, count each passage's document
     frequency across the WHOLE corpus, and rewrite every document with the
-    passages that appear in ``min_docs``-or-more distinct documents
-    dropped (headers, footers, licence blocks, shared templates).  Output:
+    passages that appear in ``BOILERPLATE_MIN_DOCS``-or-more distinct
+    documents dropped (headers, footers, licence blocks, shared templates).  Output:
     one row per input document with ``clean_text`` (kept passages in
     original order), ``n_passages``, ``n_removed``, ``removed_tokens``.
 
@@ -318,12 +320,10 @@ def boilerplate_scrub(
     combines map-side.  Reference parity: the reference has no corpus-
     global scrub — this is the LLM-pipeline extension surface
     (Wenzek et al., CCNet, 2020)."""
-    if passage_tokens <= 0:
-        raise ValueError("passage_tokens must be positive")
     ws = words(F.col("text"))
     n = F.size(ws)
-    starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(passage_tokens)))
-    piece = F.slice(F.col("__ws"), F.col("__start"), passage_tokens)
+    starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(PASSAGE_TOKENS)))
+    piece = F.slice(F.col("__ws"), F.col("__start"), PASSAGE_TOKENS)
     p = (
         docs.select(
             F.col("doc_id"),
@@ -344,7 +344,7 @@ def boilerplate_scrub(
         .groupBy("__pdigest")
         .agg(F.count(F.lit(1)).cast("long").alias("__df"))
     )
-    keep = F.col("__df") < min_docs
+    keep = F.col("__df") < BOILERPLATE_MIN_DOCS
     flagged = p.join(dfreq, "__pdigest")
     kept_sorted = F.array_sort(
         F.collect_list(F.when(keep, F.struct("__pid", "__ptext")))

@@ -22,7 +22,7 @@ asks for), so it runs inside whole-stage codegen at crawl scale:
 - :func:`url_dedup` — one surviving doc per canonical URL (deterministic
   keep rule: smallest id), with the duplicate count carried for lineage.
 - :func:`domain_mixture_weights` — per-domain share of a weight column
-  (tokens), capped at ``cap`` and renormalized: the mixture-sampler input
+  (tokens), capped at ``MIX_CAP`` and renormalized: the mixture-sampler input
   that stops a whale domain from dominating the training mix.
 
 Reference parity: the reference has no crawl-curation surface at all
@@ -148,15 +148,17 @@ def url_dedup(df: DataFrame, url_col: str) -> DataFrame:
     )
 
 
-def domain_mixture_weights(
-    per_domain: DataFrame, weight_col: str, cap: float = 0.05
-) -> DataFrame:
+# the largest share of the total weight one domain keeps in the mixture
+MIX_CAP = 0.05
+
+
+def domain_mixture_weights(per_domain: DataFrame, weight_col: str) -> DataFrame:
     """Append ``raw_share`` (= weight / total) and ``mix_weight`` (weight
-    capped at ``cap`` of the total, renormalized over the capped mass) to
+    capped at ``MIX_CAP`` of the total, renormalized over the capped mass) to
     a per-domain aggregate — the sampling distribution a
     temperature/budget mixture stage consumes.  ``weight_col`` must be
     INTEGRAL (token counts): the cap is applied in weight units
-    (``cap_w = floor(cap * total)``, computed in DECIMAL so the floor
+    (``cap_w = floor(MIX_CAP * total)``, computed in DECIMAL so the floor
     boundary matches an exact-arithmetic oracle) so every sum stays an
     exact long and
     each output share is ONE exact-input IEEE division — float summation
@@ -172,7 +174,7 @@ def domain_mixture_weights(
     # floor(0.05 * tot) — a double 0.05 * tot can floor to a different
     # long when cap*total lands on an integer boundary (ADVICE r12 #2);
     # str(cap) carries the literal's exact decimal digits
-    cap_dec = Decimal(str(cap))
+    cap_dec = Decimal(str(MIX_CAP))
     with_tot = per_domain.crossJoin(F.broadcast(total)).withColumn(
         "__capped",
         F.least(
@@ -197,24 +199,26 @@ def domain_mixture_weights(
     )
 
 
-def url_screen(
-    df: DataFrame,
-    url_col: str,
-    blocked_domains: tuple[str, ...] = (),
-    blocked_path_terms: tuple[str, ...] = (),
-    max_host_digit_pct: int = 40,
-) -> DataFrame:
+# url_screen's lists and digit cut: blocked registrable domains, blocked
+# LITERAL path/query terms, and the largest digit share (percent) of a
+# host's alphanumerics that passes
+BLOCKED_DOMAINS: tuple[str, ...] = ("h10.com", "h21.co.uk", "h13.github.io")
+BLOCKED_PATH_TERMS: tuple[str, ...] = ("/p/13", "id=7")
+MAX_HOST_DIGIT_PCT = 25
+
+
+def url_screen(df: DataFrame, url_col: str) -> DataFrame:
     """URL-level admission screen — the curation gate crawl pipelines run
     BEFORE fetching or keeping content (RefinedWeb runs exactly this
     trio; CCNet/Dolma variants differ only in list contents):
 
-    - ``flag_blocked_domain``: the registrable domain (eTLD+1) is on the
-      blocklist — domain-level, so every subdomain of a listed domain is
+    - ``flag_blocked_domain``: the registrable domain (eTLD+1) is on
+      ``BLOCKED_DOMAINS`` — domain-level, so every subdomain of a listed domain is
       caught without listing them;
-    - ``flag_path_term``: a blocked term appears in the PATH or QUERY
+    - ``flag_path_term``: a ``BLOCKED_PATH_TERMS`` term appears in the PATH or QUERY
       (never matched against the host, where an innocent domain name
       could contain a blocked substring);
-    - ``flag_digit_host``: more than ``max_host_digit_pct`` percent of
+    - ``flag_digit_host``: more than ``MAX_HOST_DIGIT_PCT`` percent of
       the host's alphanumeric characters are digits (machine-generated
       spam-farm hosts; threshold compares as integers,
       ``100 * digits > pct * alnum``, so the cut is engine-exact);
@@ -224,34 +228,28 @@ def url_screen(
     (int 0/1) and ``url_ok`` to ``df``.  Pure map-side Column algebra
     (regexp + conditionals inside whole-stage codegen): zero exchanges,
     zero UDFs — the screen runs at crawl scale as a filter pushed over
-    the URL column alone, and both list arguments are plan literals
+    the URL column alone, and both lists are plan literals
     (broadcast-sized constants, same deployment shape as the PSL
     subset)."""
     canon = canonical_url(F.col(url_col))
     host = url_host(canon)
     dom = registrable_domain(host)
     path_q = F.regexp_replace(canon, r"^[a-z][a-z0-9+.-]*://[^/]*", "")
-    if blocked_domains:
-        f_dom = dom.isin(*blocked_domains).cast("int")
-    else:
-        f_dom = F.lit(0)
-    if blocked_path_terms:
-        # terms are LITERAL strings (per the contract above) — escape each
-        # alternative so a term like 'c++' or one containing '(' or '.'
-        # neither throws at plan time nor silently widens the match (r12
-        # advice finding).  re.escape output is Java-regex compatible
-        # (backslash-escaped punctuation only).
-        import re as _re
+    f_dom = dom.isin(*BLOCKED_DOMAINS).cast("int")
+    # terms are LITERAL strings (per the contract above) — escape each
+    # alternative so a term like 'c++' or one containing '(' or '.'
+    # neither throws at plan time nor silently widens the match (r12
+    # advice finding).  re.escape output is Java-regex compatible
+    # (backslash-escaped punctuation only).
+    import re as _re
 
-        pat = "(" + "|".join(_re.escape(t) for t in blocked_path_terms) + ")"
-        f_path = (F.regexp_count(path_q, F.lit(pat)) > 0).cast("int")
-    else:
-        f_path = F.lit(0)
+    pat = "(" + "|".join(_re.escape(t) for t in BLOCKED_PATH_TERMS) + ")"
+    f_path = (F.regexp_count(path_q, F.lit(pat)) > 0).cast("int")
     digits = F.length(F.regexp_replace(host, r"[^0-9]", ""))
     alnum = F.length(F.regexp_replace(host, r"[^a-z0-9]", ""))
     f_digit = (
         (alnum > 0)
-        & (digits * F.lit(100) > alnum * F.lit(int(max_host_digit_pct)))
+        & (digits * F.lit(100) > alnum * F.lit(MAX_HOST_DIGIT_PCT))
     ).cast("int")
     return (
         df.withColumn("canonical_url", canon)

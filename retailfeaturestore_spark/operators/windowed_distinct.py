@@ -1,10 +1,11 @@
 """Exact event-time-windowed distinct counts WITHOUT per-row set state.
 
-``size(collect_set(key) OVER [t - w, t])`` (the small-entity W3 path in
-``window_features``) keeps every distinct key of the window in memory per
-row — fine at retail cardinalities, pathological for whale entities at
-100 TB (a customer seeing 10^6 SKUs in a 30-day horizon materializes a
-10^6-element set per output row).
+The direct form, ``size(collect_set(key) OVER [t - w, t])``, keeps every
+distinct key of the window in memory per row and re-aggregates its sliding
+frame on every row — pathological for whale entities at 100 TB (a customer
+seeing 10^6 SKUs in a 30-day horizon materializes a 10^6-element set per
+output row).  Both windowed distinct counts of ``window_features`` (W3's
+distinct SKUs and the events family's distinct event types) run here.
 
 This module computes the SAME exact value with O(1) per-row state via the
 interval-delta decomposition::

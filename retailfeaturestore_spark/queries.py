@@ -585,7 +585,7 @@ def q_purchase_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataF
         clicks, purchases,
         key="user_id", point_ts="c_ts",
         start_ts="__start", end_ts="p_ts",
-        bucket_days=7, closed="left",
+        closed="left",
     )
     wp = Window.partitionBy("purchase_id")
     ranked = pairs.withColumns(
@@ -642,7 +642,7 @@ def q_orders_range_join_followups(spark: SparkSession, sf_dir: str) -> DataFrame
         points, intervals,
         key="customer_id", point_ts="follow_date",
         start_ts="anchor_date", end_ts="__end",
-        bucket_days=7, closed="right",
+        closed="right",
     ).select("customer_id", "anchor_key", "follow_key", "anchor_date", "follow_date")
 
 
@@ -1385,7 +1385,7 @@ def q_knn_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     force."""
     emb = load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",))
     queries = emb.where(F.col("vec_id") < 20)
-    return ivf_topk_label(emb, queries, k=3)
+    return ivf_topk_label(emb, queries)
 
 
 # Deterministic KMeans oracle: quantized int64 vectors, distances as pure
@@ -1483,8 +1483,8 @@ def q_knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ("knn_ivf_kmeans_topk", sf_dir),
         lambda: ivf_topk_cells(
-            emb, query_ids=list(range(_KM_QUERY_MAX)), k_neighbors=3,
-            n_cells=_KM_K, iters=2, cache_scope=sf_dir,
+            emb, query_ids=list(range(_KM_QUERY_MAX)), n_cells=_KM_K,
+            cache_scope=sf_dir,
         ),
     )
 
@@ -1587,8 +1587,8 @@ def q_knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     calls ``invalidate_caches``, which evicts memo + frame by scope."""
     emb = load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",))
     return pq_topk_adc_resident(
-        emb, query_ids=list(range(_PQ_QUERY_MAX)), k_neighbors=5, m=_PQ_M,
-        k_codes=_PQ_K, iters=2, cache_scope=sf_dir,
+        emb, query_ids=list(range(_PQ_QUERY_MAX)), m=_PQ_M, k_codes=_PQ_K,
+        cache_scope=sf_dir,
     )
 
 
@@ -1670,7 +1670,7 @@ def q_knn_pq_index_mtable(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _q_tmp_root(sf_dir, "pqidx", "rfs_pq_mtable")
     tbl = MTable(spark, root)
     build_pq_index_mtable(
-        emb.where(F.col("vec_id") < split), tbl, m=_PQ_M, k_codes=_PQ_K, iters=2
+        emb.where(F.col("vec_id") < split), tbl, m=_PQ_M, k_codes=_PQ_K
     )
     append_pq_index_mtable(tbl, emb.where(F.col("vec_id") >= split))
     tbl.compact()
@@ -1678,7 +1678,7 @@ def q_knn_pq_index_mtable(spark: SparkSession, sf_dir: str) -> DataFrame:
         (9000 + int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in emb.where(F.col("vec_id") < _PQ_QUERY_MAX).collect()
     ]
-    return search_pq_index_mtable(tbl, qs, k_neighbors=5)
+    return search_pq_index_mtable(tbl, qs)
 
 
 # MMR oracle: top-20 exact-cosine candidates per query, then the greedy
@@ -1822,7 +1822,7 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine >= 0.35 filter (corpus has no planted dups; threshold documents
     the candidate flow)."""
     emb = load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",))
-    return sign_lsh_neardup(emb, threshold=0.35, bands=4, band_bits=8)
+    return sign_lsh_neardup(emb)
 
 
 # Semantic-dedup clustering: the sign-LSH pair oracle nests as a CTE
@@ -1861,7 +1861,7 @@ def q_embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested as a CTE under the same recursive min-reachability closure
     that certifies the text CC queries."""
     emb = load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",))
-    pairs = sign_lsh_neardup(emb, threshold=0.35, bands=4, band_bits=8)
+    pairs = sign_lsh_neardup(emb)
     return connected_components(pairs, a_col="vec_a", b_col="vec_b").select(
         F.col("id").alias("vec_id"), F.col("cluster_id")
     )
@@ -1941,7 +1941,7 @@ def q_semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",))
     return semantic_dedup(
-        emb, k=_KM_K, iters=2, threshold=_SEMDEDUP_TAU, cache_scope=sf_dir
+        emb, k=_KM_K, threshold=_SEMDEDUP_TAU, cache_scope=sf_dir
     ).select(
         F.col("id").alias("vec_id"), "cell", "centroid_dist", "is_kept"
     )
@@ -4062,9 +4062,7 @@ def q_approx_customer_retention_months(spark: SparkSession, sf_dir: str) -> Data
             F.col("c.m").alias("month_c"),
         )
     )
-    est = kmv_tuple_overlap(
-        sk, trip, ["month_a", "month_b", "month_c"], "m", k=_KMV_K
-    )
+    est = kmv_tuple_overlap(sk, trip, ["month_a", "month_b", "month_c"], k=_KMV_K)
     exact = (
         trip.join(dm.select(F.col("m").alias("month_a"), "c"), "month_a")
         .join(dm.select(F.col("m").alias("month_b"), "c"), ["month_b", "c"])
@@ -4807,9 +4805,7 @@ def q_corpus_cdc_dedup_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.append(ingest_batch_neardup_mtable(batch, state, v_to))
 
-    ChangeFeedConsumer(
-        corpus, os.path.join(root, "ckpt"), max_versions_per_batch=1
-    ).run_available(admit)
+    ChangeFeedConsumer(corpus, os.path.join(root, "ckpt")).run_available(admit)
     dec = out[0]
     for d in out[1:]:
         dec = dec.unionByName(d)
@@ -5510,8 +5506,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         4,
         tiebreak=["customer_id"],
-        carry=["customer_id", "recency_days", "frequency", "monetary"],
-        cache_key="rfm_segments",
         cache_scope=sf_dir,
     )
     return out.select(
@@ -6864,9 +6858,7 @@ def q_model_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey").isNotNull().cast("long").alias("y"),
         )
     )
-    return exact_auc(
-        scored, "s", "y", cache_key="model_eval_auc", cache_scope=sf_dir
-    )
+    return exact_auc(scored, "s", "y", cache_scope=sf_dir)
 
 
 _CALIBRATION_ORACLE = """
@@ -6927,8 +6919,7 @@ def q_model_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.ranks import exact_ntile
 
     binned = exact_ntile(
-        scored, [F.col("s"), F.col("c_custkey")], 10, "bin",
-        cache_key="model_calibration_bins", cache_scope=sf_dir,
+        scored, [F.col("s"), F.col("c_custkey")], 10, "bin", cache_scope=sf_dir
     )
     return (
         binned.groupBy("bin")
@@ -7098,7 +7089,7 @@ def q_doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textops import chunk_documents
 
     d = load_table(spark, sf_dir, "documents")
-    return chunk_documents(d, chunk_tokens=32, stride=24)
+    return chunk_documents(d)
 
 
 # ---------------------------------------------------------------------------
@@ -8409,7 +8400,7 @@ def q_seq_packing_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is brief-mandated extension surface (training-data pipeline)."""
     from .operators.packing import pack_chunks
 
-    return pack_chunks(load_table(spark, sf_dir, "documents"), max_tokens=512, n_shards=8)
+    return pack_chunks(load_table(spark, sf_dir, "documents"))
 
 
 # Materialized packed sequences: same interval arithmetic as the ledger
@@ -8462,7 +8453,7 @@ def q_seq_packing_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     the job); string-exact oracle."""
     from .operators.packing import pack_chunk_text
 
-    return pack_chunk_text(load_table(spark, sf_dir, "documents"), max_tokens=512, n_shards=8)
+    return pack_chunk_text(load_table(spark, sf_dir, "documents"))
 
 
 # Index-quality evaluation: recall@3 of the trained-KMeans IVF index vs the
@@ -8569,15 +8560,15 @@ def q_knn_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ("knn_recall_appx", sf_dir),
         lambda: ivf_topk_cells(
-            emb, query_ids=list(range(_KM_QUERY_MAX)), k_neighbors=3,
-            n_cells=_KM_K, iters=2, cache_scope=sf_dir,
+            emb, query_ids=list(range(_KM_QUERY_MAX)), n_cells=_KM_K,
+            cache_scope=sf_dir,
         ).select("q_id", F.col("n_id").alias("__a_id")),
     )
     exact = get_or_register(
         spark,
         ("knn_recall_exact", sf_dir),
         lambda: cosine_topk_quantized(
-            emb, list(range(_KM_QUERY_MAX)), k=3, cache_scope=sf_dir
+            emb, list(range(_KM_QUERY_MAX)), cache_scope=sf_dir
         ).select("q_id", "n_id"),
     )
     hit = F.when(F.col("__a_id").isNotNull(), 1).otherwise(0)
@@ -8665,7 +8656,7 @@ def q_seq_packing_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm-level check."""
     from .operators.packing import pack_bins_ffd
 
-    return pack_bins_ffd(load_table(spark, sf_dir, "documents"), max_tokens=512, n_shards=8)
+    return pack_bins_ffd(load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -8718,9 +8709,7 @@ def q_boilerplate_passage_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textops import boilerplate_scrub
 
     return boilerplate_scrub(
-        load_table_parallel(spark, sf_dir, "documents", keys=("doc_id",)),
-        passage_tokens=8,
-        min_docs=2,
+        load_table_parallel(spark, sf_dir, "documents", keys=("doc_id",))
     )
 
 
@@ -8813,7 +8802,6 @@ def q_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk(
         docs,
         list(_BM25_QUERY_TERMS),
-        k=10,
         pretokenized=token_corpus(spark, sf_dir, docs=docs),
         stats=stats,
         term_dfs=dfs,
@@ -9083,7 +9071,7 @@ def q_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lex = get_or_register(spark, ("hybrid_rrf_lex", sf_dir), build_lex)
     dense = get_or_register(spark, ("hybrid_rrf_dense", sf_dir), build_dense)
-    return rrf_fuse(lex, dense, k=10, k0=60)
+    return rrf_fuse(lex, dense)
 
 
 _EPOCH_SHUFFLE_ORACLE = """
@@ -9221,7 +9209,7 @@ def q_part_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import pagerank_scaled
 
     edges = _copurchase_edges_cached(spark, sf_dir)
-    return pagerank_scaled(edges, n_iter=3, cache_scope=sf_dir)
+    return pagerank_scaled(edges, cache_scope=sf_dir)
 
 
 _RP_PROJ_CTE = """rpflat AS (
@@ -9333,7 +9321,7 @@ def q_knn_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import cosine_topk, random_projection
 
     emb = load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",))
-    proj = random_projection(emb, out_dims=8, seed="rp0").select(
+    proj = random_projection(emb).select(
         "id",
         "j",
         F.floor(F.col("value_scaled").cast("double") / F.lit(16.0))
@@ -9403,7 +9391,7 @@ def q_embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame
     from .operators.similarity import random_projection
 
     return random_projection(
-        load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",)), out_dims=8, seed="rp0"
+        load_table_parallel(spark, sf_dir, "embeddings", keys=("vec_id",))
     )
 
 
@@ -9517,7 +9505,7 @@ def q_part_similar_by_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.graph import similar_by_neighbors
 
     edges = _copurchase_edges_cached(spark, sf_dir)
-    return similar_by_neighbors(edges, max_degree=100, k=5, cache_scope=sf_dir)
+    return similar_by_neighbors(edges, cache_scope=sf_dir)
 
 
 @register("part_ppr_brand_affinity", oracle=_PPR_ORACLE, tags=("graph", "iterative"))
@@ -9536,7 +9524,7 @@ def q_part_ppr_brand_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = load_table(spark, sf_dir, "part").where(
         F.col("p_brand") == "Brand#1"
     ).select(F.col("p_partkey").alias("id"))
-    return pagerank_scaled(edges, n_iter=3, cache_scope=sf_dir, seeds=seeds)
+    return pagerank_scaled(edges, cache_scope=sf_dir, seeds=seeds)
 
 
 # ---------------------------------------------------------------------------
@@ -9766,7 +9754,7 @@ def q_domain_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("kept_toks").cast("long").alias("tokens"),
         )
     )
-    return domain_mixture_weights(per_dom, "tokens", cap=0.05)
+    return domain_mixture_weights(per_dom, "tokens")
 
 
 _URL_SCREEN_ORACLE = f"""
@@ -9824,13 +9812,7 @@ def q_url_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .withColumn("url", _url_expr())
     )
-    screened = url_screen(
-        docs,
-        "url",
-        blocked_domains=("h10.com", "h21.co.uk", "h13.github.io"),
-        blocked_path_terms=("/p/13", "id=7"),
-        max_host_digit_pct=25,
-    )
+    screened = url_screen(docs, "url")
     return screened.groupBy("registrable_domain").agg(
         F.count(F.lit(1)).cast("long").alias("n_urls"),
         F.sum("flag_blocked_domain").cast("long").alias("n_blocked_domain"),

@@ -9,9 +9,10 @@ encode the 100 TB design intent:
 - AQE on (runtime re-planning, skew-join splitting for whale-customer skew —
   SURVEY.md §7.4.8).
 - Arrow on (every pandas boundary is Arrow-batched, never row-at-a-time).
-- shuffle partitions sized to the environment (env override for the bench
-  driver); at cluster scale this should be ~2-3x total executor cores or
-  left to AQE coalescing.
+- 32 shuffle partitions (``DEFAULT_SHUFFLE_PARTITIONS``; a caller that
+  needs another width passes ``spark.sql.shuffle.partitions`` in
+  ``extra_conf``); at cluster scale this should be ~2-3x total executor
+  cores or left to AQE coalescing.
 - file listing as wide as the cores.  A read of more than 32 directories
   (a date-partitioned table) lists them in a Spark job whose width is
   ``spark.sql.sources.parallelPartitionDiscovery.parallelism``, default
@@ -30,7 +31,7 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def _default_local_dir() -> str:
@@ -41,11 +42,8 @@ def _default_local_dir() -> str:
     deleted mid-benchmark, losing both committed shuffle files and an
     in-flight temp_shuffle write target.  Precedence: the standard
     SPARK_LOCAL_DIRS env (cluster operators set this; Spark itself gives it
-    priority over the conf) > SPARK_GRAFT_LOCAL_DIR > a repo-sibling
-    scratch directory."""
-    env = os.environ.get("SPARK_LOCAL_DIRS") or os.environ.get(
-        "SPARK_GRAFT_LOCAL_DIR"
-    )
+    priority over the conf) > a repo-sibling scratch directory."""
+    env = os.environ.get("SPARK_LOCAL_DIRS")
     if env:
         return env
     d = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

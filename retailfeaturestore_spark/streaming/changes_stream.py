@@ -5,9 +5,9 @@ The Delta-streaming-source shape, built Spark-first: a micro-batch is one
 the commits' changed files — data never moves through Python), and the
 consumer's offset is simply the table VERSION processed through.  This is
 the ``Trigger.AvailableNow`` pattern: :meth:`ChangeFeedConsumer.run_available`
-drains every committed-but-unprocessed version in bounded version batches
-and stops; a scheduler (cron, Airflow, a driver loop) re-invokes it to
-tail the table.  At 100 TB cadence each invocation plans the day's
+drains every committed-but-unprocessed version, ``MAX_VERSIONS_PER_BATCH``
+commits per batch, and stops; a scheduler (cron, Airflow, a driver loop)
+re-invokes it to tail the table.  At 100 TB cadence each invocation plans the day's
 changed files, never the table — the consumption loop that replaces the
 reference's full gold rebuild (jobs/build_feature_views.py).
 
@@ -28,22 +28,18 @@ from ..sources.mtable import NoSuchVersion
 
 __all__ = ["ChangeFeedConsumer"]
 
+# commits one process() call sees: one commit per batch keeps each sink
+# commit, and the replay after a crash, to a single source commit
+MAX_VERSIONS_PER_BATCH = 1
+
 
 class ChangeFeedConsumer:
     """Versioned cursor over an :class:`~..sources.mtable.MTable`'s change
-    feed.  ``max_versions_per_batch`` bounds how many commits one
-    ``process()`` call sees (None = all available): small batches bound
-    sink-commit size and replay cost; large ones amortize job overhead."""
+    feed, ``MAX_VERSIONS_PER_BATCH`` commits per ``process()`` call."""
 
-    def __init__(
-        self,
-        tbl,
-        checkpoint_dir: str,
-        max_versions_per_batch: int | None = None,
-    ):
+    def __init__(self, tbl, checkpoint_dir: str):
         self.tbl = tbl
         self.checkpoint_dir = checkpoint_dir
-        self.max_versions = max_versions_per_batch
         os.makedirs(checkpoint_dir, exist_ok=True)
 
     @property
@@ -78,12 +74,7 @@ class ChangeFeedConsumer:
             cur = self.tbl._latest()
             if cur is None or cur[0] <= v0:
                 return done
-            latest = cur[0]
-            v1 = (
-                latest
-                if self.max_versions is None
-                else min(latest, v0 + self.max_versions)
-            )
+            v1 = min(cur[0], v0 + MAX_VERSIONS_PER_BATCH)
             try:
                 feed = self.tbl.read_changes(v0, v1)
             except NoSuchVersion as e:

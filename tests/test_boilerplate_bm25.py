@@ -13,16 +13,23 @@ from collections import Counter
 
 import pytest
 
+from retailfeaturestore_spark.operators import textops
 from retailfeaturestore_spark.operators.textops import boilerplate_scrub
 
 from conftest import TESTDATA_SF, requires_testdata
+
+
+@pytest.fixture
+def four_token_passages(monkeypatch):
+    """Four-word passages, so a few short documents share whole passages."""
+    monkeypatch.setattr(textops, "PASSAGE_TOKENS", 4)
 
 
 def docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_boilerplate_scrub_removes_cross_doc_passages(spark):
+def test_boilerplate_scrub_removes_cross_doc_passages(spark, four_token_passages):
     d = docs(
         spark,
         [
@@ -34,7 +41,7 @@ def test_boilerplate_scrub_removes_cross_doc_passages(spark):
     )
     out = {
         r.doc_id: r
-        for r in boilerplate_scrub(d, passage_tokens=4, min_docs=2).collect()
+        for r in boilerplate_scrub(d).collect()
     }
     # "a b c d" appears in docs 1, 2 and 4 -> boilerplate everywhere.
     assert out[1].clean_text == "e f g h"
@@ -47,34 +54,34 @@ def test_boilerplate_scrub_removes_cross_doc_passages(spark):
     assert out[4].clean_text == "m m m m t t t t"
 
 
-def test_boilerplate_scrub_doc_frequency_is_distinct_docs(spark):
+def test_boilerplate_scrub_doc_frequency_is_distinct_docs(spark, four_token_passages):
     # the same passage twice in ONE document is df=1 -> kept both times
     d = docs(spark, [(1, "a b c d a b c d"), (2, "z z z z")])
     out = {
         r.doc_id: r
-        for r in boilerplate_scrub(d, passage_tokens=4, min_docs=2).collect()
+        for r in boilerplate_scrub(d).collect()
     }
     assert out[1].clean_text == "a b c d a b c d"
     assert out[1].n_removed == 0
 
 
-def test_boilerplate_scrub_all_removed_yields_empty_string(spark):
+def test_boilerplate_scrub_all_removed_yields_empty_string(spark, four_token_passages):
     d = docs(spark, [(1, "a b c d"), (2, "a b c d")])
     out = {
         r.doc_id: r
-        for r in boilerplate_scrub(d, passage_tokens=4, min_docs=2).collect()
+        for r in boilerplate_scrub(d).collect()
     }
     assert out[1].clean_text == "" and out[2].clean_text == ""
     assert out[1].n_removed == 1 and out[1].removed_tokens == 4
 
 
-def test_boilerplate_scrub_tail_partial_passage(spark):
-    # 6 tokens with passage_tokens=4 -> passages of 4 and 2; the shared
+def test_boilerplate_scrub_tail_partial_passage(spark, four_token_passages):
+    # 6 tokens in 4-word passages -> passages of 4 and 2; the shared
     # SHORT tail is still counted and removable.
     d = docs(spark, [(1, "u1 u2 u3 u4 e f"), (2, "v1 v2 v3 v4 e f")])
     out = {
         r.doc_id: r
-        for r in boilerplate_scrub(d, passage_tokens=4, min_docs=2).collect()
+        for r in boilerplate_scrub(d).collect()
     }
     assert out[1].clean_text == "u1 u2 u3 u4"
     assert out[1].removed_tokens == 2

@@ -129,7 +129,7 @@ def _dest_counts(dest):
 
 def test_consumer_horizon_loss_is_a_loud_operator_error(spark, tmp_path):
     src = _mk4(spark, tmp_path)
-    c = ChangeFeedConsumer(src, str(tmp_path / "ckpt"), max_versions_per_batch=2)
+    c = ChangeFeedConsumer(src, str(tmp_path / "ckpt"))
     c.run_available(lambda df, a, b: None)
     # vacuum past the cursor... then new commits arrive
     src.delete(F.col("customer_id") == 1)
@@ -151,9 +151,7 @@ def test_consumer_horizon_loss_is_a_loud_operator_error(spark, tmp_path):
 def test_consumer_version_batching_and_bootstrap(spark, tmp_path):
     src = _mk4(spark, tmp_path)
     seen: list[tuple[int, int]] = []
-    c = ChangeFeedConsumer(
-        src, str(tmp_path / "ckpt1"), max_versions_per_batch=1
-    )
+    c = ChangeFeedConsumer(src, str(tmp_path / "ckpt1"))
     ranges = c.run_available(lambda df, a, b: seen.append((a, b)))
     # v_from=0 bootstraps: the first batch is v1's initial content as inserts
     assert ranges == [(0, 1), (1, 2), (2, 3), (3, 4)] == seen
@@ -197,7 +195,7 @@ def test_consumer_drain_extends_to_a_commit_landing_mid_drain(spark, tmp_path):
     commit that lands while a batch is processed drains in the same call."""
     src = MTable(spark, str(tmp_path / "race_src"))
     src.write(_with_date(_snap(spark, BASE)), partition_by="date")
-    c = ChangeFeedConsumer(src, str(tmp_path / "race_ckpt"), max_versions_per_batch=1)
+    c = ChangeFeedConsumer(src, str(tmp_path / "race_ckpt"))
     seen: list[tuple[int, int]] = []
 
     def process(feed, v_from, v_to):

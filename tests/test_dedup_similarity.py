@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from retailfeaturestore_spark.operators import dedup
+from retailfeaturestore_spark.operators import dedup, similarity
 from retailfeaturestore_spark.operators.dedup import (
     band_rows,
     containment_pairs,
@@ -84,13 +84,14 @@ def test_cosine_topk_exact_neighbor(spark):
     assert abs(out[0].cosine - 0.9938837346736189) < 1e-9  # 0.9/sqrt(0.82)
 
 
-def test_sign_lsh_catches_identical_vectors(spark):
+def test_sign_lsh_catches_identical_vectors(spark, monkeypatch):
     v = [0.5] * 32 + [-0.5] * 32
     vecs = spark.createDataFrame(
         [(0, v), (1, list(v)), (2, [(-1.0) ** i * 0.3 for i in range(64)])],
         "vec_id long, embedding array<float>",
     )
-    out = {(r.vec_a, r.vec_b) for r in sign_lsh_neardup(vecs, threshold=0.9).collect()}
+    monkeypatch.setattr(similarity, "SIGN_LSH_THRESHOLD", 0.9)
+    out = {(r.vec_a, r.vec_b) for r in sign_lsh_neardup(vecs).collect()}
     assert out == {(0, 1)}
 
 
@@ -200,10 +201,10 @@ def test_kmeans_cells_deterministic_and_partitioned(spark):
     from retailfeaturestore_spark.operators.similarity import kmeans_cells
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    a = kmeans_cells(emb, k=4, iters=2)
+    a = kmeans_cells(emb, k=4)
     assert a.count() == emb.count()
     assert a.groupBy("id").count().where("count > 1").count() == 0
-    b = kmeans_cells(emb.repartition(7), k=4, iters=2)
+    b = kmeans_cells(emb.repartition(7), k=4)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     # the quantizer actually partitions the space: more than one cell in use
     assert a.select("cell").distinct().count() > 1
@@ -224,18 +225,18 @@ def test_ivf_literal_and_join_paths_agree(spark, monkeypatch):
     lit = sorted(
         map(
             tuple,
-            sim.ivf_topk_cells(emb, query_ids=qids, k_neighbors=3, n_cells=4).collect(),
+            sim.ivf_topk_cells(emb, query_ids=qids, n_cells=4).collect(),
         )
     )
     monkeypatch.setattr(sim, "_LITERAL_QUERY_MAX", 0)  # force the join path
     join = sorted(
         map(
             tuple,
-            sim.ivf_topk_cells(emb, query_ids=qids, k_neighbors=3, n_cells=4).collect(),
+            sim.ivf_topk_cells(emb, query_ids=qids, n_cells=4).collect(),
         )
     )
     assert lit == join
-    assert len(lit) == len(qids) * 3
+    assert len(lit) == len(qids) * sim.IVF_TOP_K
 
 
 @requires_testdata
@@ -246,6 +247,7 @@ def test_cosine_topk_quantized_matches_broadcast_path(spark):
 
     from retailfeaturestore_spark.io import load_table
     from retailfeaturestore_spark.operators.similarity import (
+        IVF_TOP_K,
         cosine_topk,
         cosine_topk_quantized,
     )
@@ -254,10 +256,10 @@ def test_cosine_topk_quantized_matches_broadcast_path(spark):
     a = sorted(
         map(
             tuple,
-            cosine_topk(emb, emb.where(F.col("vec_id") < 5), k=4).collect(),
+            cosine_topk(emb, emb.where(F.col("vec_id") < 5), k=IVF_TOP_K).collect(),
         )
     )
-    b = sorted(map(tuple, cosine_topk_quantized(emb, range(5), k=4).collect()))
+    b = sorted(map(tuple, cosine_topk_quantized(emb, range(5)).collect()))
     assert a == b
 
 
@@ -289,7 +291,7 @@ def test_pq_adc_deterministic_and_ranked(spark):
     sf = TESTDATA_SF
     emb = load_table(spark, sf, "embeddings")
     a = pq_topk_adc_resident(
-        emb, query_ids=list(range(5)), k_neighbors=5, cache_scope=sf + "#det-a"
+        emb, query_ids=list(range(5)), cache_scope=sf + "#det-a"
     )
     rows = a.collect()
     by_q = {}
@@ -303,7 +305,7 @@ def test_pq_adc_deterministic_and_ranked(spark):
         assert dists == sorted(dists)
         assert all(r.n_id != q for r in rs)
     b = pq_topk_adc_resident(
-        emb.repartition(7), query_ids=list(range(5)), k_neighbors=5,
+        emb.repartition(7), query_ids=list(range(5)),
         cache_scope=sf + "#det-b",
     )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
@@ -331,7 +333,7 @@ def test_pq_adc_approximates_exact_neighbors(spark):
     qids = list(range(10))
     exact = cosine_topk(emb, emb.where(emb.vec_id < 10), k=5)
     approx = pq_topk_adc_resident(
-        emb, query_ids=qids, k_neighbors=5, cache_scope=sf + "#recall"
+        emb, query_ids=qids, cache_scope=sf + "#recall"
     )
     e = {(r.q_id, r.n_id) for r in exact.collect()}
     a = {(r.q_id, r.n_id) for r in approx.collect()}
@@ -461,7 +463,7 @@ def test_pq_index_append_encodes_with_frozen_codebooks(spark, tmp_path):
     base = emb.where(F.col("vec_id") < 400)
     extra = emb.where(F.col("vec_id") >= 400)
     t = MTable(spark, str(tmp_path / "pq_index"))
-    build_pq_index_mtable(base, t, m=4, k_codes=8, iters=2)
+    build_pq_index_mtable(base, t, m=4, k_codes=8)
     v = append_pq_index_mtable(t, extra)
 
     meta = _pq_meta_mtable(t, v)
@@ -509,7 +511,7 @@ def test_pq_index_append_encodes_with_frozen_codebooks(spark, tmp_path):
     py_best = min(
         float(sum(luts[s][cs[s]] for s in range(m))) for cs in all_codes.values()
     )
-    served = search_pq_index_mtable(t, [(qid, qvec)], k_neighbors=3).collect()
+    served = search_pq_index_mtable(t, [(qid, qvec)]).collect()
     assert min(r.adc_dist for r in served) == py_best
 
 
@@ -564,7 +566,7 @@ def test_containment_matches_bruteforce_on_random_corpora(spark, monkeypatch):
     prop()
 
 
-def test_random_projection_matches_python_replay_and_preserves_distance(spark):
+def test_random_projection_matches_python_replay_and_preserves_distance(spark, monkeypatch):
     import hashlib
     import math
 
@@ -576,7 +578,9 @@ def test_random_projection_matches_python_replay_and_preserves_distance(spark):
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
     from retailfeaturestore_spark.operators.similarity import random_projection
 
-    out = random_projection(df, out_dims=3, seed="t")
+    monkeypatch.setattr(similarity, "RP_OUT_DIMS", 3)
+    monkeypatch.setattr(similarity, "RP_SEED", "t")
+    out = random_projection(df)
     got = {(r.id, r.j): r.value_scaled for r in out.collect()}
 
     scale = 2**25
@@ -765,7 +769,7 @@ def test_semantic_dedup_matches_python_replay(spark):
     )
     got = {
         r.id: (r.cell, r.centroid_dist, r.is_kept)
-        for r in semantic_dedup(df, k=4, iters=2, threshold=0.9).collect()
+        for r in semantic_dedup(df, k=4, threshold=0.9).collect()
     }
     assert got == _semdedup_python_replay(vecs, k=4, iters=2, tau=0.9)
     # the planted balls actually deduplicated: at most one survivor each
@@ -790,8 +794,8 @@ def test_semantic_dedup_partitioning_invariant(spark):
         (i, [rng.uniform(-1, 1) for _ in range(6)]) for i in range(30)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = semantic_dedup(df, k=3, iters=2, threshold=0.5)
-    b = semantic_dedup(df.repartition(7), k=3, iters=2, threshold=0.5)
+    a = semantic_dedup(df, k=3, threshold=0.5)
+    b = semantic_dedup(df.repartition(7), k=3, threshold=0.5)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -814,7 +818,7 @@ def test_pq_resident_matches_honest_build_and_memoizes(spark):
     def honest(query_ids, tag):
         fresh = f"{sf}#honest-{tag}"
         out = pq_topk_adc_resident(
-            emb, query_ids=query_ids, k_neighbors=5, cache_scope=fresh
+            emb, query_ids=query_ids, cache_scope=fresh
         )
         rows = out.collect()
         invalidate_caches(spark, sf_dir=fresh)
@@ -822,7 +826,7 @@ def test_pq_resident_matches_honest_build_and_memoizes(spark):
 
     honest5 = honest(list(range(5)), "5")
     r1 = pq_topk_adc_resident(
-        emb, query_ids=list(range(5)), k_neighbors=5, cache_scope=scope
+        emb, query_ids=list(range(5)), cache_scope=scope
     )
     assert honest5.exceptAll(r1).count() == 0 and r1.exceptAll(honest5).count() == 0
     memo = session_memo(spark)
@@ -830,14 +834,14 @@ def test_pq_resident_matches_honest_build_and_memoizes(spark):
     cents_obj = memo[("pq_resident_model", scope)]
     # repeat call serves from the SAME codebook object (no retrain)
     r2 = pq_topk_adc_resident(
-        emb, query_ids=list(range(5)), k_neighbors=5, cache_scope=scope
+        emb, query_ids=list(range(5)), cache_scope=scope
     )
     assert memo[("pq_resident_model", scope)] is cents_obj
     assert r1.exceptAll(r2).count() == 0 and r2.exceptAll(r1).count() == 0
     # a NEW query set is answered from the resident index, same codebooks
     honest37 = honest([3, 7], "37")
     r37 = pq_topk_adc_resident(
-        emb, query_ids=[3, 7], k_neighbors=5, cache_scope=scope
+        emb, query_ids=[3, 7], cache_scope=scope
     )
     assert memo[("pq_resident_model", scope)] is cents_obj
     assert honest37.exceptAll(r37).count() == 0 and r37.exceptAll(honest37).count() == 0

@@ -27,8 +27,8 @@ def test_pagerank_path_graph_matches_python_replay(spark):
     # undirected path 1-2-3: middle node must out-rank the ends
     edges = [(1, 2), (2, 1), (2, 3), (3, 2)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.id: (r.degree, r.pagerank_scaled) for r in pagerank_scaled(df, n_iter=3).collect()}
-    want = py_pagerank(edges, 3)
+    got = {r.id: (r.degree, r.pagerank_scaled) for r in pagerank_scaled(df).collect()}
+    want = py_pagerank(edges, graph.PAGERANK_ITERATIONS)
     assert set(got) == set(want)
     for v, (deg, rank) in got.items():
         assert rank == want[v], v
@@ -36,12 +36,13 @@ def test_pagerank_path_graph_matches_python_replay(spark):
     assert got[2][0] == 2 and got[1][0] == 1
 
 
-def test_pagerank_directed_source_node_keeps_base_rank(spark):
+def test_pagerank_directed_source_node_keeps_base_rank(spark, monkeypatch):
     # 1 -> 2 -> 3, plus 3 -> 2 so vertex set = {1,2,3}; vertex 1 has no
     # in-edges and must survive every iteration at exactly the teleport base.
     edges = [(1, 2), (2, 3), (3, 2)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.id: r.pagerank_scaled for r in pagerank_scaled(df, n_iter=4).collect()}
+    monkeypatch.setattr(graph, "PAGERANK_ITERATIONS", 4)
+    got = {r.id: r.pagerank_scaled for r in pagerank_scaled(df).collect()}
     want = py_pagerank(edges, 4)
     assert got == want
     assert got[1] == BASE
@@ -59,20 +60,22 @@ def test_copurchase_edges_symmetric_no_self_loops(spark):
 def test_pagerank_checkpoint_rounds_equal_unchckpointed(spark, monkeypatch):
     edges = [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3)]
     df = spark.createDataFrame(edges, "src long, dst long")
+    monkeypatch.setattr(graph, "PAGERANK_ITERATIONS", 5)
     monkeypatch.setattr(graph, "PAGERANK_CHECKPOINT_EVERY", 2)
-    a = {r.id: r.pagerank_scaled for r in pagerank_scaled(df, n_iter=5).collect()}
+    a = {r.id: r.pagerank_scaled for r in pagerank_scaled(df).collect()}
     monkeypatch.setattr(graph, "PAGERANK_CHECKPOINT_EVERY", 99)
-    b = {r.id: r.pagerank_scaled for r in pagerank_scaled(df, n_iter=5).collect()}
+    b = {r.id: r.pagerank_scaled for r in pagerank_scaled(df).collect()}
     assert a == b == py_pagerank(edges, 5)
 
 
-def test_personalized_pagerank_seed_teleport(spark):
+def test_personalized_pagerank_seed_teleport(spark, monkeypatch):
     """Seeded teleport: only seed vertices receive base mass; a triangle
     with one seed must rank the seed first, and the whole run must match a
     literal python replay with the per-vertex base."""
     edges = [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3)]
     df = spark.createDataFrame(edges, "src long, dst long")
     seeds = spark.createDataFrame([(1,)], "id long")
+    monkeypatch.setattr(graph, "PAGERANK_ITERATIONS", 4)
 
     def py_ppr(edges, seed_set, n_iter):
         deg = {}
@@ -91,14 +94,14 @@ def test_personalized_pagerank_seed_teleport(spark):
 
     got = {
         r.id: r.pagerank_scaled
-        for r in pagerank_scaled(df, n_iter=4, seeds=seeds).collect()
+        for r in pagerank_scaled(df, seeds=seeds).collect()
     }
     want = py_ppr(edges, {1}, 4)
     assert got == want
     assert got[1] > got[2] == got[3]  # seed out-ranks the symmetric others
     # and differs from the global variant on the same graph
     glob = {
-        r.id: r.pagerank_scaled for r in pagerank_scaled(df, n_iter=4).collect()
+        r.id: r.pagerank_scaled for r in pagerank_scaled(df).collect()
     }
     assert glob[1] == glob[2] == glob[3] != got[1]
 
@@ -147,7 +150,7 @@ def test_triangle_counts_matches_bruteforce_on_random_graph(spark):
     assert got == {n: want[n] for n in nodes if adj[n]}
 
 
-def test_similar_by_neighbors_jaccard_and_stopword_removal(spark):
+def test_similar_by_neighbors_jaccard_and_stopword_removal(spark, monkeypatch):
     """Square 1-2-3-4 (cycle): opposite corners share BOTH neighbors
     (jaccard 1.0), adjacent corners share none; a hub vertex connected to
     everything is dropped entirely at max_degree and influences nothing."""
@@ -155,7 +158,8 @@ def test_similar_by_neighbors_jaccard_and_stopword_removal(spark):
     hub = [(9, v) for v in (1, 2, 3, 4)]
     edges = und + [(b, a) for a, b in und] + hub + [(v, 9) for _, v in hub]
     df = spark.createDataFrame(edges, "src long, dst long")
-    out = similar_by_neighbors(df, max_degree=3, k=5).collect()
+    monkeypatch.setattr(graph, "SIMILAR_MAX_DEGREE", 3)
+    out = similar_by_neighbors(df).collect()
     got = {(r.part_id, r.similar_part): (r.common, r.jaccard, r.rank) for r in out}
     # hub 9 (degree 4 > 3) appears nowhere — as a vertex or a shared neighbor
     assert all(9 not in k for k in got)

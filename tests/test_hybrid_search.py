@@ -17,7 +17,7 @@ def test_bm25_null_text_doc_still_counts_in_corpus_stats(spark):
         [(1, "hash join"), (2, "scan scan scan"), (3, None)],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r for r in bm25_topk(docs, [(0, "hash")], k=10).collect()}
+    out = {r.doc_id: r for r in bm25_topk(docs, [(0, "hash")]).collect()}
     assert set(out) == {1}
     # n_docs=3 (NULL-text doc counted), df=1, dl=2, avgdl=(2+3+0)/3
     idf = (3 - 1 + 0.5) / (1 + 0.5)
@@ -32,7 +32,7 @@ def test_bm25_empty_term_set_returns_empty_frame(spark):
     docs = spark.createDataFrame(
         [(1, "hash join"), (2, "scan")], "doc_id long, text string"
     )
-    out = bm25_topk(docs, [(0, ""), (1, "")], k=5)
+    out = bm25_topk(docs, [(0, ""), (1, "")])
     assert out.columns == [
         "query_id",
         "rank",
@@ -59,7 +59,7 @@ def test_bm25_join_fallback_matches_literal_path(spark, monkeypatch):
         "doc_id long, text string",
     )
     tq = [(0, "hash"), (0, "join"), (1, "scan"), (1, "agg"), (1, "merge")]
-    lit_rows = sorted(tuple(r) for r in bm25_topk(docs, tq, k=10).collect())
+    lit_rows = sorted(tuple(r) for r in bm25_topk(docs, tq).collect())
     monkeypatch.setattr(retrieval, "BM25_MAX_LITERAL_TERMS", 2)
-    join_rows = sorted(tuple(r) for r in bm25_topk(docs, tq, k=10).collect())
+    join_rows = sorted(tuple(r) for r in bm25_topk(docs, tq).collect())
     assert lit_rows == join_rows and len(lit_rows) > 0

@@ -110,7 +110,7 @@ def test_change_feed_drives_admission_end_to_end(spark, tmp_path):
         )
 
     admit.out = {}
-    c = ChangeFeedConsumer(corpus, str(tmp_path / "ckpt"), max_versions_per_batch=1)
+    c = ChangeFeedConsumer(corpus, str(tmp_path / "ckpt"))
     for rows in BATCHES:
         corpus.write(
             _df(spark, rows).withColumn("bucket", F.lit("a")),

@@ -25,15 +25,19 @@ The walk's rules:
   with ``@register(...)``; the CLI's entry is ``serving.cli.main``.
 
 Every defaulted parameter of a reached function, method, class
-``__init__`` or dataclass field must be passed by some non-test call site:
-a value no program sets is a constant, not an option.
+``__init__`` or dataclass field must be passed by some non-test call site,
+and not as one and the same literal by every such call: a value no program
+sets, or that every program sets alike, is a constant, not an option.
 
 A second walk starts from the live paths only: the batch jobs, the HTTP app,
 the CLI and the benchmark's non-test files without its registry query mix.
-It prints the live closure's line count, fails if that closure reaches the
-query registry, and fails on any defaulted parameter of live code that every
-non-test call site sets to one and the same literal: an option that only
-ever takes one value is a constant too.
+It prints the live closure's line count and fails if that closure reaches
+the query registry.
+
+Every environment variable the package reads (``os.environ[...]``,
+``os.environ.get(...)``, ``os.getenv(...)``) must be listed, with its
+reason, in ``_ENV_SETTINGS``, and every listed one must be read: a setting
+nothing documents is as hidden as an option no program passes.
 """
 
 from __future__ import annotations
@@ -80,6 +84,33 @@ _ALLOWED_UNSET: dict[str, str] = {
         "commit-protocol seam: a store whose Hadoop create is not atomic "
         "needs its own put-if-absent; the tests inject a fake"
     ),
+}
+
+# The environment variables the package reads, each with its reason.
+_APP_FROM_ENV = (
+    "the HTTP app's deployment contract: serving.app.app_from_env, the "
+    "Dockerfile's uvicorn --factory entry, reads its settings from the "
+    "environment"
+)
+_ENV_SETTINGS: dict[str, str] = {
+    "SPARK_LOCAL_DIRS": (
+        "Spark's own scratch-directory setting, which cluster operators set; "
+        "the session honours it before its repo-local default"
+    ),
+    "SPARK_GRAFT_CPUS": "the local master's core count; unset, it uses every core",
+    "SPARK_MASTER_OVERRIDE_DISABLED": (
+        "keeps the master spark-submit supplies instead of the local default"
+    ),
+    "SPARK_WAREHOUSE_DIR": "where the session's SQL warehouse lives",
+    "SPARK_GRAFT_SF_DIR": "the default test-data directory of the query registry",
+    "REDIS_URL": "the online store's address, else localhost; also " + _APP_FROM_ENV,
+    "REDIS_TTL_SECONDS": "an expiry for published online-store keys; unset keeps them",
+    "MODEL_DIR": _APP_FROM_ENV,
+    "GOLD_DIR": _APP_FROM_ENV,
+    "FEATURE_BACKEND": _APP_FROM_ENV,
+    "REDIS_KEY_PREFIX": _APP_FROM_ENV,
+    "PRED_LOG_DIR": _APP_FROM_ENV,
+    "THRESHOLD": _APP_FROM_ENV,
 }
 
 # Package names that only tests reach but that stay, each with its reason.
@@ -589,16 +620,45 @@ def test_options_are_set_by_a_program():
     )
     stale = sorted(set(_ALLOWED_UNSET) - set(unset))
     assert stale == [], f"_ALLOWED_UNSET entries that are passed or gone: {stale}"
-
-
-def test_live_options_are_set_by_a_program():
-    w = live_walk()
-    sites = _call_sites()
-    defaults = list(_defaults(w))
-    assert defaults  # the walk saw the live code
     fixed = sorted({label for label, callee, p, i in defaults
                     if _one_literal(sites.get(callee, ()), p, i)})
     assert fixed == [], (
-        "defaulted parameters of live code that every job, tool, perfbench "
-        f"and bench.py call sets to one literal (fold it in): {fixed}"
+        "defaulted parameters that every job, query, tool, perfbench and "
+        f"bench.py call sets to one literal (fold it in): {fixed}"
     )
+
+
+def _env_reads(tree: ast.AST):
+    """``(name or None, line)`` for each ``os.environ[...]``,
+    ``os.environ.get(...)`` and ``os.getenv(...)`` in ``tree``; the name is
+    None when it is not a string literal."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Subscript) and _chain(node.value) == "os.environ":
+            key = node.slice
+        elif (isinstance(node, ast.Call)
+              and _chain(node.func) in ("os.environ.get", "os.getenv") and node.args):
+            key = node.args[0]
+        else:
+            continue
+        name = key.value if isinstance(key, ast.Constant) else None
+        yield (name if isinstance(name, str) else None), node.lineno
+
+
+def test_environment_settings_are_listed():
+    read: dict[str, list[str]] = {}
+    for path, _ in _package_files().values():
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        for name, line in _env_reads(tree):
+            where = f"{os.path.relpath(path, _REPO)}:{line}"
+            read.setdefault(name or f"<not a literal at {where}>", []).append(where)
+    # the scan must see the session's reads, so that a parsing slip cannot
+    # pass by finding nothing
+    assert "SPARK_LOCAL_DIRS" in read and "REDIS_URL" in read
+    unlisted = {n: w for n, w in read.items() if n not in _ENV_SETTINGS}
+    assert unlisted == {}, (
+        "environment variables the package reads that _ENV_SETTINGS does "
+        f"not list (make each a constant, or list it with its reason): {unlisted}"
+    )
+    stale = sorted(set(_ENV_SETTINGS) - set(read))
+    assert stale == [], f"_ENV_SETTINGS entries that nothing reads: {stale}"

@@ -10,6 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from retailfeaturestore_spark.operators import packing
 from retailfeaturestore_spark.operators.packing import (
     _ffd_pack,
     pack_bins_ffd,
@@ -20,6 +21,15 @@ from conftest import TESTDATA_SF, requires_testdata
 
 MAX_TOKENS = 64
 N_SHARDS = 4
+
+
+@pytest.fixture
+def small_packs(monkeypatch):
+    """Pack into MAX_TOKENS-token sequences over N_SHARDS shards, so the
+    small fixture spans several chunks and shards."""
+    monkeypatch.setattr(packing, "PACK_MAX_TOKENS", MAX_TOKENS)
+    monkeypatch.setattr(packing, "PACK_N_SHARDS", N_SHARDS)
+    return monkeypatch
 
 
 def _shard(doc_id: int) -> int:
@@ -62,11 +72,11 @@ def _brute_chunks(rows: list[tuple[int, int]]) -> dict[tuple[int, int], tuple[in
     return {k: tuple(v) for k, v in out.items()}
 
 
-def test_pack_chunks_matches_bruteforce(spark):
+def test_pack_chunks_matches_bruteforce(spark, small_packs):
     docs = _docs(spark)
     got = {
         (r["shard"], r["chunk_id"]): (r["n_docs"], r["n_docs_started"], r["n_tokens"])
-        for r in pack_chunks(docs, max_tokens=MAX_TOKENS, n_shards=N_SHARDS).collect()
+        for r in pack_chunks(docs).collect()
     }
     lens = {r["doc_id"]: len(r["text"].split(" ")) for r in docs.collect()}
     assert got == _brute_chunks(list(lens.items()))
@@ -79,7 +89,7 @@ def test_pack_chunks_matches_bruteforce(spark):
     assert sum(v[2] for v in got.values()) == sum(lens.values())
 
 
-def test_pack_chunk_text_reconstructs_stream(spark):
+def test_pack_chunk_text_reconstructs_stream(spark, small_packs):
     """The materialized chunks, concatenated per shard in chunk order, must
     equal the shard's document stream (doc texts joined in id order) —
     and every chunk must carry exactly its ledger's token count."""
@@ -87,7 +97,7 @@ def test_pack_chunk_text_reconstructs_stream(spark):
 
     docs = _docs(spark)
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    rows = pack_chunk_text(docs, max_tokens=MAX_TOKENS, n_shards=N_SHARDS).collect()
+    rows = pack_chunk_text(docs).collect()
     by_shard: dict[int, list] = {}
     for r in rows:
         by_shard.setdefault(r["shard"], []).append(r)
@@ -104,15 +114,15 @@ def test_pack_chunk_text_reconstructs_stream(spark):
     # chunk stats agree with the ledger operator
     ledger = {
         (r["shard"], r["chunk_id"]): r["n_tokens"]
-        for r in pack_chunks(docs, MAX_TOKENS, N_SHARDS).collect()
+        for r in pack_chunks(docs).collect()
     }
     assert {(r["shard"], r["chunk_id"]): r["n_tokens"] for r in rows} == ledger
 
 
-def test_pack_chunks_partition_invariant(spark):
+def test_pack_chunks_partition_invariant(spark, small_packs):
     docs = _docs(spark)
-    a = sorted(map(tuple, pack_chunks(docs, MAX_TOKENS, N_SHARDS).collect()))
-    b = sorted(map(tuple, pack_chunks(docs.repartition(7), MAX_TOKENS, N_SHARDS).collect()))
+    a = sorted(map(tuple, pack_chunks(docs).collect()))
+    b = sorted(map(tuple, pack_chunks(docs.repartition(7)).collect()))
     assert a == b
 
 
@@ -133,14 +143,14 @@ def _independent_ffd(items: list[tuple[int, int]], cap: int) -> dict[int, int]:
     return where
 
 
-def test_ffd_pack_differential_and_invariants(spark):
+def test_ffd_pack_differential_and_invariants(spark, small_packs):
     docs = _docs(spark)
     lens = {r["doc_id"]: len(r["text"].split(" ")) for r in docs.collect()}
     # unit: the greedy itself vs the independent packer
     items = list(lens.items())
     assert _ffd_pack(items, MAX_TOKENS) == _independent_ffd(items, MAX_TOKENS)
 
-    out = pack_bins_ffd(docs, max_tokens=MAX_TOKENS, n_shards=N_SHARDS).collect()
+    out = pack_bins_ffd(docs).collect()
     # doc + token conservation
     assert sum(r["n_docs"] for r in out) == len(lens)
     assert sum(r["n_tokens"] for r in out) == sum(lens.values())
@@ -170,10 +180,10 @@ def test_ffd_pack_differential_and_invariants(spark):
         assert got_bins == want_bins
 
 
-def test_ffd_partition_invariant(spark):
+def test_ffd_partition_invariant(spark, small_packs):
     docs = _docs(spark)
-    a = sorted(map(tuple, pack_bins_ffd(docs, MAX_TOKENS, N_SHARDS).collect()))
-    b = sorted(map(tuple, pack_bins_ffd(docs.repartition(5), MAX_TOKENS, N_SHARDS).collect()))
+    a = sorted(map(tuple, pack_bins_ffd(docs).collect()))
+    b = sorted(map(tuple, pack_bins_ffd(docs.repartition(5)).collect()))
     assert a == b
 
 
@@ -182,13 +192,13 @@ def test_pack_chunks_on_testdata_fill_property(spark):
     from retailfeaturestore_spark.io import load_table
 
     docs = load_table(spark, TESTDATA_SF, "documents")
-    out = pack_chunks(docs, max_tokens=512, n_shards=8)
+    out = pack_chunks(docs)
     rows = out.collect()
     last = {}
     for r in rows:
         last[r["shard"]] = max(last.get(r["shard"], -1), r["chunk_id"])
     for r in rows:
-        assert r["n_tokens"] == 512 or r["chunk_id"] == last[r["shard"]]
+        assert r["n_tokens"] == packing.PACK_MAX_TOKENS or r["chunk_id"] == last[r["shard"]]
         assert r["n_docs_started"] <= r["n_docs"]
 
 
@@ -255,15 +265,7 @@ if _HYP:
             assert sum(members) <= cap or len(members) == 1
 
 
-def test_pack_rejects_bad_params(spark):
-    docs = _docs(spark)
-    with pytest.raises(ValueError):
-        pack_chunks(docs, max_tokens=0)
-    with pytest.raises(ValueError):
-        pack_bins_ffd(docs, n_shards=0)
-
-
-def test_empty_and_null_docs_pack_to_nothing(spark):
+def test_empty_and_null_docs_pack_to_nothing(spark, small_packs):
     """split('', ' ') is [''] (size 1) — without the explicit empty-text
     filter the batch packers would pack a phantom token and diverge from
     the streaming packer, which skips empties."""
@@ -272,14 +274,14 @@ def test_empty_and_null_docs_pack_to_nothing(spark):
     docs = _docs(spark).union(
         spark.createDataFrame([(90, ""), (91, None)], "doc_id long, text string")
     )
-    base = sorted(map(tuple, pack_chunk_text(_docs(spark), MAX_TOKENS, N_SHARDS).collect()))
-    with_empties = sorted(map(tuple, pack_chunk_text(docs, MAX_TOKENS, N_SHARDS).collect()))
+    base = sorted(map(tuple, pack_chunk_text(_docs(spark)).collect()))
+    with_empties = sorted(map(tuple, pack_chunk_text(docs).collect()))
     assert base == with_empties
-    ledger = sorted(map(tuple, pack_chunks(docs, MAX_TOKENS, N_SHARDS).collect()))
-    assert ledger == sorted(map(tuple, pack_chunks(_docs(spark), MAX_TOKENS, N_SHARDS).collect()))
+    ledger = sorted(map(tuple, pack_chunks(docs).collect()))
+    assert ledger == sorted(map(tuple, pack_chunks(_docs(spark)).collect()))
 
 
-def test_pack_chunk_text_whale_doc_linear(spark):
+def test_pack_chunk_text_whale_doc_linear(spark, small_packs):
     """A single 60k-token document spanning ~940 chunks must pack in O(T):
     the piece is sliced inside the chunk-sequence transform, so the full
     token array never rides the explode (the explode-then-slice shape
@@ -290,7 +292,8 @@ def test_pack_chunk_text_whale_doc_linear(spark):
     whale = spark.createDataFrame(
         [(1, " ".join(f"t{i}" for i in range(n)))], "doc_id long, text string"
     )
-    rows = pack_chunk_text(whale, max_tokens=MAX_TOKENS, n_shards=1).collect()
+    small_packs.setattr(packing, "PACK_N_SHARDS", 1)
+    rows = pack_chunk_text(whale).collect()
     assert sum(r["n_tokens"] for r in rows) == n
     assert len(rows) == (n + MAX_TOKENS - 1) // MAX_TOKENS
     rebuilt = " ".join(
@@ -299,21 +302,22 @@ def test_pack_chunk_text_whale_doc_linear(spark):
     assert rebuilt == " ".join(f"t{i}" for i in range(n))
 
 
-def test_ffd_duplicate_doc_ids_fail_loudly(spark):
+def test_ffd_duplicate_doc_ids_fail_loudly(spark, small_packs):
     """A duplicated id would let two rows share one greedy placement and
     silently overflow a bin — the per-shard packer must refuse."""
     docs = _docs(spark).union(_docs(spark).limit(1))
     with pytest.raises(Exception, match="unique doc ids"):
-        pack_bins_ffd(docs, max_tokens=MAX_TOKENS, n_shards=1).collect()
+        pack_bins_ffd(docs).collect()
 
 
-def test_shard_coin_uniform_beyond_256_shards(spark):
+def test_shard_coin_uniform_beyond_256_shards(spark, monkeypatch):
     """The 32-bit shard coin must keep high shard ids populated (a 1-byte
     coin would leave every shard >= 256 permanently empty)."""
     from retailfeaturestore_spark.operators.packing import _shard_col
 
+    monkeypatch.setattr(packing, "PACK_N_SHARDS", 1024)
     df = spark.range(4000).select(
-        F.col("id").alias("doc_id"), _shard_col(1024).alias("shard")
+        F.col("id").alias("doc_id"), _shard_col().alias("shard")
     )
     n_high = df.where(F.col("shard") >= 256).count()
     assert n_high > 2000  # ~3/4 of rows under a uniform coin

@@ -146,7 +146,7 @@ def test_bucketed_range_join_boundaries_and_match_once(spark):
     def names(closed):
         out = bucketed_range_join(
             points, intervals, key="k", point_ts="pt",
-            start_ts="lo", end_ts="hi", bucket_days=7, closed=closed,
+            start_ts="lo", end_ts="hi", closed=closed,
         )
         return sorted(r.name for r in out.collect())
 
@@ -158,6 +158,6 @@ def test_bucketed_range_join_boundaries_and_match_once(spark):
     # appears exactly once (its own bucket), so no dedup pass is needed
     out = bucketed_range_join(
         points, intervals, key="k", point_ts="pt",
-        start_ts="lo", end_ts="hi", bucket_days=7, closed="both",
+        start_ts="lo", end_ts="hi", closed="both",
     )
     assert out.where("name = 'p_mid'").count() == 1

@@ -624,7 +624,7 @@ def test_similar_wedge_plan_no_self_join(spark):
         [(u, p) for u in range(1, 7) for p in range(10, 10 + u)],
         "src long, dst long",
     )
-    plan = formatted_plan(similar_by_neighbors(edges, max_degree=10, k=3))
+    plan = formatted_plan(similar_by_neighbors(edges))
     # tree lines carry the join type (details lines don't); the un-cached
     # plan duplicates subtrees under the sym union, so the wedge self-join
     # would show as EXTRA Inner joins beyond the two degree attaches

@@ -42,7 +42,7 @@ def test_table_index_matches_python_adc_replay(spark, tmp_path):
 
     emb = _emb(spark)
     t = MTable(spark, str(tmp_path / "pq_tbl"))
-    v = build_pq_index_mtable(emb, t, m=4, k_codes=8, iters=2)
+    v = build_pq_index_mtable(emb, t, m=4, k_codes=8)
     assert v == 1
     # the codes table is partitioned by the first subspace code, and the
     # codebooks ride the same commit
@@ -70,7 +70,7 @@ def test_table_index_matches_python_adc_replay(spark, tmp_path):
         }
         top = sorted(dist.items(), key=lambda kv: (kv[1], kv[0]))[:5]
         want |= {(qid, n, float(d), r) for r, (n, d) in enumerate(top, 1)}
-    got = {tuple(r) for r in search_pq_index_mtable(t, q, k_neighbors=5).collect()}
+    got = {tuple(r) for r in search_pq_index_mtable(t, q).collect()}
     assert got == want
 
 
@@ -78,7 +78,7 @@ def test_table_index_matches_python_adc_replay(spark, tmp_path):
 def test_append_commits_one_version_and_rejects_indexed_ids(spark, tmp_path):
     base, extra = _emb(spark, 0, 300), _emb(spark, 300, 400)
     t = MTable(spark, str(tmp_path / "pq_tbl2"))
-    v1 = build_pq_index_mtable(base, t, m=4, k_codes=8, iters=2)
+    v1 = build_pq_index_mtable(base, t, m=4, k_codes=8)
     v2 = append_pq_index_mtable(t, extra)
     assert (v1, v2) == (1, 2)
     # (the appended codes' python-replay parity is
@@ -92,7 +92,7 @@ def test_append_commits_one_version_and_rejects_indexed_ids(spark, tmp_path):
 def test_compaction_preserves_search_and_codebook_walkback(spark, tmp_path):
     base = _emb(spark, 0, 300)
     t = MTable(spark, str(tmp_path / "pq_tbl3"))
-    build_pq_index_mtable(base, t, m=4, k_codes=8, iters=2)
+    build_pq_index_mtable(base, t, m=4, k_codes=8)
     for lo in (300, 350):
         append_pq_index_mtable(t, _emb(spark, lo, lo + 50))
     q = _queries(spark)
@@ -112,7 +112,7 @@ def test_compaction_preserves_search_and_codebook_walkback(spark, tmp_path):
 @requires_testdata
 def test_racing_appends_both_land_through_occ(spark, tmp_path, monkeypatch):
     t = MTable(spark, str(tmp_path / "pq_tbl4"))
-    build_pq_index_mtable(_emb(spark, 0, 300), t, m=4, k_codes=8, iters=2)
+    build_pq_index_mtable(_emb(spark, 0, 300), t, m=4, k_codes=8)
     real_stage = MTable._stage_files
     raced = {}
 
@@ -136,7 +136,7 @@ def test_racing_appends_both_land_through_occ(spark, tmp_path, monkeypatch):
 @requires_testdata
 def test_append_guards_dims_and_batch_dups(spark, tmp_path):
     t = MTable(spark, str(tmp_path / "pq_tbl5"))
-    build_pq_index_mtable(_emb(spark, 0, 300), t, m=4, k_codes=8, iters=2)
+    build_pq_index_mtable(_emb(spark, 0, 300), t, m=4, k_codes=8)
     extra = _emb(spark, 300, 310)
     with pytest.raises(ValueError, match="more than once"):
         append_pq_index_mtable(t, extra.unionByName(extra))

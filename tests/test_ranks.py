@@ -189,7 +189,6 @@ def test_exact_ntile_multi_matches_per_spec_ntile(spark, n, k, n_part):
             ],
             k,
             tiebreak=["id"],
-            carry=["id", "a", "b", "c"],
         )
         want = df
         for col, asc, out in (("a", True, "ta"), ("b", False, "tb"), ("c", False, "tc")):
@@ -229,7 +228,7 @@ def test_exact_ntile_multi_long_precision_beyond_double(spark):
     df = spark.createDataFrame(rows, "id long, v long")
     with _partitions(spark, 2):
         out = exact_ntile_multi(
-            df, [(F.col("v"), True, "t")], 4, tiebreak=["id"], carry=["id"]
+            df, [(F.col("v"), True, "t")], 4, tiebreak=["id"]
         )
     got = {r.id: r.t for r in out.collect()}
     assert got == {4: 1, 3: 2, 2: 3, 1: 4}

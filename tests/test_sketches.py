@@ -124,7 +124,7 @@ def test_tuple_overlap_matches_python_three_way(spark):
     )
     got = {
         (r.g1, r.g2, r.g3): r
-        for r in kmv_tuple_overlap(sk, trips, ["g1", "g2", "g3"], "g", k=k).collect()
+        for r in kmv_tuple_overlap(sk, trips, ["g1", "g2", "g3"], k=k).collect()
     }
     for names in (("a", "b", "c"), ("a", "b", "d")):
         ku, u, i = _py_tuple_overlap([_py_sketch(data[n], k) for n in names], k)

@@ -2,9 +2,8 @@
 
 from __future__ import annotations
 
-import pytest
-
 from retailfeaturestore_spark.operators.multimodal import attach_payload, payload_meta
+from retailfeaturestore_spark.operators import textops
 from retailfeaturestore_spark.operators.textops import (
     chunk_documents,
     lang_id,
@@ -38,14 +37,16 @@ def test_quality_score_bounds_and_empty_doc(spark):
     assert out[2].quality_score >= 0.0  # guarded denominator, no null/inf
 
 
-def test_chunk_documents_overlap_and_tail(spark):
+def test_chunk_documents_overlap_and_tail(spark, monkeypatch):
     """32/24-style overlap windowing at toy scale: every token covered,
     consecutive chunks share chunk-stride tokens, trailing partial chunks
     emitted, one-token docs yield one chunk."""
     docs = spark.createDataFrame(
         [(1, "a b c d e f g"), (2, "x")], "doc_id long, text string"
     )
-    out = chunk_documents(docs, chunk_tokens=4, stride=2)
+    monkeypatch.setattr(textops, "CHUNK_TOKENS", 4)
+    monkeypatch.setattr(textops, "CHUNK_STRIDE", 2)
+    out = chunk_documents(docs)
     by = {(r.doc_id, r.chunk_id): (r.chunk_text, r.n_tokens) for r in out.collect()}
     assert by[(1, 0)] == ("a b c d", 4)
     assert by[(1, 1)] == ("c d e f", 4)   # overlap: shares c,d with chunk 0
@@ -53,8 +54,6 @@ def test_chunk_documents_overlap_and_tail(spark):
     assert by[(1, 3)] == ("g", 1)
     assert by[(2, 0)] == ("x", 1)
     assert len(by) == 5
-    with pytest.raises(ValueError):
-        chunk_documents(docs, chunk_tokens=4, stride=0)
 
 
 def test_token_counts(spark):

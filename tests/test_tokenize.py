@@ -104,13 +104,12 @@ def test_bm25_artifact_path_equals_self_contained(spark):
     invalidate_caches(spark, sf_dir=SF)
     docs = load_table(spark, SF, "documents")
     qt = [(0, "hash"), (0, "join"), (1, "dup"), (1, "nosuchterm")]
-    plain = bm25_topk(docs, qt, k=5).collect()
+    plain = bm25_topk(docs, qt).collect()
     terms = ("hash", "join", "dup", "nosuchterm")
     stats, dfs = corpus_stats_and_dfs(spark, SF, terms, docs=docs)
     art = bm25_topk(
         docs,
         qt,
-        k=5,
         pretokenized=token_corpus(spark, SF, docs=docs),
         stats=stats,
         term_dfs=dfs,
@@ -131,7 +130,7 @@ def test_bm25_join_path_equals_literal_path(spark, monkeypatch):
 
     docs = load_table(spark, SF, "documents")
     qt = [(0, "hash"), (0, "join"), (1, "dup")]
-    lit_rows = bm25_topk(docs, qt, k=5).collect()
+    lit_rows = bm25_topk(docs, qt).collect()
     monkeypatch.setattr(retrieval, "BM25_MAX_LITERAL_TERMS", 0)
-    join_rows = bm25_topk(docs, qt, k=5).collect()
+    join_rows = bm25_topk(docs, qt).collect()
     assert sorted(map(tuple, lit_rows)) == sorted(map(tuple, join_rows))

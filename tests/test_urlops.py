@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from retailfeaturestore_spark.operators import urlops
 from retailfeaturestore_spark.operators.urlops import (
     canonical_url,
     domain_mixture_weights,
@@ -104,14 +105,15 @@ def test_url_dedup_keep_rule_and_counts(spark):
     }
 
 
-def test_domain_mixture_weights_integer_exact_cap(spark):
+def test_domain_mixture_weights_integer_exact_cap(spark, monkeypatch):
     per_dom = spark.createDataFrame(
         [("whale.com", 900), ("a.com", 60), ("b.com", 40)],
         "registrable_domain string, tokens long",
     )
+    monkeypatch.setattr(urlops, "MIX_CAP", 0.10)
     out = {
         r.registrable_domain: (r.tokens, r.raw_share, r.mix_weight)
-        for r in domain_mixture_weights(per_dom, "tokens", cap=0.10).collect()
+        for r in domain_mixture_weights(per_dom, "tokens").collect()
     }
     # total=1000, cap_w=floor(0.10*1000)=100; capped: 100/60/40, ctot=200
     assert out["whale.com"] == (900, 0.9, 0.5)
@@ -119,7 +121,7 @@ def test_domain_mixture_weights_integer_exact_cap(spark):
     assert out["b.com"] == (40, 0.04, 0.2)
 
 
-def test_url_screen_flag_semantics(spark):
+def test_url_screen_flag_semantics(spark, monkeypatch):
     """The three screen flags must honor their scoping rules: domain
     blocks catch SUBDOMAINS (eTLD+1 match), path terms never match the
     HOST, and the digit cut is integer-exact at the boundary."""
@@ -144,16 +146,10 @@ def test_url_screen_flag_semantics(spark):
         Row(id=6, url="https://h37.com/x"),
         Row(id=7, url="https://clean.org/x"),
     ]
-    out = {
-        r.id: r
-        for r in url_screen(
-            spark.createDataFrame(rows),
-            "url",
-            blocked_domains=("bad.com",),
-            blocked_path_terms=("casino",),
-            max_host_digit_pct=20,
-        ).collect()
-    }
+    monkeypatch.setattr(urlops, "BLOCKED_DOMAINS", ("bad.com",))
+    monkeypatch.setattr(urlops, "BLOCKED_PATH_TERMS", ("casino",))
+    monkeypatch.setattr(urlops, "MAX_HOST_DIGIT_PCT", 20)
+    out = {r.id: r for r in url_screen(spark.createDataFrame(rows), "url").collect()}
     assert out[1].flag_blocked_domain == 1 and out[1].registrable_domain == "bad.com"
     assert out[2].flag_path_term == 0 and out[2].url_ok == 1
     assert out[3].flag_path_term == 1 and out[3].url_ok == 0
@@ -163,21 +159,7 @@ def test_url_screen_flag_semantics(spark):
     assert out[7].url_ok == 1
 
 
-def test_url_screen_empty_lists_never_flag(spark):
-    from pyspark.sql import Row
-
-    from retailfeaturestore_spark.operators.urlops import url_screen
-
-    out = url_screen(
-        spark.createDataFrame([Row(id=1, url="https://bad.com/casino")]),
-        "url",
-    ).collect()[0]
-    assert out.flag_blocked_domain == 0 and out.flag_path_term == 0
-    # the digit gate still applies with its default threshold
-    assert out.url_ok == 1
-
-
-def test_url_screen_path_terms_are_literal(spark):
+def test_url_screen_path_terms_are_literal(spark, monkeypatch):
     """Blocked path terms are LITERAL strings (r12 advice): a term with
     regex metacharacters ('c++', 'a.b', an unbalanced '(') must neither
     throw at plan time nor widen the match — '.' matches only a dot."""
@@ -193,12 +175,9 @@ def test_url_screen_path_terms_are_literal(spark):
         Row(id=5, url="https://ok.com/f(1)/y"),           # unbalanced-paren term
         Row(id=6, url="https://ok.com/clean"),
     ]
+    monkeypatch.setattr(urlops, "BLOCKED_PATH_TERMS", ("c++", "a.b", "f("))
     out = {
         r.id: r.flag_path_term
-        for r in url_screen(
-            spark.createDataFrame(rows),
-            "url",
-            blocked_path_terms=("c++", "a.b", "f("),
-        ).collect()
+        for r in url_screen(spark.createDataFrame(rows), "url").collect()
     }
     assert out == {1: 1, 2: 0, 3: 1, 4: 0, 5: 1, 6: 0}

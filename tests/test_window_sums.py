@@ -117,7 +117,8 @@ event = st.tuples(
 @given(st.lists(event, min_size=1, max_size=30))
 def test_user_activity_sums_match_numpy_oracle(spark, monkeypatch, events):
     """Counts, the NULL-aware value sum (a window of NULL values sums to
-    NULL, as a bounded SUM) and the error rate over NULL event types."""
+    NULL, as a bounded SUM), the distinct non-NULL event types and the
+    error rate over NULL event types."""
     rows = [
         (u, BASE + timedelta(microseconds=us), et, None if v is None else v / 1e6)
         for u, us, et, v in events
@@ -138,6 +139,7 @@ def test_user_activity_sums_match_numpy_oracle(spark, monkeypatch, events):
                 {
                     f"event_count_{s}": n,
                     f"value_sum_{s}": vs,
+                    f"unique_types_{s}": len({rows[j][2] for j in np.flatnonzero(m)} - {None}),
                     f"error_rate_{s}": min(max(int((m & err).sum()) / n, 0.0), 1.0),
                 }
             )
@@ -177,9 +179,9 @@ def _sliding_functions(plan: str) -> list[str]:
 
 def test_family_is_one_exchange_one_window_and_no_sliding_integer_sum(spark, monkeypatch):
     """The prefix-difference frames share the family's (entity, ts) spec:
-    one hash exchange, and one WindowExec for the family (the W3 distinct
-    count adds its lag and delta passes).  No SUM runs over a sliding
-    ``[-w, current row]`` range frame."""
+    one hash exchange, and one WindowExec for the family (the distinct
+    count adds its lag and delta passes), in both families.  No window
+    function runs over a sliding ``[-w, current row]`` range frame."""
     rows = [(1, BASE, "A", False, 1.5), (1, BASE + timedelta(days=2), "B", True, 2.0)]
     df = spark.createDataFrame(rows, BRONZE_SCHEMA)
     plan = _plan(build_customer_features(df, windows=WINDOWS, carry_cols=()))
@@ -191,8 +193,8 @@ def test_family_is_one_exchange_one_window_and_no_sliding_integer_sum(spark, mon
     monkeypatch.setattr(window_features, "USER_ACTIVITY_WINDOWS", WINDOWS)
     plan = _plan(user_activity_features(events))
     assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
-    assert set(_sliding_functions(plan)) == {"collect_set"}, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 3, plan
+    assert _sliding_functions(plan) == [], plan
 
 
 def test_family_exchange_spreads_an_input_already_at_default_parallelism(spark):
