@@ -263,8 +263,6 @@ def pack_bins_ffd(docs: DataFrame) -> DataFrame:
         .where(F.col("n_tokens") > 0)
     )
 
-    cap = PACK_MAX_TOKENS
-
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf["doc_id"].duplicated().any():
             dup = pdf.loc[pdf["doc_id"].duplicated(), "doc_id"].iloc[0]
@@ -272,7 +270,7 @@ def pack_bins_ffd(docs: DataFrame) -> DataFrame:
                 f"pack_bins_ffd requires unique doc ids; id {dup!r} appears "
                 "more than once — dedupe upstream"
             )
-        assign = _ffd_pack(zip(pdf["doc_id"].tolist(), pdf["n_tokens"].tolist()), cap)
+        assign = _ffd_pack(zip(pdf["doc_id"].tolist(), pdf["n_tokens"].tolist()), PACK_MAX_TOKENS)
         pdf = pdf.assign(bin_id=pdf["doc_id"].map(assign))
         g = pdf.groupby(["shard", "bin_id"], as_index=False).agg(
             n_docs=("doc_id", "size"),

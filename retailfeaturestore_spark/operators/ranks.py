@@ -57,10 +57,12 @@ sample, the localCheckpoint materialization, and the O(P) totals collect,
 per-row execute slice is 0.3-0.5 s.  Passing ``cache_scope=<dataset>``
 memoizes the (checkpointed frame, totals) artifact in the session's
 scope-keyed memo under the operator's name — each operator serves one
-input recipe, its one registry query — so repeat calls pay only the
-execute slice; ``queries.invalidate_caches`` evicts by scope, and a fresh
-session's first call pays the honest build — the oracle hash certifies
-both paths because they are the same literals over the same blocks.
+input recipe, its one registry query, and the package closure test fails
+on a second program call that passes ``cache_scope`` — so repeat calls
+pay only the execute slice; ``queries.invalidate_caches`` evicts by scope,
+and a fresh session's first call pays the honest build — the oracle hash
+certifies both paths because they are the same literals over the same
+blocks.
 Reference parity: the single-process engine sorts everything in memory
 anyway (pandas ``sort_values`` in jobs/build_feature_views.py), so any
 faithful distributed ranking is new surface, not a translation.

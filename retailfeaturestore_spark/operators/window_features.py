@@ -100,6 +100,11 @@ def _before(days: int) -> str:
     return f"RANGE BETWEEN UNBOUNDED PRECEDING AND {days * MICROS_PER_DAY + 1} PRECEDING"
 
 
+def _sliding(days: int) -> str:
+    """The both-closed ``[t - days, t]`` range frame."""
+    return f"RANGE BETWEEN {days * MICROS_PER_DAY} PRECEDING AND CURRENT ROW"
+
+
 def _in_window(c: str, i: int) -> str:
     """``sum(c)`` over window ``i``: the growing frame up to t minus the one
     before the window (``{c}_upto``, ``{c}_before{i}``)."""
@@ -401,21 +406,9 @@ def user_activity_features(events: DataFrame) -> DataFrame:
     """The same W1-W6 family expressed over the ``events`` stream table
     (user_id/ts/event_type/value) — the driver-testdata face of the feature
     engine: count, sum, distinct-type, guarded average, error rate, tenure.
-    The distinct types run first, as W3 does in :func:`build_customer_features`.
     """
     windows = USER_ACTIVITY_WINDOWS
     scale = "CAST(1000000 AS DOUBLE)"
-    q = sql_ident
-    payload = [c for c in events.columns if c != "user_id"] + ["__val"]
-    uniq = [f"unique_types_{s}" for s in windows]
-    ctes = [("__events", f"SELECT {_spread_entity(events, 'user_id')}*, "
-                         "unix_micros(CAST(ts AS TIMESTAMP)) AS __ts_us, "
-                         f"CAST(round(value * {scale}) AS BIGINT) AS __val FROM {{src}}")]
-    ctes += windowed_distinct_ctes("__events", "user_id", "__ts_us", "event_type", windows,
-                                   [q(c) for c in payload], [q(c) for c in uniq])
-    ctes.append(("__family_in", "SELECT __e AS user_id, __time AS __ts_us, "
-                 + ", ".join(q(c) for c in payload + uniq) + " FROM __wd_out"))
-
     spec = "PARTITION BY user_id ORDER BY __ts_us"
     # a window whose values are all NULL sums to NULL, as a bounded SUM
     sums = {"__n": "1", "__n_val": "CAST(__val IS NOT NULL AS BIGINT)", "__val": "__val",
@@ -424,8 +417,10 @@ def user_activity_features(events: DataFrame) -> DataFrame:
     for i, days in enumerate(windows.values()):
         frames += [f"sum({x}) OVER ({spec} {_before(days)}) AS {c}_before{i}"
                    for c, x in sums.items()]
-    # Running min == partition min under the family's ascending (user, ts)
-    # order, so it shares the family's WindowExec.
+        frames.append(f"CAST(size(collect_set(event_type) OVER ({spec} {_sliding(days)})) "
+                      f"AS BIGINT) AS __types{i}")
+    # Running min == partition min under the ascending (user, ts) order the
+    # family already sorts by, so it shares the family's WindowExec.
     frames.append(f"floor((__ts_us - min(__ts_us) OVER ({spec} {_UPTO})) / {MICROS_PER_DAY}) "
                   "AS __tenure")
 
@@ -436,6 +431,7 @@ def user_activity_features(events: DataFrame) -> DataFrame:
         for i in range(len(windows))
     )
 
+    q = sql_ident
     out = [q(c) for c in events.columns]
     for i, s in enumerate(windows):
         n = f"CAST(__n{i} AS DOUBLE)"
@@ -445,13 +441,16 @@ def user_activity_features(events: DataFrame) -> DataFrame:
         out += [
             f"__n{i} AS {q(f'event_count_{s}')}",
             f"__sum{i} AS {q(f'value_sum_{s}')}",
-            q(f"unique_types_{s}"),
+            f"__types{i} AS {q(f'unique_types_{s}')}",
             f"__sum{i} / {_positive_or_one(n)} AS {q(f'avg_value_{s}')}",
             f"{rate} AS {q(f'error_rate_{s}')}",
         ]
     out.append("__tenure AS tenure_days")
-    ctes += [
-        ("__family", f"SELECT *, {', '.join(frames)} FROM __family_in"),
+    ctes = [
+        ("__events", f"SELECT {_spread_entity(events, 'user_id')}*, "
+                     "unix_micros(CAST(ts AS TIMESTAMP)) AS __ts_us, "
+                     f"CAST(round(value * {scale}) AS BIGINT) AS __val FROM {{src}}"),
+        ("__family", f"SELECT *, {', '.join(frames)} FROM __events"),
         ("__sums", f"SELECT *, {sums_i} FROM __family"),
     ]
     return events.sparkSession.sql(sql_with(ctes, f"SELECT {', '.join(out)} FROM __sums"),

@@ -4,8 +4,9 @@ The direct form, ``size(collect_set(key) OVER [t - w, t])``, keeps every
 distinct key of the window in memory per row and re-aggregates its sliding
 frame on every row — pathological for whale entities at 100 TB (a customer
 seeing 10^6 SKUs in a 30-day horizon materializes a 10^6-element set per
-output row).  Both windowed distinct counts of ``window_features`` (W3's
-distinct SKUs and the events family's distinct event types) run here.
+output row).  W3's distinct SKUs in ``window_features`` run here; the
+events family keeps the direct form for its event type, a key of five
+values, whose set stays small.
 
 This module computes the SAME exact value with O(1) per-row state via the
 interval-delta decomposition::

@@ -34,6 +34,11 @@ the CLI and the benchmark's non-test files without its registry query mix.
 It prints the live closure's line count and fails if that closure reaches
 the query registry.
 
+An operator that the ranks memo keys by its name alone (the ranks
+operators, and whatever passes its ``cache_scope`` on to one) may be given
+``cache_scope`` by one program call only, so that each name serves one input
+recipe.
+
 Every environment variable the package reads (``os.environ[...]``,
 ``os.environ.get(...)``, ``os.getenv(...)``) must be listed, with its
 reason, in ``_ENV_SETTINGS``, and every listed one must be read: a setting
@@ -625,6 +630,63 @@ def test_options_are_set_by_a_program():
     assert fixed == [], (
         "defaulted parameters that every job, query, tool, perfbench and "
         f"bench.py call sets to one literal (fold it in): {fixed}"
+    )
+
+
+def _name_keyed_memo_users() -> set[str]:
+    """The functions whose ``cache_scope`` reaches the ranks memo, which
+    keys its artifact by the operator's name and the scope only: the ranks
+    functions that pass ``_resident`` or ``_prefix_and_total`` their name
+    as a string, and every function that passes its own ``cache_scope`` on
+    to one of them."""
+    defs = []
+    for name, (path, _) in _package_files().items():
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read(), filename=path)
+        defs += [(name, n) for n in ast.walk(tree) if _is_method(n)]
+    users = {
+        fn.name for mod, fn in defs if mod == f"{_PKG}.operators.ranks"
+        for c in ast.walk(fn)
+        if isinstance(c, ast.Call) and _callee(c.func) in ("_resident", "_prefix_and_total")
+        and any(isinstance(a, ast.Constant) and isinstance(a.value, str) for a in c.args)
+    }
+    grown = True
+    while grown:
+        grown = False
+        for _, fn in defs:
+            if fn.name in users:
+                continue
+            for c in ast.walk(fn):
+                if (isinstance(c, ast.Call) and _callee(c.func) in users
+                        and any(isinstance(a, ast.Name) and a.id == "cache_scope"
+                                for a in [*c.args, *(k.value for k in c.keywords)])):
+                    users.add(fn.name)
+                    grown = True
+                    break
+    return users
+
+
+def _literal_none(arg: ast.expr | None) -> bool:
+    return arg is None or (isinstance(arg, ast.Constant) and arg.value is None)
+
+
+def test_name_keyed_memo_has_one_program_caller():
+    """The ranks memo serves one input recipe per operator: a second program
+    call that passed ``cache_scope`` to the same operator would be handed
+    the first call's checkpointed frame and totals."""
+    users = _name_keyed_memo_users()
+    assert {"range_prefix_sum", "exact_ntile", "exact_ntile_multi", "exact_auc"} <= users
+    sites = _call_sites()
+    shared = {}
+    for name in sorted(users):
+        n = sum(1 for site in sites.get(name, ())
+                if site.unpacks or not _literal_none(site.argument("cache_scope", None)))
+        if n > 1:
+            shared[name] = n
+    assert shared == {}, (
+        "operators keyed in the ranks memo by their name alone that more "
+        "than one program call passes cache_scope (key the memo by the "
+        f"input recipe, or let the other calls build): {shared}"
     )
 
 
